@@ -12,6 +12,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{AppModuleVul, Vulnerability}
+import graft.operators.Actions
 
 /** SURVEY K1-K6 — the output artifact writer
   * (reference memdb.go:82-274, common/db.go:18-61, common/crypto.go:11-34).
@@ -29,8 +30,9 @@ import graft.core.{AppModuleVul, Vulnerability}
   * ciphertext]. Compact DB carries only ubuntu/debian/centos/alpine
   * + apps (legacy header-size limit); regular carries all + raw files.
   *
-  * The driver step streams: cluster-side sort, `toLocalIterator` into
-  * per-bucket spool files (sha256 via DigestOutputStream), then one
+  * The driver step streams: one cluster-side (bucket, namespace, name)
+  * sort drained by one `toLocalIterator`, each row routed to its
+  * bucket's spool files (sha256 via DigestOutputStream), then one
   * tar|gzip|AES-GCM OutputStream chain per artifact — the corpus is
   * never resident in driver memory. The artifact format itself is
   * inherently single-file and stays a driver step.
@@ -279,19 +281,17 @@ object VulDbSink {
   /** Full sink: vulns + apps (+ raw passthrough files) -> compact +
     * regular artifacts in outDir. Returns per-file shas.
     *
-    * Streamed end to end, one stream PER BUCKET: each of the 12 bucket
-    * routes (plus apps.tb) is an independent cluster-side
-    * (namespace, name) sort whose `toLocalIterator` is drained by its
-    * own spooling thread, so the cluster sorts buckets in parallel and
-    * driver spooling overlaps with cluster compute instead of
-    * serializing every byte through one global-orderBy iterator. The
-    * projected frame is persisted once so the 13 jobs share one
-    * upstream pass. Per-bucket file contents are byte-identical to the
-    * old single global (bucket, namespace, name) sort restricted to
-    * the bucket. Sha256 is computed on the fly (DigestOutputStream);
+    * Streamed end to end through one sorted stream: the routed rows are
+    * range-sorted by (bucket, namespace, name) on the cluster and one
+    * `toLocalIterator` appends each row to its bucket's index and full
+    * spool files, so a bucket's file is its rows in (namespace, name)
+    * order and an empty bucket gives an empty file. The apps table
+    * drains the same way, concurrently, into apps.tb. A job per bucket
+    * would pay a sort and a drain for each of the 12 routes, most of
+    * them empty. Sha256 is computed on the fly (DigestOutputStream);
     * artifact assembly then streams the spools through one
     * tar|gzip|AES-GCM OutputStream chain. Driver memory stays O(one
-    * partition per concurrent bucket).
+    * partition per stream).
     *
     * `keys` round-trips into both artifact headers' KeyVersion.Keys
     * (reference memdb.go:209,239, common/types.go:49). */
@@ -316,47 +316,32 @@ object VulDbSink {
       s.out.write(json.getBytes("UTF-8"))
       s.out.write('\n')
     }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(buckets.size + 1, Runtime.getRuntime.availableProcessors()))
-    var projected: Option[DataFrame] = None
     try {
       // every bucket file exists even when its bucket is empty; all
-      // spools are created up front so the parallel phase only reads
-      // the map (no concurrent mutation)
-      buckets.foreach { case (_, p) => spool(s"${p}_index.tb"); spool(s"${p}_full.tb") }
-      spool("apps.tb")
+      // spools are created up front so the two drains only read the map
+      val bucketSpools = buckets.map { case (_, p) =>
+        p -> (spool(s"${p}_index.tb"), spool(s"${p}_full.tb")) }.toMap
+      val appSpool = spool("apps.tb")
 
-      val proj = project(vulns)
-        .select("bucket", "namespace", "name", "indexJson", "fullJson")
-        .persist()
-      projected = Some(proj)
-
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val bucketJobs = buckets.map { case (_, p) =>
-        scala.concurrent.Future {
+      Actions.inParallel(
+        () => {
           // rows whose namespace is outside the 12 routes have a null
-          // bucket and match no filter — they don't ship (parity with
-          // the old global-sort formulation's null-bucket skip)
-          val it = proj.filter(col("bucket") === p)
-            .orderBy("namespace", "name")
-            .select("indexJson", "fullJson")
+          // bucket and don't ship
+          val it = project(vulns).filter(col("bucket").isNotNull)
+            .orderBy("bucket", "namespace", "name")
+            .select("bucket", "indexJson", "fullJson")
             .toLocalIterator()
-          val si = spools(s"${p}_index.tb"); val sf = spools(s"${p}_full.tb")
           while (it.hasNext) {
             val r = it.next()
-            appendLine(si, r.getString(0)); appendLine(sf, r.getString(1))
+            val (si, sf) = bucketSpools(r.getString(0))
+            appendLine(si, r.getString(1)); appendLine(sf, r.getString(2))
           }
-        }
-      }
-      val appJob = scala.concurrent.Future {
-        val appIt = projectApps(apps).orderBy("moduleName", "vulName")
-          .select("appJson").toLocalIterator()
-        while (appIt.hasNext) appendLine(spools("apps.tb"), appIt.next().getString(0))
-      }
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(bucketJobs :+ appJob),
-        scala.concurrent.duration.Duration.Inf)
+        },
+        () => {
+          val it = projectApps(apps).orderBy("moduleName", "vulName")
+            .select("appJson").toLocalIterator()
+          while (it.hasNext) appendLine(appSpool, it.next().getString(0))
+        })
 
       spools.values.foreach(_.out.close())
       val shas = scala.collection.mutable.Map[String, String]()
@@ -383,8 +368,6 @@ object VulDbSink {
 
       shas.toMap
     } finally {
-      pool.shutdown()
-      projected.foreach(_.unpersist(blocking = false))
       // failed runs must not leak open streams or the spool directory
       spools.values.foreach(s =>
         try s.out.close() catch { case _: java.io.IOException => () })

@@ -107,10 +107,16 @@ object RubySource {
       cves = if (cve.nonEmpty) Seq(cve) else Nil))
   }
 
-  /** Load the gems advisory tree (one yml per advisory). */
+  /** Load the gems advisory tree (one yml per advisory under
+    * `gemsDir/<gem>/`). One recursive read of `gemsDir` with a `*.yml`
+    * name filter, not a per-file glob: the glob gives one root path per
+    * advisory, and above 32 root paths Spark lists them in a job with a
+    * task per file. The recursive read lists on the driver up to 32 gem
+    * directories, and above that in one job with a task per directory. */
   def load(spark: SparkSession, gemsDir: String): Dataset[AppModuleVul] = {
     import spark.implicits._
-    spark.read.option("wholetext", true).text(s"$gemsDir/*/*.yml")
+    spark.read.option("wholetext", true).option("recursiveFileLookup", true)
+      .option("pathGlobFilter", "*.yml").text(gemsDir)
       .as[String]
       .flatMap(parseYaml _)
   }

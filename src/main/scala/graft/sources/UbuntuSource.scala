@@ -147,12 +147,18 @@ object UbuntuSource {
 
   /** Load a tracker checkout's active/ + retired/ folders.
     * `keepCves` mirrors CvesIncludeGoVuln: names kept even without
-    * features (the govuln severity-calibration dependency, J6). */
+    * features (the govuln severity-calibration dependency, J6).
+    *
+    * Reads the two directories with a `CVE-*` name filter, not per-file
+    * globs: a glob expands to one root path per tracker file, and above
+    * Spark's 32-root-path threshold that lists the files in a parallel
+    * job with one task per file. Two directory roots list on the driver
+    * with no job. A missing folder fails as it always has. */
   def load(spark: SparkSession, repoDir: String, keepCves: Set[String] = Set.empty): Dataset[Vulnerability] = {
     import spark.implicits._
     val keep = spark.sparkContext.broadcast(keepCves)
-    spark.read.option("wholetext", true)
-      .text(s"$repoDir/active/CVE-*", s"$repoDir/retired/CVE-*")
+    spark.read.option("wholetext", true).option("pathGlobFilter", "CVE-*")
+      .text(s"$repoDir/active", s"$repoDir/retired")
       .select(input_file_name().as("f"), org.apache.spark.sql.functions.col("value"))
       .as[(String, String)]
       .filter { case (f, _) =>

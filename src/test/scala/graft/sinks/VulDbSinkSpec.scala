@@ -17,6 +17,39 @@ class VulDbSinkSpec extends SparkSpecBase {
     fixedVer = Seq(OpVersion("gteq", "2.0")), unaffectedVer = Nil,
     issuedDate = null, lastModDate = null, cves = Seq(vul))
 
+  private def vuln(name: String, ns: String) = Vulnerability(
+    name = name, namespace = ns, description = s"d $name", link = "l",
+    severity = "High", cvssV2Score = 5.0, cvssV2Vectors = "AV:N",
+    cvssV3Score = 0.0, cvssV3Vectors = "", issuedDate = null, lastModDate = null,
+    cves = Nil, fixedIn = Seq(FeatureVersion("pkg", ns, "1.0", "")), cpes = Nil,
+    feedRating = "")
+
+  test("each bucket file is its rows in (namespace, name) order, from one drain") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val tmp = java.nio.file.Files.createTempDirectory("sink").toString
+    val namespaces = Seq("ubuntu:22.04", "debian:11", "ubuntu:20.04", "alpine:3.18",
+      "rocky:9", "gentoo:1")
+    val vulns = (for (i <- 0 until 30; ns = namespaces(i % namespaces.size))
+      yield vuln(f"CVE-20${20 + i % 3}-${(i * 7919) % 1000}%04d", ns))
+      .toDS().repartition(4)
+    val (_, jobs) = countJobs(VulDbSink.write(vulns, Seq(app("CVE-2020-1111", "m1")).toDS(),
+      Nil, tmp, "1.000", "2026-08-12T00:00:00Z")(spark))
+    assert(jobs <= 8, s"write ran $jobs jobs")
+
+    val files = VulDbSink.readDbFile(s"$tmp/cvedb.regular")._2
+      .map(e => e.name -> new String(e.bytes, "UTF-8")).toMap
+    val proj = VulDbSink.project(vulns)
+    for ((_, p) <- VulDbSink.buckets; c <- Seq("index", "full")) {
+      val want = proj.filter(col("bucket") === p).orderBy("namespace", "name")
+        .select(s"${c}Json").collect().map(_.getString(0) + "\n").mkString
+      assert(files(s"${p}_$c.tb") == want, s"${p}_$c.tb")
+    }
+    assert(Seq("ubuntu", "debian", "alpine", "rocky").forall(p => files(s"${p}_full.tb").nonEmpty))
+    assert(files("wolfi_index.tb").isEmpty && files("wolfi_full.tb").isEmpty)
+    assert(!files.values.exists(_.contains("gentoo:1")))
+  }
+
   test("analytic sink writes bucket-partitioned parquet") {
     val tmp = java.nio.file.Files.createTempDirectory("analytic").toString
     val vulns = Namespacing(AlpineSource.load(spark, fixture("alpine_secdb.json")))

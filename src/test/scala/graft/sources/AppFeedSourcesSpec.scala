@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.SparkSpecBase
-import graft.core.{OpVersion, Vulnerability}
+import graft.core.{AppModuleVul, OpVersion, Vulnerability}
 import graft.operators.AppEnrichOps
 
 /** OSV (govuln/chainguard), Ruby YAML, nginx/openssl scrapers, and the
@@ -113,6 +113,31 @@ class AppFeedSourcesSpec extends SparkSpecBase {
     assert(v.fixedVer == Seq(
       OpVersion("gteq", "5.2.4.6,5.2"), OpVersion("orgteq", "6.0.3.7")))
     assert(v.unaffectedVer == Seq(OpVersion("lt", "2.0.0")))
+  }
+
+  test("ruby: one recursive read matches the per-file glob, without a listing job") {
+    import spark.implicits._
+    withTempDir("gems") { dir =>
+      def advisory(gem: String, i: Int) =
+        s"""gem: $gem
+           |cve: 2021-${1000 + i}
+           |url: https://example.org/$i
+           |title: t$i
+           |description: d$i
+           |patched_versions:
+           |  - ">= 1.$i.0"
+           |""".stripMargin
+      (0 until 40).foreach { i =>
+        writeFile(dir, s"gem${i % 8}/CVE-2021-${1000 + i}.yml", advisory(s"gem${i % 8}", i)) }
+      writeFile(dir, "gem0/notes.txt", advisory("gem0", 99)) // not an advisory file
+      val globbed = spark.read.option("wholetext", true).text(s"${dir.getPath}/*/*.yml")
+        .as[String].flatMap(RubySource.parseYaml _).collect()
+      val (ds, jobs) = countJobs(RubySource.load(spark, dir.getPath))
+      assert(jobs == 0)
+      val key = (v: AppModuleVul) => (v.moduleName, v.vulName)
+      assert(globbed.length == 40)
+      assert(ds.collect().sortBy(key).toSeq == globbed.sortBy(key).toSeq)
+    }
   }
 
   // ---- nginx / OpenSSL -------------------------------------------------

@@ -41,6 +41,37 @@ class UbuntuRockySpec extends SparkSpecBase {
     assert(ubuntu("CVE-2015-1234").fixedIn.head.featureNamespace == "ubuntu:16.04")
   }
 
+  private def tracker(cve: String) =
+    s"""Candidate: $cve
+       |Description:
+       | Generated.
+       |Notes:
+       |Priority: low
+       |focal_bash: released (5.0-6ubuntu1.1)
+       |""".stripMargin
+
+  test("ubuntu: folders read without a listing job; non-CVE files ignored") {
+    withTempDir("tracker") { dir =>
+      val cves = (1 to 40).map(i => f"CVE-2020-$i%04d")
+      cves.zipWithIndex.foreach { case (c, i) =>
+        writeFile(dir, if (i % 4 == 0) s"retired/$c" else s"active/$c", tracker(c)) }
+      writeFile(dir, "active/README", tracker("CVE-2020-9999"))
+      val (ds, jobs) = countJobs(UbuntuSource.load(spark, dir.getPath))
+      assert(jobs == 0)
+      assert(ds.collect().map(_.name).sorted.toSeq == cves)
+    }
+  }
+
+  test("ubuntu: a missing retired/ folder fails as path-not-found") {
+    withTempDir("tracker") { dir =>
+      writeFile(dir, "active/CVE-2020-0001", tracker("CVE-2020-0001"))
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        UbuntuSource.load(spark, dir.getPath))
+      assert(e.getCondition == "PATH_NOT_FOUND")
+      assert(e.getMessage.contains("retired"))
+    }
+  }
+
   lazy val rocky = RockySource.load(spark, fixture("rocky_api.json")).collect()
     .map(v => (v.name, v.namespace) -> v).toMap
 

@@ -2,9 +2,9 @@ package graft.core
 
 /** Ordered severity domain shared by every feed.
   * Reference semantics: /root/reference/common/priority.go:4-34 (ordered
-  * enum Unknown < Negligible < Low < Medium < High < Critical < Defcon1)
-  * and the score<->severity banding of
-  * /root/reference/updater/updater.go:293-333.
+  * enum Unknown < Negligible < Low < Medium < High < Critical < Defcon1).
+  * The score<->severity banding of updater.go:293-333 is
+  * `graft.operators.Enrich.fixedSeverity`/`backfilledScore`.
   */
 object Severity {
   val Unknown    = "Unknown"
@@ -20,30 +20,7 @@ object Severity {
   val ordering: Seq[String] =
     Seq(Unknown, Negligible, Low, Medium, High, Critical, Defcon1)
 
-  private val ordinalMap: Map[String, Int] = ordering.zipWithIndex.toMap
-
-  def ordinal(s: String): Int = ordinalMap.getOrElse(s, 0)
-  def compare(a: String, b: String): Int = Integer.compare(ordinal(a), ordinal(b))
-  def isValid(s: String): Boolean = ordinalMap.contains(s)
-
   /** Records outside this set are dropped by the final gate
     * (reference: updater/updater.go:35-37,472,528). */
   val accepted: Seq[String] = Seq(Low, Medium, High, Critical)
-
-  /** CVSS score -> severity band (updater.go:301-311 direction 1). */
-  def fromScore(score: Double): String =
-    if (score >= 9.0) Critical
-    else if (score >= 7.0) High
-    else if (score >= 4.0) Medium
-    else if (score >= 1.0) Low
-    else Unknown
-
-  /** severity -> representative score backfill (updater.go:313-331). */
-  def toScore(sev: String): Double = sev match {
-    case Critical => 9.0
-    case High     => 7.0
-    case Medium   => 4.0
-    case Low      => 1.0
-    case _        => 0.0
-  }
 }

@@ -46,23 +46,6 @@ object VulFunctions {
     * native expression; the P1 year floor runs in filter position. */
   def cve_year(s: Column): Column = VersionExpressions.cve_year(s)
 
-  /** CVSS score -> severity band, as a codegen'd when-chain
-    * (reference updater/updater.go:301-311). */
-  def severityFromScore(score: Column): Column =
-    when(score >= 9.0, Severity.Critical)
-      .when(score >= 7.0, Severity.High)
-      .when(score >= 4.0, Severity.Medium)
-      .when(score >= 1.0, Severity.Low)
-      .otherwise(Severity.Unknown)
-
-  /** severity -> representative score backfill (updater.go:313-331). */
-  def scoreFromSeverity(sev: Column): Column =
-    when(sev === Severity.Critical, 9.0)
-      .when(sev === Severity.High, 7.0)
-      .when(sev === Severity.Medium, 4.0)
-      .when(sev === Severity.Low, 1.0)
-      .otherwise(0.0)
-
   /** Severity ordinal via array_position — no UDF, so max-severity
     * aggregations (SURVEY A5) stay codegen'd. */
   def severityOrdinal(sev: Column): Column =
@@ -75,11 +58,6 @@ object VulFunctions {
   /** Withdrawn/rejected description filter (updater/filter.go:5-19). */
   def isWithdrawn(desc: Column): Column =
     lower(desc).contains("rejected reason") || lower(desc).contains("withdrawn advisory")
-
-  /** Newline/whitespace squeeze applied to descriptions
-    * (rhel.go:667-673 et al.). */
-  def squeezeWhitespace(desc: Column): Column =
-    regexp_replace(desc, "\\s+", " ")
 
   // ---- SQL registration ------------------------------------------------
 

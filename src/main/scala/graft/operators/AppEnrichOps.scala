@@ -21,23 +21,14 @@ object AppEnrichOps {
     import spark.implicits._
     vulns.filter(col("namespace") === "ubuntu:upstream").toDF()
       .select(col("name"), col("description"), col("severity"), explode(col("fixedIn")).as("ff"))
-      .select(
-        col("name").as("vulName"),
-        lit("").as("appName"),
-        col("ff.featureName").as("moduleName"),
-        expr("CAST(array() AS array<string>)").as("importPaths"),
-        expr("CAST(array() AS array<string>)").as("symbols"),
-        col("description"),
-        concat(lit(cveUrlPrefix), col("name")).as("link"),
-        lit(0.0).as("score"), lit("").as("vectors"),
-        lit(0.0).as("scoreV3"), lit("").as("vectorsV3"),
-        col("severity"),
-        array(struct(lit("lt").as("opCode"), col("ff.version").as("version"))).as("affectedVer"),
-        array(struct(lit("gteq").as("opCode"), col("ff.version").as("version"))).as("fixedVer"),
-        expr("CAST(array() AS array<struct<opCode:string,version:string>>)").as("unaffectedVer"),
-        lit(null).cast("timestamp").as("issuedDate"),
-        lit(null).cast("timestamp").as("lastModDate"),
-        expr("CAST(array() AS array<string>)").as("cves"))
+      .select(Records.withDefaults[AppModuleVul](
+        "vulName" -> col("name"),
+        "moduleName" -> col("ff.featureName"),
+        "description" -> col("description"),
+        "link" -> concat(lit(cveUrlPrefix), col("name")),
+        "severity" -> col("severity"),
+        "affectedVer" -> array(struct(lit("lt").as("opCode"), col("ff.version").as("version"))),
+        "fixedVer" -> array(struct(lit("gteq").as("opCode"), col("ff.version").as("version")))): _*)
       .as[AppModuleVul]
   }
 
@@ -85,25 +76,20 @@ object AppEnrichOps {
     import spark.implicits._
     val wl = whitelist.toDS().toDF("w_cve", "w_app", "w_module")
     val injected = wl.join(nvd.toDF(), col("w_cve") === col("cve"), "inner")
-      .select(
-        col("w_cve").as("vulName"),
-        col("w_app").as("appName"),
-        col("w_module").as("moduleName"),
-        expr("CAST(array() AS array<string>)").as("importPaths"),
-        expr("CAST(array() AS array<string>)").as("symbols"),
-        col("description"),
-        col("link"),
-        col("cvssV2Score").as("score"),
-        col("cvssV2Vectors").as("vectors"),
-        col("cvssV3Score").as("scoreV3"),
-        col("cvssV3Vectors").as("vectorsV3"),
-        col("severity"),
-        expr("CAST(array() AS array<struct<opCode:string,version:string>>)").as("affectedVer"),
-        expr("CAST(array() AS array<struct<opCode:string,version:string>>)").as("fixedVer"),
-        expr("CAST(array() AS array<struct<opCode:string,version:string>>)").as("unaffectedVer"),
-        col("publishedDate").as("issuedDate"),
-        col("lastModifiedDate").as("lastModDate"),
-        array(col("w_cve")).as("cves"))
+      .select(Records.withDefaults[AppModuleVul](
+        "vulName" -> col("w_cve"),
+        "appName" -> col("w_app"),
+        "moduleName" -> col("w_module"),
+        "description" -> col("description"),
+        "link" -> col("link"),
+        "score" -> col("cvssV2Score"),
+        "vectors" -> col("cvssV2Vectors"),
+        "scoreV3" -> col("cvssV3Score"),
+        "vectorsV3" -> col("cvssV3Vectors"),
+        "severity" -> col("severity"),
+        "issuedDate" -> col("publishedDate"),
+        "lastModDate" -> col("lastModifiedDate"),
+        "cves" -> array(col("w_cve"))): _*)
       .as[AppModuleVul]
     apps.unionByName(injected)
   }

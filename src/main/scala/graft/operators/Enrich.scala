@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{AppModuleVul, NvdMetadata, Severity, Vulnerability}
+import graft.core.{AppModuleVul, CveRef, NvdMetadata, Records, Severity, Vulnerability}
 
 /** SURVEY J1/J2 — assignMetadata
   * (reference updater/updater.go:335-552) re-expressed as one
@@ -13,9 +15,12 @@ import graft.core.{AppModuleVul, NvdMetadata, Severity, Vulnerability}
   * per-column precedence, cf. SURVEY §7 "what's hard"):
   *   field  := coalesce(feed value, NVD value in cve order)
   *   cvssN  := first non-zero of (feed cvssN, per-cve: NVD cvssN
-  *             else the cve element's own score)
-  *   severity := fixSeverityScore(coalesced severity, cvss2, cvss3)
+  *             else, for a distro record, the cve element's own score)
+  *   severity := fixSeverityScore(severity, cvss2, cvss3), where an
+  *             unset distro severity first takes NVD's
   *   then the accepted-severity gate (updater.go:35-37).
+  * Distro and app records share one kernel (`enrich`); those two
+  * fallbacks and the column names are all that differ.
   *
   * Deviation (documented): the reference's shared cveMap lets one
   * record's fields leak into a different record with the same
@@ -45,152 +50,108 @@ object Enrich {
       .otherwise(0.0)
 
   /** Distro-record enrichment, keyed (namespace, cve) with the record's
-    * own name standing in when it lists no CVEs. */
+    * own name standing in when it lists no CVEs. Where NVD has no
+    * non-zero score for a cve, the cve element's own score pair is the
+    * candidate; an unset feed severity takes NVD's severity string. */
   def distro(vulns: Dataset[Vulnerability], nvd: Dataset[NvdMetadata])(
       implicit spark: SparkSession): Dataset[Vulnerability] = {
-    import spark.implicits._
-
-    // One linear plan: the original record rides through the explode as
-    // a struct, so no id-based self-join is needed. (A prior version
-    // joined two branches on monotonically_increasing_id — the id is
-    // recomputed per branch over a nondeterministically-ordered input,
-    // which misaligns metadata across records.)
-    val exploded = vulns.toDF()
-      .withColumn("_uid", monotonically_increasing_id())
-      .withColumn("_orig", struct(col("name"), col("namespace"), col("description"),
-        col("link"), col("severity"), col("cvssV2Score"), col("cvssV2Vectors"),
-        col("cvssV3Score"), col("cvssV3Vectors"), col("issuedDate"),
-        col("lastModDate"), col("cves"), col("fixedIn"), col("cpes"), col("feedRating")))
-      .withColumn("_cvelist",
-        when(size(col("cves")) > 0, col("cves")).otherwise(array(struct(
-          col("name").as("name"),
-          lit(0.0).as("cvssV2Score"), lit("").as("cvssV2Vectors"),
-          lit(0.0).as("cvssV3Score"), lit("").as("cvssV3Vectors")))))
-      .select(col("_uid"), col("_orig"), posexplode(col("_cvelist")).as(Seq("pos", "cve")))
-
-    val n = broadcast(nvd.toDF().select(
-      col("cve").as("_nvd_cve"), col("description").as("n_desc"),
-      col("severity").as("n_sev"), col("cvssV2Score").as("n_v2s"),
-      col("cvssV2Vectors").as("n_v2v"), col("cvssV3Score").as("n_v3s"),
-      col("cvssV3Vectors").as("n_v3v"), col("publishedDate").as("n_pub"),
-      col("lastModifiedDate").as("n_mod"), col("link").as("n_link")))
-
-    val joined = exploded.join(n, col("cve.name") === col("_nvd_cve"), "left_outer")
-      .select(col("_uid"), col("_orig"), struct(
-        col("pos"),
-        // per-cve candidate scores: NVD when non-zero, else the cve element's own
-        when(col("n_v3s").isNotNull && col("n_v3s") =!= 0.0, col("n_v3s"))
-          .otherwise(col("cve.cvssV3Score")).as("c_v3s"),
-        when(col("n_v3s").isNotNull && col("n_v3s") =!= 0.0, col("n_v3v"))
-          .otherwise(col("cve.cvssV3Vectors")).as("c_v3v"),
-        when(col("n_v2s").isNotNull && col("n_v2s") =!= 0.0, col("n_v2s"))
-          .otherwise(col("cve.cvssV2Score")).as("c_v2s"),
-        when(col("n_v2s").isNotNull && col("n_v2s") =!= 0.0, col("n_v2v"))
-          .otherwise(col("cve.cvssV2Vectors")).as("c_v2v"),
-        col("n_sev").as("c_sev"), col("n_desc").as("c_desc"),
-        col("n_link").as("c_link"), col("n_pub").as("c_pub"),
-        col("n_mod").as("c_mod")).as("cand"))
-      .groupBy("_uid").agg(first(col("_orig")).as("_orig"), collect_list(col("cand")).as("cands"))
-
-    def cand(field: String, pred: String): Column =
-      try_element_at(expr(
-        s"filter(transform(array_sort(cands, (a, b) -> a.pos - b.pos), x -> x.$field), v -> $pred)"), lit(1))
-
-    joined.select(col("_orig.*"), col("cands"))
-      .withColumn("_e_v3s", when(col("cvssV3Score") =!= 0.0, col("cvssV3Score"))
-        .otherwise(coalesce(cand("c_v3s", "v != 0.0D"), lit(0.0))))
-      .withColumn("_e_v3v", when(col("cvssV3Score") =!= 0.0, col("cvssV3Vectors"))
-        .otherwise(coalesce(cand("c_v3v", "v is not null and v != ''"), lit(""))))
-      .withColumn("_e_v2s", when(col("cvssV2Score") =!= 0.0, col("cvssV2Score"))
-        .otherwise(coalesce(cand("c_v2s", "v != 0.0D"), lit(0.0))))
-      .withColumn("_e_v2v", when(col("cvssV2Score") =!= 0.0, col("cvssV2Vectors"))
-        .otherwise(coalesce(cand("c_v2v", "v is not null and v != ''"), lit(""))))
-      .withColumn("_e_sev",
-        when(col("severity") =!= "" && col("severity") =!= Severity.Unknown, col("severity"))
-          .otherwise(coalesce(cand("c_sev", "v is not null and v != ''"), col("severity"))))
-      .withColumn("_fix_sev", fixedSeverity(col("_e_sev"), col("_e_v2s"), col("_e_v3s")))
-      .select(
-        col("name"), col("namespace"),
-        when(col("description") === "", coalesce(cand("c_desc", "v is not null and v != ''"), lit("")))
-          .otherwise(col("description")).as("description"),
-        when(col("link") === "", coalesce(cand("c_link", "v is not null and v != ''"), lit("")))
-          .otherwise(col("link")).as("link"),
-        col("_fix_sev").as("severity"),
-        backfilledScore(col("_e_v2s"), col("_fix_sev")).as("cvssV2Score"),
-        col("_e_v2v").as("cvssV2Vectors"),
-        backfilledScore(col("_e_v3s"), col("_fix_sev")).as("cvssV3Score"),
-        col("_e_v3v").as("cvssV3Vectors"),
-        coalesce(col("issuedDate"), cand("c_pub", "v is not null")).as("issuedDate"),
-        coalesce(col("lastModDate"), cand("c_mod", "v is not null")).as("lastModDate"),
-        col("cves"), col("fixedIn"), col("cpes"), col("feedRating"))
-      .filter(col("severity").isin(Severity.accepted: _*))
-      .as[Vulnerability]
+    val ownName = array(struct(Records.withDefaults[CveRef]("name" -> col("name")): _*))
+    enrich(vulns, nvd,
+      keys = when(size(col("cves")) > 0, col("cves")).otherwise(ownName),
+      scores = ("cvssV2Score", "cvssV2Vectors", "cvssV3Score", "cvssV3Vectors"),
+      candidate = (score, field) =>
+        when(col(score) =!= 0.0, col(field)).otherwise(col(s"key.$field")),
+      severity = when(col("severity") =!= "" && col("severity") =!= Severity.Unknown,
+        col("severity")).otherwise(coalesce(cand("severity", nonEmpty), col("severity"))))
   }
 
   /** App-record enrichment, keyed by bare CVE name over
-    * [vulName] ++ cves (updater.go:388-425, 488-542). */
+    * [vulName] ++ cves (updater.go:388-425, 488-542). The record keeps
+    * its own severity. */
   def app(apps: Dataset[AppModuleVul], nvd: Dataset[NvdMetadata])(
-      implicit spark: SparkSession): Dataset[AppModuleVul] = {
+      implicit spark: SparkSession): Dataset[AppModuleVul] =
+    enrich(apps, nvd,
+      keys = transform(array_union(array(col("vulName")), coalesce(col("cves"), array())),
+        n => struct(n.as("name"))),
+      scores = ("score", "vectors", "scoreV3", "vectorsV3"),
+      candidate = (_, field) => col(field),
+      severity = col("severity"))
+
+  private val nonEmpty = "v is not null and v != ''"
+  private val nonZero = "v is not null and v != 0.0D"
+
+  /** The first value of candidate field `field` that passes `pred`, in
+    * key order. */
+  private def cand(field: String, pred: String): Column =
+    try_element_at(expr(s"filter(transform(cands, x -> x.$field), v -> $pred)"), lit(1))
+
+  /** The kernel of distro() and app().
+    *
+    * Each record is exploded over `keys` (an array of structs with a
+    * `name`), left-joined on that name to the broadcast NVD projection
+    * and regrouped by a per-record id, which collects `cands`: one
+    * struct per key, in key order. The original record rides through
+    * the explode as a struct, so no id-based self-join is needed (a
+    * prior version joined two branches on monotonically_increasing_id,
+    * which is recomputed per branch over a nondeterministically-ordered
+    * input and misaligned metadata across records).
+    *
+    * `scores` names the record's v2 score, v2 vectors, v3 score and v3
+    * vectors columns. A candidate's score pair is read through
+    * `candidate(nvdScoreColumn, field)` over the joined row, and
+    * `severity` is the record's severity before banding. */
+  private def enrich[T <: Product : TypeTag](records: Dataset[T], nvd: Dataset[NvdMetadata],
+      keys: Column, scores: (String, String, String, String), candidate: (String, String) => Column,
+      severity: Column)(implicit spark: SparkSession): Dataset[T] = {
     import spark.implicits._
+    val (v2s, v2v, v3s, v3v) = scores
+    val nvdFields = Seq("description", "severity", "cvssV2Score", "cvssV2Vectors",
+      "cvssV3Score", "cvssV3Vectors", "publishedDate", "lastModifiedDate", "link")
 
-    // same single-linear-plan shape as distro() — see comment there
-    val exploded = apps.toDF()
+    val exploded = records.toDF()
       .withColumn("_uid", monotonically_increasing_id())
-      .withColumn("_orig", struct(col("vulName"), col("appName"), col("moduleName"),
-        col("importPaths"), col("symbols"), col("description"), col("link"),
-        col("score"), col("vectors"), col("scoreV3"), col("vectorsV3"),
-        col("severity"), col("affectedVer"), col("fixedVer"), col("unaffectedVer"),
-        col("issuedDate"), col("lastModDate"), col("cves")))
-      .withColumn("_cvelist", array_union(array(col("vulName")), coalesce(col("cves"), array())))
-      .select(col("_uid"), col("_orig"), posexplode(col("_cvelist")).as(Seq("pos", "cveName")))
+      .withColumn("_orig", struct(Records.columns[T](): _*))
+      .select(col("_uid"), col("_orig"), posexplode(keys).as(Seq("pos", "key")))
+    val n = broadcast(nvd.toDF().select(col("cve").as("_nvd_cve") +: nvdFields.map(col): _*))
 
-    val n = broadcast(nvd.toDF().select(
-      col("cve").as("_nvd_cve"), col("description").as("n_desc"),
-      col("severity").as("n_sev"), col("cvssV2Score").as("n_v2s"),
-      col("cvssV2Vectors").as("n_v2v"), col("cvssV3Score").as("n_v3s"),
-      col("cvssV3Vectors").as("n_v3v"), col("publishedDate").as("n_pub"),
-      col("lastModifiedDate").as("n_mod"), col("link").as("n_link")))
+    val regrouped = exploded.join(n, col("key.name") === col("_nvd_cve"), "left_outer")
+      .select(col("_uid"), col("_orig"), struct(
+        col("pos"), col("description"), col("severity"), col("link"),
+        col("publishedDate"), col("lastModifiedDate"),
+        candidate("cvssV2Score", "cvssV2Score").as("cvssV2Score"),
+        candidate("cvssV2Score", "cvssV2Vectors").as("cvssV2Vectors"),
+        candidate("cvssV3Score", "cvssV3Score").as("cvssV3Score"),
+        candidate("cvssV3Score", "cvssV3Vectors").as("cvssV3Vectors")).as("cand"))
+      .groupBy("_uid")
+      .agg(first(col("_orig")).as("_orig"), sort_array(collect_list(col("cand"))).as("cands"))
+      .select(col("_orig.*"), col("cands"))
 
-    val joined = exploded.join(n, col("cveName") === col("_nvd_cve"), "left_outer")
-      .select(col("_uid"), col("_orig"), struct(col("pos"),
-        col("n_v3s").as("c_v3s"), col("n_v3v").as("c_v3v"),
-        col("n_v2s").as("c_v2s"), col("n_v2v").as("c_v2v"),
-        col("n_sev").as("c_sev"), col("n_desc").as("c_desc"),
-        col("n_link").as("c_link"), col("n_pub").as("c_pub"),
-        col("n_mod").as("c_mod")).as("cand"))
-      .groupBy("_uid").agg(first(col("_orig")).as("_orig"), collect_list(col("cand")).as("cands"))
+    // a score pair the feed set is kept; otherwise each half takes its
+    // first set candidate
+    def pair(score: String, vectors: String, nvdScore: String, nvdVectors: String) = (
+      when(col(score) =!= 0.0, col(score)).otherwise(coalesce(cand(nvdScore, nonZero), lit(0.0))),
+      when(col(score) =!= 0.0, col(vectors)).otherwise(coalesce(cand(nvdVectors, nonEmpty), lit(""))))
+    val (e2s, e2v) = pair(v2s, v2v, "cvssV2Score", "cvssV2Vectors")
+    val (e3s, e3v) = pair(v3s, v3v, "cvssV3Score", "cvssV3Vectors")
+    def orNvd(field: String) =
+      when(col(field) === "", coalesce(cand(field, nonEmpty), lit(""))).otherwise(col(field))
 
-    def cand(field: String, pred: String): Column =
-      try_element_at(expr(
-        s"filter(transform(array_sort(cands, (a, b) -> a.pos - b.pos), x -> x.$field), v -> $pred)"), lit(1))
-
-    joined.select(col("_orig.*"), col("cands"))
-      .withColumn("_e_v3s", when(col("scoreV3") =!= 0.0, col("scoreV3"))
-        .otherwise(coalesce(cand("c_v3s", "v is not null and v != 0.0D"), lit(0.0))))
-      .withColumn("_e_v3v", when(col("scoreV3") =!= 0.0, col("vectorsV3"))
-        .otherwise(coalesce(cand("c_v3v", "v is not null and v != ''"), lit(""))))
-      .withColumn("_e_v2s", when(col("score") =!= 0.0, col("score"))
-        .otherwise(coalesce(cand("c_v2s", "v is not null and v != 0.0D"), lit(0.0))))
-      .withColumn("_e_v2v", when(col("score") =!= 0.0, col("vectors"))
-        .otherwise(coalesce(cand("c_v2v", "v is not null and v != ''"), lit(""))))
-      .withColumn("_fix_sev", fixedSeverity(col("severity"), col("_e_v2s"), col("_e_v3s")))
-      .select(
-        col("vulName"), col("appName"), col("moduleName"),
-        col("importPaths"), col("symbols"),
-        when(col("description") === "", coalesce(cand("c_desc", "v is not null and v != ''"), lit("")))
-          .otherwise(col("description")).as("description"),
-        when(col("link") === "", coalesce(cand("c_link", "v is not null and v != ''"), lit("")))
-          .otherwise(col("link")).as("link"),
-        backfilledScore(col("_e_v2s"), col("_fix_sev")).as("score"),
-        col("_e_v2v").as("vectors"),
-        backfilledScore(col("_e_v3s"), col("_fix_sev")).as("scoreV3"),
-        col("_e_v3v").as("vectorsV3"),
-        col("_fix_sev").as("severity"),
-        col("affectedVer"), col("fixedVer"), col("unaffectedVer"),
-        coalesce(col("issuedDate"), cand("c_pub", "v is not null")).as("issuedDate"),
-        coalesce(col("lastModDate"), cand("c_mod", "v is not null")).as("lastModDate"),
-        col("cves"))
+    regrouped
+      .withColumn("_e_v3s", e3s).withColumn("_e_v3v", e3v)
+      .withColumn("_e_v2s", e2s).withColumn("_e_v2v", e2v)
+      .withColumn("_fix_sev", fixedSeverity(severity, col("_e_v2s"), col("_e_v3s")))
+      .select(Records.row[T](
+        "description" -> orNvd("description"),
+        "link" -> orNvd("link"),
+        "severity" -> col("_fix_sev"),
+        v2s -> backfilledScore(col("_e_v2s"), col("_fix_sev")),
+        v2v -> col("_e_v2v"),
+        v3s -> backfilledScore(col("_e_v3s"), col("_fix_sev")),
+        v3v -> col("_e_v3v"),
+        "issuedDate" -> coalesce(col("issuedDate"), cand("publishedDate", "v is not null")),
+        "lastModDate" -> coalesce(col("lastModDate"), cand("lastModifiedDate", "v is not null"))
+      )(f => col(f.name)): _*)
       .filter(col("severity").isin(Severity.accepted: _*))
-      .as[AppModuleVul]
+      .as[T]
   }
 }

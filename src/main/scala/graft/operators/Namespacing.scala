@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Vulnerability
+import graft.core.{Records, Vulnerability}
 
 /** SURVEY A1 — doVulnerabilitiesNamespacing
   * (reference updater/updater.go:642-671): explode each vuln's
@@ -18,6 +18,10 @@ import graft.core.Vulnerability
   * cluster layouts. In practice all records sharing (ns, name) within
   * one feed carry identical metadata.
   *
+  * The output holds one row per (namespace, name), the key of the
+  * reference's final upsert (A8, memdb.go:288-297); `VulDbPipeline`
+  * relies on this and runs no upsert of its own.
+  *
   * Scale: one shuffle on (namespace, name); collect_list is bounded by
   * per-vuln fix counts (tens), so no group blow-up.
   */
@@ -29,27 +33,12 @@ object Namespacing {
       .select(col("*"), posexplode(col("fixedIn")).as(Seq("fv_pos", "fv")))
       .groupBy(col("fv.featureNamespace").as("groupNs"), col("name"))
       .agg(
-        max(struct(col("description"), col("link"), col("severity"),
-          col("cvssV2Score"), col("cvssV2Vectors"), col("cvssV3Score"),
-          col("cvssV3Vectors"), col("issuedDate"), col("lastModDate"),
-          col("cves"), col("cpes"), col("feedRating"))).as("m"),
+        max(struct(Records.columns[Vulnerability]("name", "namespace", "fixedIn"): _*)).as("m"),
         sort_array(collect_list(struct(col("fv_pos"), col("fv")))).as("fvs"))
-      .select(
-        col("name"),
-        col("groupNs").as("namespace"),
-        col("m.description").as("description"),
-        col("m.link").as("link"),
-        col("m.severity").as("severity"),
-        col("m.cvssV2Score").as("cvssV2Score"),
-        col("m.cvssV2Vectors").as("cvssV2Vectors"),
-        col("m.cvssV3Score").as("cvssV3Score"),
-        col("m.cvssV3Vectors").as("cvssV3Vectors"),
-        col("m.issuedDate").as("issuedDate"),
-        col("m.lastModDate").as("lastModDate"),
-        col("m.cves").as("cves"),
-        expr("transform(fvs, x -> x.fv)").as("fixedIn"),
-        col("m.cpes").as("cpes"),
-        col("m.feedRating").as("feedRating"))
+      .select(Records.row[Vulnerability](
+        "name" -> col("name"),
+        "namespace" -> col("groupNs"),
+        "fixedIn" -> expr("transform(fvs, x -> x.fv)"))(f => col(s"m.${f.name}")): _*)
       .as[Vulnerability]
   }
 }

@@ -12,8 +12,11 @@ import graft.sinks.VulDbSink
   *   distro feeds -> union -> namespacing (A1)
   *   app feeds    -> rank-dedup (A9) -> calibration (J9) -> gate
   *   NVD dimension -> enrichment join + severity banding + gate (J1/J2)
-  *   final keyed upsert (A8) -> bucketed dual-projection encrypted
-  *   artifacts (K1-K6)
+  *   -> bucketed dual-projection encrypted artifacts (K1-K6)
+  *
+  * The reference's final keyed upsert (A8) has no step here: namespacing
+  * already yields one distro row per (namespace, name), the upsert's
+  * key, and enrichment keeps one row per input row.
   *
   * Each input is any Dataset produced by a graft.sources adapter, so
   * callers compose exactly the feed set they mirror locally.
@@ -34,7 +37,7 @@ object VulDbPipeline {
   /** Transform phase: everything up to (not including) the artifact
     * write, fully lazy. With a non-empty `tracer` (the `-debug
     * v=CVE-...` analogue), matching records are snapshotted after
-    * parse/union, namespacing, enrichment, and the final upsert. */
+    * parse/union, namespacing, enrichment, and before the sink. */
   def build(in: Inputs, tracer: VulTracer = VulTracer.disabled)(
       implicit spark: SparkSession): Outputs = {
     import spark.implicits._
@@ -59,24 +62,7 @@ object VulDbPipeline {
     val enrichedApps = tracer.tap("post enrich app", Enrich.app(appsGated, in.nvd),
       nameCol = "vulName")
 
-    // A8 — final keyed upsert: one record per (namespace, name);
-    // deterministic max-struct pick replaces Go-map last-writer-wins
-    // (feeds own disjoint namespaces, so conflicts don't arise in
-    // practice).
-    val deduped = enrichedVulns.toDF()
-      .groupBy("namespace", "name")
-      .agg(org.apache.spark.sql.functions.max(
-        org.apache.spark.sql.functions.struct(
-          enrichedVulns.columns.filterNot(c => c == "namespace" || c == "name")
-            .map(org.apache.spark.sql.functions.col): _*)).as("m"))
-      .select(
-        org.apache.spark.sql.functions.col("name"),
-        org.apache.spark.sql.functions.col("namespace"),
-        org.apache.spark.sql.functions.col("m.*"))
-      .select(enrichedVulns.columns.map(org.apache.spark.sql.functions.col): _*)
-      .as[Vulnerability]
-
-    Outputs(tracer.tap("pre sink distro", deduped), enrichedApps)
+    Outputs(tracer.tap("pre sink distro", enrichedVulns), enrichedApps)
   }
 
   /** Build + write both artifacts; returns per-file shas. `keys`

@@ -82,7 +82,7 @@ object VulDomainQueries {
           when(col("value") < 10, null).otherwise(col("value")).as("feed_score"))
         feed.join(broadcast(dim), "event_type")
           .select(coalesce(col("feed_score"), col("dim_score")).as("score"))
-          // same banding shape as severityFromScore, rescaled to the
+          // same banding shape as Enrich.fixedSeverity, rescaled to the
           // events value domain (0-200) so the gate is non-trivial
           .select(when(col("score") >= 90, "Critical").when(col("score") >= 70, "High")
             .when(col("score") >= 40, "Medium").when(col("score") >= 10, "Low")

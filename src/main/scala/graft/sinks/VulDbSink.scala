@@ -1,6 +1,6 @@
 package graft.sinks
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, FileOutputStream}
+import java.io.{ByteArrayInputStream, FileOutputStream}
 import java.nio.ByteBuffer
 import java.security.MessageDigest
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
@@ -120,41 +120,10 @@ object VulDbSink {
   def sha256Hex(b: Array[Byte]): String =
     MessageDigest.getInstance("SHA-256").digest(b).map("%02x".format(_)).mkString
 
-  def makeTar(files: Seq[TarEntry]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val tar = new TarArchiveOutputStream(bos)
-    tar.setLongFileMode(TarArchiveOutputStream.LONGFILE_GNU)
-    files.foreach { f =>
-      val e = new TarArchiveEntry(f.name)
-      e.setSize(f.bytes.length.toLong)
-      tar.putArchiveEntry(e)
-      tar.write(f.bytes)
-      tar.closeArchiveEntry()
-    }
-    tar.finish(); tar.close()
-    bos.toByteArray
-  }
-
-  def gzip(b: Array[Byte]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val gz = new GZIPOutputStream(bos)
-    gz.write(b); gz.close()
-    bos.toByteArray
-  }
-
   private val zeroKey = new Array[Byte](32)
 
-  /** AES-256-GCM seal: random 12-byte nonce prepended, 16-byte tag
-    * appended (the Java doFinal output already carries the tag). */
-  def encrypt(plain: Array[Byte]): Array[Byte] = {
-    val nonce = new Array[Byte](12)
-    new java.security.SecureRandom().nextBytes(nonce)
-    val cipher = Cipher.getInstance("AES/GCM/NoPadding")
-    cipher.init(Cipher.ENCRYPT_MODE, new SecretKeySpec(zeroKey, "AES"),
-      new GCMParameterSpec(128, nonce))
-    nonce ++ cipher.doFinal(plain)
-  }
-
+  /** Open an AES-256-GCM seal: the 12-byte nonce, then the ciphertext
+    * with its 16-byte tag, as Go's gcm.Seal emits them. */
   def decrypt(sealedBytes: Array[Byte]): Array[Byte] = {
     val nonce = sealedBytes.take(12)
     val cipher = Cipher.getInstance("AES/GCM/NoPadding")
@@ -182,18 +151,6 @@ object VulDbSink {
     s"""{"Version":"${jsonEscape(version)}","UpdateTime":"${jsonEscape(updateTime)}","Keys":${m(keys)},"Shas":${m(shas)}}"""
   }
 
-  /** Assemble one artifact: [4-byte BE header len | header | AES-GCM(tar.gz)]. */
-  def writeDbFile(path: String, headerJson: String, files: Seq[TarEntry]): Unit = {
-    val cipherData = encrypt(gzip(makeTar(files)))
-    val header = headerJson.getBytes("UTF-8")
-    val out = new FileOutputStream(path)
-    try {
-      out.write(ByteBuffer.allocate(4).putInt(header.length).array())
-      out.write(header)
-      out.write(cipherData)
-    } finally out.close()
-  }
-
   /** One tar member for the streaming assembler: either an on-disk
     * spool file (bounded driver memory) or small in-memory bytes
     * (raw passthrough files). */
@@ -218,9 +175,10 @@ object VulDbSink {
     def writeTo(out: java.io.OutputStream): Unit = out.write(bytes)
   }
 
-  /** Streaming artifact assembly — byte-identical format to
-    * `writeDbFile` (modulo nonce), but the tar/gzip/AES-GCM chain is
-    * a single OutputStream pipeline fed entry-by-entry, so the
+  /** Assemble one artifact: [4-byte BE header len | header |
+    * AES-256-GCM(tar.gz)], with a random 12-byte nonce ahead of the
+    * ciphertext and the 16-byte tag after it. The tar/gzip/AES-GCM chain
+    * is a single OutputStream pipeline fed entry by entry, so the
     * artifact is never resident in driver memory. */
   def writeDbFileStreaming(path: String, headerJson: String,
       entries: Seq[ArtifactEntry]): Unit = {

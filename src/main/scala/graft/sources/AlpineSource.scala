@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Model, Vulnerability}
+import graft.core.{Model, Records, Vulnerability}
 import graft.functions.VulFunctions
 
 /** S5 — Alpine secdb (reference updater/fetchers/alpine/alpine.go:54-129;
@@ -55,24 +55,15 @@ object AlpineSource {
       .filter(!(col("cveRawName") === "CVE-2017-3738" && col("fixVer") === "1.0.2o-r0"))
       .filter(VulFunctions.cve_year(expr("substring(cveRawName, 5)")) >= Model.firstYear)
       .withColumn("cveName", expr("split_part(cveRawName, ' ', 1)"))
-      .select(
-        col("cveName").as("name"),
-        col("ns").as("namespace"),
-        lit("").as("description"),
-        concat(lit(linkPrefix), col("cveName")).as("link"),
-        lit("").as("severity"),
-        lit(0.0).as("cvssV2Score"), lit("").as("cvssV2Vectors"),
-        lit(0.0).as("cvssV3Score"), lit("").as("cvssV3Vectors"),
-        lit(null).cast(TimestampType).as("issuedDate"),
-        lit(null).cast(TimestampType).as("lastModDate"),
-        expr("CAST(array() AS array<struct<name:string,cvssV2Score:double,cvssV2Vectors:string,cvssV3Score:double,cvssV3Vectors:string>>)").as("cves"),
-        array(struct(
+      .select(Records.withDefaults[Vulnerability](
+        "name" -> col("cveName"),
+        "namespace" -> col("ns"),
+        "link" -> concat(lit(linkPrefix), col("cveName")),
+        "fixedIn" -> array(struct(
           col("pkgName").as("featureName"),
           col("ns").as("featureNamespace"),
           col("fixVer").as("version"),
-          lit("").as("minVer"))).as("fixedIn"),
-        expr("CAST(array() AS array<string>)").as("cpes"),
-        lit("").as("feedRating"))
+          lit("").as("minVer")))): _*)
       .as[Vulnerability]
   }
 }

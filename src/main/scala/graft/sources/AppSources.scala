@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{AppModuleVul, OpVersion}
+import graft.core.{AppModuleVul, OpVersion, Records}
 
 /** The small app-feed adapters: Kubernetes official feed (S19), manual
   * JSON-lines DBs (S21), OpenShift static records (S20), and the
@@ -24,23 +24,13 @@ object AppSources {
     import spark.implicits._
     spark.read.schema(k8sSchema).option("multiLine", true).json(path)
       .select(explode(col("items")).as("i"))
-      .select(
-        col("i.id").as("vulName"),
-        lit("kubernetes").as("appName"),
-        lit("kubernetes").as("moduleName"),
-        expr("CAST(array() AS array<string>)").as("importPaths"),
-        expr("CAST(array() AS array<string>)").as("symbols"),
-        coalesce(col("i.summary"), lit("")).as("description"),
-        coalesce(col("i.url"), lit("")).as("link"),
-        lit(0.0).as("score"), lit("").as("vectors"),
-        lit(0.0).as("scoreV3"), lit("").as("vectorsV3"),
-        lit("").as("severity"),
-        expr("CAST(array() AS array<struct<opCode:string,version:string>>)").as("affectedVer"),
-        expr("CAST(array() AS array<struct<opCode:string,version:string>>)").as("fixedVer"),
-        expr("CAST(array() AS array<struct<opCode:string,version:string>>)").as("unaffectedVer"),
-        lit(null).cast(TimestampType).as("issuedDate"),
-        lit(null).cast(TimestampType).as("lastModDate"),
-        array(col("i.id")).as("cves"))
+      .select(Records.withDefaults[AppModuleVul](
+        "vulName" -> col("i.id"),
+        "appName" -> lit("kubernetes"),
+        "moduleName" -> lit("kubernetes"),
+        "description" -> coalesce(col("i.summary"), lit("")),
+        "link" -> coalesce(col("i.url"), lit("")),
+        "cves" -> array(col("i.id"))): _*)
       .as[AppModuleVul]
   }
 
@@ -65,30 +55,24 @@ object AppSources {
   /** JSON-lines of AppModuleVul in the reference's Go tag names. */
   def manual(spark: SparkSession, path: String): Dataset[AppModuleVul] = {
     import spark.implicits._
-    def ops(c: String) = coalesce(
-      expr(s"transform($c, x -> struct(coalesce(x.O, '') AS opCode, coalesce(x.V, '') AS version))"),
-      expr("CAST(array() AS array<struct<opCode:string,version:string>>)"))
+    // a field the line leaves out is unset
+    def tag(field: String, t: String) =
+      field -> coalesce(col(t), Records.unset[AppModuleVul](field))
+    def ops(field: String, t: String) = field -> coalesce(
+      expr(s"transform($t, x -> struct(coalesce(x.O, '') AS opCode, coalesce(x.V, '') AS version))"),
+      Records.unset[AppModuleVul](field))
     spark.read.schema(manualSchema).json(path)
       .filter(col("VN").isNotNull)
-      .select(
-        col("VN").as("vulName"),
-        coalesce(col("AN"), lit("")).as("appName"),
-        coalesce(col("MN"), lit("")).as("moduleName"),
-        coalesce(col("IP"), expr("CAST(array() AS array<string>)")).as("importPaths"),
-        coalesce(col("SYM"), expr("CAST(array() AS array<string>)")).as("symbols"),
-        coalesce(col("D"), lit("")).as("description"),
-        coalesce(col("L"), lit("")).as("link"),
-        coalesce(col("SC"), lit(0.0)).as("score"),
-        coalesce(col("VV2"), lit("")).as("vectors"),
-        coalesce(col("SC3"), lit(0.0)).as("scoreV3"),
-        coalesce(col("VV3"), lit("")).as("vectorsV3"),
-        coalesce(col("SE"), lit("")).as("severity"),
-        ops("AV").as("affectedVer"),
-        ops("FV").as("fixedVer"),
-        ops("UV").as("unaffectedVer"),
-        lit(null).cast(TimestampType).as("issuedDate"),
-        lit(null).cast(TimestampType).as("lastModDate"),
-        array(col("VN")).as("cves"))
+      .select(Records.withDefaults[AppModuleVul](
+        "vulName" -> col("VN"),
+        tag("appName", "AN"), tag("moduleName", "MN"),
+        tag("importPaths", "IP"), tag("symbols", "SYM"),
+        tag("description", "D"), tag("link", "L"),
+        tag("score", "SC"), tag("vectors", "VV2"),
+        tag("scoreV3", "SC3"), tag("vectorsV3", "VV3"),
+        tag("severity", "SE"),
+        ops("affectedVer", "AV"), ops("fixedVer", "FV"), ops("unaffectedVer", "UV"),
+        "cves" -> array(col("VN"))): _*)
       .as[AppModuleVul]
   }
 

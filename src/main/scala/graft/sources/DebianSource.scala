@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Model, PkgVersion, Vulnerability}
+import graft.core.{Model, PkgVersion, Records, Vulnerability}
 import graft.functions.VulFunctions
 
 /** S4 — Debian security-tracker JSON + archived snapshot merge
@@ -94,20 +94,13 @@ object DebianSource {
         // FixedIn concatenated in (rank, pkg, ns) canonical order
         sort_array(collect_list(struct(
           col("rank"), col("pkgName"), col("featureNs"), col("version")))).as("fvs"))
-      .select(
-        col("vulnName").as("name"),
-        lit("").as("namespace"),
-        coalesce(col("topDesc.description"), lit("")).as("description"),
-        concat(lit(urlPrefix), col("vulnName")).as("link"),
-        expr(s"array(${Severity.orderingSql})[int(topUrgency.sevOrd) - 1]").as("severity"),
-        lit(0.0).as("cvssV2Score"), lit("").as("cvssV2Vectors"),
-        lit(0.0).as("cvssV3Score"), lit("").as("cvssV3Vectors"),
-        lit(null).cast(TimestampType).as("issuedDate"),
-        lit(null).cast(TimestampType).as("lastModDate"),
-        expr("CAST(array() AS array<struct<name:string,cvssV2Score:double,cvssV2Vectors:string,cvssV3Score:double,cvssV3Vectors:string>>)").as("cves"),
-        expr("transform(fvs, f -> struct(f.pkgName AS featureName, f.featureNs AS featureNamespace, f.version AS version, '' AS minVer))").as("fixedIn"),
-        expr("CAST(array() AS array<string>)").as("cpes"),
-        col("topUrgency.urgency").as("feedRating"))
+      .select(Records.withDefaults[Vulnerability](
+        "name" -> col("vulnName"),
+        "description" -> coalesce(col("topDesc.description"), lit("")),
+        "link" -> concat(lit(urlPrefix), col("vulnName")),
+        "severity" -> expr(s"array(${Severity.orderingSql})[int(topUrgency.sevOrd) - 1]"),
+        "fixedIn" -> expr("transform(fvs, f -> struct(f.pkgName AS featureName, f.featureNs AS featureNamespace, f.version AS version, '' AS minVer))"),
+        "feedRating" -> col("topUrgency.urgency")): _*)
       .as[Vulnerability]
   }
 

@@ -105,10 +105,6 @@ object OsvSource {
         cves = cves)
     }
 
-  /** The preferred map key: first CVE alias, else the GO id
-    * (govuln.go:413-418). */
-  def preferredKey(v: AppModuleVul): String = v.cves.headOption.getOrElse(v.vulName)
-
   /** GO- ids never added to the output (govuln.go:473-480). */
   val goWhitelist: Seq[String] = Seq(
     "GO-2022-0635", "GO-2022-0646", "GO-2025-3918",

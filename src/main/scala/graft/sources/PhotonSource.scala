@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{PkgVersion, Vulnerability}
+import graft.core.{PkgVersion, Records, Vulnerability}
 
 /** S10 — VMware Photon per-release JSON arrays
   * (reference updater/fetchers/photon/photon.go:52-162; FIXTURES.md §8).
@@ -42,27 +42,18 @@ object PhotonSource {
           .when(expr("version_valid(res_ver)"), col("res_ver"))
           .otherwise(""))
       .withColumn("alt", altMap(col("pkg")))
-      .select(
-        col("cve_id").as("name"),
-        lit(ns).as("namespace"),
-        lit("").as("description"),
-        lit("").as("link"),
-        lit("").as("severity"),
-        lit(0.0).as("cvssV2Score"), lit("").as("cvssV2Vectors"),
-        col("cve_score").as("cvssV3Score"), lit("").as("cvssV3Vectors"),
-        lit(null).cast(TimestampType).as("issuedDate"),
-        lit(null).cast(TimestampType).as("lastModDate"),
-        expr("CAST(array() AS array<struct<name:string,cvssV2Score:double,cvssV2Vectors:string,cvssV3Score:double,cvssV3Vectors:string>>)").as("cves"),
-        when(col("alt").isNotNull, array(
+      .select(Records.withDefaults[Vulnerability](
+        "name" -> col("cve_id"),
+        "namespace" -> lit(ns),
+        "cvssV3Score" -> col("cve_score"),
+        "fixedIn" -> when(col("alt").isNotNull, array(
           struct(col("pkg").as("featureName"), lit(ns).as("featureNamespace"),
             col("version").as("version"), lit("").as("minVer")),
           struct(col("alt").as("featureName"), lit(ns).as("featureNamespace"),
             col("version").as("version"), lit("").as("minVer"))))
           .otherwise(array(
             struct(col("pkg").as("featureName"), lit(ns).as("featureNamespace"),
-              col("version").as("version"), lit("").as("minVer")))).as("fixedIn"),
-        expr("CAST(array() AS array<string>)").as("cpes"),
-        lit("").as("feedRating"))
+              col("version").as("version"), lit("").as("minVer"))))): _*)
       .as[Vulnerability]
   }
 }

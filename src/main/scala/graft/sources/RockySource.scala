@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{CveRef, FeatureVersion, PkgVersion, Vulnerability}
+import graft.core.{CveRef, FeatureVersion, PkgVersion, Records, Vulnerability}
 
 /** S11 — Rocky Apollo errata API JSON
   * (reference updater/fetchers/rocky/rocky.go; FIXTURES.md §9).
@@ -102,20 +102,15 @@ object RockySource {
           renderUdf(col("nv._2")).as("version"),
           lit("").as("minVer")))).as("fixedIn"))
 
-    pkgRows.select(
-      col("name"),
-      col("ns").as("namespace"),
-      coalesce(col("description"), lit("")).as("description"),
-      lit("").as("link"),
-      sevUdf(col("severity")).as("severity"),
-      lit(0.0).as("cvssV2Score"), lit("").as("cvssV2Vectors"),
-      lit(0.0).as("cvssV3Score"), lit("").as("cvssV3Vectors"),
-      try_to_timestamp(expr("split_part(published_at, 'T', 1)"), lit("yyyy-MM-dd")).as("issuedDate"),
-      lit(null).cast(TimestampType).as("lastModDate"),
-      expr("transform(coalesce(cves, array()), c -> struct(c.cve AS name, 0D AS cvssV2Score, '' AS cvssV2Vectors, 0D AS cvssV3Score, '' AS cvssV3Vectors))").as("cves"),
-      col("fixedIn"),
-      expr("CAST(array() AS array<string>)").as("cpes"),
-      lit("").as("feedRating"))
+    pkgRows.select(Records.withDefaults[Vulnerability](
+      "name" -> col("name"),
+      "namespace" -> col("ns"),
+      "description" -> coalesce(col("description"), lit("")),
+      "severity" -> sevUdf(col("severity")),
+      "issuedDate" -> try_to_timestamp(expr("split_part(published_at, 'T', 1)"), lit("yyyy-MM-dd")),
+      "cves" -> transform(coalesce(col("cves"), array()),
+        c => struct(Records.withDefaults[CveRef]("name" -> c("cve")): _*)),
+      "fixedIn" -> col("fixedIn")): _*)
       .as[Vulnerability]
   }
 }

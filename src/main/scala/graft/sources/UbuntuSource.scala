@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions.input_file_name
+import org.apache.spark.sql.functions.{col, input_file_name}
 
 import graft.core.{FeatureVersion, Model, PkgVersion, Vulnerability}
 import graft.functions.VulFunctions
@@ -159,17 +159,14 @@ object UbuntuSource {
     val keep = spark.sparkContext.broadcast(keepCves)
     spark.read.option("wholetext", true).option("pathGlobFilter", "CVE-*")
       .text(s"$repoDir/active", s"$repoDir/retired")
-      .select(input_file_name().as("f"), org.apache.spark.sql.functions.col("value"))
+      .select(input_file_name().as("f"), col("value"))
       .as[(String, String)]
       .filter { case (f, _) =>
         val base = f.substring(f.lastIndexOf('/') + 1)
         base.startsWith("CVE-") && Model.cveYear(base.substring(4)) >= Model.firstYear
       }
       .map { case (_, content) => upstreamCalibration(parseFile(content)) }
-      .filter { v =>
-        val desc = v.description.toLowerCase
-        !(desc.contains("rejected reason") || desc.contains("withdrawn advisory"))
-      }
       .filter(v => v.fixedIn.nonEmpty || keep.value.contains(v.name))
+      .filter(!VulFunctions.isWithdrawn(col("description")))
   }
 }

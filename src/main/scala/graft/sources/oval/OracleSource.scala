@@ -3,7 +3,7 @@ package graft.sources.oval
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{CveRef, FeatureVersion, PkgVersion, Vulnerability}
+import graft.core.{CveRef, FeatureVersion, PkgVersion, Records, Vulnerability}
 
 /** S7 — Oracle ELSA OVAL (reference updater/fetchers/oracle/oracle.go).
   *
@@ -93,21 +93,18 @@ object OracleSource {
         max(col("lastModDate")).as("lastModDate"),
         flatten(expr("transform(array_sort(collect_list(struct(_ord, fixedIn))), x -> x.fixedIn)")).as("fvAll"),
         flatten(expr("transform(array_sort(collect_list(struct(_ord, cves))), x -> x.cves)")).as("cveAll"))
-      .select(
-        col("name"),
-        coalesce(col("nsp.namespace"), lit("")).as("namespace"),
-        coalesce(col("dsc.description"), lit("")).as("description"),
-        coalesce(col("lnk.link"), lit("")).as("link"),
-        coalesce(col("sev.severity"), lit("Unknown")).as("severity"),
-        lit(0.0).as("cvssV2Score"), lit("").as("cvssV2Vectors"),
-        lit(0.0).as("cvssV3Score"), lit("").as("cvssV3Vectors"),
-        col("issuedDate"), col("lastModDate"),
+      .select(Records.withDefaults[Vulnerability](
+        "name" -> col("name"),
+        "namespace" -> coalesce(col("nsp.namespace"), lit("")),
+        "description" -> coalesce(col("dsc.description"), lit("")),
+        "link" -> coalesce(col("lnk.link"), lit("")),
+        "severity" -> coalesce(col("sev.severity"), lit("Unknown")),
+        "issuedDate" -> col("issuedDate"),
+        "lastModDate" -> col("lastModDate"),
         // dedup by full struct == the reference's name / ns:name:version
         // keys (all other fields are constant for this feed)
-        expr("array_distinct(cveAll)").as("cves"),
-        expr("array_distinct(fvAll)").as("fixedIn"),
-        expr("CAST(array() AS array<string>)").as("cpes"),
-        lit("").as("feedRating"))
+        "cves" -> expr("array_distinct(cveAll)"),
+        "fixedIn" -> expr("array_distinct(fvAll)")): _*)
       .as[Vulnerability]
   }
 

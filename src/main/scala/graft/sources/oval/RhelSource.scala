@@ -3,7 +3,7 @@ package graft.sources.oval
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{CveRef, FeatureVersion, Model, PkgVersion, Vulnerability}
+import graft.core.{CveRef, FeatureVersion, Model, PkgVersion, Records, Vulnerability}
 
 /** S1 — RHEL/CentOS OVAL (reference updater/fetchers/rhel2/rhel.go).
   *
@@ -135,21 +135,15 @@ object RhelSource {
       .withColumn("_ord", monotonically_increasing_id())
       .groupBy("namespace", "name")
       .agg(
-        min(struct(col("_ord"), col("description"), col("link"), col("severity"),
-          col("cvssV2Score"), col("cvssV2Vectors"), col("cvssV3Score"), col("cvssV3Vectors"),
-          col("issuedDate"), col("lastModDate"), col("cves"), col("feedRating"))).as("m"),
+        min(struct(col("_ord") +:
+          Records.columns[Vulnerability]("name", "namespace", "fixedIn", "cpes"): _*)).as("m"),
         flatten(expr("transform(array_sort(collect_list(struct(_ord, fixedIn))), x -> x.fixedIn)")).as("fvAll"),
         flatten(expr("transform(array_sort(collect_list(struct(_ord, cpes))), x -> x.cpes)")).as("cpeAll"))
-      .select(col("name"), col("namespace"),
-        col("m.description").as("description"), col("m.link").as("link"),
-        col("m.severity").as("severity"),
-        col("m.cvssV2Score").as("cvssV2Score"), col("m.cvssV2Vectors").as("cvssV2Vectors"),
-        col("m.cvssV3Score").as("cvssV3Score"), col("m.cvssV3Vectors").as("cvssV3Vectors"),
-        col("m.issuedDate").as("issuedDate"), col("m.lastModDate").as("lastModDate"),
-        col("m.cves").as("cves"),
-        expr("array_distinct(fvAll)").as("fixedIn"),
-        expr("array_distinct(cpeAll)").as("cpes"),
-        col("m.feedRating").as("feedRating"))
+      .select(Records.row[Vulnerability](
+        "name" -> col("name"),
+        "namespace" -> col("namespace"),
+        "fixedIn" -> expr("array_distinct(fvAll)"),
+        "cpes" -> expr("array_distinct(cpeAll)"))(f => col(s"m.${f.name}")): _*)
 
     val isRhsa = lower(col("name")).contains("rhsa")
     val rhsas = merged.filter(isRhsa)
@@ -173,19 +167,12 @@ object RhelSource {
         "left_anti")
       .groupBy("namespace", "name")
       .agg(
-        min(struct(col("description"), col("link"), col("severity"),
-          col("cvssV2Score"), col("cvssV2Vectors"), col("cvssV3Score"), col("cvssV3Vectors"),
-          col("issuedDate"), col("lastModDate"), col("cves"), col("cpes"), col("feedRating"))).as("m"),
+        min(struct(Records.columns[Vulnerability]("name", "namespace", "fixedIn"): _*)).as("m"),
         collect_list(col("fv")).as("fixedIn"))
-      .select(col("name"), col("namespace"),
-        col("m.description").as("description"), col("m.link").as("link"),
-        col("m.severity").as("severity"),
-        col("m.cvssV2Score").as("cvssV2Score"), col("m.cvssV2Vectors").as("cvssV2Vectors"),
-        col("m.cvssV3Score").as("cvssV3Score"), col("m.cvssV3Vectors").as("cvssV3Vectors"),
-        col("m.issuedDate").as("issuedDate"), col("m.lastModDate").as("lastModDate"),
-        col("m.cves").as("cves"),
-        expr("array_sort(fixedIn)").as("fixedIn"),
-        col("m.cpes").as("cpes"), col("m.feedRating").as("feedRating"))
+      .select(Records.row[Vulnerability](
+        "name" -> col("name"),
+        "namespace" -> col("namespace"),
+        "fixedIn" -> expr("array_sort(fixedIn)"))(f => col(s"m.${f.name}")): _*)
 
     culled.unionByName(rhsas).as[Vulnerability]
   }

@@ -88,6 +88,25 @@ class EnrichSpec extends SparkSpecBase {
     assert(out.description.contains("NTLM"))
   }
 
+  test("an unset severity: distro takes NVD's severity string, app keeps its own") {
+    import spark.implicits._
+    // NVD knows a severity but no scores, so banding cannot supply one
+    val sevOnly = Seq(NvdMetadata("CVE-2020-0001", "nvd description", Severity.High,
+      0.0, "", 0.0, "", null, null, "", Nil)).toDS()
+    val d = Enrich.distro(Seq(emptyVuln("CVE-2020-0001", "alpine:3.6")).toDS(), sevOnly).collect()
+    assert(d.map(_.severity).toSeq == Seq(Severity.High))
+    assert(d.head.cvssV3Score == 7.0) // backfilled from the severity it took
+    assert(d.head.description == "nvd description")
+    val app = AppModuleVul(
+      vulName = "CVE-2020-0001", appName = "a", moduleName = "m",
+      importPaths = Nil, symbols = Nil, description = "", link = "",
+      score = 0.0, vectors = "", scoreV3 = 0.0, vectorsV3 = "",
+      severity = "", affectedVer = Nil, fixedVer = Nil, unaffectedVer = Nil,
+      issuedDate = null, lastModDate = null, cves = Nil)
+    // its own (empty) severity stands, so the accepted-severity gate drops it
+    assert(Enrich.app(Seq(app).toDS(), sevOnly).collect().isEmpty)
+  }
+
   test("end-to-end slice: alpine -> namespacing -> enrich") {
     val vulns = Namespacing(AlpineSource.load(spark, fixture("alpine_secdb.json")))
     val out = Enrich.distro(vulns, nvd).collect()

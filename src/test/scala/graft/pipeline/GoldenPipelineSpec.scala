@@ -1,16 +1,18 @@
 package graft.pipeline
 
 import graft.SparkSpecBase
+import graft.core.{FeatureVersion, NvdMetadata, Vulnerability}
 import graft.operators.AppEnrichOps
 import graft.sinks.VulDbSink
 import graft.sources._
 import graft.sources.oval._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 
 /** SURVEY §5(a) — the golden end-to-end assertion: every fixture feed
   * through the full `VulDbPipeline` DAG (parse → namespacing →
-  * app-dedup → calibration → gates → NVD enrichment → backfill →
-  * keyed upsert), BOTH encrypted artifacts written, decrypted back,
+  * app-dedup → calibration → gates → NVD enrichment → backfill),
+  * BOTH encrypted artifacts written, decrypted back,
   * and the complete canonical output (headers with their sha
   * manifests + every tar member's JSON-lines content) compared
   * byte-for-byte against a checked-in expectation. The expected file
@@ -61,6 +63,32 @@ class GoldenPipelineSpec extends SparkSpecBase {
       nvd = NvdSource.load(spark, s"$fx/nvd_sample.json"),
       calibration = Some(AppSources.calibration(spark, s"$fx/apps_calibration")),
       rawFiles = Seq(VulDbSink.TarEntry("rhel-cpes.json", "{}".getBytes("UTF-8"))))
+  }
+
+  test("one row per (namespace, name) with no upsert: two feeds sharing a CVE, and the fixture build") {
+    import spark.implicits._
+    def feed(desc: String, feedNs: String, fixed: String) = Seq(Vulnerability(
+      name = "CVE-2018-14618", namespace = feedNs, description = desc, link = "l",
+      severity = "High", cvssV2Score = 7.5, cvssV2Vectors = "", cvssV3Score = 0.0,
+      cvssV3Vectors = "", issuedDate = null, lastModDate = null, cves = Nil,
+      fixedIn = Seq(FeatureVersion("curl", "alpine:3.8", fixed, "")),
+      cpes = Nil, feedRating = "")).toDS()
+    val two = VulDbPipeline.build(VulDbPipeline.Inputs(
+      distroFeeds = Seq(feed("first feed", "alpine:3.8", "7.61.1-r0"),
+        feed("second feed", "alpine-mirror", "7.61.0-r0")),
+      appFeeds = Nil, nvd = spark.emptyDataset[NvdMetadata])).vulns.collect()
+    assert(two.length == 1)
+    val v = two.head
+    assert((v.namespace, v.name) == ("alpine:3.8", "CVE-2018-14618"))
+    // the greater metadata struct wins; both feeds' fixes are kept
+    assert(v.description == "second feed")
+    assert(v.fixedIn.map(_.version).sorted == Seq("7.61.0-r0", "7.61.1-r0"))
+
+    val fx = fixture("nvd_sample.json").stripSuffix("/nvd_sample.json")
+    val repeated = VulDbPipeline.build(buildInputs(fx)).vulns
+      .groupBy("namespace", "name").count().filter(col("count") > 1)
+      .as[(String, String, Long)].collect()
+    assert(repeated.isEmpty, s"repeated (namespace, name): ${repeated.mkString(", ")}")
   }
 
   test("full fixture-feed pipeline -> both artifacts -> decrypt matches the checked-in golden output") {

@@ -29,7 +29,8 @@ package graft.operators
   * Failure semantics: waits for every action to finish, then rethrows
   * the FIRST failure (by argument order) with its original type, so
   * callers' require()/IllegalArgumentException contracts hold
-  * unchanged. Scale posture: pure driver-side concurrency — the
+  * unchanged; every later failure rides along as a suppressed
+  * exception of the first, so none is lost. Scale posture: pure driver-side concurrency — the
   * cluster sees the same jobs; FIFO scheduling backfills executor
   * slots exactly as guide §2.6 describes. */
 object Actions {
@@ -49,6 +50,11 @@ object Actions {
       t
     }
     threads.foreach(_.join())
-    results.flatten.headOption.foreach(throw _)
+    results.flatten.toList match {
+      case first :: rest =>
+        rest.foreach(first.addSuppressed)
+        throw first
+      case Nil => ()
+    }
   }
 }

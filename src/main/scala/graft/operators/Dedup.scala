@@ -52,14 +52,6 @@ object Dedup {
         first(col("_n")).as("n"))
   }
 
-  /** MinHash signature columns h0..h{k-1} over a shingle-array column
-    * (computed map-side; deterministic md5-based hash family). */
-  def minhashSignature(df: DataFrame, shinglesCol: String, k: Int): DataFrame =
-    (0 until k).foldLeft(df) { (d, i) =>
-      d.withColumn(s"h$i",
-        array_min(transform(col(shinglesCol), x => md5(concat(lit(s"$i#"), x)))))
-    }
-
   /** Approximate Jaccard threshold of a banded-LSH configuration —
     * the similarity at which the s-curve `P(candidate) = 1-(1-s^r)^b`
     * crosses ~50%: `t ≈ (1/b)^(1/r)` with `b = numHashes/rowsPerBand`
@@ -1344,10 +1336,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Hamming distance between two simhash64 values (bit_count is a
-    * codegen'd built-in). */
-  def hammingDistance(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
   /** Band index over a standing corpus's 64-bit signatures (simhash,
     * perceptual dHash, audio fingerprint): one row per (band slot,
     * band value) with the COLLECTED candidate hashes — the
@@ -1445,37 +1433,15 @@ object Dedup {
   // column) brought up to the BM25/IVF takedown contract:
   // tombstone deletes applied by every read immediately, material
   // removal + snapshot-safe tombstone clearing at compaction, and
-  // telemetry from the artifact alone. Devices shared with the
-  // siblings: eager tombstone snapshots (TextStats.localTombstones),
-  // the atomic `_current_vN` pointer swap, the non-recursive rmdir.
+  // telemetry from the artifact alone. The lock, version swap and
+  // tombstone devices are the siblings' own (StandingIndex).
   // ------------------------------------------------------------------
 
-  private def hadoopFs(spark: org.apache.spark.sql.SparkSession,
-      path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-
-  private def hashIndexVersions(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Seq[Long] = TextStats.versionPointers(fs, path)
-
-  /** Resolve the served version dir. This family is VERSIONED FROM
-    * BIRTH, so "no pointer" is never a legal servable state — it
-    * means a rebuild crashed before publishing, or the path is not a
-    * hash-band index at all. Refusing here (rather than falling back
-    * to the root) matters because the rebuild reset is NAME-SCOPED:
-    * a user file co-located at the root deliberately survives
-    * resets, and a root fallback could silently read it as the
-    * index in the crash window. */
+  /** The served version dir. This family is VERSIONED FROM BIRTH, so
+    * "no pointer" refuses instead of falling back to the root. */
   private def currentHashIndexDir(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): String = {
-    val vs = hashIndexVersions(fs, path)
-    require(vs.nonEmpty,
-      s"no published version pointer under $path — a rebuild crashed " +
-        "before publishing (rerun writeHashBandIndex), or this dir was " +
-        "not written by writeHashBandIndex (the layout is versioned " +
-        "from birth)")
-    s"$path/bands_v${vs.max}"
-  }
+      path: String): String =
+    StandingIndex.currentDir(fs, path, "bands_v", None)
 
   /** Persist a hash-band index WITH the document ids — the layout
     * that lets this index family FORGET: one exploded row per
@@ -1561,39 +1527,17 @@ object Dedup {
         "names (sample_pos is the positional layout's key)")
     require(outFiles >= 1, s"outFiles must be >= 1, got $outFiles")
     val spark = base.sparkSession
-    val fs = hadoopFs(spark, path)
+    val fs = StandingIndex.fs(spark, path)
     fs.mkdirs(new org.apache.hadoop.fs.Path(path))
-    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_compact_inprogress")),
-      s"a compaction is running (or crashed) under $path — rebuilding now " +
-        "would be shadowed by its version-pointer swap; wait for it (or " +
-        "delete a stale _compact_inprogress) and rerun")
-    // rebuild reset, NAME-SCOPED to this index's own layout (the BM25
-    // rebuild's rule, for the same reason: a catch-all root sweep
-    // would eat anything a user co-located at the root — a mistyped
-    // path or a neighboring artifact dies silently BEFORE any write).
-    // Only bands_vN dirs, _current_vN pointers, _tombstones and _meta
-    // are this index's to delete; anything else survives untouched
-    // (the root itself is never read as parquet — only bands_vN is —
-    // so a surviving stranger is inert).
-    fs.listStatus(new org.apache.hadoop.fs.Path(path)).toSeq
-      .map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        // pointer names share TextStats.isVersionPointerName with the
-        // resolver, so delete-set and resolve-set cannot drift
-        n == "_tombstones" || n == "_meta" ||
-          TextStats.isVersionPointerName(n) ||
-          (n.startsWith("bands_v") && n.drop(7).nonEmpty &&
-            n.drop(7).forall(_.isDigit))
-      }
-      .foreach(fs.delete(_, true))
+    StandingIndex.refuseIfCompacting(fs, path, rebuild = true)
+    // rebuild reset, name-scoped: anything else at the root survives
+    // untouched (the root itself is never read as parquet — only
+    // bands_vN is — so a surviving stranger is inert)
+    StandingIndex.resetVersions(fs, path, "bands_v", Set("_meta"))
     val (ndocs, totalBands, droppedBands) =
       writeBandsVersion(spark, fs, base, idCol, posCols, hashColName, path,
-        1L, maxBucket, metricName, outFiles)
-    require(fs.createNewFile(
-        new org.apache.hadoop.fs.Path(s"$path/_current_v1")),
-      s"pointer _current_v1 already exists under $path — concurrent " +
-        "rebuilds?")
+        s"$path/bands_v1", maxBucket, metricName, outFiles)
+    StandingIndex.publish(fs, path, 1L, "concurrent rebuilds?")
     writeHashIndexMeta(spark, path, ndocs, totalBands, droppedBands,
       maxBucket, idCol, posCols.headOption.getOrElse(""), sampleCap,
       hashColName)
@@ -1628,7 +1572,7 @@ object Dedup {
     * exact statistics cannot drift between the two paths. Explodes
     * the (idCol, `_h`) frame into four 16-bit band rows, caps bands
     * all-or-nothing (HotKeys.cap's window shape via HotKeys.counted,
-    * minPerKey = 1), writes `bands_v$version`, and returns exact
+    * minPerKey = 1), writes the version dir `dir`, and returns exact
     * (ndocs, totalBands, capDroppedBands) — statistics ride the
     * write as observed metrics (the whole call is ONE Spark action).
     * Exactness device: observe forbids distinct aggregates, so a
@@ -1643,9 +1587,8 @@ object Dedup {
     * path still serves the previous version). */
   private def writeBandsVersion(spark: org.apache.spark.sql.SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, base: DataFrame, idCol: String,
-      posCols: Seq[String], hashCol: String, path: String, version: Long,
+      posCols: Seq[String], hashCol: String, path: String, dir: String,
       maxBucket: Int, metricName: String, outFiles: Int): (Long, Long, Long) = {
-    val dir = s"$path/bands_v$version"
     // PERSIST the signature frame for the duration of the write: it is
     // signature-sized (~16 bytes per doc/frame) so the cache is cheap,
     // and it keeps the DEGRADED paths artifact-sized — the
@@ -1779,14 +1722,9 @@ object Dedup {
     * that (band, hash), which is exactly the fresh-rebuild-minus-docs
     * semantics (hash values are not ids; sharing is the reason the
     * in-memory form could not delete). Tombstones are read EAGERLY
-    * (TextStats.localTombstones — delete-request-sized), so probes
-    * survive a compaction clearing the TOMBSTONE files mid-flight.
-    * The DATA files carry the same reader exposure as both siblings
-    * (stated on TextStats.compactBm25Index): a plan that resolved
-    * the superseded `bands_vN` before a compaction's swap should
-    * tolerate one retry if post-swap housekeeping deletes that dir
-    * mid-scan — re-call readHashBandIndex and the plan resolves the
-    * new version.
+    * (StandingIndex.localTombstones); the DATA files carry the reader
+    * exposure stated on StandingIndex.rewrite — re-call
+    * readHashBandIndex and the plan resolves the new version.
     *
     * Cap honesty (the df-gate analog): a band cap-dropped at BUILD
     * does not resurrect on delete, even if the deletions brought its
@@ -1819,7 +1757,7 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession,
       path: String, posCols: Seq[String],
       expectSampleCap: Option[Long] = None): DataFrame = {
-    val fs = hadoopFs(spark, path)
+    val fs = StandingIndex.fs(spark, path)
     val data = spark.read.parquet(currentHashIndexDir(fs, path))
     val missing = posCols.filterNot(data.columns.contains)
     require(missing.isEmpty,
@@ -1853,14 +1791,8 @@ object Dedup {
         }
       }
     }
-    val tombs = TextStats.tombstoneFiles(fs, path)
-    val live =
-      if (tombs.isEmpty) data
-      else {
-        val ts = TextStats.localTombstones(spark, tombs)
-        data.join(broadcast(ts.select(ts.columns.head)),
-          Seq(ts.columns.head), "left_anti")
-      }
+    val live = StandingIndex.withoutTombstones(data,
+      StandingIndex.tombstoneFiles(fs, path))
     val keys = posCols ++ Seq("_k", "_band")
     live.groupBy(keys.head, keys.tail: _*).agg(collect_list("_h").as("_hs"))
   }
@@ -1881,8 +1813,6 @@ object Dedup {
     * whole candidate lists, so that mix-up is refused here. */
   def deleteFromHashBandIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, ids: DataFrame, idCol: String): Unit = {
-    require(ids.columns.length == 1,
-      s"ids must be a single-column frame, got ${ids.columns.mkString(", ")}")
     require(!Set("_k", "_band", "_h", "_hs", "sample_pos").contains(idCol),
       s"idCol '$idCol' names an internal band/hash/position column — " +
         "tombstoning by band, hash or frame position would silently " +
@@ -1896,7 +1826,7 @@ object Dedup {
     // after the pointer landed but before the meta write — probes
     // still work) is refused with the repair path named rather than a
     // raw path-not-found from the parquet reader.
-    val fs = hadoopFs(spark, path)
+    val fs = StandingIndex.fs(spark, path)
     require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/_meta")),
       s"index at $path has no _meta (a rebuild crashed after publishing " +
         "the version pointer?) — probes still serve, but deletes/stats " +
@@ -1905,37 +1835,17 @@ object Dedup {
       .select("id_col").collect()(0).getString(0)
     require(builtWith == idCol,
       s"index at $path was built with idCol '$builtWith', got '$idCol'")
-    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_compact_inprogress")),
-      s"a compaction is running (or crashed) under $path — wait for it " +
-        "(or clear a stale _compact_inprogress) and retry")
-    val tombDir = new org.apache.hadoop.fs.Path(s"$path/_tombstones")
-    if (fs.exists(tombDir)) {
-      val existing = spark.read.parquet(tombDir.toString).columns
-      require(existing.sameElements(Array(idCol)),
-        s"index at $path already has tombstones on '${existing.mkString(",")}'" +
-          s", got idCol '$idCol'")
-    }
-    val newIds = ids.select(col(ids.columns.head).as(idCol))
-      .filter(col(idCol).isNotNull).distinct()
-    // a zero-row parquet append can leave a footer-less dir that fails
-    // schema inference on read — skip it (nothing to delete anyway)
-    if (!newIds.isEmpty) newIds.write.mode("append").parquet(tombDir.toString)
+    StandingIndex.refuseIfCompacting(fs, path, rebuild = false)
+    StandingIndex.appendTombstones(fs, path, ids, idCol)
   }
 
   /** Compact a persisted hash-band index: apply pending tombstones
     * MATERIALLY (the deleted docs' rows leave the four band lists for
     * real) and clear exactly the tombstone-file SNAPSHOT this rewrite
-    * read — a delete racing the compaction lands outside the snapshot,
-    * survives the clear, and stays pending (the same race-safety
-    * device as both siblings; the final rmdir is non-recursive for
-    * the same reason). Crash-safety is the shared versioned swap,
-    * TIGHTENED by the versioned-from-birth layout: the rewrite lands
-    * in `bands_vN/` — a SIBLING of the servable `bands_v(N-1)/`,
-    * never nested inside any read path — and the swap is the atomic
-    * CREATE of `_current_vN`, so a crash at ANY boundary leaves
-    * readers resolving a complete older version, and rerunning after
-    * clearing the stale lock is always safe (the rerun's `overwrite`
-    * clears a half-written `bands_vN` no read plan references). No
+    * read. Crash-safety is `StandingIndex.rewrite`'s
+    * versioned swap, TIGHTENED by the versioned-from-birth layout: the
+    * rewrite lands in `bands_vN/` — a SIBLING of the servable
+    * `bands_v(N-1)/`, never nested inside any read path. No
     * cap re-application: bands were capped all-or-nothing at build,
     * deletes only shrink lists, and cap-dropped bands stay dropped
     * (see `readHashBandIndex`'s honesty contract) — so a
@@ -1950,55 +1860,23 @@ object Dedup {
   def compactHashBandIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, outFiles: Int = 4): Unit = {
     require(outFiles >= 1, s"outFiles must be >= 1, got $outFiles")
-    val fs = hadoopFs(spark, path)
-    val lock = new org.apache.hadoop.fs.Path(s"$path/_compact_inprogress")
-    require(fs.createNewFile(lock),
-      s"could not create compaction lock under $path — another compaction " +
-        "is running, or a previous one crashed. The index is still " +
-        "probe-consistent either way (the swap is atomic); if no compaction " +
-        "is live, delete _compact_inprogress and rerun")
-    try {
-      val vs = hashIndexVersions(fs, path)
-      require(vs.nonEmpty,
-        s"no published version pointer under $path — either a rebuild " +
-          "crashed before publishing, or this dir was not written by " +
-          "writeHashBandIndex (the layout is versioned from birth); " +
-          "rebuild with writeHashBandIndex")
-      val next = vs.max + 1
-      val tombSnapshot = TextStats.tombstoneFiles(fs, path)
-      val raw = spark.read.parquet(currentHashIndexDir(fs, path))
-      val data =
-        if (tombSnapshot.isEmpty) raw
-        else {
-          val ts = spark.read.parquet(tombSnapshot: _*)
-          raw.join(broadcast(ts.select(ts.columns.head).distinct()),
-            Seq(ts.columns.head), "left_anti")
-        }
-      if (data.isEmpty) return
-      data.repartition(outFiles, col("_k"), col("_band"))
-        .write.mode("overwrite").parquet(s"$path/bands_v$next")
-      // THE SWAP — one atomic create; from here readers resolve vN
-      require(fs.createNewFile(
-          new org.apache.hadoop.fs.Path(s"$path/_current_v$next")),
-        s"pointer _current_v$next already exists under $path — concurrent " +
-          "compactions? The servable index is unchanged")
-      // post-swap housekeeping: stale pointers, superseded data, then
-      // ONLY the tombstone-file snapshot this rewrite applied
-      vs.foreach(v => fs.delete(
-        new org.apache.hadoop.fs.Path(s"$path/_current_v$v"), false))
-      // EVERY superseded version's dir, not just the newest: after a
-      // crash between pointer-create and housekeeping, the recovery
-      // rerun sees several live pointers — deleting only vs.max would
-      // orphan the older dirs' bytes forever (no pointer names them,
-      // stats never counts them, only a rebuild's root reset would
-      // reclaim them)
-      vs.foreach(v => fs.delete(
-        new org.apache.hadoop.fs.Path(s"$path/bands_v$v"), true))
-      // shared snapshot clear (race contract on
-      // TextStats.clearTombstoneSnapshot)
-      TextStats.clearTombstoneSnapshot(fs, path, tombSnapshot)
-      ()
-    } finally { fs.delete(lock, false); () }
+    val fs = StandingIndex.fs(spark, path)
+    require(StandingIndex.versions(fs, path).nonEmpty,
+      s"no published version pointer under $path — either a rebuild " +
+        "crashed before publishing, or this dir was not written by " +
+        "writeHashBandIndex (the layout is versioned from birth); " +
+        "rebuild with writeHashBandIndex")
+    StandingIndex.rewrite(fs, path, "bands_v", None) { (dir, tombSnapshot) =>
+      val data = StandingIndex.withoutTombstones(
+        spark.read.parquet(currentHashIndexDir(fs, path)), tombSnapshot)
+      if (data.isEmpty) None
+      else {
+        data.repartition(outFiles, col("_k"), col("_band"))
+          .write.mode("overwrite").parquet(dir)
+        Some(())
+      }
+    }
+    ()
   }
 
   /** GROW a persisted hash-band index from its own rows — the path
@@ -2084,7 +1962,7 @@ object Dedup {
       maxBucket: Option[Int],
       metricName: String, outFiles: Int,
       hashColName: String = "_h", sampleCap: Long = -1L): Unit = {
-    val fs = hadoopFs(spark, path)
+    val fs = StandingIndex.fs(spark, path)
     require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/_meta")),
       s"index at $path has no _meta (a rebuild crashed after publishing " +
         "the version pointer?) — the growth rebuild needs the build-time " +
@@ -2116,32 +1994,10 @@ object Dedup {
         s"(nFrames); this growth call uses $sampleCap — grow with the " +
         "build's width, or rebuild from scratch at the new width")
     val cap = maxBucket.getOrElse(meta.getLong(1).toInt)
-    // the rebuild is a compaction-shaped NON-DESTRUCTIVE rewrite: it
-    // takes the same lock (so deletes, compactions and other rebuilds
-    // refuse while it runs), writes the grown frame as the NEXT
-    // version dir while the current version keeps serving, and swaps
-    // the pointer atomically — the artifact this rebuild reads from
-    // (its only source, by design) is never deleted before the
-    // replacement is fully published, so a crash at ANY boundary
-    // leaves a complete servable index and the rerun needs nothing
-    // but the same newDocs batch. (An earlier shape reset the root
-    // first with only a localCheckpoint of the reconstruction as
-    // backup — an executor loss mid-write would have destroyed the
-    // sole copy of the index.)
-    val lock = new org.apache.hadoop.fs.Path(s"$path/_compact_inprogress")
-    require(fs.createNewFile(lock),
-      s"could not create the rewrite lock under $path — a compaction or " +
-        "rebuild is running, or a previous one crashed. The index is " +
-        "still probe-consistent either way (swaps are atomic); if " +
-        "nothing is live, delete _compact_inprogress and rerun")
-    try {
-      val vs = hashIndexVersions(fs, path)
-      val next = vs.max + 1
-      // tombstones applied to the reconstruction from an EAGER
-      // snapshot; the same files are cleared after the swap (a delete
-      // racing this rebuild lands outside the snapshot and stays
-      // pending — the shared compaction race contract)
-      val tombSnapshot = TextStats.tombstoneFiles(fs, path)
+    // the compaction-shaped NON-DESTRUCTIVE rewrite (see the scaladoc
+    // on rebuildHashBandIndex)
+    val stats = StandingIndex.rewrite(fs, path, "bands_v", None,
+        growth = true) { (dir, tombSnapshot) =>
       val data = spark.read.parquet(currentHashIndexDir(fs, path))
       val missing = posCols.filterNot(data.columns.contains)
       require(missing.isEmpty,
@@ -2153,41 +2009,22 @@ object Dedup {
           s"index at $path carries a sample_pos column — it is a " +
             "POSITIONAL (GIF) index; grow it with " +
             "Multimodal.rebuildGifHashBandIndex")
-      val live =
-        if (tombSnapshot.isEmpty) data
-        else {
-          val ts = TextStats.localTombstones(spark, tombSnapshot)
-          data.join(broadcast(ts.select(ts.columns.head)),
-            Seq(ts.columns.head), "left_anti")
-        }
       val sigCols = Seq(col(idCol)) ++ posCols.map(col) :+ col("_h")
-      val unioned = live.select(sigCols: _*)
+      val unioned = StandingIndex.withoutTombstones(data, tombSnapshot)
+        .select(sigCols: _*)
         .unionByName(newSig.select(sigCols: _*))
         .distinct()
-      val (ndocs, totalBands, droppedBands) =
-        writeBandsVersion(spark, fs, unioned, idCol, posCols, hashColName,
-          path, next, cap, metricName, outFiles)
-      // THE SWAP — one atomic create; from here readers resolve vN
-      require(fs.createNewFile(
-          new org.apache.hadoop.fs.Path(s"$path/_current_v$next")),
-        s"pointer _current_v$next already exists under $path — concurrent " +
-          "rewrites? The servable index is unchanged")
-      // meta describes the grown index; a crash between the swap and
-      // this write leaves the OLD meta serving stale counts (probes
-      // unaffected — they never read meta) until a rerun refreshes it
+      Some(writeBandsVersion(spark, fs, unioned, idCol, posCols, hashColName,
+        path, dir, cap, metricName, outFiles))
+    }
+    // meta describes the grown index and lands after the swap; a crash
+    // in between leaves the OLD meta serving stale counts (probes
+    // unaffected — they never read meta) until a rerun refreshes it
+    stats.foreach { case (ndocs, totalBands, droppedBands) =>
       writeHashIndexMeta(spark, path, ndocs, totalBands, droppedBands,
         cap, idCol, posCols.headOption.getOrElse(""), sampleCap,
         hashColName)
-      // post-swap housekeeping, same as compaction: stale pointers,
-      // superseded version dirs, then ONLY the tombstone snapshot
-      // this rewrite materialized
-      vs.foreach(v => fs.delete(
-        new org.apache.hadoop.fs.Path(s"$path/_current_v$v"), false))
-      vs.foreach(v => fs.delete(
-        new org.apache.hadoop.fs.Path(s"$path/bands_v$v"), true))
-      TextStats.clearTombstoneSnapshot(fs, path, tombSnapshot)
-      ()
-    } finally { fs.delete(lock, false); () }
+    }
   }
 
   /** Lifecycle telemetry for a persisted hash-band index, from the
@@ -2208,7 +2045,7 @@ object Dedup {
 
   def hashBandIndexStats(spark: org.apache.spark.sql.SparkSession,
       path: String): HashBandIndexStats = {
-    val fs = hadoopFs(spark, path)
+    val fs = StandingIndex.fs(spark, path)
     // same guard and repair path as deleteFromHashBandIndex: in the
     // crash-after-pointer state (rebuild died between the version
     // pointer and the meta write) probes still serve, but a raw
@@ -2219,16 +2056,7 @@ object Dedup {
         "the version pointer?) — probes still serve, but stats need the " +
         "build-time record; rerun writeHashBandIndex")
     val dir = currentHashIndexDir(fs, path)
-    val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), false)
-    var files = 0L
-    var bytes = 0L
-    while (it.hasNext) {
-      val st = it.next()
-      val n = st.getPath.getName
-      if (st.isFile && !n.startsWith("_") && !n.startsWith(".")) {
-        files += 1; bytes += st.getLen
-      }
-    }
+    val (files, bytes, _) = StandingIndex.dataFiles(fs, dir)
     val data = spark.read.parquet(dir)
     // schema-derived band key: the positional (GIF) layout keys bands
     // by sampled frame position too — counting (_k, _band) alone
@@ -2239,16 +2067,8 @@ object Dedup {
     val agg0 = data.agg(count(lit(1)).as("n"),
       count_distinct(bandKeyCols.head, bandKeyCols.tail: _*).as("b"))
       .collect()(0)
-    val tombs = TextStats.tombstoneFiles(fs, path)
-    val (tombIds, tombRows) =
-      if (tombs.isEmpty) (0L, 0L)
-      else {
-        val ts = spark.read.parquet(tombs: _*)
-        val tid = ts.columns.head
-        val tdist = ts.select(tid).distinct()
-        (tdist.count(),
-          data.join(broadcast(tdist), Seq(tid), "left_semi").count())
-      }
+    val (tombIds, tombRows) = StandingIndex.tombstoneCounts(data,
+      StandingIndex.tombstoneFiles(fs, path))
     // pos_col rides along so fleet reports (healthSweep's `layout`
     // column) can tell a positional (GIF) index from a classic one
     // without a second _meta read; a pre-positional meta (no pos_col

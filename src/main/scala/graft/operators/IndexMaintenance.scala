@@ -7,7 +7,10 @@ package graft.operators
   * definition (on-disk rows; servable = rows − tombstonedRows), so a
   * single policy can feed on all of them — this object is that policy
   * turned into code, replacing the SCALE.md cadence paragraph's
-  * prose with something operators can schedule.
+  * prose with something operators can schedule. The on-disk lifecycle
+  * the families share (lock, version swap, tombstones, the stats
+  * walk) lives in `StandingIndex`; this object only dispatches to
+  * each family's own entry points.
   *
   * The three compact-now signals, each traced to a real cost:
   *  - STRIPES: every append adds a file per touched bucket/list, and
@@ -149,8 +152,7 @@ object IndexMaintenance {
       // the report for every healthy index
       var fam = "unknown"
       try {
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(spark.sessionState.newHadoopConf())
+        val fs = StandingIndex.fs(spark, path)
         detectFamily(fs, path) match {
           case None =>
             SweepRow(path, fam, "unknown", "", compact = false, Nil,
@@ -200,9 +202,7 @@ object IndexMaintenance {
     * detected family. */
   def compactNow(spark: org.apache.spark.sql.SparkSession,
       path: String): String = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    detectFamily(fs, path) match {
+    detectFamily(StandingIndex.fs(spark, path), path) match {
       case Some(fam) => compactAs(spark, path, fam); fam
       case None => throw new IllegalArgumentException(
         s"$path is not a recognizable graft index root (unknown layout) — " +

@@ -78,9 +78,6 @@ object Multimodal {
     }
   }
 
-  /** Back-compat convenience used by older call sites/tests. */
-  def decodeStub(bytes: Array[Byte]): MediaMeta = new StubDecoder().decode(bytes)
-
   /** Real image decode on the JDK's built-in `javax.imageio` readers
     * (PNG/JPEG/GIF/BMP ship with every JVM). Header-only: the matched
     * `ImageReader` reports width/height/bands from the container

@@ -57,18 +57,15 @@ object Parallelism {
     else df
   }
 
-  /** Does the planned physical tree contain an Exchange? Inspects the
-    * pre-execution plan (AQE's inputPlan when adaptive) — never
-    * finalizes AQE, never runs a job. */
-  private def hasExchange(df: DataFrame): Boolean = {
-    val plan = df.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        a.inputPlan
-      case p => p
-    }
-    plan.exists {
+  /** Does the planned physical tree contain an Exchange — or any
+    * adaptive wrapper at all? AQE also wraps a plan whose only reason
+    * is a subquery, and `.rdd` on any `AdaptiveSparkPlanExec`
+    * finalizes it (runs the subquery jobs): a hidden extra execution,
+    * so every adaptive plan disqualifies. Never runs a job. */
+  private def hasExchange(df: DataFrame): Boolean =
+    df.queryExecution.executedPlan.exists {
       case _: org.apache.spark.sql.execution.exchange.Exchange => true
+      case _: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => true
       case _ => false
     }
-  }
 }

@@ -272,16 +272,9 @@ object Similarity {
     // refused, not swept: deleting its lock would let it finish later
     // and drop a _current_vN pointer that silently shadows this
     // rebuild with pre-rebuild data.
-    val fs = hadoopFs(assigned.sparkSession, path)
-    val root = new org.apache.hadoop.fs.Path(path)
-    if (fs.exists(root)) {
-      require(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_compact_inprogress")),
-        s"a compaction is running (or crashed) under $path — rebuilding now " +
-          "would be shadowed by its version-pointer swap; wait for it (or " +
-          "delete a stale _compact_inprogress) and rerun")
-      fs.delete(root, true)
-      ()
-    }
+    val fs = StandingIndex.fs(assigned.sparkSession, path)
+    StandingIndex.refuseIfCompacting(fs, path, rebuild = true)
+    fs.delete(new org.apache.hadoop.fs.Path(path), true)
     assigned.write.mode("overwrite").partitionBy(cidCol).parquet(path)
   }
 
@@ -296,28 +289,12 @@ object Similarity {
     * rebuild when drift warrants it. */
   def appendIndex(assignedBatch: DataFrame, path: String,
       cidCol: String = "cid"): Unit = {
-    val spark = assignedBatch.sparkSession
-    val fs = hadoopFs(spark, path)
-    // re-adding a tombstoned id would be silently invisible (readIndex
-    // anti-joins the tombstones) — refuse loudly; compactIndex applies
-    // the deletions materially and makes the id re-addable. One
-    // broadcast semi-join short-circuited by isEmpty, only when
-    // deletions are pending.
-    val tombs = tombstoneFiles(fs, path)
-    if (tombs.nonEmpty) {
-      val ts = spark.read.parquet(tombs: _*)
-      val tid = ts.columns.head
-      // column-pruned to the id alone so the batch's assignment/coding
-      // pipeline is not re-executed wholesale for the guard
-      require(assignedBatch.select(tid)
-          .join(broadcast(ts.select(tid).distinct()), Seq(tid), "left_semi")
-          .isEmpty,
-        s"append batch re-adds tombstoned ids under $path — run " +
-          "compactIndex first (it removes the deleted rows materially and " +
-          "clears the tombstones), then append; if EVERY row of the index " +
-          "was deleted, rebuild with writeIndex instead (compaction skips " +
-          "an all-deleted index)")
-    }
+    val fs = StandingIndex.fs(assignedBatch.sparkSession, path)
+    StandingIndex.refuseReAdds(fs, path, assignedBatch, "run compactIndex " +
+      "first (it removes the deleted rows materially and clears the " +
+      "tombstones), then append; if EVERY row of the index was deleted, " +
+      "rebuild with writeIndex instead (compaction skips an all-deleted " +
+      "index)")
     assignedBatch.write.mode("append").partitionBy(cidCol)
       .parquet(currentIndexDir(fs, path))
   }
@@ -352,59 +329,20 @@ object Similarity {
   def deleteFromIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, ids: DataFrame, idCol: String,
       cidCol: String = "cid"): Unit = {
-    require(ids.columns.length == 1,
-      s"ids must be a single-column frame, got ${ids.columns.mkString(", ")}")
     require(idCol != cidCol,
       s"idCol '$idCol' is the centroid/list column — tombstoning by list " +
         "would silently delete every vector in the named lists; pass the " +
         "indexed ID column")
-    val fs = hadoopFs(spark, path)
-    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_compact_inprogress")),
-      s"a compaction is running (or crashed) under $path — wait for it " +
-        "(or clear a stale _compact_inprogress) and retry")
-    val tombDir = new org.apache.hadoop.fs.Path(s"$path/_tombstones")
-    if (fs.exists(tombDir)) {
-      val existing = spark.read.parquet(tombDir.toString).columns
-      require(existing.sameElements(Array(idCol)),
-        s"index at $path already has tombstones on '${existing.mkString(",")}'" +
-          s", got idCol '$idCol'")
-    }
-    val newIds = ids.select(col(ids.columns.head).as(idCol))
-      .filter(col(idCol).isNotNull).distinct()
-    // a zero-row parquet append can leave a footer-less dir that fails
-    // schema inference on read — skip it (nothing to delete anyway)
-    if (!newIds.isEmpty) newIds.write.mode("append").parquet(tombDir.toString)
+    val fs = StandingIndex.fs(spark, path)
+    StandingIndex.refuseIfCompacting(fs, path, rebuild = false)
+    StandingIndex.appendTombstones(fs, path, ids, idCol)
   }
 
-  /** Version pointers under an index root — the same atomic-swap
-    * device as the BM25 side (TextStats.currentPostingsDir):
-    * `_current_vN` (an empty file) names `index_vN/` as the servable
-    * data dir, created only AFTER that dir's write completes, so the
-    * highest pointer always names a complete dir. No pointer = the
-    * index lives flat at the root (writeIndex's layout). */
-  private def indexVersions(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Seq[Long] = TextStats.versionPointers(fs, path)
-
+  /** The servable data dir: `index_vN/` after a compaction, the root
+    * itself (writeIndex's flat layout) before one. */
   private def currentIndexDir(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): String = {
-    val vs = indexVersions(fs, path)
-    if (vs.isEmpty) path else s"$path/index_v${vs.max}"
-  }
-
-  private def hadoopFs(spark: org.apache.spark.sql.SparkSession,
-      path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-
-  /** Data files currently under an index root's `_tombstones/` dir —
-    * ONE definition shared with the BM25 side
-    * (`TextStats.tombstoneFiles`): the file list is the unit of
-    * delete/compaction race safety (compaction reads exactly this
-    * snapshot and post-swap deletes exactly it, so a delete racing
-    * the compaction survives the clear and stays pending). A
-    * file-less dir reads as "no tombstones". */
-  private def tombstoneFiles(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Seq[String] = TextStats.tombstoneFiles(fs, path)
+      path: String): String =
+    StandingIndex.currentDir(fs, path, "index_v", Some(path))
 
   /** Read a persisted IVF index back for probing (resolves the
     * compaction version pointer — see `compactIndex` — and applies
@@ -412,22 +350,12 @@ object Similarity {
     * anti-join, so every probe and the compaction rewrite itself see
     * the post-delete index; the anti-join sits above the scan and
     * does not disturb the centroid-partition pruning probes rely on).
-    * The tombstone ids are collected EAGERLY into a local frame here
-    * (delete-request-sized by contract): probes are READERS, outside
-    * the single-writer contract, and a compaction finishing between
-    * this read and a lazily-executed probe deletes exactly the
-    * tombstone files — pinning the paths into the plan would fail
-    * that probe with FileNotFoundException. */
+    * The tombstone ids are collected EAGERLY (see
+    * `StandingIndex.localTombstones`). */
   def readIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val fs = hadoopFs(spark, path)
-    val data = spark.read.parquet(currentIndexDir(fs, path))
-    val tombs = tombstoneFiles(fs, path)
-    if (tombs.isEmpty) data
-    else {
-      val ts = TextStats.localTombstones(spark, tombs)
-      data.join(broadcast(ts.select(ts.columns.head)),
-        Seq(ts.columns.head), "left_anti")
-    }
+    val fs = StandingIndex.fs(spark, path)
+    StandingIndex.withoutTombstones(spark.read.parquet(currentIndexDir(fs, path)),
+      StandingIndex.tombstoneFiles(fs, path))
   }
 
   /** Compact a persisted IVF index — the housekeeping pass
@@ -448,89 +376,32 @@ object Similarity {
     * overwrite resets the whole root, clearing tombstones and
     * pointers (spec-pinned), after which the ids are re-addable.
     *
-    * Crash-safety is the BM25 side's versioned swap: the rewrite
-    * lands in a fresh `index_vN/` beside the servable data and the
-    * swap is the atomic CREATE of the `_current_vN` pointer file —
-    * every crash boundary leaves a probe-consistent index (before
-    * the pointer: readers resolve the old data, the half-written dir
-    * is invisible; after: they resolve the complete new one; stale
-    * dirs are post-swap housekeeping). `_compact_inprogress` is
-    * writer mutual exclusion only — probes never block, and a stale
-    * lock from a crash is safe to delete and rerun. The index root
-    * must hold only the index data (keep codebooks/models at their
-    * own paths, as writeCodebook/writePqModel already do): the first
+    * Crash-safety is `StandingIndex.rewrite`'s versioned swap: the
+    * rewrite lands in a fresh `index_vN/` beside the servable data and
+    * publishes with one atomic pointer create. The index root must
+    * hold only the index data (keep codebooks/models at their own
+    * paths, as writeCodebook/writePqModel already do): the first
     * compaction sweeps the superseded flat layout from the root. */
   def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       cidCol: String = "cid"): Unit = {
-    val fs = hadoopFs(spark, path)
-    val lock = new org.apache.hadoop.fs.Path(s"$path/_compact_inprogress")
-    require(fs.createNewFile(lock),
-      s"could not create compaction lock under $path — another compaction " +
-        "is running, or a previous one crashed. The index is still " +
-        "probe-consistent either way (the swap is atomic); if no compaction " +
-        "is live, delete _compact_inprogress and rerun")
-    try {
-      val vs = indexVersions(fs, path)
-      val next = (0L +: vs).max + 1
-      // tombstones read from an explicit FILE SNAPSHOT so the
-      // post-swap clear removes exactly what this rewrite applied —
-      // a delete racing the compaction stays pending, never erased
-      // unapplied (see tombstoneFiles)
-      val tombSnapshot = tombstoneFiles(fs, path)
-      val raw = spark.read.parquet(currentIndexDir(fs, path))
-      val data =
-        if (tombSnapshot.isEmpty) raw
-        else {
-          val ts = spark.read.parquet(tombSnapshot: _*)
-          raw.join(broadcast(ts.select(ts.columns.head).distinct()),
-            Seq(ts.columns.head), "left_anti")
-        }
+    val fs = StandingIndex.fs(spark, path)
+    StandingIndex.rewrite(fs, path, "index_v", Some(path)) { (dir, tombSnapshot) =>
+      val data = StandingIndex.withoutTombstones(
+        spark.read.parquet(currentIndexDir(fs, path)), tombSnapshot)
       require(data.columns.contains(cidCol),
         s"index at $path has no '$cidCol' column — wrong cidCol?")
       // a partitioned write of ZERO rows emits no files (no partition
       // values) and the new dir could not even be schema-inferred —
       // an empty index has nothing to coalesce anyway, so skip the
       // swap and leave the servable layout untouched
-      if (data.isEmpty) return
-      data.repartition(col(cidCol))
-        .write.mode("overwrite").partitionBy(cidCol)
-        .parquet(s"$path/index_v$next")
-      // THE SWAP — one atomic create; from here readers resolve vN
-      require(fs.createNewFile(
-          new org.apache.hadoop.fs.Path(s"$path/_current_v$next")),
-        s"pointer _current_v$next already exists under $path — concurrent " +
-          "compactions? The servable index is unchanged")
-      // post-swap housekeeping: stale pointers, then superseded data,
-      // then ONLY the tombstone-file snapshot this rewrite applied —
-      // a racing delete's newer files stay pending (a crash anywhere
-      // here is harmless: the anti-join re-excludes rows already
-      // gone, and the next compaction clears them)
-      vs.foreach(v => fs.delete(
-        new org.apache.hadoop.fs.Path(s"$path/_current_v$v"), false))
-      // EVERY pointer-named superseded version dir, not just the
-      // newest: a crash between a previous compaction's pointer-create
-      // and its housekeeping leaves several live pointers, and a
-      // recovery rerun that deleted only vs.max would orphan the older
-      // dirs' bytes forever. Deliberately NAME-SCOPED (index_v$v) —
-      // a catch-all root sweep would eat anything a user co-located
-      // at the root; the flat-layout sweep below stays confined to
-      // the first compaction, when the root by contract holds only
-      // the flat index data.
-      vs.foreach(v => fs.delete(
-        new org.apache.hadoop.fs.Path(s"$path/index_v$v"), true))
-      if (vs.isEmpty) fs.listStatus(new org.apache.hadoop.fs.Path(path))
-        .filter { st =>
-          val n = st.getPath.getName
-          n != s"index_v$next" && n != s"_current_v$next" &&
-            n != "_compact_inprogress" && n != "_tombstones"
-        }
-        .foreach(st => fs.delete(st.getPath, true))
-      // snapshot files only, then marker files, then the shared
-      // non-recursive rmdir (race contract on
-      // TextStats.clearTombstoneSnapshot)
-      TextStats.clearTombstoneSnapshot(fs, path, tombSnapshot)
-      ()
-    } finally { fs.delete(lock, false); () }
+      if (data.isEmpty) None
+      else {
+        data.repartition(col(cidCol))
+          .write.mode("overwrite").partitionBy(cidCol).parquet(dir)
+        Some(())
+      }
+    }
+    ()
   }
 
   /** Lifecycle telemetry for a persisted IVF index, read from the
@@ -552,44 +423,15 @@ object Similarity {
 
   def indexStats(spark: org.apache.spark.sql.SparkSession,
       path: String): IvfIndexStats = {
-    val fs = hadoopFs(spark, path)
+    val fs = StandingIndex.fs(spark, path)
     val dir = currentIndexDir(fs, path)
-    val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
-    var files = 0L
-    var bytes = 0L
-    val perList = scala.collection.mutable.Map.empty[String, Long]
-      .withDefaultValue(0L)
-    while (it.hasNext) {
-      val st = it.next()
-      val name = st.getPath.getName
-      val parent = st.getPath.getParent.getName
-      // count only data files inside cid=... partition dirs (the
-      // versioned root holds nothing else; the flat root may also
-      // hold marker files, which are not stripes)
-      if (!name.startsWith("_") && !name.startsWith(".") &&
-          parent.contains("=")) {
-        files += 1
-        bytes += st.getLen
-        perList(parent) += 1
-      }
-    }
+    val (files, bytes, perList) = StandingIndex.dataFiles(fs, dir)
     val data = spark.read.parquet(dir)
-    val tombs = tombstoneFiles(fs, path)
-    val (rows, tombIds, tombRows) =
-      if (tombs.isEmpty) (data.count(), 0L, 0L)
-      else {
-        val ts = spark.read.parquet(tombs: _*)
-        val tid = ts.columns.head
-        val tdist = ts.select(tid).distinct()
-        val marked = data.join(
-            broadcast(tdist.withColumn("_tomb", lit(1))), Seq(tid), "left")
-          .agg(count(lit(1)).as("n"), count(col("_tomb")).as("t"))
-          .collect()(0)
-        (marked.getLong(0), tdist.count(), marked.getLong(1))
-      }
+    val (tombIds, tombRows) = StandingIndex.tombstoneCounts(data,
+      StandingIndex.tombstoneFiles(fs, path))
     IvfIndexStats(dir, perList.size.toLong, files,
       if (perList.isEmpty) 0L else perList.values.max,
-      bytes, rows, tombIds, tombRows)
+      bytes, data.count(), tombIds, tombRows)
   }
 
   /** Persist a coarse codebook — WITHOUT it a persisted index cannot

@@ -490,6 +490,63 @@ object TextStats {
       postings.columns.filterNot(Set("token", "tf", "len", "_tb")).head
   }
 
+  /** Bucket-partitioned postings write that stays READABLE even at
+    * zero rows: a partitioned parquet write of an empty frame emits
+    * NO files at all (there are no partition values), and the
+    * resulting dir cannot even be schema-inferred — which is exactly
+    * what a maxPostings cap that gates away EVERY list produces
+    * (observed: a cap-1 index whose every token crossed df 1 at the
+    * append compacted to an unreadable dir). An empty input writes
+    * one all-null SCHEMA SENTINEL row into bucket 0 instead: probes
+    * join postings on `token`, so a null-token row can never match,
+    * score, or df-gate — it exists only to carry the schema
+    * (`bm25IndexStats` excludes it from row counts the same way). */
+  private def writePostingsBucketed(df: DataFrame, dir: String): Unit = {
+    val spark = df.sparkSession
+    // delete the target root FIRST (mirroring Similarity.writeIndex):
+    // the written-directory emptiness check below is only sound when
+    // no stale `_tb=` dirs from prior content can survive the write —
+    // under spark.sql.sources.partitionOverwriteMode=dynamic an
+    // empty-result overwrite deletes nothing, and a stale dir would
+    // make `hasData` true and silently serve the old postings (r17
+    // advice). One FS op; the write recreates the dir.
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = StandingIndex.fs(spark, dir)
+    fs.delete(p, true)
+    df
+      // repartition on the bucket before the partitioned write: without
+      // it every task writes a file into every bucket directory
+      // (tasks × buckets files — the classic small-files explosion);
+      // with it each bucket is one task's output. Write parallelism
+      // follows the bucket count — size tokenBuckets to the cluster.
+      .repartition(col("_tb"))
+      .write.mode("overwrite").partitionBy("_tb").parquet(dir)
+    // A zero-row partitioned write leaves no data files and read-back
+    // schema inference would fail, so the degenerate case needs one
+    // placeholder row. Detect it from the WRITTEN directory (a dynamic
+    // partition write creates _tb= dirs only for observed buckets)
+    // instead of an isEmpty pre-action: isEmpty re-executed the whole
+    // capped-postings chain (window + join) once before the real write
+    // re-executed it again — r17 profiling showed the build paying the
+    // postings computation twice on every index write.
+    val hasData = fs.exists(p) && fs.listStatus(p)
+      .exists(s => s.isDirectory && s.getPath.getName.startsWith("_tb="))
+    if (!hasData)
+      spark.createDataFrame(
+        java.util.Collections.singletonList(org.apache.spark.sql.Row.fromSeq(
+          df.schema.fields.map(f =>
+            if (f.name == "_tb") 0.asInstanceOf[Any] else null).toSeq)),
+        df.schema)
+        .repartition(col("_tb"))
+        .write.mode("overwrite").partitionBy("_tb").parquet(dir)
+  }
+
+  /** The servable postings dir: `postings_vN/` after a compaction,
+    * `postings/` before one (see `StandingIndex.currentDir`). */
+  private def postingsDir(fs: org.apache.hadoop.fs.FileSystem,
+      path: String): String =
+    StandingIndex.currentDir(fs, path, "postings_v", Some(s"$path/postings"))
+
   /** Build and persist a BM25 postings index — the build-once half of
     * `bm25TopK`, for the 100 TB regime where re-deriving tf/df/doc
     * lengths from the raw corpus on every query batch is the
@@ -523,160 +580,6 @@ object TextStats {
     * most |query terms| of the `tokenBuckets` partitions instead of
     * scanning the corpus-sized postings file, which at 100 TB is the
     * difference between an index lookup and a table scan. */
-  /** Version pointers under an index root: `_current_vN` (an empty
-    * file) names `postings_vN/` as the servable postings dir. A
-    * pointer is created only AFTER its directory write completes, so
-    * the HIGHEST pointer present always names a COMPLETE dir — which
-    * is what lets `compactBm25Index` swap postings with one atomic
-    * file create instead of a delete→rename window. No pointer =
-    * uncompacted index, postings live in `postings/`. */
-  /** Version pointers under an artifact root — ONE parser for all
-    * three versioned-swap index families (BM25 `postings_vN`, IVF
-    * `index_vN`, hash-band `bands_vN` — the pointer file name
-    * `_current_vN` is shared, only the data-dir prefix differs), so
-    * the atomic-swap device cannot drift between them. */
-  /** ONE definition of "is this entry name a version pointer" — the
-    * resolver (`versionPointers`) and every rebuild's name-scoped
-    * reset share it, so the delete-set and the resolve-set cannot
-    * drift apart (a pointer the resolver honors but a reset no
-    * longer clears would resurrect a stale version after rebuild). */
-  private[operators] def isVersionPointerName(n: String): Boolean =
-    n.startsWith("_current_v") && n.drop(10).nonEmpty &&
-      n.drop(10).forall(_.isDigit)
-
-  private[operators] def versionPointers(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Seq[Long] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .map(_.getPath.getName)
-      .collect { case s if isVersionPointerName(s) => s.drop(10).toLong }
-  }
-
-  private def postingsVersions(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Seq[Long] = versionPointers(fs, path)
-
-  /** Shared post-swap tombstone-SNAPSHOT clear — the race-safety
-    * device all three compactions use verbatim: delete exactly the
-    * files this compaction read and applied (a racing delete's newer
-    * files stay pending), sweep marker files, then a best-effort
-    * NON-recursive rmdir — if a racing delete committed a data file
-    * since the listing, the rmdir fails and the dir (correctly)
-    * stays pending; a recursive delete here would erase that file
-    * unapplied, the exact race the snapshot device closes. */
-  private[operators] def clearTombstoneSnapshot(
-      fs: org.apache.hadoop.fs.FileSystem, path: String,
-      snapshot: Seq[String]): Unit = {
-    snapshot.foreach(f =>
-      fs.delete(new org.apache.hadoop.fs.Path(f), false))
-    if (snapshot.nonEmpty) {
-      val dir = new org.apache.hadoop.fs.Path(s"$path/_tombstones")
-      if (fs.exists(dir)) {
-        fs.listStatus(dir).toSeq.map(_.getPath)
-          .filter(p => p.getName.startsWith("_") || p.getName.startsWith("."))
-          .foreach(fs.delete(_, false))
-        try { fs.delete(dir, false); () }
-        catch { case _: java.io.IOException => () }
-      }
-    }
-  }
-
-  /** The CURRENT servable postings directory of an index root —
-    * resolves the version pointers; see `postingsVersions`. */
-  private[operators] def currentPostingsDir(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): String = {
-    val vs = postingsVersions(fs, path)
-    if (vs.isEmpty) s"$path/postings" else s"$path/postings_v${vs.max}"
-  }
-
-  /** Data files currently under an index root's `_tombstones/` dir.
-    * The FILE LIST is the unit of delete/compaction race safety:
-    * compaction reads exactly a SNAPSHOT of these paths and post-swap
-    * deletes exactly that snapshot — so a delete landing mid-
-    * compaction writes a file outside the snapshot, survives the
-    * clear, and stays pending (applied by probes immediately and by
-    * the next compaction materially), instead of being erased
-    * unapplied. Readers treat an existing-but-file-less dir as "no
-    * tombstones" (a cleared snapshot may leave the empty dir). */
-  private[operators] def tombstoneFiles(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Seq[String] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$path/_tombstones")
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath)
-      .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
-      .map(_.toString)
-  }
-
-  /** The tombstone files read EAGERLY into a driver-local frame (a
-    * LocalRelation — delete-request-sized by contract, so the collect
-    * is bounded). Readers must NOT pin the file paths lazily into a
-    * probe plan: probes are not covered by the single-WRITER contract,
-    * and a compaction finishing between the read and a lazily-executed
-    * probe deletes exactly those files — the probe would then fail
-    * with FileNotFoundException. An eager snapshot makes every probe
-    * built on a read immune to concurrent compactions (shared with the
-    * ANN side — Similarity.readIndex). */
-  private[operators] def localTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      files: Seq[String]): DataFrame = {
-    val df = spark.read.parquet(files: _*)
-    val rows = df.distinct().collect()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-  }
-
-  /** Bucket-partitioned postings write that stays READABLE even at
-    * zero rows: a partitioned parquet write of an empty frame emits
-    * NO files at all (there are no partition values), and the
-    * resulting dir cannot even be schema-inferred — which is exactly
-    * what a maxPostings cap that gates away EVERY list produces
-    * (observed: a cap-1 index whose every token crossed df 1 at the
-    * append compacted to an unreadable dir). An empty input writes
-    * one all-null SCHEMA SENTINEL row into bucket 0 instead: probes
-    * join postings on `token`, so a null-token row can never match,
-    * score, or df-gate — it exists only to carry the schema
-    * (`bm25IndexStats` excludes it from row counts the same way). */
-  private def writePostingsBucketed(df: DataFrame, dir: String): Unit = {
-    val spark = df.sparkSession
-    // delete the target root FIRST (mirroring Similarity.writeIndex):
-    // the written-directory emptiness check below is only sound when
-    // no stale `_tb=` dirs from prior content can survive the write —
-    // under spark.sql.sources.partitionOverwriteMode=dynamic an
-    // empty-result overwrite deletes nothing, and a stale dir would
-    // make `hasData` true and silently serve the old postings (r17
-    // advice). One FS op; the write recreates the dir.
-    val target = new org.apache.hadoop.fs.Path(dir)
-    target.getFileSystem(spark.sessionState.newHadoopConf())
-      .delete(target, true)
-    df
-      // repartition on the bucket before the partitioned write: without
-      // it every task writes a file into every bucket directory
-      // (tasks × buckets files — the classic small-files explosion);
-      // with it each bucket is one task's output. Write parallelism
-      // follows the bucket count — size tokenBuckets to the cluster.
-      .repartition(col("_tb"))
-      .write.mode("overwrite").partitionBy("_tb").parquet(dir)
-    // A zero-row partitioned write leaves no data files and read-back
-    // schema inference would fail, so the degenerate case needs one
-    // placeholder row. Detect it from the WRITTEN directory (a dynamic
-    // partition write creates _tb= dirs only for observed buckets)
-    // instead of an isEmpty pre-action: isEmpty re-executed the whole
-    // capped-postings chain (window + join) once before the real write
-    // re-executed it again — r17 profiling showed the build paying the
-    // postings computation twice on every index write.
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val hasData = fs.exists(p) && fs.listStatus(p)
-      .exists(s => s.isDirectory && s.getPath.getName.startsWith("_tb="))
-    if (!hasData)
-      spark.createDataFrame(
-        java.util.Collections.singletonList(org.apache.spark.sql.Row.fromSeq(
-          df.schema.fields.map(f =>
-            if (f.name == "_tb") 0.asInstanceOf[Any] else null).toSeq)),
-        df.schema)
-        .repartition(col("_tb"))
-        .write.mode("overwrite").partitionBy("_tb").parquet(dir)
-  }
-
   def writeBm25Index(corpus: DataFrame, textCol: String, idCol: String,
       path: String, maxPostings: Int = HotKeys.DefaultBucketCap,
       tokenBuckets: Int = 64): Unit = {
@@ -692,33 +595,20 @@ object TextStats {
     // cannot leave a silently inconsistent trio — and so a COMPLETE
     // rebuild clears a crashed append's marker (the documented
     // recovery path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = StandingIndex.fs(spark, path)
     val marker = new org.apache.hadoop.fs.Path(s"$path/_append_incomplete")
     fs.mkdirs(new org.apache.hadoop.fs.Path(path))
     // a LIVE compaction is refused BEFORE the marker lands (refusing
-    // after would leave a spurious rebuild-required state): deleting
-    // its lock would let it finish later and drop a _current_vN
-    // pointer that silently shadows this rebuild with pre-rebuild
-    // postings — clear a genuinely stale lock by hand (the documented
-    // crashed-compaction recovery) and rerun.
-    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_compact_inprogress")),
-      s"a compaction is running (or crashed) under $path — rebuilding now " +
-        "would be shadowed by its version-pointer swap; wait for it (or " +
-        "delete a stale _compact_inprogress) and rerun")
+    // after would leave a spurious rebuild-required state) — clear a
+    // genuinely stale lock by hand (the documented crashed-compaction
+    // recovery) and rerun.
+    StandingIndex.refuseIfCompacting(fs, path, rebuild = true)
     if (!fs.exists(marker)) fs.createNewFile(marker)
     // a REBUILD resets to the unversioned layout: clear delete
     // tombstones, compaction version pointers and their dirs (inside
     // the marker bracket, so a crash here is the same loud
     // rebuild-required state)
-    fs.listStatus(new org.apache.hadoop.fs.Path(path)).toSeq
-      .map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        n == "_tombstones" || isVersionPointerName(n) ||
-          (n.startsWith("postings_v") && n.drop(10).forall(_.isDigit))
-      }
-      .foreach(fs.delete(_, true))
+    StandingIndex.resetVersions(fs, path, "postings_v")
     // tf and lens each feed two of the three writes — persist them so
     // the build really is ONE tokenize + one (id, token) shuffle, not
     // a re-execution per write action (DISK-backed: tf is corpus-ish
@@ -768,21 +658,23 @@ object TextStats {
     * pending delete tombstones — delete-request-sized by contract —
     * are collected EAGERLY into a local frame here, so probes built on
     * this read keep working even if a compaction clears the tombstone
-    * files before the probe executes — see `localTombstones`). */
+    * files before the probe executes — see
+    * `StandingIndex.localTombstones`). */
   def readBm25Index(spark: org.apache.spark.sql.SparkSession,
       path: String): Bm25Index = {
     val marker = new org.apache.hadoop.fs.Path(s"$path/_append_incomplete")
-    val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = StandingIndex.fs(spark, path)
     require(!fs.exists(marker),
       s"BM25 index at $path has an unfinished append/delete " +
         "(_append_incomplete marker present) — its postings/df/meta may " +
         "disagree; rebuild with writeBm25Index rather than serving " +
         "inconsistent scores")
-    val tombs = tombstoneFiles(fs, path)
-    Bm25Index(spark.read.parquet(currentPostingsDir(fs, path)),
+    val tombs = StandingIndex.tombstoneFiles(fs, path)
+    Bm25Index(spark.read.parquet(postingsDir(fs, path)),
       spark.read.parquet(s"$path/df"),
       spark.read.parquet(s"$path/meta"),
-      if (tombs.nonEmpty) Some(localTombstones(spark, tombs)) else None)
+      if (tombs.nonEmpty) Some(StandingIndex.localTombstones(spark, tombs))
+      else None)
   }
 
   /** Append a document batch to a persisted BM25 index WITHOUT
@@ -810,21 +702,10 @@ object TextStats {
       metaRow.getLong(2), metaRow.getLong(3))
     require(metaRow.getString(4) == idCol,
       s"index was built with idCol '${metaRow.getString(4)}', got '$idCol'")
-    // re-adding a tombstoned id would be SILENTLY invisible (probes
-    // anti-join the tombstones, so the new rows never score) and would
-    // collide with the old rows at the next compaction — refuse loudly;
-    // compaction clears the tombstones and makes the id re-addable.
-    // Cost: one broadcast semi-join short-circuited by isEmpty.
-    // column-pruned to the id alone, so an expensive upstream batch
-    // plan (cleaning, joins) is not re-executed wholesale for the guard
-    old.tombstones.foreach { ts =>
-      require(batch.select(col(idCol))
-          .join(broadcast(ts.select(col(idCol)).distinct()),
-            Seq(idCol), "left_semi").isEmpty,
-        s"append batch re-adds tombstoned ids under $path — run " +
-          "compactBm25Index first (it applies deletions materially and " +
-          "clears the tombstones), then append")
-    }
+    val fs = StandingIndex.fs(spark, path)
+    StandingIndex.refuseReAdds(fs, path, batch, "run compactBm25Index " +
+      "first (it applies deletions materially and clears the " +
+      "tombstones), then append")
     // persisted for the same reason as in writeBm25Index: tf feeds
     // the postings AND the df merge, lens the postings AND the scalar
     // recompute — one batch tokenize, not one per action
@@ -841,8 +722,6 @@ object TextStats {
     // silently inconsistent scores or a double-counting retry. Plain
     // filesystem artifacts cannot do better without a table format;
     // the marker converts every partial-failure window into an error.
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
     val marker = new org.apache.hadoop.fs.Path(s"$path/_append_incomplete")
     require(fs.createNewFile(marker),
       s"could not create append marker under $path (previous append " +
@@ -869,7 +748,7 @@ object TextStats {
           pmod(hash(col("token")), lit(tb)).cast("int").as("_tb"))
         .repartition(col("_tb"))
         .write.mode("append").partitionBy("_tb")
-        .parquet(currentPostingsDir(fs, path)),
+        .parquet(postingsDir(fs, path)),
       // df rebuild: old ⊕ batch, written beside then renamed over — a
       // lazy read-and-overwrite of the same dir would corrupt it; mode
       // overwrite also clears any stale df.tmp
@@ -947,7 +826,7 @@ object TextStats {
     * corpus never re-tokenizes. Writers: the marker excludes
     * concurrent appends/deletes; compaction cannot erase a racing
     * delete unapplied (it clears only the tombstone-file SNAPSHOT it
-    * read — see `tombstoneFiles`), and the compaction-lock check here
+    * read — see `StandingIndex.rewrite`), and the compaction-lock check here
     * additionally keeps this delete's df rename-swap from yanking
     * files out from under a live compaction's lazy df scan (that
     * race fails the compaction loudly, never corrupts — the check
@@ -964,23 +843,18 @@ object TextStats {
       s"index was built with idCol '${metaRow.getString(4)}', got '$idCol'")
     require(ids.columns.length == 1,
       s"ids must be a single-column frame, got ${ids.columns.mkString(", ")}")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_compact_inprogress")),
-      s"a compaction is running (or crashed) under $path — deleting now " +
-        "could land tombstones the compaction clears without applying; " +
-        "wait for it (or clear a stale _compact_inprogress) and retry")
+    val fs = StandingIndex.fs(spark, path)
+    StandingIndex.refuseIfCompacting(fs, path, rebuild = false,
+      "deleting now could land tombstones the compaction clears without " +
+        "applying; ")
     // new ids only: dedup the request and drop ids already tombstoned,
     // so a retried delete cannot double-decrement df/ndocs. Pinned
     // eagerly — it feeds the tombstone write, the df decrement and the
     // meta sums, and is delete-request-sized by contract.
-    val newIds0 = ids.select(col(ids.columns.head).as(idCol))
-      .filter(col(idCol).isNotNull).distinct()
-    val newIds = (old.tombstones match {
-      case Some(ts) => newIds0.join(broadcast(ts.select(col(idCol)).distinct()),
-        Seq(idCol), "left_anti")
-      case None => newIds0
-    }).localCheckpoint(true)
+    val newIds = StandingIndex.withoutTombstones(
+      ids.select(col(ids.columns.head).as(idCol))
+        .filter(col(idCol).isNotNull).distinct(),
+      StandingIndex.tombstoneFiles(fs, path)).localCheckpoint(true)
     // refusable requests are refused BEFORE any mutation: nD and n0
     // are both known here, so a plainly bad request (more ids than
     // ndocs) must not tombstone/df-swap first and only then discover
@@ -1018,7 +892,8 @@ object TextStats {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       Actions.inParallel(
-        () => newIds.write.mode("append").parquet(s"$path/_tombstones"),
+        () => newIds.write.mode("append")
+          .parquet(StandingIndex.tombstoneDir(path)),
         () => {
           val dec = matched.groupBy("token").agg(count(lit(1)).as("_dec"))
           old.dfT
@@ -1061,12 +936,10 @@ object TextStats {
     * output file per bucket; `df/` and `meta/` are untouched, so
     * probe results are bit-identical before and after — only the
     * bytes and file counts shrink back to what a fresh rebuild
-    * writes. `deleteFromBm25Index` tombstones clear AFTER the swap —
-    * and only the FILE SNAPSHOT this compaction read and applied, so
-    * a delete racing the compaction is never erased unapplied: its
-    * tombstone file lands outside the snapshot, survives the clear,
-    * and stays pending. Cleared ids' rows have left the postings for
-    * real, and those ids become re-addable.
+    * writes. `deleteFromBm25Index` tombstones clear AFTER the swap
+    * (only the file snapshot this compaction applied); cleared ids'
+    * rows have left the postings for real, and those ids become
+    * re-addable.
     *
     * Two rules suffice, no re-cap pass: a token passing the df-gate
     * has a COMPLETE surviving list on disk (the completeness
@@ -1078,24 +951,11 @@ object TextStats {
     * key set) — much cheaper than a rebuild, which re-tokenizes the
     * corpus.
     *
-    * Crash-safety is a VERSIONED SWAP, not a delete→rename: the
+    * Crash-safety is `StandingIndex.rewrite`'s versioned swap: the
     * compacted postings land in a fresh `postings_vN/` beside the
-    * servable dir, and the swap is the CREATE of the empty pointer
-    * file `_current_vN` — one atomic filesystem operation (every
-    * read resolves the highest pointer; see `currentPostingsDir`).
-    * A crash at ANY step boundary therefore leaves a PROBE-CONSISTENT
-    * index: before the pointer lands, readers still resolve the old
-    * dir (the half-written new dir is invisible — pointers are
-    * created only after their dir completes); after it lands, they
-    * resolve the complete new dir; the old dir and stale pointers
-    * are post-swap housekeeping whose loss costs bytes, never
-    * correctness. The `_compact_inprogress` lock file is WRITER
-    * mutual exclusion only — probes are never blocked, and a stale
-    * lock from a crashed compaction is safe to delete and rerun
-    * (nothing between lock and swap mutates servable state).
-    * Concurrent READERS that resolved the superseded dir before the
-    * swap should tolerate one retry if housekeeping deletes it
-    * mid-scan — the same exposure any in-place compaction has.
+    * servable dir and publish with one atomic pointer create, so a
+    * crash at ANY step boundary leaves a probe-consistent index; the
+    * flat `postings/` base goes with the superseded versions.
     * Cadence guidance: measure with `bm25IndexStats` (probe cost
     * grows ~linearly in stripes-per-bucket; compact when
     * `maxStripesPerBucket` approaches the per-bucket read
@@ -1105,65 +965,24 @@ object TextStats {
       path: String): Unit = {
     val old = readBm25Index(spark, path)
     val cap = old.meta.select("max_postings").collect()(0).getLong(0)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val lock = new org.apache.hadoop.fs.Path(s"$path/_compact_inprogress")
-    require(fs.createNewFile(lock),
-      s"could not create compaction lock under $path — another compaction " +
-        "is running, or a previous one crashed. The index is still " +
-        "probe-consistent either way (the swap is atomic); if no compaction " +
-        "is live, delete _compact_inprogress and rerun")
-    try {
-      val vs = postingsVersions(fs, path)
-      val next = (0L +: vs).max + 1
-      val hasTb = old.postings.columns.contains("_tb")
-      // the probe's own exclusions, applied MATERIALLY: the df-gate
-      // and the delete tombstones. The tombstones are read from an
-      // explicit FILE SNAPSHOT taken here, and the post-swap clear
-      // deletes exactly that snapshot — a delete racing this
-      // compaction lands a file outside the snapshot, survives the
-      // clear, and stays correctly pending (see `tombstoneFiles`)
-      val tombSnapshot = tombstoneFiles(fs, path)
-      val gated0 = old.postings.join(
-        old.dfT.filter(col("df") <= cap).select("token"), Seq("token"), "left_semi")
-      val gated =
-        if (tombSnapshot.isEmpty) gated0
-        else gated0.join(
-          broadcast(spark.read.parquet(tombSnapshot: _*)
-            .select(col(old.idCol)).distinct()), Seq(old.idCol), "left_anti")
-      // non-destructive either way: overwrite also clears an orphan dir
-      // a crashed attempt left at this version; servable state is
-      // untouched. The bucketed path rides writePostingsBucketed — one
-      // task's output per bucket dir, and the zero-survivor case (every
-      // token over-cap) still writes a readable schema-sentinel file
-      if (hasTb) writePostingsBucketed(gated, s"$path/postings_v$next")
-      else gated.coalesce(1).write.mode("overwrite")
-        .parquet(s"$path/postings_v$next")
-      // THE SWAP — one atomic create; from here readers resolve vN
-      require(fs.createNewFile(
-          new org.apache.hadoop.fs.Path(s"$path/_current_v$next")),
-        s"pointer _current_v$next already exists under $path — concurrent " +
-          "compactions? The servable index is unchanged")
-      // post-swap housekeeping: stale pointers first (so a crash here
-      // still resolves vN), then the superseded dir's bytes, then the
-      // now-applied tombstone SNAPSHOT — only the files this
-      // compaction read; a racing delete's newer files stay pending.
-      // A crash before the clear is harmless (the anti-join
-      // re-excludes rows that are already gone; the next compaction
-      // clears them)
-      vs.foreach(v => fs.delete(
-        new org.apache.hadoop.fs.Path(s"$path/_current_v$v"), false))
-      // EVERY superseded data dir, including the flat `postings/`
-      // base: a crash between a previous compaction's pointer-create
-      // and its housekeeping leaves several stale dirs behind, and
-      // the recovery rerun must reclaim them all — deleting only the
-      // newest would orphan the rest's bytes forever
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/postings"), true)
-      vs.foreach(v => fs.delete(
-        new org.apache.hadoop.fs.Path(s"$path/postings_v$v"), true))
-      clearTombstoneSnapshot(fs, path, tombSnapshot)
-      ()
-    } finally { fs.delete(lock, false); () }
+    val fs = StandingIndex.fs(spark, path)
+    StandingIndex.rewrite(fs, path, "postings_v", Some(s"$path/postings")) {
+      (dir, tombSnapshot) =>
+        // the probe's own exclusions, applied MATERIALLY: the df-gate
+        // and the delete tombstones of the rewrite's snapshot
+        val gated = StandingIndex.withoutTombstones(old.postings.join(
+          old.dfT.filter(col("df") <= cap).select("token"), Seq("token"),
+          "left_semi"), tombSnapshot)
+        // overwrite also clears an orphan dir a crashed attempt left at
+        // this version. The bucketed path rides writePostingsBucketed —
+        // one task's output per bucket dir, and the zero-survivor case
+        // (every token over-cap) still writes a readable schema-sentinel
+        // file
+        if (old.postings.columns.contains("_tb")) writePostingsBucketed(gated, dir)
+        else gated.coalesce(1).write.mode("overwrite").parquet(dir)
+        Some(())
+    }
+    ()
   }
 
   /** Lifecycle telemetry for a persisted BM25 index, read from the
@@ -1188,53 +1007,26 @@ object TextStats {
   def bm25IndexStats(spark: org.apache.spark.sql.SparkSession,
       path: String): Bm25IndexStats = {
     val idx = readBm25Index(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val dir = currentPostingsDir(fs, path)
-    // walk the postings dir: data files + bytes, grouped by bucket
-    // (non-partitioned layouts count as one bucket)
-    val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
-    var files = 0L
-    var bytes = 0L
-    val perBucket = scala.collection.mutable.Map.empty[String, Long]
-      .withDefaultValue(0L)
-    while (it.hasNext) {
-      val st = it.next()
-      val name = st.getPath.getName
-      if (!name.startsWith("_") && !name.startsWith(".")) {
-        files += 1
-        bytes += st.getLen
-        perBucket(st.getPath.getParent.getName) += 1
-      }
-    }
+    val fs = StandingIndex.fs(spark, path)
+    val dir = postingsDir(fs, path)
+    val (files, bytes, perBucket) = StandingIndex.dataFiles(fs, dir)
     val cap = idx.meta.select("max_postings").collect()(0).getLong(0)
     val metaRow = idx.meta.select("ndocs", "avglen").collect()(0)
-    // one postings pass: total rows + stale rows (df-gate misses) +
-    // tombstoned rows (delete anti-join misses); the null-token schema
+    // total rows + stale rows (df-gate misses); the null-token schema
     // sentinel (writePostingsBucketed) is not a posting and never
     // probes — exclude it from the row counts
-    val withStale = idx.postings
-      .filter(col("token").isNotNull)
+    val postings = idx.postings.filter(col("token").isNotNull)
+    val row = postings
       .join(broadcast(idx.dfT.filter(col("df") > cap)
         .select(col("token"), lit(1).as("_stale"))), Seq("token"), "left")
-    val withTomb = idx.tombstones match {
-      case Some(ts) => withStale.join(
-        broadcast(ts.select(col(idx.idCol)).distinct()
-          .withColumn("_tomb", lit(1))), Seq(idx.idCol), "left")
-      case None => withStale.withColumn("_tomb", lit(null).cast("int"))
-    }
-    val row = withTomb
-      .agg(count(lit(1)).as("rows"),
-        count(col("_stale")).as("stale"),
-        count(col("_tomb")).as("trows"))
+      .agg(count(lit(1)).as("rows"), count(col("_stale")).as("stale"))
       .collect()(0)
-    val tombIds = idx.tombstones
-      .map(_.select(col(idx.idCol)).distinct().count()).getOrElse(0L)
+    val (tombIds, tombRows) = StandingIndex.tombstoneCounts(postings,
+      StandingIndex.tombstoneFiles(fs, path))
     Bm25IndexStats(dir, perBucket.size.toLong, files,
       if (perBucket.isEmpty) 0L else perBucket.values.max,
       bytes, row.getLong(0), row.getLong(1),
-      metaRow.getDouble(0), metaRow.getDouble(1),
-      tombIds, row.getLong(2))
+      metaRow.getDouble(0), metaRow.getDouble(1), tombIds, tombRows)
   }
 
   /** LIVE retrieval against the persisted index — the stream twin the

@@ -35,23 +35,25 @@ object Oval {
       catch {
         case _: Exception if trimmed.toLowerCase.contains("<html") || trimmed.toLowerCase.contains("<body") => return Nil
       }
-    (root \ "definitions" \ "definition").map { d =>
-      Definition(
-        klass = d \@ "class",
-        title = (d \ "metadata" \ "title").text,
-        description = (d \ "metadata" \ "description").text,
-        references = (d \ "metadata" \ "reference").map(r =>
-          Reference(r \@ "source", r \@ "ref_id", r \@ "ref_url")),
-        severity = (d \ "metadata" \ "advisory" \ "severity").text,
-        issued = (d \ "metadata" \ "advisory" \ "issued").map(_ \@ "date").headOption.getOrElse(""),
-        updated = (d \ "metadata" \ "advisory" \ "updated").map(_ \@ "date").headOption.getOrElse(""),
-        cves = (d \ "metadata" \ "advisory" \ "cve").map(c =>
-          CveRef(c.text, c \@ "cvss2", c \@ "cvss3", c \@ "impact")),
-        cpes = (d \ "metadata" \ "advisory" \ "affected_cpe_list" \ "cpe").map(_.text),
-        criteria = (d \ "criteria").headOption.map(parseCriteria)
-          .getOrElse(Criteria("", Nil, Nil)))
-    }
+    (root \ "definitions" \ "definition").map(definition)
   }
+
+  /** One `<definition>` node -> Definition. */
+  def definition(d: Node): Definition =
+    Definition(
+      klass = d \@ "class",
+      title = (d \ "metadata" \ "title").text,
+      description = (d \ "metadata" \ "description").text,
+      references = (d \ "metadata" \ "reference").map(r =>
+        Reference(r \@ "source", r \@ "ref_id", r \@ "ref_url")),
+      severity = (d \ "metadata" \ "advisory" \ "severity").text,
+      issued = (d \ "metadata" \ "advisory" \ "issued").map(_ \@ "date").headOption.getOrElse(""),
+      updated = (d \ "metadata" \ "advisory" \ "updated").map(_ \@ "date").headOption.getOrElse(""),
+      cves = (d \ "metadata" \ "advisory" \ "cve").map(c =>
+        CveRef(c.text, c \@ "cvss2", c \@ "cvss3", c \@ "impact")),
+      cpes = (d \ "metadata" \ "advisory" \ "affected_cpe_list" \ "cpe").map(_.text),
+      criteria = (d \ "criteria").headOption.map(parseCriteria)
+        .getOrElse(Criteria("", Nil, Nil)))
 
   /** Leaf handling: drop ignored criterions, then OR -> one possibility
     * per criterion, AND -> one possibility holding all. */

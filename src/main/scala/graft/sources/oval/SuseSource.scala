@@ -80,19 +80,7 @@ object SuseSource {
       }.toMap
 
     (root \ "definitions" \ "definition").flatMap { d =>
-      val defn = Oval.Definition(
-        klass = d \@ "class",
-        title = (d \ "metadata" \ "title").text,
-        description = (d \ "metadata" \ "description").text,
-        references = (d \ "metadata" \ "reference").map(r =>
-          Oval.Reference(r \@ "source", r \@ "ref_id", r \@ "ref_url")),
-        severity = (d \ "metadata" \ "advisory" \ "severity").text,
-        issued = (d \ "metadata" \ "advisory" \ "issued").map(_ \@ "date").headOption.getOrElse(""),
-        updated = (d \ "metadata" \ "advisory" \ "updated").map(_ \@ "date").headOption.getOrElse(""),
-        cves = (d \ "metadata" \ "advisory" \ "cve").map(c => Oval.CveRef(c.text, "", "", c \@ "impact")),
-        cpes = Nil,
-        criteria = (d \ "criteria").headOption.map(Oval.parseCriteria).getOrElse(Oval.Criteria("", Nil, Nil)))
-
+      val defn = Oval.definition(d)
       val title = defn.title
       val i = title.indexOf(": ")
       val cvename = if (i > 0) title.substring(0, i).trim else title

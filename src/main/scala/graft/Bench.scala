@@ -59,6 +59,9 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val iters = math.max(1, sys.env.getOrElse("GRAFT_BENCH_ITERS", "3").toInt)
     val maxReruns = math.max(0, sys.env.getOrElse("GRAFT_BENCH_RERUNS", "3").toInt)
+    // resolved before the session and the timing loop: `once` turns
+    // any Throwable into -1, which would swallow a bad action name
+    val action = s""""action":"${BenchAction.name}","""
     val spark = GraftSession.build("graft-bench")
 
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
@@ -240,7 +243,6 @@ object Bench {
     val heavyJson = publishedHeavy.map("\"" + _ + "\"").mkString("[", ",", "]")
     val subset =
       if (only.isEmpty) "" else s""""subset":${allNames.length},"""
-    val action = s""""action":"${BenchAction.name}","""
     val line = s"""{"metric":"total","value":$total,"unit":"sec",$subset$action"queries":$qs,"medians":$meds,"spread":$spreads,"heavy":$heavyJson,$sentinel,"sf":"$sfDir"}"""
     // compact total BEFORE the giant per-query line too: whichever
     // side of the log a bounded tail window lands on, one parseable

@@ -17,7 +17,13 @@ import org.apache.spark.sql.DataFrame
   * `action` field so floors/sweeps recorded under different actions
   * are never silently compared. */
 object BenchAction {
-  val name: String = sys.env.getOrElse("GRAFT_BENCH_ACTION", "noop") match {
+  val name: String = fromEnv(sys.env.get("GRAFT_BENCH_ACTION"))
+
+  /** The action a `GRAFT_BENCH_ACTION` value selects (unset = noop);
+    * anything else refuses. Callers that catch per-query failures
+    * (Bench.once) must force `name` first, or the refusal reads as
+    * failed queries instead of stopping the run. */
+  private[graft] def fromEnv(v: Option[String]): String = v.getOrElse("noop") match {
     case a @ ("noop" | "count") => a
     case other => sys.error(s"GRAFT_BENCH_ACTION must be noop|count, got $other")
   }

@@ -432,16 +432,28 @@ object CorpusPrep {
 
   /** The strictly ROW-LOCAL front: normalization (+ optional PII
     * redaction) and the length/repetition gates — pure map-side, so
-    * it runs identically over a batch frame or a stream. */
+    * it runs identically over a batch frame or a stream.
+    *
+    * The gates read `clean_text` through ONE reference: the lambda of
+    * `filter(array(clean_text), ...)` under an `explode`. Written as
+    * plain filters, predicate pushdown inlines the `clean_text` alias
+    * into every conjunct, and FilterExec has no common-subexpression
+    * elimination, so the whole normalize chain (nfc_normalize, lower,
+    * three regexp_replace, trim) would run once per reference — six
+    * times a row (CorpusPrepSpec pins one). Nothing is inlined into a
+    * Generate, so the chain runs once and its output is the
+    * `clean_text` every later stage reads; Generate is row-local and
+    * stream-legal, like the filters. */
   private[operators] def rowLocalGate(cleaned: DataFrame, cfg: Config,
       rawTextCol: String): DataFrame = {
-    val base = cleaned
-      .withColumn("_ntok", size(split(col("clean_text"), " ")))
-      .filter(length(col("clean_text")).between(cfg.minChars, cfg.maxChars))
-      .filter(col("_ntok") > 0)
-      .filter(lit(1.0) - size(array_distinct(split(col("clean_text"), " ")))
-        .cast("double") / col("_ntok") <= cfg.maxRepetition)
-      .drop("_ntok")
+    def passes(t: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+      val toks = split(t, " ")
+      length(t).between(cfg.minChars, cfg.maxChars) && size(toks) > 0 &&
+        lit(1.0) - size(array_distinct(toks)).cast("double") / size(toks) <=
+          cfg.maxRepetition
+    }
+    val base = cleaned.withColumn("clean_text",
+      explode(filter(array(col("clean_text")), passes(_))))
     if (cfg.repetitionGates.isEmpty) base
     else {
       val known = graft.functions.TextOps.RepetitionFields.toSet
@@ -779,16 +791,21 @@ object CorpusPrep {
     val qmGated = qmThrOpt(lmGated, cfg, textCol).fold(lmGated)(thr =>
       obs(qmGateAt(lmGated, cfg.qualityModel.get, thr), "qm"))
     // exact dedup: min id per content digest survives
-    // exactKept feeds the near-dup pair search, the survivor
-    // anti-join AND (with embCol) the semantic tier, so the
-    // normalize/gate/LM/digest pipeline re-executes per consumer.
-    // A localCheckpoint here would stop that — but it TRUNCATES
-    // lineage, and the per-stage observed metrics (CollectMetrics
-    // below the truncation) never reach the listener, breaking the
-    // metricPrefix contract (verified: the spec's metrics vanish).
-    // Callers who want the gates paid once cache/checkpoint UPSTREAM
-    // (docs.cache() before run()), which keeps the observe nodes in
-    // every consumer's plan.
+    // exactKept is read three times, so the normalize/gate/LM/digest
+    // pipeline executes three times per run (q131: 3, measured):
+    // the candidate pin inside minhashJaccardPairs, the verify side
+    // of the pairs (executed once: duplicateClusters pins the pairs),
+    // and the output plan (survivor anti-join, then the later
+    // stages). Each later tier with its own pair search (semantic,
+    // image, audio) reads it once more. Each execution normalizes a
+    // row once (rowLocalGate's Generate).
+    // A localCheckpoint here would stop the re-execution — but it
+    // TRUNCATES lineage, and the per-stage observed metrics
+    // (CollectMetrics below the truncation) never reach the listener,
+    // breaking the metricPrefix contract (verified: the spec's
+    // metrics vanish). Callers who want the gates paid once
+    // cache/checkpoint UPSTREAM (docs.cache() before run()), which
+    // keeps the observe nodes in every consumer's plan.
     val exactKept = obs(qmGated
       .withColumn("_digest", md5(col("clean_text")))
       .withColumn("_rank", row_number().over(

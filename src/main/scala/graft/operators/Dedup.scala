@@ -336,19 +336,28 @@ object Dedup {
     * components still converge in 2-3 rounds, and frames are
     * localCheckpoint'ed each round to keep lineage flat.
     *
-    * Small-graph fast path: when the DEDUPLICATED edge count is at
-    * most `localEdgeLimit` (default 2M pairs — the same
-    * bounded-collect argument as the IVF codebook literal, and gated
-    * by an exact count, never a guess), the component computation is
-    * union-find on the driver: microseconds instead of ~8 scheduled
-    * shuffles per star round. Candidate PAIRS are quadratic in bucket
-    * size and capped by HotKeys, so a corpus must be enormous before
-    * its near-dup edge list outgrows the driver — and when it does,
-    * the star path takes over automatically. Edges stream through
-    * toLocalIterator, but the union-find map itself holds every
-    * distinct node: budget a few hundred MB of driver heap at the 2M
-    * cap, or lower the limit (0 forces the distributed path) on a
-    * small driver. */
+    * The pair rows are pinned once (`localCheckpoint` of the two id
+    * columns) and both paths read that pin, so the pairs' plan —
+    * typically a whole LSH verify, gates included — executes exactly
+    * once.
+    *
+    * Small-graph fast path: when the pinned PAIR ROW count is at most
+    * `localEdgeLimit` (default 2M rows — the same bounded-collect
+    * argument as the IVF codebook literal, and gated by an exact
+    * count taken while streaming, never a guess), the component
+    * computation is union-find on the driver: microseconds instead of
+    * ~8 scheduled shuffles per star round. Pair rows are counted
+    * before deduplication (both orientations and self-loops count),
+    * so the count is >= the distinct edge count and the limit errs
+    * toward the star path; labels are exact on either path. Candidate
+    * PAIRS are quadratic in bucket size and capped by HotKeys, so a
+    * corpus must be enormous before its near-dup edge list outgrows
+    * the driver — and when it does, the star path takes over
+    * automatically. Pair rows stream through toLocalIterator in one
+    * pass (nodes and edges together), but the union-find map itself
+    * holds every distinct node: budget a few hundred MB of driver heap
+    * at the 2M cap, or lower the limit (0 forces the distributed
+    * path) on a small driver. */
   def duplicateClusters(pairs: DataFrame, idA: String = "id_a",
       idB: String = "id_b", maxIter: Int = 25,
       localEdgeLimit: Int = 2000000): DataFrame =
@@ -403,54 +412,75 @@ object Dedup {
     case _ => a.asInstanceOf[Comparable[Any]].compareTo(b)
   }
 
-  private def unionFindLabels(edgeRows: Iterator[org.apache.spark.sql.Row],
-      nodeRows: Iterator[org.apache.spark.sql.Row]): Seq[(Any, Any)] = {
-    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+  /** Labels every node of the streamed pair rows, or None once more
+    * than `limit` rows arrive (the caller falls back to the star
+    * path). Each row registers both ids as nodes — a self-loop-only
+    * node keeps a self-labeled row — and unions them. */
+  private def unionFindLabels(pairRows: Iterator[org.apache.spark.sql.Row],
+      limit: Int): Option[Seq[(Any, Any)]] = {
+    val parent = scala.collection.mutable.LinkedHashMap.empty[Any, Any]
     def find(x: Any): Any = {
       var r = x
-      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      while (parent(r) != r) r = parent(r)
       var c = x
       while (c != r) { val nxt = parent(c); parent(c) = r; c = nxt }
       r
     }
-    edgeRows.foreach { e =>
-      val (ru, rv) = (find(e.get(0)), find(e.get(1)))
+    var rows = 0L
+    while (pairRows.hasNext) {
+      if (rows >= limit) return None
+      val p = pairRows.next()
+      rows += 1
+      val (a, b) = (p.get(0), p.get(1))
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val (ru, rv) = (find(a), find(b))
       if (ru != rv) parent(if (cmpLikeSpark(ru, rv) > 0) ru else rv) =
         if (cmpLikeSpark(ru, rv) > 0) rv else ru
     }
-    nodeRows.map(_.get(0)).map(id => id -> find(id)).toSeq
+    Some(parent.keys.toVector.map(id => id -> find(id)))
   }
 
   private[operators] def duplicateClustersWithRounds(pairs: DataFrame,
       idA: String, idB: String, maxIter: Int,
       localEdgeLimit: Int = 2000000): (DataFrame, Int) = {
+    // the ONE execution of the pairs' plan: both ids at their common
+    // (union-widened) type, so the driver map compares like values
+    val idType = pairs.select(col(idA).as("id"))
+      .union(pairs.select(col(idB).as("id"))).schema("id").dataType
+    val pinned = pairs
+      .select(col(idA).cast(idType).as("a"), col(idB).cast(idType).as("b"))
+      .localCheckpoint()
+    // streamed via toLocalIterator so the peak driver footprint is the
+    // hash map plus one partition, not the full Row array besides it;
+    // more than localEdgeLimit rows abandons the stream for the star
+    // path. Union-by-min keeps the root at the component minimum
+    // throughout, so labels match the distributed fixpoint exactly
+    import scala.jdk.CollectionConverters._
+    unionFindLabels(pinned.toLocalIterator().asScala, localEdgeLimit) match {
+      case Some(labelSeq) =>
+        val schema = org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("id", idType),
+          org.apache.spark.sql.types.StructField("cluster", idType)))
+        val rows = labelSeq.map { case (id, cl) => org.apache.spark.sql.Row(id, cl) }
+        (pairs.sparkSession.createDataFrame(rows.asJava, schema), 0)
+      case None => starClusters(pinned, maxIter)
+    }
+  }
+
+  /** The distributed path over pinned (a, b) pair rows: star rounds to
+    * the fixpoint, then one label per node. */
+  private def starClusters(pinned: DataFrame, maxIter: Int): (DataFrame, Int) = {
     // every input node keeps a label row even if its only edges were
     // self-loops (parity with the propagation formulation it replaced)
-    val nodes = pairs.select(col(idA).as("id"))
-      .union(pairs.select(col(idB).as("id"))).distinct()
-    var edges = pairs
-      .select(greatest(col(idA), col(idB)).as("u"), least(col(idA), col(idB)).as("v"))
+    val nodes = pinned.select(col("a").as("id"))
+      .union(pinned.select(col("b").as("id"))).distinct()
+    var edges = pinned
+      .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
       .localCheckpoint()
     val edgeCount = edges.count()
-    if (edgeCount <= localEdgeLimit) {
-      // bounded by the exact count just taken; streamed via
-      // toLocalIterator so the peak driver footprint is the hash map
-      // plus one partition, not the full Row array besides it.
-      // Union-by-min keeps the root at the component minimum
-      // throughout, so labels match the distributed fixpoint exactly
-      import scala.jdk.CollectionConverters._
-      val labelSeq = unionFindLabels(
-        edges.toLocalIterator().asScala, nodes.toLocalIterator().asScala)
-      val spark = pairs.sparkSession
-      val idType = nodes.schema("id").dataType
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", idType),
-        org.apache.spark.sql.types.StructField("cluster", idType)))
-      val rows = labelSeq.map { case (id, cl) => org.apache.spark.sql.Row(id, cl) }
-      return (spark.createDataFrame(rows.asJava, schema), 0)
-    }
     var iter = 0
     var converged = edgeCount == 0
     var prevCount = edgeCount

@@ -1,15 +1,17 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import scala.collection.mutable
 
 /** Dev-only measurement tool (optimization guide §1): run one or more
   * SparkEntry queries and report every Spark JOB's wall time, task
   * count, task-time sum, and shuffle bytes — attributed by job
-  * description / call site — so the multi-job facade queries
-  * (q138/q140/q142, the index lifecycles) expose WHERE their seconds
-  * go on a headless host with the UI disabled.
+  * description / call site / SQL execution / last stage name — so
+  * the multi-job facade queries (q138/q140/q142, the index
+  * lifecycles) expose WHERE their seconds go on a headless host with
+  * the UI disabled.
   *
   * Usage: runMain graft.tools.JobProfile <sfDir> <query> [query...]
   *
@@ -42,11 +44,23 @@ object JobProfile {
     val shufWrite = mutable.Map.empty[Int, Long].withDefaultValue(0L)
     val inputBytes = mutable.Map.empty[Int, Long].withDefaultValue(0L)
 
+    val execDesc = mutable.Map.empty[Long, String]
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case x: SparkListenerSQLExecutionStart =>
+        synchronized { execDesc(x.executionId) = x.description }
+      case _ =>
+    }
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      val desc = Option(e.properties)
-        .flatMap(p => Option(p.getProperty("spark.job.description")))
-        .orElse(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short"))))
+      // Spark 4 jobs usually carry neither property. Next best is the
+      // SQL execution's call site ("localCheckpoint at Dedup.scala:301"),
+      // which also names AQE's shuffle-stage jobs (their own stages are
+      // named after an executor thread), then the last stage's name
+      val prop = (k: String) =>
+        Option(e.properties).flatMap(p => Option(p.getProperty(k))).filter(_.nonEmpty)
+      val desc = prop("spark.job.description").orElse(prop("callSite.short"))
+        .orElse(prop("spark.sql.execution.id").flatMap(id => execDesc.get(id.toLong)))
+        .orElse(e.stageInfos.sortBy(_.stageId).lastOption.map(_.name))
         .getOrElse("")
       jobs(e.jobId) = JobRow(e.jobId, desc, started = e.time,
         stageIds = e.stageIds)
@@ -77,6 +91,7 @@ object JobProfile {
       }
     def clear(): Unit = synchronized {
       jobs.clear(); stageToJob.clear(); tasks.clear(); taskTimeMs.clear()
+      execDesc.clear()
       shufRead.clear(); shufWrite.clear(); inputBytes.clear()
       stageRows.clear()
     }

@@ -48,6 +48,31 @@ class CorpusPrepSpec extends SparkSpecBase {
     assert(m("graft_prep_neardup").getAs[Long]("rows") == 2L) // 3 near-dup
   }
 
+  test("rowLocalGate runs the normalize chain once per row") {
+    // written as plain filters, pushdown inlined clean_text into every
+    // gate conjunct: 6 nfc_normalize calls in the executed plan
+    withTempDir("gate-plan") { dir =>
+      Seq((1L, "The  Quick Brown Fox Jumps Over The Lazy Dog"),
+        (2L, "too short"), (3L, "spam spam spam spam spam spam spam spam"))
+        .toDF("doc_id", "text").write.parquet(dir.getPath + "/docs")
+      val docs = spark.read.parquet(dir.getPath + "/docs")
+      val gated = CorpusPrep.rowLocalGate(
+        docs.withColumn("clean_text", TextNorm.clean(col("text"))),
+        CorpusPrep.Config(minChars = 20, maxRepetition = 0.5), "text")
+      assert(gated.columns.toSeq == Seq("doc_id", "text", "clean_text"))
+      assert(gated.select("doc_id", "clean_text").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toSeq ==
+        Seq(1L -> "the quick brown fox jumps over the lazy dog"))
+      val plan = gated.queryExecution.executedPlan
+      val calls = plan.collect {
+        case _: org.apache.spark.sql.execution.FileSourceScanExec => 0
+        case p => p.expressions.map(_.collect {
+          case n: graft.functions.NfcNormalizeExpr => n }.size).sum
+      }.sum
+      assert(calls == 1, s"$calls nfc_normalize calls outside the scan:\n$plan")
+    }
+  }
+
   test("repetitionGates: fine repetition signals gate on the RAW text; misspelled names and non-fractions refuse") {
     // raw structure matters: doc 11's duplicated LINES are invisible
     // after clean()'s whitespace squeeze, so the gate must judge the

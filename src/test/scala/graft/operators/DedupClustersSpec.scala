@@ -43,17 +43,45 @@ class DedupClustersSpec extends SparkSpecBase {
   }
 
   test("driver union-find fast path matches the distributed star path") {
-    // irregular mix: two chains, a clique, self-loop, isolated pair
+    // irregular mix: two chains, a clique, self-loop, isolated pair;
+    // plus repeated rows, both orientations and a repeated self-loop
     val pairs = ((1L to 9L).map(i => (i, i + 1)) ++
-      Seq((20L, 21L), (21L, 22L), (20L, 22L), (30L, 30L), (40L, 41L)))
+      Seq((20L, 21L), (21L, 22L), (20L, 22L), (30L, 30L), (40L, 41L),
+        (1L, 2L), (2L, 1L), (22L, 21L), (30L, 30L), (41L, 40L)))
       .toDF("id_a", "id_b")
-    val viaDriver = Dedup.duplicateClusters(pairs) // under the limit
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val driverRows = Dedup.duplicateClusters(pairs) // under the limit
+      .collect().map(r => r.getLong(0) -> r.getLong(1))
+    val viaDriver = driverRows.toMap
     val viaStar =
       Dedup.duplicateClustersWithRounds(pairs, "id_a", "id_b", 25, 0)._1
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(driverRows.length == viaDriver.size, "one label row per node")
     assert(viaDriver == viaStar)
     assert(viaDriver(10L) == 1L && viaDriver(22L) == 20L && viaDriver(30L) == 30L)
+  }
+
+  test("localEdgeLimit counts pair rows, not distinct edges") {
+    // 6 rows, 2 distinct non-loop edges: a limit of 5 takes the star
+    // path (rounds > 0), 6 the driver path (0 rounds), same labels
+    val pairs = Seq((1L, 2L), (2L, 1L), (1L, 2L), (2L, 3L), (3L, 3L), (3L, 2L))
+      .toDF("id_a", "id_b")
+    val (atRows, r6) = Dedup.duplicateClustersWithRounds(pairs, "id_a", "id_b", 25, 6)
+    val (belowRows, r5) = Dedup.duplicateClustersWithRounds(pairs, "id_a", "id_b", 25, 5)
+    assert(r6 == 0 && r5 > 0)
+    assert(atRows.collect().toSet == belowRows.collect().toSet)
+  }
+
+  test("the small-graph path executes the pairs' plan once") {
+    // a deterministic counting UDF over the pairs counts every row the
+    // pairs' plan produces: one execution adds exactly the row count
+    val rows = spark.sparkContext.longAccumulator("pair-rows")
+    val tick = udf { (x: Long) => rows.add(1); x }
+    val base = Seq((1L, 2L), (2L, 3L), (3L, 2L), (7L, 7L), (5L, 6L))
+      .toDF("id_a", "id_b")
+    val pairs = base.select(tick(col("id_a")).as("id_a"), col("id_b"))
+    val got = Dedup.duplicateClusters(pairs).collect()
+    assert(got.length == 6)
+    assert(rows.value == 5L, s"pairs' plan produced ${rows.value} rows, not 5")
   }
 
   test("union-find matches a reference closure on seeded random graphs") {

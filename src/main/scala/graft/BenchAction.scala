@@ -10,12 +10,15 @@ import org.apache.spark.sql.DataFrame
   * computes EVERY column of every row and discards the result, so the
   * optimizer cannot prune columns or whole subtrees the way it can
   * under `.count()` — which flattered some of the pure-relational
-  * queries (q01–q29) for 17 rounds. Switched at the r18 floor
-  * re-record boundary (floors recalibrate there anyway);
-  * `GRAFT_BENCH_ACTION=count` reproduces the legacy action for
-  * cross-round comparisons, and the Bench artifact carries an
-  * `action` field so floors/sweeps recorded under different actions
-  * are never silently compared. */
+  * queries (q01–q29) for 17 rounds. Switched in r18 WITHOUT
+  * re-recording the floors: `bench_floors.json` still holds `.count()`
+  * timings. `GRAFT_BENCH_ACTION=count` reproduces the legacy action
+  * for cross-round comparisons. The Bench artifact carries an
+  * `action` field, which the floors tools read
+  * (`TimeQueries.recordedAction`): the `--assert-floor` gate refuses
+  * floors recorded under another action than the run's, and
+  * `MergeFloors` refuses to mix actions, so floors and sweeps of
+  * different actions are never silently compared. */
 object BenchAction {
   val name: String = fromEnv(sys.env.get("GRAFT_BENCH_ACTION"))
 

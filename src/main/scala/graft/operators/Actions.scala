@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.SparkSession
+
 /** Driver-side overlap of INDEPENDENT Spark actions (optimization
   * guide §2.6): Spark's scheduler happily runs several jobs at once —
   * actions are only sequential because driver code calls them
@@ -26,31 +28,54 @@ package graft.operators
   *    marker in place, so partial states stay refused — ordering
   *    between the actions inside the bracket was never load-bearing.
   *
-  * Failure semantics: waits for every action to finish, then rethrows
-  * the FIRST failure (by argument order) with its original type, so
-  * callers' require()/IllegalArgumentException contracts hold
-  * unchanged; every later failure rides along as a suppressed
-  * exception of the first, so none is lost. Scale posture: pure driver-side concurrency — the
+  * Failure semantics: the first failure dooms the call, so it
+  * cancels the siblings' running Spark jobs — every action thread
+  * tags its jobs with one per-call job tag (interrupt-on-cancel) and
+  * the first failure cancels that tag. Jobs a sibling starts after
+  * the cancel still run. The helper then waits for every action to
+  * finish and rethrows the FIRST REAL failure (by argument order)
+  * with its original type, so callers' require()/
+  * IllegalArgumentException contracts hold unchanged; a sibling's
+  * failure that is the helper's own cancellation never takes its
+  * place. Every other failure — later real ones, then the cancelled
+  * siblings — rides along as a suppressed exception of the first, so
+  * none is lost. Without an active SparkSession nothing is tagged or
+  * cancelled. Scale posture: pure driver-side concurrency — the
   * cluster sees the same jobs; FIFO scheduling backfills executor
   * slots exactly as guide §2.6 describes. */
 object Actions {
   def inParallel(actions: (() => Unit)*): Unit = {
     require(actions.nonEmpty, "inParallel needs at least one action")
     if (actions.lengthCompare(1) == 0) { actions.head(); return }
+    val sc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext)
+    val tag = s"graft-actions-${java.util.UUID.randomUUID()}"
+    // every job this call cancels fails with this reason in its
+    // message, which is how the rethrow tells those failures apart
+    val reason = s"because a sibling action failed ($tag)"
+    val cancelled = new java.util.concurrent.atomic.AtomicBoolean()
     val results = Array.fill[Option[Throwable]](actions.length)(None)
     val threads = actions.zipWithIndex.map { case (a, i) =>
       val t = new Thread(() => {
-        results(i) = (try { a(); None }
-        catch { case e: Throwable => Some(e) })
+        sc.foreach { c => c.addJobTag(tag); c.setInterruptOnCancel(true) }
+        try a() catch { case e: Throwable =>
+          results(i) = Some(e)
+          if (!cancelled.getAndSet(true))
+            sc.filterNot(_.isStopped).foreach(_.cancelJobsWithTag(tag, reason))
+        }
       }, s"graft-actions-$i")
-      // job groups/descriptions are inheritable thread-locals, so each
-      // thread keeps the caller's labels; non-daemon so a caller
-      // cannot exit with a write half-committed
+      // job groups/descriptions/tags are inheritable thread-locals, so
+      // each thread keeps the caller's labels and its tag stays its
+      // own; non-daemon so a caller cannot exit with a write
+      // half-committed
       t.start()
       t
     }
     threads.foreach(_.join())
-    results.flatten.toList match {
+    def ours(e: Throwable): Boolean = Iterator.iterate(e)(_.getCause)
+      .takeWhile(_ != null).exists(c => Option(c.getMessage).exists(_.contains(reason)))
+    // a stable sort: real failures first, each group in argument order
+    results.flatten.toList.sortBy(ours) match {
       case first :: rest =>
         rest.foreach(first.addSuppressed)
         throw first

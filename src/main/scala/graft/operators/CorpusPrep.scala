@@ -408,26 +408,256 @@ object CorpusPrep {
         decoder = cfg.audioDecoder)(df.sparkSession)))
   ).flatten
 
-  /** Shared helpers of the two trace facades (`prepTrace` /
-    * `prepTraceStream`): the traced-id snapshot, the stage-frame pin
-    * registry, traced-membership projection, and the output row
-    * shape — ONE definition so the two traces' caching and
-    * evidence-shaping semantics cannot drift apart. */
-  private final class TraceKit(ids: DataFrame, idCol: String) {
-    val traced: DataFrame = ids.select(col(ids.columns.head).as(idCol))
+  /** One stage of a batch facade's chain: the label its metric and
+    * trace rows carry, the frame it leaves, and what its trace
+    * evidence reads — a dedup tier's clusters, an incremental taint
+    * tier's direct standing hits and tainted members, the trained
+    * gate's resolved threshold. */
+  private final case class Stage(label: String, out: DataFrame,
+      clusters: Option[DataFrame] = None, hits: Option[DataFrame] = None,
+      tainted: Option[DataFrame] = None, threshold: Option[Double] = None)
+
+  /** How a chain holds its frames: `stage` wraps each stage's output
+    * (run: the stage's observed metric; a trace: a pin), `aux` the
+    * evidence frames a trace reads again, `media` the decoded frame
+    * the incremental taint fold reads three times. */
+  private final case class Hold(stage: (DataFrame, String) => DataFrame,
+      aux: DataFrame => DataFrame = identity,
+      media: DataFrame => DataFrame = identity)
+
+  /** A stage whose output is `f` of the previous stage's. */
+  private def step(label: String, hold: Hold)(
+      f: DataFrame => DataFrame): DataFrame => Stage =
+    cur => Stage(label, hold.stage(f(cur), label))
+
+  /** Runs `steps` in order from `start`, each on the previous
+    * stage's output. */
+  private def chain(start: DataFrame, steps: Seq[DataFrame => Stage]): Seq[Stage] =
+    steps.foldLeft(Vector.empty[Stage])((done, s) =>
+      done :+ s(done.lastOption.fold(start)(_.out)))
+
+  /** Shared machinery of the three trace facades (`prepTrace`,
+    * `prepTraceIncremental`, `prepTraceStream`): the traced-id
+    * snapshot, the stage-frame pin registry, the first-drop
+    * aggregate, and the evidence rows — ONE definition so the
+    * traces' caching and evidence wording cannot drift apart.
+    * `input` is the frame the traced chain starts from. */
+  private final class TraceKit(ids: DataFrame, idCol: String, cfg: Config,
+      input: DataFrame, textCol: String) {
+    require(ids.columns.length == 1,
+      s"ids must be a single-column frame, got ${ids.columns.mkString(", ")}")
+    require(!(Set("stage", "detail", "clean_text", "_digest", "_rank",
+        "_trc_pos", "_trc_id", "_trc_cl", "_trc_surv", "_trc_len", "_trc_rv",
+        "_trc_qs", "_trc_sid", "_trc_j", "_trc_h", "_trc_updec",
+        // evidence-join working names (near-dup re-verify, signature
+        // Hamming probe, stream LM gate): a colliding idCol would
+        // otherwise die deep in a join with an ambiguous reference
+        "_qshs", "_qhs", "_sshs", "_shs", "_band", "_h", "_k", "_hs",
+        "_lm_n", "_lm_lp") ++
+        (0 until 4).flatMap(k => Set(s"_b$k", s"_cand$k"))).contains(idCol),
+      s"idCol '$idCol' collides with the trace's output/working column names")
+    private lazy val traced: DataFrame = ids.select(col(ids.columns.head).as(idCol))
       .filter(col(idCol).isNotNull).distinct().localCheckpoint(true)
     private val pinned = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def pin(df: DataFrame): DataFrame = {
       val c = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       pinned += c; c
     }
-    def tIds(df: DataFrame): DataFrame =
-      df.join(broadcast(traced), Seq(idCol), "left_semi").select(idCol)
+    val hold: Hold = Hold((df, _) => pin(df), pin, pin)
+    def release(): Unit = pinned.foreach { f => f.unpersist(); () }
     def stageRows(idsF: DataFrame, stage: String,
         detail: org.apache.spark.sql.Column): DataFrame =
       idsF.select(col(idCol), lit(stage).as("stage"),
         detail.cast("string").as("detail"))
-    def release(): Unit = pinned.foreach { f => f.unpersist(); () }
+
+    /** One row per traced id — (idCol, stage, detail) — EAGER
+      * (localCheckpoint), so no caller action can re-execute the
+      * prep. The first drops come from ONE pinned aggregate: each
+      * frame's traced ids are tagged with the frame's position (-1
+      * the traced set, 0 the input, k the k-th stage's output) and
+      * each id keeps its max position, the last frame holding it.
+      * Stages only drop rows and ids are unique, so an id whose last
+      * frame is a stage's input fell at that stage; -1 is absent, the
+      * last output is kept. `special`
+      * gives the evidence of the stages only its trace knows, as
+      * (stage, its input, the ids it dropped); the rest take
+      * `common`. */
+    def rows(stages: Seq[Stage], inputName: String, gates: String)(
+        special: PartialFunction[(Stage, DataFrame, DataFrame), Seq[DataFrame]]
+    ): DataFrame = {
+      val frames = input +: stages.map(_.out)
+      // pinned by an eager localCheckpoint, not a persist: a cached
+      // plan prints every stage's plan, and each evidence branch
+      // below reads the aggregate
+      val last = (traced +: frames.map(f =>
+          f.join(broadcast(traced), Seq(idCol), "left_semi").select(idCol)))
+        .zipWithIndex
+        .map { case (f, k) => f.withColumn("_trc_pos", lit(k - 1)) }
+        .reduce(_ unionByName _)
+        .groupBy(idCol).agg(max(col("_trc_pos")).as("_trc_pos"))
+        .localCheckpoint(true)
+      def lastAt(k: Int): DataFrame =
+        last.filter(col("_trc_pos") === k).select(idCol)
+      val out = stageRows(lastAt(-1), "absent",
+          lit(s"id not present in the $inputName frame")) +:
+        stages.indices.flatMap { k =>
+          val at = (stages(k), frames(k), lastAt(k))
+          special.applyOrElse(at, (_: (Stage, DataFrame, DataFrame)) =>
+            Seq(common(at._1, at._2, at._3, gates)))
+        } :+ keptRows(lastAt(stages.size))
+      out.reduce(_ unionByName _).localCheckpoint(true)
+    }
+
+    /** The evidence all three traces word alike: the gates (`gates`
+      * names the gate set), the trained gate's actual score, the
+      * sampler's draw and the fixed-threshold tiers. */
+    private def common(st: Stage, prev: DataFrame, dropped: DataFrame,
+        gates: String): DataFrame = st.label match {
+      // gates: report the normalized length the gates judged — but
+      // only when that length is knowable HERE: under cutHotSpans the
+      // gates run on the span-cut text (a corpus-wide census), and
+      // quoting the uncut length would send the debugging user the
+      // exactly wrong conclusion for an all-boilerplate doc
+      case "gated" if cfg.cutHotSpans =>
+        stageRows(dropped, "gated", lit(s"failed $gates gates (judged on the " +
+          "span-cut text; lengths not reported under cutHotSpans)"))
+      case "gated" => dropped
+        .join(input.select(col(idCol),
+          length(normOf(cfg)(col(textCol))).as("_trc_len"),
+          repViolationSuffix(cfg, col(textCol)).as("_trc_rv")),
+          Seq(idCol), "left")
+        .select(col(idCol), lit("gated").as("stage"),
+          concat(lit(s"failed $gates gates (clean_len="),
+            coalesce(col("_trc_len").cast("string"), lit("null")),
+            lit(")"), coalesce(col("_trc_rv"), lit("")))
+            .cast("string").as("detail"))
+      // trained-quality gate: the evidence is the doc's ACTUAL score
+      case "qm" => dropped
+        .join(QualityModel.withQualityScore(
+            prev.select(col(idCol), col("clean_text")),
+            cfg.qualityModel.get, "clean_text", "_trc_qs"), Seq(idCol), "left")
+        .select(col(idCol), lit("qm").as("stage"),
+          concat(lit("quality score "),
+            coalesce(col("_trc_qs").cast("string"), lit("null")),
+            lit(s" below minQualityScore=${st.threshold.get}"))
+            .cast("string").as("detail"))
+      case "sampled" => dropped
+        .select(col(idCol), lit("sampled").as("stage"),
+          concat(lit("sample draw "),
+            round(Mixing.unitHash(col(idCol), "corpusprep"), 6),
+            lit(" fell outside the keep rate")).cast("string").as("detail"))
+      case label => fixedRows(dropped, label)
+    }
+
+    /** Rows of a stage whose evidence is its configured threshold. */
+    def fixedRows(dropped: DataFrame, label: String): DataFrame =
+      stageRows(dropped, label, lit(label match {
+        case "lm" => s"bigram log-prob below minLmLogProb=${cfg.minLmLogProb}"
+        case "ngram" => s"over ${cfg.ngramBloomMaxHits} benchmark n-gram Bloom hits"
+        case "decontam" =>
+          s"benchmark ${cfg.shingleN}-gram containment >= ${cfg.minContainment}"
+        case "semdecontam" => s"benchmark embedding cosine >= ${cfg.benchMinCosine}"
+        case "exact_standing" => "digest already in the standing corpus"
+      }))
+
+    /** (idCol, _trc_surv): the row of `out` sharing each dropped id's
+      * content digest in `prev`. */
+    def digestTwin(dropped: DataFrame, prev: DataFrame, out: DataFrame): DataFrame =
+      dropped
+        .join(prev.select(col(idCol), md5(col("clean_text")).as("_digest")),
+          Seq(idCol), "left")
+        .join(out.select(md5(col("clean_text")).as("_digest"),
+          col(idCol).as("_trc_surv")), Seq("_digest"), "left")
+
+    /** (idCol, _trc_surv): each dropped id's cluster member still
+      * present in `after` (exactly one per cluster). */
+    def clusterSurvivor(dropped: DataFrame, clusters: DataFrame,
+        after: DataFrame): DataFrame = {
+      val cl = clusters.toDF("_trc_id", "_trc_cl")
+      val surv = cl
+        .join(after.select(col(idCol).as("_trc_id")), Seq("_trc_id"))
+        .select(col("_trc_cl"), col("_trc_id").as("_trc_surv"))
+      dropped
+        .join(cl.withColumnRenamed("_trc_id", idCol), Seq(idCol), "left")
+        .join(surv, Seq("_trc_cl"), "left")
+    }
+
+    /** A dedup tier's rows: the cluster survivor each id lost to. */
+    def survivorRows(dropped: DataFrame, st: Stage, what: String): DataFrame =
+      clusterSurvivor(dropped, st.clusters.get, st.out)
+        .select(col(idCol), lit(st.label).as("stage"),
+          concat(lit(s"$what cluster survivor: "), col("_trc_surv"))
+            .cast("string").as("detail"))
+
+    /** (idCol, _trc_sid, _trc_j): for each dropped row of `rows`, the
+      * best-verifying standing doc and its Jaccard. The standing
+      * lookups carry only shingle sets, so the handful of dropped rows
+      * re-verify against the standing frame WITH ids. */
+    def standingNearest(rows: DataFrame, dropped: DataFrame,
+        standing: DataFrame): DataFrame = {
+      val qSide = rows
+        .join(broadcast(dropped), Seq(idCol), "left_semi")
+        .select(col(idCol), col("clean_text"))
+        .withColumn("_qshs", Dedup.shingles(col("clean_text"), cfg.shingleN))
+        .withColumn("_qhs",
+          Dedup.minhashSigText(col("clean_text"), cfg.shingleN, cfg.numHashes))
+        .select(col(idCol), col("_qshs"), explode(array(Dedup.bandKeyCols(
+          i => element_at(col("_qhs"), i + 1),
+          cfg.numHashes, cfg.rowsPerBand): _*)).as("_band"))
+      val sSide = standing
+        .select(col(idCol).as("_trc_sid"), col("clean_text"))
+        .withColumn("_sshs", Dedup.shingles(col("clean_text"), cfg.shingleN))
+        .withColumn("_shs",
+          Dedup.minhashSigText(col("clean_text"), cfg.shingleN, cfg.numHashes))
+        .filter(col("_shs").isNotNull)
+        .select(col("_trc_sid"), col("_sshs"), explode(array(Dedup.bandKeyCols(
+          i => element_at(col("_shs"), i + 1),
+          cfg.numHashes, cfg.rowsPerBand): _*)).as("_band"))
+      val shared = size(array_intersect(col("_qshs"), col("_sshs")))
+      qSide.join(sSide, Seq("_band"))
+        .withColumn("_trc_j", shared.cast("double") /
+          (size(col("_qshs")) + size(col("_sshs")) - shared))
+        .filter(col("_trc_j") >= cfg.minJaccard)
+        .groupBy(idCol)
+        // min_by over (-j, sid): max jaccard, ties broken to the MIN
+        // standing id — fully deterministic evidence (max_by alone
+        // is tie-nondeterministic, e.g. duplicate standing texts),
+        // which is what lets an oracle replay the survivor id
+        .agg(expr("min_by(_trc_sid, struct(-_trc_j, _trc_sid))").as("_trc_sid"),
+          round(max(col("_trc_j")), 4).as("_trc_j"))
+    }
+
+    /** Kept-row trace frame, with the audioseg tier's honest
+      * refusal surfaced: when `cfg.audioSegCol` is set, a kept doc
+      * whose payload decodes audio METADATA but not PCM under
+      * `cfg.audioDecoder` (a compressed codec with no plug-in — MP3 /
+      * Vorbis / Opus under the default JDK decoder) gets detail
+      * `undecodable_pcm ...` instead of null: the tier KEPT the doc
+      * without ever judging it (the undecodable-keeps rule, same as
+      * the image/GIF tiers), and the trace must say so rather than
+      * let "kept" read as "fingerprinted and unique". Non-audio junk
+      * stays null-detailed — the tier never claimed to judge it.
+      * With no audioseg tier this is byte-identical to the
+      * pre-round-17 kept rows (trace oracles hash these strings). */
+    private def keptRows(kept: DataFrame): DataFrame = cfg.audioSegCol match {
+      case None =>
+        kept.select(col(idCol), lit("kept").as("stage"),
+          lit(null).cast("string").as("detail"))
+      case Some(ac) =>
+        val flagged = Multimodal.withPcmUndecodable(
+          input.select(col(idCol), col(ac)), ac, "_trc_updec",
+          cfg.audioDecoder)(input.sparkSession)
+        kept
+          .join(flagged.select(col(idCol), col("_trc_updec")),
+            Seq(idCol), "left")
+          .select(col(idCol), lit("kept").as("stage"),
+            when(col("_trc_updec"),
+              lit("undecodable_pcm: audio metadata decoded but the " +
+                "configured PcmDecoder cannot open this codec — kept " +
+                "WITHOUT segment fingerprints; plug an external decoder " +
+                "into cfg.audioDecoder to judge it"))
+              .otherwise(lit(null).cast("string")).as("detail"))
+    }
   }
 
   /** The strictly ROW-LOCAL front: normalization (+ optional PII
@@ -489,7 +719,7 @@ object CorpusPrep {
   }
 
   /** The frame tier's pair search under cfg's sampling plan — ONE
-    * dispatch for all four facade sites, so uniform and keyframe
+    * dispatch for both batch chains, so uniform and keyframe
     * sampling cannot diverge in tier semantics (same positional
     * core either way; only the frames' provenance differs). */
   private def gifTierPairs(df: DataFrame, gc: String, idCol: String,
@@ -518,44 +748,6 @@ object CorpusPrep {
       Multimodal.gifNearDupFilterAgainst(df, gc, idCol, index,
         cfg.gifNFrames, cfg.gifMaxHamming, cfg.gifMinFrameMatches,
         decoder = cfg.gifDecoder, maxShift = cfg.gifMaxShift)
-  }
-
-  /** Kept-row trace frame, with the audioseg tier's honest
-    * refusal surfaced: when `cfg.audioSegCol` is set, a kept doc
-    * whose payload decodes audio METADATA but not PCM under
-    * `cfg.audioDecoder` (a compressed codec with no plug-in — MP3 /
-    * Vorbis / Opus under the default JDK decoder) gets detail
-    * `undecodable_pcm ...` instead of null: the tier KEPT the doc
-    * without ever judging it (the undecodable-keeps rule, same as
-    * the image/GIF tiers), and the trace must say so rather than
-    * let "kept" read as "fingerprinted and unique". Non-audio junk
-    * stays null-detailed — the tier never claimed to judge it.
-    * With no audioseg tier this is byte-identical to the
-    * pre-round-17 kept rows (trace oracles hash these strings). */
-  private def keptRows(kept: DataFrame, source: DataFrame, idCol: String,
-      cfg: Config): DataFrame = {
-    val base = kept.select(col(kept.columns.head).as(idCol))
-    cfg.audioSegCol match {
-      case None =>
-        base.select(col(idCol), lit("kept").as("stage"),
-          lit(null).cast("string").as("detail"))
-      case Some(ac) =>
-        implicit val sp: org.apache.spark.sql.SparkSession =
-          source.sparkSession
-        val flagged = Multimodal.withPcmUndecodable(
-          source.select(col(idCol), col(ac)), ac, "_trc_updec",
-          cfg.audioDecoder)
-        base
-          .join(flagged.select(col(idCol), col("_trc_updec")),
-            Seq(idCol), "left")
-          .select(col(idCol), lit("kept").as("stage"),
-            when(col("_trc_updec"),
-              lit("undecodable_pcm: audio metadata decoded but the " +
-                "configured PcmDecoder cannot open this codec — kept " +
-                "WITHOUT segment fingerprints; plug an external decoder " +
-                "into cfg.audioDecoder to judge it"))
-              .otherwise(lit(null).cast("string")).as("detail"))
-    }
   }
 
   /** Violated fine repetition gates for a dropped doc, as a trace
@@ -678,12 +870,14 @@ object CorpusPrep {
         }
     }
 
-  /** The per-facade entry: validates the quantile config EVEN when no
-    * model is set (a quantile with no model would otherwise silently
-    * gate nothing), resolves the threshold, gates. The traces use the
-    * same helper so their evidence strings carry the resolved value. */
-  private def qmThrOpt(gated: DataFrame, cfg: Config,
-      textCol: String): Option[Double] = {
+  /** The trained-quality gate as a chain stage (None without a
+    * model). Validates the quantile config EVEN when no model is set
+    * (a quantile with no model would otherwise silently gate
+    * nothing), then resolves the threshold against the stage's input;
+    * the stage carries it so a trace's evidence names the value the
+    * gate used. */
+  private def qmStep(textCol: String, cfg: Config,
+      hold: Hold): Option[DataFrame => Stage] = {
     require(cfg.minQualityQuantile.isEmpty || cfg.qualityModel.isDefined,
       "minQualityQuantile calibrates the qualityModel gate — set " +
         "cfg.qualityModel too (a quantile alone would silently gate nothing)")
@@ -692,106 +886,133 @@ object CorpusPrep {
       "qualityCalibrationFrame without minQualityQuantile would be " +
         "silently ignored and the gate would run at the fixed " +
         "minQualityScore — set the quantile (or drop the frame)")
-    cfg.qualityModel.map(_ => qmThresholdOf(gated, cfg, textCol))
+    cfg.qualityModel.map(m => cur => {
+      val thr = qmThresholdOf(cur, cfg, textCol)
+      Stage("qm", hold.stage(qmGateAt(cur, m, thr), "qm"), threshold = Some(thr))
+    })
   }
 
   private def qmGate(docs: DataFrame, cfg: Config, textCol: String): DataFrame =
-    qmThrOpt(docs, cfg, textCol)
-      .fold(docs)(thr => qmGateAt(docs, cfg.qualityModel.get, thr))
+    qmStep(textCol, cfg, Hold((df, _) => df)).fold(docs)(_(docs).out)
 
-  /** Shared back half: benchmark decontamination + stratified
-    * sampling over the dedup survivors. */
   /** One definition of the per-stage survivor metric — every stage
-    * in run() and decontaminateAndSample publishes through it, so
-    * the naming scheme cannot drift between them. */
+    * of run() and runIncremental's back half publishes through it,
+    * so the naming scheme cannot drift between them. */
   private def observed(cfg: Config)(df: DataFrame, stage: String): DataFrame =
     cfg.metricPrefix.fold(df)(p =>
       df.observe(s"${p}_$stage", count(lit(1)).as("rows")))
 
-  private def decontaminateAndSample(deduped: DataFrame, idCol: String,
-      cfg: Config): DataFrame = {
-    val obs = observed(cfg) _
-    // the row-local n-gram gate runs first — it is the cheap tier,
-    // and anything it drops the containment join never pays for
-    val gated = cfg.ngramBloom.fold(deduped)(bytes =>
-      obs(Dedup.bloomNgramGate(deduped, "clean_text", bytes,
-        cfg.ngramBloomN, cfg.ngramBloomMaxHits), "ngram"))
-    val decontaminated = cfg.benchmark.fold(gated) { bench =>
-      // normalize the benchmark text identically to the corpus before
-      // shingling, or containment would miss on case/whitespace alone
-      obs(Dedup.decontaminate(gated, "clean_text", idCol,
-        bench.withColumn("_bclean", normOf(cfg)(col(cfg.benchTextCol))),
-        "_bclean", cfg.benchIdCol, cfg.shingleN, cfg.minContainment,
-        cfg.benchBloomFpp), "decontam")
-    }
-    // the embedding tier last: paraphrased leaks the shingle tiers
-    // missed (requires cfg.embCol — the docs' embedding column)
-    // validated OUTSIDE the fold: benchEmbLarge without benchEmb would
-    // otherwise silently skip the whole decontamination stage — the
+  /** The gate stages both batch chains open with: normalize + the
+    * row-local and boilerplate gates, then the optional LM and
+    * trained-quality gates. */
+  private def gateSteps(textCol: String, idCol: String, cfg: Config,
+      hold: Hold, spanCorpus: Option[DataFrame]): Seq[DataFrame => Stage] =
+    Seq(step("gated", hold)(normalizeAndGate(_, textCol, idCol, cfg, spanCorpus))) ++
+      cfg.lmModel.map(_ => step("lm", hold)(lmGate(_, idCol, cfg))) ++
+      qmStep(textCol, cfg, hold)
+
+  /** Shared back half: benchmark decontamination + stratified
+    * sampling over the dedup survivors, as (label, stage) pairs in
+    * chain order. */
+  private def backTiers(idCol: String,
+      cfg: Config): Seq[(String, DataFrame => DataFrame)] = {
+    // validated OUTSIDE the benchEmb tier: benchEmbLarge without
+    // benchEmb would otherwise silently skip the whole stage — the
     // same loud-misconfiguration rule as the codec/imageIndex checks
     require(!cfg.benchEmbLarge || cfg.benchEmb.isDefined,
       "benchEmbLarge selects the large-bench route OF the benchEmb tier — " +
         "set cfg.benchEmb (the benchmark embeddings frame), or drop the flag")
-    val semDecon = cfg.benchEmb.fold(decontaminated) { bench =>
-      require(cfg.embCol.isDefined,
-        "benchEmb (semantic decontamination) needs cfg.embCol — the docs' " +
-          "embedding column the benchmark embeddings score against")
-      val out = if (cfg.benchEmbLarge)
-        Dedup.semanticDecontaminateLarge(decontaminated,
-          cfg.embCol.get, idCol, bench, cfg.benchEmbCol,
-          cfg.benchMinCosine, bands = cfg.bqBands,
-          maxBucket = cfg.maxBucket)
-      else Dedup.semanticDecontaminate(decontaminated,
-        cfg.embCol.get, bench, cfg.benchEmbCol, cfg.benchMinCosine)
-      obs(out, "semdecontam")
-    }
-    // distinct salt: the prep sample must not correlate with any
-    // downstream unsalted mixing draw over the same ids
-    cfg.sampleRate.fold(semDecon)(r =>
-      obs(Mixing.stratifiedSample(semDecon, idCol, r,
-        salt = "corpusprep"), "sampled"))
+    Seq(
+      // the row-local n-gram gate runs first — it is the cheap tier,
+      // and anything it drops the containment join never pays for
+      cfg.ngramBloom.map(bytes => "ngram" -> ((cur: DataFrame) =>
+        Dedup.bloomNgramGate(cur, "clean_text", bytes,
+          cfg.ngramBloomN, cfg.ngramBloomMaxHits))),
+      // normalize the benchmark text identically to the corpus before
+      // shingling, or containment would miss on case/whitespace alone
+      cfg.benchmark.map(bench => "decontam" -> ((cur: DataFrame) =>
+        Dedup.decontaminate(cur, "clean_text", idCol,
+          bench.withColumn("_bclean", normOf(cfg)(col(cfg.benchTextCol))),
+          "_bclean", cfg.benchIdCol, cfg.shingleN, cfg.minContainment,
+          cfg.benchBloomFpp))),
+      // the embedding tier last: paraphrased leaks the shingle tiers
+      // missed (requires cfg.embCol — the docs' embedding column)
+      cfg.benchEmb.map { bench =>
+        require(cfg.embCol.isDefined,
+          "benchEmb (semantic decontamination) needs cfg.embCol — the docs' " +
+            "embedding column the benchmark embeddings score against")
+        "semdecontam" -> ((cur: DataFrame) =>
+          if (cfg.benchEmbLarge)
+            Dedup.semanticDecontaminateLarge(cur, cfg.embCol.get, idCol,
+              bench, cfg.benchEmbCol, cfg.benchMinCosine,
+              bands = cfg.bqBands, maxBucket = cfg.maxBucket)
+          else Dedup.semanticDecontaminate(cur, cfg.embCol.get, bench,
+            cfg.benchEmbCol, cfg.benchMinCosine))
+      },
+      // distinct salt: the prep sample must not correlate with any
+      // downstream unsalted mixing draw over the same ids
+      cfg.sampleRate.map(r => "sampled" -> ((cur: DataFrame) =>
+        Mixing.stratifiedSample(cur, idCol, r, salt = "corpusprep")))
+    ).flatten
   }
 
-  /** Returns the surviving rows of `docs` with `clean_text` appended.
-    * `idCol` must be unique per row; `textCol` is the raw text. */
-  def run(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id",
-      cfg: Config = Config()): DataFrame = {
+  private def backSteps(idCol: String, cfg: Config,
+      hold: Hold): Seq[DataFrame => Stage] =
+    backTiers(idCol, cfg).map { case (label, f) => step(label, hold)(f) }
+
+  /** Near-dup survivors: each cluster collapses to the
+    * keepPreference winner, else its minimum id. */
+  private def survivors(df: DataFrame, idCol: String, clusters: DataFrame,
+      cfg: Config): DataFrame =
+    cfg.keepPreference.fold(Dedup.dropNearDuplicates(df, idCol, clusters))(
+      Dedup.dropNearDuplicatesBy(df, idCol, clusters, _))
+
+  /** The semantic tier's pair search under cfg's codec: sign-LSH
+    * buckets, IVF lists, or IVF with PQ / SQ8 codes. */
+  private def semanticPairs(df: DataFrame, e: String, idCol: String,
+      cfg: Config): DataFrame = {
+    require(cfg.pqModel.isEmpty || cfg.sqModel.isEmpty,
+      "pqModel and sqModel are alternative codecs for the semantic tier — set one")
+    require((cfg.pqModel.isEmpty && cfg.sqModel.isEmpty) || cfg.codebook.nonEmpty,
+      "a codec (pqModel/sqModel) compresses the IVF pair search and needs " +
+        "`codebook` for the inverted lists — supply both, or neither for " +
+        "sign-LSH buckets")
+    (cfg.codebook, cfg.pqModel, cfg.sqModel) match {
+      case (Some(cbk), Some(pqm), None) => Similarity.nearDupPairsIvfPq(df, e,
+        idCol, cbk, pqm, cfg.minCosine, cfg.nprobe, cfg.maxBucket, cfg.sdcMargin)
+      case (Some(cbk), None, Some(sqm)) => Similarity.nearDupPairsIvfSq(df, e,
+        idCol, cbk, sqm, cfg.minCosine, cfg.nprobe, cfg.maxBucket, cfg.sdcMargin)
+      case (Some(cbk), None, None) => Similarity.nearDupPairsIvf(df, e, idCol,
+        cbk, cfg.minCosine, cfg.nprobe, cfg.maxBucket)
+      case _ => Similarity.nearDupPairs(df, e, idCol,
+        cfg.signBits, cfg.minCosine, cfg.maxBucket)
+    }
+  }
+
+  /** run()'s stage list — `run` executes it with each stage wrapped
+    * in its observed metric, `prepTrace` replays it with each stage
+    * pinned, so the two cannot drift apart. */
+  private def batchStages(docs: DataFrame, textCol: String, idCol: String,
+      cfg: Config, hold: Hold): Seq[Stage] = {
     require(!cfg.intraNearDup && !cfg.intraNearDupVerified,
       "intraNearDup/intraNearDupVerified are the stream-only tiers — run()'s " +
         "near-dup stage already clusters with exact verification")
-    // validated here, not inside the embCol fold: a Config with bqModel
+    // validated here, not inside the embCol tier: a Config with bqModel
     // set but embCol unset would otherwise be silently ignored
     require(cfg.bqModel.isEmpty,
       "bqModel is the semanticIncremental lookup codec — the batch semantic " +
         "tier's pair search has its own BQ operator (Similarity.nearDupPairsBq) " +
         "with an explicit Hamming-radius contract; compose it directly")
     // semantic-stage config without embCol would otherwise be silently
-    // ignored (the whole stage lives inside the embCol fold) — the
+    // ignored (the whole stage lives inside the embCol tier) — the
     // same loud-misconfiguration rule as the bqModel check above
     require(cfg.embCol.isDefined ||
         (cfg.pqModel.isEmpty && cfg.sqModel.isEmpty && cfg.codebook.isEmpty),
       "pqModel/sqModel/codebook configure the semantic dedup stage, which " +
         "needs cfg.embCol — set it, or drop the codec/codebook config")
-    val obs = observed(cfg) _
-    // NOT widened here (r17): an interleaved A/B showed a facade-entry
-    // repartition costs MORE than it wins for the thin text chains
-    // (q131 1.32x, q140 1.28x slower — 32-task per-stage overhead:
-    // task deserialization of the large generated plans + broadcast
-    // fetch contention), while the branches that do win (expensive
-    // media decode) get their parallelism from the caller widening
-    // BEFORE the pinned encode (q138 0.83x, q142 0.59x) — see
-    // Parallelism.widen
-    val spanGated = obs(normalizeAndGate(docs, textCol, idCol, cfg), "gated")
-    // LM-quality gate (opt-in): fluency floor under a foreign bigram
-    // model, between the row-local gates and dedup
-    val lmGated = cfg.lmModel.fold(spanGated)(_ =>
-      obs(lmGate(spanGated, idCol, cfg), "lm"))
-    // trained-quality gate (opt-in): the learned reference-vs-crawl
-    // classifier, right after the LM fluency floor
-    val qmGated = qmThrOpt(lmGated, cfg, textCol).fold(lmGated)(thr =>
-      obs(qmGateAt(lmGated, cfg.qualityModel.get, thr), "qm"))
-    // exact dedup: min id per content digest survives
-    // exactKept is read three times, so the normalize/gate/LM/digest
+    implicit val sp: org.apache.spark.sql.SparkSession = docs.sparkSession
+    // exact dedup: min id per content digest survives.
+    // Its output is read three times, so the normalize/gate/LM/digest
     // pipeline executes three times per run (q131: 3, measured):
     // the candidate pin inside minhashJaccardPairs, the verify side
     // of the pairs (executed once: duplicateClusters pins the pairs),
@@ -806,88 +1027,67 @@ object CorpusPrep {
     // metrics vanish). Callers who want the gates paid once
     // cache/checkpoint UPSTREAM (docs.cache() before run()), which
     // keeps the observe nodes in every consumer's plan.
-    val exactKept = obs(qmGated
+    val exact = step("exact", hold)(_
       .withColumn("_digest", md5(col("clean_text")))
       .withColumn("_rank", row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy("_digest").orderBy(idCol)))
       .filter(col("_rank") === 1)
-      .drop("_digest", "_rank"), "exact")
-    // near-dup dedup over the cleaned text
-    val pairs = Dedup.minhashJaccardPairs(exactKept, "clean_text", idCol,
-      cfg.shingleN, cfg.minJaccard, cfg.numHashes, cfg.rowsPerBand, cfg.maxBucket)
-    val clusters = Dedup.duplicateClusters(pairs)
-    val deduped = obs(cfg.keepPreference
-      .fold(Dedup.dropNearDuplicates(exactKept, idCol, clusters))(
-        Dedup.dropNearDuplicatesBy(exactKept, idCol, clusters, _)), "neardup")
-    // semantic stage: embedding near-dup clusters collapse the same
-    // way text clusters did — paraphrases/translations the shingle
-    // tiers can't see
-    val semantic = cfg.embCol.fold(deduped) { e =>
-      require(cfg.pqModel.isEmpty || cfg.sqModel.isEmpty,
-        "pqModel and sqModel are alternative codecs for the semantic tier — set one")
-      require((cfg.pqModel.isEmpty && cfg.sqModel.isEmpty) || cfg.codebook.nonEmpty,
-        "a codec (pqModel/sqModel) compresses the IVF pair search and needs " +
-          "`codebook` for the inverted lists — supply both, or neither for " +
-          "sign-LSH buckets")
-      val semPairs = (cfg.codebook, cfg.pqModel, cfg.sqModel) match {
-        case (Some(cbk), Some(pqm), None) => Similarity.nearDupPairsIvfPq(deduped, e,
-          idCol, cbk, pqm, cfg.minCosine, cfg.nprobe, cfg.maxBucket, cfg.sdcMargin)
-        case (Some(cbk), None, Some(sqm)) => Similarity.nearDupPairsIvfSq(deduped, e,
-          idCol, cbk, sqm, cfg.minCosine, cfg.nprobe, cfg.maxBucket, cfg.sdcMargin)
-        case (Some(cbk), None, None) => Similarity.nearDupPairsIvf(deduped, e, idCol,
-          cbk, cfg.minCosine, cfg.nprobe, cfg.maxBucket)
-        case _ => Similarity.nearDupPairs(deduped, e, idCol,
-          cfg.signBits, cfg.minCosine, cfg.maxBucket)
+      .drop("_digest", "_rank"))
+    // every dedup tier collapses its pair search's clusters the same
+    // way, under the one survivor rule
+    def collapse(label: String)(pairs: DataFrame => DataFrame): DataFrame => Stage =
+      cur => {
+        val clusters = hold.aux(Dedup.duplicateClusters(pairs(cur)))
+        Stage(label, hold.stage(survivors(cur, idCol, clusters, cfg), label),
+          clusters = Some(clusters))
       }
-      val semClusters = Dedup.duplicateClusters(semPairs)
-      obs(cfg.keepPreference
-        .fold(Dedup.dropNearDuplicates(deduped, idCol, semClusters))(
-          Dedup.dropNearDuplicatesBy(deduped, idCol, semClusters, _)), "semantic")
-    }
-    // signature tiers (image dHash, audio fingerprint): perceptual
-    // near-dup clusters collapse the same way — re-encodes and mild
-    // edits of the same pixels/samples, which no text tier can see
-    // (the media columns are opaque binary to everything above)
-    val signatured = signatureTiers(cfg).foldLeft(semantic) { (cur, tier) =>
-      val clusters = Dedup.duplicateClusters(Dedup.hashNearDupPairs(
-        tier.withHash(cur, tier.binaryCol, tier.workCol), tier.workCol,
-        idCol, tier.maxHamming, cfg.maxBucket,
-        metricName = s"graft_${tier.label}_band_cap"))
-      obs(cfg.keepPreference
-        .fold(Dedup.dropNearDuplicates(cur, idCol, clusters))(
-          Dedup.dropNearDuplicatesBy(cur, idCol, clusters, _)), tier.label)
-    }
-    // video-like tier (animated GIF): positional frame-hash clusters
-    // collapse the same way — re-encodes and mild edits of the SAME
-    // animation, which the single-hash image tier cannot see (it
-    // would hash only a cover frame)
-    val gifTiered = cfg.gifCol.fold(signatured) { gc =>
-      implicit val sp: org.apache.spark.sql.SparkSession = docs.sparkSession
-      val clusters = Dedup.duplicateClusters(
-        gifTierPairs(signatured, gc, idCol, cfg, "graft_gif_band_cap"))
-      obs(cfg.keepPreference
-        .fold(Dedup.dropNearDuplicates(signatured, idCol, clusters))(
-          Dedup.dropNearDuplicatesBy(signatured, idCol, clusters, _)), "gif")
-    }
-    // segmented-audio tier: the positional machinery again, over
-    // fixed-duration segment fingerprints — trimmed/re-cut clips of
-    // the SAME audio, which the whole-clip audioCol tier cannot see
-    val audioSegTiered = cfg.audioSegCol.fold(gifTiered) { ac =>
-      implicit val sp: org.apache.spark.sql.SparkSession = docs.sparkSession
-      val clusters = Dedup.duplicateClusters(
-        Multimodal.audioNearDupPairsSegmented(gifTiered, ac, idCol,
+    val dedup = Seq(
+      // near-dup dedup over the cleaned text
+      collapse("neardup")(Dedup.minhashJaccardPairs(_, "clean_text", idCol,
+        cfg.shingleN, cfg.minJaccard, cfg.numHashes, cfg.rowsPerBand,
+        cfg.maxBucket))) ++
+      // semantic tier: embedding near-dups — paraphrases/translations
+      // the shingle tiers can't see
+      cfg.embCol.map(e => collapse("semantic")(semanticPairs(_, e, idCol, cfg))) ++
+      // signature tiers (image dHash, audio fingerprint): re-encodes
+      // and mild edits of the same pixels/samples, which no text tier
+      // can see (the media columns are opaque binary to everything above)
+      signatureTiers(cfg).map(t => collapse(t.label)(cur =>
+        Dedup.hashNearDupPairs(t.withHash(cur, t.binaryCol, t.workCol),
+          t.workCol, idCol, t.maxHamming, cfg.maxBucket,
+          metricName = s"graft_${t.label}_band_cap"))) ++
+      // video-like tier (animated GIF): positional frame-hash clusters
+      // — the single-hash image tier would hash only a cover frame
+      cfg.gifCol.map(gc => collapse("gif")(
+        gifTierPairs(_, gc, idCol, cfg, "graft_gif_band_cap"))) ++
+      // segmented-audio tier: the positional machinery over
+      // fixed-duration segment fingerprints — trimmed/re-cut clips the
+      // whole-clip audioCol tier cannot see
+      cfg.audioSegCol.map(ac => collapse("audioseg")(
+        Multimodal.audioNearDupPairsSegmented(_, ac, idCol,
           cfg.audioSegmentFrames, cfg.audioMaxSegments,
           cfg.audioSegMaxHamming, cfg.audioMinSegmentMatches,
           cfg.maxBucket, maxShift = cfg.audioSegMaxShift,
-          decoder = cfg.audioDecoder))
-      obs(cfg.keepPreference
-        .fold(Dedup.dropNearDuplicates(gifTiered, idCol, clusters))(
-          Dedup.dropNearDuplicatesBy(gifTiered, idCol, clusters, _)),
-        "audioseg")
-    }
-    decontaminateAndSample(audioSegTiered, idCol, cfg)
+          decoder = cfg.audioDecoder)))
+    chain(docs, gateSteps(textCol, idCol, cfg, hold, None) ++ (exact +: dedup) ++
+      backSteps(idCol, cfg, hold))
   }
+
+  /** Returns the surviving rows of `docs` with `clean_text` appended.
+    * `idCol` must be unique per row; `textCol` is the raw text.
+    *
+    * NOT widened at the entry (r17): an interleaved A/B showed a
+    * facade-entry repartition costs MORE than it wins for the thin
+    * text chains (q131 1.32x, q140 1.28x slower — 32-task per-stage
+    * overhead: task deserialization of the large generated plans +
+    * broadcast fetch contention), while the branches that do win
+    * (expensive media decode) get their parallelism from the caller
+    * widening BEFORE the pinned encode (q138 0.83x, q142 0.59x) — see
+    * Parallelism.widen. */
+  def run(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id",
+      cfg: Config = Config()): DataFrame =
+    batchStages(docs, textCol, idCol, cfg, Hold(observed(cfg))).last.out
 
   /** Row tracing for the batch prep facade — the data-curation twin
     * of `pipeline.VulTracer`'s `-debug v=CVE-...`: for each traced
@@ -899,249 +1099,35 @@ object CorpusPrep {
     * where" with zero extra passes; this answers "WHERE did doc X
     * go" for a handful of ids.
     *
-    * Rebuilds run()'s stage chain under the SAME Config and private
-    * helpers, WITHOUT the observed-metrics wrappers (CorpusPrepSpec
-    * pins trace's kept set == run()'s survivor set on the same
-    * fixture, so the two chains cannot drift apart silently). Each
-    * stage frame is cached once, membership-checked against the
-    * traced ids, and released before returning; the result is EAGER
-    * (localCheckpoint) so no caller action can re-execute the prep.
-    * Debug-sized by contract: `ids` is a single-column frame of the
-    * ids to trace — pass a handful, not a corpus slice.
+    * Replays run()'s own stage list (`batchStages`) under the SAME
+    * Config with each stage pinned instead of observed, so the two
+    * cannot drift apart (CorpusPrepSpec pins trace's kept set ==
+    * run()'s survivor set). Stage frames are released before
+    * returning; the result is EAGER (localCheckpoint) so no caller
+    * action can re-execute the prep. Debug-sized by contract: `ids`
+    * is a single-column frame of the ids to trace — pass a handful,
+    * not a corpus slice.
     *
     * Output: one row per traced id — (<idCol>, stage, detail);
     * stage ∈ absent | gated | lm | qm | exact | neardup | semantic |
-    * image | audio | gif | ngram | decontam | semdecontam | sampled |
-    * kept (only cfg-active stages can appear). */
+    * image | audio | gif | audioseg | ngram | decontam | semdecontam |
+    * sampled | kept (only cfg-active stages can appear). */
   def prepTrace(docs: DataFrame, ids: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", cfg: Config = Config()): DataFrame = {
-    require(!cfg.intraNearDup && !cfg.intraNearDupVerified,
-      "intraNearDup/intraNearDupVerified are the stream-only tiers — " +
-        "prepTrace traces run()'s batch chain")
-    require(cfg.bqModel.isEmpty,
-      "bqModel is the semanticIncremental lookup codec — run()/prepTrace " +
-        "have no stage that uses it")
-    require(cfg.embCol.isDefined ||
-        (cfg.pqModel.isEmpty && cfg.sqModel.isEmpty && cfg.codebook.isEmpty),
-      "pqModel/sqModel/codebook configure the semantic dedup stage, which " +
-        "needs cfg.embCol — set it, or drop the codec/codebook config")
-    require(!cfg.benchEmbLarge || cfg.benchEmb.isDefined,
-      "benchEmbLarge selects the large-bench route OF the benchEmb tier — " +
-        "set cfg.benchEmb (the benchmark embeddings frame), or drop the flag")
-    require(ids.columns.length == 1,
-      s"ids must be a single-column frame, got ${ids.columns.mkString(", ")}")
-    require(!Set("stage", "detail", "_digest", "_rank", "_trc_id", "_trc_cl",
-        "_trc_surv", "_trc_len", "_trc_qs", "clean_text").contains(idCol),
-      s"idCol '$idCol' collides with prepTrace's output/working column names")
-    val kit = new TraceKit(ids, idCol)
-    import kit.{traced, pin, tIds, stageRows}
-    // survivor evidence for a dedup tier: the dropped id's cluster
-    // member still present after the drop (exactly one per cluster)
-    def clusterRows(dropped: DataFrame, clusters: DataFrame,
-        after: DataFrame, stage: String, what: String): DataFrame = {
-      val cl = clusters.toDF("_trc_id", "_trc_cl")
-      val surv = cl
-        .join(after.select(col(idCol).as("_trc_id")), Seq("_trc_id"))
-        .select(col("_trc_cl"), col("_trc_id").as("_trc_surv"))
-      dropped
-        .join(cl.withColumnRenamed("_trc_id", idCol), Seq(idCol), "left")
-        .join(surv, Seq("_trc_cl"), "left")
-        .select(col(idCol), lit(stage).as("stage"),
-          concat(lit(s"$what cluster survivor: "), col("_trc_surv"))
-            .cast("string").as("detail"))
-    }
+    val kit = new TraceKit(ids, idCol, cfg, docs, textCol)
     try {
-      // ---- the chain, mirroring run() stage for stage ----
-      val spanGated = pin(normalizeAndGate(docs, textCol, idCol, cfg))
-      val lmGated =
-        if (cfg.lmModel.isEmpty) spanGated else pin(lmGate(spanGated, idCol, cfg))
-      // the effective gate threshold resolves ONCE (quantile route =
-      // one calibration action) and feeds both the gate and the
-      // trace's evidence string
-      val qmThr = qmThrOpt(lmGated, cfg, textCol)
-      val qmGated =
-        if (cfg.qualityModel.isEmpty) lmGated
-        else pin(qmGateAt(lmGated, cfg.qualityModel.get, qmThr.get))
-      val digests = pin(qmGated.withColumn("_digest", md5(col("clean_text"))))
-      val exactKept = pin(digests
-        .withColumn("_rank", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("_digest").orderBy(idCol)))
-        .filter(col("_rank") === 1).drop("_rank"))
-      val exactNoDigest = exactKept.drop("_digest")
-      val textClusters = pin(Dedup.duplicateClusters(
-        Dedup.minhashJaccardPairs(exactNoDigest, "clean_text", idCol,
-          cfg.shingleN, cfg.minJaccard, cfg.numHashes, cfg.rowsPerBand,
-          cfg.maxBucket)))
-      val afterText = pin(cfg.keepPreference
-        .fold(Dedup.dropNearDuplicates(exactNoDigest, idCol, textClusters))(
-          Dedup.dropNearDuplicatesBy(exactNoDigest, idCol, textClusters, _)))
-      val (afterSem, semClusters) = cfg.embCol match {
-        case None => (afterText, None)
-        case Some(e) =>
-          require(cfg.pqModel.isEmpty || cfg.sqModel.isEmpty,
-            "pqModel and sqModel are alternative codecs for the semantic tier — set one")
-          require((cfg.pqModel.isEmpty && cfg.sqModel.isEmpty) || cfg.codebook.nonEmpty,
-            "a codec (pqModel/sqModel) compresses the IVF pair search and needs " +
-              "`codebook` for the inverted lists — supply both, or neither for " +
-              "sign-LSH buckets")
-          val semPairs = (cfg.codebook, cfg.pqModel, cfg.sqModel) match {
-            case (Some(cbk), Some(pqm), None) => Similarity.nearDupPairsIvfPq(
-              afterText, e, idCol, cbk, pqm, cfg.minCosine, cfg.nprobe,
-              cfg.maxBucket, cfg.sdcMargin)
-            case (Some(cbk), None, Some(sqm)) => Similarity.nearDupPairsIvfSq(
-              afterText, e, idCol, cbk, sqm, cfg.minCosine, cfg.nprobe,
-              cfg.maxBucket, cfg.sdcMargin)
-            case (Some(cbk), None, None) => Similarity.nearDupPairsIvf(
-              afterText, e, idCol, cbk, cfg.minCosine, cfg.nprobe, cfg.maxBucket)
-            case _ => Similarity.nearDupPairs(afterText, e, idCol,
-              cfg.signBits, cfg.minCosine, cfg.maxBucket)
-          }
-          val cl = pin(Dedup.duplicateClusters(semPairs))
-          (pin(cfg.keepPreference
-            .fold(Dedup.dropNearDuplicates(afterText, idCol, cl))(
-              Dedup.dropNearDuplicatesBy(afterText, idCol, cl, _))), Some(cl))
+      kit.rows(batchStages(docs, textCol, idCol, cfg, kit.hold), "input",
+          "normalize/quality/boilerplate") {
+        // exact: name the digest twin that was kept
+        case (st, prev, dropped) if st.label == "exact" =>
+          Seq(kit.digestTwin(dropped, prev, st.out)
+            .select(col(idCol), lit("exact").as("stage"),
+              concat(lit("exact duplicate of kept doc "), col("_trc_surv"))
+                .cast("string").as("detail")))
+        case (st, _, dropped) if st.clusters.isDefined =>
+          Seq(kit.survivorRows(dropped, st,
+            if (st.label == "neardup") "near-dup" else st.label))
       }
-      var sigStages = Seq.empty[(String, DataFrame, DataFrame)]
-      var cur = afterSem
-      signatureTiers(cfg).foreach { tier =>
-        val cl = pin(Dedup.duplicateClusters(Dedup.hashNearDupPairs(
-          tier.withHash(cur, tier.binaryCol, tier.workCol), tier.workCol,
-          idCol, tier.maxHamming, cfg.maxBucket,
-          metricName = s"graft_${tier.label}_trace_cap")))
-        val after = pin(cfg.keepPreference
-          .fold(Dedup.dropNearDuplicates(cur, idCol, cl))(
-            Dedup.dropNearDuplicatesBy(cur, idCol, cl, _)))
-        sigStages :+= ((tier.label, cl, after)); cur = after
-      }
-      // the gif tier rides the same generic (label, clusters, after)
-      // shape — only the pair machinery differs (positional frames)
-      cfg.gifCol.foreach { gc =>
-        implicit val sp: org.apache.spark.sql.SparkSession = docs.sparkSession
-        val cl = pin(Dedup.duplicateClusters(
-          gifTierPairs(cur, gc, idCol, cfg, "graft_gif_trace_cap")))
-        val after = pin(cfg.keepPreference
-          .fold(Dedup.dropNearDuplicates(cur, idCol, cl))(
-            Dedup.dropNearDuplicatesBy(cur, idCol, cl, _)))
-        sigStages :+= (("gif", cl, after)); cur = after
-      }
-      cfg.audioSegCol.foreach { ac =>
-        implicit val sp: org.apache.spark.sql.SparkSession = docs.sparkSession
-        val cl = pin(Dedup.duplicateClusters(
-          Multimodal.audioNearDupPairsSegmented(cur, ac, idCol,
-            cfg.audioSegmentFrames, cfg.audioMaxSegments,
-            cfg.audioSegMaxHamming, cfg.audioMinSegmentMatches,
-            cfg.maxBucket, metricName = "graft_audioseg_trace_cap",
-            maxShift = cfg.audioSegMaxShift,
-            decoder = cfg.audioDecoder)))
-        val after = pin(cfg.keepPreference
-          .fold(Dedup.dropNearDuplicates(cur, idCol, cl))(
-            Dedup.dropNearDuplicatesBy(cur, idCol, cl, _)))
-        sigStages :+= (("audioseg", cl, after)); cur = after
-      }
-      val ngramGated = cfg.ngramBloom.fold(cur)(bytes =>
-        pin(Dedup.bloomNgramGate(cur, "clean_text", bytes,
-          cfg.ngramBloomN, cfg.ngramBloomMaxHits)))
-      val decontaminated = cfg.benchmark.fold(ngramGated)(bench =>
-        pin(Dedup.decontaminate(ngramGated, "clean_text", idCol,
-          bench.withColumn("_bclean", normOf(cfg)(col(cfg.benchTextCol))),
-          "_bclean", cfg.benchIdCol, cfg.shingleN, cfg.minContainment,
-          cfg.benchBloomFpp)))
-      val semDecon = cfg.benchEmb.fold(decontaminated) { bench =>
-        require(cfg.embCol.isDefined,
-          "benchEmb (semantic decontamination) needs cfg.embCol — the docs' " +
-            "embedding column the benchmark embeddings score against")
-        pin(if (cfg.benchEmbLarge)
-          Dedup.semanticDecontaminateLarge(decontaminated, cfg.embCol.get,
-            idCol, bench, cfg.benchEmbCol, cfg.benchMinCosine,
-            bands = cfg.bqBands, maxBucket = cfg.maxBucket)
-        else Dedup.semanticDecontaminate(decontaminated, cfg.embCol.get,
-          bench, cfg.benchEmbCol, cfg.benchMinCosine))
-      }
-      val sampled = cfg.sampleRate.fold(semDecon)(r =>
-        pin(Mixing.stratifiedSample(semDecon, idCol, r, salt = "corpusprep")))
-
-      // ---- boundary membership + evidence, first drop wins ----
-      val inDocs = tIds(docs)
-      val out = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      out += stageRows(traced.exceptAll(inDocs), "absent",
-        lit("id not present in the input frame"))
-      // gates: report the normalized length the gates judged — but
-      // only when that length is knowable HERE: under cutHotSpans the
-      // gates run on the span-cut text (a corpus-wide census), and
-      // quoting the uncut length would send the debugging user the
-      // exactly wrong conclusion for an all-boilerplate doc
-      val gateDropped = inDocs.exceptAll(tIds(spanGated))
-      out += (if (cfg.cutHotSpans)
-        stageRows(gateDropped, "gated",
-          lit("failed normalize/quality/boilerplate gates (judged on the " +
-            "span-cut text; lengths not reported under cutHotSpans)"))
-      else gateDropped
-        .join(docs.select(col(idCol),
-          length(normOf(cfg)(col(textCol))).as("_trc_len"),
-          repViolationSuffix(cfg, col(textCol)).as("_trc_rv")),
-          Seq(idCol), "left")
-        .select(col(idCol), lit("gated").as("stage"),
-          concat(lit("failed normalize/quality/boilerplate gates (clean_len="),
-            coalesce(col("_trc_len").cast("string"), lit("null")),
-            lit(")"), coalesce(col("_trc_rv"), lit("")))
-            .cast("string").as("detail")))
-      if (cfg.lmModel.isDefined)
-        out += stageRows(tIds(spanGated).exceptAll(tIds(lmGated)), "lm",
-          lit(s"bigram log-prob below minLmLogProb=${cfg.minLmLogProb}"))
-      // trained-quality gate: the evidence is the doc's ACTUAL score
-      cfg.qualityModel.foreach { m =>
-        out += tIds(lmGated).exceptAll(tIds(qmGated))
-          .join(QualityModel.withQualityScore(
-              lmGated.select(col(idCol), col("clean_text")),
-              m, "clean_text", "_trc_qs"), Seq(idCol), "left")
-          .select(col(idCol), lit("qm").as("stage"),
-            concat(lit("quality score "),
-              coalesce(col("_trc_qs").cast("string"), lit("null")),
-              lit(s" below minQualityScore=${qmThr.get}"))
-              .cast("string").as("detail"))
-      }
-      // exact: name the digest twin that was kept
-      val exactDropped = tIds(qmGated).exceptAll(tIds(exactNoDigest))
-      out += exactDropped
-        .join(digests.select(col(idCol), col("_digest")), Seq(idCol), "left")
-        .join(exactKept.select(col("_digest"), col(idCol).as("_trc_surv")),
-          Seq("_digest"), "left")
-        .select(col(idCol), lit("exact").as("stage"),
-          concat(lit("exact duplicate of kept doc "), col("_trc_surv"))
-            .cast("string").as("detail"))
-      out += clusterRows(tIds(exactNoDigest).exceptAll(tIds(afterText)),
-        textClusters, afterText, "neardup", "near-dup")
-      semClusters.foreach { cl =>
-        out += clusterRows(tIds(afterText).exceptAll(tIds(afterSem)),
-          cl, afterSem, "semantic", "semantic")
-      }
-      var sigPrev = afterSem
-      sigStages.foreach { case (label, cl, after) =>
-        out += clusterRows(tIds(sigPrev).exceptAll(tIds(after)),
-          cl, after, label, label)
-        sigPrev = after
-      }
-      if (cfg.ngramBloom.isDefined)
-        out += stageRows(tIds(cur).exceptAll(tIds(ngramGated)), "ngram",
-          lit(s"over ${cfg.ngramBloomMaxHits} benchmark n-gram Bloom hits"))
-      if (cfg.benchmark.isDefined)
-        out += stageRows(tIds(ngramGated).exceptAll(tIds(decontaminated)),
-          "decontam",
-          lit(s"benchmark ${cfg.shingleN}-gram containment >= ${cfg.minContainment}"))
-      if (cfg.benchEmb.isDefined)
-        out += stageRows(tIds(decontaminated).exceptAll(tIds(semDecon)),
-          "semdecontam",
-          lit(s"benchmark embedding cosine >= ${cfg.benchMinCosine}"))
-      if (cfg.sampleRate.isDefined)
-        out += tIds(semDecon).exceptAll(tIds(sampled))
-          .select(col(idCol), lit("sampled").as("stage"),
-            concat(lit("sample draw "),
-              round(Mixing.unitHash(col(idCol), "corpusprep"), 6),
-              lit(" fell outside the keep rate")).cast("string").as("detail"))
-      out += keptRows(tIds(sampled), docs, idCol, cfg)
-      // EAGER: pin the debug-sized result, then release every stage
-      out.reduce(_ unionByName _).localCheckpoint(true)
     } finally { kit.release() }
   }
 
@@ -1241,224 +1227,108 @@ object CorpusPrep {
       "the segmented-audio tier is refused by prepStream (its drop " +
         "decision is an id-keyed aggregation) — there is no stream to " +
         "trace; use prepTraceIncremental")
-    require(ids.columns.length == 1,
-      s"ids must be a single-column frame, got ${ids.columns.mkString(", ")}")
-    require(!(Set("stage", "detail", "_digest", "_rank", "_trc_len", "_trc_qs",
-        "_trc_sid", "_trc_j", "_trc_h", "clean_text",
-        // evidence-join working names (near-dup re-verify + signature
-        // Hamming probe + stream LM gate) — a colliding idCol would
-        // otherwise pass this guard and die deep in an evidence join
-        // with an ambiguous-reference error
-        "_qshs", "_qhs", "_sshs", "_shs", "_band", "_h", "_k", "_hs",
-        "_lm_n", "_lm_lp") ++
-        (0 until 4).flatMap(k => Set(s"_b$k", s"_cand$k"))).contains(idCol),
-      s"idCol '$idCol' collides with prepTraceStream's output/working names")
-    val kit = new TraceKit(ids, idCol)
-    import kit.{traced, pin, tIds, stageRows}
+    val kit = new TraceKit(ids, idCol, cfg, docs, textCol)
+    val hold = kit.hold
     try {
       // ---- the chain, mirroring prepStream stage for stage ----
-      val cleaned = pin(docs.withColumn("clean_text", normOf(cfg)(col(textCol))))
-      val gated = pin(rowLocalGate(cleaned, cfg, textCol))
-      val lmGated = cfg.lmModel.fold(gated) { lm =>
-        pin(gated
+      val front = Seq(step("gated", hold)(d => rowLocalGate(
+          d.withColumn("clean_text", normOf(cfg)(col(textCol))), cfg, textCol))) ++
+        cfg.lmModel.map(lm => step("lm", hold)(_
           .transform(TextStats.withBigramLogProb(_, "clean_text",
             TextStats.collectLocal(lm, cfg.lmMaxPairs), cfg.lmK, "_lm_n", "_lm_lp"))
           .filter(col("_lm_lp").isNull || col("_lm_lp") >= cfg.minLmLogProb)
-          .drop("_lm_n", "_lm_lp"))
-      }
-      val qmThr = qmThrOpt(lmGated, cfg, textCol)
-      val qmGated =
-        if (cfg.qualityModel.isEmpty) lmGated
-        else pin(qmGateAt(lmGated, cfg.qualityModel.get, qmThr.get))
-      val ngramGated = cfg.ngramBloom.fold(qmGated)(bytes =>
-        pin(Dedup.bloomNgramGate(qmGated, "clean_text", bytes,
-          cfg.ngramBloomN, cfg.ngramBloomMaxHits)))
-      val semDecon = cfg.benchEmb.fold(ngramGated) { bench =>
-        require(cfg.embCol.isDefined,
-          "benchEmb (semantic decontamination) needs cfg.embCol")
-        pin(Dedup.semanticDecontaminate(ngramGated, cfg.embCol.get, bench,
-          cfg.benchEmbCol, cfg.benchMinCosine))
-      }
-      val withDigest = pin(semDecon.withColumn("_digest", md5(col("clean_text"))))
-      val intraExact = pin(withDigest
+          .drop("_lm_n", "_lm_lp"))) ++
+        qmStep(textCol, cfg, hold)
+      // the back half's row-local tiers run live before the digest
+      // dedup; the sampler stays last (benchmark is refused above)
+      val (sample, decon) = backTiers(idCol, cfg).partition(_._1 == "sampled")
+      // within-batch digest twins: min id stands in for the live
+      // stream's first arrival
+      val exact = step("exact", hold)(_
+        .withColumn("_digest", md5(col("clean_text")))
         .withColumn("_rank", row_number().over(
           org.apache.spark.sql.expressions.Window
             .partitionBy("_digest").orderBy(idCol)))
         .filter(col("_rank") === 1).drop("_rank"))
-      val oldDig = standing.map { st =>
-        standingIndex
+      val standingSteps = standing.toSeq.flatMap { st =>
+        val oldDig = standingIndex
           .map(_.select(col("_digest")).distinct())
           .getOrElse(st.select(md5(col("clean_text")).as("_digest")).distinct())
-      }
-      val exactStanding = oldDig.fold(intraExact)(od =>
-        pin(intraExact.join(od, Seq("_digest"), "left_anti")))
-      val ndStanding = standing.fold(exactStanding) { st =>
         val lookup = Dedup.bandVerifyLookup(st, "clean_text", idCol,
           cfg.shingleN, cfg.numHashes, cfg.rowsPerBand, cfg.maxBucket,
           standingIndex)
-        pin(Dedup.streamNearDupFilter(exactStanding.drop("_digest"),
-          "clean_text", lookup, cfg.shingleN, cfg.minJaccard,
-          cfg.numHashes, cfg.rowsPerBand))
+        Seq(step("exact_standing", hold)(_.join(oldDig, Seq("_digest"), "left_anti")),
+          step("neardup", hold)(cur => Dedup.streamNearDupFilter(
+            cur.drop("_digest"), "clean_text", lookup, cfg.shingleN,
+            cfg.minJaccard, cfg.numHashes, cfg.rowsPerBand)))
       }
-      val semStanding = semanticLookup.fold(ndStanding) { lk =>
-        pin(cfg.bqModel.fold(
-          Similarity.streamSemanticFilter(ndStanding, cfg.embCol.get, lk,
+      val semantic = semanticLookup.map(lk => step("semantic", hold)(cur =>
+        cfg.bqModel.fold(
+          Similarity.streamSemanticFilter(cur, cfg.embCol.get, lk,
             cfg.codebook.get, cfg.sqModel.get, cfg.minCosine, cfg.nprobe))(bqm =>
-          Similarity.streamSemanticFilterBq(ndStanding, cfg.embCol.get, lk,
-            bqm, cfg.minCosine, cfg.bqBands, cfg.bqMaxHamming)))
-      }
+          Similarity.streamSemanticFilterBq(cur, cfg.embCol.get, lk,
+            bqm, cfg.minCosine, cfg.bqBands, cfg.bqMaxHamming))))
       val tierIdx = Map("image" -> imageIndex, "audio" -> audioIndex)
-      var sigStages = Seq.empty[(String, DataFrame, DataFrame)]
-      var cur = semStanding
-      signatureTiers(cfg).foreach { tier =>
-        val after = pin(Dedup.hashNearDupFilterAgainst(
-            tier.withHash(cur, tier.binaryCol, tier.workCol),
-            tier.workCol, tierIdx(tier.label).get, tier.maxHamming)
-          .drop(tier.workCol))
-        sigStages :+= ((tier.label, cur, after)); cur = after
-      }
-      val sampled = cfg.sampleRate.fold(cur)(r =>
-        pin(Mixing.stratifiedSample(cur, idCol, r, salt = "corpusprep")))
+      val signature = signatureTiers(cfg).map(t => step(t.label, hold)(cur =>
+        Dedup.hashNearDupFilterAgainst(t.withHash(cur, t.binaryCol, t.workCol),
+          t.workCol, tierIdx(t.label).get, t.maxHamming).drop(t.workCol)))
+      val stages = chain(docs, front ++
+        decon.map { case (l, f) => step(l, hold)(f) } ++ (exact +: standingSteps) ++
+        semantic ++ signature ++ sample.map { case (l, f) => step(l, hold)(f) })
 
-      // ---- boundary membership + evidence, first drop wins ----
-      val inDocs = tIds(docs)
-      val out = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      out += stageRows(traced.exceptAll(inDocs), "absent",
-        lit("id not present in the input frame"))
-      out += tIds(cleaned).exceptAll(tIds(gated))
-        .join(docs.select(col(idCol),
-          length(normOf(cfg)(col(textCol))).as("_trc_len"),
-          repViolationSuffix(cfg, col(textCol)).as("_trc_rv")),
-          Seq(idCol), "left")
-        .select(col(idCol), lit("gated").as("stage"),
-          concat(lit("failed normalize/quality gates (clean_len="),
-            coalesce(col("_trc_len").cast("string"), lit("null")),
-            lit(")"), coalesce(col("_trc_rv"), lit("")))
-            .cast("string").as("detail"))
-      if (cfg.lmModel.isDefined)
-        out += stageRows(tIds(gated).exceptAll(tIds(lmGated)), "lm",
-          lit(s"bigram log-prob below minLmLogProb=${cfg.minLmLogProb}"))
-      cfg.qualityModel.foreach { m =>
-        out += tIds(lmGated).exceptAll(tIds(qmGated))
-          .join(QualityModel.withQualityScore(
-              lmGated.select(col(idCol), col("clean_text")),
-              m, "clean_text", "_trc_qs"), Seq(idCol), "left")
-          .select(col(idCol), lit("qm").as("stage"),
-            concat(lit("quality score "),
-              coalesce(col("_trc_qs").cast("string"), lit("null")),
-              lit(s" below minQualityScore=${qmThr.get}"))
-              .cast("string").as("detail"))
-      }
-      if (cfg.ngramBloom.isDefined)
-        out += stageRows(tIds(qmGated).exceptAll(tIds(ngramGated)), "ngram",
-          lit(s"over ${cfg.ngramBloomMaxHits} benchmark n-gram Bloom hits"))
-      if (cfg.benchEmb.isDefined)
-        out += stageRows(tIds(ngramGated).exceptAll(tIds(semDecon)),
-          "semdecontam",
-          lit(s"benchmark embedding cosine >= ${cfg.benchMinCosine}"))
-      // within-batch digest twin: live intake keeps the FIRST ARRIVAL;
-      // the min-id twin reported here is the deterministic stand-in
-      out += tIds(semDecon).exceptAll(tIds(intraExact))
-        .join(withDigest.select(col(idCol), col("_digest")), Seq(idCol), "left")
-        .join(intraExact.select(col("_digest"), col(idCol).as("_trc_sid")),
-          Seq("_digest"), "left")
-        .select(col(idCol), lit("exact").as("stage"),
-          concat(lit("duplicate digest within the batch of doc "),
-            col("_trc_sid"),
-            lit(" (live intake keeps the first ARRIVAL; min-id shown)"))
-            .cast("string").as("detail"))
-      if (standing.isDefined)
-        out += stageRows(tIds(intraExact).exceptAll(tIds(exactStanding)),
-          "exact_standing", lit("digest already in the standing corpus"))
-      // standing near-dup: name the best-verifying standing doc — the
-      // lookup carries only shingle sets, so the evidence re-verifies
-      // the handful of dropped rows against the standing frame WITH ids
-      standing.foreach { st =>
-        val dropped = tIds(exactStanding).exceptAll(tIds(ndStanding))
-        val qSide = exactStanding
-          .join(broadcast(dropped), Seq(idCol), "left_semi")
-          .select(col(idCol), col("clean_text"))
-          .withColumn("_qshs", Dedup.shingles(col("clean_text"), cfg.shingleN))
-          .withColumn("_qhs",
-            Dedup.minhashSigText(col("clean_text"), cfg.shingleN, cfg.numHashes))
-          .select(col(idCol), col("_qshs"), explode(array(Dedup.bandKeyCols(
-            i => element_at(col("_qhs"), i + 1),
-            cfg.numHashes, cfg.rowsPerBand): _*)).as("_band"))
-        val sSide = st
-          .select(col(idCol).as("_trc_sid"), col("clean_text"))
-          .withColumn("_sshs", Dedup.shingles(col("clean_text"), cfg.shingleN))
-          .withColumn("_shs",
-            Dedup.minhashSigText(col("clean_text"), cfg.shingleN, cfg.numHashes))
-          .filter(col("_shs").isNotNull)
-          .select(col("_trc_sid"), col("_sshs"), explode(array(Dedup.bandKeyCols(
-            i => element_at(col("_shs"), i + 1),
-            cfg.numHashes, cfg.rowsPerBand): _*)).as("_band"))
-        val shared = size(array_intersect(col("_qshs"), col("_sshs")))
-        val verified = qSide.join(sSide, Seq("_band"))
-          .withColumn("_trc_j", shared.cast("double") /
-            (size(col("_qshs")) + size(col("_sshs")) - shared))
-          .filter(col("_trc_j") >= cfg.minJaccard)
-          .groupBy(idCol)
-          // min_by over (-j, sid): max jaccard, ties broken to the MIN
-          // standing id — fully deterministic evidence (max_by alone
-          // is tie-nondeterministic, e.g. duplicate standing texts),
-          // which is what lets an oracle replay the survivor id
-          .agg(expr("min_by(_trc_sid, struct(-_trc_j, _trc_sid))")
-            .as("_trc_sid"),
-            round(max(col("_trc_j")), 4).as("_trc_j"))
-        out += dropped
-          .join(verified, Seq(idCol), "left")
-          .select(col(idCol), lit("neardup").as("stage"),
-            concat(lit("near-dup of standing doc "),
-              coalesce(col("_trc_sid").cast("string"), lit("?")),
-              lit(" (jaccard "),
-              coalesce(col("_trc_j").cast("string"), lit("?")),
-              lit(")")).cast("string").as("detail"))
-      }
-      if (semanticLookup.isDefined)
-        out += stageRows(tIds(ndStanding).exceptAll(tIds(semStanding)),
-          "semantic",
-          lit(s"embedding verified >= ${cfg.minCosine} against a standing " +
-            "member of a probed list (the lookup carries codes, not ids — " +
-            "run a batch ANN probe to name the doc)"))
-      var sigPrev = semStanding
-      sigStages.foreach { case (label, before, after) =>
+      kit.rows(stages, "input", "normalize/quality") {
+        // within-batch digest twin: live intake keeps the FIRST ARRIVAL;
+        // the min-id twin reported here is the deterministic stand-in
+        case (st, prev, dropped) if st.label == "exact" =>
+          Seq(kit.digestTwin(dropped, prev, st.out)
+            .select(col(idCol), lit("exact").as("stage"),
+              concat(lit("duplicate digest within the batch of doc "),
+                col("_trc_surv"),
+                lit(" (live intake keeps the first ARRIVAL; min-id shown)"))
+                .cast("string").as("detail")))
+        // standing near-dup: name the best-verifying standing doc
+        case (st, prev, dropped) if st.label == "neardup" =>
+          Seq(dropped
+            .join(kit.standingNearest(prev, dropped, standing.get), Seq(idCol), "left")
+            .select(col(idCol), lit("neardup").as("stage"),
+              concat(lit("near-dup of standing doc "),
+                coalesce(col("_trc_sid").cast("string"), lit("?")),
+                lit(" (jaccard "),
+                coalesce(col("_trc_j").cast("string"), lit("?")),
+                lit(")")).cast("string").as("detail")))
+        case (st, _, dropped) if st.label == "semantic" =>
+          Seq(kit.stageRows(dropped, "semantic",
+            lit(s"embedding verified >= ${cfg.minCosine} against a standing " +
+              "member of a probed list (the lookup carries codes, not ids — " +
+              "run a batch ANN probe to name the doc)")))
         // evidence: the row's own minimum Hamming against the probed
         // candidate lists — the exact decision variable the filter saw
-        val tier = signatureTiers(cfg).find(_.label == label).get
-        val dropped = tIds(before).exceptAll(tIds(after))
-        val hashed = tier.withHash(
-            before.join(broadcast(dropped), Seq(idCol), "left_semi"),
-            tier.binaryCol, tier.workCol)
-          .select(col(idCol), col(tier.workCol).cast("long").as("_h"))
-        val joined = (0 until 4).foldLeft(hashed) { (c, k) =>
-          val side = tierIdx(label).get.filter(col("_k") === k)
-            .select(col("_band").as(s"_b$k"), col("_hs").as(s"_cand$k"))
-          c.join(broadcast(side),
-            col(s"_b$k") <=> shiftrightunsigned(col("_h"), 16 * k)
-              .bitwiseAND(lit(65535L)), "left")
-        }
-        val minHam = least((0 until 4).map(k =>
-          array_min(transform(coalesce(col(s"_cand$k"),
-            array().cast("array<long>")),
-            h => bit_count(h.bitwiseXOR(col("_h")))))): _*)
-        out += dropped
-          .join(joined.select(col(idCol), minHam.as("_trc_h")), Seq(idCol), "left")
-          .select(col(idCol), lit(label).as("stage"),
-            concat(lit(s"$label signature within hamming "),
-              coalesce(col("_trc_h").cast("string"), lit("?")),
-              lit(" of a standing signature (the index carries hashes, " +
-                "not ids)")).cast("string").as("detail"))
-        sigPrev = after
+        case (st, before, dropped) if tierIdx.contains(st.label) =>
+          val label = st.label
+          val tier = signatureTiers(cfg).find(_.label == label).get
+          val hashed = tier.withHash(
+              before.join(broadcast(dropped), Seq(idCol), "left_semi"),
+              tier.binaryCol, tier.workCol)
+            .select(col(idCol), col(tier.workCol).cast("long").as("_h"))
+          val joined = (0 until 4).foldLeft(hashed) { (c, k) =>
+            val side = tierIdx(label).get.filter(col("_k") === k)
+              .select(col("_band").as(s"_b$k"), col("_hs").as(s"_cand$k"))
+            c.join(broadcast(side),
+              col(s"_b$k") <=> shiftrightunsigned(col("_h"), 16 * k)
+                .bitwiseAND(lit(65535L)), "left")
+          }
+          val minHam = least((0 until 4).map(k =>
+            array_min(transform(coalesce(col(s"_cand$k"),
+              array().cast("array<long>")),
+              h => bit_count(h.bitwiseXOR(col("_h")))))): _*)
+          Seq(dropped
+            .join(joined.select(col(idCol), minHam.as("_trc_h")), Seq(idCol), "left")
+            .select(col(idCol), lit(label).as("stage"),
+              concat(lit(s"$label signature within hamming "),
+                coalesce(col("_trc_h").cast("string"), lit("?")),
+                lit(" of a standing signature (the index carries hashes, " +
+                  "not ids)")).cast("string").as("detail")))
       }
-      if (cfg.sampleRate.isDefined)
-        out += tIds(sigPrev).exceptAll(tIds(sampled))
-          .select(col(idCol), lit("sampled").as("stage"),
-            concat(lit("sample draw "),
-              round(Mixing.unitHash(col(idCol), "corpusprep"), 6),
-              lit(" fell outside the keep rate")).cast("string").as("detail"))
-      out += keptRows(tIds(sampled), docs, idCol, cfg)
-      out.reduce(_ unionByName _).localCheckpoint(true)
     } finally { kit.release() }
   }
 
@@ -1468,28 +1338,29 @@ object CorpusPrep {
     * in runIncremental's output", with the standing-side evidence a
     * compaction-cadence debug needs. Two design rules keep it honest:
     *
-    *  - the DEDUP BOUNDARY is the REAL operator's: the trace calls
-    *    `Dedup.dropIncrementalDuplicates` itself (same config), so
-    *    the kept/dropped split can never drift from production —
-    *    only the per-id EVIDENCE is re-derived, with uncapped
-    *    debug-sized joins, in the tier order the operator resolves
-    *    (standing digest → batch digest twin → standing near-dup →
-    *    batch cluster). Under hot-band caps a label can therefore
-    *    name a route the capped operator didn't literally take; the
-    *    drop itself is always the operator's own verdict.
+    *  - the DEDUP BOUNDARY is the REAL operator's: the trace replays
+    *    runIncremental's own stage list (`incrementalStages`), whose
+    *    dedup stage IS `Dedup.dropIncrementalDuplicates`, so the
+    *    kept/dropped split can never drift from production — only the
+    *    per-id EVIDENCE is re-derived, with uncapped debug-sized
+    *    joins, in the tier order the operator resolves (standing
+    *    digest → batch digest twin → standing near-dup → batch
+    *    cluster). Under hot-band caps a label can therefore name a
+    *    route the capped operator didn't literally take; the drop
+    *    itself is always the operator's own verdict.
     *  - batch digest twins resolve MIN-ID here and in runIncremental
     *    (full-rerun semantics — deterministic, unlike the stream's
     *    arrival order), so survivor naming is exact.
     *
-    * Signature tiers replay runIncremental's fold (direct standing
-    * hit / tainted cluster member / cluster collapse — the taint rule
-    * evidence names the batch doc whose own hit tainted the cluster);
-    * the back half (ngram / decontam / semdecontam / sample) mirrors
-    * prepTrace. Debug-sized by contract; the standing-sized costs are
-    * the same evidence joins `prepTraceStream` pays. Output: one row
-    * per traced id — (<idCol>, stage, detail); stage ∈ absent | gated
-    * | lm | qm | exact_standing | exact | neardup | <tier label> |
-    * ngram | decontam | semdecontam | sampled | kept. */
+    * The signature tiers' evidence splits each drop by the taint
+    * rule (direct standing hit / tainted cluster member / cluster
+    * collapse); the back half (ngram / decontam / semdecontam /
+    * sample) words its rows like prepTrace. Debug-sized by contract;
+    * the standing-sized costs are the same evidence joins
+    * `prepTraceStream` pays. Output: one row per traced id —
+    * (<idCol>, stage, detail); stage ∈ absent | gated | lm | qm |
+    * exact_standing | exact | neardup | <tier label> | ngram |
+    * decontam | semdecontam | sampled | kept. */
   def prepTraceIncremental(standing: DataFrame, batch: DataFrame,
       ids: DataFrame, textCol: String = "text", idCol: String = "doc_id",
       cfg: Config = Config(),
@@ -1498,368 +1369,94 @@ object CorpusPrep {
       audioIndex: Option[DataFrame] = None,
       gifIndex: Option[DataFrame] = None,
       audioSegIndex: Option[DataFrame] = None): DataFrame = {
-    require(!cfg.cutHotSpans,
-      "cutHotSpans is a full-run option — runIncremental refuses it, so " +
-        "there is no incremental chain to trace")
-    require(!cfg.intraNearDup && !cfg.intraNearDupVerified,
-      "intraNearDup/intraNearDupVerified are the stream-only tiers")
-    require(cfg.imageCol.isEmpty || imageIndex.isDefined,
-      "imageCol needs `imageIndex` — pass the same index runIncremental uses")
-    require(imageIndex.isEmpty || cfg.imageCol.isDefined,
-      "imageIndex without cfg.imageCol would be silently ignored")
-    require(cfg.audioCol.isEmpty || audioIndex.isDefined,
-      "audioCol needs `audioIndex` — pass the same index runIncremental uses")
-    require(audioIndex.isEmpty || cfg.audioCol.isDefined,
-      "audioIndex without cfg.audioCol would be silently ignored")
-    require(cfg.gifCol.isEmpty || gifIndex.isDefined,
-      "gifCol needs `gifIndex` — pass the same index runIncremental uses")
-    require(gifIndex.isEmpty || cfg.gifCol.isDefined,
-      "gifIndex without cfg.gifCol would be silently ignored")
-    require(cfg.audioSegCol.isEmpty || audioSegIndex.isDefined,
-      "audioSegCol needs `audioSegIndex` — pass the same index " +
-        "runIncremental uses")
-    require(audioSegIndex.isEmpty || cfg.audioSegCol.isDefined,
-      "audioSegIndex without cfg.audioSegCol would be silently ignored")
-    require(!cfg.benchEmbLarge || cfg.benchEmb.isDefined,
-      "benchEmbLarge selects the large-bench route OF the benchEmb tier — " +
-        "runIncremental refuses this config, so there is no run to trace")
-    require(ids.columns.length == 1,
-      s"ids must be a single-column frame, got ${ids.columns.mkString(", ")}")
-    require(!(Set("stage", "detail", "_digest", "_rank", "_trc_len", "_trc_qs",
-        "_trc_sid", "_trc_j", "_trc_h", "_trc_cl", "_trc_surv", "clean_text",
-        "_qshs", "_qhs", "_sshs", "_shs", "_band", "_h", "_k", "_hs") ++
-        (0 until 4).flatMap(k => Set(s"_b$k", s"_cand$k"))).contains(idCol),
-      s"idCol '$idCol' collides with prepTraceIncremental's working names")
-    val kit = new TraceKit(ids, idCol)
-    import kit.{traced, pin, tIds, stageRows}
+    val kit = new TraceKit(ids, idCol, cfg, batch, textCol)
+    import kit.pin
     try {
-      // ---- the chain, mirroring runIncremental stage for stage ----
-      val spanGated = pin(normalizeAndGate(batch, textCol, idCol, cfg,
-        spanCorpus = if (cfg.maxHotSpans.isDefined) Some(standing) else None))
-      val lmGated =
-        if (cfg.lmModel.isEmpty) spanGated
-        else pin(lmGate(spanGated, idCol, cfg))
-      val qmThr = qmThrOpt(lmGated, cfg, textCol)
-      val qmGated =
-        if (cfg.qualityModel.isEmpty) lmGated
-        else pin(qmGateAt(lmGated, cfg.qualityModel.get, qmThr.get))
-      // THE REAL dedup boundary — the operator itself, same config
-      val deduped = pin(Dedup.dropIncrementalDuplicates(
-        standing, qmGated, "clean_text", idCol,
-        cfg.shingleN, cfg.minJaccard, cfg.numHashes, cfg.rowsPerBand,
-        cfg.maxBucket, oldIndex, cfg.keepPreference))
-      // signature tiers: runIncremental's fold, stage for stage
-      val tierIdx = Map("image" -> imageIndex, "audio" -> audioIndex)
-      var sigStages =
-        Seq.empty[(String, DataFrame, DataFrame, DataFrame, DataFrame, DataFrame)]
-      var cur = deduped
-      signatureTiers(cfg).foreach { tier =>
-        val hashed = pin(tier.withHash(cur, tier.binaryCol, tier.workCol))
-        val clusters = pin(Dedup.duplicateClusters(Dedup.hashNearDupPairs(
-          hashed, tier.workCol, idCol, tier.maxHamming, cfg.maxBucket,
-          metricName = s"graft_${tier.label}_inctrace_cap")))
-        val hitIds = pin(hashed.select(col(idCol)).join(
-          Dedup.hashNearDupFilterAgainst(hashed, tier.workCol,
-            tierIdx(tier.label).get, tier.maxHamming).select(col(idCol)),
-          Seq(idCol), "left_anti"))
-        val taintedMembers = pin(clusters.join(
-            clusters.join(hitIds.withColumnRenamed(idCol, "id"), Seq("id"),
-              "left_semi").select("cluster").distinct(),
-            Seq("cluster"), "left_semi")
-          .select(col("id").as(idCol)))
-        val clean = hashed
-          .join(hitIds, Seq(idCol), "left_anti")
-          .join(taintedMembers, Seq(idCol), "left_anti")
-        val after = pin(cfg.keepPreference
-          .fold(Dedup.dropNearDuplicates(clean, idCol, clusters))(
-            Dedup.dropNearDuplicatesBy(clean, idCol, clusters, _))
-          .drop(tier.workCol))
-        sigStages :+= ((tier.label, cur, after, hitIds, taintedMembers, clusters))
-        cur = after
+      val stages = incrementalStages(standing, batch, textCol, idCol, cfg,
+        kit.hold, oldIndex, imageIndex, audioIndex, gifIndex, audioSegIndex)
+      kit.rows(stages, "batch", "normalize/quality/boilerplate") {
+        // incremental dedup drops, labeled by the first matching route
+        case (st, gated, dropped) if st.label == "dedup" =>
+          val digests = gated.select(col(idCol), md5(col("clean_text")).as("_digest"))
+          // (a) digest already standing
+          val exactStanding = pin(digests
+            .join(broadcast(dropped), Seq(idCol), "left_semi")
+            .join(standing.select(md5(col("clean_text")).as("_digest")).distinct(),
+              Seq("_digest"), "left_semi")
+            .select(col(idCol)))
+          // (b) digest twin within the batch — survivor is min-id, exact
+          // here (full-rerun semantics, unlike the stream's arrival order)
+          val unexplained0 = dropped.join(exactStanding, Seq(idCol), "left_anti")
+          val twin = pin(unexplained0
+            .join(digests, Seq(idCol))
+            .join(digests.groupBy("_digest").agg(min(col(idCol)).as("_trc_surv")),
+              Seq("_digest"))
+            .filter(col(idCol) =!= col("_trc_surv")))
+          // (c)/(d) near-dup routes: name the best-verifying standing doc
+          // when one exists; else the batch cluster verdict
+          val unexplained = pin(unexplained0
+            .join(twin.select(idCol), Seq(idCol), "left_anti"))
+          val nearStanding = pin(kit.standingNearest(gated, unexplained, standing))
+          // (d) rest of the dedup drops: batch near-dup cluster members —
+          // if a cluster member survived, name it; else the whole cluster
+          // was tainted by standing content (runIncremental's taint rule).
+          // Cluster the frame the operator clusters (batch EXACT-tier
+          // survivors, not all gated docs), and collapse to exactly ONE
+          // row per dropped id — band caps differ between this batch-only
+          // evidence pass and the operator's old+new-capped pass, so the
+          // topologies can diverge and a merged evidence cluster could
+          // otherwise name several survivors (min-id shown; the docstring's
+          // cap caveat covers a mislabeled ROUTE, never a duplicate row)
+          val exactSurvivors = gated
+            .join(exactStanding, Seq(idCol), "left_anti")
+            .join(twin.select(idCol), Seq(idCol), "left_anti")
+          val batchClusters = pin(Dedup.duplicateClusters(
+            Dedup.minhashJaccardPairs(exactSurvivors, "clean_text", idCol,
+              cfg.shingleN, cfg.minJaccard, cfg.numHashes, cfg.rowsPerBand,
+              cfg.maxBucket, metricName = "graft_inctrace_lsh_cap")))
+          Seq(kit.fixedRows(exactStanding, "exact_standing"),
+            twin.select(col(idCol), lit("exact").as("stage"),
+              concat(lit("exact duplicate of kept batch doc "), col("_trc_surv"))
+                .cast("string").as("detail")),
+            unexplained.join(nearStanding, Seq(idCol))
+              .select(col(idCol), lit("neardup").as("stage"),
+                concat(lit("near-dup of standing doc "), col("_trc_sid"),
+                  lit(" (jaccard "), col("_trc_j"), lit(")"))
+                  .cast("string").as("detail")),
+            kit.clusterSurvivor(
+                unexplained.join(nearStanding, Seq(idCol), "left_anti"),
+                batchClusters, st.out)
+              .groupBy(idCol)
+              .agg(min(col("_trc_surv")).as("_trc_surv"))
+              .select(col(idCol), lit("neardup").as("stage"),
+                coalesce(
+                  concat(lit("batch near-dup cluster survivor: "), col("_trc_surv")),
+                  lit("batch near-dup cluster tainted by standing content " +
+                    "(whole cluster dropped — transitive near-dup)"))
+                  .cast("string").as("detail")))
+        // signature tiers, three sub-reasons each
+        case (st, _, dropped) if st.hits.isDefined =>
+          val label = st.label
+          val missed = dropped.join(st.hits.get, Seq(idCol), "left_anti")
+          Seq(kit.stageRows(dropped.join(st.hits.get, Seq(idCol), "left_semi"),
+              label, lit(s"own $label signature within hamming of a standing " +
+                "signature (the index carries hashes, not ids)")),
+            kit.stageRows(missed.join(st.tainted.get, Seq(idCol), "left_semi"),
+              label, lit(s"member of a batch $label cluster tainted by a standing " +
+                "hit (transitive near-dup of standing content)")),
+            kit.survivorRows(
+              missed.join(st.tainted.get, Seq(idCol), "left_anti"), st, label))
       }
-      // the gif tier: same taint-rule fold, positional pair machinery
-      cfg.gifCol.foreach { gc =>
-        implicit val sp: org.apache.spark.sql.SparkSession = batch.sparkSession
-        val clusters = pin(Dedup.duplicateClusters(
-          gifTierPairs(cur, gc, idCol, cfg, "graft_gif_inctrace_cap")))
-        val hitIds = pin(cur.select(col(idCol)).join(
-          gifTierFilterAgainst(cur, gc, idCol, gifIndex.get, cfg)
-            .select(col(idCol)),
-          Seq(idCol), "left_anti"))
-        val taintedMembers = pin(clusters.join(
-            clusters.join(hitIds.withColumnRenamed(idCol, "id"), Seq("id"),
-              "left_semi").select("cluster").distinct(),
-            Seq("cluster"), "left_semi")
-          .select(col("id").as(idCol)))
-        val clean = cur
-          .join(hitIds, Seq(idCol), "left_anti")
-          .join(taintedMembers, Seq(idCol), "left_anti")
-        val after = pin(cfg.keepPreference
-          .fold(Dedup.dropNearDuplicates(clean, idCol, clusters))(
-            Dedup.dropNearDuplicatesBy(clean, idCol, clusters, _)))
-        sigStages :+= (("gif", cur, after, hitIds, taintedMembers, clusters))
-        cur = after
-      }
-      // the segmented-audio tier: same taint-rule fold, per-segment
-      // envelope fingerprints through the positional machinery
-      cfg.audioSegCol.foreach { ac =>
-        implicit val sp: org.apache.spark.sql.SparkSession = batch.sparkSession
-        val clusters = pin(Dedup.duplicateClusters(
-          Multimodal.audioNearDupPairsSegmented(cur, ac, idCol,
-            cfg.audioSegmentFrames, cfg.audioMaxSegments,
-            cfg.audioSegMaxHamming, cfg.audioMinSegmentMatches,
-            cfg.maxBucket, metricName = "graft_audioseg_inctrace_cap",
-            maxShift = cfg.audioSegMaxShift,
-            decoder = cfg.audioDecoder)))
-        val hitIds = pin(cur.select(col(idCol)).join(
-          Multimodal.audioNearDupFilterAgainst(cur, ac, idCol,
-              audioSegIndex.get, cfg.audioSegmentFrames,
-              cfg.audioMaxSegments, cfg.audioSegMaxHamming,
-              cfg.audioMinSegmentMatches, maxShift = cfg.audioSegMaxShift,
-              decoder = cfg.audioDecoder)
-            .select(col(idCol)),
-          Seq(idCol), "left_anti"))
-        val taintedMembers = pin(clusters.join(
-            clusters.join(hitIds.withColumnRenamed(idCol, "id"), Seq("id"),
-              "left_semi").select("cluster").distinct(),
-            Seq("cluster"), "left_semi")
-          .select(col("id").as(idCol)))
-        val clean = cur
-          .join(hitIds, Seq(idCol), "left_anti")
-          .join(taintedMembers, Seq(idCol), "left_anti")
-        val after = pin(cfg.keepPreference
-          .fold(Dedup.dropNearDuplicates(clean, idCol, clusters))(
-            Dedup.dropNearDuplicatesBy(clean, idCol, clusters, _)))
-        sigStages :+= (("audioseg", cur, after, hitIds, taintedMembers,
-          clusters))
-        cur = after
-      }
-      // back half, exactly decontaminateAndSample's order
-      val ngramGated = cfg.ngramBloom.fold(cur)(bytes =>
-        pin(Dedup.bloomNgramGate(cur, "clean_text", bytes,
-          cfg.ngramBloomN, cfg.ngramBloomMaxHits)))
-      val decontaminated = cfg.benchmark.fold(ngramGated)(bench =>
-        pin(Dedup.decontaminate(ngramGated, "clean_text", idCol,
-          bench.withColumn("_bclean", normOf(cfg)(col(cfg.benchTextCol))),
-          "_bclean", cfg.benchIdCol, cfg.shingleN, cfg.minContainment,
-          cfg.benchBloomFpp)))
-      val semDecon = cfg.benchEmb.fold(decontaminated) { bench =>
-        require(cfg.embCol.isDefined,
-          "benchEmb (semantic decontamination) needs cfg.embCol")
-        pin(if (cfg.benchEmbLarge)
-          Dedup.semanticDecontaminateLarge(decontaminated, cfg.embCol.get,
-            idCol, bench, cfg.benchEmbCol, cfg.benchMinCosine,
-            bands = cfg.bqBands, maxBucket = cfg.maxBucket)
-        else Dedup.semanticDecontaminate(decontaminated, cfg.embCol.get,
-          bench, cfg.benchEmbCol, cfg.benchMinCosine))
-      }
-      val sampled = cfg.sampleRate.fold(semDecon)(r =>
-        pin(Mixing.stratifiedSample(semDecon, idCol, r, salt = "corpusprep")))
-
-      // ---- boundaries + evidence, first drop wins ----
-      val inDocs = tIds(batch)
-      val out = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      out += stageRows(traced.exceptAll(inDocs), "absent",
-        lit("id not present in the batch frame"))
-      out += inDocs.exceptAll(tIds(spanGated))
-        .join(batch.select(col(idCol),
-          length(normOf(cfg)(col(textCol))).as("_trc_len"),
-          repViolationSuffix(cfg, col(textCol)).as("_trc_rv")),
-          Seq(idCol), "left")
-        .select(col(idCol), lit("gated").as("stage"),
-          concat(lit("failed normalize/quality/boilerplate gates (clean_len="),
-            coalesce(col("_trc_len").cast("string"), lit("null")),
-            lit(")"), coalesce(col("_trc_rv"), lit("")))
-            .cast("string").as("detail"))
-      if (cfg.lmModel.isDefined)
-        out += stageRows(tIds(spanGated).exceptAll(tIds(lmGated)), "lm",
-          lit(s"bigram log-prob below minLmLogProb=${cfg.minLmLogProb}"))
-      cfg.qualityModel.foreach { m =>
-        out += tIds(lmGated).exceptAll(tIds(qmGated))
-          .join(QualityModel.withQualityScore(
-              lmGated.select(col(idCol), col("clean_text")),
-              m, "clean_text", "_trc_qs"), Seq(idCol), "left")
-          .select(col(idCol), lit("qm").as("stage"),
-            concat(lit("quality score "),
-              coalesce(col("_trc_qs").cast("string"), lit("null")),
-              lit(s" below minQualityScore=${qmThr.get}"))
-              .cast("string").as("detail"))
-      }
-      // incremental dedup drops, labeled by the first matching route
-      val dedupDropped = pin(tIds(qmGated).exceptAll(tIds(deduped)))
-      val withDigest = qmGated
-        .join(broadcast(dedupDropped), Seq(idCol), "left_semi")
-        .select(col(idCol), md5(col("clean_text")).as("_digest"))
-      // (a) digest already standing
-      val standDig = standing.select(md5(col("clean_text")).as("_digest"))
-        .distinct()
-      val exactStanding = pin(withDigest
-        .join(standDig, Seq("_digest"), "left_semi").select(col(idCol)))
-      out += stageRows(exactStanding, "exact_standing",
-        lit("digest already in the standing corpus"))
-      // (b) digest twin within the batch — survivor is min-id, exact
-      // here (full-rerun semantics, unlike the stream's arrival order)
-      val stillUnexplained0 = dedupDropped.exceptAll(exactStanding)
-      val batchDigests = qmGated.select(col(idCol),
-        md5(col("clean_text")).as("_digest"))
-      val twin = pin(stillUnexplained0
-        .join(batchDigests, Seq(idCol))
-        .join(batchDigests
-            .groupBy("_digest").agg(min(col(idCol)).as("_trc_surv")),
-          Seq("_digest"))
-        .filter(col(idCol) =!= col("_trc_surv")))
-      out += twin.select(col(idCol), lit("exact").as("stage"),
-        concat(lit("exact duplicate of kept batch doc "), col("_trc_surv"))
-          .cast("string").as("detail"))
-      // (c)/(d) near-dup routes: name the best-verifying standing doc
-      // when one exists; else the batch cluster verdict
-      val stillUnexplained = pin(stillUnexplained0
-        .exceptAll(twin.select(idCol)))
-      val qSide = qmGated
-        .join(broadcast(stillUnexplained), Seq(idCol), "left_semi")
-        .select(col(idCol), col("clean_text"))
-        .withColumn("_qshs", Dedup.shingles(col("clean_text"), cfg.shingleN))
-        .withColumn("_qhs",
-          Dedup.minhashSigText(col("clean_text"), cfg.shingleN, cfg.numHashes))
-        .select(col(idCol), col("_qshs"), explode(array(Dedup.bandKeyCols(
-          i => element_at(col("_qhs"), i + 1),
-          cfg.numHashes, cfg.rowsPerBand): _*)).as("_band"))
-      val sSide = standing
-        .select(col(idCol).as("_trc_sid"), col("clean_text"))
-        .withColumn("_sshs", Dedup.shingles(col("clean_text"), cfg.shingleN))
-        .withColumn("_shs",
-          Dedup.minhashSigText(col("clean_text"), cfg.shingleN, cfg.numHashes))
-        .filter(col("_shs").isNotNull)
-        .select(col("_trc_sid"), col("_sshs"), explode(array(Dedup.bandKeyCols(
-          i => element_at(col("_shs"), i + 1),
-          cfg.numHashes, cfg.rowsPerBand): _*)).as("_band"))
-      val sharedSz = size(array_intersect(col("_qshs"), col("_sshs")))
-      val nearStanding = pin(qSide.join(sSide, Seq("_band"))
-        .withColumn("_trc_j", sharedSz.cast("double") /
-          (size(col("_qshs")) + size(col("_sshs")) - sharedSz))
-        .filter(col("_trc_j") >= cfg.minJaccard)
-        .groupBy(idCol)
-        // min_by over (-j, sid): max jaccard, ties broken to the MIN
-          // standing id — fully deterministic evidence (max_by alone
-          // is tie-nondeterministic, e.g. duplicate standing texts),
-          // which is what lets an oracle replay the survivor id
-          .agg(expr("min_by(_trc_sid, struct(-_trc_j, _trc_sid))")
-            .as("_trc_sid"),
-          round(max(col("_trc_j")), 4).as("_trc_j")))
-      out += stillUnexplained.join(nearStanding, Seq(idCol))
-        .select(col(idCol), lit("neardup").as("stage"),
-          concat(lit("near-dup of standing doc "), col("_trc_sid"),
-            lit(" (jaccard "), col("_trc_j"), lit(")"))
-            .cast("string").as("detail"))
-      // (d) rest of the dedup drops: batch near-dup cluster members —
-      // if a cluster member survived, name it; else the whole cluster
-      // was tainted by standing content (runIncremental's taint rule)
-      val clusterOnly = stillUnexplained
-        .join(nearStanding, Seq(idCol), "left_anti")
-      // cluster the frame the operator clusters (batch EXACT-tier
-      // survivors, not all gated docs), and collapse to exactly ONE
-      // row per dropped id — band caps differ between this batch-only
-      // evidence pass and the operator's old+new-capped pass, so the
-      // topologies can diverge and a merged evidence cluster could
-      // otherwise name several survivors (min-id shown; the docstring's
-      // cap caveat covers a mislabeled ROUTE, never a duplicate row)
-      val exactSurvivors = qmGated
-        .join(exactStanding, Seq(idCol), "left_anti")
-        .join(twin.select(idCol), Seq(idCol), "left_anti")
-      val batchClusters = pin(Dedup.duplicateClusters(
-        Dedup.minhashJaccardPairs(exactSurvivors, "clean_text", idCol,
-          cfg.shingleN, cfg.minJaccard, cfg.numHashes, cfg.rowsPerBand,
-          cfg.maxBucket, metricName = "graft_inctrace_lsh_cap")))
-      val cl = batchClusters.toDF("_trc_id", "_trc_cl")
-      val surv = cl
-        .join(deduped.select(col(idCol).as("_trc_id")), Seq("_trc_id"))
-        .select(col("_trc_cl"), col("_trc_id").as("_trc_surv"))
-      out += clusterOnly
-        .join(cl.withColumnRenamed("_trc_id", idCol), Seq(idCol), "left")
-        .join(surv, Seq("_trc_cl"), "left")
-        .groupBy(idCol)
-        .agg(min(col("_trc_surv")).as("_trc_surv"))
-        .select(col(idCol), lit("neardup").as("stage"),
-          coalesce(
-            concat(lit("batch near-dup cluster survivor: "), col("_trc_surv")),
-            lit("batch near-dup cluster tainted by standing content " +
-              "(whole cluster dropped — transitive near-dup)"))
-            .cast("string").as("detail"))
-      // signature tiers, three sub-reasons each
-      sigStages.foreach { case (label, before, after, hitIds, tainted, clusters) =>
-        val dropped = pin(tIds(before).exceptAll(tIds(after)))
-        val directs = dropped.join(hitIds, Seq(idCol), "left_semi")
-        out += stageRows(directs, label,
-          lit(s"own $label signature within hamming of a standing " +
-            "signature (the index carries hashes, not ids)"))
-        val taintedDropped = dropped
-          .join(hitIds, Seq(idCol), "left_anti")
-          .join(tainted.select(col(idCol)), Seq(idCol), "left_semi")
-        out += stageRows(taintedDropped, label,
-          lit(s"member of a batch $label cluster tainted by a standing " +
-            "hit (transitive near-dup of standing content)"))
-        val collapseDropped = dropped
-          .join(hitIds, Seq(idCol), "left_anti")
-          .join(tainted.select(col(idCol)), Seq(idCol), "left_anti")
-        val scl = clusters.toDF("_trc_id", "_trc_cl")
-        val ssurv = scl
-          .join(after.select(col(idCol).as("_trc_id")), Seq("_trc_id"))
-          .select(col("_trc_cl"), col("_trc_id").as("_trc_surv"))
-        out += collapseDropped
-          .join(scl.withColumnRenamed("_trc_id", idCol), Seq(idCol), "left")
-          .join(ssurv, Seq("_trc_cl"), "left")
-          .select(col(idCol), lit(label).as("stage"),
-            concat(lit(s"$label cluster survivor: "), col("_trc_surv"))
-              .cast("string").as("detail"))
-      }
-      if (cfg.ngramBloom.isDefined)
-        out += stageRows(tIds(cur).exceptAll(tIds(ngramGated)), "ngram",
-          lit(s"over ${cfg.ngramBloomMaxHits} benchmark n-gram Bloom hits"))
-      if (cfg.benchmark.isDefined)
-        out += stageRows(tIds(ngramGated).exceptAll(tIds(decontaminated)),
-          "decontam",
-          lit(s"benchmark ${cfg.shingleN}-gram containment >= ${cfg.minContainment}"))
-      if (cfg.benchEmb.isDefined)
-        out += stageRows(tIds(decontaminated).exceptAll(tIds(semDecon)),
-          "semdecontam",
-          lit(s"benchmark embedding cosine >= ${cfg.benchMinCosine}"))
-      if (cfg.sampleRate.isDefined)
-        out += tIds(semDecon).exceptAll(tIds(sampled))
-          .select(col(idCol), lit("sampled").as("stage"),
-            concat(lit("sample draw "),
-              round(Mixing.unitHash(col(idCol), "corpusprep"), 6),
-              lit(" fell outside the keep rate")).cast("string").as("detail"))
-      out += keptRows(tIds(sampled), batch, idCol, cfg)
-      out.reduce(_ unionByName _).localCheckpoint(true)
     } finally { kit.release() }
   }
 
-  /** Incremental prep: a NEW batch against a STANDING prepared
-    * corpus (run's output, which carries `clean_text`). The batch is
-    * normalized, gated and optionally PII-redacted exactly like
-    * `run`, then deduped against the standing corpus via
-    * `Dedup.dropIncrementalDuplicates` (exact + near tiers,
-    * full-rerun cluster semantics — the standing side is never
-    * re-clustered; pass `oldIndex` from `Dedup.writeDedupIndex` so
-    * it is never even re-hashed — build it with
-    * `Dedup.writeDedupIndex(standing, path, textCol = "clean_text")`
-    * so the index hashes the SAME column this method probes; a
-    * mismatched index fails the config check). The boilerplate gate's
-    * span census covers standing + batch, and `keepPreference`
-    * applies to pure-batch near-dup clusters. Ids must be unique
-    * ACROSS standing and batch — a re-crawled doc must carry a new
-    * id (or be diffed out first via VulDbDiff.keyedDiff).
-    * Decontamination and sampling apply to the surviving batch rows.
-    * Returns the batch survivors — the rows to APPEND to the
-    * standing corpus. */
-  def runIncremental(standing: DataFrame, batch: DataFrame,
-      textCol: String = "text", idCol: String = "doc_id",
-      cfg: Config = Config(),
-      oldIndex: Option[DataFrame] = None,
-      imageIndex: Option[DataFrame] = None,
-      audioIndex: Option[DataFrame] = None,
-      gifIndex: Option[DataFrame] = None,
-      audioSegIndex: Option[DataFrame] = None): DataFrame = {
+  /** runIncremental's stage list — `runIncremental` executes it,
+    * `prepTraceIncremental` replays it with each stage pinned. */
+  private def incrementalStages(standing: DataFrame, batch: DataFrame,
+      textCol: String, idCol: String, cfg: Config, hold: Hold,
+      oldIndex: Option[DataFrame], imageIndex: Option[DataFrame],
+      audioIndex: Option[DataFrame], gifIndex: Option[DataFrame],
+      audioSegIndex: Option[DataFrame]): Seq[Stage] = {
     require(!cfg.cutHotSpans,
       "cutHotSpans is a full-run option: the incremental path would have to " +
         "re-scan the standing corpus's text for the span census, defeating its " +
@@ -1909,115 +1506,108 @@ object CorpusPrep {
     require(audioSegIndex.isEmpty || cfg.audioSegCol.isDefined,
       "audioSegIndex without cfg.audioSegCol would be silently ignored — " +
         "set the segmented-audio column, or drop the index argument")
-    val gated = qmGate(lmGate(
-      normalizeAndGate(batch, textCol, idCol, cfg,
-        spanCorpus = if (cfg.maxHotSpans.isDefined) Some(standing) else None),
-      idCol, cfg), cfg, textCol)
-    val deduped = Dedup.dropIncrementalDuplicates(
-      standing, gated, "clean_text", idCol,
+    implicit val sp: org.apache.spark.sql.SparkSession = batch.sparkSession
+    val dedup = step("dedup", hold)(Dedup.dropIncrementalDuplicates(
+      standing, _, "clean_text", idCol,
       cfg.shingleN, cfg.minJaccard, cfg.numHashes, cfg.rowsPerBand,
-      cfg.maxBucket, oldIndex, cfg.keepPreference)
-    // signature tiers (image dHash, audio fingerprint), both halves
-    // of the incremental contract, with the text tier's
-    // TAINTED-CLUSTER rule: batch-internal clusters are computed
-    // over the FULL batch first, and a cluster with ANY member near
-    // a standing signature drops WHOLE (a transitive near-dup of
-    // standing content — X near standing, Y near X — must not
-    // survive just because Y itself clears the probe; this is
+      cfg.maxBucket, oldIndex, cfg.keepPreference))
+    // the media tiers, both halves of the incremental contract, with
+    // the text tier's TAINTED-CLUSTER rule: batch-internal clusters
+    // are computed over the FULL batch first, and a cluster with ANY
+    // member near the standing index drops WHOLE (a transitive
+    // near-dup of standing content — X near standing, Y near X — must
+    // not survive just because Y itself clears the probe; this is
     // exactly what run() over standing+batch would do). Untainted
-    // clusters then collapse under the run() survivor rule. The
-    // media decode is the dominant per-batch cost and feeds three
-    // consumers, so the hashed frame is pinned with localCheckpoint
-    // — safe here: runIncremental attaches no observe nodes below
-    // this stage (unlike run(), whose per-stage metrics forbid
-    // truncation).
-    val tierIdx = Map("image" -> imageIndex, "audio" -> audioIndex)
-    val signatured = signatureTiers(cfg).foldLeft(deduped) { (cur, tier) =>
-      val hashed = tier.withHash(cur, tier.binaryCol, tier.workCol)
-        .localCheckpoint()
-      val clusters = Dedup.duplicateClusters(Dedup.hashNearDupPairs(
-        hashed, tier.workCol, idCol, tier.maxHamming, cfg.maxBucket,
-        metricName = s"graft_${tier.label}_band_cap"))
+    // clusters then collapse under the run() survivor rule. The media
+    // decode is the dominant per-batch cost and feeds three consumers
+    // (pair search, standing probe, survivors), so the frame is held
+    // by `hold.media` — runIncremental's localCheckpoint is safe here:
+    // it attaches no observe nodes below this stage (unlike run(),
+    // whose per-stage metrics forbid truncation). The positional
+    // tiers (gif, audioseg) decode the batch twice (in-batch pairs +
+    // the standing probe; documented on Config.gifCol — still
+    // O(batch)). `hash` adds and drops a signature tier's work column.
+    def taint(label: String, hash: Option[SignatureTier],
+        pairs: DataFrame => DataFrame, probe: DataFrame => DataFrame
+    ): DataFrame => Stage = cur => {
+      val in = hold.media(hash.fold(cur)(t => t.withHash(cur, t.binaryCol, t.workCol)))
+      val clusters = hold.aux(Dedup.duplicateClusters(pairs(in)))
       // rows whose OWN hash is near standing (the direct hits)
-      val hitIds = hashed.select(col(idCol)).join(
-        Dedup.hashNearDupFilterAgainst(hashed, tier.workCol,
-          tierIdx(tier.label).get, tier.maxHamming).select(col(idCol)),
-        Seq(idCol), "left_anti")
+      val hits = hold.aux(in.select(col(idCol))
+        .join(probe(in).select(col(idCol)), Seq(idCol), "left_anti"))
       // every member of a cluster containing a hit
-      val taintedMembers = clusters.join(
-          clusters.join(hitIds.withColumnRenamed(idCol, "id"), Seq("id"),
+      val tainted = hold.aux(clusters.join(
+          clusters.join(hits.withColumnRenamed(idCol, "id"), Seq("id"),
             "left_semi").select("cluster").distinct(),
           Seq("cluster"), "left_semi")
-        .select(col("id").as(idCol))
-      val clean = hashed
-        .join(hitIds, Seq(idCol), "left_anti")
-        .join(taintedMembers, Seq(idCol), "left_anti")
-      cfg.keepPreference
-        .fold(Dedup.dropNearDuplicates(clean, idCol, clusters))(
-          Dedup.dropNearDuplicatesBy(clean, idCol, clusters, _))
-        .drop(tier.workCol)
+        .select(col("id").as(idCol)))
+      val kept = survivors(in
+        .join(hits, Seq(idCol), "left_anti")
+        .join(tainted, Seq(idCol), "left_anti"), idCol, clusters, cfg)
+      Stage(label, hold.stage(hash.fold(kept)(t => kept.drop(t.workCol)), label),
+        Some(clusters), Some(hits), Some(tainted))
     }
-    // video-like tier: the image/audio fold's taint rule applied to
-    // positional GIF frame hashes — batch-internal clusters first, a
-    // cluster with ANY member near the standing index drops WHOLE,
-    // untainted clusters collapse under the run() survivor rule. The
-    // batch decodes twice here (in-batch pairs + the standing probe;
-    // documented on Config.gifCol — still O(batch)); the input is
-    // pinned so the upstream text chain is not re-executed per
-    // consumer.
-    val gifTiered = cfg.gifCol.fold(signatured) { gc =>
-      implicit val sp: org.apache.spark.sql.SparkSession = batch.sparkSession
-      val pinned = signatured.localCheckpoint()
-      val clusters = Dedup.duplicateClusters(
-        gifTierPairs(pinned, gc, idCol, cfg, "graft_gif_band_cap"))
-      val hitIds = pinned.select(col(idCol)).join(
-        gifTierFilterAgainst(pinned, gc, idCol, gifIndex.get, cfg)
-          .select(col(idCol)),
-        Seq(idCol), "left_anti")
-      val taintedMembers = clusters.join(
-          clusters.join(hitIds.withColumnRenamed(idCol, "id"), Seq("id"),
-            "left_semi").select("cluster").distinct(),
-          Seq("cluster"), "left_semi")
-        .select(col("id").as(idCol))
-      val clean = pinned
-        .join(hitIds, Seq(idCol), "left_anti")
-        .join(taintedMembers, Seq(idCol), "left_anti")
-      cfg.keepPreference
-        .fold(Dedup.dropNearDuplicates(clean, idCol, clusters))(
-          Dedup.dropNearDuplicatesBy(clean, idCol, clusters, _))
-    }
-    // segmented-audio tier: the same taint-rule fold over per-segment
-    // envelope fingerprints and the positional standing probe
-    val audioSegTiered = cfg.audioSegCol.fold(gifTiered) { ac =>
-      implicit val sp: org.apache.spark.sql.SparkSession = batch.sparkSession
-      val pinned = gifTiered.localCheckpoint()
-      val clusters = Dedup.duplicateClusters(
-        Multimodal.audioNearDupPairsSegmented(pinned, ac, idCol,
+    val tierIdx = Map("image" -> imageIndex, "audio" -> audioIndex)
+    val media = signatureTiers(cfg).map(t => taint(t.label, Some(t),
+        Dedup.hashNearDupPairs(_, t.workCol, idCol, t.maxHamming, cfg.maxBucket,
+          metricName = s"graft_${t.label}_band_cap"),
+        Dedup.hashNearDupFilterAgainst(_, t.workCol, tierIdx(t.label).get,
+          t.maxHamming))) ++
+      cfg.gifCol.map(gc => taint("gif", None,
+        gifTierPairs(_, gc, idCol, cfg, "graft_gif_band_cap"),
+        gifTierFilterAgainst(_, gc, idCol, gifIndex.get, cfg))) ++
+      cfg.audioSegCol.map(ac => taint("audioseg", None,
+        Multimodal.audioNearDupPairsSegmented(_, ac, idCol,
           cfg.audioSegmentFrames, cfg.audioMaxSegments,
           cfg.audioSegMaxHamming, cfg.audioMinSegmentMatches,
           cfg.maxBucket, maxShift = cfg.audioSegMaxShift,
-          decoder = cfg.audioDecoder))
-      val hitIds = pinned.select(col(idCol)).join(
-        Multimodal.audioNearDupFilterAgainst(pinned, ac, idCol,
-            audioSegIndex.get, cfg.audioSegmentFrames,
-            cfg.audioMaxSegments, cfg.audioSegMaxHamming,
-            cfg.audioMinSegmentMatches, maxShift = cfg.audioSegMaxShift,
-            decoder = cfg.audioDecoder)
-          .select(col(idCol)),
-        Seq(idCol), "left_anti")
-      val taintedMembers = clusters.join(
-          clusters.join(hitIds.withColumnRenamed(idCol, "id"), Seq("id"),
-            "left_semi").select("cluster").distinct(),
-          Seq("cluster"), "left_semi")
-        .select(col("id").as(idCol))
-      val clean = pinned
-        .join(hitIds, Seq(idCol), "left_anti")
-        .join(taintedMembers, Seq(idCol), "left_anti")
-      cfg.keepPreference
-        .fold(Dedup.dropNearDuplicates(clean, idCol, clusters))(
-          Dedup.dropNearDuplicatesBy(clean, idCol, clusters, _))
-    }
-    decontaminateAndSample(audioSegTiered, idCol, cfg)
+          decoder = cfg.audioDecoder),
+        Multimodal.audioNearDupFilterAgainst(_, ac, idCol,
+          audioSegIndex.get, cfg.audioSegmentFrames,
+          cfg.audioMaxSegments, cfg.audioSegMaxHamming,
+          cfg.audioMinSegmentMatches, maxShift = cfg.audioSegMaxShift,
+          decoder = cfg.audioDecoder)))
+    chain(batch, gateSteps(textCol, idCol, cfg, hold,
+        spanCorpus = if (cfg.maxHotSpans.isDefined) Some(standing) else None) ++
+      (dedup +: media) ++ backSteps(idCol, cfg, hold))
+  }
+
+  /** Incremental prep: a NEW batch against a STANDING prepared
+    * corpus (run's output, which carries `clean_text`). The batch is
+    * normalized, gated and optionally PII-redacted exactly like
+    * `run`, then deduped against the standing corpus via
+    * `Dedup.dropIncrementalDuplicates` (exact + near tiers,
+    * full-rerun cluster semantics — the standing side is never
+    * re-clustered; pass `oldIndex` from `Dedup.writeDedupIndex` so
+    * it is never even re-hashed — build it with
+    * `Dedup.writeDedupIndex(standing, path, textCol = "clean_text")`
+    * so the index hashes the SAME column this method probes; a
+    * mismatched index fails the config check). The boilerplate gate's
+    * span census covers standing + batch, and `keepPreference`
+    * applies to pure-batch near-dup clusters. Ids must be unique
+    * ACROSS standing and batch — a re-crawled doc must carry a new
+    * id (or be diffed out first via VulDbDiff.keyedDiff).
+    * Decontamination and sampling apply to the surviving batch rows.
+    * Returns the batch survivors — the rows to APPEND to the
+    * standing corpus.
+    *
+    * Only the back half publishes observed metrics: the front reads
+    * the standing corpus, whose own run() stages may carry the same
+    * metric names, and a name defined twice in one plan fails
+    * analysis. */
+  def runIncremental(standing: DataFrame, batch: DataFrame,
+      textCol: String = "text", idCol: String = "doc_id",
+      cfg: Config = Config(),
+      oldIndex: Option[DataFrame] = None,
+      imageIndex: Option[DataFrame] = None,
+      audioIndex: Option[DataFrame] = None,
+      gifIndex: Option[DataFrame] = None,
+      audioSegIndex: Option[DataFrame] = None): DataFrame = {
+    val back = Set("ngram", "decontam", "semdecontam", "sampled")
+    val hold = Hold((df, label) => if (back(label)) observed(cfg)(df, label) else df,
+      media = _.localCheckpoint())
+    incrementalStages(standing, batch, textCol, idCol, cfg, hold, oldIndex,
+      imageIndex, audioIndex, gifIndex, audioSegIndex).last.out
   }
 
   /** SEMANTIC standing-corpus stage for incremental flows — the

@@ -21,7 +21,10 @@ package graft.tools
   * the most recent recording context. Inputs must be same-shape
   * (full sweeps): merging a subset artifact would record fake
   * missing-query gaps, so inputs missing >10% of the union are
-  * refused. */
+  * refused. They must also share one timed action
+  * (TimeQueries.recordedAction — a missing `action` field reads as
+  * `count`), which
+  * the output records in its own `action` field. */
 object MergeFloors {
   val MaterialFloorSec = 1.0
   val MaterialDeltaSec = 0.75
@@ -57,6 +60,18 @@ object MergeFloors {
     Merged(floors.result(), spreads.result())
   }
 
+  /** The one action every input was recorded under, as (file,
+    * action) pairs; refuses a mix — a floor is only comparable with
+    * runs timed the same way. */
+  def commonAction(recorded: Seq[(String, String)]): String = {
+    val actions = recorded.map(_._2).distinct
+    require(actions.size == 1,
+      "inputs were recorded under different bench actions (" +
+        recorded.map { case (f, a) => s"$f: $a" }.mkString(", ") +
+        ") — floors merge only sweeps of one action")
+    actions.head
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
       "usage: MergeFloors <out.json> <benchArtifact1> <benchArtifact2>...")
@@ -83,6 +98,7 @@ object MergeFloors {
         s"$f covers ${qs.size} of $union queries — looks like a SUBSET " +
           "artifact; floors merge only full sweeps (same-shape rule)")
     }
+    val action = commonAction(parsed.map(p => p._1 -> TimeQueries.recordedAction(p._2)))
     val m = merge(parsed.map(p => (p._3, p._4)))
     val last = parsed.last._2.asInstanceOf[
       com.fasterxml.jackson.databind.node.ObjectNode]
@@ -94,6 +110,7 @@ object MergeFloors {
     }
     put("queries", m.floors)
     put("spread", m.spread)
+    last.put("action", action)
     last.put("floors_note", s"MergeFloors over ${files.size} full sweeps: " +
       "floor=min; spread=max(in-run bands, cross-window ratio when " +
       s"floor>=${MaterialFloorSec}s and delta>=${MaterialDeltaSec}s)")

@@ -93,6 +93,25 @@ object TimeQueries {
     require(floors.nonEmpty, s"no numeric floors found in $file")
     (floors, bands)
   }
+
+  /** The action a Bench artifact or floors file was recorded under:
+    * its `action` field, else `count` — the action of every artifact
+    * written before the field existed, `bench_floors.json` included. */
+  def recordedAction(root: com.fasterxml.jackson.databind.JsonNode): String =
+    Option(root.get("action")).map(_.asText).getOrElse("count")
+
+  /** Refuses a floors file recorded under another timed action than
+    * `runAction`: a noop-sink run gated on `.count()` floors measures
+    * the action change, not the plan. */
+  def requireAction(file: String, runAction: String): Unit = {
+    val recorded = recordedAction(
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(new java.io.File(file)))
+    require(recorded == runAction,
+      s"$file was recorded under the '$recorded' bench action but this run " +
+        s"times '$runAction' — re-record the floors under '$runAction', or " +
+        s"run with GRAFT_BENCH_ACTION=$recorded")
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: TimeQueries <sfDir> [--assert-floor=<benchJson>] " +
@@ -112,6 +131,7 @@ object TimeQueries {
     val unknownOpts = opts.filterNot(o =>
       o.startsWith("--assert-floor=") || o.startsWith("--factor="))
     require(unknownOpts.isEmpty, s"unknown options: ${unknownOpts.mkString(" ")}")
+    floorsFile.foreach(requireAction(_, graft.BenchAction.name))
 
     val spark = graft.GraftSession.build("graft-timeq")
     spark.sparkContext.setLogLevel("ERROR")

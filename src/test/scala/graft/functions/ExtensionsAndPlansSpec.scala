@@ -25,6 +25,18 @@ class ExtensionsAndPlansSpec extends SparkSpecBase {
     assert(e2.eval(null) == 1)
   }
 
+  test("GraftExtensions refuses version_cmp with the wrong arity") {
+    import org.apache.spark.sql.GraftBridge
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val registry = GraftBridge.functionRegistryOf(new GraftExtensions)
+    val e = intercept[IllegalArgumentException] {
+      registry.lookupFunction(new FunctionIdentifier("version_cmp"),
+        Seq(Literal("1.0")))
+    }
+    assert(e.getMessage == "version_cmp requires exactly 2 arguments, got 1")
+  }
+
   test("GraftExtensions injects repetition_stats") {
     import org.apache.spark.sql.GraftBridge
     import org.apache.spark.sql.catalyst.FunctionIdentifier

@@ -1419,4 +1419,68 @@ class CorpusPrepSpec extends SparkSpecBase {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(viaIx == kept)
   }
+
+  test("the three traces stay within their job budgets") {
+    // the fixtures of the three trace tests above (the stream one with
+    // its image index in memory). Each budget sits below the job count
+    // of the traces that found first drops with one exceptAll per
+    // stage boundary (46 / 59 / 96); one first-drop aggregate runs
+    // 38 / 41 / 87
+    val docs = Seq(
+      (1L, "The  Quick Brown Fox Jumps Over The Lazy Dog Again Today"),
+      (2L, "the quick brown fox jumps over the lazy dog again today"),
+      (3L, "the quick brown fox jumps over the lazy dog again tonight"),
+      (4L, "completely different content that survives every stage fine"),
+      (5L, "too short"),
+      (6L, "spam spam spam spam spam spam spam spam spam spam spam spam"),
+      (7L, "held out benchmark passage that must never reach training data")
+    ).toDF("doc_id", "text")
+    val bench = Seq((100L,
+      "held out benchmark passage that must never reach training data"))
+      .toDF("doc_id", "text")
+    val cfg = CorpusPrep.Config(minChars = 20, maxRepetition = 0.5,
+      minJaccard = 0.5, benchmark = Some(bench), minContainment = 0.5,
+      sampleRate = Some(lit(0.6)))
+    val (batchRows, batchJobs) = countJobs(CorpusPrep.prepTrace(docs,
+      Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L, 99L).toDF("id"), cfg = cfg).collect())
+    assert(batchRows.length == 8)
+
+    val standingRaw = Seq(
+      (101L, "the quick brown fox jumps over the lazy dog again today"),
+      (102L, "completely different standing content that stays resident here"))
+      .toDF("doc_id", "text")
+    val standing = CorpusPrep.run(standingRaw,
+      cfg = CorpusPrep.Config(minChars = 20, maxRepetition = 0.9))
+      .localCheckpoint(true)
+    val img = Multimodal.syntheticGrayBmp(9, 8,
+      Array.tabulate(8 * 9)(i => (i * 3) % 256))
+    val imageIndex = Dedup.hashBandIndex(
+      Multimodal.withPerceptualHash(
+        Seq((101L, img)).toDF("doc_id", "img"), "img", "ph")(spark), "ph")
+      .localCheckpoint(true)
+    val nullImg = null.asInstanceOf[Array[Byte]]
+    val batch = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog again today", nullImg),
+      (2L, "the quick brown fox jumps over the lazy dog again tonight", nullImg),
+      (3L, "too short", nullImg),
+      (4L, "entirely novel intake document with original prose inside", nullImg),
+      (6L, "novel words here but the picture matches standing content", img)
+    ).toDF("doc_id", "text", "img")
+    val sCfg = CorpusPrep.Config(minChars = 20, maxRepetition = 0.9,
+      minJaccard = 0.5, imageCol = Some("img"), sampleRate = Some(lit(0.6)))
+    val ids = Seq(1L, 2L, 3L, 4L, 6L, 99L).toDF("id")
+    val (streamRows, streamJobs) = countJobs(CorpusPrep.prepTraceStream(batch,
+      ids, "text", cfg = sCfg, standing = Some(standing),
+      imageIndex = Some(imageIndex)).collect())
+    assert(streamRows.length == 6)
+    val (incRows, incJobs) = countJobs(CorpusPrep.prepTraceIncremental(
+      standing, batch, ids, cfg = sCfg, imageIndex = Some(imageIndex)).collect())
+    assert(incRows.length == 6)
+
+    info(s"jobs: prepTrace $batchJobs, prepTraceStream $streamJobs, " +
+      s"prepTraceIncremental $incJobs")
+    assert(batchJobs <= 42, s"prepTrace ran $batchJobs jobs")
+    assert(streamJobs <= 50, s"prepTraceStream ran $streamJobs jobs")
+    assert(incJobs <= 91, s"prepTraceIncremental ran $incJobs jobs")
+  }
 }

@@ -37,4 +37,33 @@ class MergeFloorsSpec extends AnyFunSuite {
     assert(again.floors("q_heavy") == 4.0)
     assert(math.abs(again.spread("q_heavy") - 8.6 / 4.0) < 1e-9)
   }
+
+  test("main: same-action inputs merge and the output records the action; mixed actions refuse") {
+    val dir = java.nio.file.Files.createTempDirectory("merge_floors_")
+    def artifact(name: String, body: String): String = {
+      val f = dir.resolve(name)
+      java.nio.file.Files.write(f, body.getBytes("UTF-8"))
+      f.toString
+    }
+    val a = artifact("a.json", """{"action":"noop","queries":{"q_a":1.0}}""")
+    val b = artifact("b.json", """{"action":"noop","queries":{"q_a":2.0}}""")
+    // written before the field existed: recorded under count
+    val old = artifact("old.json", """{"queries":{"q_a":1.5}}""")
+    val out = dir.resolve("out.json").toString
+    try {
+      MergeFloors.main(Array(out, a, b))
+      val merged = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(new java.io.File(out))
+      assert(merged.get("action").asText == "noop")
+      assert(merged.get("queries").get("q_a").asDouble == 1.0)
+      val e = intercept[IllegalArgumentException] {
+        MergeFloors.main(Array(out, old, a))
+      }
+      assert(e.getMessage.contains("old.json: count") &&
+        e.getMessage.contains("a.json: noop"), e.getMessage)
+    } finally {
+      dir.toFile.listFiles().foreach(_.delete())
+      java.nio.file.Files.delete(dir)
+    }
+  }
 }

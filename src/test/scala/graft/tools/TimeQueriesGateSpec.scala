@@ -83,4 +83,27 @@ class TimeQueriesGateSpec extends AnyFunSuite {
     java.nio.file.Files.delete(f)
     java.nio.file.Files.delete(flat)
   }
+
+  test("requireAction: the gate refuses floors recorded under another bench action; a missing field reads as count") {
+    val noop = java.nio.file.Files.createTempFile("floors_noop_", ".json")
+    java.nio.file.Files.write(noop,
+      """{"action":"noop","queries":{"q_a":1.0}}""".getBytes("UTF-8"))
+    val legacy = java.nio.file.Files.createTempFile("floors_legacy_", ".json")
+    java.nio.file.Files.write(legacy, """{"queries":{"q_a":1.0}}""".getBytes("UTF-8"))
+    try {
+      TimeQueries.requireAction(noop.toString, "noop")
+      TimeQueries.requireAction(legacy.toString, "count")
+      val e = intercept[IllegalArgumentException] {
+        TimeQueries.requireAction(legacy.toString, "noop")
+      }
+      assert(e.getMessage.contains("'count'") && e.getMessage.contains("'noop'"),
+        e.getMessage)
+      intercept[IllegalArgumentException] {
+        TimeQueries.requireAction(noop.toString, "count")
+      }
+    } finally {
+      java.nio.file.Files.delete(noop)
+      java.nio.file.Files.delete(legacy)
+    }
+  }
 }

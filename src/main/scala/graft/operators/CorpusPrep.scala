@@ -142,19 +142,18 @@ object CorpusPrep {
     audioCol: Option[String] = None,
     audioMaxHamming: Int = 3,
     // VIDEO-LIKE (animated GIF) near-dup tier: an opaque binary
-    // multi-frame column. Decode-at-ingest per-frame dHash
-    // (Multimodal.gifFrameHashes — only 8 bytes per sampled frame
-    // ever shuffle) + the POSITIONAL banded pair search
-    // (Multimodal.gifNearDupPairs): two animations collapse when
-    // >= gifMinFrameMatches same-position sampled frames are within
+    // multi-frame column. Decode-at-ingest per-frame dHash + the
+    // POSITIONAL banded pair search (Multimodal's sampler path — only
+    // 8 bytes per sampled frame ever shuffle): two animations collapse
+    // when >= gifMinFrameMatches same-position sampled frames are within
     // gifMaxHamming bits (adaptively every-position-of-equal-length
     // for shorter animations), clusters under the SAME survivor rule
     // as every other tier. run() clusters in-corpus (after the
     // image/audio tiers); runIncremental additionally needs the
     // PREBUILT positional standing index (`gifIndex` —
     // Multimodal.gifHashBandIndex built once, or the PERSISTED form:
-    // writeGifHashBandIndex + readGifHashBandIndex, the fourth
-    // standing-index family — decode-once across runs, takedown
+    // writeGifHashBandIndex + readGifHashBandIndex, the hash-band
+    // family's positional layout — decode-once across runs, takedown
     // lifecycle included) so the per-batch
     // decode follows the batch — note the incremental tier decodes
     // the batch TWICE (in-batch pairs + the standing probe; still
@@ -166,9 +165,9 @@ object CorpusPrep {
     gifNFrames: Int = 4,
     gifMaxHamming: Int = 3,
     gifMinFrameMatches: Int = 3,
-    // bounded alignment tolerance (Multimodal.gifNearDupPairs /
-    // gifNearDupFilterAgainst maxShift): a frame may match the other
-    // side's frames within +-gifMaxShift sampled positions — the
+    // bounded alignment tolerance (the positional tiers' maxShift):
+    // a frame may match the other side's frames within
+    // +-gifMaxShift sampled positions — the
     // trimmed-intro/re-cut case — at (2s+1)x candidate cost; 0 keeps
     // the exact-positional default
     gifMaxShift: Int = 0,
@@ -178,11 +177,10 @@ object CorpusPrep {
     // an external compressed-codec implementation) and the whole tier
     // rides it unchanged
     gifDecoder: Multimodal.FrameDecoder = Multimodal.GifFrameDecoder,
-    // the SAMPLING-PLAN seam (round 17): false = uniform frame
-    // positions (the GIF default); true = the container's own
-    // sync-sample table (Multimodal.videoFrameHashes — keyframe
-    // ORDINAL positions), so re-cuts of the same footage align by
-    // I-frame sequence. Payloads without a BMFF keyframe index fall
+    // the SAMPLING-PLAN seam: false = uniform frame positions (the
+    // GIF default); true = the container's own sync-sample table
+    // (keyframe ORDINAL positions), so re-cuts of the same footage
+    // align by I-frame sequence. Payloads without a BMFF keyframe index fall
     // back to uniform sampling, so a mixed corpus still runs in one
     // pass. The same plan MUST be used on both sides of an
     // incremental run: pair a keyframe-sampled gifIndex
@@ -192,8 +190,8 @@ object CorpusPrep {
     gifKeyframeSampling: Boolean = false,
     // SEGMENTED audio near-dup tier (audioSegCol — may be the SAME
     // binary column as audioCol): fixed-duration per-segment envelope
-    // fingerprints (Multimodal.audioSegmentHashes) through the SAME
-    // positional machinery as the GIF tier — catches trimmed /
+    // fingerprints through the SAME positional machinery as the GIF
+    // tier (an audio-segment sampler) — catches trimmed /
     // prepended / re-cut clips that the whole-clip audioCol
     // fingerprint cannot see (its 65 windows divide the WHOLE clip,
     // so any length change moves every window). Two clips collapse
@@ -217,8 +215,8 @@ object CorpusPrep {
     audioSegMaxHamming: Int = 3,
     audioMinSegmentMatches: Int = 3,
     audioSegMaxShift: Int = 0,
-    // the PCM decode seam (gifDecoder's audio twin): default is the
-    // JDK codec chain (WAV/AIFF/AU; PCM/µ-law/A-law — the JDK ships
+    // the PCM decode seam (gifDecoder's audio counterpart): default is
+    // the JDK codec chain (WAV/AIFF/AU; PCM/µ-law/A-law — the JDK ships
     // no MP3/AAC codec); pass an external implementation (or
     // Multimodal.PcmDecoders.firstOf for mixed corpora) and BOTH
     // audio tiers — whole-clip audioCol and segmented audioSegCol —
@@ -406,6 +404,34 @@ object CorpusPrep {
       "audio", "_aud_fp",
       (df, c, o) => Multimodal.withAudioFingerprint(df, c, o,
         decoder = cfg.audioDecoder)(df.sparkSession)))
+  ).flatten
+
+  /** A positional media tier cfg enables — per-position signatures
+    * (GIF/video frames, audio segments) that a single-hash tier cannot
+    * compare: its label, binary column, sampler (the frame tier's is
+    * chosen here, once: the container's keyframes when
+    * `gifKeyframeSampling`, else uniform frame positions), match
+    * arguments and pair metric. */
+  private final case class PositionalTier(label: String, binaryCol: String,
+      sampler: Multimodal.Sampler, maxHamming: Int, minMatches: Int,
+      maxShift: Int, metric: String) {
+    def pairs(idCol: String, maxBucket: Int)(df: DataFrame): DataFrame =
+      Multimodal.positionalPairs(sampler, df, binaryCol, idCol, maxHamming,
+        minMatches, maxBucket, metric, maxShift)(df.sparkSession)
+  }
+
+  private def positionalTiers(cfg: Config): Seq[PositionalTier] = Seq(
+    cfg.gifCol.map(gc => PositionalTier("gif", gc,
+      if (cfg.gifKeyframeSampling)
+        new Multimodal.Keyframes(cfg.gifNFrames, cfg.gifDecoder)
+      else new Multimodal.UniformFrames(cfg.gifNFrames, cfg.gifDecoder),
+      cfg.gifMaxHamming, cfg.gifMinFrameMatches, cfg.gifMaxShift,
+      "graft_gif_band_cap")),
+    cfg.audioSegCol.map(ac => PositionalTier("audioseg", ac,
+      new Multimodal.AudioSegments(cfg.audioSegmentFrames,
+        cfg.audioMaxSegments, cfg.audioDecoder),
+      cfg.audioSegMaxHamming, cfg.audioMinSegmentMatches,
+      cfg.audioSegMaxShift, "graft_audio_seg_band_cap"))
   ).flatten
 
   /** One stage of a batch facade's chain: the label its metric and
@@ -718,38 +744,6 @@ object CorpusPrep {
     }
   }
 
-  /** The frame tier's pair search under cfg's sampling plan — ONE
-    * dispatch for both batch chains, so uniform and keyframe
-    * sampling cannot diverge in tier semantics (same positional
-    * core either way; only the frames' provenance differs). */
-  private def gifTierPairs(df: DataFrame, gc: String, idCol: String,
-      cfg: Config, metricName: String): DataFrame = {
-    implicit val sp: org.apache.spark.sql.SparkSession = df.sparkSession
-    if (cfg.gifKeyframeSampling)
-      Multimodal.videoNearDupPairs(df, gc, idCol, cfg.gifNFrames,
-        cfg.gifMaxHamming, cfg.gifMinFrameMatches, cfg.maxBucket,
-        metricName, cfg.gifMaxShift, cfg.gifDecoder)
-    else
-      Multimodal.gifNearDupPairs(df, gc, idCol, cfg.gifNFrames,
-        cfg.gifMaxHamming, cfg.gifMinFrameMatches, cfg.maxBucket,
-        metricName, cfg.gifMaxShift, cfg.gifDecoder)
-  }
-
-  /** The frame tier's standing-index probe under cfg's sampling
-    * plan — `gifTierPairs`' filter half. */
-  private def gifTierFilterAgainst(df: DataFrame, gc: String,
-      idCol: String, index: DataFrame, cfg: Config): DataFrame = {
-    implicit val sp: org.apache.spark.sql.SparkSession = df.sparkSession
-    if (cfg.gifKeyframeSampling)
-      Multimodal.videoNearDupFilterAgainst(df, gc, idCol, index,
-        cfg.gifNFrames, cfg.gifMaxHamming, cfg.gifMinFrameMatches,
-        decoder = cfg.gifDecoder, maxShift = cfg.gifMaxShift)
-    else
-      Multimodal.gifNearDupFilterAgainst(df, gc, idCol, index,
-        cfg.gifNFrames, cfg.gifMaxHamming, cfg.gifMinFrameMatches,
-        decoder = cfg.gifDecoder, maxShift = cfg.gifMaxShift)
-  }
-
   /** Violated fine repetition gates for a dropped doc, as a trace
     * detail suffix ("; violated dup_line_frac>0.2,...") — empty when
     * the knob is off or when the raw text is NULL. Computed from the
@@ -1057,19 +1051,11 @@ object CorpusPrep {
         Dedup.hashNearDupPairs(t.withHash(cur, t.binaryCol, t.workCol),
           t.workCol, idCol, t.maxHamming, cfg.maxBucket,
           metricName = s"graft_${t.label}_band_cap"))) ++
-      // video-like tier (animated GIF): positional frame-hash clusters
-      // — the single-hash image tier would hash only a cover frame
-      cfg.gifCol.map(gc => collapse("gif")(
-        gifTierPairs(_, gc, idCol, cfg, "graft_gif_band_cap"))) ++
-      // segmented-audio tier: the positional machinery over
-      // fixed-duration segment fingerprints — trimmed/re-cut clips the
-      // whole-clip audioCol tier cannot see
-      cfg.audioSegCol.map(ac => collapse("audioseg")(
-        Multimodal.audioNearDupPairsSegmented(_, ac, idCol,
-          cfg.audioSegmentFrames, cfg.audioMaxSegments,
-          cfg.audioSegMaxHamming, cfg.audioMinSegmentMatches,
-          cfg.maxBucket, maxShift = cfg.audioSegMaxShift,
-          decoder = cfg.audioDecoder)))
+      // positional tiers: animations/videos by frame (the single-hash
+      // image tier would hash only a cover frame), audio by segment
+      // (trimmed/re-cut clips the whole-clip audioCol tier cannot see)
+      positionalTiers(cfg).map(t =>
+        collapse(t.label)(t.pairs(idCol, cfg.maxBucket)))
     chain(docs, gateSteps(textCol, idCol, cfg, hold, None) ++ (exact +: dedup) ++
       backSteps(idCol, cfg, hold))
   }
@@ -1310,13 +1296,8 @@ object CorpusPrep {
               before.join(broadcast(dropped), Seq(idCol), "left_semi"),
               tier.binaryCol, tier.workCol)
             .select(col(idCol), col(tier.workCol).cast("long").as("_h"))
-          val joined = (0 until 4).foldLeft(hashed) { (c, k) =>
-            val side = tierIdx(label).get.filter(col("_k") === k)
-              .select(col("_band").as(s"_b$k"), col("_hs").as(s"_cand$k"))
-            c.join(broadcast(side),
-              col(s"_b$k") <=> shiftrightunsigned(col("_h"), 16 * k)
-                .bitwiseAND(lit(65535L)), "left")
-          }
+          val joined = Dedup.probeBands(hashed, tierIdx(label).get, None,
+            broadcastIndex = true)
           val minHam = least((0 until 4).map(k =>
             array_min(transform(coalesce(col(s"_cand$k"),
               array().cast("array<long>")),
@@ -1548,25 +1529,17 @@ object CorpusPrep {
         Some(clusters), Some(hits), Some(tainted))
     }
     val tierIdx = Map("image" -> imageIndex, "audio" -> audioIndex)
+    val posIdx = Map("gif" -> gifIndex, "audioseg" -> audioSegIndex)
     val media = signatureTiers(cfg).map(t => taint(t.label, Some(t),
         Dedup.hashNearDupPairs(_, t.workCol, idCol, t.maxHamming, cfg.maxBucket,
           metricName = s"graft_${t.label}_band_cap"),
         Dedup.hashNearDupFilterAgainst(_, t.workCol, tierIdx(t.label).get,
           t.maxHamming))) ++
-      cfg.gifCol.map(gc => taint("gif", None,
-        gifTierPairs(_, gc, idCol, cfg, "graft_gif_band_cap"),
-        gifTierFilterAgainst(_, gc, idCol, gifIndex.get, cfg))) ++
-      cfg.audioSegCol.map(ac => taint("audioseg", None,
-        Multimodal.audioNearDupPairsSegmented(_, ac, idCol,
-          cfg.audioSegmentFrames, cfg.audioMaxSegments,
-          cfg.audioSegMaxHamming, cfg.audioMinSegmentMatches,
-          cfg.maxBucket, maxShift = cfg.audioSegMaxShift,
-          decoder = cfg.audioDecoder),
-        Multimodal.audioNearDupFilterAgainst(_, ac, idCol,
-          audioSegIndex.get, cfg.audioSegmentFrames,
-          cfg.audioMaxSegments, cfg.audioSegMaxHamming,
-          cfg.audioMinSegmentMatches, maxShift = cfg.audioSegMaxShift,
-          decoder = cfg.audioDecoder)))
+      positionalTiers(cfg).map(t => taint(t.label, None,
+        t.pairs(idCol, cfg.maxBucket),
+        Multimodal.positionalFilter(s"runIncremental ${t.label} tier",
+          t.sampler, _, t.binaryCol, idCol, posIdx(t.label).get,
+          t.maxHamming, t.minMatches, broadcastIndex = true, t.maxShift)))
     chain(batch, gateSteps(textCol, idCol, cfg, hold,
         spanCorpus = if (cfg.maxHotSpans.isDefined) Some(standing) else None) ++
       (dedup +: media) ++ backSteps(idCol, cfg, hold))

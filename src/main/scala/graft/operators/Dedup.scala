@@ -1328,6 +1328,74 @@ object Dedup {
   def simhash64Text(text: Column): Column =
     graft.functions.TextExpressions.simhash64_text(text)
 
+  /** The band layout of every 64-bit signature family (SimHash text,
+    * image dHash, audio fingerprint, the positional frame and segment
+    * signatures): four 16-bit slots, slot `k` holding bits
+    * [16k, 16k+16) of `h`. Two signatures within 3 bits agree on at
+    * least one slot (pigeonhole), which is what makes every band
+    * search and probe here exact at `maxHamming <= 3`. */
+  private[operators] def hashBand(h: Column, k: Int): Column =
+    shiftrightunsigned(h, 16 * k).bitwiseAND(lit(65535L))
+
+  /** `h`'s four band slots as `posexplode` rows (slot, band value). */
+  private[operators] def explodeBands(h: Column): Column =
+    posexplode(array((0 until 4).map(hashBand(h, _)): _*))
+
+  /** `ids` + the non-null signatures of `hashCol` as long `_h` — the
+    * classic layout's signature frame. */
+  private def signatures(df: DataFrame, hashCol: String,
+      ids: Column*): DataFrame =
+    df.select(ids :+ col(hashCol).cast("long").as("_h"): _*)
+      .filter(col("_h").isNotNull)
+
+  /** The in-memory probe artifact of every hash-band layout: `sig`'s
+    * (posCols..., `_h`) rows explode into band rows, over-cap bands
+    * drop whole (`HotKeys.cap`, observed drops), and each
+    * (posCols..., `_k`, `_band`) collects its candidate hashes as
+    * `_hs`. `posCols` is `Nil` for the classic layout and
+    * `Seq("sample_pos")` for the positional one, whose probes only
+    * ever compare same-position signatures. */
+  private[operators] def bandIndex(sig: DataFrame, posCols: Seq[String],
+      maxBucket: Int, metricName: String): DataFrame = {
+    val keys = posCols ++ Seq("_k", "_band")
+    val bands = sig
+      .select(posCols.map(col) ++ Seq(col("_h"), explodeBands(col("_h"))): _*)
+      .toDF(posCols ++ Seq("_h", "_k", "_band"): _*)
+    HotKeys.cap(bands, keys.map(col), maxBucket, minPerKey = 1,
+        metricName = metricName)
+      .groupBy(keys.head, keys.tail: _*)
+      .agg(collect_list("_h").as("_hs"))
+  }
+
+  /** The four-slot probe join every hash-band probe runs: `probe`
+    * (carrying a long `_h`) left-joins, per slot `k`, the index's
+    * candidate list for its own band value as `_cand$k` (null when the
+    * band has none). For the positional layout `posCol` names the
+    * probe column that must also equal the index's `sample_pos`.
+    * `broadcastIndex` hints the index to every executor — right
+    * whenever the capped index fits memory; pass false for an index
+    * over billions of signatures and the joins take Spark's own
+    * strategy. Adds the `_b$k`/`_cand$k` (and `_p$k`) working
+    * columns. */
+  private[operators] def probeBands(probe: DataFrame, index: DataFrame,
+      posCol: Option[String], broadcastIndex: Boolean): DataFrame =
+    (0 until 4).foldLeft(probe) { (cur, k) =>
+      val side = index.filter(col("_k") === k).select(
+        posCol.map(_ => col("sample_pos").as(s"_p$k")).toSeq ++
+          Seq(col("_band").as(s"_b$k"), col("_hs").as(s"_cand$k")): _*)
+      val onBand = col(s"_b$k") <=> hashBand(col("_h"), k)
+      cur.join(if (broadcastIndex) broadcast(side) else side,
+        posCol.fold(onBand)(p => col(s"_p$k") === col(p) && onBand), "left")
+    }
+
+  /** After `probeBands`: does any candidate sit within `maxHamming`
+    * bits of the row's `_h`. */
+  private[operators] def bandHit(maxHamming: Int): Column =
+    (0 until 4).map(k =>
+        coalesce(exists(col(s"_cand$k"),
+          h => bit_count(h.bitwiseXOR(col("_h"))) <= maxHamming), lit(false)))
+      .reduce(_ || _)
+
   /** Hamming-banded near-dup pairs over ANY 64-bit signature column
     * (simhash64, perceptual image hash, audio fingerprint...): the
     * four 16-bit blocks are band keys — pigeonhole guarantees EXACT
@@ -1341,12 +1409,8 @@ object Dedup {
       maxHamming: Int = 3, maxBucket: Int = HotKeys.DefaultBucketCap,
       metricName: String = "graft_hash_band_cap"): DataFrame = {
     require(maxHamming >= 0, s"maxHamming must be >= 0, got $maxHamming")
-    val base = df.select(col(idCol).as("_id"), col(hashCol).cast("long").as("_h"))
-      .filter(col("_h").isNotNull)
-    val bands = base.select(
-      col("_id"), col("_h"),
-      posexplode(array((0 until 4).map(k =>
-        shiftrightunsigned(col("_h"), 16 * k).bitwiseAND(lit(65535L))): _*)))
+    val bands = signatures(df, hashCol, col(idCol).as("_id"))
+      .select(col("_id"), col("_h"), explodeBands(col("_h")))
       .toDF("_id", "_h", "k", "band")
     // spill-safe band-keyed sort-merge self-join (see
     // Similarity.pairsInBuckets); `id_a < id_b` orients pairs and
@@ -1384,18 +1448,8 @@ object Dedup {
     * and facades. */
   def hashBandIndex(standing: DataFrame, hashCol: String,
       maxBucket: Int = HotKeys.DefaultBucketCap,
-      metricName: String = "graft_hash_index_cap"): DataFrame = {
-    val bands = standing
-      .select(col(hashCol).cast("long").as("_h"))
-      .filter(col("_h").isNotNull)
-      .select(col("_h"), posexplode(array((0 until 4).map(k =>
-        shiftrightunsigned(col("_h"), 16 * k).bitwiseAND(lit(65535L))): _*)))
-      .toDF("_h", "_k", "_band")
-    HotKeys.cap(bands, Seq(col("_k"), col("_band")), maxBucket,
-        minPerKey = 1, metricName = metricName)
-      .groupBy("_k", "_band")
-      .agg(collect_list("_h").as("_hs"))
-  }
+      metricName: String = "graft_hash_index_cap"): DataFrame =
+    bandIndex(signatures(standing, hashCol), Nil, maxBucket, metricName)
 
   /** Drop rows whose signature sits within `maxHamming` of ANY
     * standing signature — the batch-vs-standing (and STREAM-vs-
@@ -1436,31 +1490,18 @@ object Dedup {
       .intersect(Seq("_h") ++ (0 until 4).flatMap(k => Seq(s"_b$k", s"_cand$k")))
     require(clash.isEmpty,
       s"input columns ${clash.mkString(",")} collide with hashNearDupFilterAgainst's working names")
-    val withH = df.withColumn("_h", col(hashCol).cast("long"))
-    val joined = (0 until 4).foldLeft(withH) { (cur, k) =>
-      val side = index.filter(col("_k") === k)
-        .select(col("_band").as(s"_b$k"), col("_hs").as(s"_cand$k"))
-      cur.join(
-        if (broadcastIndex) broadcast(side) else side,
-        col(s"_b$k") <=> shiftrightunsigned(col("_h"), 16 * k)
-          .bitwiseAND(lit(65535L)),
-        "left")
-    }
-    val hit = (0 until 4).map(k =>
-        coalesce(exists(col(s"_cand$k"),
-          h => bit_count(h.bitwiseXOR(col("_h"))) <= maxHamming), lit(false)))
-      .reduce(_ || _)
-    joined
-      .filter(col("_h").isNull || !hit)
+    probeBands(df.withColumn("_h", col(hashCol).cast("long")), index, None,
+        broadcastIndex)
+      .filter(col("_h").isNull || !bandHit(maxHamming))
       .drop("_h" +: (0 until 4).flatMap(k => Seq(s"_b$k", s"_cand$k")): _*)
   }
 
   // ------------------------------------------------------------------
-  // Persisted hash-band index with the full deletion lifecycle — the
-  // third standing-index family (image dHash / audio fingerprint /
-  // SimHash text; the POSITIONAL GIF variant in Multimodal is the
-  // fourth, sharing these cores generalized over a sample_pos
-  // column) brought up to the BM25/IVF takedown contract:
+  // Persisted hash-band index with the full deletion lifecycle, for
+  // both layouts: classic (image dHash / audio fingerprint / SimHash
+  // text) and positional (the `Multimodal` sampler tiers, whose rows
+  // also carry `sample_pos`; the `*Frame` cores take the position
+  // columns as `posCols`). Same takedown contract as BM25 and IVF:
   // tombstone deletes applied by every read immediately, material
   // removal + snapshot-safe tombstone clearing at compaction, and
   // telemetry from the artifact alone. The lock, version swap and
@@ -1529,20 +1570,20 @@ object Dedup {
     // the collision guard must fire BEFORE the frame prep: selecting
     // idCol next to hashCol.as("_h") with idCol == "_h" would die as
     // an ambiguous-column AnalysisException instead of this refusal
+    requireIdCol(idCol)
+    writeHashBandIndexFrame(signatures(standing, hashCol, col(idCol)), idCol,
+      Nil, hashCol, path, maxBucket, metricName, outFiles)
+  }
+
+  private def requireIdCol(idCol: String): Unit =
     require(!Set("_k", "_band", "_h", "_hs", "sample_pos").contains(idCol),
       s"idCol '$idCol' collides with the family's internal/reserved column " +
         "names (sample_pos is the positional layout's key)")
-    val base = standing
-      .select(col(idCol), col(hashCol).cast("long").as("_h"))
-      .filter(col("_h").isNotNull)
-    writeHashBandIndexFrame(base, idCol, Nil, hashCol, path, maxBucket,
-      metricName, outFiles)
-  }
 
   /** Family-shared write core over a PREPARED signature frame —
-    * (idCol, posCols..., `_h`) — so the POSITIONAL (GIF) variant
-    * (`Multimodal.writeGifHashBandIndex`, which keys bands by sampled
-    * frame position as well) runs the exact same reset / cap /
+    * (idCol, posCols..., `_h`) — so the POSITIONAL layout (the
+    * `Multimodal` sampler tiers, which key bands by sampled
+    * position as well) runs the exact same reset / cap /
     * versioned-write / pointer / meta machinery as the classic
     * single-hash family: `posCols` is empty for the classic layout
     * and `Seq("sample_pos")` for the positional one. Everything
@@ -1552,9 +1593,7 @@ object Dedup {
       idCol: String, posCols: Seq[String], hashColName: String,
       path: String, maxBucket: Int, metricName: String,
       outFiles: Int, sampleCap: Long = -1L): Unit = {
-    require(!Set("_k", "_band", "_h", "_hs", "sample_pos").contains(idCol),
-      s"idCol '$idCol' collides with the family's internal/reserved column " +
-        "names (sample_pos is the positional layout's key)")
+    requireIdCol(idCol)
     require(outFiles >= 1, s"outFiles must be >= 1, got $outFiles")
     val spark = base.sparkSession
     val fs = StandingIndex.fs(spark, path)
@@ -1636,10 +1675,8 @@ object Dedup {
     // positional (GIF) layout so a probe only ever compares
     // same-position frames
     val bandKeys = posCols.map(col) ++ Seq(col("_k"), col("_band"))
-    val bands = base.select(Seq(col(idCol)) ++ posCols.map(col) ++ Seq(
-        col("_h"),
-        posexplode(array((0 until 4).map(k =>
-          shiftrightunsigned(col("_h"), 16 * k).bitwiseAND(lit(65535L))): _*))): _*)
+    val bands = base.select(Seq(col(idCol)) ++ posCols.map(col) ++
+        Seq(col("_h"), explodeBands(col("_h"))): _*)
       .toDF(Seq(idCol) ++ posCols ++ Seq("_h", "_k", "_band"): _*)
       .select(Seq(col("_k"), col("_band")) ++ posCols.map(col) ++
         Seq(col(idCol), col("_h")): _*)
@@ -1775,6 +1812,30 @@ object Dedup {
       path: String): DataFrame =
     readHashBandIndexFrame(spark, path, Nil)
 
+  /** The served version's rows, refused unless the artifact's layout
+    * is `posCols`' — SCHEMA-DERIVED, not meta-derived, so the check
+    * holds in the crash-after-pointer no-meta state too. A mix-up
+    * would silently merge candidate lists across positions (or probe
+    * a phantom position key). */
+  private def currentBands(spark: org.apache.spark.sql.SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, path: String,
+      posCols: Seq[String]): DataFrame = {
+    val data = spark.read.parquet(currentHashIndexDir(fs, path))
+    val missing = posCols.filterNot(data.columns.contains)
+    require(missing.isEmpty,
+      s"index at $path does not carry position column(s) " +
+        s"${missing.mkString(", ")} — it is a classic hash-band index; " +
+        "read or grow it with Dedup.readHashBandIndex / rebuildHashBandIndex")
+    require(posCols.nonEmpty || !data.columns.contains("sample_pos"),
+      s"index at $path carries a sample_pos column — it is a POSITIONAL " +
+        "index; read or grow it through its tier's Multimodal entry points " +
+        "(e.g. readGifHashBandIndex / rebuildGifHashBandIndex) — or, if " +
+        "this is a pre-r15 classic index whose idCol was literally named " +
+        "sample_pos (a name now reserved family-wide), rebuild it under a " +
+        "different id column name")
+    data
+  }
+
   /** Family-shared read core: resolve the version, apply tombstones,
     * re-collect candidate lists keyed by (posCols..., `_k`, `_band`).
     * The family check is SCHEMA-DERIVED, not meta-derived — probes
@@ -1788,21 +1849,7 @@ object Dedup {
       path: String, posCols: Seq[String],
       expectSampleCap: Option[Long] = None): DataFrame = {
     val fs = StandingIndex.fs(spark, path)
-    val data = spark.read.parquet(currentHashIndexDir(fs, path))
-    val missing = posCols.filterNot(data.columns.contains)
-    require(missing.isEmpty,
-      s"index at $path does not carry position column(s) " +
-        s"${missing.mkString(", ")} — it is a classic hash-band index; " +
-        "read it with Dedup.readHashBandIndex")
-    if (posCols.isEmpty)
-      require(!data.columns.contains("sample_pos"),
-        s"index at $path carries a sample_pos column — it is a POSITIONAL " +
-          "(GIF) index; reading it here would merge candidate lists " +
-          "across frame positions. Read it with " +
-          "Multimodal.readGifHashBandIndex (or, if this is a pre-r15 " +
-          "classic index whose idCol was literally named sample_pos — a " +
-          "name now reserved family-wide — rebuild it under a different " +
-          "id column name)")
+    val data = currentBands(spark, fs, path, posCols)
     // sampling-width guard (positional family): a probe built at a
     // different nFrames than the index would compare DIFFERENT frames
     // per position — silent mixed sampling. Validated against
@@ -1965,21 +2012,17 @@ object Dedup {
       outFiles: Int = 4): Unit = {
     // same eager guard as writeHashBandIndex: refuse before the frame
     // prep's select can die ambiguous
-    require(!Set("_k", "_band", "_h", "_hs", "sample_pos").contains(idCol),
-      s"idCol '$idCol' collides with the family's internal/reserved column " +
-        "names (sample_pos is the positional layout's key)")
-    val newSig = newDocs
-      .select(col(idCol), col(hashCol).cast("long").as("_h"))
-      .filter(col("_h").isNotNull)
-    rebuildHashBandIndexFrame(spark, path, newSig, idCol, Nil, maxBucket,
+    requireIdCol(idCol)
+    rebuildHashBandIndexFrame(spark, path,
+      signatures(newDocs, hashCol, col(idCol)), idCol, Nil, maxBucket,
       metricName, outFiles, hashCol)
   }
 
   /** Family-shared growth-rebuild core over a PREPARED new-signature
     * frame — (idCol, posCols..., `_h`) — the exact machinery of
-    * `rebuildHashBandIndex`, with the positional (GIF) layout
-    * reached through `Multimodal.rebuildGifHashBandIndex` (which
-    * decodes the new batch's frames first). The reconstructed
+    * `rebuildHashBandIndex`, with the positional layout reached
+    * through the `Multimodal` sampler tiers' rebuilds (which decode
+    * the new batch's signatures first). The reconstructed
     * surviving frame carries the position columns straight from the
     * artifact's own rows, so growth keys bands identically to the
     * build. The family check is schema-derived like the read side's:
@@ -2028,17 +2071,7 @@ object Dedup {
     // on rebuildHashBandIndex)
     val stats = StandingIndex.rewrite(fs, path, "bands_v", None,
         growth = true) { (dir, tombSnapshot) =>
-      val data = spark.read.parquet(currentHashIndexDir(fs, path))
-      val missing = posCols.filterNot(data.columns.contains)
-      require(missing.isEmpty,
-        s"index at $path does not carry position column(s) " +
-          s"${missing.mkString(", ")} — it is a classic hash-band index; " +
-          "grow it with Dedup.rebuildHashBandIndex")
-      if (posCols.isEmpty)
-        require(!data.columns.contains("sample_pos"),
-          s"index at $path carries a sample_pos column — it is a " +
-            "POSITIONAL (GIF) index; grow it with " +
-            "Multimodal.rebuildGifHashBandIndex")
+      val data = currentBands(spark, fs, path, posCols)
       val sigCols = Seq(col(idCol)) ++ posCols.map(col) :+ col("_h")
       val unioned = StandingIndex.withoutTombstones(data, tombSnapshot)
         .select(sigCols: _*)

@@ -116,22 +116,6 @@ object IndexMaintenance {
       signal: String, compact: Boolean, reasons: Seq[String],
       error: Option[String])
 
-  /** Detect which standing-index family wrote a root, from the layout
-    * alone: hash-band indexes are versioned from birth (`bands_vN`),
-    * BM25 carries its `df`/`meta` table dirs, IVF carries `index_vN`
-    * after a compaction or `cid=...` list partitions while flat. */
-  private def detectFamily(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(p)) return None
-    val names = fs.listStatus(p).map(_.getPath.getName).toSet
-    if (names.exists(_.startsWith("bands_v"))) Some("hashband")
-    else if (names.contains("df") && names.contains("meta")) Some("bm25")
-    else if (names.exists(_.startsWith("index_v")) ||
-        names.exists(_.startsWith("cid="))) Some("ivf")
-    else None
-  }
-
   /** The daily-cron shape this object's scaladoc promises, as one
     * call: map a set of index roots (family auto-detected from the
     * on-disk layout) through stats → healthOf → logHealth and return
@@ -145,48 +129,52 @@ object IndexMaintenance {
   def healthSweep(spark: org.apache.spark.sql.SparkSession,
       paths: Seq[String],
       p: CompactPolicy = CompactPolicy()): org.apache.spark.sql.DataFrame = {
-    val rows = paths.map { path =>
+    import spark.implicits._
+    sweep(spark, paths, p).map(_._1).toDF()
+  }
+
+  /** `healthSweep`'s rows, each with the family detected at its path. */
+  private def sweep(spark: org.apache.spark.sql.SparkSession,
+      paths: Seq[String],
+      p: CompactPolicy): Seq[(SweepRow, Option[StandingIndex.Family])] =
+    paths.map { path =>
       // the WHOLE per-path body is guarded — detectFamily's listing
       // (ACL denial, unreachable filesystem) and even Path parsing
       // (malformed URI) fail per-path, or one bad root would kill
       // the report for every healthy index
       var fam = "unknown"
       try {
-        val fs = StandingIndex.fs(spark, path)
-        detectFamily(fs, path) match {
+        StandingIndex.detectFamily(StandingIndex.fs(spark, path), path) match {
           case None =>
-            SweepRow(path, fam, "unknown", "", compact = false, Nil,
+            (SweepRow(path, fam, "unknown", "", compact = false, Nil,
               Some("unrecognized layout — not a graft index root " +
-                "(or the dir is missing)"))
+                "(or the dir is missing)")), None)
           case Some(f) =>
-            fam = f
-            val (h, layout, signal) = fam match {
-              case "hashband" =>
+            fam = f.name
+            val (h, layout, signal) = f match {
+              case StandingIndex.HashBand =>
                 val st = Dedup.hashBandIndexStats(spark, path)
                 (healthOf(st),
                   if (st.posCol.nonEmpty) "positional" else "classic",
                   st.hashCol)
-              case "bm25" =>
+              case StandingIndex.Bm25 =>
                 (healthOf(TextStats.bm25IndexStats(spark, path)), "bm25", "")
-              case _ =>
+              case StandingIndex.Ivf =>
                 (healthOf(Similarity.indexStats(spark, path)), "ivf", "")
             }
             val adv = logHealth(h, p)
-            SweepRow(path, fam, layout, signal, adv.compact, adv.reasons,
-              None)
+            (SweepRow(path, fam, layout, signal, adv.compact, adv.reasons,
+              None), Some(f))
         }
       } catch {
         case e: Exception =>
           org.slf4j.LoggerFactory.getLogger("graft.metrics")
             .warn(s"graft_index_health family=$fam dir=$path " +
               s"UNREADABLE: ${e.getMessage}")
-          SweepRow(path, fam, "unknown", "", compact = false, Nil,
-            Some(Option(e.getMessage).getOrElse(e.getClass.getName)))
+          (SweepRow(path, fam, "unknown", "", compact = false, Nil,
+            Some(Option(e.getMessage).getOrElse(e.getClass.getName))), None)
       }
     }
-    import spark.implicits._
-    rows.toDF()
-  }
 
   /** Family-dispatched compaction — the ACT half of the maintenance
     * story (`healthSweep` says WHICH roots to compact; this runs the
@@ -202,8 +190,8 @@ object IndexMaintenance {
     * detected family. */
   def compactNow(spark: org.apache.spark.sql.SparkSession,
       path: String): String = {
-    detectFamily(StandingIndex.fs(spark, path), path) match {
-      case Some(fam) => compactAs(spark, path, fam); fam
+    StandingIndex.detectFamily(StandingIndex.fs(spark, path), path) match {
+      case Some(fam) => compactAs(spark, path, fam); fam.name
       case None => throw new IllegalArgumentException(
         s"$path is not a recognizable graft index root (unknown layout) — " +
           "refusing to compact a guess; pass a root written by " +
@@ -214,19 +202,12 @@ object IndexMaintenance {
 
   /** Dispatch with the family already known — the sweep detected it
     * one filesystem listing ago; re-detecting per flagged root would
-    * pay a redundant remote listing each on a fleet pass. Unknown
-    * family strings REFUSE (a wildcard falling through to one
-    * family's compaction would run a destructive version rewrite
-    * against the wrong layout the day a fourth detectable family is
-    * added here but forgotten below). */
+    * pay a redundant remote listing each on a fleet pass. */
   private def compactAs(spark: org.apache.spark.sql.SparkSession,
-      path: String, family: String): Unit = family match {
-    case "hashband" => Dedup.compactHashBandIndex(spark, path)
-    case "bm25" => TextStats.compactBm25Index(spark, path)
-    case "ivf" => Similarity.compactIndex(spark, path)
-    case other => throw new IllegalArgumentException(
-      s"no compaction dispatch for family '$other' at $path — " +
-        "detectFamily and compactAs are out of sync; refusing to guess")
+      path: String, family: StandingIndex.Family): Unit = family match {
+    case StandingIndex.HashBand => Dedup.compactHashBandIndex(spark, path)
+    case StandingIndex.Bm25 => TextStats.compactBm25Index(spark, path)
+    case StandingIndex.Ivf => Similarity.compactIndex(spark, path)
   }
 
   /** The WHOLE daily-cron body as one call: sweep the roots, compact
@@ -284,23 +265,19 @@ object IndexMaintenance {
           .makeQualified(hp).toString
       } catch { case _: Exception => raw }
     }.distinct
-    val before = healthSweep(spark, normed, p).collect()
+    val before = sweep(spark, normed, p)
     // the act budget, spent in report order
-    val flaggedOrder = before.collect {
-      case r if r.getAs[Boolean]("compact") => r.getAs[String]("path")
-    }.toSeq
-    val actSet = flaggedOrder.take(maxActions).toSet
-    val deferredSet = flaggedOrder.drop(maxActions).toSet
+    val flagged = before.collect { case (r, Some(f)) if r.compact => r.path -> f }
+    val act = flagged.take(maxActions)
+    val deferredSet = flagged.drop(maxActions).map(_._1).toSet
     deferredSet.foreach(path => log.warn(
       s"graft_index_health dir=$path DEFERRED: flagged but over " +
         s"maxActions=$maxActions this pass"))
     // path -> (compaction ran to completion, action-phase error)
-    val acted: Map[String, (Boolean, Option[String])] = before.map { r =>
-      val path = r.getAs[String]("path")
-      if (!actSet.contains(path)) path -> ((false, Option.empty[String]))
-      else {
+    val acted: Map[String, (Boolean, Option[String])] = act.map {
+      case (path, fam) =>
         try {
-          compactAs(spark, path, r.getAs[String]("family"))
+          compactAs(spark, path, fam)
           path -> ((true, Option.empty[String]))
         } catch { case e: Exception =>
           log.warn(s"graft_index_health dir=$path COMPACT FAILED: " +
@@ -308,39 +285,27 @@ object IndexMaintenance {
           path -> ((false, Some(Option(e.getMessage).getOrElse(
             e.getClass.getName))))
         }
-      }
     }.toMap
     // re-sweep everything the action phase TOUCHED (ran OR failed
     // mid-flight): untouched rows' verdicts are already current, and
     // a second stats pass over them is waste — deferred roots are
     // untouched by construction
-    val touched = before.collect {
-      case r if actSet.contains(r.getAs[String]("path")) =>
-        r.getAs[String]("path")
-    }.toSeq
-    val after = healthSweep(spark, touched, p).collect()
-      .map(r => r.getAs[String]("path") -> r).toMap
+    val after = sweep(spark, act.map(_._1), p)
+      .map { case (r, _) => r.path -> r }.toMap
     import spark.implicits._
-    before.map { r =>
-      val path = r.getAs[String]("path")
-      val famBefore = r.getAs[String]("family")
-      val layoutBefore = r.getAs[String]("layout")
-      val sigBefore = r.getAs[String]("signal")
-      val deferred = deferredSet.contains(path)
-      val (didCompact, actErr) = acted(path)
-      after.get(path) match {
+    before.map { case (r, _) =>
+      val deferred = deferredSet.contains(r.path)
+      val (didCompact, actErr) = acted.getOrElse(r.path, (false, None))
+      after.get(r.path) match {
         case None => // never acted on: the first sweep's row stands
-          (path, famBefore, layoutBefore, sigBefore,
-            r.getAs[Boolean]("compact"), r.getSeq[String](
-              r.fieldIndex("reasons")), didCompact, deferred,
-            actErr.orElse(Option(r.getAs[String]("error"))))
-        case Some(cur) if cur.getAs[String]("error") != null =>
+          (r.path, r.family, r.layout, r.signal, r.compact, r.reasons,
+            didCompact, deferred, actErr.orElse(r.error))
+        case Some(cur) if cur.error.isDefined =>
           // post-action re-sweep errored: verdict unknowable — keep
           // the family the first sweep detected, surface the error
-          (path, famBefore, layoutBefore, sigBefore, false,
-            Seq.empty[String], didCompact, deferred,
-            actErr.orElse(Option(cur.getAs[String]("error"))))
-        case Some(cur) if didCompact && cur.getAs[Boolean]("compact") =>
+          (r.path, r.family, r.layout, r.signal, false, Seq.empty[String],
+            didCompact, deferred, actErr.orElse(cur.error))
+        case Some(cur) if didCompact && cur.compact =>
           // ran to completion, verdict did NOT clear: the policy
           // would re-fire every pass with no progress — surface it
           // instead of letting the cron churn silently. The message
@@ -351,10 +316,9 @@ object IndexMaintenance {
           // the write fan-out, a delete racing the re-sweep) is the
           // operator's to read from the reasons, and a transient
           // re-fire clears itself on the next pass.
-          val reasons = cur.getSeq[String](cur.fieldIndex("reasons"))
-          val fam = cur.getAs[String]("family")
           val diag =
-            if (fam == "hashband" && reasons.exists(_.contains("tombstonedRows")))
+            if (cur.family == StandingIndex.HashBand.name &&
+                cur.reasons.exists(_.contains("tombstonedRows")))
               " — a fully-tombstoned hash-band index compacts as a " +
                 "documented no-op: if this persists across passes, " +
                 "rebuild the index (its write entry point's root reset) " +
@@ -364,20 +328,16 @@ object IndexMaintenance {
                 "maxStripes below the write fan-out re-fires forever) " +
                 "and whether a racing delete re-tripped the signal " +
                 "(clears next pass)"
-          val msg = s"compaction ran but did not clear the $fam verdict (" +
-            reasons.mkString("; ") + ")" + diag
-          log.warn(s"graft_index_health dir=$path NON-CONVERGENT: $msg")
-          (path, cur.getAs[String]("family"), cur.getAs[String]("layout"),
-            cur.getAs[String]("signal"), true,
-            cur.getSeq[String](cur.fieldIndex("reasons")), didCompact,
-            deferred, Some(msg): Option[String])
+          val msg = s"compaction ran but did not clear the ${cur.family} " +
+            "verdict (" + cur.reasons.mkString("; ") + ")" + diag
+          log.warn(s"graft_index_health dir=${r.path} NON-CONVERGENT: $msg")
+          (r.path, cur.family, cur.layout, cur.signal, true, cur.reasons,
+            didCompact, deferred, Some(msg): Option[String])
         case Some(cur) =>
-          (path, cur.getAs[String]("family"), cur.getAs[String]("layout"),
-            cur.getAs[String]("signal"), cur.getAs[Boolean]("compact"),
-            cur.getSeq[String](cur.fieldIndex("reasons")), didCompact,
-            deferred, actErr.orElse(Option(cur.getAs[String]("error"))))
+          (r.path, cur.family, cur.layout, cur.signal, cur.compact,
+            cur.reasons, didCompact, deferred, actErr.orElse(cur.error))
       }
-    }.toSeq
+    }
       .toDF("path", "family", "layout", "signal", "compact", "reasons",
         "compacted", "deferred", "error")
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StringType}
 
@@ -2635,10 +2635,6 @@ object Multimodal {
     } catch { case scala.util.control.NonFatal(_) => Vector.empty }
   }
 
-  private def foldGifFrames[T](b: Array[Byte], nFrames: Int)(
-      extract: (Int, Int, Int, java.awt.image.BufferedImage) => T): Vector[T] =
-    foldFrames(b, nFrames, GifFrameDecoder)(extract)
-
   /** `foldFrames` with the sampling plan taken from the container's
     * sync-sample table (first indexed video track): up to `nFrames`
     * evenly spaced KEYFRAMES decode, `pos` is the keyframe ordinal
@@ -2699,6 +2695,82 @@ object Multimodal {
     }(Encoders.row(outSchema))
   }
 
+  // ------------------------------------------------------------------
+  // POSITIONAL signature tiers: animations and videos compared frame
+  // by frame, audio compared segment by segment. Each document is one
+  // 64-bit signature per sampled POSITION (`sample_pos`), and two
+  // documents match when enough same-position signatures are within
+  // `maxHamming` bits. The tiers differ only in their `Sampler` —
+  // uniform frames, keyframes or audio segments; the pair search,
+  // in-memory index, standing probe, micro-batch intake and the
+  // persisted index's write/read/rebuild are written once below, over
+  // `Dedup`'s band layout with `posCols = Seq("sample_pos")`.
+  // ------------------------------------------------------------------
+
+  /** How a positional tier samples a payload. Every case turns
+    * payload rows into one row per sampled position (`hashes`, with
+    * the document's own position `count`) and names its WIDTH: the
+    * parameter two sides must share for positions to mean the same
+    * thing. An index records its width (`_meta.sample_cap` on disk,
+    * `_hs` column metadata in memory), and every probe, read and
+    * growth refuses a mismatch; `widthWord` names it in those
+    * refusals. `cap` is the argument (name, value) bounding how many
+    * positions one payload contributes — the bound on `minMatches`
+    * (named `matchArg`) and `maxShift`. The cases run their range
+    * checks at construction, on the driver, so a bad parameter fails
+    * before any job starts or any standing index is reset. */
+  private[operators] sealed abstract class Sampler(val width: Long,
+      val widthWord: String, val cap: (String, Int), val matchArg: String)
+      extends Serializable {
+    /** `df`'s columns + `sample_pos` + the signature `outCol` (+ the
+      * sampler's own bookkeeping columns); payloads with nothing to
+      * sample emit no rows. */
+    def hashes(df: DataFrame, binaryCol: String, outCol: String)(
+        implicit spark: SparkSession): DataFrame
+    def count: Column
+  }
+
+  /** Frame sampling: the dHash of up to `nFrames` frames per payload
+    * (`gifFrameHashes` / `videoFrameHashes`); the width is `nFrames`. */
+  private[operators] sealed abstract class FrameSampler(val nFrames: Int,
+      val decoder: FrameDecoder, val keyframes: Boolean)
+      extends Sampler(nFrames.toLong, "sample width", ("nFrames", nFrames),
+        "minFrameMatches") {
+    require(nFrames > 0, s"nFrames must be > 0, got $nFrames")
+    def hashes(df: DataFrame, binaryCol: String, outCol: String)(
+        implicit spark: SparkSession): DataFrame =
+      frameHashes(df, binaryCol, outCol, this)
+    def count: Column = least(lit(nFrames), col("n_frames")).cast("long")
+  }
+
+  /** Evenly spaced frames; `sample_pos` is the rank among them. */
+  private[operators] final class UniformFrames(nFrames: Int,
+      decoder: FrameDecoder) extends FrameSampler(nFrames, decoder, false)
+
+  /** Evenly spaced KEYFRAMES from the container's sync-sample table;
+    * `sample_pos` is the keyframe ordinal. No keyframe index falls
+    * back to uniform sampling. Same width as `UniformFrames`, other
+    * provenance: an index keeps one sampling plan per root. */
+  private[operators] final class Keyframes(nFrames: Int,
+      decoder: FrameDecoder) extends FrameSampler(nFrames, decoder, true)
+
+  /** Fixed-duration audio segments (`audioSegmentHashes`). Segment
+    * boundaries are absolute, so the width is `segmentFrames`;
+    * `maxSegments` only caps how many positions a long clip adds and
+    * may differ between an index and its probes. */
+  private[operators] final class AudioSegments(segmentFrames: Long,
+      maxSegments: Int, decoder: PcmDecoder)
+      extends Sampler(segmentFrames, "segment width",
+        ("maxSegments", maxSegments), "minSegmentMatches") {
+    // built here, on the driver: its range checks are the width checks
+    val fingerprinter =
+      new AudioSegmentFingerprinter(segmentFrames, maxSegments, decoder)
+    def hashes(df: DataFrame, binaryCol: String, outCol: String)(
+        implicit spark: SparkSession): DataFrame =
+      segmentHashes(df, binaryCol, outCol, this)
+    def count: Column = col("n_segments").cast("long")
+  }
+
   /** Per-frame perceptual hashes for a multi-frame container the JDK
     * can decode (animated GIF) — the VIDEO-LIKE near-dup signature:
     * up to `nFrames` evenly spaced frames, composited exactly like
@@ -2723,11 +2795,39 @@ object Multimodal {
   def gifFrameHashes(df: DataFrame, binaryCol: String, nFrames: Int = 4,
       outCol: String = "frame_ph",
       decoder: FrameDecoder = GifFrameDecoder)(
-      implicit spark: SparkSession): DataFrame = {
-    require(nFrames > 0, s"nFrames must be > 0, got $nFrames")
+      implicit spark: SparkSession): DataFrame =
+    new UniformFrames(nFrames, decoder).hashes(df, binaryCol, outCol)
+
+  /** KEYFRAME-aligned frame dHashes — `gifFrameHashes` with the
+    * sampling plan taken from the container's own sync-sample table
+    * instead of uniform frame positions: for an ISO-BMFF payload
+    * whose first video track indexes (`KeyframeIndexer`: stss/stsz/
+    * stsc/stco), up to `nFrames` evenly spaced SYNC samples decode,
+    * `sample_pos` is the keyframe ORDINAL (so two cuts of the same
+    * footage align by I-frame sequence even when their absolute
+    * sample numbers differ), and `n_frames` is the track's keyframe
+    * count. A payload with no BMFF keyframe index (GIF/AVI/Y4M, or a
+    * malformed box tree) falls back to uniform sampling — the exact
+    * `gifFrameHashes` behavior, and the same thing the spec says a
+    * missing stss means (every sample is sync), so mixed corpora
+    * stay comparable. Decode honesty is the `FrameDecoder`'s: with
+    * the in-repo decoders this is real for MJPEG MP4/MOV (the one
+    * compressed codec the JDK decodes); an external H.264/VP9
+    * `FrameDecoder` plug-in gets I-frame-aligned comparison with no
+    * tier changes. `frameAt` is forward-only — sync samples arrive
+    * ascending from the index, so the contract holds. */
+  def videoFrameHashes(df: DataFrame, binaryCol: String, nFrames: Int = 4,
+      outCol: String = "frame_ph",
+      decoder: FrameDecoder = Mp4FrameDecoder)(
+      implicit spark: SparkSession): DataFrame =
+    new Keyframes(nFrames, decoder).hashes(df, binaryCol, outCol)
+
+  /** The one per-frame hash body of both frame samplers. */
+  private def frameHashes(df: DataFrame, binaryCol: String, outCol: String,
+      s: FrameSampler)(implicit spark: SparkSession): DataFrame = {
     require(!df.columns.exists(c => Set("sample_pos", "frame_idx",
         "n_frames", outCol).contains(c)),
-      s"input columns collide with gifFrameHashes' outputs " +
+      s"input columns collide with the frame hashes' outputs " +
         s"(sample_pos/frame_idx/n_frames/$outCol)")
     val idx = requireBinary(df, binaryCol)
     val outSchema = df.schema
@@ -2735,10 +2835,14 @@ object Multimodal {
       .add("n_frames", IntegerType).add(outCol, LongType)
     df.mapPartitions { it =>
       val hasher = new PerceptualHasher
+      val indexer = new KeyframeIndexer // once per partition
       it.flatMap { r =>
-        foldFrames(binaryOf(r, idx), nFrames, decoder) { (pos, fi, n, canvas) =>
+        val b = binaryOf(r, idx)
+        val emit = (pos: Int, fi: Int, n: Int,
+            canvas: java.awt.image.BufferedImage) =>
           Row.fromSeq(r.toSeq :+ pos :+ fi :+ n :+ hasher.dhashOfImage(canvas))
-        }
+        if (s.keyframes) foldKeyframes(b, s.nFrames, s.decoder, indexer)(emit)
+        else foldFrames(b, s.nFrames, s.decoder)(emit)
       }
     }(Encoders.row(outSchema))
   }
@@ -2784,118 +2888,56 @@ object Multimodal {
       metricName: String = "graft_gif_band_cap",
       maxShift: Int = 0,
       decoder: FrameDecoder = GifFrameDecoder)(
-      implicit spark: SparkSession): DataFrame = {
-    require(maxHamming >= 0, s"maxHamming must be >= 0, got $maxHamming")
-    require(minFrameMatches >= 1 && minFrameMatches <= nFrames,
-      s"minFrameMatches must be in [1, nFrames=$nFrames], got $minFrameMatches")
-    require(maxShift >= 0 && maxShift < nFrames,
-      s"maxShift must be in [0, nFrames=$nFrames), got $maxShift")
-    val frames = gifFrameHashes(df.select(col(idCol), col(binaryCol)),
-        binaryCol, nFrames, "_h", decoder)
-      .select(col(idCol).as("_gid"), col("sample_pos"), col("_h"),
-        least(lit(nFrames), col("n_frames")).cast("long").as("_nf"))
-    positionalNearDupPairs(frames, maxHamming, minFrameMatches, maxBucket,
-      metricName, maxShift)
-  }
+      implicit spark: SparkSession): DataFrame =
+    positionalPairs(new UniformFrames(nFrames, decoder), df, binaryCol,
+      idCol, maxHamming, minFrameMatches, maxBucket, metricName, maxShift)
 
-  /** KEYFRAME-aligned frame dHashes — `gifFrameHashes` with the
-    * sampling plan taken from the container's own sync-sample table
-    * instead of uniform frame positions: for an ISO-BMFF payload
-    * whose first video track indexes (`KeyframeIndexer`: stss/stsz/
-    * stsc/stco), up to `nFrames` evenly spaced SYNC samples decode,
-    * `sample_pos` is the keyframe ORDINAL (so two cuts of the same
-    * footage align by I-frame sequence even when their absolute
-    * sample numbers differ), and `n_frames` is the track's keyframe
-    * count. A payload with no BMFF keyframe index (GIF/AVI/Y4M, or a
-    * malformed box tree) falls back to uniform sampling — the exact
-    * `gifFrameHashes` behavior, and the same thing the spec says a
-    * missing stss means (every sample is sync), so mixed corpora
-    * stay comparable. Decode honesty is the `FrameDecoder`'s: with
-    * the in-repo decoders this is real for MJPEG MP4/MOV (the one
-    * compressed codec the JDK decodes); an external H.264/VP9
-    * `FrameDecoder` plug-in gets I-frame-aligned comparison with no
-    * tier changes. `frameAt` is forward-only — sync samples arrive
-    * ascending from the index, so the contract holds. */
-  def videoFrameHashes(df: DataFrame, binaryCol: String, nFrames: Int = 4,
-      outCol: String = "frame_ph",
-      decoder: FrameDecoder = Mp4FrameDecoder)(
-      implicit spark: SparkSession): DataFrame = {
-    require(nFrames > 0, s"nFrames must be > 0, got $nFrames")
-    require(!df.columns.exists(c => Set("sample_pos", "frame_idx",
-        "n_frames", outCol).contains(c)),
-      s"input columns collide with videoFrameHashes' outputs " +
-        s"(sample_pos/frame_idx/n_frames/$outCol)")
-    val idx = requireBinary(df, binaryCol)
-    val outSchema = df.schema
-      .add("sample_pos", IntegerType).add("frame_idx", IntegerType)
-      .add("n_frames", IntegerType).add(outCol, LongType)
-    df.mapPartitions { it =>
-      val hasher = new PerceptualHasher
-      val indexer = new KeyframeIndexer // once per partition
-      it.flatMap { r =>
-        foldKeyframes(binaryOf(r, idx), nFrames, decoder, indexer) {
-          (pos, fi, n, canvas) =>
-            Row.fromSeq(r.toSeq :+ pos :+ fi :+ n :+
-              hasher.dhashOfImage(canvas))
-        }
-      }
-    }(Encoders.row(outSchema))
-  }
-
-  /** Keyframe-sampled near-dup pairs for REAL videos — the r16
-    * verdict's recipe made a library contract: `gifNearDupPairs`'
-    * exact positional semantics (banding, hot-cap, bounded shift,
-    * adaptive short-doc gate — ONE shared `positionalNearDupPairs`
-    * core), but frames sampled at the container's sync samples via
-    * `videoFrameHashes`, so comparison aligns on I-frames instead of
-    * arithmetic positions. Why that matters: a delta-coded video's
-    * decodable/representative frames ARE its keyframes, their
-    * spacing is non-uniform (scene cuts), and a re-encode keeps the
-    * keyframe CONTENT while renumbering samples — uniform sampling
-    * lands on different frames of the two files and misses the
-    * match; ordinal keyframe alignment finds it. Payloads without a
-    * keyframe index sample uniformly (see `videoFrameHashes`), so a
-    * mixed GIF+MP4 corpus runs in one pass. Scale shape is unchanged
-    * from the GIF tier: decode once per task where the scan lives,
-    * 8 bytes per sampled frame shuffle, capped bands, never
-    * all-pairs. */
+  /** Keyframe-sampled near-dup pairs for REAL videos:
+    * `gifNearDupPairs`' exact positional semantics (banding, hot-cap,
+    * bounded shift, adaptive short-doc gate), but frames sampled at
+    * the container's sync samples via `videoFrameHashes`, so
+    * comparison aligns on I-frames instead of arithmetic positions.
+    * Why that matters: a delta-coded video's decodable/representative
+    * frames ARE its keyframes, their spacing is non-uniform (scene
+    * cuts), and a re-encode keeps the keyframe CONTENT while
+    * renumbering samples — uniform sampling lands on different frames
+    * of the two files and misses the match; ordinal keyframe
+    * alignment finds it. Payloads without a keyframe index sample
+    * uniformly (see `videoFrameHashes`), so a mixed GIF+MP4 corpus
+    * runs in one pass. */
   def videoNearDupPairs(df: DataFrame, binaryCol: String, idCol: String,
       nFrames: Int = 4, maxHamming: Int = 3, minFrameMatches: Int = 3,
       maxBucket: Int = HotKeys.DefaultBucketCap,
       metricName: String = "graft_video_band_cap",
       maxShift: Int = 0,
       decoder: FrameDecoder = Mp4FrameDecoder)(
-      implicit spark: SparkSession): DataFrame = {
+      implicit spark: SparkSession): DataFrame =
+    positionalPairs(new Keyframes(nFrames, decoder), df, binaryCol, idCol,
+      maxHamming, minFrameMatches, maxBucket, metricName, maxShift)
+
+  /** The argument checks of every positional pair search and probe. */
+  private def requireMatchArgs(s: Sampler, maxHamming: Int,
+      minMatches: Int, maxShift: Int): Unit = {
+    val (capArg, cap) = s.cap
     require(maxHamming >= 0, s"maxHamming must be >= 0, got $maxHamming")
-    require(minFrameMatches >= 1 && minFrameMatches <= nFrames,
-      s"minFrameMatches must be in [1, nFrames=$nFrames], got $minFrameMatches")
-    require(maxShift >= 0 && maxShift < nFrames,
-      s"maxShift must be in [0, nFrames=$nFrames), got $maxShift")
-    val frames = videoFrameHashes(df.select(col(idCol), col(binaryCol)),
-        binaryCol, nFrames, "_h", decoder)
-      .select(col(idCol).as("_gid"), col("sample_pos"), col("_h"),
-        least(lit(nFrames), col("n_frames")).cast("long").as("_nf"))
-    positionalNearDupPairs(frames, maxHamming, minFrameMatches, maxBucket,
-      metricName, maxShift)
+    require(minMatches >= 1 && minMatches <= cap,
+      s"${s.matchArg} must be in [1, $capArg=$cap], got $minMatches")
+    require(maxShift >= 0 && maxShift < cap,
+      s"maxShift must be in [0, $capArg=$cap), got $maxShift")
   }
 
-  /** The POSITIONAL banded pair search shared by every per-position
-    * signature tier (GIF/AVI frame dHashes, segmented audio
-    * fingerprints): `frames` is one row per (doc `_gid`, position
-    * `sample_pos`, 64-bit signature `_h`, the doc's own signature
-    * count `_nf`). One implementation, so the modality tiers cannot
-    * drift — the banding, hot-cap, bounded-shift, distinct-position
-    * counting and adaptive short-doc gate semantics documented on
-    * `gifNearDupPairs` are THIS function's semantics. */
-  private[operators] def positionalNearDupPairs(frames: DataFrame,
-      maxHamming: Int, minMatches: Int, maxBucket: Int,
+  /** The positional pair search: the semantics documented on
+    * `gifNearDupPairs`, for any sampler. */
+  private[operators] def positionalPairs(s: Sampler, df: DataFrame, binaryCol: String,
+      idCol: String, maxHamming: Int, minMatches: Int, maxBucket: Int,
       metricName: String, maxShift: Int)(
       implicit spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.functions._
+    requireMatchArgs(s, maxHamming, minMatches, maxShift)
+    val frames = s.hashes(df.select(col(idCol), col(binaryCol)), binaryCol, "_h")
+      .select(col(idCol).as("_gid"), col("sample_pos"), col("_h"),
+        s.count.as("_nf"))
     val bands = frames.select(col("_gid"), col("sample_pos"), col("_h"),
-        col("_nf"),
-        posexplode(array((0 until 4).map(k =>
-          shiftrightunsigned(col("_h"), 16 * k).bitwiseAND(lit(65535L))): _*)))
+        col("_nf"), Dedup.explodeBands(col("_h")))
       .toDF("_gid", "sample_pos", "_h", "_nf", "_k", "_band")
     // cap per TRUE (position, slot, value) bucket. minPerKey prunes
     // buckets that cannot produce a pair: with shift that is ANY
@@ -2942,153 +2984,85 @@ object Multimodal {
       .select(col("id_a"), col("id_b"), col("n_matched"))
   }
 
-  /** The POSITIONAL standing index for animations — the GIF twin of
-    * `Dedup.hashBandIndex`: per sampled frame, the four 16-bit band
-    * slots of its dHash collect into capped candidate lists KEYED BY
-    * SAMPLE POSITION as well — (`sample_pos`, `_k`, `_band`, `_hs`)
-    * — so a probe only ever compares same-position frames, which is
-    * what keeps the pair semantics identical to `gifNearDupPairs`.
-    * Build it ONCE over the standing corpus (decode cost follows the
-    * corpus exactly once); the artifact is frames × 4 rows of longs,
-    * bands-keyed, bounded, broadcastable for the same reasons as the
-    * image/audio index. Caps are per (position, band) all-or-nothing
-    * with observed drop counts. */
+  /** The POSITIONAL standing index for animations — the in-memory
+    * form of the positional hash-band layout: per sampled frame, the
+    * four 16-bit band slots of its dHash collect into capped
+    * candidate lists KEYED BY SAMPLE POSITION as well —
+    * (`sample_pos`, `_k`, `_band`, `_hs`) — so a probe only ever
+    * compares same-position frames, which is what keeps the pair
+    * semantics identical to `gifNearDupPairs`. Build it ONCE over the
+    * standing corpus (decode cost follows the corpus exactly once);
+    * the artifact is frames × 4 rows of longs, bands-keyed, bounded,
+    * broadcastable. Caps are per (position, band) all-or-nothing with
+    * observed drop counts. The sampling width rides `_hs` as column
+    * metadata, and every probe refuses an index of another width. */
   def gifHashBandIndex(standing: DataFrame, gifCol: String,
       nFrames: Int = 4, maxBucket: Int = HotKeys.DefaultBucketCap,
       metricName: String = "graft_gif_index_cap",
       decoder: FrameDecoder = GifFrameDecoder)(
-      implicit spark: SparkSession): DataFrame = {
-    require(nFrames > 0, s"nFrames must be > 0, got $nFrames")
-    val frames = gifFrameHashes(standing.select(col(gifCol)),
-        gifCol, nFrames, "_h", decoder)
-      .select(col("sample_pos"), col("_h"))
-    val bands = frames.select(col("sample_pos"), col("_h"),
-        posexplode(array((0 until 4).map(k =>
-          shiftrightunsigned(col("_h"), 16 * k).bitwiseAND(lit(65535L))): _*)))
-      .toDF("sample_pos", "_h", "_k", "_band")
-    HotKeys.cap(bands, Seq(col("sample_pos"), col("_k"), col("_band")),
-        maxBucket, minPerKey = 1, metricName = metricName)
-      .groupBy("sample_pos", "_k", "_band")
-      .agg(collect_list("_h").as("_hs"))
-      .withColumn("_hs", col("_hs").as("_hs", sampleWidthMeta(nFrames)))
-  }
+      implicit spark: SparkSession): DataFrame =
+    positionalIndex(new UniformFrames(nFrames, decoder), standing, gifCol,
+      maxBucket, metricName)
 
-  /** KEYFRAME-sampled standing index — `gifHashBandIndex` with the
-    * sampling plan from the container's sync-sample table
-    * (`videoFrameHashes`): positions are keyframe ORDINALS, so a
+  /** KEYFRAME-sampled standing index — `gifHashBandIndex` with
+    * positions that are keyframe ORDINALS (`videoFrameHashes`), so a
     * probe aligns re-cuts by I-frame sequence against the standing
     * corpus exactly like `videoNearDupPairs` does in-corpus. The
-    * artifact SHAPE is the positional hash-band layout, byte-for-byte
-    * — same banding, same caps, same width record — so every
-    * maintenance tool (healthSweep, sweepAndCompact, delete, rebuild)
-    * already serves it; only the frames' PROVENANCE differs, which
-    * is why probing a keyframe index with the uniform tier (or vice
-    * versa) is a semantic mix the width guard cannot catch — keep
-    * one sampling plan per index root, as the build function name
-    * states. */
+    * artifact is the positional layout byte for byte, so every
+    * maintenance tool serves it; probing it with the uniform tier (or
+    * vice versa) is a mix the width guard cannot catch — keep one
+    * sampling plan per index. */
   def videoKeyframeHashBandIndex(standing: DataFrame, videoCol: String,
       nFrames: Int = 4, maxBucket: Int = HotKeys.DefaultBucketCap,
       metricName: String = "graft_video_kf_index_cap",
       decoder: FrameDecoder = Mp4FrameDecoder)(
-      implicit spark: SparkSession): DataFrame = {
-    require(nFrames > 0, s"nFrames must be > 0, got $nFrames")
-    val frames = videoFrameHashes(standing.select(col(videoCol)),
-        videoCol, nFrames, "_h", decoder)
-      .select(col("sample_pos"), col("_h"))
-    val bands = frames.select(col("sample_pos"), col("_h"),
-        posexplode(array((0 until 4).map(k =>
-          shiftrightunsigned(col("_h"), 16 * k).bitwiseAND(lit(65535L))): _*)))
-      .toDF("sample_pos", "_h", "_k", "_band")
-    HotKeys.cap(bands, Seq(col("sample_pos"), col("_k"), col("_band")),
-        maxBucket, minPerKey = 1, metricName = metricName)
-      .groupBy("sample_pos", "_k", "_band")
-      .agg(collect_list("_h").as("_hs"))
-      .withColumn("_hs", col("_hs").as("_hs", sampleWidthMeta(nFrames)))
-  }
+      implicit spark: SparkSession): DataFrame =
+    positionalIndex(new Keyframes(nFrames, decoder), standing, videoCol,
+      maxBucket, metricName)
 
-  /** Persist a keyframe-sampled index — `writeGifHashBandIndex` with
-    * `videoFrameHashes` frames; read it back with
-    * `readGifHashBandIndex` (identical layout and width record). */
-  def writeVideoKeyframeHashBandIndex(standing: DataFrame,
-      videoCol: String, idCol: String, path: String, nFrames: Int = 4,
-      maxBucket: Int = HotKeys.DefaultBucketCap,
-      metricName: String = "graft_video_kf_index_write_cap",
-      outFiles: Int = 4,
-      decoder: FrameDecoder = Mp4FrameDecoder)(
-      implicit spark: SparkSession): Unit = {
-    require(nFrames > 0, s"nFrames must be > 0, got $nFrames")
-    require(idCol != "sample_pos",
-      "idCol 'sample_pos' collides with the positional layout's own column")
-    val frames = videoFrameHashes(standing.select(col(idCol), col(videoCol)),
-        videoCol, nFrames, "_h", decoder)
-      .select(col(idCol), col("sample_pos"), col("_h"))
-    Dedup.writeHashBandIndexFrame(frames, idCol, Seq("sample_pos"), videoCol,
-      path, maxBucket, metricName, outFiles, sampleCap = nFrames.toLong)
-  }
+  private def positionalIndex(s: Sampler, standing: DataFrame,
+      binaryCol: String, maxBucket: Int, metricName: String)(
+      implicit spark: SparkSession): DataFrame =
+    withWidth(Dedup.bandIndex(
+      s.hashes(standing.select(col(binaryCol)), binaryCol, "_h")
+        .select(col("sample_pos"), col("_h")),
+      Seq("sample_pos"), maxBucket, metricName), s)
 
-  /** Keep the rows whose video does NOT near-dup the standing corpus
-    * under KEYFRAME alignment — `gifNearDupFilterAgainst` with the
-    * probe frames sampled at the container's sync samples
-    * (`videoFrameHashes`), against a `videoKeyframeHashBandIndex`.
-    * Everything documented on the GIF filter holds verbatim (adaptive
-    * length gate, bounded shift, width-mismatch refusal via the
-    * `_hs` metadata, undecodable-keeps, the stated standing-side
-    * length asymmetry) — it is the same `positionalFilterAgainst`
-    * core; only the sampling plan differs. */
-  def videoNearDupFilterAgainst(df: DataFrame, videoCol: String,
-      idCol: String, index: DataFrame, nFrames: Int = 4,
-      maxHamming: Int = 3, minFrameMatches: Int = 3,
-      broadcastIndex: Boolean = true,
-      decoder: FrameDecoder = Mp4FrameDecoder, maxShift: Int = 0)(
-      implicit spark: SparkSession): DataFrame = {
-    require(maxHamming >= 0, s"maxHamming must be >= 0, got $maxHamming")
-    require(minFrameMatches >= 1 && minFrameMatches <= nFrames,
-      s"minFrameMatches must be in [1, nFrames=$nFrames], got $minFrameMatches")
-    require(maxShift >= 0 && maxShift < nFrames,
-      s"maxShift must be in [0, nFrames=$nFrames), got $maxShift")
-    indexSampleWidth(index).foreach { built =>
-      require(built == nFrames.toLong,
-        s"videoNearDupFilterAgainst: index carries sample width $built " +
-          s"(nFrames at build/read) but this probe samples at $nFrames — " +
-          "probe with the index's width, or rebuild the index at the " +
-          "probe's")
-    }
-    val frames = videoFrameHashes(df.select(col(idCol), col(videoCol)),
-        videoCol, nFrames, "_h", decoder)
-      .select(col(idCol), col("sample_pos"), col("_h"),
-        least(lit(nFrames), col("n_frames")).cast("long").as("_nf"))
-    positionalFilterAgainst(df, idCol, frames, index, maxHamming,
-      minFrameMatches, broadcastIndex, maxShift)
-  }
-
-  /** The sampling width riding the probe frame as COLUMN METADATA on
+  /** The sampling width riding the index frame as COLUMN METADATA on
     * `_hs` — the device that closes the mixed-width seam: the index
     * builders/readers know the width the signatures were sampled at,
     * the probe knows its own, and carrying the former on the frame
-    * itself lets `gifNearDupFilterAgainst` refuse a mismatch even
-    * though the two widths meet only there. Schema metadata survives
+    * itself lets the probe refuse a mismatch even though the two
+    * widths meet only there. Schema metadata survives
     * select/filter/persist/localCheckpoint (a probe pipeline's whole
     * journey); a frame that lost it (hand-built, or rebuilt through a
-    * transformation that re-created the column) degrades to the old
+    * transformation that re-created the column) degrades to the
     * unguarded behavior — best-effort by design, the persisted path's
     * `_meta.sample_cap` check stays the hard gate. */
-  private def sampleWidthMeta(width: Long): org.apache.spark.sql.types.Metadata =
-    new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("graft.sample_width", width).build()
+  private def withWidth(index: DataFrame, s: Sampler): DataFrame =
+    index.withColumn("_hs", col("_hs").as("_hs",
+      new org.apache.spark.sql.types.MetadataBuilder()
+        .putLong("graft.sample_width", s.width).build()))
 
-  private def indexSampleWidth(index: DataFrame): Option[Long] =
-    index.schema.fields.find(_.name == "_hs")
-      .map(_.metadata)
+  /** Refuse an index whose recorded width differs from the probe's. */
+  private def requireWidth(caller: String, s: Sampler,
+      index: DataFrame): Unit =
+    index.schema.fields.find(_.name == "_hs").map(_.metadata)
       .filter(_.contains("graft.sample_width"))
       .map(_.getLong("graft.sample_width"))
+      .foreach { built =>
+        require(built == s.width,
+          s"$caller: index carries ${s.widthWord} $built but this probe " +
+            s"uses ${s.width} — probe with the index's width, or rebuild " +
+            "the index at the probe's")
+      }
 
   /** Keep the rows whose animation does NOT near-dup the standing
-    * corpus — the GIF twin of `Dedup.hashNearDupFilterAgainst`, for
-    * incremental intake against a `gifHashBandIndex`: each batch
-    * animation's sampled frames probe the index at their own
-    * position (four capped equi-joins per band slot), a frame HITS
-    * when any same-position candidate is within `maxHamming` bits,
-    * and the animation drops when its hit count reaches
+    * corpus, for incremental intake against a `gifHashBandIndex`:
+    * each batch animation's sampled frames probe the index at their
+    * own position (four capped equi-joins per band slot), a frame
+    * HITS when any same-position candidate is within `maxHamming`
+    * bits, and the animation drops when its hit count reaches
     * least(minFrameMatches, its own sampled count) — the batch-side
     * half of `gifNearDupPairs`' adaptive rule. ASYMMETRY, stated not
     * hidden: the index aggregates candidate lists per (position,
@@ -3097,56 +3071,46 @@ object Multimodal {
     * suppress a batch animation only through the threshold the batch
     * side's length sets (the pair operator, which sees both lengths,
     * is the tier to use when that distinction matters — in-corpus
-    * clustering uses it). Undecodable payloads emit no frames and
-    * KEEP (the gates own those rows). The per-animation hit count is
-    * one id-keyed aggregation — this filter is for batch intake;
-    * prepStream refuses the GIF tier for exactly this aggregation. */
+    * clustering uses it). `maxShift` lets a frame hit candidates
+    * within ±maxShift positions of its own ((2s+1)× probe rows); the
+    * hit count stays per DISTINCT probe position. An index built or
+    * read at another `nFrames` is refused (its width rides `_hs`).
+    * Undecodable payloads emit no frames and KEEP (the gates own
+    * those rows). The per-animation hit count is one id-keyed
+    * aggregation — this filter is for batch intake; prepStream
+    * refuses the GIF tier for exactly this aggregation. */
   def gifNearDupFilterAgainst(df: DataFrame, gifCol: String, idCol: String,
       index: DataFrame, nFrames: Int = 4, maxHamming: Int = 3,
       minFrameMatches: Int = 3, broadcastIndex: Boolean = true,
       decoder: FrameDecoder = GifFrameDecoder, maxShift: Int = 0)(
-      implicit spark: SparkSession): DataFrame = {
-    require(maxHamming >= 0, s"maxHamming must be >= 0, got $maxHamming")
-    require(minFrameMatches >= 1 && minFrameMatches <= nFrames,
-      s"minFrameMatches must be in [1, nFrames=$nFrames], got $minFrameMatches")
-    require(maxShift >= 0 && maxShift < nFrames,
-      s"maxShift must be in [0, nFrames=$nFrames), got $maxShift")
-    // the mixed-width seam, closed at the point the two widths MEET:
-    // an index built (or read back) at one nFrames probed at another
-    // would compare DIFFERENT frames per position — the exact silent
-    // mix the persisted reader's _meta.sample_cap check refuses. The
-    // build width rides the index frame as `_hs` column metadata
-    // (gifHashBandIndex / readGifHashBandIndex attach it), so the
-    // refusal works for the in-memory form and for a persisted read
-    // whose caller then probes at a different default.
-    indexSampleWidth(index).foreach { built =>
-      require(built == nFrames.toLong,
-        s"gifNearDupFilterAgainst: index carries sample width $built " +
-          s"(nFrames at build/read) but this probe samples at $nFrames — " +
-          "probe with the index's width, or rebuild the index at the " +
-          "probe's")
-    }
-    val frames = gifFrameHashes(df.select(col(idCol), col(gifCol)),
-        gifCol, nFrames, "_h", decoder)
-      .select(col(idCol), col("sample_pos"), col("_h"),
-        least(lit(nFrames), col("n_frames")).cast("long").as("_nf"))
-    positionalFilterAgainst(df, idCol, frames, index, maxHamming,
-      minFrameMatches, broadcastIndex, maxShift)
-  }
+      implicit spark: SparkSession): DataFrame =
+    positionalFilter("gifNearDupFilterAgainst",
+      new UniformFrames(nFrames, decoder), df, gifCol, idCol, index,
+      maxHamming, minFrameMatches, broadcastIndex, maxShift)
 
-  /** The POSITIONAL standing-index probe shared by the per-position
-    * signature tiers (the filter half of `positionalNearDupPairs`):
-    * `frames` is the probe's (idCol, `sample_pos`, `_h`, `_nf`) rows,
-    * `index` a (`sample_pos`, `_k`, `_band`, `_hs`) positional
-    * hash-band frame. Keeps the `df` rows whose doc does NOT hit the
-    * index — semantics documented on `gifNearDupFilterAgainst`
-    * (adaptive length gate, bounded shift, distinct-position hit
-    * count, stated standing-side-length asymmetry). */
-  private[operators] def positionalFilterAgainst(df: DataFrame,
-      idCol: String, frames: DataFrame, index: DataFrame,
-      maxHamming: Int, minMatches: Int, broadcastIndex: Boolean,
-      maxShift: Int)(implicit spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.functions._
+  /** `gifNearDupFilterAgainst` under KEYFRAME alignment: probe frames
+    * sampled at the container's sync samples (`videoFrameHashes`),
+    * against a `videoKeyframeHashBandIndex`. */
+  def videoNearDupFilterAgainst(df: DataFrame, videoCol: String,
+      idCol: String, index: DataFrame, nFrames: Int = 4,
+      maxHamming: Int = 3, minFrameMatches: Int = 3,
+      broadcastIndex: Boolean = true,
+      decoder: FrameDecoder = Mp4FrameDecoder, maxShift: Int = 0)(
+      implicit spark: SparkSession): DataFrame =
+    positionalFilter("videoNearDupFilterAgainst",
+      new Keyframes(nFrames, decoder), df, videoCol, idCol, index,
+      maxHamming, minFrameMatches, broadcastIndex, maxShift)
+
+  /** The positional standing probe: the semantics documented on
+    * `gifNearDupFilterAgainst`, for any sampler. */
+  private[operators] def positionalFilter(caller: String, s: Sampler, df: DataFrame,
+      binaryCol: String, idCol: String, index: DataFrame, maxHamming: Int,
+      minMatches: Int, broadcastIndex: Boolean, maxShift: Int)(
+      implicit spark: SparkSession): DataFrame = {
+    requireMatchArgs(s, maxHamming, minMatches, maxShift)
+    requireWidth(caller, s, index)
+    val frames = s.hashes(df.select(col(idCol), col(binaryCol)), binaryCol, "_h")
+      .select(col(idCol), col("sample_pos"), col("_h"), s.count.as("_nf"))
     val clash = df.columns.toSeq.intersect(
       Seq("_h", "_nf", "_jpos") ++ (0 until 4).flatMap(k =>
         Seq(s"_p$k", s"_b$k", s"_cand$k")))
@@ -3155,33 +3119,17 @@ object Multimodal {
         "the positional filter's working names")
     // maxShift: the probe side replicates each frame to its tolerated
     // index positions ((2s+1)x probe rows — batch-sized), mirroring
-    // positionalNearDupPairs' bounded alignment; a frame HITS when any
-    // candidate within `maxHamming` sits within +-maxShift of its own
-    // position, and the hit count stays per DISTINCT probe position
-    // (a frame matching several shifted lists is one covered frame)
+    // the pair search's bounded alignment
     val probeFrames =
       if (maxShift == 0) frames.withColumn("_jpos", col("sample_pos"))
       else frames
         .withColumn("_jpos", explode(array(
           (-maxShift to maxShift).map(d => col("sample_pos") + lit(d)): _*)))
         .filter(col("_jpos") >= 0)
-    val joined = (0 until 4).foldLeft(probeFrames) { (cur, k) =>
-      val side = index.filter(col("_k") === k)
-        .select(col("sample_pos").as(s"_p$k"), col("_band").as(s"_b$k"),
-          col("_hs").as(s"_cand$k"))
-      cur.join(
-        if (broadcastIndex) broadcast(side) else side,
-        col(s"_p$k") === col("_jpos") &&
-          (col(s"_b$k") <=> shiftrightunsigned(col("_h"), 16 * k)
-            .bitwiseAND(lit(65535L))),
-        "left")
-    }
-    val frameHit = (0 until 4).map(k =>
-        coalesce(exists(col(s"_cand$k"),
-          h => bit_count(h.bitwiseXOR(col("_h"))) <= maxHamming), lit(false)))
-      .reduce(_ || _)
-    val dropIds = joined
-      .select(col(idCol), col("sample_pos"), col("_nf"), frameHit.as("_hit"))
+    val dropIds = Dedup.probeBands(probeFrames, index, Some("_jpos"),
+        broadcastIndex)
+      .select(col(idCol), col("sample_pos"), col("_nf"),
+        Dedup.bandHit(maxHamming).as("_hit"))
       .groupBy(idCol)
       .agg(count_distinct(when(col("_hit"), col("sample_pos"))).as("_hits"),
         min(col("_nf")).as("_nf"))
@@ -3204,70 +3152,50 @@ object Multimodal {
     * Same caveat as `runIncremental`: batches dedup against the
     * STANDING corpus only — two near-dup animations arriving in
     * different micro-batches both survive unless the index is grown
-    * between batches (`rebuildGifHashBandIndex`); in-batch twins are
+    * between batches (`rebuildGifHashBandIndex`); in-batch pairs are
     * the batch pair operator's job.
     *
     * The index frame should be built/read ONCE at stream start and
     * `persist()`ed (the read-once-cache-across-micro-batches
     * contract — re-reading per batch re-shuffles the artifact for
-    * nothing); the sampling-width guard runs HERE, at stream build,
-    * so a mismatched width fails before the first batch rather than
-    * inside the running query. */
+    * nothing); the argument and sampling-width checks run HERE, at
+    * stream build, so a mismatched width fails before the first batch
+    * rather than inside the running query. */
   def gifNearDupMicroBatch(gifCol: String, idCol: String, index: DataFrame,
       nFrames: Int = 4, maxHamming: Int = 3, minFrameMatches: Int = 3,
       broadcastIndex: Boolean = true,
       decoder: FrameDecoder = GifFrameDecoder, maxShift: Int = 0)(
       sink: (DataFrame, Long) => Unit)(
-      implicit spark: SparkSession): (DataFrame, Long) => Unit = {
-    indexSampleWidth(index).foreach { built =>
-      require(built == nFrames.toLong,
-        s"gifNearDupMicroBatch: index carries sample width $built but the " +
-          s"stream probes at $nFrames — probe with the index's width, or " +
-          "rebuild the index at the probe's")
-    }
-    (batch: DataFrame, batchId: Long) =>
-      sink(gifNearDupFilterAgainst(batch, gifCol, idCol, index, nFrames,
-        maxHamming, minFrameMatches, broadcastIndex, decoder, maxShift),
-        batchId)
-  }
+      implicit spark: SparkSession): (DataFrame, Long) => Unit =
+    positionalMicroBatch("gifNearDupMicroBatch",
+      new UniformFrames(nFrames, decoder), gifCol, idCol, index, maxHamming,
+      minFrameMatches, broadcastIndex, maxShift)(sink)
 
-  /** `gifNearDupMicroBatch` under the KEYFRAME sampling plan: each
-    * micro-batch filters through `videoNearDupFilterAgainst` against
-    * a standing `videoKeyframeHashBandIndex` — the stream-intake
-    * recipe for real-video dedup, with the same width guard at
-    * stream build and the same standing-corpus-only caveat. */
+  /** `gifNearDupMicroBatch` under the KEYFRAME sampling plan, against
+    * a standing `videoKeyframeHashBandIndex`. */
   def videoNearDupMicroBatch(videoCol: String, idCol: String,
       index: DataFrame, nFrames: Int = 4, maxHamming: Int = 3,
       minFrameMatches: Int = 3, broadcastIndex: Boolean = true,
       decoder: FrameDecoder = Mp4FrameDecoder, maxShift: Int = 0)(
       sink: (DataFrame, Long) => Unit)(
-      implicit spark: SparkSession): (DataFrame, Long) => Unit = {
-    indexSampleWidth(index).foreach { built =>
-      require(built == nFrames.toLong,
-        s"videoNearDupMicroBatch: index carries sample width $built but " +
-          s"the stream probes at $nFrames — probe with the index's width, " +
-          "or rebuild the index at the probe's")
-    }
-    (batch: DataFrame, batchId: Long) =>
-      sink(videoNearDupFilterAgainst(batch, videoCol, idCol, index, nFrames,
-        maxHamming, minFrameMatches, broadcastIndex, decoder, maxShift),
-        batchId)
-  }
+      implicit spark: SparkSession): (DataFrame, Long) => Unit =
+    positionalMicroBatch("videoNearDupMicroBatch",
+      new Keyframes(nFrames, decoder), videoCol, idCol, index, maxHamming,
+      minFrameMatches, broadcastIndex, maxShift)(sink)
 
-  // ------------------------------------------------------------------
-  // Persisted POSITIONAL hash-band index — the FOURTH standing-index
-  // family (BM25 / IVF / classic hash-band), and the one that lets
-  // the GIF tier's standing corpus live on disk with the same
-  // takedown contract as the others: the animations decode ONCE at
-  // build, the artifact is frames × 4 rows of longs, and delete /
-  // compact / stats / health are LITERALLY the classic family's
-  // functions (same layout, same versioned swap, same tombstones —
-  // the position column rides the data rows; only the band KEY
-  // differs). Implemented as the classic family's machinery
-  // generalized over the position column (Dedup.*Frame cores), so the
-  // two layouts cannot drift; the classic/positional mix-ups are
-  // refused schema-derivedly on read and growth.
-  // ------------------------------------------------------------------
+  /** The micro-batch wrapper: checks at stream build, then
+    * `positionalFilter` per batch. */
+  private def positionalMicroBatch(caller: String, s: Sampler,
+      binaryCol: String, idCol: String, index: DataFrame, maxHamming: Int,
+      minMatches: Int, broadcastIndex: Boolean, maxShift: Int)(
+      sink: (DataFrame, Long) => Unit)(
+      implicit spark: SparkSession): (DataFrame, Long) => Unit = {
+    requireMatchArgs(s, maxHamming, minMatches, maxShift)
+    requireWidth(caller, s, index)
+    (batch: DataFrame, batchId: Long) =>
+      sink(positionalFilter(caller, s, batch, binaryCol, idCol, index,
+        maxHamming, minMatches, broadcastIndex, maxShift), batchId)
+  }
 
   /** Persist the positional GIF hash-band index WITH document ids —
     * `Dedup.writeHashBandIndex`'s exact contract (versioned from
@@ -3280,7 +3208,8 @@ object Multimodal {
     * compaction and growth rebuild works from the artifact's longs.
     * `_meta.ndocs` counts SIGNATURE ROWS — sampled frames, not
     * animations (the cap/band economy this family's health policy
-    * reasons about is frame-level).
+    * reasons about is frame-level); `_meta.sample_cap` records the
+    * width.
     *
     * Deletes, compaction, stats and the health sweep are the CLASSIC
     * family's entry points, unchanged — the layout is the same
@@ -3298,19 +3227,36 @@ object Multimodal {
       metricName: String = "graft_gif_index_write_cap",
       outFiles: Int = 4,
       decoder: FrameDecoder = GifFrameDecoder)(
+      implicit spark: SparkSession): Unit =
+    positionalWrite(new UniformFrames(nFrames, decoder), standing, gifCol,
+      idCol, path, maxBucket, metricName, outFiles)
+
+  /** Persist a keyframe-sampled index — `writeGifHashBandIndex` with
+    * `videoFrameHashes` frames; read it back with
+    * `readGifHashBandIndex` (identical layout and width record). */
+  def writeVideoKeyframeHashBandIndex(standing: DataFrame,
+      videoCol: String, idCol: String, path: String, nFrames: Int = 4,
+      maxBucket: Int = HotKeys.DefaultBucketCap,
+      metricName: String = "graft_video_kf_index_write_cap",
+      outFiles: Int = 4,
+      decoder: FrameDecoder = Mp4FrameDecoder)(
+      implicit spark: SparkSession): Unit =
+    positionalWrite(new Keyframes(nFrames, decoder), standing, videoCol,
+      idCol, path, maxBucket, metricName, outFiles)
+
+  /** An `idCol` named `sample_pos` is refused by the sampler's own
+    * output-collision check, before anything is written. */
+  private def positionalWrite(s: Sampler, standing: DataFrame,
+      binaryCol: String, idCol: String, path: String, maxBucket: Int,
+      metricName: String, outFiles: Int)(
       implicit spark: SparkSession): Unit = {
-    require(nFrames > 0, s"nFrames must be > 0, got $nFrames")
-    require(idCol != "sample_pos",
-      "idCol 'sample_pos' collides with the positional layout's own column")
-    val frames = gifFrameHashes(standing.select(col(idCol), col(gifCol)),
-        gifCol, nFrames, "_h", decoder)
-      .select(col(idCol), col("sample_pos"), col("_h"))
-    Dedup.writeHashBandIndexFrame(frames, idCol, Seq("sample_pos"), gifCol,
-      path, maxBucket, metricName, outFiles, sampleCap = nFrames.toLong)
+    Dedup.writeHashBandIndexFrame(idSignatures(s, standing, binaryCol, idCol),
+      idCol, Seq("sample_pos"), binaryCol, path, maxBucket, metricName,
+      outFiles, sampleCap = s.width)
   }
 
-  /** Read a persisted positional GIF index back in the PROBE shape —
-    * (`sample_pos`, `_k`, `_band`, `_hs`), exactly what
+  /** Read a persisted positional GIF (or keyframe) index back in the
+    * PROBE shape — (`sample_pos`, `_k`, `_band`, `_hs`), exactly what
     * `gifNearDupFilterAgainst` and the facades' `gifIndex` argument
     * take, so the persisted index is a drop-in for the in-memory
     * `gifHashBandIndex` — minus the re-decode of the standing corpus
@@ -3321,71 +3267,74 @@ object Multimodal {
     * this entry point is refused (schema-derived) rather than
     * silently probed with a phantom position key.
     *
-    * `nFrames` is the width the PROBE will sample at
-    * (`gifNearDupFilterAgainst`'s / `Config.gifNFrames`' value):
-    * it is validated against the index's build-time `_meta.sample_cap`
-    * record, because a probe at a different width would compare
-    * DIFFERENT frames per position — the silent-mixed-sampling trap
-    * the growth path also refuses. In the crash-after-pointer
-    * no-meta state the check is skipped (probes must keep serving);
-    * the default matches the build default. The validated width ALSO
-    * rides the returned frame as `_hs` column metadata, so
-    * `gifNearDupFilterAgainst` re-checks it against the probe's own
-    * `nFrames` — a caller who read at the build width but probes at a
-    * different default is refused THERE instead of silently mixing
-    * sampling widths. */
+    * `nFrames` is the width the PROBE will sample at: it is validated
+    * against the index's build-time `_meta.sample_cap` record,
+    * because a probe at a different width would compare DIFFERENT
+    * frames per position. In the crash-after-pointer no-meta state
+    * the check is skipped (probes must keep serving); the default
+    * matches the build default. The validated width ALSO rides the
+    * returned frame as `_hs` column metadata, so the probe re-checks
+    * it against its own `nFrames`. */
   def readGifHashBandIndex(spark: SparkSession, path: String,
-      nFrames: Int = 4): DataFrame = {
-    require(nFrames > 0, s"nFrames must be > 0, got $nFrames")
-    Dedup.readHashBandIndexFrame(spark, path, Seq("sample_pos"),
-        expectSampleCap = Some(nFrames.toLong))
-      .withColumn("_hs", col("_hs").as("_hs", sampleWidthMeta(nFrames)))
-  }
+      nFrames: Int = 4): DataFrame =
+    positionalRead(spark, path, new UniformFrames(nFrames, GifFrameDecoder))
+
+  private def positionalRead(spark: SparkSession, path: String,
+      s: Sampler): DataFrame =
+    withWidth(Dedup.readHashBandIndexFrame(spark, path, Seq("sample_pos"),
+      expectSampleCap = Some(s.width)), s)
 
   /** GROW a persisted positional GIF index — the classic family's
     * `rebuildHashBandIndex` with the new batch's animations decoded
-    * to per-frame signatures first (`nFrames` should match the
-    * build's; the artifact cannot re-sample old animations, so a
-    * larger value only affects the new batch — keep them equal). The
-    * surviving signature frame reconstructs from the artifact's own
-    * (id, sample_pos, `_h`) rows minus pending tombstones, unions the
-    * new frames, and re-runs the capped versioned write under the
-    * shared rewrite lock — the standing corpus is never re-decoded,
-    * and a crash at any boundary leaves a complete servable index. */
+    * to per-frame signatures first (`nFrames` must match the build's:
+    * `_meta.sample_cap` refuses a mismatch, since the artifact cannot
+    * re-sample old animations). The surviving signature frame
+    * reconstructs from the artifact's own (id, sample_pos, `_h`) rows
+    * minus pending tombstones, unions the new frames, and re-runs the
+    * capped versioned write under the shared rewrite lock — the
+    * standing corpus is never re-decoded, and a crash at any boundary
+    * leaves a complete servable index. */
   def rebuildGifHashBandIndex(spark: SparkSession, path: String,
       newGifs: DataFrame, gifCol: String, idCol: String, nFrames: Int = 4,
       maxBucket: Option[Int] = None,
       metricName: String = "graft_gif_index_rebuild_cap",
       outFiles: Int = 4,
-      decoder: FrameDecoder = GifFrameDecoder): Unit = {
-    require(nFrames > 0, s"nFrames must be > 0, got $nFrames")
-    implicit val sp: SparkSession = spark
-    val frames = gifFrameHashes(newGifs.select(col(idCol), col(gifCol)),
-        gifCol, nFrames, "_h", decoder)
-      .select(col(idCol), col("sample_pos"), col("_h"))
-    Dedup.rebuildHashBandIndexFrame(spark, path, frames, idCol,
-      Seq("sample_pos"), maxBucket, metricName, outFiles, gifCol,
-      sampleCap = nFrames.toLong)
+      decoder: FrameDecoder = GifFrameDecoder): Unit =
+    positionalRebuild(spark, path, new UniformFrames(nFrames, decoder),
+      newGifs, gifCol, idCol, maxBucket, metricName, outFiles)
+
+  private def positionalRebuild(spark: SparkSession, path: String,
+      s: Sampler, newDocs: DataFrame, binaryCol: String, idCol: String,
+      maxBucket: Option[Int], metricName: String, outFiles: Int): Unit = {
+    Dedup.rebuildHashBandIndexFrame(spark, path,
+      idSignatures(s, newDocs, binaryCol, idCol)(spark), idCol,
+      Seq("sample_pos"), maxBucket, metricName, outFiles, binaryCol,
+      sampleCap = s.width)
   }
 
+  /** The persisted layout's (idCol, `sample_pos`, `_h`) signature frame. */
+  private def idSignatures(s: Sampler, df: DataFrame, binaryCol: String,
+      idCol: String)(implicit spark: SparkSession): DataFrame =
+    s.hashes(df.select(col(idCol), col(binaryCol)), binaryCol, "_h")
+      .select(col(idCol), col("sample_pos"), col("_h"))
+
   // ------------------------------------------------------------------
-  // SEGMENTED audio tier — the audio twin of the video-like tier,
-  // through the SAME positional machinery: the whole-clip 64-bit
-  // fingerprint (`withAudioFingerprint`) is exact for re-containered
-  // copies but brittle to ANY length change (its 65 windows divide
-  // the WHOLE clip, so a trimmed intro moves every window boundary).
-  // Segmenting fixes that: the clip splits into consecutive
-  // fixed-DURATION segments of exactly `segmentFrames` PCM frames,
-  // each segment fingerprints with the same 65-window sign-of-delta
-  // envelope device, and two clips compare per POSITION — prepending
-  // one segment of content shifts every later position by exactly
-  // one, which is what `maxShift` tolerates. Because segment
-  // boundaries are ABSOLUTE (frame i*segmentFrames, unlike the GIF
-  // tier's length-relative sampling), the only comparability key is
-  // `segmentFrames` itself: that is the width the index records and
-  // the probes refuse on mismatch; `maxSegments` merely caps how
-  // many positions a long clip contributes and may differ freely
-  // between index and probe.
+  // SEGMENTED audio tier, through the positional machinery above: the
+  // whole-clip 64-bit fingerprint (`withAudioFingerprint`) is exact
+  // for re-containered copies but brittle to ANY length change (its
+  // 65 windows divide the WHOLE clip, so a trimmed intro moves every
+  // window boundary). Segmenting fixes that: the clip splits into
+  // consecutive fixed-DURATION segments of exactly `segmentFrames`
+  // PCM frames, each segment fingerprints with the same 65-window
+  // sign-of-delta envelope device, and two clips compare per POSITION
+  // — prepending one segment of content shifts every later position
+  // by exactly one, which is what `maxShift` tolerates. Because
+  // segment boundaries are ABSOLUTE (frame i*segmentFrames, unlike
+  // the frame samplers' length-relative sampling), the only
+  // comparability key is `segmentFrames` itself: that is the width
+  // the index records and the probes refuse on mismatch;
+  // `maxSegments` merely caps how many positions a long clip
+  // contributes and may differ freely between index and probe.
   // ------------------------------------------------------------------
 
   /** Per-segment 64-bit envelope fingerprints over REAL PCM decode —
@@ -3511,16 +3460,20 @@ object Multimodal {
   }
 
   /** One row per audio SEGMENT: (`sample_pos`, `n_segments`, `outCol`
-    * = the segment's 64-bit envelope fingerprint) — the audio twin of
-    * `gifFrameHashes`, in the exact shape the positional machinery
-    * takes. Decode is once-per-task (`mapPartitions` contract); only
-    * 8 bytes per segment ever shuffle. Zero-segment payloads emit no
-    * rows. */
+    * = the segment's 64-bit envelope fingerprint), in the exact shape
+    * the positional machinery takes. `segmentFrames` and
+    * `maxSegments` are checked here, on the driver. Only 8 bytes per
+    * segment ever shuffle. Zero-segment payloads emit no rows. */
   def audioSegmentHashes(df: DataFrame, binaryCol: String,
       segmentFrames: Long = 8320L, maxSegments: Int = 16,
       outCol: String = "seg_fp",
       decoder: PcmDecoder = JdkPcmDecoder)(
-      implicit spark: SparkSession): DataFrame = {
+      implicit spark: SparkSession): DataFrame =
+    new AudioSegments(segmentFrames, maxSegments, decoder)
+      .hashes(df, binaryCol, outCol)
+
+  private def segmentHashes(df: DataFrame, binaryCol: String, outCol: String,
+      s: AudioSegments)(implicit spark: SparkSession): DataFrame = {
     require(!df.columns.exists(c =>
         Set("sample_pos", "n_segments", outCol).contains(c)),
       s"input columns collide with audioSegmentHashes' outputs " +
@@ -3530,24 +3483,22 @@ object Multimodal {
       .add("sample_pos", IntegerType).add("n_segments", IntegerType)
       .add(outCol, LongType)
     df.mapPartitions { it =>
-      val fp = new AudioSegmentFingerprinter(segmentFrames, maxSegments,
-        decoder)
       it.flatMap { r =>
-        val hs = fp.segmentHashes(binaryOf(r, idx))
-        hs.indices.map(s => Row.fromSeq(r.toSeq :+ s :+ hs.length :+ hs(s)))
+        val hs = s.fingerprinter.segmentHashes(binaryOf(r, idx))
+        hs.indices.map(i => Row.fromSeq(r.toSeq :+ i :+ hs.length :+ hs(i)))
       }
     }(Encoders.row(outSchema))
   }
 
-  /** Clip-level near-dup pairs over segment fingerprints — the audio
-    * twin of `gifNearDupPairs`, riding `positionalNearDupPairs`
-    * unchanged: two clips pair when at least `minSegmentMatches` of
-    * their same-position segments are within `maxHamming` bits
-    * (adaptively every-position-of-equal-length for clips shorter
-    * than the threshold), `maxShift` tolerates a bounded number of
-    * prepended/trimmed SEGMENTS (the time-shift case the whole-clip
-    * fingerprint cannot see) at (2s+1)x candidate cost — still
-    * banded, never quadratic alignment. Returns
+  /** Clip-level near-dup pairs over segment fingerprints — the
+    * positional pair search (`gifNearDupPairs`' semantics) over
+    * `audioSegmentHashes`: two clips pair when at least
+    * `minSegmentMatches` of their same-position segments are within
+    * `maxHamming` bits (adaptively every-position-of-equal-length for
+    * clips shorter than the threshold), `maxShift` tolerates a
+    * bounded number of prepended/trimmed SEGMENTS (the time-shift
+    * case the whole-clip fingerprint cannot see) at (2s+1)x candidate
+    * cost — still banded, never quadratic alignment. Returns
     * (id_a, id_b, n_matched) with id_a < id_b. */
   def audioNearDupPairsSegmented(df: DataFrame, binaryCol: String,
       idCol: String, segmentFrames: Long = 8320L, maxSegments: Int = 16,
@@ -3556,99 +3507,51 @@ object Multimodal {
       metricName: String = "graft_audio_seg_band_cap",
       maxShift: Int = 0,
       decoder: PcmDecoder = JdkPcmDecoder)(
-      implicit spark: SparkSession): DataFrame = {
-    require(maxHamming >= 0, s"maxHamming must be >= 0, got $maxHamming")
-    require(minSegmentMatches >= 1 && minSegmentMatches <= maxSegments,
-      s"minSegmentMatches must be in [1, maxSegments=$maxSegments], " +
-        s"got $minSegmentMatches")
-    require(maxShift >= 0 && maxShift < maxSegments,
-      s"maxShift must be in [0, maxSegments=$maxSegments), got $maxShift")
-    val frames = audioSegmentHashes(df.select(col(idCol), col(binaryCol)),
-        binaryCol, segmentFrames, maxSegments, "_h", decoder)
-      .select(col(idCol).as("_gid"), col("sample_pos"), col("_h"),
-        col("n_segments").cast("long").as("_nf"))
-    positionalNearDupPairs(frames, maxHamming, minSegmentMatches,
-      maxBucket, metricName, maxShift)
-  }
+      implicit spark: SparkSession): DataFrame =
+    positionalPairs(new AudioSegments(segmentFrames, maxSegments, decoder),
+      df, binaryCol, idCol, maxHamming, minSegmentMatches, maxBucket,
+      metricName, maxShift)
 
   /** In-memory positional standing index over a corpus' segment
-    * fingerprints — the audio twin of `gifHashBandIndex`, same
-    * (`sample_pos`, `_k`, `_band`, `_hs`) probe shape. The width that
-    * rides `_hs` (and that the probes refuse on mismatch) is
-    * `segmentFrames`: positions are absolute, so it is the ONLY
-    * parameter two sides must share — `maxSegments` may differ
-    * freely (it caps positions, it does not move them). */
+    * fingerprints, in the (`sample_pos`, `_k`, `_band`, `_hs`) probe
+    * shape. The width that rides `_hs` (and that the probes refuse on
+    * mismatch) is `segmentFrames`. */
   def audioSegmentHashBandIndex(standing: DataFrame, audioCol: String,
       segmentFrames: Long = 8320L, maxSegments: Int = 16,
       maxBucket: Int = HotKeys.DefaultBucketCap,
       metricName: String = "graft_audio_seg_index_cap",
       decoder: PcmDecoder = JdkPcmDecoder)(
-      implicit spark: SparkSession): DataFrame = {
-    val frames = audioSegmentHashes(standing.select(col(audioCol)),
-        audioCol, segmentFrames, maxSegments, "_h", decoder)
-      .select(col("sample_pos"), col("_h"))
-    val bands = frames.select(col("sample_pos"), col("_h"),
-        posexplode(array((0 until 4).map(k =>
-          shiftrightunsigned(col("_h"), 16 * k).bitwiseAND(lit(65535L))): _*)))
-      .toDF("sample_pos", "_h", "_k", "_band")
-    HotKeys.cap(bands, Seq(col("sample_pos"), col("_k"), col("_band")),
-        maxBucket, minPerKey = 1, metricName = metricName)
-      .groupBy("sample_pos", "_k", "_band")
-      .agg(collect_list("_h").as("_hs"))
-      .withColumn("_hs", col("_hs").as("_hs", sampleWidthMeta(segmentFrames)))
-  }
+      implicit spark: SparkSession): DataFrame =
+    positionalIndex(new AudioSegments(segmentFrames, maxSegments, decoder),
+      standing, audioCol, maxBucket, metricName)
 
   /** Keep the rows whose clip does NOT near-dup a standing audio
-    * corpus — the audio twin of `gifNearDupFilterAgainst`, riding
-    * `positionalFilterAgainst` unchanged (adaptive length gate,
-    * bounded shift, distinct-position hit count, and the SAME stated
-    * asymmetry: the index does not carry standing clips' segment
-    * counts, so the threshold comes from the batch side's length —
-    * use the pair operator when both lengths matter). The width
-    * guard refuses a probe whose `segmentFrames` differs from the
-    * index's (carried as `_hs` column metadata by
-    * `audioSegmentHashBandIndex` / `readAudioSegmentHashBandIndex`):
-    * mismatched segment durations hash DIFFERENT math, not shifted
-    * positions. Zero-segment payloads keep. Batch intake only — the
-    * per-clip hit count is an id-keyed aggregation; stream via
-    * `audioNearDupMicroBatch`. */
+    * corpus — the positional probe (`gifNearDupFilterAgainst`'s
+    * semantics, including the stated asymmetry: the index does not
+    * carry standing clips' segment counts, so the threshold comes
+    * from the batch side's length — use the pair operator when both
+    * lengths matter). A probe whose `segmentFrames` differs from the
+    * index's is refused: mismatched segment durations hash DIFFERENT
+    * math, not shifted positions. Zero-segment payloads keep. Batch
+    * intake only — the per-clip hit count is an id-keyed aggregation;
+    * stream via `audioNearDupMicroBatch`. */
   def audioNearDupFilterAgainst(df: DataFrame, binaryCol: String,
       idCol: String, index: DataFrame, segmentFrames: Long = 8320L,
       maxSegments: Int = 16, maxHamming: Int = 3,
       minSegmentMatches: Int = 3, broadcastIndex: Boolean = true,
       maxShift: Int = 0,
       decoder: PcmDecoder = JdkPcmDecoder)(
-      implicit spark: SparkSession): DataFrame = {
-    require(maxHamming >= 0, s"maxHamming must be >= 0, got $maxHamming")
-    require(minSegmentMatches >= 1 && minSegmentMatches <= maxSegments,
-      s"minSegmentMatches must be in [1, maxSegments=$maxSegments], " +
-        s"got $minSegmentMatches")
-    require(maxShift >= 0 && maxShift < maxSegments,
-      s"maxShift must be in [0, maxSegments=$maxSegments), got $maxShift")
-    indexSampleWidth(index).foreach { built =>
-      require(built == segmentFrames,
-        s"audioNearDupFilterAgainst: index carries segment width $built " +
-          s"(segmentFrames at build/read) but this probe segments at " +
-          s"$segmentFrames — probe with the index's width, or rebuild " +
-          "the index at the probe's")
-    }
-    val frames = audioSegmentHashes(df.select(col(idCol), col(binaryCol)),
-        binaryCol, segmentFrames, maxSegments, "_h", decoder)
-      .select(col(idCol), col("sample_pos"), col("_h"),
-        col("n_segments").cast("long").as("_nf"))
-    positionalFilterAgainst(df, idCol, frames, index, maxHamming,
-      minSegmentMatches, broadcastIndex, maxShift)
-  }
+      implicit spark: SparkSession): DataFrame =
+    positionalFilter("audioNearDupFilterAgainst",
+      new AudioSegments(segmentFrames, maxSegments, decoder), df, binaryCol,
+      idCol, index, maxHamming, minSegmentMatches, broadcastIndex, maxShift)
 
-  /** STREAM-ready segmented-audio intake — the audio twin of
-    * `gifNearDupMicroBatch`, same contract: wrap a sink, pass to
-    * `foreachBatch`, and every micro-batch flows through
-    * `audioNearDupFilterAgainst` against the standing index (read
-    * ONCE and persisted — the read-once-cache contract). The width
-    * guard runs at stream BUILD so a mismatched `segmentFrames`
-    * fails before the first batch. Batches dedup against the
-    * STANDING corpus only; in-batch twins are the pair operator's
-    * job, and the index grows between batches via
+  /** STREAM-ready segmented-audio intake, `gifNearDupMicroBatch`'s
+    * contract: wrap a sink, pass to `foreachBatch`, and every
+    * micro-batch flows through `audioNearDupFilterAgainst` against the
+    * standing index (read ONCE and persisted). The width check runs at
+    * stream BUILD. Batches dedup against the STANDING corpus only; the
+    * index grows between batches via
     * `rebuildAudioSegmentHashBandIndex`. */
   def audioNearDupMicroBatch(binaryCol: String, idCol: String,
       index: DataFrame, segmentFrames: Long = 8320L, maxSegments: Int = 16,
@@ -3656,30 +3559,22 @@ object Multimodal {
       broadcastIndex: Boolean = true, maxShift: Int = 0,
       decoder: PcmDecoder = JdkPcmDecoder)(
       sink: (DataFrame, Long) => Unit)(
-      implicit spark: SparkSession): (DataFrame, Long) => Unit = {
-    indexSampleWidth(index).foreach { built =>
-      require(built == segmentFrames,
-        s"audioNearDupMicroBatch: index carries segment width $built but " +
-          s"the stream probes at $segmentFrames — probe with the index's " +
-          "width, or rebuild the index at the probe's")
-    }
-    (batch: DataFrame, batchId: Long) =>
-      sink(audioNearDupFilterAgainst(batch, binaryCol, idCol, index,
-        segmentFrames, maxSegments, maxHamming, minSegmentMatches,
-        broadcastIndex, maxShift, decoder), batchId)
-  }
+      implicit spark: SparkSession): (DataFrame, Long) => Unit =
+    positionalMicroBatch("audioNearDupMicroBatch",
+      new AudioSegments(segmentFrames, maxSegments, decoder), binaryCol,
+      idCol, index, maxHamming, minSegmentMatches, broadcastIndex,
+      maxShift)(sink)
 
-  /** Persist the positional AUDIO index — the positional family's
-    * machinery verbatim (versioned from birth, capped bands, one
-    * action, `_meta`; deletes/compaction/stats/health are the classic
-    * entry points, `IndexMaintenance.healthSweep` reports it as
-    * `hashband`/`positional`): one row per (`_k`, `_band`,
+  /** Persist the positional AUDIO index — `writeGifHashBandIndex`'s
+    * layout and lifecycle (deletes/compaction/stats/health are the
+    * classic entry points; `IndexMaintenance.healthSweep` reports it
+    * as `hashband`/`positional`): one row per (`_k`, `_band`,
     * `sample_pos`, id, segment hash `_h`). `_meta.sample_cap` records
-    * `segmentFrames` — the audio layout's comparability key (see
-    * `audioSegmentHashBandIndex`) — so a GIF positional artifact
-    * (sample_cap = its nFrames) and an audio one refuse each other's
-    * probes through the SAME width check; `_meta.hash_col` records
-    * the audio column for fleet-report legibility. The standing
+    * `segmentFrames`, so a GIF positional artifact (sample_cap = its
+    * nFrames) and an audio one refuse each other's probes through the
+    * SAME width check; `_meta.hash_col` records the audio column. The
+    * width is checked before the root is reset, so a bad
+    * `segmentFrames` leaves an existing index untouched. The standing
     * corpus decodes exactly once, here. */
   def writeAudioSegmentHashBandIndex(standing: DataFrame, audioCol: String,
       idCol: String, path: String, segmentFrames: Long = 8320L,
@@ -3687,56 +3582,38 @@ object Multimodal {
       metricName: String = "graft_audio_seg_index_write_cap",
       outFiles: Int = 4,
       decoder: PcmDecoder = JdkPcmDecoder)(
-      implicit spark: SparkSession): Unit = {
-    require(idCol != "sample_pos",
-      "idCol 'sample_pos' collides with the positional layout's own column")
-    val frames = audioSegmentHashes(standing.select(col(idCol), col(audioCol)),
-        audioCol, segmentFrames, maxSegments, "_h", decoder)
-      .select(col(idCol), col("sample_pos"), col("_h"))
-    Dedup.writeHashBandIndexFrame(frames, idCol, Seq("sample_pos"), audioCol,
-      path, maxBucket, metricName, outFiles, sampleCap = segmentFrames)
-  }
+      implicit spark: SparkSession): Unit =
+    positionalWrite(new AudioSegments(segmentFrames, maxSegments, decoder),
+      standing, audioCol, idCol, path, maxBucket, metricName, outFiles)
 
   /** Read a persisted positional audio index in the probe shape —
-    * `readGifHashBandIndex`'s contract with the audio width
-    * semantics: `segmentFrames` is validated against the build-time
+    * `readGifHashBandIndex`'s contract with the audio width:
+    * `segmentFrames` is validated against the build-time
     * `_meta.sample_cap` record and rides the returned frame as `_hs`
     * metadata so the probe re-checks it. A classic artifact is
     * refused schema-derivedly; a positional GIF artifact is refused
     * by the width record (its sample_cap is a frame COUNT, orders of
     * magnitude below any legal segmentFrames). */
   def readAudioSegmentHashBandIndex(spark: SparkSession, path: String,
-      segmentFrames: Long = 8320L): DataFrame = {
-    require(segmentFrames >= 65 && segmentFrames % 65 == 0,
-      s"segmentFrames must be a positive multiple of 65, got $segmentFrames")
-    Dedup.readHashBandIndexFrame(spark, path, Seq("sample_pos"),
-        expectSampleCap = Some(segmentFrames))
-      .withColumn("_hs", col("_hs").as("_hs", sampleWidthMeta(segmentFrames)))
-  }
+      segmentFrames: Long = 8320L): DataFrame =
+    positionalRead(spark, path,
+      new AudioSegments(segmentFrames, 16, JdkPcmDecoder))
 
-  /** GROW a persisted positional audio index — the positional
-    * family's growth rebuild with the new batch's clips segmented
-    * first: the surviving signature frame reconstructs from the
-    * artifact's own rows minus pending tombstones, unions the new
-    * frames, and re-runs the capped versioned write under the shared
-    * rewrite lock. `segmentFrames` must equal the build's
-    * (`_meta.sample_cap` refuses a mismatch — absolute positions
-    * make a mixed-width union silently wrong, never merely stale). */
+  /** GROW a persisted positional audio index — the positional growth
+    * rebuild with the new batch's clips segmented first.
+    * `segmentFrames` must equal the build's (`_meta.sample_cap`
+    * refuses a mismatch — absolute positions make a mixed-width union
+    * silently wrong, never merely stale). */
   def rebuildAudioSegmentHashBandIndex(spark: SparkSession, path: String,
       newClips: DataFrame, audioCol: String, idCol: String,
       segmentFrames: Long = 8320L, maxSegments: Int = 16,
       maxBucket: Option[Int] = None,
       metricName: String = "graft_audio_seg_index_rebuild_cap",
       outFiles: Int = 4,
-      decoder: PcmDecoder = JdkPcmDecoder): Unit = {
-    implicit val sp: SparkSession = spark
-    val frames = audioSegmentHashes(newClips.select(col(idCol), col(audioCol)),
-        audioCol, segmentFrames, maxSegments, "_h", decoder)
-      .select(col(idCol), col("sample_pos"), col("_h"))
-    Dedup.rebuildHashBandIndexFrame(spark, path, frames, idCol,
-      Seq("sample_pos"), maxBucket, metricName, outFiles, audioCol,
-      sampleCap = segmentFrames)
-  }
+      decoder: PcmDecoder = JdkPcmDecoder): Unit =
+    positionalRebuild(spark, path,
+      new AudioSegments(segmentFrames, maxSegments, decoder), newClips,
+      audioCol, idCol, maxBucket, metricName, outFiles)
 
   /** Corpus-level media stats: the aggregation never touches the raw
     * bytes after the map side — only the small meta struct shuffles. */

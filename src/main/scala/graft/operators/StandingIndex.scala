@@ -39,6 +39,29 @@ private[operators] object StandingIndex {
   def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
+  /** The standing-index families, as their on-disk layouts tell them
+    * apart; `name` is the family's name in health reports. */
+  sealed abstract class Family(val name: String)
+  case object HashBand extends Family("hashband")
+  case object Bm25 extends Family("bm25")
+  case object Ivf extends Family("ivf")
+
+  /** Which family wrote the root at `path`, from the layout alone:
+    * hash-band indexes are versioned from birth (`bands_vN`), BM25
+    * carries its `df`/`meta` table dirs, IVF carries `index_vN` after
+    * a compaction or `cid=...` list partitions while flat. None for a
+    * missing root or an unrecognized layout. */
+  def detectFamily(fs: FileSystem, path: String): Option[Family] = {
+    val p = new Path(path)
+    if (!fs.exists(p)) return None
+    val names = fs.listStatus(p).map(_.getPath.getName).toSet
+    if (names.exists(_.startsWith("bands_v"))) Some(HashBand)
+    else if (names.contains("df") && names.contains("meta")) Some(Bm25)
+    else if (names.exists(_.startsWith("index_v")) ||
+        names.exists(_.startsWith("cid="))) Some(Ivf)
+    else None
+  }
+
   /** ONE definition of "is this entry name a version pointer" — the
     * resolver and every rebuild's name-scoped reset share it, so the
     * delete-set and the resolve-set cannot drift apart (a pointer the

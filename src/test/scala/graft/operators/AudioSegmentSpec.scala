@@ -278,6 +278,37 @@ class AudioSegmentSpec extends SparkSpecBase {
     }
   }
 
+  test("a bad segment width refuses at call time, before a write can reset the standing index") {
+    withTempDir("audbadw") { dir =>
+      val path = dir.getAbsolutePath + "/idx"
+      val standing = Seq(
+        (100L, clip(h1, h2, h3, h4)),
+        (101L, clip(h5, h6, h7, h8))).toDF("id", "aud")
+      Multimodal.writeAudioSegmentHashBandIndex(standing, "aud", "id",
+        path, SegFrames, metricName = "graft_audio_seg_spec_badw")(spark)
+      val batch = Seq(
+        (1L, clip(h1 ^ 1L, h2 ^ 1L, h3 ^ 1L, h4 ^ 1L)), // near 100
+        (3L, clip(hX, hX, hX, hX))                       // new
+      ).toDF("id", "aud")
+      def kept(): Set[Long] =
+        Multimodal.audioNearDupFilterAgainst(batch, "aud", "id",
+            Multimodal.readAudioSegmentHashBandIndex(spark, path, SegFrames),
+            SegFrames)(spark)
+          .select("id").collect().map(_.getLong(0)).toSet
+      assert(kept() == Set(3L))
+      // 100 is not a multiple of 65: refused on the driver, no job run
+      val err = intercept[IllegalArgumentException] {
+        Multimodal.writeAudioSegmentHashBandIndex(standing, "aud", "id",
+          path, segmentFrames = 100L)(spark)
+      }
+      assert(err.getMessage.contains("segmentFrames"), err.getMessage)
+      assert(kept() == Set(3L), "the refused write must leave the index serving")
+      intercept[IllegalArgumentException] {
+        Multimodal.audioSegmentHashes(batch, "aud", segmentFrames = 100L)(spark)
+      }
+    }
+  }
+
   test("stream intake: audioNearDupMicroBatch over micro-batches == the batch filter; width guard at stream build") {
     val standing = Seq(
       (100L, clip(h1, h2, h3, h4)),

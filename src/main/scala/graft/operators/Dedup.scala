@@ -1539,13 +1539,19 @@ object Dedup {
     * index ever mixes root-level data files with a nested version
     * dir, and every compaction crash boundary leaves readers on a
     * complete older version (a half-written `bands_vN` is a sibling
-    * the resolver never names). A rebuild RESETS the root first
-    * (tombstones, pointers, old versions, meta — deleted ids become
-    * re-addable); a crash mid-rebuild leaves a loudly unreadable
-    * index (no pointer, no root data) — rerun the rebuild. `_meta`
-    * lands after the pointer; probes never read it, so losing it
-    * costs stats accuracy, never probe correctness. A live (or
-    * crashed) compaction is refused before the reset, exactly like
+    * the resolver never names). A rebuild over an existing index is
+    * the same versioned rewrite as growth and compaction, from an
+    * empty base: the new `bands_vN` is written beside the served
+    * version, which keeps serving until the pointer swap — so a job
+    * that fails mid-rebuild leaves the old index serving. The old
+    * `_meta` goes once the band job has succeeded, just before the
+    * swap; the swap then clears the old versions, pointers and
+    * tombstones (deleted ids become re-addable; a crash before that
+    * clear leaves them pending until a rerun), and the new `_meta`
+    * lands after it. Probes never read `_meta`, so losing it in a
+    * crash costs stats accuracy, never probe correctness (stats,
+    * deletes and growth refuse loudly until a rerun). A live (or
+    * crashed) compaction is refused before the write, exactly like
     * the BM25 rebuild: clearing its lock by hand is the documented
     * recovery, and a rebuild racing a live compaction could otherwise
     * be shadowed by the compaction's later pointer swap.
@@ -1583,8 +1589,8 @@ object Dedup {
   /** Family-shared write core over a PREPARED signature frame —
     * (idCol, posCols..., `_h`) — so the POSITIONAL layout (the
     * `Multimodal` sampler tiers, which key bands by sampled
-    * position as well) runs the exact same reset / cap /
-    * versioned-write / pointer / meta machinery as the classic
+    * position as well) runs the exact same cap / versioned-rewrite /
+    * pointer / meta machinery as the classic
     * single-hash family: `posCols` is empty for the classic layout
     * and `Seq("sample_pos")` for the positional one. Everything
     * downstream of the frame prep is shared — the two layouts cannot
@@ -1599,17 +1605,20 @@ object Dedup {
     val fs = StandingIndex.fs(spark, path)
     fs.mkdirs(new org.apache.hadoop.fs.Path(path))
     StandingIndex.refuseIfCompacting(fs, path, rebuild = true)
-    // rebuild reset, name-scoped: anything else at the root survives
-    // untouched (the root itself is never read as parquet — only
-    // bands_vN is — so a surviving stranger is inert)
-    StandingIndex.resetVersions(fs, path, "bands_v", Set("_meta"))
-    val (ndocs, totalBands, droppedBands) =
-      writeBandsVersion(spark, fs, base, idCol, posCols, hashColName, path,
-        s"$path/bands_v1", maxBucket, metricName, outFiles)
-    StandingIndex.publish(fs, path, 1L, "concurrent rebuilds?")
-    writeHashIndexMeta(spark, path, ndocs, totalBands, droppedBands,
-      maxBucket, idCol, posCols.headOption.getOrElse(""), sampleCap,
-      hashColName)
+    // a rewrite from an empty base (see writeHashBandIndex); the
+    // housekeeping is name-scoped, so anything else at the root
+    // survives untouched (the root itself is never read as parquet —
+    // only bands_vN is — so a surviving stranger is inert)
+    StandingIndex.rewrite(fs, path, "bands_v", None, growth = true) { (dir, _) =>
+      val stats = writeBandsVersion(spark, fs, base, idCol, posCols,
+        hashColName, path, dir, maxBucket, metricName, outFiles)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$path/_meta"), true)
+      Some(stats)
+    }.foreach { case (ndocs, totalBands, droppedBands) =>
+      writeHashIndexMeta(spark, path, ndocs, totalBands, droppedBands,
+        maxBucket, idCol, posCols.headOption.getOrElse(""), sampleCap,
+        hashColName)
+    }
   }
 
   /** `pos_col`/`sample_cap` record the positional layout's shape
@@ -1635,7 +1644,7 @@ object Dedup {
   }
 
   /** Shared VERSIONED band write — the core of both
-    * `writeHashBandIndex` (v1, after the root reset) and
+    * `writeHashBandIndex` (a rewrite from an empty base) and
     * `rebuildHashBandIndex` (v_{max+1}, under the compaction lock),
     * so the cap semantics, metric names, zero-survivor refusal and
     * exact statistics cannot drift between the two paths. Explodes
@@ -1933,7 +1942,7 @@ object Dedup {
     * An index whose EVERY row is deleted skips the rewrite (the
     * empty-dir corner both siblings refuse) and keeps its
     * tombstones — probes stay correct through the anti-join; the way
-    * out is a rebuild (`writeHashBandIndex`'s root reset). */
+    * out is a rebuild (`writeHashBandIndex`, which clears them). */
   def compactHashBandIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, outFiles: Int = 4): Unit = {
     require(outFiles >= 1, s"outFiles must be >= 1, got $outFiles")

@@ -321,7 +321,7 @@ object IndexMaintenance {
                 cur.reasons.exists(_.contains("tombstonedRows")))
               " — a fully-tombstoned hash-band index compacts as a " +
                 "documented no-op: if this persists across passes, " +
-                "rebuild the index (its write entry point's root reset) " +
+                "rebuild the index through its write entry point " +
                 "or retire the root"
             else
               " — check the reasons against the policy (e.g. a " +

@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.{VectorExpressions => VE}
 
 /** Approximate-nearest-neighbor operators over an embedding column
   * (`array<float>`) — library form of q37-q39. Baseline: brute-force
@@ -14,8 +16,7 @@ object Similarity {
     * per row inside whole-stage codegen, with accumulation order (and
     * therefore bits) identical to the aggregate(zip_with(...)) HOF
     * formulation it replaced. */
-  def cosine(a: Column, b: Column): Column =
-    graft.functions.VectorExpressions.cosine_sim(a, b)
+  def cosine(a: Column, b: Column): Column = VE.cosine_sim(a, b)
 
   private def asDouble(c: Column): Column = transform(c, x => x.cast("double"))
 
@@ -31,12 +32,7 @@ object Similarity {
     // and Spark sorts NaN ABOVE every real value under desc — without
     // the filter it would take rank 1 for every query (and poison the
     // ground truth this function generates for the recall harness)
-    df.filter(size(col(embCol)) === query.length)
-      .select(col(idCol),
-        round(cosine(asDouble(col(embCol)), q), 4).as("cos"))
-      .filter(!isnan(col("cos")))
-      .orderBy(desc("cos"), col(idCol))
-      .limit(k)
+    exactTopK(df.filter(size(col(embCol)) === query.length), embCol, idCol, q, k)
   }
 
   /** Sign-LSH bucket key from the first `bits` dimensions. */
@@ -71,8 +67,7 @@ object Similarity {
     // probed — instead of a common-prefix nearest centroid
     df.withColumn(cidCol,
       when(size(col(embCol)) === dims,
-        graft.functions.VectorExpressions.nearest_centroid(
-          asDouble(col(embCol)), codebook)))
+        VE.nearest_centroid(asDouble(col(embCol)), codebook)))
   }
 
   /** Inverted lists ranked by squared-L2 distance of their centroid to
@@ -88,7 +83,7 @@ object Similarity {
       (s, cid)
     }.sortBy(identity).map(_._2)
 
-  /** Cluster-side twin of `rankInvertedLists`: per-row array of
+  /** `rankInvertedLists` as a per-row column: an array of
     * (squared-L2 distance, cid) structs over a literal codebook,
     * sorted ascending (struct field order ranks by distance, ties by
     * cid) — ONE definition for every operator that ranks a row's
@@ -102,33 +97,313 @@ object Similarity {
         (x, y) => (x - y) * (x - y)), lit(0.0), (a, v) => a + v).as("d"),
       c.getField("_1").as("cid"))))
 
-  /** IVF probe with an explicit query vector (the realistic serving
-    * shape: the query is NOT a corpus member). The codebook is ranked
-    * driver-side; the scan then reads only the `nprobe` nearest
-    * inverted lists (`cid IN (...)` — partition/row-group prunable when
-    * the assigned corpus is written bucketed by cid) and scores cosine
-    * against the literal query. nprobe is THE recall/latency knob:
-    * nprobe=1 reads ~n/K vectors but misses neighbors that fell across
-    * a Voronoi boundary; nprobe=p multiplies work by p and recovers
-    * them (SimilaritySpec pins recall@10 >= 0.9 at nprobe=4 where
-    * nprobe=1 demonstrably misses). */
-  def ivfProbeVec(assigned: DataFrame, embCol: String, idCol: String,
-      query: Seq[Double], k: Int, codebook: Seq[(Long, Seq[Double])],
-      nprobe: Int = 1, cidCol: String = "cid",
-      excludeId: Option[Long] = None): DataFrame = {
-    require(codebook.nonEmpty, "ivfProbeVec needs the codebook to rank inverted lists")
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val cids = rankInvertedLists(codebook, query).take(nprobe)
-    val base = assigned.filter(col(cidCol).isin(cids: _*))
-    val scoped = excludeId.fold(base)(id => base.filter(col(idCol) =!= id))
-    // same width/NaN/float guards as bruteForceTopK (see its comment)
-    scoped.filter(size(col(embCol)) === query.length)
-      .select(col(idCol),
-        round(cosine(asDouble(col(embCol)), typedLit(query)), 4).as("cos"))
+  /** The ANN probe family's closed codec type. Every probe — one query
+    * or a batch, inverted lists or a flat scan — runs ONE list ranking,
+    * probe join, shortlist and exact re-rank over it, and a case knows
+    * only its own parts:
+    *  - its kernel: the score of a row's code against a prepared query
+    *    (Flat: the exact `cosine`; SQ8: `sq_adc_cos`, or `sq_adc_l2`
+    *    for residual models; PQ: `pq_adc`; BQ: `bq_hamming`, or
+    *    `bq_adc_dot` when asymmetric) and that score's sort direction;
+    *  - its query preparation: normalize, shift by each probed list's
+    *    normalized centroid (residual models), rotate (OPQ), encode
+    *    (BQ Hamming) — on the driver for a single query, as columns
+    *    for a batch;
+    *  - whether its score is already the exact cosine (Flat) or keeps
+    *    a shortlist of the `rerank` best scores (default max(4k, 32))
+    *    for an exact-cosine re-rank;
+    *  - its argument checks (query and residual-codebook width).
+    *
+    * Shared rules: lists rank by the RAW squared-L2 distance of their
+    * centroid to the query (ties by cid) and the scan reads only the
+    * `nprobe` nearest (`cid IN (...)`, partition-prunable on a
+    * `writeIndex`ed index). Null shortlist scores DROP, so a null-coded
+    * row behaves as if absent from the shortlist (a NaN score, which
+    * would lead a descending sort, is nulled first; PQ drops NaN too).
+    * With a `rerankFrom` store (a frame of `idCol` + `embCol`) the scan
+    * never reads `embCol` — the index may be codes only — and the
+    * shortlist joins the store by id (broadcast for one query;
+    * AQE-sized for a batch); ids the store lacks drop. NaN exact
+    * cosines (zero-norm rows) drop before the final sort, where Spark
+    * would rank NaN first. A batch probe ranks each query's lists
+    * against the broadcast codebook; `broadcastProbes` sizes its join
+    * to the corpus (None: AQE decides at the ranking's window shuffle;
+    * Some(true): broadcast; Some(false): shuffle both sides on the list
+    * id — results are identical on every path). A wrong-width batch
+    * query probes nothing, except under PQ, whose batch fails the job
+    * loudly (`assert_true`), as its single query does on the driver.
+    * Batch output is (qIdCol, idCol, cos, rank), the query id renamed
+    * `q_<name>` when the two id columns share a name; `excludeSelf`
+    * drops each member query's self-match. */
+  private[operators] sealed trait Codec
+
+  /** Raw vectors: the score is the exact cosine, so nothing shortlists. */
+  private[operators] case object Flat extends Codec
+
+  private[operators] sealed abstract class Coded(val model: String,
+      val scoreName: String) extends Codec {
+    def codeCol: String
+    def dims: Int
+    def residual: Boolean = false
+    /** Score of `codeCol` against the prepared query column `q`. */
+    def score(q: Column): Column
+    def order: Column
+    def keep: Column = col(scoreName).isNotNull
+    /** OPQ rotation into the codebooks' frame (identity elsewhere). */
+    def turn(v: Seq[Double]): Seq[Double] = v
+    def turnCol(v: Column): Column = v
+    /** The prepared single query, as a literal. */
+    def queryLit(qn: Seq[Double]): Column = typedLit(turn(qn))
+    /** Batch query columns carried through the list ranking, and the
+      * one `score` reads. */
+    def queryCols: Seq[String] = Seq("_qn")
+    def batchQuery: String = "_qn"
+    /** Batch wrong-width guard over the normalized `_qn`. */
+    def guard(probes: DataFrame, qEmbCol: String): DataFrame =
+      probes.withColumn("_qn", when(size(col("_qn")) === dims, col("_qn")))
+    def check(query: Option[Seq[Double]], lists: Option[Lists]): Unit = {
+      query.foreach(q => require(q.length == dims,
+        s"query has ${q.length} dims but the $model codes $dims"))
+      require(!residual || lists.forall(_.codebook.forall(_._2.length == dims)),
+        s"coarse centroid dims != $model dims ($dims) — the residual query " +
+          "shift would silently truncate or null-pad")
+    }
+  }
+
+  /** The codecs with a code-vs-code (SDC) pair search: a direct code
+    * assign and the two-sided approximate cosine. */
+  private[operators] sealed trait Sdc {
+    def tag: String
+    def assign(df: DataFrame, embCol: String): DataFrame
+    def sdc(a: Column, b: Column): Column
+  }
+
+  private[operators] final case class Sq8(m: SqModel, codeCol: String)
+      extends Coded("SqModel", "_sqc") with Sdc {
+    def dims: Int = m.dims
+    def tag: String = "sq"
+    def assign(df: DataFrame, embCol: String): DataFrame = sqAssign(df, embCol, m, codeCol)
+    def sdc(a: Column, b: Column): Column = VE.sq_sdc_cos(a, b, m.mm)
+    override def residual: Boolean = m.residual
+    def score(q: Column): Column =
+      if (m.residual) VE.sq_adc_l2(q, col(codeCol), m.mm)
+      else { val a = VE.sq_adc_cos(q, col(codeCol), m.mm); when(!isnan(a), a) }
+    def order: Column =
+      if (m.residual) asc_nulls_last(scoreName) else desc_nulls_last(scoreName)
+  }
+
+  private[operators] final case class Pq(m: PqModel, codeCol: String)
+      extends Coded("PqModel", "_adc") with Sdc {
+    def dims: Int = m.dims
+    def tag: String = "pq"
+    def assign(df: DataFrame, embCol: String): DataFrame = pqAssign(df, embCol, m, codeCol)
+    def sdc(a: Column, b: Column): Column = VE.pq_sdc_cos(a, b, m.codebooks)
+    override def residual: Boolean = m.residual
+    def score(q: Column): Column = VE.pq_adc(q, col(codeCol), m.codebooks)
+    def order: Column = asc(scoreName)
+    override def keep: Column = col(scoreName).isNotNull && !isnan(col(scoreName))
+    override def turn(v: Seq[Double]): Seq[Double] = m.rotation.fold(v)(rotateVec(_, v))
+    override def turnCol(v: Column): Column = m.rotation.fold(v)(VE.mat_vec(_, v))
+    override def guard(probes: DataFrame, qEmbCol: String): DataFrame = probes
+      .filter(col(qEmbCol).isNotNull)
+      // assert_true returns null when the predicate holds, so the
+      // filter keeps every valid row and cannot be pruned away
+      .filter(assert_true(size(col(qEmbCol)) === dims,
+        lit(s"probe embedding dims != PqModel dims ($dims)")).isNull)
+  }
+
+  private[operators] final case class Bq(m: BqModel, codeCol: String,
+      asymmetric: Boolean) extends Coded("BqModel", "_bqh") {
+    def dims: Int = m.dims
+    def score(q: Column): Column =
+      if (asymmetric) { val a = VE.bq_adc_dot(q, col(codeCol)); when(!isnan(a), a) }
+      else VE.bq_hamming(q, col(codeCol)).cast("double")
+    def order: Column =
+      if (asymmetric) desc_nulls_last(scoreName) else asc_nulls_last(scoreName)
+    // Hamming scores the query's code: bq_encode of a literal folds to
+    // the code literal at optimization
+    override def queryLit(qn: Seq[Double]): Column =
+      if (asymmetric) typedLit(qn) else VE.bq_encode(typedLit(qn), m.thresholds)
+    override def queryCols: Seq[String] = Seq("_qn", "_qc")
+    override def batchQuery: String = if (asymmetric) "_qn" else "_qc"
+    override def guard(probes: DataFrame, qEmbCol: String): DataFrame =
+      super.guard(probes, qEmbCol)
+        .withColumn("_qc", VE.bq_encode(col("_qn"), m.thresholds))
+  }
+
+  /** A probe's inverted lists: the coarse codebook, the probe width
+    * and the list column; `broadcastProbes` sizes a batch probe join. */
+  private[operators] final case class Lists(codebook: Seq[(Long, Seq[Double])],
+      nprobe: Int, cidCol: String, broadcastProbes: Option[Boolean] = None)
+
+  /** The family's shared argument checks; returns the shortlist size. */
+  private def checkProbe(fn: String, codec: Codec, k: Int, rerank: Int,
+      lists: Option[Lists], query: Option[Seq[Double]]): Int = {
+    lists.foreach { l =>
+      require(l.codebook.nonEmpty, s"$fn needs the codebook to rank inverted lists")
+      require(l.nprobe >= 1, s"nprobe must be >= 1, got ${l.nprobe}")
+    }
+    codec match {
+      case Flat => k
+      case c: Coded =>
+        c.check(query, lists)
+        val rr = if (rerank > 0) rerank else math.max(4 * k, 32)
+        require(rr >= k, s"rerank ($rr) must be >= k ($k)")
+        rr
+    }
+  }
+
+  /** Exact-cosine top-k of `rows` against the query column `q`. */
+  private def exactTopK(rows: DataFrame, embCol: String, idCol: String,
+      q: Column, k: Int): DataFrame =
+    rows.select(col(idCol), round(cosine(asDouble(col(embCol)), q), 4).as("cos"))
       .filter(!isnan(col("cos")))
       .orderBy(desc("cos"), col(idCol))
       .limit(k)
+
+  /** Per-query exact-cosine top-k of (`_qid`, `_qe`)-carrying rows. */
+  private def exactTopKAll(rows: DataFrame, embCol: String, idCol: String,
+      qIdCol: String, k: Int): DataFrame =
+    rows.select(col("_qid"), col(idCol),
+        round(cosine(asDouble(col(embCol)), col("_qe")), 4).as("cos"))
+      .filter(col("cos").isNotNull && !isnan(col("cos")))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy("_qid").orderBy(desc("cos"), col(idCol))))
+      .filter(col("rank") <= k)
+      .select(col("_qid").as(if (qIdCol == idCol) s"q_$qIdCol" else qIdCol),
+        col(idCol), col("cos"), col("rank"))
+
+  private def dropSelf(joined: DataFrame, idCol: String,
+      excludeSelf: Boolean): DataFrame =
+    if (excludeSelf) joined.filter(!(col(idCol) <=> col("_qid"))) else joined
+
+  /** The single-query probe over `codec` (see Codec). */
+  private def probeOne(fn: String, scan: DataFrame, embCol: String,
+      idCol: String, query: Seq[Double], k: Int, codec: Codec,
+      lists: Option[Lists], excludeId: Option[Long], rerank: Int = 0,
+      rerankFrom: Option[DataFrame] = None): DataFrame = {
+    val rr = checkProbe(fn, codec, k, rerank, lists, Some(query))
+    val cids = lists.fold(Seq.empty[Long])(l =>
+      rankInvertedLists(l.codebook, query).take(l.nprobe))
+    val base = lists.fold(scan)(l => scan.filter(col(l.cidCol).isin(cids: _*)))
+    val scoped = excludeId.fold(base)(id => base.filter(col(idCol) =!= id))
+    codec match {
+      case Flat =>
+        // width guard: the cosine kernel scores unequal lengths over
+        // the common prefix — a plausible partial score
+        exactTopK(scoped.filter(size(col(embCol)) === query.length),
+          embCol, idCol, typedLit(query), k)
+      case c: Coded =>
+        val qn = normalizeVec(query)
+        val out = (s: Column) => col(idCol) +:
+          rerankFrom.fold(Seq(col(embCol)))(_ => Nil) :+ s.as(c.scoreName)
+        val scored = lists.filter(_ => c.residual).fold(
+            scoped.select(out(c.score(c.queryLit(qn))): _*)) { l =>
+          // residual: each probed list scores ITS shifted query
+          // (q̂ − ĉ, rotated for OPQ), computed here and joined on the
+          // list id from a KB-sized broadcast lookup, so the kernel and
+          // its model literal appear once however wide the probe
+          val spark = scan.sparkSession
+          import spark.implicits._
+          val cmap = l.codebook.toMap
+          val shifted = cids.map(cid => (cid, c.turn(
+            qn.zip(normalizeVec(cmap(cid))).map { case (a, b) => a - b })))
+            .toDF("_scid", "_qs")
+          scoped.join(broadcast(shifted), col(l.cidCol) === col("_scid"))
+            .select(out(c.score(col("_qs"))): _*)
+        }
+        val shortlist = scored.filter(c.keep).orderBy(c.order, col(idCol)).limit(rr)
+        exactTopK(rerankFrom.fold(shortlist)(store => shortlist.hint("broadcast")
+            .join(store.select(col(idCol), col(embCol)), Seq(idCol))),
+          embCol, idCol, typedLit(query), k)
+    }
   }
+
+  /** The batch probe over `codec` (see Codec). Without `lists` the
+    * probe side broadcasts against the whole scan (a nested loop —
+    * probe-sized batches only). */
+  private def probeBatch(fn: String, scan: DataFrame, embCol: String,
+      idCol: String, queries: DataFrame, qIdCol: String, qEmbCol: String,
+      k: Int, codec: Codec, lists: Option[Lists], excludeSelf: Boolean,
+      rerank: Int = 0, rerankFrom: Option[DataFrame] = None): DataFrame = {
+    val rr = checkProbe(fn, codec, k, rerank, lists, None)
+    val q0 = queries.select(col(qIdCol), asDouble(col(qEmbCol)).as(qEmbCol))
+    val (probes, qCols, listQ) = codec match {
+      case Flat =>
+        // a null or wrong-width query probes nothing: zip_with would
+        // null-pad it, and its NULL list distances sort FIRST
+        val d = lists.get.codebook.head._2.length
+        (q0.withColumn(qEmbCol, when(size(col(qEmbCol)) === d, col(qEmbCol)))
+          .filter(col(qEmbCol).isNotNull), Nil, Nil)
+      case c: Coded =>
+        val shift = if (c.residual) zip_with(col("_qn"), col("_cn"), (a, b) => a - b)
+          else col("_qn")
+        (c.guard(withNormalized(q0, qEmbCol, "_qn"), qEmbCol), c.queryCols,
+          c.turnCol(shift).as("_qn") +: c.queryCols.tail.map(col))
+    }
+    val embSel = rerankFrom.fold(Seq(col(embCol)))(_ => Nil)
+    val scoped = dropSelf(lists match {
+      case Some(l) =>
+        val spark = scan.sparkSession
+        import spark.implicits._
+        // _cn (the normalized centroid) is what residual shifts subtract
+        val cb = l.codebook.map { case (cid, ce) => (cid, ce, normalizeVec(ce)) }
+          .toDF("_cbid", "_ce", "_cn")
+        val dist = aggregate(zip_with(col(qEmbCol), col("_ce"),
+          (x, y) => (x - y) * (x - y)), lit(0.0), (acc, v) => acc + v)
+        val ranked = probes.join(broadcast(cb), lit(true))
+          .select(Seq(col(qIdCol), col(qEmbCol)) ++ qCols.map(col) ++
+            Seq(col("_cbid"), col("_cn"), dist.as("_d")): _*)
+          .withColumn("_r", row_number().over(
+            Window.partitionBy(qIdCol).orderBy(col("_d"), col("_cbid"))))
+          .filter(col("_r") <= l.nprobe)
+          .select(Seq(col(qIdCol).as("_qid"), col(qEmbCol).as("_qe")) ++ listQ :+
+            col("_cbid"): _*)
+        val on = col(l.cidCol) === col("_cbid")
+        l.broadcastProbes match {
+          case Some(true) => scan.join(broadcast(ranked), on)
+          case Some(false) => scan.join(ranked.repartition(col("_cbid")), on)
+          case None => scan.join(ranked, on)
+        }
+      case None =>
+        val c = codec.asInstanceOf[Coded]
+        scan.select(col(idCol) +: embSel :+ col(c.codeCol): _*)
+          .join(broadcast(probes.select(Seq(col(qIdCol).as("_qid"),
+            col(qEmbCol).as("_qe")) ++ qCols.map(col): _*)), lit(true))
+    }, idCol, excludeSelf)
+    codec match {
+      case Flat => exactTopKAll(scoped, embCol, idCol, qIdCol, k)
+      case c: Coded =>
+        // the flat scan (bqProbeAll) keeps every joined column and
+        // ranks into `_hr`, the plan shape q103/q104 are checked against
+        val (kept, rankCol) =
+          if (lists.isEmpty) (scoped.columns.toSeq.map(col), "_hr")
+          else (Seq(col("_qid"), col(idCol)) ++ embSel :+ col("_qe"), "_ar")
+        val shortlist = scoped
+          .select(kept :+ c.score(col(c.batchQuery)).as(c.scoreName): _*)
+          .filter(c.keep)
+          .withColumn(rankCol, row_number().over(
+            Window.partitionBy("_qid").orderBy(c.order, col(idCol))))
+          .filter(col(rankCol) <= rr)
+        exactTopKAll(rerankFrom.fold(shortlist)(store =>
+            shortlist.join(store.select(col(idCol), col(embCol)), Seq(idCol))),
+          embCol, idCol, qIdCol, k)
+    }
+  }
+
+  /** IVF probe with an explicit query vector (the serving shape: the
+    * query is not a corpus member) over raw vectors — see Codec.
+    * nprobe is THE recall/latency knob: nprobe=1 reads ~n/K vectors
+    * but misses neighbors across a Voronoi boundary; nprobe=p
+    * multiplies work by p and recovers them (SimilaritySpec pins
+    * recall@10 >= 0.9 at nprobe=4 where nprobe=1 demonstrably
+    * misses). */
+  def ivfProbeVec(assigned: DataFrame, embCol: String, idCol: String,
+      query: Seq[Double], k: Int, codebook: Seq[(Long, Seq[Double])],
+      nprobe: Int = 1, cidCol: String = "cid",
+      excludeId: Option[Long] = None): DataFrame =
+    probeOne("ivfProbeVec", assigned, embCol, idCol, query, k, Flat,
+      Some(Lists(codebook, nprobe, cidCol)), excludeId)
 
   /** IVF probe over an assigned (indexed) corpus, query-by-member:
     * cosine top-k within the probe's inverted list(s). With the default
@@ -145,13 +420,9 @@ object Similarity {
     if (nprobe == 1) {
       val probe = assigned.filter(col(idCol) === queryVecId)
         .select(col(cidCol).as("_pcid"), col(embCol).as("_qe"))
-      assigned.join(broadcast(probe), col(cidCol) === col("_pcid"))
-        .filter(col(idCol) =!= queryVecId)
-        .select(col(idCol),
-          round(cosine(asDouble(col(embCol)), asDouble(col("_qe"))), 4).as("cos"))
-        .filter(!isnan(col("cos")))
-        .orderBy(desc("cos"), col(idCol))
-        .limit(k)
+      exactTopK(assigned.join(broadcast(probe), col(cidCol) === col("_pcid"))
+          .filter(col(idCol) =!= queryVecId),
+        embCol, idCol, asDouble(col("_qe")), k)
     } else {
       require(codebook.nonEmpty,
         "multi-probe (nprobe > 1) needs the codebook to rank inverted lists")
@@ -169,89 +440,18 @@ object Similarity {
     }
   }
 
-  /** Batch IVF probe — the realistic serving shape: MANY query
-    * vectors answered in one distributed plan, no driver round-trip
-    * per query. The query set is small relative to the corpus (that
-    * is what makes it the probe side), so it broadcasts twice:
-    * (1) queries x codebook ranks every query's inverted lists via a
-    * broadcast nested-loop against the (KB-sized) codebook, keeping
-    * the top `nprobe` per query; (2) the ranked probes hash-join the
-    * assigned corpus on the list id — each corpus row is read once
-    * and only the probed lists contribute — then a per-query window
-    * keeps the cosine top-k. Output: (qIdCol, idCol, cos, rank) —
-    * when the two id columns share a name, the query id is emitted as
-    * `q_<name>` so the output schema stays unambiguous. Member
-    * queries (probing a batch drawn from the indexed corpus itself)
-    * set `excludeSelf = true` to keep the cos=1.0 self-match from
-    * burning a top-k slot — the batch analogue of ivfProbe's
-    * excludeId. Single-query `ivfProbeVec` stays the low-latency
-    * path; this is the throughput path (e.g. dedup-against-index of
-    * a whole new document batch).
-    *
-    * `broadcastProbes` sizes step (2). `None` (default) leaves the
-    * probe side un-hinted: the probe ranking already ends at a
-    * shuffle (the per-query window), so AQE sees the probe batch's
-    * REAL size there and picks broadcast when it fits, shuffle join
-    * when a crawl-sized batch doesn't — callers no longer need to
-    * know their batch size up front. `Some(true)` forces the
-    * broadcast (queries ≪ corpus and the planner should not even
-    * consider shuffling the corpus side); `Some(false)` forces the
-    * shuffle path: probes repartition on the list id and the corpus
-    * join becomes an ordinary shuffle join — both sides partition by
-    * cid, no executor ever holds the probe set whole. The
-    * codebook-ranking broadcast in step (1) is unaffected (the
-    * codebook is KBs by definition); results are identical on every
-    * path (SimilaritySpec pins three-way equality and the forced
-    * plan shapes). */
+  /** Batch IVF probe — the throughput shape: MANY query vectors
+    * answered in one distributed plan, no driver round-trip per query
+    * (e.g. dedup-against-index of a whole new document batch); see
+    * Codec for the list ranking, the `broadcastProbes` sizing and the
+    * output. Single-query `ivfProbeVec` stays the low-latency path. */
   def ivfProbeAll(assigned: DataFrame, embCol: String, idCol: String,
       queries: DataFrame, qIdCol: String, qEmbCol: String,
       codebook: Seq[(Long, Seq[Double])], k: Int, nprobe: Int = 1,
       cidCol: String = "cid", excludeSelf: Boolean = false,
-      broadcastProbes: Option[Boolean] = None): DataFrame = {
-    require(codebook.nonEmpty, "ivfProbeAll needs the codebook to rank inverted lists")
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val spark = assigned.sparkSession
-    import spark.implicits._
-    val cb = codebook.toDF("_cbid", "_ce")
-    val sqDist = aggregate(
-      zip_with(col(qEmbCol), col("_ce"), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, v) => acc + v)
-    val dims = codebook.head._2.length
-    val probes = queries
-      .select(col(qIdCol), asDouble(col(qEmbCol)).as(qEmbCol))
-      // width guard, as in the coded siblings: zip_with null-pads a
-      // mismatched query, its centroid distances all go NULL, and
-      // NULLs sort FIRST under the ascending rank — the query would
-      // probe nprobe arbitrary lists and score partial cosines
-      .withColumn(qEmbCol,
-        when(size(col(qEmbCol)) === dims, col(qEmbCol)))
-      .filter(col(qEmbCol).isNotNull)
-      .join(broadcast(cb), lit(true))
-      .select(col(qIdCol), col(qEmbCol), col("_cbid"), sqDist.as("_d"))
-      .withColumn("_r", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(qIdCol).orderBy(col("_d"), col("_cbid"))))
-      .filter(col("_r") <= nprobe)
-      .select(col(qIdCol).as("_qid"), col(qEmbCol).as("_qe"), col("_cbid"))
-    val joined = broadcastProbes match {
-      case Some(true)  => assigned.join(broadcast(probes), col(cidCol) === col("_cbid"))
-      case Some(false) => assigned.join(probes.repartition(col("_cbid")), col(cidCol) === col("_cbid"))
-      case None        => assigned.join(probes, col(cidCol) === col("_cbid"))
-    }
-    val scoped =
-      if (excludeSelf) joined.filter(!(col(idCol) <=> col("_qid"))) else joined
-    val outQ = if (qIdCol == idCol) s"q_$qIdCol" else qIdCol
-    scoped
-      .select(col("_qid"), col(idCol),
-        round(cosine(asDouble(col(embCol)), col("_qe")), 4).as("cos"))
-      // NaN/null scores drop before the rank (desc puts NaN first)
-      .filter(col("cos").isNotNull && !isnan(col("cos")))
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("_qid").orderBy(desc("cos"), col(idCol))))
-      .filter(col("rank") <= k)
-      .select(col("_qid").as(outQ), col(idCol), col("cos"), col("rank"))
-  }
+      broadcastProbes: Option[Boolean] = None): DataFrame =
+    probeBatch("ivfProbeAll", assigned, embCol, idCol, queries, qIdCol, qEmbCol,
+      k, Flat, Some(Lists(codebook, nprobe, cidCol, broadcastProbes)), excludeSelf)
 
   /** Persist an assigned IVF index bucketed by inverted list: parquet
     * partitioned by the centroid id, so a probe's `cid IN (...)`
@@ -469,49 +669,23 @@ object Similarity {
   }
 
   /** Read a persisted PQ model back; fails loudly on a gappy artifact
-    * (missing subspace or code) rather than mis-scoring silently. */
+    * (missing subspace, code or rotation row) or mixed residual flags
+    * rather than mis-scoring silently. */
   def readPqModel(spark: org.apache.spark.sql.SparkSession, path: String): PqModel = {
     val raw = spark.read.parquet(path)
-    // the residual flag is part of the model identity: probing a
-    // residual-coded index down the direct path would silently return
-    // garbage, so a residual artifact must read back residual. Older
-    // artifacts (no `res` column) are direct by construction. The flag
-    // must be UNANIMOUS across rows — a corrupted artifact mixing res
-    // values fails loudly (same contract as the contiguity checks
-    // below) instead of being coerced to whichever row reads first.
-    val residual =
-      if (raw.columns.contains("res")) {
-        val flags = raw.select("res").distinct().collect().map(_.getBoolean(0))
-        require(flags.length == 1,
-          s"PQ model at $path mixes residual flags across rows — corrupted artifact")
-        flags.head
-      } else false
-    val allRows = raw.select("s", "code", "ce").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toSeq))
-    val (rotRows, rows) = allRows.partition(_._1 < 0)
-    require(rows.nonEmpty, s"empty PQ model at $path")
-    val rotation =
-      if (rotRows.isEmpty) None
-      else {
-        val sorted = rotRows.sortBy(_._2)
-        require(sorted.map(_._2).toSeq == sorted.indices.toSeq,
-          s"PQ model at $path has non-contiguous rotation rows")
-        Some(sorted.map(_._3).toSeq)
-      }
-    val bySub = rows.groupBy(_._1)
-    val m = bySub.keys.max + 1
-    require(bySub.keySet == (0 until m).toSet,
-      s"PQ model at $path is missing subspaces: have ${bySub.keySet.toSeq.sorted}")
-    val codebooks = (0 until m).map { s =>
-      val cs = bySub(s).sortBy(_._2)
-      require(cs.map(_._2).toSeq == cs.indices.toSeq,
-        s"PQ model subspace $s has non-contiguous codes")
-      cs.map(_._3).toSeq
-    }
+    val (rotRows, rows) = raw.select("s", "code", "ce").collect()
+      .map(r => (r.getInt(0), (r.getInt(1), r.getSeq[Double](2).toSeq))).toSeq
+      .partition(_._1 < 0)
+    val rotation = if (rotRows.isEmpty) None
+      else Some(contiguous(rotRows.map(_._2), s"PQ model rotation at $path"))
+    val codebooks = contiguous(rows.groupBy(_._1).toSeq.map { case (s, cs) =>
+      (s, contiguous(cs.map(_._2), s"PQ model subspace $s at $path")) },
+      s"PQ model at $path")
     val dsub = codebooks.head.head.length
     require(codebooks.forall(_.forall(_.length == dsub)),
       s"PQ model at $path mixes centroid dimensions")
-    PqModel(m, dsub, codebooks, residual, rotation)
+    PqModel(codebooks.length, dsub, codebooks,
+      residualFlag(raw, s"PQ model at $path"), rotation)
   }
 
   /** SQ8 scalar-quantization model (FAISS-style uniform per-dim,
@@ -550,7 +724,7 @@ object Similarity {
       * always codes (and dequantizes) exactly. */
     def deltas: Seq[Double] = mins.zip(maxs).map { case (a, b) => (b - a) / 255.0 }
     /** The (mins, deltas) pair the sq_* kernels take as their model
-      * literal — the SQ twin of PqModel.codebooks' role in pq_adc. */
+      * literal. */
     def mm: (Seq[Double], Seq[Double]) = (mins, deltas)
   }
 
@@ -563,9 +737,7 @@ object Similarity {
     * them). */
   def sqTrain(df: DataFrame, embCol: String): SqModel = {
     val (dims, _) = probeDims(df, embCol, 1, "sqTrain")
-    val normed = withNormalized(
-        df.select(col(embCol)).filter(col(embCol).isNotNull), embCol, "_n")
-    sqStats(normed, dims, "sqTrain", residual = false)
+    sqStats(normedVecs(df, embCol), dims, "sqTrain", residual = false)
   }
 
   /** Train the RESIDUAL SQ8 model (see SqModel.residual): per-dim
@@ -613,8 +785,7 @@ object Similarity {
         "sqAssignResidual over an ivfAssign'ed frame")
     withNormalized(df, embCol, "_sq_n")
       .withColumn(codeCol,
-        when(col(embCol).isNotNull,
-          graft.functions.VectorExpressions.sq_encode(col("_sq_n"), model.mm)))
+        when(col(embCol).isNotNull, VE.sq_encode(col("_sq_n"), model.mm)))
       .drop("_sq_n")
   }
 
@@ -642,84 +813,24 @@ object Similarity {
         col(cidCol) === col("_rcid"), "left")
       .withColumn(codeCol,
         when(col(embCol).isNotNull && col("_rcn").isNotNull,
-          graft.functions.VectorExpressions.sq_encode(
+          VE.sq_encode(
             zip_with(col("_sq_n"), col("_rcn"), (a, b) => a - b), model.mm)))
       .drop("_sq_n", "_rcid", "_rcn")
   }
 
-  /** IVF-SQ8 probe, single query: same plan as ivfPqProbe — prune to
-    * the `nprobe` nearest inverted lists, score the CODE column
-    * map-side (sq_adc_cos reads D bytes per row; the raw embeddings
-    * never enter the list scan), keep the `rerank` best approximate
-    * cosines, exact-cosine re-rank only those. Because SQ8's
-    * approximation is near-exact, tight rerank budgets (= k) already
-    * recover brute-force answers on realistic corpora
-    * (SimilaritySpec); the same `rerankFrom` codes-only-index
-    * contract as ivfPqProbe applies. A NaN approximate score
-    * (corrupted or foreign code) is nulled before ordering — under a
-    * DESCENDING sort Spark ranks NaN first, which would hand
-    * corrupted rows the shortlist. */
+  /** IVF-SQ8 probe, single query (see Codec): the list scan scores the
+    * D-byte code column map-side (`sq_adc_cos`; the raw embeddings
+    * never enter it). SQ8's approximation is near-exact, so tight
+    * rerank budgets (= k) already recover brute-force answers on
+    * realistic corpora (SimilaritySpec). */
   def ivfSqProbe(assigned: DataFrame, embCol: String, idCol: String,
       query: Seq[Double], k: Int, codebook: Seq[(Long, Seq[Double])],
       sq: SqModel, nprobe: Int = 1, rerank: Int = 0,
       cidCol: String = "cid", codeCol: String = "sq_code",
       excludeId: Option[Long] = None,
-      rerankFrom: Option[DataFrame] = None): DataFrame = {
-    require(codebook.nonEmpty, "ivfSqProbe needs the coarse codebook to rank inverted lists")
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    require(query.length == sq.dims,
-      s"query has ${query.length} dims but the SqModel codes ${sq.dims}")
-    require(!sq.residual || codebook.forall(_._2.length == sq.dims),
-      s"coarse centroid dims != SqModel dims (${sq.dims}) — the residual " +
-        "query shift would silently truncate")
-    val rr = if (rerank > 0) rerank else math.max(4 * k, 32)
-    require(rr >= k, s"rerank ($rr) must be >= k ($k)")
-    val cids = rankInvertedLists(codebook, query).take(nprobe)
-    val base = assigned.filter(col(cidCol).isin(cids: _*))
-    val scoped = excludeId.fold(base)(id => base.filter(col(idCol) =!= id))
-    val qn = normalizeVec(query)
-    val outCols = (score: Column) => col(idCol) +:
-      rerankFrom.fold(Seq(col(embCol)))(_ => Nil) :+ score.as("_sqc")
-    // direct: approximate cosine, DESCENDING (NaN nulled — Spark
-    // ranks NaN above every real under desc). residual: each probed
-    // list scores the ADC squared L2 of ITS shifted query (q̂ − ĉ)
-    // against the dequantized residual, ASCENDING (NaN sorts last by
-    // itself) — see SqModel.residual for why L2, not cosine. The
-    // nprobe shifted queries ride in a KB broadcast lookup joined on
-    // the list id, same shape as ivfPqProbe's residual branch.
-    val (scoredList, shortOrder) =
-      if (!sq.residual) {
-        val approx = graft.functions.VectorExpressions.sq_adc_cos(
-          typedLit(qn), col(codeCol), sq.mm)
-        (scoped.select(outCols(when(!isnan(approx), approx)): _*),
-          desc_nulls_last("_sqc"))
-      } else {
-        val spark = assigned.sparkSession
-        import spark.implicits._
-        val cmap = codebook.toMap
-        val shifted = cids.map { c =>
-          (c, qn.zip(normalizeVec(cmap(c))).map { case (a, b) => a - b })
-        }.toDF("_scid", "_qs")
-        (scoped.join(broadcast(shifted), col(cidCol) === col("_scid"))
-          .select(outCols(graft.functions.VectorExpressions.sq_adc_l2(
-            col("_qs"), col(codeCol), sq.mm)): _*),
-          asc_nulls_last("_sqc"))
-      }
-    val shortlist = scoredList
-      .orderBy(shortOrder, col(idCol))
-      .limit(rr)
-    val withEmb = rerankFrom.fold(shortlist)(store =>
-      shortlist.hint("broadcast")
-        .join(store.select(col(idCol), col(embCol)), Seq(idCol)))
-    withEmb
-      .select(col(idCol),
-        round(cosine(asDouble(col(embCol)), typedLit(query)), 4).as("cos"))
-      // NaN drop: a zero-norm shortlist row would rank FIRST (see
-      // bruteForceTopK)
-      .filter(!isnan(col("cos")))
-      .orderBy(desc("cos"), col(idCol))
-      .limit(k)
-  }
+      rerankFrom: Option[DataFrame] = None): DataFrame =
+    probeOne("ivfSqProbe", assigned, embCol, idCol, query, k, Sq8(sq, codeCol),
+      Some(Lists(codebook, nprobe, cidCol)), excludeId, rerank, rerankFrom)
 
   /** Persist an SQ model — (dim, min, max) rows, KBs. Like PQ, a
     * coded index is unreadable without the exact model that coded
@@ -732,27 +843,36 @@ object Similarity {
       .write.mode("overwrite").parquet(path)
   }
 
-  /** Read a persisted SQ model; fails loudly on a gappy artifact.
-    * The residual flag is model identity (a residual-coded index is
-    * garbage down the direct path) and must be unanimous across rows
-    * — same contract as readPqModel; artifacts written before the
-    * flag existed (no `res` column) are direct by construction. */
+  /** Read a persisted SQ model; fails loudly on a gappy artifact. */
   def readSqModel(spark: org.apache.spark.sql.SparkSession, path: String): SqModel = {
     val raw = spark.read.parquet(path)
-    val residual =
-      if (raw.columns.contains("res")) {
-        val flags = raw.select("res").distinct().collect().map(_.getBoolean(0))
-        require(flags.length == 1,
-          s"SQ model at $path mixes residual flags across rows — corrupted artifact")
-        flags.head
-      } else false
-    val rows = raw.select("d", "mn", "mx").collect()
-      .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2))).sortBy(_._1)
-    require(rows.nonEmpty, s"empty SQ model at $path")
-    require(rows.map(_._1).toSeq == rows.indices.toSeq,
-      s"SQ model at $path has non-contiguous dims: ${rows.map(_._1).toSeq}")
-    SqModel(rows.map(_._2).toSeq, rows.map(_._3).toSeq, residual)
+    val rows = contiguous(raw.select("d", "mn", "mx").collect()
+      .map(r => (r.getInt(0), (r.getDouble(1), r.getDouble(2)))), s"SQ model at $path")
+    SqModel(rows.map(_._1), rows.map(_._2), residualFlag(raw, s"SQ model at $path"))
   }
+
+  /** The model readers' index check: `rows` keyed 0..n-1 with no gap,
+    * as a Seq in key order — a gappy artifact fails loudly rather than
+    * mis-scoring silently. */
+  private def contiguous[A](rows: Seq[(Int, A)], what: String): Seq[A] = {
+    val sorted = rows.sortBy(_._1)
+    require(sorted.nonEmpty, s"$what is empty")
+    require(sorted.map(_._1) == sorted.indices,
+      s"$what has non-contiguous indices: ${sorted.map(_._1)}")
+    sorted.map(_._2)
+  }
+
+  /** The residual flag is model identity (a residual-coded index is
+    * garbage down the direct path), so it must be UNANIMOUS across an
+    * artifact's rows; artifacts written before the flag existed (no
+    * `res` column) are direct by construction. */
+  private def residualFlag(raw: DataFrame, what: String): Boolean =
+    raw.columns.contains("res") && {
+      val flags = raw.select("res").distinct().collect().map(_.getBoolean(0))
+      require(flags.length == 1,
+        s"$what mixes residual flags across rows — corrupted artifact")
+      flags.head
+    }
 
   /** BQ1 binary quantization (FAISS IndexBinary-style, public
     * knowledge): one SIGN BIT per dimension of the normalized vector —
@@ -798,9 +918,7 @@ object Similarity {
     * deterministic, so the oracle replays training too. */
   def bqTrain(df: DataFrame, embCol: String): BqModel = {
     val (dims, _) = probeDims(df, embCol, 1, "bqTrain")
-    val normed = withNormalized(
-        df.select(col(embCol)).filter(col(embCol).isNotNull), embCol, "_n")
-    val s = sqStats(normed, dims, "bqTrain", residual = false)
+    val s = sqStats(normedVecs(df, embCol), dims, "bqTrain", residual = false)
     BqModel(s.mins.zip(s.maxs).map { case (a, b) => (a + b) / 2.0 })
   }
 
@@ -815,38 +933,16 @@ object Similarity {
       codeCol: String = "bq_code"): DataFrame =
     withNormalized(df, embCol, "_bq_n")
       .withColumn(codeCol,
-        when(col(embCol).isNotNull,
-          graft.functions.VectorExpressions.bq_encode(
-            col("_bq_n"), model.thresholds)))
+        when(col(embCol).isNotNull, VE.bq_encode(col("_bq_n"), model.thresholds)))
       .drop("_bq_n")
 
-  /** Driver-side twin of the bqEncode kernel for query vectors — same
-    * `>=` convention and MSB-first packing, so a query's code is
-    * bit-identical to what bqAssign would produce for the same row. */
-  private def bqEncodeLocal(qn: Seq[Double], thr: Seq[Double]): Array[Byte] = {
-    require(qn.length == thr.length,
-      s"query has ${qn.length} dims but the BqModel codes ${thr.length}")
-    val out = new Array[Byte]((qn.length + 7) / 8)
-    var i = 0
-    while (i < qn.length) {
-      if (qn(i) >= thr(i)) out(i >> 3) = (out(i >> 3) | (0x80 >>> (i & 7))).toByte
-      i += 1
-    }
-    out
-  }
-
-  /** BQ flat probe, single query: ONE map-side Hamming pass over the
-    * code column (D/8 bytes per row — no inverted lists; at 64×
-    * compression the flat scan IS the scale shape), keep the `rerank`
-    * best Hamming candidates, exact-cosine re-rank only those. Null
-    * codes sort last (asc_nulls_last) and can never enter the
-    * shortlist. BQ's Hamming shortlist is coarser than SQ8/PQ ADC —
-    * size `rerank` generously (the default 4k floor is a lower bound,
-    * not a recommendation); SimilaritySpec pins that a full-width
-    * rerank recovers brute force exactly. Same codes-only `rerankFrom`
-    * contract as the other probes: with a primary store supplied, the
-    * scanned frame needs only (id, code) and the shortlist joins the
-    * store by id (broadcast — it is rerank-bounded).
+  /** BQ flat probe, single query (see Codec): ONE map-side Hamming
+    * pass over the code column (D/8 bytes per row — no inverted lists;
+    * at 64× compression the flat scan IS the scale shape), exact-cosine
+    * re-rank of the shortlist. BQ's Hamming shortlist is coarser than
+    * SQ8/PQ ADC — size `rerank` generously (the default is a lower
+    * bound, not a recommendation); SimilaritySpec pins that a
+    * full-width rerank recovers brute force exactly.
     *
     * `asymmetric = true` ranks the shortlist by the float-query ×
     * ±1-reconstruction dot (`bq_adc_dot`) instead of code-vs-code
@@ -856,170 +952,46 @@ object Similarity {
     * the query's mass concentrates on few dims (BqSpec pins a fixture
     * where Hamming provably shortlists the wrong cluster and the
     * asymmetric score recovers brute-force recall at the same
-    * rerank). Identical storage and scan bytes; the kernel reads the
-    * same packed code. */
+    * rerank). Identical storage and scan bytes. */
   def bqProbe(coded: DataFrame, embCol: String, idCol: String,
       query: Seq[Double], k: Int, model: BqModel, rerank: Int = 0,
       codeCol: String = "bq_code", excludeId: Option[Long] = None,
       rerankFrom: Option[DataFrame] = None,
-      asymmetric: Boolean = false): DataFrame = {
-    require(query.length == model.dims,
-      s"query has ${query.length} dims but the BqModel codes ${model.dims}")
-    val rr = if (rerank > 0) rerank else math.max(4 * k, 32)
-    require(rr >= k, s"rerank ($rr) must be >= k ($k)")
-    val scoped = excludeId.fold(coded)(id => coded.filter(col(idCol) =!= id))
-    bqShortlistRerank(scoped, embCol, idCol, query, k, rr, model, codeCol,
-      rerankFrom, asymmetric)
-  }
-
-  /** Shared single-query BQ tail: rank `scoped` rows by Hamming (or
-    * the asymmetric reconstruction dot), keep the `rr` best, join the
-    * primary store when the scan was codes-only, exact-cosine re-rank
-    * to the final k. Factored out of bqProbe so the flat scan and the
-    * IVF-pruned scan (ivfBqProbe) stay bit-identical past the list
-    * prune. */
-  private def bqShortlistRerank(scoped: DataFrame, embCol: String,
-      idCol: String, query: Seq[Double], k: Int, rr: Int, model: BqModel,
-      codeCol: String, rerankFrom: Option[DataFrame],
-      asymmetric: Boolean): DataFrame = {
-    val qn = normalizeVec(query)
-    val (scoreCol, shortOrder) =
-      if (asymmetric) {
-        val adc = graft.functions.VectorExpressions.bq_adc_dot(
-          typedLit(qn), col(codeCol))
-        (when(!isnan(adc), adc), desc_nulls_last("_bqh"))
-      } else {
-        (graft.functions.VectorExpressions.bq_hamming(
-          lit(bqEncodeLocal(qn, model.thresholds)), col(codeCol)).cast("double"),
-          asc_nulls_last("_bqh"))
-      }
-    val outCols = col(idCol) +:
-      rerankFrom.fold(Seq(col(embCol)))(_ => Nil) :+ scoreCol.as("_bqh")
-    val shortlist = scoped.select(outCols: _*)
-      .orderBy(shortOrder, col(idCol))
-      .limit(rr)
-    val withEmb = rerankFrom.fold(shortlist)(store =>
-      shortlist.hint("broadcast")
-        .join(store.select(col(idCol), col(embCol)), Seq(idCol)))
-    withEmb
-      .select(col(idCol),
-        round(cosine(asDouble(col(embCol)), typedLit(query)), 4).as("cos"))
-      // NaN drop: a zero-norm shortlist row would rank FIRST (see
-      // bruteForceTopK)
-      .filter(!isnan(col("cos")))
-      .orderBy(desc("cos"), col(idCol))
-      .limit(k)
-  }
+      asymmetric: Boolean = false): DataFrame =
+    probeOne("bqProbe", coded, embCol, idCol, query, k,
+      Bq(model, codeCol, asymmetric), None, excludeId, rerank, rerankFrom)
 
   /** IVF-BQ probe, single query (the FAISS IndexBinaryIVF layout,
-    * public knowledge): compose the coarse inverted lists with the
-    * packed sign codes — prune to the `nprobe` nearest lists
-    * (`cid IN (...)`, partition-prunable exactly as for PQ/SQ when
-    * the index was written with writeIndex), rank only the probed
-    * rows by Hamming (or asymmetrically — see bqProbe), keep the
-    * `rerank` best, exact-cosine re-rank only those. The FLAT scan is
-    * BQ's standard shape (codes are D/8 bytes, cheap to scan whole),
-    * but when one standing IVF index already serves PQ/SQ codes the
-    * same layout carries BQ codes too, and the coarse prune cuts the
-    * Hamming pass to ~nprobe/K of the corpus for free — recall then
-    * compounds BOTH approximations (list prune AND sign coarseness),
-    * so size nprobe/rerank by measuring with recallAtK, not by the
-    * flat-scan numbers. Same codes-only `rerankFrom` contract as
-    * every probe: with a primary store supplied the scanned frame
-    * needs only (id, cid, code). */
+    * public knowledge; see Codec): when one standing IVF index already
+    * serves PQ/SQ codes, the same layout carries BQ codes too, and the
+    * coarse prune cuts the Hamming pass to ~nprobe/K of the corpus —
+    * recall then compounds BOTH approximations (list prune AND sign
+    * coarseness), so size nprobe/rerank by measuring with recallAtK,
+    * not by the flat-scan numbers. */
   def ivfBqProbe(coded: DataFrame, embCol: String, idCol: String,
       query: Seq[Double], k: Int, codebook: Seq[(Long, Seq[Double])],
       model: BqModel, nprobe: Int = 1, rerank: Int = 0,
       cidCol: String = "cid", codeCol: String = "bq_code",
       excludeId: Option[Long] = None,
       rerankFrom: Option[DataFrame] = None,
-      asymmetric: Boolean = false): DataFrame = {
-    require(codebook.nonEmpty,
-      "ivfBqProbe needs the coarse codebook to rank inverted lists")
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    require(query.length == model.dims,
-      s"query has ${query.length} dims but the BqModel codes ${model.dims}")
-    val rr = if (rerank > 0) rerank else math.max(4 * k, 32)
-    require(rr >= k, s"rerank ($rr) must be >= k ($k)")
-    val cids = rankInvertedLists(codebook, query).take(nprobe)
-    val base = coded.filter(col(cidCol).isin(cids: _*))
-    val scoped = excludeId.fold(base)(id => base.filter(col(idCol) =!= id))
-    bqShortlistRerank(scoped, embCol, idCol, query, k, rr, model, codeCol,
-      rerankFrom, asymmetric)
-  }
+      asymmetric: Boolean = false): DataFrame =
+    probeOne("ivfBqProbe", coded, embCol, idCol, query, k,
+      Bq(model, codeCol, asymmetric), Some(Lists(codebook, nprobe, cidCol)),
+      excludeId, rerank, rerankFrom)
 
-  /** Batch BQ probe — many queries in one distributed plan. The query
-    * side normalizes and encodes CLUSTER-side through the same
-    * bq_encode kernel (no driver round-trip), then broadcasts against
-    * the coded corpus: corpus × Q Hamming evaluations, each a D/8-byte
-    * XOR-popcount — the broadcast-nested-loop is deliberate (there is
-    * no equi-key in a flat binary scan) and is why the query batch
-    * must be probe-sized; crawl-scale batches belong on the IVF-coded
-    * paths (ivfPqProbeAll/ivfProbeAll) where list pruning gives the
-    * join an equi-key. Per-query windows then keep the `rerank` best
-    * Hamming rows and re-rank them by exact cosine. Output
-    * (qIdCol, idCol, cos, rank) with the same `q_<name>` collision
-    * rename, excludeSelf, and codes-only `rerankFrom` contracts as
-    * ivfProbeAll (the store join is AQE-sized: Q × rerank rows).
-    * `asymmetric` swaps the per-query Hamming ranking for the
-    * float-query × reconstruction dot — see bqProbe. */
+  /** Batch BQ probe over the flat scan (see Codec): queries normalize
+    * and encode cluster-side, then broadcast against the coded corpus —
+    * a nested loop (a flat binary scan has no equi-key), so the query
+    * batch must be probe-sized; crawl-scale batches belong on the
+    * IVF-coded paths, where list pruning gives the join an equi-key. */
   def bqProbeAll(coded: DataFrame, embCol: String, idCol: String,
       queries: DataFrame, qIdCol: String, qEmbCol: String, model: BqModel,
       k: Int, rerank: Int = 0, codeCol: String = "bq_code",
       excludeSelf: Boolean = false,
       rerankFrom: Option[DataFrame] = None,
-      asymmetric: Boolean = false): DataFrame = {
-    val rr = if (rerank > 0) rerank else math.max(4 * k, 32)
-    require(rr >= k, s"rerank ($rr) must be >= k ($k)")
-    val probes = withNormalized(
-        queries.select(col(qIdCol), asDouble(col(qEmbCol)).as(qEmbCol)),
-        qEmbCol, "_qn")
-      // width guard as in ivfBqProbeAll: bq_adc_dot only NaNs when the
-      // BYTE count differs, so a query 1-7 dims narrower than the model
-      // would otherwise get a silently wrong ADC score
-      .withColumn("_qn", when(size(col("_qn")) === model.dims, col("_qn")))
-      .select(col(qIdCol).as("_qid"), col(qEmbCol).as("_qe"), col("_qn"),
-        graft.functions.VectorExpressions.bq_encode(
-          col("_qn"), model.thresholds).as("_qc"))
-    val joined = coded
-      .select(col(idCol) +:
-        rerankFrom.fold(Seq(col(embCol)))(_ => Nil) :+ col(codeCol): _*)
-      .join(broadcast(probes), lit(true))
-    val scoped =
-      if (excludeSelf) joined.filter(!(col(idCol) <=> col("_qid"))) else joined
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy("_qid")
-    val (scoreCol, shortOrder) =
-      if (asymmetric) {
-        val adc = graft.functions.VectorExpressions.bq_adc_dot(
-          col("_qn"), col(codeCol))
-        (when(!isnan(adc), adc), desc_nulls_last("_bqh"))
-      } else
-        (graft.functions.VectorExpressions.bq_hamming(
-          col("_qc"), col(codeCol)).cast("double"),
-          asc_nulls_last("_bqh"))
-    // null scores dropped, not sorted last: when fewer than `rr` rows
-    // carry real scores, null-coded rows (or a wrong-width query's
-    // null cluster-side encode) would pass the rank filter into a
-    // bogus min-length exact cosine
-    val shortlist = scoped
-      .withColumn("_bqh", scoreCol)
-      .filter(col("_bqh").isNotNull)
-      .withColumn("_hr", row_number().over(
-        win.orderBy(shortOrder, col(idCol))))
-      .filter(col("_hr") <= rr)
-    val withEmb = rerankFrom.fold(shortlist)(store =>
-      shortlist.join(store.select(col(idCol), col(embCol)), Seq(idCol)))
-    val outQ = if (qIdCol == idCol) s"q_$qIdCol" else qIdCol
-    withEmb
-      .select(col("_qid"), col(idCol),
-        round(cosine(asDouble(col(embCol)), col("_qe")), 4).as("cos"))
-      .filter(col("cos").isNotNull && !isnan(col("cos")))
-      .withColumn("rank", row_number().over(
-        win.orderBy(desc("cos"), col(idCol))))
-      .filter(col("rank") <= k)
-      .select(col("_qid").as(outQ), col(idCol), col("cos"), col("rank"))
-  }
+      asymmetric: Boolean = false): DataFrame =
+    probeBatch("bqProbeAll", coded, embCol, idCol, queries, qIdCol, qEmbCol, k,
+      Bq(model, codeCol, asymmetric), None, excludeSelf, rerank, rerankFrom)
 
   /** Hamming-banded near-dup PAIR search over packed BQ codes — the
     * arbitrary-width generalization of Dedup.hashNearDupPairs' 64-bit
@@ -1034,7 +1006,7 @@ object Similarity {
     * observed drop counts (HotKeys.capPair) and the expansion is the
     * same spill-safe band-keyed sort-merge self-join as every pair
     * path here. Returns (id_a, id_b, hamming, cos) at cos >=
-    * minCosine. This is the embedding twin of SimHash text near-dup:
+    * minCosine. This is SimHash text near-dup's shape for embeddings:
     * one standing coded corpus, band-local candidate generation,
     * never all-pairs. */
   def nearDupPairsBq(df: DataFrame, embCol: String, idCol: String,
@@ -1042,18 +1014,9 @@ object Similarity {
       maxHamming: Int = -1, maxBucket: Int = HotKeys.DefaultBucketCap,
       metricName: String = "graft_bq_band_cap"): DataFrame = {
     require(bands >= 2, s"bands must be >= 2, got $bands")
-    require(model.codeBytes % bands == 0,
-      s"codeBytes ${model.codeBytes} is not divisible into $bands byte-aligned bands")
     val mh = if (maxHamming >= 0) maxHamming else bands - 1
-    val bytesPerBand = model.codeBytes / bands
-    val coded = bqAssign(df.select(col(idCol), col(embCol)), embCol, model)
-      .select(col(idCol).as("_id"), col("bq_code").as("_c"))
-      .filter(col("_c").isNotNull)
-    val bandCols = (0 until bands).map(b =>
-      expr(s"substring(_c, ${b * bytesPerBand + 1}, $bytesPerBand)"))
-    val bandsDf = coded
-      .select(col("_id"), col("_c"), posexplode(array(bandCols: _*)))
-      .toDF("_id", "_c", "k", "band")
+    val bandsDf = bqBandRows(bqAssign(df.select(col(idCol), col(embCol)), embCol, model),
+      idCol, "bq_code", model, bands)
     val (capL, capR) = HotKeys.capPair(bandsDf, Seq(col("k"), col("band")),
       maxBucket, metricName = metricName)
     val pairs = capL
@@ -1062,9 +1025,7 @@ object Similarity {
       .join(capR.select(col("k"), col("band"), col("_id").as("id_b"),
         col("_c").as("_cb")), Seq("k", "band"))
       .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        graft.functions.VectorExpressions.bq_hamming(
-          col("_ca"), col("_cb")).as("hamming"))
+      .select(col("id_a"), col("id_b"), VE.bq_hamming(col("_ca"), col("_cb")).as("hamming"))
       .filter(col("hamming") <= mh)
       .distinct()
     pairs
@@ -1075,41 +1036,52 @@ object Similarity {
       .filter(!isnan(col("cos")) && col("cos") >= minCosine)
   }
 
+  /** Byte-aligned band geometry of a BQ code: the band count (`bands`,
+    * or one-byte bands when 0) and the bytes per band. */
+  private def bqBands(model: BqModel, bands: Int): (Int, Int) = {
+    val nb = if (bands > 0) bands else model.codeBytes
+    require(nb >= 1 && model.codeBytes % nb == 0,
+      s"codeBytes ${model.codeBytes} is not divisible into $nb byte-aligned bands")
+    (nb, model.codeBytes / nb)
+  }
+
+  private def bandSlices(code: Column, nb: Int, bpb: Int): Seq[Column] =
+    (0 until nb).map(b => substring(code, b * bpb + 1, bpb))
+
+  /** The non-null codes of `coded` as (`_id`, `_c`, k, band) rows, one
+    * per band slice — the equi-key of every BQ band join. */
+  private def bqBandRows(coded: DataFrame, idCol: String, codeCol: String,
+      model: BqModel, bands: Int): DataFrame = {
+    val (nb, bpb) = bqBands(model, bands)
+    coded.select(col(idCol).as("_id"), col(codeCol).as("_c"))
+      .filter(col("_c").isNotNull)
+      .select(col("_id"), col("_c"), posexplode(array(bandSlices(col("_c"), nb, bpb): _*)))
+      .toDF("_id", "_c", "k", "band")
+  }
+
   /** Band-collision candidates between a CODED batch and a CODED
-    * standing corpus — the two-frame twin of nearDupPairsBq's
-    * self-join, and the shape that makes batch-vs-standing BQ scale:
-    * the band slice is an EQUI-KEY, so this is an ordinary capped
-    * equi-join (each side explodes into `bands` rows of D/8/bands
-    * bytes), where the flat bqProbeAll is a broadcast nested loop
-    * that only probe-sized batches can afford. Recall is the banding
-    * contract: a pair with Hamming <= bands−1 collides with
-    * certainty (pigeonhole); beyond that, collision probability is
-    * the sign-LSH s-curve 1−(1−(1−h/D)^(D/bands))^bands — MORE bands
-    * of FEWER bits catch farther pairs at more candidate volume
-    * (one-byte bands are a generous default; both sides' hot bands
-    * are capped with observed drops). `maxHamming` (full-code, inside
-    * the bucket, codes only) is an optional prefilter — Int.MaxValue
-    * disables it and leaves acceptance entirely to the caller's
-    * exact verify. Returns (id_a = batch id, id_b = standing id,
-    * hamming), distinct. */
+    * standing corpus — nearDupPairsBq's self-join across two frames,
+    * and the shape that makes batch-vs-standing BQ scale: the band
+    * slice is an EQUI-KEY, so this is an ordinary capped equi-join
+    * (each side explodes into `bands` rows of D/8/bands bytes), where
+    * the flat bqProbeAll is a broadcast nested loop that only
+    * probe-sized batches can afford. Recall is the banding contract: a
+    * pair with Hamming <= bands−1 collides with certainty (pigeonhole);
+    * beyond that, collision probability is the sign-LSH s-curve
+    * 1−(1−(1−h/D)^(D/bands))^bands — MORE bands of FEWER bits catch
+    * farther pairs at more candidate volume (one-byte bands are a
+    * generous default; both sides' hot bands are capped with observed
+    * drops). `maxHamming` (full-code, inside the bucket, codes only) is
+    * an optional prefilter — Int.MaxValue disables it and leaves
+    * acceptance entirely to the caller's exact verify. Returns (id_a =
+    * batch id, id_b = standing id, hamming), distinct. */
   def bqBandCandidates(batchCoded: DataFrame, standingCoded: DataFrame,
       idCol: String, model: BqModel, bands: Int = 0,
       maxHamming: Int = Int.MaxValue,
       maxBucket: Int = HotKeys.DefaultBucketCap,
       metricName: String = "graft_bq_lookup_cap",
       codeCol: String = "bq_code"): DataFrame = {
-    val nb = if (bands > 0) bands else model.codeBytes
-    require(nb >= 1 && model.codeBytes % nb == 0,
-      s"codeBytes ${model.codeBytes} is not divisible into $nb byte-aligned bands")
-    val bytesPerBand = model.codeBytes / nb
-    def banded(df: DataFrame) = {
-      val c = df.select(col(idCol).as("_id"), col(codeCol).as("_c"))
-        .filter(col("_c").isNotNull)
-      val bandCols = (0 until nb).map(b =>
-        expr(s"substring(_c, ${b * bytesPerBand + 1}, $bytesPerBand)"))
-      c.select(col("_id"), col("_c"), posexplode(array(bandCols: _*)))
-        .toDF("_id", "_c", "k", "band")
-    }
+    def banded(df: DataFrame) = bqBandRows(df, idCol, codeCol, model, bands)
     // each side capped independently (a hot band is a different
     // failure on the standing side — a degenerate corpus region —
     // than on the batch side, and the metrics should say which);
@@ -1122,9 +1094,7 @@ object Similarity {
     l.select(col("k"), col("band"), col("_id").as("id_a"), col("_c").as("_ca"))
       .join(r.select(col("k"), col("band"), col("_id").as("id_b"),
         col("_c").as("_cb")), Seq("k", "band"))
-      .select(col("id_a"), col("id_b"),
-        graft.functions.VectorExpressions.bq_hamming(
-          col("_ca"), col("_cb")).as("hamming"))
+      .select(col("id_a"), col("id_b"), VE.bq_hamming(col("_ca"), col("_cb")).as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
   }
@@ -1138,8 +1108,7 @@ object Similarity {
     * full-corpus exact scan is the thing the whole ANN layer exists
     * to avoid; paying it once over a few hundred sampled queries to
     * calibrate nprobe/rerank is the documented playbook step). Output
-    * (qIdCol, idCol, cos, rank) with the same `q_<name>` collision
-    * rename and excludeSelf contract as the probe-All family. */
+    * and `excludeSelf` as in the batch probes (see Codec). */
   def bruteForceTopKAll(df: DataFrame, embCol: String, idCol: String,
       queries: DataFrame, qIdCol: String, qEmbCol: String, k: Int,
       excludeSelf: Boolean = false): DataFrame = {
@@ -1148,26 +1117,12 @@ object Similarity {
       .select(col(qIdCol).as("_qid"), asDouble(col(qEmbCol)).as("_qe"))
     val joined = df.select(col(idCol), col(embCol))
       .join(broadcast(probes), lit(true))
-    val scoped =
-      if (excludeSelf) joined.filter(!(col(idCol) <=> col("_qid"))) else joined
-    val outQ = if (qIdCol == idCol) s"q_$qIdCol" else qIdCol
-    scoped
-      // width guard per (row, query) pair: the cosine kernel scores a
-      // mismatched pair over the common prefix — a truncated row can
-      // fake cosine 1.0 into the ground truth
-      .filter(size(col(embCol)) === size(col("_qe")))
-      .select(col("_qid"), col(idCol),
-        round(cosine(asDouble(col(embCol)), col("_qe")), 4).as("cos"))
-      // NaN/null guard: a zero-norm corpus vector scores cosine NaN
-      // against every query, and NaN sorts FIRST under desc — in the
-      // GROUND-TRUTH generator that would silently poison recallAtK
-      // and calibrateRerank for the whole harness
-      .filter(col("cos").isNotNull && !isnan(col("cos")))
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("_qid").orderBy(desc("cos"), col(idCol))))
-      .filter(col("rank") <= k)
-      .select(col("_qid").as(outQ), col(idCol), col("cos"), col("rank"))
+    // width guard per (row, query) pair: the cosine kernel scores a
+    // mismatched pair over the common prefix — a truncated row can
+    // fake cosine 1.0 into the ground truth
+    exactTopKAll(dropSelf(joined, idCol, excludeSelf)
+        .filter(size(col(embCol)) === size(col("_qe"))),
+      embCol, idCol, qIdCol, k)
   }
 
   /** Per-query recall of an approximate result set against a ground
@@ -1412,8 +1367,7 @@ object Similarity {
       .agg(sum(w / (lit(k0) + col("_rrf_rank"))).as("_s"), sourceCols: _*)
       .withColumn("rrf_score", round(col("_s"), 6))
       .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(queryCol).orderBy(desc("rrf_score"), col(idCol))))
+        Window.partitionBy(queryCol).orderBy(desc("rrf_score"), col(idCol))))
       .filter(col("rank") <= k)
       .select((Seq(col(queryCol), col(idCol), col("rrf_score"), col("rank")) ++
         shortlists.indices.filter(_ => withSources)
@@ -1589,14 +1543,9 @@ object Similarity {
   }
 
   /** Read a persisted BQ model; fails loudly on a gappy artifact. */
-  def readBqModel(spark: org.apache.spark.sql.SparkSession, path: String): BqModel = {
-    val rows = spark.read.parquet(path).select("d", "thr").collect()
-      .map(r => (r.getInt(0), r.getDouble(1))).sortBy(_._1)
-    require(rows.nonEmpty, s"empty BQ model at $path")
-    require(rows.map(_._1).toSeq == rows.indices.toSeq,
-      s"BQ model at $path has non-contiguous dims: ${rows.map(_._1).toSeq}")
-    BqModel(rows.map(_._2).toSeq)
-  }
+  def readBqModel(spark: org.apache.spark.sql.SparkSession, path: String): BqModel =
+    BqModel(contiguous(spark.read.parquet(path).select("d", "thr").collect()
+      .map(r => (r.getInt(0), r.getDouble(1))), s"BQ model at $path"))
 
   /** One-shot IVF ANN (index + probe in one plan; amortized use goes
     * through ivfAssign once + ivfProbe per query). `centroids` is a
@@ -1675,7 +1624,7 @@ object Similarity {
     for (_ <- 0 until iters) {
       val means = vecs
         .withColumn("_cid",
-          graft.functions.VectorExpressions.nearest_centroid(col("_e"), codebook))
+          VE.nearest_centroid(col("_e"), codebook))
         .select(col("_cid"), posexplode(col("_e")).as(Seq("_pos", "_v")))
         .groupBy("_cid", "_pos").agg(avg("_v").as("_m"))
         .collect()
@@ -1746,9 +1695,9 @@ object Similarity {
     if (n == 0) q else q.map(_ / n)
   }
 
-  /** Driver-side y = R·v — the query-rotation twin of the compiled
-    * mat_vec kernel, same left-to-right accumulation order so rotated
-    * values are bit-identical across both. */
+  /** Driver-side y = R·v for a query, in the compiled mat_vec kernel's
+    * left-to-right accumulation order, so rotated values are
+    * bit-identical across both. */
   private def rotateVec(r: Seq[Seq[Double]], v: Seq[Double]): Seq[Double] =
     r.map(row => row.zip(v).map { case (a, b) => a * b }.sum)
 
@@ -1776,11 +1725,17 @@ object Similarity {
     * re-evaluate the dot product per element. */
   private def withNormalized(df: DataFrame, embCol: String, outCol: String): DataFrame = {
     val e = asDouble(col(embCol))
-    df.withColumn("_nrm", sqrt(graft.functions.VectorExpressions.dot_product(e, e)))
+    df.withColumn("_nrm", sqrt(VE.dot_product(e, e)))
       .withColumn(outCol,
         when(col("_nrm") === 0.0, e).otherwise(transform(e, x => x / col("_nrm"))))
       .drop("_nrm")
   }
+
+  /** The non-null embeddings of `df`, normalized, as one `_n` column —
+    * the vector frame every trainer reads. */
+  private def normedVecs(df: DataFrame, embCol: String): DataFrame =
+    withNormalized(df.select(col(embCol)).filter(col(embCol).isNotNull), embCol, "_n")
+      .select(col("_n"))
 
   /** Train PQ codebooks: per-subspace k-means over ONE bounded,
     * deterministic hash-ordered sample of the normalized corpus
@@ -1807,11 +1762,8 @@ object Similarity {
     // that shuffle anyway. Either branch checkpoints the identical
     // sample, so the M x iters Lloyd jobs rescan the sample, never
     // the corpus.
-    val normed = withNormalized(
-        df.select(col(embCol)).filter(col(embCol).isNotNull), embCol, "_n")
-      .select(col("_n"))
-    PqModel(numSubspaces, dsub,
-      trainSubspaceCodebooks(normed, numSubspaces, dsub, ksub, iters, maxTrainRows))
+    PqModel(numSubspaces, dsub, trainSubspaceCodebooks(normedVecs(df, embCol),
+      numSubspaces, dsub, ksub, iters, maxTrainRows))
   }
 
   /** The bounded deterministic sample every PQ trainer draws (see the
@@ -1901,21 +1853,10 @@ object Similarity {
         "truncate or null-pad instead of failing loudly")
     withNormalized(
         df.select(col(embCol)).filter(col(embCol).isNotNull), embCol, "_nv")
-      .withColumn("_rcid",
-        graft.functions.VectorExpressions.nearest_centroid(
-          asDouble(col(embCol)), codebook))
+      .withColumn("_rcid", VE.nearest_centroid(asDouble(col(embCol)), codebook))
       .join(broadcast(normCentroids(df.sparkSession, codebook)), Seq("_rcid"))
       .select(zip_with(col("_nv"), col("_rcn"), (a, b) => a - b).as("_n"))
   }
-
-  /** y = R·v through the compiled mat_vec kernel (R rides as a
-    * literal — the codebook-literal trade; one tight D×D loop per
-    * row, which matters because OPQ assign rotates EVERY corpus row).
-    * A vector whose length does not match R's rows yields NULL — a
-    * truncated product is the exact fake-near-match hazard the ADC
-    * kernel guards against. */
-  private def matVec(rot: Seq[Seq[Double]], v: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    graft.functions.VectorExpressions.mat_vec(rot, v)
 
   /** Cyclic-Jacobi eigendecomposition of a symmetric matrix (driver
     * side; the input is a D×D covariance, KBs at embedding dims).
@@ -2197,13 +2138,13 @@ object Similarity {
     require(opqIters >= 0, s"opqIters must be >= 0, got $opqIters")
     var rot = init
     var books = trainSubspaceCodebooks(
-      sample.select(matVec(rot, col("_n")).as("_n")),
+      sample.select(VE.mat_vec(rot, col("_n")).as("_n")),
       numSubspaces, dsub, ksub, iters, maxTrainRows)
     var it = 0
     while (it < opqIters) {
       rot = procrustesRotation(procrustesMoments(sample, rot, books, dims, dsub))
       books = trainSubspaceCodebooks(
-        sample.select(matVec(rot, col("_n")).as("_n")),
+        sample.select(VE.mat_vec(rot, col("_n")).as("_n")),
         numSubspaces, dsub, ksub, iters, maxTrainRows)
       it += 1
     }
@@ -2237,10 +2178,7 @@ object Similarity {
       opqIters: Int = 0): PqModel = {
     requireKsub(ksub)
     val (dims, dsub) = probeDims(df, embCol, numSubspaces, "pqTrainOpq")
-    val normed = withNormalized(
-        df.select(col(embCol)).filter(col(embCol).isNotNull), embCol, "_n")
-      .select(col("_n"))
-    val sample = boundedSample(normed, maxTrainRows)
+    val sample = boundedSample(normedVecs(df, embCol), maxTrainRows)
     val init = pcaAllocRotation(sample, dims, numSubspaces, dsub, "pqTrainOpq")
     val (rotation, books) = refineOpqRotation(sample, dims, numSubspaces,
       dsub, ksub, iters, maxTrainRows, init, opqIters)
@@ -2311,23 +2249,17 @@ object Similarity {
     require(!model.residual,
       "residual models code (vector − list centroid); assign them with " +
         "pqAssignResidual over an ivfAssign'ed frame")
-    val codes = array((0 until model.numSubspaces).map { s =>
-      graft.functions.VectorExpressions.nearest_centroid(
-        slice(col("_pq_n"), s * model.subDim + 1, model.subDim),
-        model.codebooks(s).zipWithIndex.map { case (ce, i) => (i.toLong, ce) })
-        .cast("smallint")
-    }: _*)
     val normed = withNormalized(df, embCol, "_pq_n")
     // OPQ rotation before slicing (see PqModel.rotation); a dims-
     // mismatched vector rotates to NULL, hence a null code
     val framed = model.rotation.fold(normed)(r =>
-      normed.withColumn("_pq_n", matVec(r, col("_pq_n"))))
+      normed.withColumn("_pq_n", VE.mat_vec(r, col("_pq_n"))))
     framed
       .withColumn(codeCol,
         when(col(embCol).isNotNull && col("_pq_n").isNotNull &&
-          size(col("_pq_n")) === model.dims, codes))
+          size(col("_pq_n")) === model.dims, pqCodes(model, col("_pq_n"))))
       // the explicit width check matters for DIRECT models (rotation
-      // models already null on mismatch via matVec): slice() past a
+      // models already null on mismatch via mat_vec): slice() past a
       // short vector yields empty subspaces whose nearest centroid is
       // index 0 at distance 0 — a valid-LOOKING code for a garbage
       // row, where sq_encode/bq_encode return NULL
@@ -2355,12 +2287,6 @@ object Similarity {
         "subtraction would truncate or null-pad instead of failing loudly")
     require(assigned.columns.contains(cidCol),
       s"pqAssignResidual needs the inverted-list column '$cidCol' — run ivfAssign first")
-    val codes = array((0 until model.numSubspaces).map { s =>
-      graft.functions.VectorExpressions.nearest_centroid(
-        slice(col("_pq_r"), s * model.subDim + 1, model.subDim),
-        model.codebooks(s).zipWithIndex.map { case (ce, i) => (i.toLong, ce) })
-        .cast("smallint")
-    }: _*)
     // OPQ composition: rotate the residual (R·(v̂ − ĉ) — identical to
     // residual-of-rotated because R is linear); a dims-mismatched row
     // rotates to NULL, hence a null code, same contract as pqAssign
@@ -2368,217 +2294,55 @@ object Similarity {
     withNormalized(assigned, embCol, "_pq_n")
       .join(broadcast(normCentroids(assigned.sparkSession, codebook)),
         col(cidCol) === col("_rcid"), "left")
-      .withColumn("_pq_r", model.rotation.fold(resid)(r => matVec(r, resid)))
+      .withColumn("_pq_r", model.rotation.fold(resid)(r => VE.mat_vec(r, resid)))
       .withColumn(codeCol,
         when(col(embCol).isNotNull && col("_rcn").isNotNull &&
-          col("_pq_r").isNotNull && size(col("_pq_n")) === model.dims, codes))
+          col("_pq_r").isNotNull && size(col("_pq_n")) === model.dims,
+          pqCodes(model, col("_pq_r"))))
       .drop("_pq_n", "_pq_r", "_rcid", "_rcn")
   }
 
-  /** IVF-PQ probe, single query vector: the scan reads the `nprobe`
-    * nearest inverted lists (same pruning as ivfProbeVec) but scores
-    * ADC over the CODE column — the raw embeddings never enter the
-    * list scan — then exact-cosine re-ranks only the `rerank` best
-    * ADC candidates (a bounded ordered-limit, ≥ k; default 4k,
-    * floor 32). Recall follows rerank and nprobe (SimilaritySpec pins
-    * recall@10 ≥ 0.9 on the fixture corpus); the FINAL scores are
-    * exact cosines, so results are deterministic and oracle-
-    * comparable wherever the shortlist contains the true top-k.
-    *
-    * `rerankFrom` is the codes-only-index hook: pass the primary
-    * store (a frame carrying `idCol` + `embCol`) and the probe never
-    * reads `embCol` from `assigned` — the persisted index can drop
-    * raw floats entirely (M bytes/row of codes instead of D floats),
-    * while the exact re-rank joins the rerank-bounded shortlist
-    * (broadcast build side) back to the store by id. Ids the store
-    * does not carry drop from the shortlist rather than score a fake
-    * match — keep index and store in step. */
+  /** Per subspace, the nearest codebook centroid of `v`'s slice — the
+    * M-smallint PQ code (the codebooks ride inside nearest_centroid's
+    * generated code). */
+  private def pqCodes(model: PqModel, v: Column): Column =
+    array((0 until model.numSubspaces).map { s =>
+      VE.nearest_centroid(slice(v, s * model.subDim + 1, model.subDim),
+        model.codebooks(s).zipWithIndex.map { case (ce, i) => (i.toLong, ce) })
+        .cast("smallint")
+    }: _*)
+
+  /** IVF-PQ probe, single query vector (see Codec): the list scan
+    * scores ADC (`pq_adc`) over the M-smallint code column — the raw
+    * embeddings never enter it. Recall follows rerank and nprobe
+    * (SimilaritySpec pins recall@10 ≥ 0.9 on the fixture corpus); the
+    * FINAL scores are exact cosines, so results are deterministic and
+    * oracle-comparable wherever the shortlist contains the true top-k.
+    * A query of the wrong width fails loudly: against a wrong model
+    * every ADC score is NaN and the shortlist would be arbitrary. */
   def ivfPqProbe(assigned: DataFrame, embCol: String, idCol: String,
       query: Seq[Double], k: Int, codebook: Seq[(Long, Seq[Double])],
       pq: PqModel, nprobe: Int = 1, rerank: Int = 0,
       cidCol: String = "cid", codeCol: String = "pq_code",
       excludeId: Option[Long] = None,
-      rerankFrom: Option[DataFrame] = None): DataFrame = {
-    require(codebook.nonEmpty, "ivfPqProbe needs the coarse codebook to rank inverted lists")
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    // without this, a wrong-model pairing makes EVERY row's ADC NaN
-    // and the shortlist degrades to the rr smallest ids — silently
-    // near-arbitrary results instead of a loud failure
-    require(query.length == pq.dims,
-      s"query has ${query.length} dims but the PqModel codes ${pq.dims}")
-    require(!pq.residual || codebook.forall(_._2.length == pq.dims),
-      s"coarse centroid dims != PqModel dims (${pq.dims}) — the residual " +
-        "query shift would silently truncate")
-    val rr = if (rerank > 0) rerank else math.max(4 * k, 32)
-    require(rr >= k, s"rerank ($rr) must be >= k ($k)")
-    val cids = rankInvertedLists(codebook, query).take(nprobe)
-    val base = assigned.filter(col(cidCol).isin(cids: _*))
-    val scoped = excludeId.fold(base)(id => base.filter(col(idCol) =!= id))
-    val qn = normalizeVec(query)
-    // residual model: each probed list scores against ITS shifted
-    // query (q̂ − ĉ_list), which against residual codebooks is exactly
-    // ||q̂ − (ĉ + r̂)||² — the centroid added back at ADC time. The
-    // nprobe shifted queries (rotated too, for a composed OPQ model)
-    // are computed driver-side and ride in a KB-sized broadcast
-    // lookup joined on the list id, so pq_adc — and its M×ksub
-    // codebook literal — appears ONCE in the generated code no matter
-    // how wide the probe (an nprobe-deep when-chain re-embedded the
-    // codebook per arm and grew generated code past the JIT's comfort
-    // at large nprobe·ksub).
-    // OPQ model (direct): the query rotates into the codebooks' frame
-    // driver-side (orthogonality preserves every distance ranked).
-    val outCols = (adc: Column) => col(idCol) +:
-      rerankFrom.fold(Seq(col(embCol)))(_ => Nil) :+ adc.as("_adc")
-    val scoredList =
-      if (!pq.residual)
-        scoped.select(outCols(graft.functions.VectorExpressions.pq_adc(
-          typedLit(pq.rotation.fold(qn)(rotateVec(_, qn))),
-          col(codeCol), pq.codebooks)): _*)
-      else {
-        val spark = assigned.sparkSession
-        import spark.implicits._
-        val cmap = codebook.toMap
-        val shifted = cids.map { c =>
-          val s0 = qn.zip(normalizeVec(cmap(c))).map { case (a, b) => a - b }
-          (c, pq.rotation.fold(s0)(rotateVec(_, s0)))
-        }.toDF("_scid", "_qs")
-        scoped.join(broadcast(shifted), col(cidCol) === col("_scid"))
-          .select(outCols(graft.functions.VectorExpressions.pq_adc(
-            col("_qs"), col(codeCol), pq.codebooks)): _*)
-      }
-    val shortlist = scoredList
-      // null/NaN scores DROP, not sort-last: in an under-full list a
-      // sorted-last null-coded row (appended without pqAssign, or a
-      // foreign index) would still pass the limit into the exact
-      // stage despite never being ADC-shortlisted — the same rule
-      // ivfSqProbeAll/ivfBqProbeAll apply
-      .filter(col("_adc").isNotNull && !isnan(col("_adc")))
-      .orderBy(asc("_adc"), col(idCol))
-      .limit(rr)
-    // codes-only index: the list scan above read (id, code) alone, and
-    // only the rr-row shortlist fetches raw embeddings from the
-    // primary store — the storage shape where the written index drops
-    // its float column entirely. The shortlist is rerank-bounded, so
-    // it broadcasts; ids the store does not carry (index/store drift)
-    // drop from the shortlist rather than score a fake match.
-    val withEmb = rerankFrom.fold(shortlist)(store =>
-      shortlist.hint("broadcast")
-        .join(store.select(col(idCol), col(embCol)), Seq(idCol)))
-    withEmb
-      .select(col(idCol),
-        round(cosine(asDouble(col(embCol)), typedLit(query)), 4).as("cos"))
-      // NaN drop: a zero-norm shortlist row would rank FIRST (see
-      // bruteForceTopK)
-      .filter(!isnan(col("cos")))
-      .orderBy(desc("cos"), col(idCol))
-      .limit(k)
-  }
+      rerankFrom: Option[DataFrame] = None): DataFrame =
+    probeOne("ivfPqProbe", assigned, embCol, idCol, query, k, Pq(pq, codeCol),
+      Some(Lists(codebook, nprobe, cidCol)), excludeId, rerank, rerankFrom)
 
-  /** Batch IVF-PQ probe — ivfProbeAll's throughput shape with the PQ
-    * scan economics: the probed lists are scored by ADC against the
-    * code column (per-query window keeps the `rerank` best by
-    * approximate distance, ties by id), and only those shortlisted
-    * rows read the raw embedding for the exact-cosine top-k. Same
-    * probe-side sizing contract as ivfProbeAll (`broadcastProbes`:
-    * None = AQE decides at the window shuffle, Some(true/false)
-    * forces), and the same `rerankFrom` codes-only-index contract as
-    * ivfPqProbe (the list scan never reads `embCol`; the shortlist
-    * joins the primary store by id). Output:
-    * (qIdCol | q_<idCol>, idCol, cos, rank). */
+  /** Batch IVF-PQ probe (see Codec): ivfProbeAll's throughput shape
+    * with the PQ scan economics — probed lists score ADC against the
+    * code column and only the shortlisted rows read raw embeddings.
+    * A wrong-width query fails the job (`assert_true`). */
   def ivfPqProbeAll(assigned: DataFrame, embCol: String, idCol: String,
       queries: DataFrame, qIdCol: String, qEmbCol: String,
       codebook: Seq[(Long, Seq[Double])], pq: PqModel, k: Int,
       nprobe: Int = 1, rerank: Int = 0, cidCol: String = "cid",
       codeCol: String = "pq_code", excludeSelf: Boolean = false,
       broadcastProbes: Option[Boolean] = None,
-      rerankFrom: Option[DataFrame] = None): DataFrame = {
-    require(codebook.nonEmpty, "ivfPqProbeAll needs the coarse codebook to rank inverted lists")
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    require(!pq.residual || codebook.forall(_._2.length == pq.dims),
-      s"coarse centroid dims != PqModel dims (${pq.dims}) — the residual " +
-        "query shift would silently null-pad")
-    val rr = if (rerank > 0) rerank else math.max(4 * k, 32)
-    require(rr >= k, s"rerank ($rr) must be >= k ($k)")
-    val spark = assigned.sparkSession
-    import spark.implicits._
-    // _cn (the normalized centroid) rides along for residual models:
-    // list ranking uses the RAW centroid distance (same rule as
-    // rankInvertedLists), but residual shifting subtracts ĉ.
-    val cb = codebook.map { case (cid, ce) => (cid, ce, normalizeVec(ce)) }
-      .toDF("_cbid", "_ce", "_cn")
-    val sqDistC = aggregate(
-      zip_with(col(qEmbCol), col("_ce"), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, v) => acc + v)
-    val probes = withNormalized(
-        queries.select(col(qIdCol), asDouble(col(qEmbCol)).as(qEmbCol)),
-        qEmbCol, "_qn")
-      // a NULL query embedding probes nothing (dropped here) — family
-      // parity with ivfProbe/ivfSqProbeAll/ivfBqProbeAll, and without
-      // the drop assert_true would throw on its null predicate and
-      // kill the whole batch job for one bad row
-      .filter(col(qEmbCol).isNotNull)
-      // per-row twin of ivfPqProbe's driver-side dims require: a
-      // wrong-model pairing must fail loudly, not return the all-NaN
-      // near-arbitrary shortlist. assert_true returns null when the
-      // predicate holds, so the filter keeps every valid row and the
-      // assertion cannot be pruned away with an unused column.
-      .filter(assert_true(size(col(qEmbCol)) === pq.dims,
-        lit(s"probe embedding dims != PqModel dims (${pq.dims})")).isNull)
-      .join(broadcast(cb), lit(true))
-      .select(col(qIdCol), col(qEmbCol), col("_qn"), col("_cbid"), col("_cn"),
-        sqDistC.as("_d"))
-      .withColumn("_r", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(qIdCol).orderBy(col("_d"), col("_cbid"))))
-      .filter(col("_r") <= nprobe)
-      // residual model: "_qn" becomes the per-list shifted query
-      // (q̂ − ĉ_list); with a rotation it then turns into the
-      // codebooks' frame (R·(q̂ − ĉ) for composed OPQ+residual, R·q̂
-      // for direct OPQ) — downstream ADC scoring is identical either way
-      .select(col(qIdCol).as("_qid"), col(qEmbCol).as("_qe"), {
-        val shiftedQ =
-          if (pq.residual) zip_with(col("_qn"), col("_cn"), (a, b) => a - b)
-          else col("_qn")
-        pq.rotation.fold(shiftedQ)(r => matVec(r, shiftedQ)).as("_qn")
-      }, col("_cbid"))
-    val joined = broadcastProbes match {
-      case Some(true)  => assigned.join(broadcast(probes), col(cidCol) === col("_cbid"))
-      case Some(false) => assigned.join(probes.repartition(col("_cbid")), col(cidCol) === col("_cbid"))
-      case None        => assigned.join(probes, col(cidCol) === col("_cbid"))
-    }
-    val scoped =
-      if (excludeSelf) joined.filter(!(col(idCol) <=> col("_qid"))) else joined
-    val outQ = if (qIdCol == idCol) s"q_$qIdCol" else qIdCol
-    val shortlist = scoped
-      .select(Seq(col("_qid"), col(idCol)) ++
-        rerankFrom.fold(Seq(col(embCol)))(_ => Nil) ++ Seq(col("_qe"),
-        graft.functions.VectorExpressions.pq_adc(
-          col("_qn"), col(codeCol), pq.codebooks).as("_adc")): _*)
-      // null/NaN drop — same rule as ivfPqProbe's single-query path
-      .filter(col("_adc").isNotNull && !isnan(col("_adc")))
-      .withColumn("_ar", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("_qid").orderBy(asc("_adc"), col(idCol))))
-      .filter(col("_ar") <= rr)
-    // codes-only index (see ivfPqProbe): the list scan reads (id,
-    // code) alone; the queries x rerank shortlist fetches embeddings
-    // from the primary store by id. Un-hinted — the shortlist exits a
-    // window shuffle, so AQE sees its real (rerank-bounded) size and
-    // broadcasts when it fits; a crawl-sized probe batch falls back to
-    // a shuffle join instead of OOMing an executor.
-    val withEmb = rerankFrom.fold(shortlist)(store =>
-      shortlist.join(store.select(col(idCol), col(embCol)), Seq(idCol)))
-    withEmb
-      .select(col("_qid"), col(idCol),
-        round(cosine(asDouble(col(embCol)), col("_qe")), 4).as("cos"))
-      // NaN/null drop before the rank (desc puts NaN first)
-      .filter(col("cos").isNotNull && !isnan(col("cos")))
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("_qid").orderBy(desc("cos"), col(idCol))))
-      .filter(col("rank") <= k)
-      .select(col("_qid").as(outQ), col(idCol), col("cos"), col("rank"))
-  }
+      rerankFrom: Option[DataFrame] = None): DataFrame =
+    probeBatch("ivfPqProbeAll", assigned, embCol, idCol, queries, qIdCol, qEmbCol,
+      k, Pq(pq, codeCol), Some(Lists(codebook, nprobe, cidCol, broadcastProbes)),
+      excludeSelf, rerank, rerankFrom)
 
   /** Near-duplicate embedding pairs above a cosine threshold, searched
     * bucket-locally (no O(n^2) cross join): bucket by hyperplane
@@ -2620,108 +2384,72 @@ object Similarity {
   }
 
   /** PQ-coded near-duplicate pairs — `nearDupPairsIvf` with the IVF-PQ
-    * scan economics carried into PAIR search. The bucket arrays and
-    * the pair expansion hold (id, M-byte code) rows instead of
-    * (id, D-float vector) rows — ~D·8/M less per-bucket state and
-    * pair-scan bandwidth (64-dim doubles at M=4: 512 B -> 8 B per
-    * row) — and in-bucket pairs are scored by SDC approximate cosine
-    * straight off the codes (pq_sdc_cos — the dot tables ride inside
-    * the generated code; no floats in the expansion). Only pairs with
-    * approx >= minCosine − sdcMargin survive to the exact stage, which
-    * joins the raw embeddings back BY ID (AQE sizes the join from the
-    * survivor count at runtime) and re-scores exact cosine — final
-    * rows carry EXACT scores, bit-identical to `nearDupPairsIvf` for
-    * every pair the prefilter keeps. sdcMargin is the recall knob:
-    * SDC pays quantization error on both sides, so a near-threshold
-    * true pair can score under minCosine; sdcMargin >= 2 disables the
-    * prefilter outright (approx cosine is never < −1), making the
-    * result EQUAL to `nearDupPairsIvf` at the same nprobe — the
-    * equality SimilaritySpec pins. Same contracts as the raw variant:
-    * ids must be unique, hot lists cap with observed drop counts,
-    * a pair sharing several lists dedups to one row. */
+    * scan economics carried into PAIR search: the bucket arrays and the
+    * pair expansion hold (id, M-byte code) rows instead of (id, D-float
+    * vector) rows (64-dim doubles at M=4: 512 B -> 8 B per row), and
+    * in-bucket pairs score by SDC approximate cosine straight off the
+    * codes (`pq_sdc_cos`). Only pairs with approx >= minCosine −
+    * sdcMargin survive to the exact stage, which joins the raw
+    * embeddings back BY ID and re-scores exact cosine — bit-identical
+    * to `nearDupPairsIvf` for every pair the prefilter keeps.
+    * sdcMargin is the recall knob: SDC pays quantization error on
+    * both sides, so a near-threshold true pair can score under
+    * minCosine; sdcMargin >= 2 disables the prefilter outright (approx
+    * cosine is never < −1), making the result EQUAL to
+    * `nearDupPairsIvf` at the same nprobe (SimilaritySpec). Ids must
+    * be unique, hot lists cap with observed drop counts, a pair sharing
+    * several lists dedups to one row. Direct models only: SDC scores
+    * codes alone and cannot carry a residual model's per-list cross
+    * terms. */
   def nearDupPairsIvfPq(df: DataFrame, embCol: String, idCol: String,
       codebook: Seq[(Long, Seq[Double])], pq: PqModel, minCosine: Double,
       nprobe: Int = 1, maxBucket: Int = 8192,
-      sdcMargin: Double = 0.1): DataFrame = {
-    require(codebook.nonEmpty, "nearDupPairsIvfPq needs a codebook")
-    require(nprobe >= 1 && nprobe <= codebook.size,
-      s"nprobe must be in [1, ${codebook.size}], got $nprobe")
-    require(sdcMargin >= 0.0, s"sdcMargin must be >= 0, got $sdcMargin")
-    require(!pq.residual,
-      "SDC scores codes alone and cannot carry the per-list centroid cross " +
-        "terms a residual model needs — train a direct pqTrain model for pair search")
-    val ranked = rankedListsCol(col(embCol), codebook)
-    val bucketed = pqAssign(df.select(col(idCol), col(embCol)), embCol, pq, "_code")
-      .select(col(idCol).as("_id"), col("_code"),
-        explode(transform(slice(ranked, 1, nprobe), p => p.getField("cid"))).as("_bucket"))
-    // same spill-safe sort-merge self-join expansion as
-    // pairsInBuckets (see its Scaladoc), over codes
-    val (capL, capR) = HotKeys.capPair(bucketed, Seq(col("_bucket")), maxBucket,
-      metricName = "graft_ivf_pq_bucket_cap")
-    val candidates = capL
-      .select(col("_bucket"), col("_id").as("id_a"), col("_code").as("_ca"))
-      .hint("merge")
-      .join(capR.select(col("_bucket"), col("_id").as("id_b"), col("_code").as("_cb")),
-        Seq("_bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        graft.functions.VectorExpressions.pq_sdc_cos(
-          col("_ca"), col("_cb"), pq.codebooks).as("_approx"))
-      .filter(col("_approx") >= minCosine - sdcMargin)
-      .dropDuplicates("id_a", "id_b")
-    val vecs = df.select(col(idCol), asDouble(col(embCol)).as("_e"))
-    candidates
-      .join(vecs.select(col(idCol).as("id_a"), col("_e").as("_ea")), "id_a")
-      .join(vecs.select(col(idCol).as("id_b"), col("_e").as("_eb")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(cosine(col("_ea"), col("_eb")), 4).as("cos"))
-      // NaN guard: NaN >= threshold is TRUE under Spark's ordering —
-      // a zero-norm vector would otherwise "match" every candidate
-      .filter(!isnan(col("cos")) && col("cos") >= minCosine)
-  }
+      sdcMargin: Double = 0.1): DataFrame =
+    sdcPairs(Pq(pq, "_code"), df, embCol, idCol, codebook, minCosine,
+      nprobe, maxBucket, sdcMargin)
 
-  /** SQ8-coded near-duplicate pairs — `nearDupPairsIvf` with the SQ
-    * scan economics carried into PAIR search: the bucket arrays and
-    * the pair expansion hold (id, D-byte code) rows instead of
-    * (id, D-double vector) rows — 8× less per-bucket state and
-    * pair-scan bandwidth — and in-bucket pairs are scored by the
-    * dequant-cosine SDC kernel (sq_sdc_cos) straight off the codes.
-    * Same prefilter contract as nearDupPairsIvfPq (survivors of
-    * approx ≥ minCosine − sdcMargin join raw embeddings by id for the
-    * exact score; sdcMargin ≥ 2 disables the prefilter, pinning
-    * equality with nearDupPairsIvf), but at 256 levels/dim the SDC
-    * error is tiny even two-sided, so the default margin is 0.02
-    * where PQ needs 0.1 — tighter prefilter, fewer exact-verify rows.
-    * Ids must be unique, hot lists cap with observed drop counts, a
-    * pair sharing several lists dedups to one row. */
+  /** SQ8-coded near-duplicate pairs — nearDupPairsIvfPq's plan over
+    * D-byte SQ8 codes and the dequant-cosine SDC kernel (`sq_sdc_cos`):
+    * 8× less per-bucket state than raw doubles, and at 256 levels per
+    * dimension the two-sided SDC error is tiny, so the default margin
+    * is 0.02 where PQ needs 0.1 — a tighter prefilter, fewer
+    * exact-verify rows. */
   def nearDupPairsIvfSq(df: DataFrame, embCol: String, idCol: String,
       codebook: Seq[(Long, Seq[Double])], sq: SqModel, minCosine: Double,
       nprobe: Int = 1, maxBucket: Int = 8192,
-      sdcMargin: Double = 0.02): DataFrame = {
-    require(codebook.nonEmpty, "nearDupPairsIvfSq needs a codebook")
+      sdcMargin: Double = 0.02): DataFrame =
+    sdcPairs(Sq8(sq, "_code"), df, embCol, idCol, codebook, minCosine,
+      nprobe, maxBucket, sdcMargin)
+
+  /** The coded pair search behind nearDupPairsIvfPq/Sq: multi-assign
+    * every row to its `nprobe` nearest lists, expand in-bucket pairs
+    * over codes through the spill-safe sort-merge self-join of
+    * pairsInBuckets (see its Scaladoc), prefilter by SDC, verify exact
+    * by id. */
+  private def sdcPairs(c: Coded with Sdc, df: DataFrame, embCol: String,
+      idCol: String, codebook: Seq[(Long, Seq[Double])], minCosine: Double,
+      nprobe: Int, maxBucket: Int, sdcMargin: Double): DataFrame = {
+    require(codebook.nonEmpty, s"nearDupPairsIvf${c.tag.capitalize} needs a codebook")
     require(nprobe >= 1 && nprobe <= codebook.size,
       s"nprobe must be in [1, ${codebook.size}], got $nprobe")
     require(sdcMargin >= 0.0, s"sdcMargin must be >= 0, got $sdcMargin")
-    require(!sq.residual,
+    require(!c.residual,
       "SDC scores codes alone and cannot carry the per-list centroid cross " +
-        "terms a residual model needs — train a direct sqTrain model for pair search")
+        s"terms a residual model needs — train a direct ${c.tag}Train model " +
+        "for pair search")
     val ranked = rankedListsCol(col(embCol), codebook)
-    val bucketed = sqAssign(df.select(col(idCol), col(embCol)), embCol, sq, "_code")
+    val bucketed = c.assign(df.select(col(idCol), col(embCol)), embCol)
       .select(col(idCol).as("_id"), col("_code"),
         explode(transform(slice(ranked, 1, nprobe), p => p.getField("cid"))).as("_bucket"))
-    // same spill-safe sort-merge self-join expansion as
-    // pairsInBuckets (see its Scaladoc), over codes
     val (capL, capR) = HotKeys.capPair(bucketed, Seq(col("_bucket")), maxBucket,
-      metricName = "graft_ivf_sq_bucket_cap")
+      metricName = s"graft_ivf_${c.tag}_bucket_cap")
     val candidates = capL
       .select(col("_bucket"), col("_id").as("id_a"), col("_code").as("_ca"))
       .hint("merge")
       .join(capR.select(col("_bucket"), col("_id").as("id_b"), col("_code").as("_cb")),
         Seq("_bucket"))
       .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        graft.functions.VectorExpressions.sq_sdc_cos(
-          col("_ca"), col("_cb"), sq.mm).as("_approx"))
+      .select(col("id_a"), col("id_b"), c.sdc(col("_ca"), col("_cb")).as("_approx"))
       .filter(col("_approx") >= minCosine - sdcMargin)
       .dropDuplicates("id_a", "id_b")
     val vecs = df.select(col(idCol), asDouble(col(embCol)).as("_e"))
@@ -2735,123 +2463,24 @@ object Similarity {
       .filter(!isnan(col("cos")) && col("cos") >= minCosine)
   }
 
-  /** Batch IVF-SQ8 probe — ivfPqProbeAll's throughput shape with the
-    * SQ scan economics: probed lists are scored by the dequant-cosine
-    * kernel against the code column (D bytes per row), each query's
-    * `rerank` best approximate cosines re-rank exact. Same probe-side
-    * sizing (`broadcastProbes`) and codes-only `rerankFrom` contracts
-    * as ivfPqProbeAll; NaN approx scores are nulled before the
-    * DESCENDING shortlist window (see ivfSqProbe). Output:
-    * (qIdCol | q_<idCol>, idCol, cos, rank). */
+  /** Batch IVF-SQ8 probe (see Codec): probed lists score the D-byte
+    * code column; each query's shortlist re-ranks exact. */
   def ivfSqProbeAll(assigned: DataFrame, embCol: String, idCol: String,
       queries: DataFrame, qIdCol: String, qEmbCol: String,
       codebook: Seq[(Long, Seq[Double])], sq: SqModel, k: Int,
       nprobe: Int = 1, rerank: Int = 0, cidCol: String = "cid",
       codeCol: String = "sq_code", excludeSelf: Boolean = false,
       broadcastProbes: Option[Boolean] = None,
-      rerankFrom: Option[DataFrame] = None): DataFrame = {
-    require(codebook.nonEmpty, "ivfSqProbeAll needs the coarse codebook to rank inverted lists")
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    require(!sq.residual || codebook.forall(_._2.length == sq.dims),
-      s"coarse centroid dims != SqModel dims (${sq.dims}) — the residual " +
-        "query shift would silently null-pad")
-    val rr = if (rerank > 0) rerank else math.max(4 * k, 32)
-    require(rr >= k, s"rerank ($rr) must be >= k ($k)")
-    val spark = assigned.sparkSession
-    import spark.implicits._
-    // _cn (the normalized centroid) rides along for residual models:
-    // list ranking uses the RAW centroid distance, residual shifting
-    // subtracts ĉ — same split as ivfPqProbeAll.
-    val cb = codebook.map { case (cid, ce) => (cid, ce, normalizeVec(ce)) }
-      .toDF("_cbid", "_ce", "_cn")
-    val sqDistC = aggregate(
-      zip_with(col(qEmbCol), col("_ce"), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, v) => acc + v)
-    val probes = withNormalized(
-        queries.select(col(qIdCol), asDouble(col(qEmbCol)).as(qEmbCol)),
-        qEmbCol, "_qn")
-      // per-row twin of ivfSqProbe's driver-side dims require: a
-      // wrong-model pairing must fail loudly, not silently shortlist
-      // nothing (every approx NaN → null → all shortlists empty)
-      .withColumn("_qn", when(size(col("_qn")) === sq.dims, col("_qn")))
-      .join(broadcast(cb), lit(true))
-      .select(col(qIdCol), col(qEmbCol), col("_qn"), col("_cbid"), col("_cn"),
-        sqDistC.as("_d"))
-      .withColumn("_r", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(qIdCol).orderBy(col("_d"), col("_cbid"))))
-      .filter(col("_r") <= nprobe)
-      .select(col(qIdCol).as("_qid"), col(qEmbCol).as("_qe"), {
-        val shiftedQ =
-          if (sq.residual) zip_with(col("_qn"), col("_cn"), (a, b) => a - b)
-          else col("_qn")
-        shiftedQ.as("_qn")
-      }, col("_cbid"))
-    val joined = broadcastProbes match {
-      case Some(true)  => assigned.join(broadcast(probes), col(cidCol) === col("_cbid"))
-      case Some(false) => assigned.join(probes.repartition(col("_cbid")), col(cidCol) === col("_cbid"))
-      case None        => assigned.join(probes, col(cidCol) === col("_cbid"))
-    }
-    val scoped =
-      if (excludeSelf) joined.filter(!(col(idCol) <=> col("_qid"))) else joined
-    val outQ = if (qIdCol == idCol) s"q_$qIdCol" else qIdCol
-    // direct: NaN-guarded approximate cosine, descending; residual:
-    // ADC squared L2 of the shifted query, ascending (NaN sorts last
-    // by itself) — same split as ivfSqProbe
-    val (scoreCol, shortOrder) =
-      if (!sq.residual) {
-        val approx = graft.functions.VectorExpressions.sq_adc_cos(
-          col("_qn"), col(codeCol), sq.mm)
-        (when(!isnan(approx), approx), desc_nulls_last("_sqc"))
-      } else
-        (graft.functions.VectorExpressions.sq_adc_l2(
-          col("_qn"), col(codeCol), sq.mm), asc_nulls_last("_sqc"))
-    // null approx scores (wrong-width query → _qn nulled above, or a
-    // null corpus code) are DROPPED, not just sorted last: an
-    // under-full probed list would otherwise pass them through the
-    // rank filter into a bogus min-length exact cosine
-    val shortlist = scoped
-      .select(Seq(col("_qid"), col(idCol)) ++
-        rerankFrom.fold(Seq(col(embCol)))(_ => Nil) ++ Seq(col("_qe"),
-        scoreCol.as("_sqc")): _*)
-      .filter(col("_sqc").isNotNull)
-      .withColumn("_ar", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("_qid").orderBy(shortOrder, col(idCol))))
-      .filter(col("_ar") <= rr)
-    // codes-only index: un-hinted store join — AQE sizes it from the
-    // rerank-bounded shortlist, same rationale as ivfPqProbeAll
-    val withEmb = rerankFrom.fold(shortlist)(store =>
-      shortlist.join(store.select(col(idCol), col(embCol)), Seq(idCol)))
-    withEmb
-      .select(col("_qid"), col(idCol),
-        round(cosine(asDouble(col(embCol)), col("_qe")), 4).as("cos"))
-      // NaN/null drop before the rank (desc puts NaN first)
-      .filter(col("cos").isNotNull && !isnan(col("cos")))
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("_qid").orderBy(desc("cos"), col(idCol))))
-      .filter(col("rank") <= k)
-      .select(col("_qid").as(outQ), col(idCol), col("cos"), col("rank"))
-  }
+      rerankFrom: Option[DataFrame] = None): DataFrame =
+    probeBatch("ivfSqProbeAll", assigned, embCol, idCol, queries, qIdCol, qEmbCol,
+      k, Sq8(sq, codeCol), Some(Lists(codebook, nprobe, cidCol, broadcastProbes)),
+      excludeSelf, rerank, rerankFrom)
 
-  /** Batch IVF-BQ probe — the equi-key throughput shape for sign
-    * codes: where bqProbeAll is a broadcast nested loop (a flat
-    * binary scan has no equi-key, so only probe-sized batches afford
-    * it), this ranks each query's `nprobe` nearest inverted lists
-    * against the KB-sized codebook and joins the probe side to the
-    * coded corpus ON THE LIST ID — each corpus row is read once, only
-    * probed lists contribute, and a crawl-sized query batch can take
-    * the shuffle path instead of broadcasting. Queries normalize and
-    * encode CLUSTER-side through the same bq_encode kernel (no driver
-    * round-trip); probed rows rank per query by Hamming over packed
-    * codes (or the asymmetric reconstruction dot — see bqProbe), the
-    * rerank-bounded shortlist re-ranks by exact cosine. A query at
-    * the wrong width gets a null code → null score → empty shortlist
-    * (the batch twin of ivfBqProbe's loud dims require). Same
-    * `broadcastProbes` sizing and codes-only `rerankFrom` contracts
-    * as ivfPqProbeAll/ivfSqProbeAll. Output:
-    * (qIdCol | q_<idCol>, idCol, cos, rank). */
+  /** Batch IVF-BQ probe (see Codec) — the equi-key throughput shape for
+    * sign codes: where bqProbeAll is a broadcast nested loop, this
+    * joins the ranked probes to the coded corpus ON THE LIST ID, so
+    * each corpus row is read once, only probed lists contribute, and a
+    * crawl-sized query batch can take the shuffle path. */
   def ivfBqProbeAll(coded: DataFrame, embCol: String, idCol: String,
       queries: DataFrame, qIdCol: String, qEmbCol: String,
       codebook: Seq[(Long, Seq[Double])], model: BqModel, k: Int,
@@ -2859,81 +2488,14 @@ object Similarity {
       codeCol: String = "bq_code", excludeSelf: Boolean = false,
       broadcastProbes: Option[Boolean] = None,
       rerankFrom: Option[DataFrame] = None,
-      asymmetric: Boolean = false): DataFrame = {
-    require(codebook.nonEmpty,
-      "ivfBqProbeAll needs the coarse codebook to rank inverted lists")
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val rr = if (rerank > 0) rerank else math.max(4 * k, 32)
-    require(rr >= k, s"rerank ($rr) must be >= k ($k)")
-    val spark = coded.sparkSession
-    import spark.implicits._
-    val cb = codebook.toDF("_cbid", "_ce")
-    val sqDistC = aggregate(
-      zip_with(col(qEmbCol), col("_ce"), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, v) => acc + v)
-    val probes = withNormalized(
-        queries.select(col(qIdCol), asDouble(col(qEmbCol)).as(qEmbCol)),
-        qEmbCol, "_qn")
-      .withColumn("_qn", when(size(col("_qn")) === model.dims, col("_qn")))
-      .withColumn("_qc", graft.functions.VectorExpressions.bq_encode(
-        col("_qn"), model.thresholds))
-      .join(broadcast(cb), lit(true))
-      .select(col(qIdCol), col(qEmbCol), col("_qn"), col("_qc"), col("_cbid"),
-        sqDistC.as("_d"))
-      .withColumn("_r", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(qIdCol).orderBy(col("_d"), col("_cbid"))))
-      .filter(col("_r") <= nprobe)
-      .select(col(qIdCol).as("_qid"), col(qEmbCol).as("_qe"), col("_qn"),
-        col("_qc"), col("_cbid"))
-    val joined = broadcastProbes match {
-      case Some(true)  => coded.join(broadcast(probes), col(cidCol) === col("_cbid"))
-      case Some(false) => coded.join(probes.repartition(col("_cbid")), col(cidCol) === col("_cbid"))
-      case None        => coded.join(probes, col(cidCol) === col("_cbid"))
-    }
-    val scoped =
-      if (excludeSelf) joined.filter(!(col(idCol) <=> col("_qid"))) else joined
-    val outQ = if (qIdCol == idCol) s"q_$qIdCol" else qIdCol
-    val (scoreCol, shortOrder) =
-      if (asymmetric) {
-        val adc = graft.functions.VectorExpressions.bq_adc_dot(
-          col("_qn"), col(codeCol))
-        (when(!isnan(adc), adc), desc_nulls_last("_bqh"))
-      } else
-        (graft.functions.VectorExpressions.bq_hamming(
-          col("_qc"), col(codeCol)).cast("double"),
-          asc_nulls_last("_bqh"))
-    // null scores (null corpus code, or a wrong-width query whose
-    // cluster-side encode nulled) are DROPPED, not just sorted last —
-    // under-full lists would otherwise let them through the rank
-    // filter and into a bogus min-length exact cosine
-    val shortlist = scoped
-      .select(Seq(col("_qid"), col(idCol)) ++
-        rerankFrom.fold(Seq(col(embCol)))(_ => Nil) ++
-        Seq(col("_qe"), scoreCol.as("_bqh")): _*)
-      .filter(col("_bqh").isNotNull)
-      .withColumn("_ar", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("_qid").orderBy(shortOrder, col(idCol))))
-      .filter(col("_ar") <= rr)
-    // codes-only index: un-hinted store join — AQE sizes it from the
-    // rerank-bounded shortlist, same rationale as ivfPqProbeAll
-    val withEmb = rerankFrom.fold(shortlist)(store =>
-      shortlist.join(store.select(col(idCol), col(embCol)), Seq(idCol)))
-    withEmb
-      .select(col("_qid"), col(idCol),
-        round(cosine(asDouble(col(embCol)), col("_qe")), 4).as("cos"))
-      // NaN/null drop before the rank (desc puts NaN first)
-      .filter(col("cos").isNotNull && !isnan(col("cos")))
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("_qid").orderBy(desc("cos"), col(idCol))))
-      .filter(col("rank") <= k)
-      .select(col("_qid").as(outQ), col(idCol), col("cos"), col("rank"))
-  }
+      asymmetric: Boolean = false): DataFrame =
+    probeBatch("ivfBqProbeAll", coded, embCol, idCol, queries, qIdCol, qEmbCol,
+      k, Bq(model, codeCol, asymmetric),
+      Some(Lists(codebook, nprobe, cidCol, broadcastProbes)), excludeSelf,
+      rerank, rerankFrom)
 
-  /** STATIC half of the stream semantic tier (the embedding twin of
-    * Dedup.bandVerifyLookup): per inverted list, the SQ8 codes of its
+  /** STATIC half of the stream semantic tier (Dedup.bandVerifyLookup's
+    * shape for embeddings): per inverted list, the SQ8 codes of its
     * standing members collected into one array — D BYTES per standing
     * doc (8× less resident state than float vectors; this frame is
     * cached for the stream's lifetime, so the compression is exactly
@@ -2955,7 +2517,7 @@ object Similarity {
     standingIndex
       .filter(col(codeCol).isNotNull)
       .withColumn("_ln", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(cidCol)))
+        Window.partitionBy(cidCol)))
       .filter(col("_ln") <= maxList)
       .groupBy(col(cidCol).as("cid"))
       .agg(collect_list(col(codeCol)).as("_members"))
@@ -2965,12 +2527,9 @@ object Similarity {
     * embedding scores ADC cosine ≥ `minCosine` against ANY standing
     * member of one of its `nprobe` nearest inverted lists — live
     * semantic dedup of intake against a standing corpus with ZERO
-    * stream state (the twin of Dedup.streamNearDupFilter's shape: the
-    * row's probed list ids are computed map-side against the codebook
-    * literal, each probes the lookup through its own stream-static
-    * LEFT equi-join, and the verify is a row-local `exists` over the
-    * joined member codes — never an exploded stream needing
-    * re-aggregation, which Append mode disallows without state).
+    * stream state (the shape of Dedup.streamNearDupFilter, see
+    * `slotFilter`: the probed list ids are computed map-side against
+    * the codebook literal).
     *
     * Honest semantics: the drop decision is APPROXIMATE on one side —
     * the row's float vector scores against the standing docs' 8-bit
@@ -2992,24 +2551,14 @@ object Similarity {
       "the stream semantic tier verifies by direct ADC cosine — residual " +
         "models cannot ride it (see sqSemanticLookup)")
     val ranked = rankedListsCol(col(embCol), codebook)
-    val withQ = withNormalized(stream, embCol, "_sqv")
-    val withCids = (0 until nprobe).foldLeft(withQ)((d, i) =>
-      d.withColumn(s"_qc$i", element_at(ranked, i + 1).getField("cid")))
-    val joined = (0 until nprobe).foldLeft(withCids)((d, i) =>
-      d.join(lookup.select(col("cid").as(s"_pc$i"), col("_members").as(s"_pm$i")),
-        col(s"_qc$i") === col(s"_pc$i"), "left_outer"))
-    def hit(i: Int): Column = coalesce(
-      exists(col(s"_pm$i"), m => {
-        val c = graft.functions.VectorExpressions.sq_adc_cos(
-          col("_sqv"), m, sq.mm)
-        // !isnan: NaN >= threshold is TRUE under Spark's ordering
-        !isnan(c) && c >= minCosine
-      }),
-      lit(false))
-    joined
-      .filter(!(0 until nprobe).map(hit).reduce(_ || _))
-      .drop((0 until nprobe).flatMap(i => Seq(s"_qc$i", s"_pc$i", s"_pm$i")) :+
-        "_sqv": _*)
+    val members = lookup.select(col("cid"), col("_members"))
+    slotFilter(withNormalized(stream, embCol, "_sqv"),
+      (0 until nprobe).map(i => (element_at(ranked, i + 1).getField("cid"), members)),
+      Seq("_sqv")) { m =>
+      val c = VE.sq_adc_cos(col("_sqv"), m, sq.mm)
+      // !isnan: NaN >= threshold is TRUE under Spark's ordering
+      !isnan(c) && c >= minCosine
+    }
   }
 
   /** Standing-side lookup for the STREAM BQ semantic tier: the
@@ -3026,19 +2575,13 @@ object Similarity {
   def bqSemanticLookup(standingCoded: DataFrame, model: BqModel,
       codeCol: String = "bq_code", bands: Int = 0,
       maxBand: Int = 8192): DataFrame = {
-    val nb = if (bands > 0) bands else model.codeBytes
-    require(nb >= 1 && model.codeBytes % nb == 0,
-      s"codeBytes ${model.codeBytes} is not divisible into $nb byte-aligned bands")
-    val bytesPerBand = model.codeBytes / nb
-    val bandCols = (0 until nb).map(b =>
-      substring(col("_c"), b * bytesPerBand + 1, bytesPerBand))
+    val (nb, bpb) = bqBands(model, bands)
     standingCoded
       .filter(col(codeCol).isNotNull)
       .select(col(codeCol).as("_c"))
-      .select(col("_c"), posexplode(array(bandCols: _*)))
+      .select(col("_c"), posexplode(array(bandSlices(col("_c"), nb, bpb): _*)))
       .toDF("_c", "k", "band")
-      .withColumn("_ln", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("k", "band")))
+      .withColumn("_ln", count(lit(1)).over(Window.partitionBy("k", "band")))
       .filter(col("_ln") <= maxBand)
       .groupBy(col("k"), col("band"))
       .agg(collect_list(col("_c")).as("_members"))
@@ -3050,15 +2593,12 @@ object Similarity {
       .withColumnRenamed("band", s"band_b$nb")
   }
 
-  /** STREAM half of the BQ semantic tier — the live twin of
+  /** STREAM half of the BQ semantic tier — the live form of
     * `semanticIncremental`'s BQ route, sharing its band geometry: a
     * stream row normalizes and sign-encodes map-side, each of its
-    * byte-aligned band slices probes the cached standing lookup
-    * through its own stream-static LEFT equi-join (the exact shape
-    * `streamSemanticFilter` uses per probed list — never an exploded
-    * stream needing re-aggregation), and the verify is a row-local
-    * `exists` scoring the float query against each member's
-    * ±1/√D reconstruction (`bq_adc_dot` / √D — a true cosine
+    * byte-aligned band slices probes the cached standing lookup (see
+    * `slotFilter`), and the verify scores the float query against each
+    * member's ±1/√D reconstruction (`bq_adc_dot` / √D — a true cosine
     * estimate, since the reconstruction is unit-norm). Zero stream
     * state; recall is the banding s-curve of `bqBandCandidates`
     * (a standing near-dup within Hamming <= bands−1 collides with
@@ -3068,40 +2608,46 @@ object Similarity {
   def streamSemanticFilterBq(stream: DataFrame, embCol: String,
       lookup: DataFrame, model: BqModel, minCosine: Double,
       bands: Int = 0, maxHamming: Int = Int.MaxValue): DataFrame = {
-    val nb = if (bands > 0) bands else model.codeBytes
-    require(nb >= 1 && model.codeBytes % nb == 0,
-      s"codeBytes ${model.codeBytes} is not divisible into $nb byte-aligned bands")
+    val (nb, bpb) = bqBands(model, bands)
     require(lookup.columns.contains(s"band_b$nb"),
       s"lookup band geometry mismatch: this filter slices $nb bands but the " +
         s"lookup was built with ${lookup.columns.find(_.startsWith("band_b"))
           .map(_.stripPrefix("band_b")).getOrElse("an unknown count")} " +
         "(bqSemanticLookup's `bands` and Config.bqBands must agree)")
-    val bpb = model.codeBytes / nb
     val withQ = withNormalized(stream, embCol, "_bqv")
       // width guard: bq_adc_dot only NaNs when the BYTE count differs
       .withColumn("_bqv", when(size(col("_bqv")) === model.dims, col("_bqv")))
-      .withColumn("_bqc", graft.functions.VectorExpressions.bq_encode(
-        col("_bqv"), model.thresholds))
-    val withBands = (0 until nb).foldLeft(withQ)((d, i) =>
-      d.withColumn(s"_qb$i", substring(col("_bqc"), i * bpb + 1, bpb)))
-    val joined = (0 until nb).foldLeft(withBands)((d, i) =>
-      d.join(lookup.filter(col("k") === i)
-          .select(col(s"band_b$nb").as(s"_pb$i"), col("_members").as(s"_pm$i")),
-        col(s"_qb$i") === col(s"_pb$i"), "left_outer"))
+      .withColumn("_bqc", VE.bq_encode(col("_bqv"), model.thresholds))
     val sqrtD = math.sqrt(model.dims.toDouble)
-    def verify(m: Column): Column = {
-      val adc = graft.functions.VectorExpressions.bq_adc_dot(col("_bqv"), m)
+    slotFilter(withQ, bandSlices(col("_bqc"), nb, bpb).zipWithIndex.map { case (b, i) =>
+        (b, lookup.filter(col("k") === i).select(col(s"band_b$nb"), col("_members"))) },
+      Seq("_bqv", "_bqc")) { m =>
+      val adc = VE.bq_adc_dot(col("_bqv"), m)
       val cosOk = !isnan(adc) && (adc / sqrtD >= minCosine)
       if (maxHamming == Int.MaxValue) cosOk
-      else coalesce(graft.functions.VectorExpressions.bq_hamming(
-        col("_bqc"), m) <= maxHamming, lit(false)) && cosOk
+      else coalesce(VE.bq_hamming(col("_bqc"), m) <= maxHamming, lit(false)) && cosOk
     }
-    def hit(i: Int): Column =
-      coalesce(exists(col(s"_pm$i"), verify), lit(false))
+  }
+
+  /** The stream semantic tiers' shared probe (after Dedup's
+    * bandVerifyLookup/streamNearDupFilter shape): each slot's key (a
+    * probed list id, or a code band) probes its (key, `_members`)
+    * lookup through its own stream-static LEFT equi-join, and a row
+    * drops when `verify` holds for any member of any slot — a row-local
+    * `exists`, never an exploded stream needing re-aggregation, which
+    * Append mode disallows without state. `scratch` names the query
+    * columns to drop after. */
+  private def slotFilter(withQ: DataFrame, slots: Seq[(Column, DataFrame)],
+      scratch: Seq[String])(verify: Column => Column): DataFrame = {
+    val n = slots.length
+    val joined = slots.zipWithIndex.foldLeft(withQ) { case (d, ((key, lookup), i)) =>
+      d.withColumn(s"_sk$i", key)
+        .join(lookup.toDF(s"_lk$i", s"_pm$i"), col(s"_sk$i") === col(s"_lk$i"), "left_outer")
+    }
     joined
-      .filter(!(0 until nb).map(hit).reduce(_ || _))
-      .drop((0 until nb).flatMap(i => Seq(s"_qb$i", s"_pb$i", s"_pm$i")) ++
-        Seq("_bqv", "_bqc"): _*)
+      .filter(!(0 until n).map(i => coalesce(exists(col(s"_pm$i"), verify), lit(false)))
+        .reduce(_ || _))
+      .drop((0 until n).flatMap(i => Seq(s"_sk$i", s"_lk$i", s"_pm$i")) ++ scratch: _*)
   }
 
   /** Shared in-bucket pair expansion: cap hot buckets, then expand

@@ -19,9 +19,9 @@ import org.apache.spark.sql.functions._
   *    (BM25 `postings/`, IVF the root itself); the hash-band family
   *    is versioned from birth and has none.
   *  - `_compact_inprogress` — WRITER mutual exclusion for a versioned
-  *    rewrite (compaction, hash-band growth). Probes never block, and
-  *    a stale lock from a crashed rewrite is safe to delete and rerun:
-  *    nothing between lock and swap mutates servable state.
+  *    rewrite (compaction, every hash-band write). Probes never
+  *    block, and a stale lock from a crashed rewrite is safe to delete
+  *    and rerun: nothing between lock and swap mutates servable state.
   *  - `_tombstones/` — pending deleted ids (one column, the family's
   *    id column; underscore-prefixed, so a flat parquet layout never
   *    reads it as data). Every read applies them as an anti-join; a
@@ -114,11 +114,12 @@ private[operators] object StandingIndex {
     require(fs.createNewFile(new Path(s"$path/$Pointer$v")),
       s"pointer $Pointer$v already exists under $path — $clash")
 
-  /** The versioned rewrite behind every compaction and the hash-band
-    * growth rebuild, in this order: take the lock and pick the next
-    * version; snapshot the tombstone files; run `write(dir, snapshot)`
-    * into `<prefix>v<next>` (returning None declines to publish — the
-    * all-deleted skip — and leaves every file but the lock as it was);
+  /** The versioned rewrite behind every compaction and every hash-band
+    * write (a rebuild is a rewrite from an empty base), in this order:
+    * take the lock and pick the next version; snapshot the tombstone
+    * files; run `write(dir, snapshot)` into `<prefix>v<next>`
+    * (returning None declines to publish — the all-deleted skip — and
+    * leaves every file but the lock as it was);
     * publish the pointer; delete the stale pointers, EVERY superseded
     * version dir (a crash between an earlier swap and its housekeeping
     * leaves several, and the rerun must reclaim them all) and the flat
@@ -129,7 +130,7 @@ private[operators] object StandingIndex {
     * the old dir, after it the complete new one; a rerun's overwrite
     * reclaims a half-written dir. Readers that resolved a superseded
     * dir before the swap should tolerate one retry if housekeeping
-    * deletes it mid-scan. `growth` picks the rebuild's wording. */
+    * deletes it mid-scan. `growth` picks a rebuild's wording. */
   def rewrite[A](fs: FileSystem, path: String, prefix: String,
       flat: Option[String], growth: Boolean = false)(
       write: (String, Seq[String]) => Option[A]): Option[A] = {
@@ -167,18 +168,16 @@ private[operators] object StandingIndex {
     } finally { fs.delete(lock, false); () }
   }
 
-  /** A REBUILD's reset to an empty lifecycle, NAME-SCOPED to the
-    * family's own entries — tombstones, pointers, `<prefix>N` dirs and
-    * `extra` names: a catch-all root sweep would eat anything a user
-    * co-located at the root (a mistyped path or a neighboring artifact
-    * dies silently BEFORE any write). */
-  def resetVersions(fs: FileSystem, path: String, prefix: String,
-      extra: Set[String] = Set.empty): Unit =
+  /** The BM25 rebuild's reset to an empty lifecycle, NAME-SCOPED to
+    * the family's own entries — tombstones, pointers and `<prefix>N`
+    * dirs: a catch-all root sweep would eat anything a user co-located
+    * at the root (a mistyped path or a neighboring artifact dies
+    * silently BEFORE any write). */
+  def resetVersions(fs: FileSystem, path: String, prefix: String): Unit =
     fs.listStatus(new Path(path)).toSeq.map(_.getPath)
       .filter { p =>
         val n = p.getName
-        n == Tombstones || extra(n) || isVersionName(n, Pointer) ||
-          isVersionName(n, prefix)
+        n == Tombstones || isVersionName(n, Pointer) || isVersionName(n, prefix)
       }
       .foreach(fs.delete(_, true))
 

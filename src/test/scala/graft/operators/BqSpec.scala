@@ -453,6 +453,61 @@ class BqSpec extends SparkSpecBase {
     assert(rows.length == 20 * 20)
   }
 
+  test("a null-coded row is absent from every shortlist: single query == batch == clean frame (SQ8, BQ)") {
+    import spark.implicits._
+    // the query's nearest row (100, its own vector) loses its code; a
+    // shortlist wider than the corpus must still never score it exactly
+    val q = corpus.filter(col("vec_id") === 100L).head().getSeq[Double](1).toSeq
+    val queries = Seq((1L, q)).toDF("qid", "e")
+    val codebook = Seq(
+      (1L, Seq.tabulate(dim)(d => if (d < 8) 1.0 else -1.0)),
+      (2L, Seq.tabulate(dim)(d => if (d < 8) -1.0 else 1.0)))
+    def split(coded: org.apache.spark.sql.DataFrame, codeCol: String) = (
+      coded.withColumn(codeCol, when(col("vec_id") =!= 100L, col(codeCol))).cache(),
+      coded.filter(col("vec_id") =!= 100L).cache())
+    def single(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    def batch(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("rank").collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq
+    def agree(label: String, dirtySingle: Seq[(Long, Double)],
+        dirtyBatch: Seq[(Long, Double)], clean: Seq[(Long, Double)]): Unit = {
+      assert(clean.nonEmpty && !clean.exists(_._1 == 100L), s"$label clean: $clean")
+      assert(dirtySingle == clean, s"$label single-query $dirtySingle != clean $clean")
+      assert(dirtyBatch == clean, s"$label batch $dirtyBatch != clean $clean")
+    }
+
+    val bq = Similarity.bqTrain(corpus, "e")
+    val (bqDirty, bqClean) = split(Similarity.bqAssign(
+      Similarity.ivfAssign(corpus, codebook, "e"), "e", bq), "bq_code")
+    for (asym <- Seq(false, true)) {
+      agree(s"bq asymmetric=$asym",
+        single(Similarity.bqProbe(bqDirty, "e", "vec_id", q, 5, bq,
+          rerank = 100, asymmetric = asym)),
+        batch(Similarity.bqProbeAll(bqDirty, "e", "vec_id", queries, "qid", "e",
+          bq, k = 5, rerank = 100, asymmetric = asym)),
+        single(Similarity.bqProbe(bqClean, "e", "vec_id", q, 5, bq,
+          rerank = 100, asymmetric = asym)))
+      agree(s"ivf-bq asymmetric=$asym",
+        single(Similarity.ivfBqProbe(bqDirty, "e", "vec_id", q, 5, codebook, bq,
+          nprobe = 2, rerank = 100, asymmetric = asym)),
+        batch(Similarity.ivfBqProbeAll(bqDirty, "e", "vec_id", queries, "qid",
+          "e", codebook, bq, k = 5, nprobe = 2, rerank = 100, asymmetric = asym)),
+        single(Similarity.ivfBqProbe(bqClean, "e", "vec_id", q, 5, codebook, bq,
+          nprobe = 2, rerank = 100, asymmetric = asym)))
+    }
+
+    val sq = Similarity.sqTrain(corpus, "e")
+    val (sqDirty, sqClean) = split(Similarity.sqAssign(
+      Similarity.ivfAssign(corpus, codebook, "e"), "e", sq), "sq_code")
+    agree("sq8",
+      single(Similarity.ivfSqProbe(sqDirty, "e", "vec_id", q, 5, codebook, sq,
+        nprobe = 2, rerank = 100)),
+      batch(Similarity.ivfSqProbeAll(sqDirty, "e", "vec_id", queries, "qid", "e",
+        codebook, sq, k = 5, nprobe = 2, rerank = 100)),
+      single(Similarity.ivfSqProbe(sqClean, "e", "vec_id", q, 5, codebook, sq,
+        nprobe = 2, rerank = 100)))
+  }
+
   test("model round-trips through parquet; gappy artifact fails loudly") {
     withTempDir("bqmodel") { dir =>
       val m = Similarity.bqTrain(corpus, "e")

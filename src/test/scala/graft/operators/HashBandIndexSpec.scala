@@ -337,6 +337,30 @@ class HashBandIndexSpec extends SparkSpecBase {
     }
   }
 
+  test("a rebuild-by-write whose job fails leaves the old index serving the same survivors") {
+    withTempDir("hbi-fail") { dir =>
+      val path = dir.getAbsolutePath
+      Dedup.writeHashBandIndex(standing, "sig", "vid", path)
+      Dedup.deleteFromHashBandIndex(spark, path, Seq(201L).toDF("vid"), "vid")
+      val before = keptAgainst(path)
+      val statsBefore = Dedup.hashBandIndexStats(spark, path)
+      // one row's signature fails on the executors, inside the band job
+      val poisoned = standing.withColumn("sig",
+        when(col("vid") === 203L, raise_error(lit("poisoned signature")).cast("long"))
+          .otherwise(col("sig")))
+      intercept[Exception] {
+        Dedup.writeHashBandIndex(poisoned, "sig", "vid", path)
+      }
+      assert(keptAgainst(path) == before, "the failed rebuild took the index down")
+      // meta, tombstones and the writer lock are as they were
+      assert(Dedup.hashBandIndexStats(spark, path) == statsBefore)
+      // a corrected rebuild then replaces it (the tombstones clear)
+      Dedup.writeHashBandIndex(standing, "sig", "vid", path)
+      assert(keptAgainst(path) == Set(4L))
+      assert(Dedup.hashBandIndexStats(spark, path).tombstonedIds == 0)
+    }
+  }
+
   test("guards: band-column tombstones refused; mismatched tombstone columns refused") {
     withTempDir("hbi-guards") { dir =>
       val path = dir.getAbsolutePath

@@ -1,8 +1,10 @@
 package graft.core
 
-import scala.reflect.runtime.universe.TypeTag
+import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{Column, Encoders}
+import scala.reflect.runtime.universe.{TypeTag, typeOf}
+
+import org.apache.spark.sql.{Column, Encoder, Encoders}
 import org.apache.spark.sql.functions.{array, col, lit}
 import org.apache.spark.sql.types._
 
@@ -11,8 +13,13 @@ import org.apache.spark.sql.types._
   * is written down only in its case class. */
 object Records {
 
+  // deriving an encoder reflects over the case class; each record type
+  // is derived once, not on every column view of it
+  private val fieldsOf = new ConcurrentHashMap[String, Seq[StructField]]()
+
   private def fields[T <: Product : TypeTag]: Seq[StructField] =
-    Encoders.product[T].schema.fields.toSeq
+    fieldsOf.computeIfAbsent(typeOf[T].typeSymbol.fullName,
+      _ => Encoders.product[T].schema.fields.toSeq)
 
   /** T's fields other than `except`, in declaration order. That is the
     * order in which `max`/`min` over a struct of them compare. */
@@ -48,4 +55,14 @@ object Records {
     case a: ArrayType  => array().cast(a)
     case other         => throw new IllegalArgumentException(s"no unset value for $other")
   }
+}
+
+/** The encoders of the three records the vul-db build passes between
+  * its layers, derived once. Imported beside `spark.implicits._`, they
+  * take precedence over its generic product encoder, which reflects over
+  * the case class again on every `.as`, `.map` or `toDS`. */
+object RecordEncoders {
+  implicit val vulnerabilityEncoder: Encoder[Vulnerability] = Encoders.product[Vulnerability]
+  implicit val appModuleVulEncoder: Encoder[AppModuleVul] = Encoders.product[AppModuleVul]
+  implicit val nvdMetadataEncoder: Encoder[NvdMetadata] = Encoders.product[NvdMetadata]
 }

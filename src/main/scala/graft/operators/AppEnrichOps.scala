@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core._
+import graft.core.RecordEncoders._
 
 /** The app-side enrichment operators around assignMetadata:
   * G2 upstream translation, J3 affected-version backfill, J4 NVD

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{AppModuleVul, Model, OpVersion}
+import graft.core.RecordEncoders._
 import graft.functions.VulFunctions
 
 /** The shared app-feed post-pass (reference

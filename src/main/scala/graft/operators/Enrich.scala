@@ -2,10 +2,11 @@ package graft.operators
 
 import scala.reflect.runtime.universe.TypeTag
 
-import org.apache.spark.sql.{Column, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 
 import graft.core.{AppModuleVul, CveRef, NvdMetadata, Records, Severity, Vulnerability}
+import graft.core.RecordEncoders._
 
 /** SURVEY J1/J2 — assignMetadata
   * (reference updater/updater.go:335-552) re-expressed as one
@@ -28,9 +29,16 @@ import graft.core.{AppModuleVul, CveRef, NvdMetadata, Records, Severity, Vulnera
   * mutation is nondeterministic in feed order and is intentionally
   * not reproduced.
   *
-  * Scale: NVD (~300k rows) is broadcast — the fact side never
-  * shuffles; the regroup after posexplode is keyed by a unique row id
-  * so skew on hot CVEs is impossible.
+  * Scale: NVD (~300k rows) is broadcast, so the join moves no fact
+  * row. The regroup after posexplode is keyed by the record key plus a
+  * unique row id: (namespace, name, _uid) for distro records,
+  * (moduleName, vulName, _uid) for app records. Namespacing's output is
+  * hash-partitioned on (namespace, name) and the app dedup's window
+  * output on (moduleName, vulName); posexplode and the broadcast join
+  * keep that partitioning, so on the build path the regroup plans no
+  * exchange. An input not clustered on the key shuffles once. The row
+  * id keeps each group to one record whatever the input, so skew on
+  * hot CVEs is impossible.
   */
 object Enrich {
 
@@ -53,10 +61,9 @@ object Enrich {
     * own name standing in when it lists no CVEs. Where NVD has no
     * non-zero score for a cve, the cve element's own score pair is the
     * candidate; an unset feed severity takes NVD's severity string. */
-  def distro(vulns: Dataset[Vulnerability], nvd: Dataset[NvdMetadata])(
-      implicit spark: SparkSession): Dataset[Vulnerability] = {
+  def distro(vulns: Dataset[Vulnerability], nvd: Dataset[NvdMetadata]): Dataset[Vulnerability] = {
     val ownName = array(struct(Records.withDefaults[CveRef]("name" -> col("name")): _*))
-    enrich(vulns, nvd,
+    enrich(vulns, nvd, recordKey = Seq("namespace", "name"),
       keys = when(size(col("cves")) > 0, col("cves")).otherwise(ownName),
       scores = ("cvssV2Score", "cvssV2Vectors", "cvssV3Score", "cvssV3Vectors"),
       candidate = (score, field) =>
@@ -68,9 +75,8 @@ object Enrich {
   /** App-record enrichment, keyed by bare CVE name over
     * [vulName] ++ cves (updater.go:388-425, 488-542). The record keeps
     * its own severity. */
-  def app(apps: Dataset[AppModuleVul], nvd: Dataset[NvdMetadata])(
-      implicit spark: SparkSession): Dataset[AppModuleVul] =
-    enrich(apps, nvd,
+  def app(apps: Dataset[AppModuleVul], nvd: Dataset[NvdMetadata]): Dataset[AppModuleVul] =
+    enrich(apps, nvd, recordKey = Seq("moduleName", "vulName"),
       keys = transform(array_union(array(col("vulName")), coalesce(col("cves"), array())),
         n => struct(n.as("name"))),
       scores = ("score", "vectors", "scoreV3", "vectorsV3"),
@@ -89,40 +95,45 @@ object Enrich {
     *
     * Each record is exploded over `keys` (an array of structs with a
     * `name`), left-joined on that name to the broadcast NVD projection
-    * and regrouped by a per-record id, which collects `cands`: one
-    * struct per key, in key order. The original record rides through
-    * the explode as a struct, so no id-based self-join is needed (a
-    * prior version joined two branches on monotonically_increasing_id,
-    * which is recomputed per branch over a nondeterministically-ordered
-    * input and misaligned metadata across records).
+    * and regrouped by `recordKey` plus a per-record id, which collects
+    * `cands`: one struct per key, in key order. The original record
+    * rides through the explode as a struct, so no id-based self-join is
+    * needed (a prior version joined two branches on
+    * monotonically_increasing_id, which is recomputed per branch over a
+    * nondeterministically-ordered input and misaligned metadata across
+    * records).
     *
     * `scores` names the record's v2 score, v2 vectors, v3 score and v3
     * vectors columns. A candidate's score pair is read through
     * `candidate(nvdScoreColumn, field)` over the joined row, and
     * `severity` is the record's severity before banding. */
-  private def enrich[T <: Product : TypeTag](records: Dataset[T], nvd: Dataset[NvdMetadata],
-      keys: Column, scores: (String, String, String, String), candidate: (String, String) => Column,
-      severity: Column)(implicit spark: SparkSession): Dataset[T] = {
-    import spark.implicits._
+  private def enrich[T <: Product : TypeTag : Encoder](records: Dataset[T],
+      nvd: Dataset[NvdMetadata], recordKey: Seq[String], keys: Column,
+      scores: (String, String, String, String), candidate: (String, String) => Column,
+      severity: Column): Dataset[T] = {
     val (v2s, v2v, v3s, v3v) = scores
     val nvdFields = Seq("description", "severity", "cvssV2Score", "cvssV2Vectors",
       "cvssV3Score", "cvssV3Vectors", "publishedDate", "lastModifiedDate", "link")
 
+    // the row id is drawn before the explode, once per record; the
+    // record key rides through it as plain columns, which keeps the
+    // input's partitioning visible to the regroup
     val exploded = records.toDF()
-      .withColumn("_uid", monotonically_increasing_id())
-      .withColumn("_orig", struct(Records.columns[T](): _*))
-      .select(col("_uid"), col("_orig"), posexplode(keys).as(Seq("pos", "key")))
+      .select(col("*"), monotonically_increasing_id().as("_uid"),
+        struct(Records.columns[T](): _*).as("_orig"))
+      .select(recordKey.map(col) ++ Seq(col("_uid"), col("_orig"),
+        posexplode(keys).as(Seq("pos", "key"))): _*)
     val n = broadcast(nvd.toDF().select(col("cve").as("_nvd_cve") +: nvdFields.map(col): _*))
 
     val regrouped = exploded.join(n, col("key.name") === col("_nvd_cve"), "left_outer")
-      .select(col("_uid"), col("_orig"), struct(
+      .select(recordKey.map(col) ++ Seq(col("_uid"), col("_orig"), struct(
         col("pos"), col("description"), col("severity"), col("link"),
         col("publishedDate"), col("lastModifiedDate"),
         candidate("cvssV2Score", "cvssV2Score").as("cvssV2Score"),
         candidate("cvssV2Score", "cvssV2Vectors").as("cvssV2Vectors"),
         candidate("cvssV3Score", "cvssV3Score").as("cvssV3Score"),
-        candidate("cvssV3Score", "cvssV3Vectors").as("cvssV3Vectors")).as("cand"))
-      .groupBy("_uid")
+        candidate("cvssV3Score", "cvssV3Vectors").as("cvssV3Vectors")).as("cand")): _*)
+      .groupBy((recordKey :+ "_uid").map(col): _*)
       .agg(first(col("_orig")).as("_orig"), sort_array(collect_list(col("cand"))).as("cands"))
       .select(col("_orig.*"), col("cands"))
 
@@ -137,9 +148,8 @@ object Enrich {
       when(col(field) === "", coalesce(cand(field, nonEmpty), lit(""))).otherwise(col(field))
 
     regrouped
-      .withColumn("_e_v3s", e3s).withColumn("_e_v3v", e3v)
-      .withColumn("_e_v2s", e2s).withColumn("_e_v2v", e2v)
-      .withColumn("_fix_sev", fixedSeverity(severity, col("_e_v2s"), col("_e_v3s")))
+      .select(col("*"), e3s.as("_e_v3s"), e3v.as("_e_v3v"), e2s.as("_e_v2s"), e2v.as("_e_v2v"),
+        fixedSeverity(severity, e2s, e3s).as("_fix_sev"))
       .select(Records.row[T](
         "description" -> orNvd("description"),
         "link" -> orNvd("link"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Records, Vulnerability}
+import graft.core.RecordEncoders._
 
 /** SURVEY A1 — doVulnerabilitiesNamespacing
   * (reference updater/updater.go:642-671): explode each vuln's

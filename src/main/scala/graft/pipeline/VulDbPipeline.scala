@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.core.{AppModuleVul, NvdMetadata, OpVersion, Vulnerability}
+import graft.core.RecordEncoders._
 import graft.operators.{AppPostFilters, Enrich, Namespacing}
 import graft.sinks.VulDbSink
 

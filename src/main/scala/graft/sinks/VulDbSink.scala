@@ -30,12 +30,13 @@ import graft.operators.Actions
   * ciphertext]. Compact DB carries only ubuntu/debian/centos/alpine
   * + apps (legacy header-size limit); regular carries all + raw files.
   *
-  * The driver step streams: one cluster-side (bucket, namespace, name)
-  * sort drained by one `toLocalIterator`, each row routed to its
-  * bucket's spool files (sha256 via DigestOutputStream), then one
-  * tar|gzip|AES-GCM OutputStream chain per artifact — the corpus is
-  * never resident in driver memory. The artifact format itself is
-  * inherently single-file and stays a driver step.
+  * The driver step streams: one cluster-side repartition by bucket,
+  * each partition sorted by (bucket, namespace, name), drained by one
+  * `toLocalIterator`, each row routed to its bucket's spool files
+  * (sha256 via DigestOutputStream), then one tar|gzip|AES-GCM
+  * OutputStream chain per artifact — the corpus is never resident in
+  * driver memory. The artifact format itself is inherently single-file
+  * and stays a driver step.
   */
 object VulDbSink {
 
@@ -82,10 +83,8 @@ object VulDbSink {
       col("feedRating").as("RATE"),
       goTime(col("issuedDate")).as("Issue"),
       goTime(col("lastModDate")).as("LastMod")))
-    vulns.toDF()
-      .withColumn("bucket", bucketCol)
-      .select(col("bucket"), col("name"), col("namespace"),
-        indexJson.as("indexJson"), fullJson.as("fullJson"))
+    vulns.toDF().select(bucketCol.as("bucket"), col("name"), col("namespace"),
+      indexJson.as("indexJson"), fullJson.as("fullJson"))
   }
 
   /** App table JSON-lines rows (memdb.go:118-123), canonical order. */
@@ -239,17 +238,26 @@ object VulDbSink {
   /** Full sink: vulns + apps (+ raw passthrough files) -> compact +
     * regular artifacts in outDir. Returns per-file shas.
     *
-    * Streamed end to end through one sorted stream: the routed rows are
-    * range-sorted by (bucket, namespace, name) on the cluster and one
-    * `toLocalIterator` appends each row to its bucket's index and full
-    * spool files, so a bucket's file is its rows in (namespace, name)
-    * order and an empty bucket gives an empty file. The apps table
-    * drains the same way, concurrently, into apps.tb. A job per bucket
+    * Streamed end to end through one drain: the routed rows are
+    * hash-partitioned by bucket on the cluster, each partition is
+    * sorted by (bucket, namespace, name), and one `toLocalIterator`
+    * appends each row to its bucket's index and full spool files. A
+    * bucket sits whole in one partition, so its file is its rows in
+    * (namespace, name) order, and an empty bucket gives an empty file.
+    * No global order is needed across buckets, so the drain pays no
+    * range sort's sampling job, which computes the upstream stage a
+    * second time. The apps table, one file, drains concurrently into apps.tb
+    * through a global (moduleName, vulName) sort. A job per bucket
     * would pay a sort and a drain for each of the 12 routes, most of
     * them empty. Sha256 is computed on the fly (DigestOutputStream);
     * artifact assembly then streams the spools through one
-    * tar|gzip|AES-GCM OutputStream chain. Driver memory stays O(one
-    * partition per stream).
+    * tar|gzip|AES-GCM OutputStream chain.
+    *
+    * Scale: the drain holds one partition at a time in driver memory,
+    * and a partition holds whole buckets, so the driver's peak is the
+    * largest bucket's JSON rows (with adaptive coalescing, the buckets
+    * that share its partition too). The apps drain holds one range
+    * partition.
     *
     * `keys` round-trips into both artifact headers' KeyVersion.Keys
     * (reference memdb.go:209,239, common/types.go:49). */
@@ -286,7 +294,8 @@ object VulDbSink {
           // rows whose namespace is outside the 12 routes have a null
           // bucket and don't ship
           val it = project(vulns).filter(col("bucket").isNotNull)
-            .orderBy("bucket", "namespace", "name")
+            .repartition(col("bucket"))
+            .sortWithinPartitions("bucket", "namespace", "name")
             .select("bucket", "indexJson", "fullJson")
             .toLocalIterator()
           while (it.hasNext) {

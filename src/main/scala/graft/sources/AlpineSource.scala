@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core.{Model, Records, Vulnerability}
+import graft.core.RecordEncoders._
 import graft.functions.VulFunctions
 
 /** S5 — Alpine secdb (reference updater/fetchers/alpine/alpine.go:54-129;

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions.input_file_name
 
 import graft.core.{CveRef, FeatureVersion, PkgVersion, Vulnerability}
+import graft.core.RecordEncoders._
 
 /** S6 — Amazon Linux ALAS RSS feeds + per-advisory page scrape
   * (reference updater/fetchers/amazon/amazon.go; FIXTURES.md §5).

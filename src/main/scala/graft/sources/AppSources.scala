@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core.{AppModuleVul, OpVersion, Records}
+import graft.core.RecordEncoders._
 
 /** The small app-feed adapters: Kubernetes official feed (S19), manual
   * JSON-lines DBs (S21), OpenShift static records (S20), and the

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core.{Model, PkgVersion, Records, Vulnerability}
+import graft.core.RecordEncoders._
 import graft.functions.VulFunctions
 
 /** S4 — Debian security-tracker JSON + archived snapshot merge

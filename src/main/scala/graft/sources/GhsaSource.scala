@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core.{AppModuleVul, OpVersion, RangeExpr}
+import graft.core.RecordEncoders._
 
 /** S14 — GHSA NDJSON dumps, one of six ecosystems per file
   * (reference updater/fetchers/apps/ghsa.go:66-200; FIXTURES.md §6).

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.core.{AppModuleVul, OpVersion}
+import graft.core.RecordEncoders._
 
 /** S17/S18 — the nginx and OpenSSL advisory-page scrapers (reference
   * updater/fetchers/apps/nginx.go, openssl.go). The adapters take

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core.NvdMetadata
+import graft.core.RecordEncoders._
 
 /** S13 — the NVD 2.0 JSON corpus, the enrichment dimension table
   * (reference updater/nvd/nvd.go:226-322; field shapes FIXTURES.md §13).

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 import graft.core._
+import graft.core.RecordEncoders._
 
 /** S12/S15 — OSV-schema advisories: the Go vulndb (govuln.go) and the
   * Chainguard/Wolfi shared feed (chainguardv2.go). The reference reads

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core.{PkgVersion, Records, Vulnerability}
+import graft.core.RecordEncoders._
 
 /** S10 — VMware Photon per-release JSON arrays
   * (reference updater/fetchers/photon/photon.go:52-162; FIXTURES.md §8).

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core.{CveRef, FeatureVersion, PkgVersion, Records, Vulnerability}
+import graft.core.RecordEncoders._
 
 /** S11 — Rocky Apollo errata API JSON
   * (reference updater/fetchers/rocky/rocky.go; FIXTURES.md §9).

@@ -3,8 +3,10 @@ package graft.sources
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.functions.col
 
 import graft.core.{AppModuleVul, OpVersion}
+import graft.core.RecordEncoders._
 
 /** S16 — Ruby advisory DB YAML files (reference
   * updater/fetchers/apps/ruby.go; FIXTURES.md §10).
@@ -112,11 +114,18 @@ object RubySource {
     * name filter, not a per-file glob: the glob gives one root path per
     * advisory, and above 32 root paths Spark lists them in a job with a
     * task per file. The recursive read lists on the driver up to 32 gem
-    * directories, and above that in one job with a task per directory. */
+    * directories, and above that in one job with a task per directory.
+    *
+    * Advisories are read whole through the `binaryFile` source and cast
+    * to a UTF-8 string, as `UbuntuSource.load` reads its tracker files:
+    * the `text` source's `wholetext` reader copies the whole Hadoop
+    * configuration for every file. The single-file feeds keep `text`,
+    * which decompresses `.gz` files and `binaryFile` does not. */
   def load(spark: SparkSession, gemsDir: String): Dataset[AppModuleVul] = {
     import spark.implicits._
-    spark.read.option("wholetext", true).option("recursiveFileLookup", true)
-      .option("pathGlobFilter", "*.yml").text(gemsDir)
+    spark.read.format("binaryFile").option("recursiveFileLookup", true)
+      .option("pathGlobFilter", "*.yml").load(gemsDir)
+      .select(col("content").cast("string"))
       .as[String]
       .flatMap(parseYaml _)
   }

@@ -1,9 +1,10 @@
 package graft.sources
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions.{col, input_file_name}
+import org.apache.spark.sql.functions.col
 
 import graft.core.{FeatureVersion, Model, PkgVersion, Vulnerability}
+import graft.core.RecordEncoders._
 import graft.functions.VulFunctions
 
 /** S3 — Ubuntu CVE tracker text files
@@ -153,13 +154,21 @@ object UbuntuSource {
     * globs: a glob expands to one root path per tracker file, and above
     * Spark's 32-root-path threshold that lists the files in a parallel
     * job with one task per file. Two directory roots list on the driver
-    * with no job. A missing folder fails as it always has. */
+    * with no job. A missing folder fails as it always has.
+    *
+    * The files are read whole through the `binaryFile` source, with
+    * their bytes cast to a UTF-8 string: the `text` source's `wholetext`
+    * reader builds a new Hadoop `JobConf` (a copy of the whole
+    * configuration) for every file, a fixed cost that hundreds of small
+    * tracker files pay hundreds of times. Both give the same string for
+    * the same bytes. The single-file feeds keep `text`, which decompresses
+    * `.gz` files where `binaryFile` would return the compressed bytes. */
   def load(spark: SparkSession, repoDir: String, keepCves: Set[String] = Set.empty): Dataset[Vulnerability] = {
     import spark.implicits._
     val keep = spark.sparkContext.broadcast(keepCves)
-    spark.read.option("wholetext", true).option("pathGlobFilter", "CVE-*")
-      .text(s"$repoDir/active", s"$repoDir/retired")
-      .select(input_file_name().as("f"), col("value"))
+    spark.read.format("binaryFile").option("pathGlobFilter", "CVE-*")
+      .load(s"$repoDir/active", s"$repoDir/retired")
+      .select(col("path"), col("content").cast("string"))
       .as[(String, String)]
       .filter { case (f, _) =>
         val base = f.substring(f.lastIndexOf('/') + 1)

@@ -3,6 +3,7 @@ package graft.sources.oval
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.core.{FeatureVersion, Model, PkgVersion, Vulnerability}
+import graft.core.RecordEncoders._
 
 /** S9 — CBL-Mariner OVAL (reference updater/fetchers/mariner/mariner.go).
   *

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{CveRef, FeatureVersion, PkgVersion, Records, Vulnerability}
+import graft.core.RecordEncoders._
 
 /** S7 — Oracle ELSA OVAL (reference updater/fetchers/oracle/oracle.go).
   *

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{CveRef, FeatureVersion, Model, PkgVersion, Records, Vulnerability}
+import graft.core.RecordEncoders._
 
 /** S1 — RHEL/CentOS OVAL (reference updater/fetchers/rhel2/rhel.go).
   *

@@ -3,6 +3,7 @@ package graft.sources.oval
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.core.{CveRef, FeatureVersion, Model, PkgVersion, Vulnerability}
+import graft.core.RecordEncoders._
 
 /** S8 — SUSE/openSUSE OVAL (reference updater/fetchers/suse/suse.go).
   *

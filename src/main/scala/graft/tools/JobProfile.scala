@@ -1,7 +1,10 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import scala.collection.mutable
 
@@ -17,10 +20,13 @@ import scala.collection.mutable
   *
   * Each query runs once untimed (warm: JIT, codegen caches, FS
   * listings) and once profiled; the profiled pass prints one line per
-  * job sorted by submission, then a by-duration summary. The timed
-  * action mirrors the Bench's (`GRAFT_BENCH_ACTION`: noop-sink write
-  * by default, `count` for the legacy action), so the job list is
-  * the scored work. Profiling only — never part of Bench/Verify.
+  * job sorted by submission, then one line per action (Dataset call
+  * that ran a query) with its analysis, optimization and planning
+  * milliseconds from the query's `QueryPlanningTracker` — the driver
+  * work a job list shows only as gaps. The timed action mirrors the
+  * Bench's (`GRAFT_BENCH_ACTION`: noop-sink write by default, `count`
+  * for the legacy action), so the job list is the scored work.
+  * Profiling only — never part of Bench/Verify.
   *
   * Attribution caveat (r17 advice): stage→job mapping is last-write-
   * wins at job start, so a stage SHARED across jobs (skipped/reused
@@ -97,6 +103,25 @@ object JobProfile {
     }
   }
 
+  /** Per action: its name, then its analysis, optimization, planning
+    * and run milliseconds (run is -1 for a failed action). */
+  private final class PhaseListener extends QueryExecutionListener {
+    val rows = mutable.ArrayBuffer.empty[(String, Long, Long, Long, Long)]
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      record(funcName, qe, durationNs / 1000000L)
+    override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+      record(funcName, qe, -1L)
+    private def record(funcName: String, qe: QueryExecution, runMs: Long): Unit = {
+      val phases = qe.tracker.phases
+      def ms(phase: String) = phases.get(phase).map(_.durationMs).getOrElse(0L)
+      synchronized {
+        rows += ((funcName, ms(QueryPlanningTracker.ANALYSIS),
+          ms(QueryPlanningTracker.OPTIMIZATION), ms(QueryPlanningTracker.PLANNING), runMs))
+      }
+    }
+    def clear(): Unit = synchronized(rows.clear())
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: JobProfile <sfDir> <query> [query...]")
     val sfDir = args(0)
@@ -105,6 +130,8 @@ object JobProfile {
     spark.sparkContext.setLogLevel("ERROR")
     val lst = new ProfListener
     spark.sparkContext.addSparkListener(lst)
+    val phases = new PhaseListener
+    spark.listenerManager.register(phases)
 
     def mb(b: Long): String = f"${b / 1048576.0}%8.1f"
 
@@ -112,7 +139,7 @@ object JobProfile {
       val fn = graft.SparkEntry.queries(n)
       graft.BenchAction.run(fn(spark, sfDir)) // warm pass, untimed
       Thread.sleep(300)        // let listener drain
-      lst.clear()
+      lst.clear(); phases.clear()
       val t0 = System.nanoTime()
       graft.BenchAction.run(fn(spark, sfDir))
       val wall = (System.nanoTime() - t0) / 1e9
@@ -138,6 +165,11 @@ object JobProfile {
       val jobSecs = rows.map(j => (j.finished - j.started) / 1e3).sum
       println(f"sum(job secs)=$jobSecs%.3f  inter-job driver gap=$gaps%.3f  " +
         f"(wall includes plan/analysis time before job 0)")
+      println(f"-- per action --\n  ${"action"}%-20s ${"analysisMs"}%10s ${"optimizeMs"}%10s " +
+        f"${"planMs"}%8s ${"runMs"}%8s")
+      phases.synchronized(phases.rows.toList).foreach { case (name, a, o, p, r) =>
+        println(f"  ${name.take(20)}%-20s $a%10d $o%10d $p%8d $r%8d")
+      }
       if (lst.stageRows.nonEmpty) {
         println("-- stages with >=0.5s summed task run time --")
         lst.stageRows.foreach(println)

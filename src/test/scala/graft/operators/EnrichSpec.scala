@@ -2,6 +2,10 @@ package graft.operators
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
+
 import graft.SparkSpecBase
 import graft.core._
 import graft.sources.{AlpineSource, NvdSource}
@@ -125,5 +129,42 @@ class EnrichSpec extends SparkSpecBase {
     assert(curl.description.contains("NTLM"))
     assert(out.find(_.name == "CVE-2017-17439").get.description.contains("KDC-REP"))
     assert(out.find(_.name == "CVE-2018-0739").get.description.contains("ASN.1"))
+  }
+
+  /** The exchanges the planner put into `ds`'s executed plan to meet
+    * an operator's distribution, after running it (an input's own
+    * `repartition` is not counted). */
+  private def shuffles(ds: Dataset[_]): Int = {
+    ds.collect()
+    object Plans extends AdaptiveSparkPlanHelper
+    Plans.collect(ds.queryExecution.executedPlan) {
+      case s: ShuffleExchangeExec if s.shuffleOrigin == ENSURE_REQUIREMENTS => s
+    }.size
+  }
+
+  test("distro: the regroup runs on Namespacing's partitioning, with no exchange of its own") {
+    import spark.implicits._
+    val feed = (0 until 40).map(i => emptyVuln(f"CVE-2018-${i % 10}%04d", "").copy(
+      cves = Seq(CveRef("CVE-2018-14618", 0.0, "", 0.0, "")),
+      fixedIn = Seq(FeatureVersion("pkg", s"alpine:3.${i % 4}", "1.0", "")))).toDS().repartition(3)
+    val out = Enrich.distro(Namespacing(feed), nvd)
+    assert(shuffles(out) == 1) // Namespacing's (namespace, name) exchange only
+    val rows = out.collect() // 20 distinct (namespace, name) keys
+    assert(rows.length == 20 && rows.forall(_.severity == Severity.Critical))
+  }
+
+  test("app: the regroup runs on the dedup window's partitioning, with no exchange of its own") {
+    import spark.implicits._
+    def app(i: Int, desc: String) = AppModuleVul(
+      vulName = "CVE-2018-14618", appName = "a", moduleName = s"m$i",
+      importPaths = Nil, symbols = Nil, description = desc, link = "",
+      score = 0.0, vectors = "", scoreV3 = 0.0, vectorsV3 = "",
+      severity = "", affectedVer = Nil, fixedVer = Nil, unaffectedVer = Nil,
+      issuedDate = null, lastModDate = null, cves = Nil)
+    val feeds = Seq("first", "second").map(d => (0 until 20).map(app(_, d)).toDS().repartition(3))
+    val out = Enrich.app(AppPostFilters.gate(AppPostFilters.dedup(feeds)), nvd)
+    assert(shuffles(out) == 1) // the window's (moduleName, vulName) exchange only
+    val rows = out.collect()
+    assert(rows.length == 20 && rows.forall(r => r.description == "second" && r.scoreV3 == 9.8))
   }
 }

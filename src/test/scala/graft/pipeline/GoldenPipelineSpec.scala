@@ -142,4 +142,17 @@ class GoldenPipelineSpec extends SparkSpecBase {
       Option(outDir.listFiles()).foreach(_.foreach(_.delete())); outDir.delete(); ()
     }
   }
+
+  test("the fixture build's run stays within its job count") {
+    val fx = fixture("nvd_sample.json").stripSuffix("/nvd_sample.json")
+    withTempDir("graft-jobs") { dir =>
+      val inputs = buildInputs(fx)
+      val (shas, jobs) = countJobs(VulDbPipeline.run(inputs, dir.getPath, "1.000",
+        "2026-01-01T00:00:00Z"))
+      // an exchange for Enrich's regroup on either branch, or a sampling
+      // job for the bucket drain, would each add a job
+      assert(jobs <= 25, s"run ran $jobs jobs")
+      assert(shas.contains("apps.tb"))
+    }
+  }
 }

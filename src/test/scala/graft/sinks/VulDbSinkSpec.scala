@@ -50,6 +50,32 @@ class VulDbSinkSpec extends SparkSpecBase {
     assert(!files.values.exists(_.contains("gentoo:1")))
   }
 
+  test("a bucket whose namespaces span input partitions drains in (namespace, name) order, without a sampling job") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    withTempDir("sink") { dir =>
+      // three ubuntu namespaces and one debian one, each spread over
+      // three input partitions in reverse name order
+      val namespaces = Seq("ubuntu:22.04", "ubuntu:18.04", "debian:12", "ubuntu:20.04")
+      val vulns = (for (i <- 0 until 48; ns = namespaces(i % namespaces.size))
+        yield vuln(f"CVE-2021-${999 - i}%04d", ns)).toDS().repartition(3)
+      val (_, jobs) = countJobs(VulDbSink.write(vulns, Seq(app("CVE-2020-1111", "m1")).toDS(),
+        Nil, dir.getPath, "1.000", "2026-08-12T00:00:00Z")(spark))
+      // a global range sort on the vulns drain would add its sampling job
+      assert(jobs <= 4, s"write ran $jobs jobs")
+
+      val files = VulDbSink.readDbFile(s"$dir/cvedb.regular")._2
+        .map(e => e.name -> new String(e.bytes, "UTF-8")).toMap
+      val proj = VulDbSink.project(vulns)
+      for (p <- Seq("ubuntu", "debian"); c <- Seq("index", "full")) {
+        val want = proj.filter(col("bucket") === p).orderBy("namespace", "name")
+          .select(s"${c}Json").collect().map(_.getString(0) + "\n").mkString
+        assert(files(s"${p}_$c.tb") == want, s"${p}_$c.tb")
+      }
+      assert(files("ubuntu_full.tb").linesIterator.size == 36)
+    }
+  }
+
   test("analytic sink writes bucket-partitioned parquet") {
     val tmp = java.nio.file.Files.createTempDirectory("analytic").toString
     val vulns = Namespacing(AlpineSource.load(spark, fixture("alpine_secdb.json")))

@@ -140,6 +140,30 @@ class AppFeedSourcesSpec extends SparkSpecBase {
     }
   }
 
+  test("ruby: whole-file reads give the text read's records, multi-byte UTF-8 included") {
+    import spark.implicits._
+    withTempDir("gems") { dir =>
+      val titles = Seq("Ünïcödé café — naïve", "漢字のテキスト", "emoji 😀 and ©")
+      titles.zipWithIndex.foreach { case (t, i) =>
+        writeFile(dir, s"gem$i/CVE-2021-${2000 + i}.yml",
+          s"""gem: gem$i
+             |cve: 2021-${2000 + i}
+             |title: "$t"
+             |description: "détail $i ✓"
+             |patched_versions:
+             |  - ">= 1.$i.0"
+             |""".stripMargin)
+      }
+      val viaText = spark.read.option("wholetext", true).option("recursiveFileLookup", true)
+        .option("pathGlobFilter", "*.yml").text(dir.getPath)
+        .as[String].flatMap(RubySource.parseYaml _).collect().sortBy(_.vulName).toSeq
+      val loaded = RubySource.load(spark, dir.getPath).collect().sortBy(_.vulName).toSeq
+      assert(loaded == viaText)
+      assert(loaded.map(_.description) ==
+        titles.zipWithIndex.map { case (t, i) => s"$t/ndétail $i ✓" })
+    }
+  }
+
   // ---- nginx / OpenSSL -------------------------------------------------
 
   test("nginx: page parse with range chains") {

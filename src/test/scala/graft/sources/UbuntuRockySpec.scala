@@ -62,6 +62,25 @@ class UbuntuRockySpec extends SparkSpecBase {
     }
   }
 
+  test("ubuntu: whole-file reads give the text read's records, multi-byte UTF-8 included") {
+    import spark.implicits._
+    withTempDir("tracker") { dir =>
+      val descs = Seq("Ünïcödé café — naïve", "漢字のテキスト", "emoji 😀 and ©", "plain ascii")
+      descs.zipWithIndex.foreach { case (d, i) =>
+        val c = f"CVE-2020-$i%04d"
+        writeFile(dir, if (i % 2 == 0) s"active/$c" else s"retired/$c",
+          tracker(c).replace(" Generated.", s" $d"))
+      }
+      val viaText = spark.read.option("wholetext", true).option("pathGlobFilter", "CVE-*")
+        .text(s"$dir/active", s"$dir/retired").as[String]
+        .map(t => UbuntuSource.upstreamCalibration(UbuntuSource.parseFile(t)))
+        .collect().sortBy(_.name).toSeq
+      val loaded = UbuntuSource.load(spark, dir.getPath).collect().sortBy(_.name).toSeq
+      assert(loaded == viaText)
+      assert(loaded.map(_.description) == descs)
+    }
+  }
+
   test("ubuntu: a missing retired/ folder fails as path-not-found") {
     withTempDir("tracker") { dir =>
       writeFile(dir, "active/CVE-2020-0001", tracker("CVE-2020-0001"))

@@ -1508,11 +1508,10 @@ object Dedup {
   // tombstone devices are the siblings' own (StandingIndex).
   // ------------------------------------------------------------------
 
-  /** The served version dir. This family is VERSIONED FROM BIRTH, so
-    * "no pointer" refuses instead of falling back to the root. */
+  /** The served version dir ("no pointer" refuses). */
   private def currentHashIndexDir(fs: org.apache.hadoop.fs.FileSystem,
       path: String): String =
-    StandingIndex.currentDir(fs, path, "bands_v", None)
+    StandingIndex.currentDir(fs, path, StandingIndex.HashBand)
 
   /** Persist a hash-band index WITH the document ids — the layout
     * that lets this index family FORGET: one exploded row per
@@ -1533,8 +1532,8 @@ object Dedup {
     * `IndexMaintenance`'s stripe threshold stays meaningful only
     * because writes and compactions bound it here).
     *
-    * VERSIONED FROM BIRTH (unlike the ANN sibling's flat first
-    * layout): the data lands in `bands_v1/` and the atomic
+    * VERSIONED FROM BIRTH, like every standing-index family: the
+    * data lands in `bands_v1/` and the atomic
     * `_current_v1` pointer create publishes it — so no state of this
     * index ever mixes root-level data files with a nested version
     * dir, and every compaction crash boundary leaves readers on a
@@ -1551,10 +1550,9 @@ object Dedup {
     * lands after it. Probes never read `_meta`, so losing it in a
     * crash costs stats accuracy, never probe correctness (stats,
     * deletes and growth refuse loudly until a rerun). A live (or
-    * crashed) compaction is refused before the write, exactly like
-    * the BM25 rebuild: clearing its lock by hand is the documented
-    * recovery, and a rebuild racing a live compaction could otherwise
-    * be shadowed by the compaction's later pointer swap.
+    * crashed) compaction holds the rewrite lock, so the rebuild is
+    * refused before any filesystem change; clearing a stale lock by
+    * hand is the documented recovery.
     *
     * NO APPEND LEG, by contract rather than omission: appending rows
     * into a band that was cap-dropped at build would serve a PARTIAL
@@ -1603,13 +1601,11 @@ object Dedup {
     require(outFiles >= 1, s"outFiles must be >= 1, got $outFiles")
     val spark = base.sparkSession
     val fs = StandingIndex.fs(spark, path)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(path))
-    StandingIndex.refuseIfCompacting(fs, path, rebuild = true)
     // a rewrite from an empty base (see writeHashBandIndex); the
     // housekeeping is name-scoped, so anything else at the root
     // survives untouched (the root itself is never read as parquet —
     // only bands_vN is — so a surviving stranger is inert)
-    StandingIndex.rewrite(fs, path, "bands_v", None, growth = true) { (dir, _) =>
+    StandingIndex.rewrite(fs, path, StandingIndex.HashBand) { (dir, _) =>
       val stats = writeBandsVersion(spark, fs, base, idCol, posCols,
         hashColName, path, dir, maxBucket, metricName, outFiles)
       fs.delete(new org.apache.hadoop.fs.Path(s"$path/_meta"), true)
@@ -1921,7 +1917,7 @@ object Dedup {
       .select("id_col").collect()(0).getString(0)
     require(builtWith == idCol,
       s"index at $path was built with idCol '$builtWith', got '$idCol'")
-    StandingIndex.refuseIfCompacting(fs, path, rebuild = false)
+    StandingIndex.refuseIfCompacting(fs, path)
     StandingIndex.appendTombstones(fs, path, ids, idCol)
   }
 
@@ -1952,7 +1948,7 @@ object Dedup {
         "crashed before publishing, or this dir was not written by " +
         "writeHashBandIndex (the layout is versioned from birth); " +
         "rebuild with writeHashBandIndex")
-    StandingIndex.rewrite(fs, path, "bands_v", None) { (dir, tombSnapshot) =>
+    StandingIndex.rewrite(fs, path, StandingIndex.HashBand) { (dir, tombSnapshot) =>
       val data = StandingIndex.withoutTombstones(
         spark.read.parquet(currentHashIndexDir(fs, path)), tombSnapshot)
       if (data.isEmpty) None
@@ -2078,8 +2074,8 @@ object Dedup {
     val cap = maxBucket.getOrElse(meta.getLong(1).toInt)
     // the compaction-shaped NON-DESTRUCTIVE rewrite (see the scaladoc
     // on rebuildHashBandIndex)
-    val stats = StandingIndex.rewrite(fs, path, "bands_v", None,
-        growth = true) { (dir, tombSnapshot) =>
+    val stats = StandingIndex.rewrite(fs, path, StandingIndex.HashBand) {
+        (dir, tombSnapshot) =>
       val data = currentBands(spark, fs, path, posCols)
       val sigCols = Seq(col(idCol)) ++ posCols.map(col) :+ col("_h")
       val unioned = StandingIndex.withoutTombstones(data, tombSnapshot)

@@ -200,7 +200,7 @@ object Similarity {
     def sdc(a: Column, b: Column): Column = VE.pq_sdc_cos(a, b, m.codebooks)
     override def residual: Boolean = m.residual
     def score(q: Column): Column = VE.pq_adc(q, col(codeCol), m.codebooks)
-    def order: Column = asc(scoreName)
+    def order: Column = asc_nulls_last(scoreName)
     override def keep: Column = col(scoreName).isNotNull && !isnan(col(scoreName))
     override def turn(v: Seq[Double]): Seq[Double] = m.rotation.fold(v)(rotateVec(_, v))
     override def turnCol(v: Column): Column = m.rotation.fold(v)(VE.mat_vec(_, v))
@@ -312,7 +312,11 @@ object Similarity {
           scoped.join(broadcast(shifted), col(l.cidCol) === col("_scid"))
             .select(out(c.score(col("_qs"))): _*)
         }
-        val shortlist = scored.filter(c.keep).orderBy(c.order, col(idCol)).limit(rr)
+        // every row `keep` drops sorts last (nulls-last orders; NaN
+        // sorts above every number), so filtering after the limit keeps
+        // the same rows — and keeps the filter off the scan, where it
+        // would re-run an in-plan encode chain outside codegen
+        val shortlist = scored.orderBy(c.order, col(idCol)).limit(rr).filter(c.keep)
         exactTopK(rerankFrom.fold(shortlist)(store => shortlist.hint("broadcast")
             .join(store.select(col(idCol), col(embCol)), Seq(idCol))),
           embCol, idCol, typedLit(query), k)
@@ -458,24 +462,24 @@ object Similarity {
     * filter becomes PARTITION PRUNING at the scan — an nprobe-list
     * probe physically reads only nprobe directories out of K, which is
     * the on-disk analogue of "search ~n/K vectors per list"
-    * (SimilaritySpec pins the pruned scan in the plan). */
+    * (SimilaritySpec pins the pruned scan in the plan).
+    *
+    * Every write is a `StandingIndex.rewrite` from an empty base into
+    * a fresh `index_vN/`: the served generation keeps serving until the
+    * pointer swap, so a job that fails mid-rebuild leaves the old index
+    * (and its pending tombstones) as it was. After the swap the old
+    * generations and the tombstones the rebuild read are gone, which
+    * is also the documented way OUT of the all-rows-deleted state
+    * compaction skips. A live (or crashed) compaction holds the
+    * rewrite lock, so the rebuild is refused before any change. */
   def writeIndex(assigned: DataFrame, path: String,
       cidCol: String = "cid"): Unit = {
-    // a REBUILD supersedes the whole lifecycle state — tombstones,
-    // version pointers/dirs AND superseded data partitions — so the
-    // whole root clears explicitly rather than relying on overwrite
-    // semantics (under partitionOverwriteMode=dynamic an overwrite
-    // replaces only the partitions present in `assigned`: stale cid
-    // dirs would survive and serve old vectors, with their tombstones
-    // freshly cleared). This is also the documented way OUT of the
-    // all-rows-deleted state compaction skips. A LIVE compaction is
-    // refused, not swept: deleting its lock would let it finish later
-    // and drop a _current_vN pointer that silently shadows this
-    // rebuild with pre-rebuild data.
     val fs = StandingIndex.fs(assigned.sparkSession, path)
-    StandingIndex.refuseIfCompacting(fs, path, rebuild = true)
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    assigned.write.mode("overwrite").partitionBy(cidCol).parquet(path)
+    StandingIndex.rewrite(fs, path, StandingIndex.Ivf) { (dir, _) =>
+      assigned.write.partitionBy(cidCol).parquet(dir)
+      Some(())
+    }
+    ()
   }
 
   /** Append a new batch to a persisted index — the daily-crawl shape:
@@ -502,9 +506,9 @@ object Similarity {
   /** Delete vectors from a persisted IVF index — the ANN twin of
     * `TextStats.deleteFromBm25Index`, and the takedown shape: at
     * 100 TB a removal request cannot cost an index rebuild, so
-    * deletion is a TOMBSTONE (`_tombstones/` under the index root —
-    * underscore-prefixed, so the flat parquet layout never reads it
-    * as data) that `readIndex` applies as a broadcast anti-join;
+    * deletion is a TOMBSTONE (`_tombstones/` under the index root,
+    * beside the generations) that `readIndex` applies as a broadcast
+    * anti-join;
     * every probe built on `readIndex` stops returning the ids
     * immediately, and the bytes leave at the next `compactIndex`
     * (which reads through the same anti-join, so its rewrite removes
@@ -534,15 +538,14 @@ object Similarity {
         "would silently delete every vector in the named lists; pass the " +
         "indexed ID column")
     val fs = StandingIndex.fs(spark, path)
-    StandingIndex.refuseIfCompacting(fs, path, rebuild = false)
+    StandingIndex.refuseIfCompacting(fs, path)
     StandingIndex.appendTombstones(fs, path, ids, idCol)
   }
 
-  /** The servable data dir: `index_vN/` after a compaction, the root
-    * itself (writeIndex's flat layout) before one. */
+  /** The servable generation, `index_vN/`. */
   private def currentIndexDir(fs: org.apache.hadoop.fs.FileSystem,
       path: String): String =
-    StandingIndex.currentDir(fs, path, "index_v", Some(path))
+    StandingIndex.currentDir(fs, path, StandingIndex.Ivf)
 
   /** Read a persisted IVF index back for probing (resolves the
     * compaction version pointer — see `compactIndex` — and applies
@@ -572,20 +575,17 @@ object Similarity {
     * index whose every row is deleted skips the rewrite (a zero-row
     * partitioned write emits an unreadable dir) and KEEPS its
     * tombstones — probes stay correct through the anti-join, and the
-    * way OUT of that degenerate state is a rebuild: `writeIndex`'s
-    * overwrite resets the whole root, clearing tombstones and
-    * pointers (spec-pinned), after which the ids are re-addable.
+    * way OUT of that degenerate state is a rebuild: `writeIndex`
+    * supersedes the old generation and clears the tombstones
+    * (spec-pinned), after which the ids are re-addable.
     *
     * Crash-safety is `StandingIndex.rewrite`'s versioned swap: the
-    * rewrite lands in a fresh `index_vN/` beside the servable data and
-    * publishes with one atomic pointer create. The index root must
-    * hold only the index data (keep codebooks/models at their own
-    * paths, as writeCodebook/writePqModel already do): the first
-    * compaction sweeps the superseded flat layout from the root. */
+    * rewrite lands in a fresh `index_vN/` beside the servable one and
+    * publishes with one atomic pointer create. */
   def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       cidCol: String = "cid"): Unit = {
     val fs = StandingIndex.fs(spark, path)
-    StandingIndex.rewrite(fs, path, "index_v", Some(path)) { (dir, tombSnapshot) =>
+    StandingIndex.rewrite(fs, path, StandingIndex.Ivf) { (dir, tombSnapshot) =>
       val data = StandingIndex.withoutTombstones(
         spark.read.parquet(currentIndexDir(fs, path)), tombSnapshot)
       require(data.columns.contains(cidCol),
@@ -596,8 +596,7 @@ object Similarity {
       // swap and leave the servable layout untouched
       if (data.isEmpty) None
       else {
-        data.repartition(col(cidCol))
-          .write.mode("overwrite").partitionBy(cidCol).parquet(dir)
+        data.repartition(col(cidCol)).write.partitionBy(cidCol).parquet(dir)
         Some(())
       }
     }

@@ -5,31 +5,34 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The on-disk lifecycle the standing-index families share — BM25
-  * postings (`TextStats`), IVF inverted lists (`Similarity`) and
+  * generations (`TextStats`), IVF inverted lists (`Similarity`) and
   * hash-band signature lists (`Dedup`, whose positional GIF, audio
   * and keyframe variants ride the same cores). This is the only code
-  * that knows the lifecycle layout under an index root:
+  * that knows the lifecycle layout under an index root, and every
+  * family is VERSIONED FROM BIRTH:
   *
+  *  - `<prefix>N/` — one generation of the index (`bm25_vN` holding
+  *    `postings/`, `df/` and `meta/`; `index_vN` the IVF list
+  *    partitions; `bands_vN` the hash-band rows). Only `rewrite`
+  *    creates one.
   *  - `_current_vN` — an empty VERSION POINTER file naming
-  *    `<prefix>vN/` (`postings_v`, `index_v`, `bands_v`) as the
-  *    servable data dir. A pointer is created only AFTER its dir's
-  *    write completes, so the highest pointer always names a complete
-  *    dir, and a swap is one atomic file create — never a
-  *    delete→rename window. No pointer = the family's flat layout
-  *    (BM25 `postings/`, IVF the root itself); the hash-band family
-  *    is versioned from birth and has none.
-  *  - `_compact_inprogress` — WRITER mutual exclusion for a versioned
-  *    rewrite (compaction, every hash-band write). Probes never
-  *    block, and a stale lock from a crashed rewrite is safe to delete
-  *    and rerun: nothing between lock and swap mutates servable state.
+  *    `<prefix>N/` as the servable generation. A pointer is created
+  *    only AFTER its dir's write completes, so the highest pointer
+  *    always names a complete dir, and a swap is one atomic file
+  *    create — never a delete→rename window. A root without a
+  *    pointer is never servable: readers refuse.
+  *  - `_compact_inprogress` — WRITER mutual exclusion for a rewrite
+  *    (build, growth and compaction alike). Probes never block, and a
+  *    stale lock from a crashed rewrite is safe to delete and rerun:
+  *    nothing between lock and swap mutates servable state.
   *  - `_tombstones/` — pending deleted ids (one column, the family's
-  *    id column; underscore-prefixed, so a flat parquet layout never
-  *    reads it as data). Every read applies them as an anti-join; a
-  *    rewrite applies them materially and then clears exactly the
-  *    FILE SNAPSHOT it read.
+  *    id column). Every read applies them as an anti-join; a rewrite
+  *    applies them materially (or, from an empty base, supersedes
+  *    them) and then clears exactly the FILE SNAPSHOT it read.
   *
-  * Plain functions over a Hadoop `FileSystem`; each family passes its
-  * own dir prefix and flat layout. */
+  * Build, growth and compaction share ONE write order (`rewrite`), so
+  * no failing job ever takes the served generation down. Plain
+  * functions over a Hadoop `FileSystem`; each family passes itself. */
 private[operators] object StandingIndex {
 
   private val Pointer = "_current_v"
@@ -39,34 +42,29 @@ private[operators] object StandingIndex {
   def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** The standing-index families, as their on-disk layouts tell them
-    * apart; `name` is the family's name in health reports. */
-  sealed abstract class Family(val name: String)
-  case object HashBand extends Family("hashband")
-  case object Bm25 extends Family("bm25")
-  case object Ivf extends Family("ivf")
+  /** The standing-index families: `name` is the family's name in
+    * health reports, `prefix` names its generation dirs. */
+  sealed abstract class Family(val name: String, val prefix: String)
+  case object HashBand extends Family("hashband", "bands_v")
+  case object Bm25 extends Family("bm25", "bm25_v")
+  case object Ivf extends Family("ivf", "index_v")
 
-  /** Which family wrote the root at `path`, from the layout alone:
-    * hash-band indexes are versioned from birth (`bands_vN`), BM25
-    * carries its `df`/`meta` table dirs, IVF carries `index_vN` after
-    * a compaction or `cid=...` list partitions while flat. None for a
-    * missing root or an unrecognized layout. */
+  /** Which family wrote the root at `path`, from its generation dirs'
+    * prefix alone. None for a missing root or an unrecognized
+    * layout. */
   def detectFamily(fs: FileSystem, path: String): Option[Family] = {
     val p = new Path(path)
-    if (!fs.exists(p)) return None
-    val names = fs.listStatus(p).map(_.getPath.getName).toSet
-    if (names.exists(_.startsWith("bands_v"))) Some(HashBand)
-    else if (names.contains("df") && names.contains("meta")) Some(Bm25)
-    else if (names.exists(_.startsWith("index_v")) ||
-        names.exists(_.startsWith("cid="))) Some(Ivf)
-    else None
+    if (!fs.exists(p)) None
+    else {
+      val names = fs.listStatus(p).map(_.getPath.getName)
+      Seq(HashBand, Bm25, Ivf).find(f => names.exists(isVersionName(_, f.prefix)))
+    }
   }
 
-  /** ONE definition of "is this entry name a version pointer" — the
-    * resolver and every rebuild's name-scoped reset share it, so the
-    * delete-set and the resolve-set cannot drift apart (a pointer the
-    * resolver honors but a reset no longer clears would resurrect a
-    * stale version after rebuild). */
+  /** ONE definition of "is this entry name a version pointer / a
+    * generation dir" — the resolver and the rewrite's housekeeping
+    * share it, so what is served and what is reclaimed cannot drift
+    * apart. */
   private def isVersionName(n: String, prefix: String): Boolean =
     n.startsWith(prefix) && n.length > prefix.length &&
       n.drop(prefix.length).forall(_.isDigit)
@@ -79,107 +77,72 @@ private[operators] object StandingIndex {
       .collect { case n if isVersionName(n, Pointer) => n.drop(Pointer.length).toLong }
   }
 
-  /** The servable data dir: `<prefix>vN` under the highest pointer,
-    * else the family's `flat` layout. `flat = None` is the
-    * versioned-from-birth layout, where "no pointer" is never a legal
-    * servable state — a rebuild crashed before publishing, or the
-    * path is not such an index — so it refuses rather than falling
-    * back to the root (a user file co-located at the root survives
-    * the name-scoped reset and must not be read as the index). */
-  def currentDir(fs: FileSystem, path: String, prefix: String,
-      flat: Option[String]): String = {
+  /** The servable generation: `<prefix>N` under the highest pointer.
+    * "No pointer" refuses rather than falling back to the root — a
+    * first build crashed before publishing, or the path is not such
+    * an index (a user file co-located at the root must never be read
+    * as the index). */
+  def currentDir(fs: FileSystem, path: String, family: Family): String = {
     val vs = versions(fs, path)
-    require(vs.nonEmpty || flat.isDefined,
-      s"no published version pointer under $path — a rebuild crashed " +
-        "before publishing (rerun writeHashBandIndex), or this dir was " +
-        "not written by writeHashBandIndex (the layout is versioned " +
-        "from birth)")
-    if (vs.nonEmpty) s"$path/$prefix${vs.max}" else flat.get
+    require(vs.nonEmpty,
+      s"no published version pointer under $path — a build crashed " +
+        s"before publishing (rerun it), or this dir is not a ${family.name} " +
+        "index (every family is versioned from birth)")
+    s"$path/${family.prefix}${vs.max}"
   }
 
-  /** Writers that must not run under a live (or crashed) rewrite.
-    * A REBUILD is refused because deleting the lock would let the
-    * rewrite finish later and drop a pointer that silently shadows the
-    * rebuild with pre-rebuild data; a delete adds `why` to the reason. */
-  def refuseIfCompacting(fs: FileSystem, path: String, rebuild: Boolean,
-      why: String = ""): Unit =
+  /** Writers that must not start under a live (or crashed) rewrite;
+    * `why` prefixes the remedy. */
+  def refuseIfCompacting(fs: FileSystem, path: String, why: String = ""): Unit =
     require(!fs.exists(new Path(s"$path/$Lock")),
-      s"a compaction is running (or crashed) under $path — " + (
-        if (rebuild) "rebuilding now would be shadowed by its version-pointer " +
-          s"swap; wait for it (or delete a stale $Lock) and rerun"
-        else s"${why}wait for it (or clear a stale $Lock) and retry"))
+      s"a compaction is running (or crashed) under $path — ${why}wait for " +
+        s"it (or clear a stale $Lock) and retry")
 
-  /** Publish version `v`: the atomic pointer create IS the swap. */
-  def publish(fs: FileSystem, path: String, v: Long, clash: String): Unit =
-    require(fs.createNewFile(new Path(s"$path/$Pointer$v")),
-      s"pointer $Pointer$v already exists under $path — $clash")
-
-  /** The versioned rewrite behind every compaction and every hash-band
-    * write (a rebuild is a rewrite from an empty base), in this order:
-    * take the lock and pick the next version; snapshot the tombstone
-    * files; run `write(dir, snapshot)` into `<prefix>v<next>`
+  /** The versioned rewrite behind every build, growth and compaction
+    * (a build is a rewrite from an empty base), in this order: take
+    * the lock — a live or crashed rewrite refuses here, before any
+    * filesystem change — and pick the next version; clear
+    * `<prefix><next>` (the orphan a crashed rewrite may have left);
+    * snapshot the tombstone files; run `write(dir, snapshot)` into it
     * (returning None declines to publish — the all-deleted skip — and
-    * leaves every file but the lock as it was);
-    * publish the pointer; delete the stale pointers, EVERY superseded
-    * version dir (a crash between an earlier swap and its housekeeping
-    * leaves several, and the rerun must reclaim them all) and the flat
-    * base (`flat` — the root itself only on the first rewrite, when
-    * by contract it holds only the flat index data); clear exactly the
-    * snapshot; release the lock. A crash at any step leaves a
-    * probe-consistent index: before the pointer lands readers resolve
-    * the old dir, after it the complete new one; a rerun's overwrite
-    * reclaims a half-written dir. Readers that resolved a superseded
+    * leaves every file but the lock as it was); publish the pointer;
+    * delete the stale pointers and EVERY other generation dir (a crash
+    * between an earlier swap and its housekeeping leaves several, and
+    * the rerun must reclaim them all); clear exactly the snapshot;
+    * release the lock. A crash at any step leaves a probe-consistent
+    * index: before the pointer lands readers resolve the old dir,
+    * after it the complete new one. Readers that resolved a superseded
     * dir before the swap should tolerate one retry if housekeeping
-    * deletes it mid-scan. `growth` picks a rebuild's wording. */
-  def rewrite[A](fs: FileSystem, path: String, prefix: String,
-      flat: Option[String], growth: Boolean = false)(
+    * deletes it mid-scan. */
+  def rewrite[A](fs: FileSystem, path: String, family: Family)(
       write: (String, Seq[String]) => Option[A]): Option[A] = {
     val lock = new Path(s"$path/$Lock")
     require(fs.createNewFile(lock),
-      if (growth) s"could not create the rewrite lock under $path — a " +
-        "compaction or rebuild is running, or a previous one crashed. The " +
-        "index is still probe-consistent either way (swaps are atomic); if " +
-        s"nothing is live, delete $Lock and rerun"
-      else s"could not create compaction lock under $path — another " +
+      s"could not create the rewrite lock under $path — a build or " +
         "compaction is running, or a previous one crashed. The index is " +
-        "still probe-consistent either way (the swap is atomic); if no " +
-        s"compaction is live, delete $Lock and rerun")
+        "still probe-consistent either way (swaps are atomic); if nothing " +
+        s"is live, delete $Lock and rerun")
     try {
       val vs = versions(fs, path)
       val next = (0L +: vs).max + 1
+      val dir = s"$path/${family.prefix}$next"
+      fs.delete(new Path(dir), true)
       val snapshot = tombstoneFiles(fs, path)
-      val out = write(s"$path/$prefix$next", snapshot)
+      val out = write(dir, snapshot)
       if (out.isDefined) {
-        val racers = if (growth) "rewrites" else "compactions"
-        publish(fs, path, next,
-          s"concurrent $racers? The servable index is unchanged")
+        require(fs.createNewFile(new Path(s"$path/$Pointer$next")),
+          s"pointer $Pointer$next already exists under $path — concurrent " +
+            "rewrites? The servable index is unchanged")
         vs.foreach(v => fs.delete(new Path(s"$path/$Pointer$v"), false))
-        vs.foreach(v => fs.delete(new Path(s"$path/$prefix$v"), true))
-        flat.foreach { f =>
-          if (f != path) fs.delete(new Path(f), true)
-          else if (vs.isEmpty) fs.listStatus(new Path(path))
-            .filterNot(st => Set(s"$prefix$next", s"$Pointer$next", Lock,
-              Tombstones).contains(st.getPath.getName))
-            .foreach(st => fs.delete(st.getPath, true))
-        }
+        fs.listStatus(new Path(path)).map(_.getPath)
+          .filter(p => isVersionName(p.getName, family.prefix) &&
+            p.getName != s"${family.prefix}$next")
+          .foreach(fs.delete(_, true))
         clearTombstoneSnapshot(fs, path, snapshot)
       }
       out
     } finally { fs.delete(lock, false); () }
   }
-
-  /** The BM25 rebuild's reset to an empty lifecycle, NAME-SCOPED to
-    * the family's own entries — tombstones, pointers and `<prefix>N`
-    * dirs: a catch-all root sweep would eat anything a user co-located
-    * at the root (a mistyped path or a neighboring artifact dies
-    * silently BEFORE any write). */
-  def resetVersions(fs: FileSystem, path: String, prefix: String): Unit =
-    fs.listStatus(new Path(path)).toSeq.map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        n == Tombstones || isVersionName(n, Pointer) || isVersionName(n, prefix)
-      }
-      .foreach(fs.delete(_, true))
 
   def tombstoneDir(path: String): String = s"$path/$Tombstones"
 
@@ -279,9 +242,8 @@ private[operators] object StandingIndex {
 
   /** Data files under a servable dir for the stats twins: (files,
     * bytes, files per stripe group). A data file is a non-hidden file
-    * directly in `dir` or in a partition dir (`k=v`) under it — so a
-    * flat IVF root's `_tombstones/` files are not counted — grouped by
-    * its parent dir's name (each append adds one stripe per touched
+    * directly in `dir` or in a partition dir (`k=v`) under it, grouped
+    * by its parent dir's name (each append adds one stripe per touched
     * partition; a non-partitioned layout is one group). */
   def dataFiles(fs: FileSystem, dir: String): (Long, Long, Map[String, Long]) = {
     val root = fs.makeQualified(new Path(dir))

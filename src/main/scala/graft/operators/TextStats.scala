@@ -500,19 +500,14 @@ object TextStats {
     * one all-null SCHEMA SENTINEL row into bucket 0 instead: probes
     * join postings on `token`, so a null-token row can never match,
     * score, or df-gate — it exists only to carry the schema
-    * (`bm25IndexStats` excludes it from row counts the same way). */
+    * (`bm25IndexStats` excludes it from row counts the same way).
+    * `dir` lies inside a generation `StandingIndex.rewrite` has just
+    * cleared, so no stale `_tb=` dir can survive to make `hasData`
+    * true and serve old postings. */
   private def writePostingsBucketed(df: DataFrame, dir: String): Unit = {
     val spark = df.sparkSession
-    // delete the target root FIRST (mirroring Similarity.writeIndex):
-    // the written-directory emptiness check below is only sound when
-    // no stale `_tb=` dirs from prior content can survive the write —
-    // under spark.sql.sources.partitionOverwriteMode=dynamic an
-    // empty-result overwrite deletes nothing, and a stale dir would
-    // make `hasData` true and silently serve the old postings (r17
-    // advice). One FS op; the write recreates the dir.
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = StandingIndex.fs(spark, dir)
-    fs.delete(p, true)
     df
       // repartition on the bucket before the partitioned write: without
       // it every task writes a file into every bucket directory
@@ -541,21 +536,54 @@ object TextStats {
         .write.mode("overwrite").partitionBy("_tb").parquet(dir)
   }
 
-  /** The servable postings dir: `postings_vN/` after a compaction,
-    * `postings/` before one (see `StandingIndex.currentDir`). */
-  private def postingsDir(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): String =
-    StandingIndex.currentDir(fs, path, "postings_v", Some(s"$path/postings"))
+  /** Marks an unfinished append/delete INSIDE the generation it
+    * mutates, so a rebuild or compaction that supersedes that
+    * generation takes the marker with it. */
+  private val Incomplete = "_append_incomplete"
+
+  /** The served generation `bm25_vN/` and the index read from it:
+    * lazy postings/df/meta frames, plus the pending delete tombstones
+    * — delete-request-sized by contract — collected EAGERLY into a
+    * local frame, so probes built on this read keep working even if a
+    * compaction clears the tombstone files before the probe executes
+    * (see `StandingIndex.localTombstones`). A generation carrying the
+    * incomplete marker is refused. */
+  private def open(spark: org.apache.spark.sql.SparkSession, path: String)
+      : (org.apache.hadoop.fs.FileSystem, String, Bm25Index) = {
+    val fs = StandingIndex.fs(spark, path)
+    val gen = StandingIndex.currentDir(fs, path, StandingIndex.Bm25)
+    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$gen/$Incomplete")),
+      s"BM25 index at $path has an unfinished append/delete " +
+        s"($Incomplete marker in $gen) — its postings/df/meta may " +
+        "disagree; rebuild with writeBm25Index rather than serving " +
+        "inconsistent scores")
+    val tombs = StandingIndex.tombstoneFiles(fs, path)
+    (fs, gen, Bm25Index(spark.read.parquet(s"$gen/postings"),
+      spark.read.parquet(s"$gen/df"), spark.read.parquet(s"$gen/meta"),
+      if (tombs.nonEmpty) Some(StandingIndex.localTombstones(spark, tombs))
+      else None))
+  }
 
   /** Build and persist a BM25 postings index — the build-once half of
     * `bm25TopK`, for the 100 TB regime where re-deriving tf/df/doc
     * lengths from the raw corpus on every query batch is the
-    * expensive pass. Layout under `path`: `postings/` (idCol, token,
-    * tf, len), `df/` (token, df), `meta/` (ndocs, avglen,
-    * max_postings, id_col), all parquet like every other artifact
-    * here (PQ/SQ/BQ models, bigram LM, dedup index); after a
-    * `deleteFromBm25Index`, also `_tombstones/` until the next
-    * compaction.
+    * expensive pass. Layout under `path`: one generation dir
+    * `bm25_vN/` holding `postings/` (idCol, token, tf, len), `df/`
+    * (token, df) and `meta/` (ndocs, avglen, max_postings, id_col),
+    * all parquet like every other artifact here (PQ/SQ/BQ models,
+    * bigram LM, dedup index), published by one `_current_vN` pointer;
+    * after a `deleteFromBm25Index`, also `_tombstones/` until the next
+    * compaction or rebuild.
+    *
+    * Every build is a `StandingIndex.rewrite` from an empty base: the
+    * new generation is written beside the served one, which keeps
+    * serving until the pointer swap, so a job that fails mid-rebuild
+    * leaves the old index (stats, tombstones and all) as it was. The
+    * swap supersedes the old generation — with any incomplete marker a
+    * crashed append left in it — and the tombstones the build read, so
+    * a complete rebuild is the documented recovery from every
+    * refused state. A live (or crashed) compaction holds the rewrite
+    * lock, so the build is refused before any filesystem change.
     *
     * Hot postings are capped AT BUILD TIME, concretely: a term whose
     * posting list exceeds `maxPostings` rows (a stop word — df near
@@ -590,103 +618,117 @@ object TextStats {
       s"idCol '$idCol' collides with the index's internal/probe column names")
     require(tokenBuckets >= 1, s"tokenBuckets must be >= 1, got $tokenBuckets")
     val spark = corpus.sparkSession
-    // the build mutates three artifacts; bracket it with the same
-    // incomplete marker the append uses, so a crash mid-rebuild
-    // cannot leave a silently inconsistent trio — and so a COMPLETE
-    // rebuild clears a crashed append's marker (the documented
-    // recovery path)
     val fs = StandingIndex.fs(spark, path)
-    val marker = new org.apache.hadoop.fs.Path(s"$path/_append_incomplete")
-    fs.mkdirs(new org.apache.hadoop.fs.Path(path))
-    // a LIVE compaction is refused BEFORE the marker lands (refusing
-    // after would leave a spurious rebuild-required state) — clear a
-    // genuinely stale lock by hand (the documented crashed-compaction
-    // recovery) and rerun.
-    StandingIndex.refuseIfCompacting(fs, path, rebuild = true)
-    if (!fs.exists(marker)) fs.createNewFile(marker)
-    // a REBUILD resets to the unversioned layout: clear delete
-    // tombstones, compaction version pointers and their dirs (inside
-    // the marker bracket, so a crash here is the same loud
-    // rebuild-required state)
-    StandingIndex.resetVersions(fs, path, "postings_v")
-    // tf and lens each feed two of the three writes — persist them so
-    // the build really is ONE tokenize + one (id, token) shuffle, not
-    // a re-execution per write action (DISK-backed: tf is corpus-ish
-    // sized and pinning it in memory is not this operator's call)
-    val tf = corpus.select(col(idCol), explode(toks(textCol)).as("token"))
-      .groupBy(idCol, "token").agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // greatest(size, 0): null text must count as length 0, not -1
-    val lens = corpus.select(col(idCol),
-      greatest(size(toks(textCol)), lit(0)).cast("double").as("len"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // The three artifact writes are mutually independent (df from
-      // tf; postings from tf⋈lens; meta from lens) and all sit inside
-      // the marker bracket, so they run CONCURRENTLY (guide §2.6 /
-      // Actions.inParallel): r18 profiling showed ~half the build's
-      // wall in per-action driver gaps, and overlapping the three
-      // actions folds those gaps into each other. The shared persisted
-      // tf/lens frames compute exactly once under BlockManager's
-      // per-block locks.
-      Actions.inParallel(
-        // true df, BEFORE the posting cap — derived from tf (one row
-        // per (doc, token) already), never a second corpus shuffle
-        () => tf.groupBy("token").agg(count(lit(1)).as("df"))
-          .write.mode("overwrite").parquet(s"$path/df"),
-        // minPerKey = 1: a singleton posting is the HIGHEST-value row
-        // in a retrieval index (max idf), the opposite of an LSH bucket
-        () => writePostingsBucketed(
-          HotKeys.cap(tf.join(lens, Seq(idCol)), Seq(col("token")), maxPostings,
-              minPerKey = 1, metricName = "graft_bm25_posting_cap")
-            .select(col(idCol), col("token"), col("tf"), col("len"),
-              pmod(hash(col("token")), lit(tokenBuckets)).as("_tb")),
-          s"$path/postings"),
-        // ndocs/avglen aggregate per-doc lengths (zero-token docs count)
-        () => lens.agg(count(lit(1)).cast("double").as("ndocs"),
-            coalesce(avg(col("len")), lit(0.0)).as("avglen"))
-          .withColumn("max_postings", lit(maxPostings.toLong))
-          .withColumn("token_buckets", lit(tokenBuckets.toLong))
-          .withColumn("id_col", lit(idCol))
-          .write.mode("overwrite").parquet(s"$path/meta"))
-    } finally { tf.unpersist(); lens.unpersist(); () }
+    StandingIndex.rewrite(fs, path, StandingIndex.Bm25) { (dir, _) =>
+      // tf and lens each feed two of the three writes — persist them so
+      // the build really is ONE tokenize + one (id, token) shuffle, not
+      // a re-execution per write action (DISK-backed: tf is corpus-ish
+      // sized and pinning it in memory is not this operator's call)
+      val tf = corpus.select(col(idCol), explode(toks(textCol)).as("token"))
+        .groupBy(idCol, "token").agg(count(lit(1)).as("tf"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // greatest(size, 0): null text must count as length 0, not -1
+      val lens = corpus.select(col(idCol),
+        greatest(size(toks(textCol)), lit(0)).cast("double").as("len"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        // The three table writes are mutually independent (df from tf;
+        // postings from tf⋈lens; meta from lens) and all land in the
+        // unpublished generation, so they run CONCURRENTLY
+        // (Actions.inParallel): overlapping the three actions folds
+        // their per-action driver gaps into each other. The shared
+        // persisted tf/lens frames compute exactly once under
+        // BlockManager's per-block locks.
+        Actions.inParallel(
+          // true df, BEFORE the posting cap — derived from tf (one row
+          // per (doc, token) already), never a second corpus shuffle
+          () => tf.groupBy("token").agg(count(lit(1)).as("df"))
+            .write.parquet(s"$dir/df"),
+          // minPerKey = 1: a singleton posting is the HIGHEST-value row
+          // in a retrieval index (max idf), the opposite of an LSH bucket
+          () => writePostingsBucketed(
+            HotKeys.cap(tf.join(lens, Seq(idCol)), Seq(col("token")), maxPostings,
+                minPerKey = 1, metricName = "graft_bm25_posting_cap")
+              .select(col(idCol), col("token"), col("tf"), col("len"),
+                pmod(hash(col("token")), lit(tokenBuckets)).as("_tb")),
+            s"$dir/postings"),
+          // ndocs/avglen aggregate per-doc lengths (zero-token docs count)
+          () => lens.agg(count(lit(1)).cast("double").as("ndocs"),
+              coalesce(avg(col("len")), lit(0.0)).as("avglen"))
+            .withColumn("max_postings", lit(maxPostings.toLong))
+            .withColumn("token_buckets", lit(tokenBuckets.toLong))
+            .withColumn("id_col", lit(idCol))
+            .write.parquet(s"$dir/meta"))
+      } finally { tf.unpersist(); lens.unpersist(); () }
+      Some(())
+    }
+    ()
+  }
+
+  /** Read a persisted BM25 index back (see `open`). */
+  def readBm25Index(spark: org.apache.spark.sql.SparkSession,
+      path: String): Bm25Index = open(spark, path)._3
+
+  /** The served generation's (ndocs, avglen, max_postings,
+    * token_buckets), after checking the build's id column. */
+  private def scalars(idx: Bm25Index, idCol: String): (Double, Double, Long, Long) = {
+    val m = idx.meta
+      .select("ndocs", "avglen", "max_postings", "token_buckets", "id_col")
+      .collect()(0)
+    require(m.getString(4) == idCol,
+      s"index was built with idCol '${m.getString(4)}', got '$idCol'")
+    (m.getDouble(0), m.getDouble(1), m.getLong(2), m.getLong(3))
+  }
+
+  /** The incomplete-marker bracket around an in-place mutation of the
+    * served generation `gen`: the mutations move three tables that
+    * must agree, so a crash anywhere inside leaves a LOUD state
+    * (reads, appends and deletes refuse while the marker exists —
+    * rebuild the index) instead of silently inconsistent scores or a
+    * double-counting retry. Plain filesystem artifacts cannot do
+    * better without a table format; the marker converts every
+    * partial-failure window into an error, and only a complete body
+    * clears it. */
+  private def mutating(fs: org.apache.hadoop.fs.FileSystem, gen: String)(
+      body: => Unit): Unit = {
+    val marker = new org.apache.hadoop.fs.Path(s"$gen/$Incomplete")
+    require(fs.createNewFile(marker),
+      s"could not create the $Incomplete marker in $gen (a previous " +
+        "append/delete is unfinished, or writers race — both require a " +
+        "rebuild)")
+    body
     fs.delete(marker, false)
     ()
   }
 
-  /** Read a persisted BM25 index back (lazy postings/df/meta frames;
-    * pending delete tombstones — delete-request-sized by contract —
-    * are collected EAGERLY into a local frame here, so probes built on
-    * this read keep working even if a compaction clears the tombstone
-    * files before the probe executes — see
-    * `StandingIndex.localTombstones`). */
-  def readBm25Index(spark: org.apache.spark.sql.SparkSession,
-      path: String): Bm25Index = {
-    val marker = new org.apache.hadoop.fs.Path(s"$path/_append_incomplete")
-    val fs = StandingIndex.fs(spark, path)
-    require(!fs.exists(marker),
-      s"BM25 index at $path has an unfinished append/delete " +
-        "(_append_incomplete marker present) — its postings/df/meta may " +
-        "disagree; rebuild with writeBm25Index rather than serving " +
-        "inconsistent scores")
-    val tombs = StandingIndex.tombstoneFiles(fs, path)
-    Bm25Index(spark.read.parquet(postingsDir(fs, path)),
-      spark.read.parquet(s"$path/df"),
-      spark.read.parquet(s"$path/meta"),
-      if (tombs.nonEmpty) Some(StandingIndex.localTombstones(spark, tombs))
-      else None)
+  /** `gen`'s df table replaced by `df`, written beside and renamed
+    * over — a lazy read-and-overwrite of the same dir would corrupt
+    * it; mode overwrite also clears a stale `df.tmp`. */
+  private def swapDf(fs: org.apache.hadoop.fs.FileSystem, gen: String,
+      df: DataFrame): Unit = {
+    df.write.mode("overwrite").parquet(s"$gen/df.tmp")
+    fs.delete(new org.apache.hadoop.fs.Path(s"$gen/df"), true)
+    require(fs.rename(new org.apache.hadoop.fs.Path(s"$gen/df.tmp"),
+      new org.apache.hadoop.fs.Path(s"$gen/df")), s"rename failed under $gen")
+  }
+
+  private def writeMeta(spark: org.apache.spark.sql.SparkSession, gen: String,
+      ndocs: Double, avglen: Double, cap: Long, tb: Long, idCol: String): Unit = {
+    import spark.implicits._
+    Seq((ndocs, avglen, cap, tb, idCol))
+      .toDF("ndocs", "avglen", "max_postings", "token_buckets", "id_col")
+      .write.mode("overwrite").parquet(s"$gen/meta")
   }
 
   /** Append a document batch to a persisted BM25 index WITHOUT
     * rescanning the standing corpus. Batch ids must be disjoint from
     * the standing index (same contract as every append here — dedup
-    * upstream); batch postings append to the CURRENT postings dir
-    * (pointer-resolved — `postings/`, or `postings_vN/` after a
-    * compaction); `df/` is
-    * rebuilt as old-df ⊕ batch-df summed by token (a vocabulary-sized
-    * read + write, never corpus-sized) and swapped in atomically via
-    * a FileSystem rename; the two scalars recompute on the driver
-    * from the old one-row meta plus the batch's own count/length sum
+    * upstream). The append mutates the served generation IN PLACE,
+    * inside the incomplete-marker bracket: batch postings append to
+    * its `postings/`; `df/` is rebuilt as old-df ⊕ batch-df summed by
+    * token (a vocabulary-sized read + write, never corpus-sized) and
+    * renamed over; the two scalars recompute on the driver from the
+    * old one-row meta plus the batch's own count/length sum
     * (n' = n + nB, avglen' = (n·avg + ΣlenB) / n'). The batch's own
     * postings are capped at the index's stored `max_postings`; a term
     * whose COMBINED list only now crosses the cap keeps its stale
@@ -694,15 +736,8 @@ object TextStats {
     * max_postings) excludes it — results equal a fresh rebuild. */
   def appendBm25Index(spark: org.apache.spark.sql.SparkSession, path: String,
       batch: DataFrame, textCol: String, idCol: String): Unit = {
-    val old = readBm25Index(spark, path)
-    val metaRow = old.meta
-      .select("ndocs", "avglen", "max_postings", "token_buckets", "id_col")
-      .collect()(0)
-    val (n0, avg0, cap, tb) = (metaRow.getDouble(0), metaRow.getDouble(1),
-      metaRow.getLong(2), metaRow.getLong(3))
-    require(metaRow.getString(4) == idCol,
-      s"index was built with idCol '${metaRow.getString(4)}', got '$idCol'")
-    val fs = StandingIndex.fs(spark, path)
+    val (fs, gen, old) = open(spark, path)
+    val (n0, avg0, cap, tb) = scalars(old, idCol)
     StandingIndex.refuseReAdds(fs, path, batch, "run compactBm25Index " +
       "first (it applies deletions materially and clears the " +
       "tombstones), then append")
@@ -715,66 +750,36 @@ object TextStats {
     val lens = batch.select(col(idCol),
       greatest(size(toks(textCol)), lit(0)).cast("double").as("len"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // The append mutates three artifacts that must move together; an
-    // incomplete-append MARKER brackets the whole mutation so a crash
-    // anywhere inside leaves a LOUD state (readBm25Index and further
-    // appends refuse while it exists — rebuild the index) instead of
-    // silently inconsistent scores or a double-counting retry. Plain
-    // filesystem artifacts cannot do better without a table format;
-    // the marker converts every partial-failure window into an error.
-    val marker = new org.apache.hadoop.fs.Path(s"$path/_append_incomplete")
-    require(fs.createNewFile(marker),
-      s"could not create append marker under $path (previous append " +
-        "unfinished, or concurrent appends — both require a rebuild)")
     // The three mutations (postings append; df merge-rename; batch
     // scalars + meta) are mutually independent — postings reads tf⋈
     // lens, the df merge reads old df + tf, meta reads lens — and ALL
     // sit inside the marker bracket, so a failure in any of them
     // leaves the same loud rebuild-required state regardless of which
-    // others completed (ordering inside the bracket was never
-    // load-bearing — the marker, not sequencing, is the guarantee).
-    // They run CONCURRENTLY (guide §2.6): r17/r18 profiling showed
-    // the append's wall dominated by per-action driver gaps. The
-    // df.tmp write + rename-swap stays ONE action closure (the rename
-    // must follow its own write; nothing else reads df/ inside the
-    // bracket). try/finally so a failure cannot leak the two
-    // MEMORY_AND_DISK caches (the marker delete stays OUTSIDE: only
-    // a complete body clears it).
-    try {
-    Actions.inParallel(
-      () => HotKeys.cap(tf.join(lens, Seq(idCol)), Seq(col("token")), cap.toInt,
-          minPerKey = 1, metricName = "graft_bm25_posting_cap_append")
-        .select(col(idCol), col("token"), col("tf"), col("len"),
-          pmod(hash(col("token")), lit(tb)).cast("int").as("_tb"))
-        .repartition(col("_tb"))
-        .write.mode("append").partitionBy("_tb")
-        .parquet(postingsDir(fs, path)),
-      // df rebuild: old ⊕ batch, written beside then renamed over — a
-      // lazy read-and-overwrite of the same dir would corrupt it; mode
-      // overwrite also clears any stale df.tmp
-      () => {
-        old.dfT
+    // others completed. They run CONCURRENTLY (Actions.inParallel);
+    // the df.tmp write + rename-swap stays ONE action closure (the
+    // rename must follow its own write). try/finally so a failure
+    // cannot leak the two MEMORY_AND_DISK caches.
+    try mutating(fs, gen) {
+      Actions.inParallel(
+        () => HotKeys.cap(tf.join(lens, Seq(idCol)), Seq(col("token")), cap.toInt,
+            minPerKey = 1, metricName = "graft_bm25_posting_cap_append")
+          .select(col(idCol), col("token"), col("tf"), col("len"),
+            pmod(hash(col("token")), lit(tb)).cast("int").as("_tb"))
+          .repartition(col("_tb"))
+          .write.mode("append").partitionBy("_tb")
+          .parquet(s"$gen/postings"),
+        () => swapDf(fs, gen, old.dfT
           .unionByName(tf.groupBy("token").agg(count(lit(1)).as("df")))
-          .groupBy("token").agg(sum("df").as("df"))
-          .write.mode("overwrite").parquet(s"$path/df.tmp")
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/df"), true)
-        require(fs.rename(new org.apache.hadoop.fs.Path(s"$path/df.tmp"),
-          new org.apache.hadoop.fs.Path(s"$path/df")),
-          s"rename failed under $path")
-      },
-      () => {
-        val batchStats = lens.agg(count(lit(1)).cast("double").as("nb"),
-          coalesce(sum(col("len")), lit(0.0)).as("sumb")).collect()(0)
-        val (nB, sumB) = (batchStats.getDouble(0), batchStats.getDouble(1))
-        val n1 = n0 + nB
-        import spark.implicits._
-        Seq((n1, if (n1 == 0) 0.0 else (n0 * avg0 + sumB) / n1, cap, tb, idCol))
-          .toDF("ndocs", "avglen", "max_postings", "token_buckets", "id_col")
-          .write.mode("overwrite").parquet(s"$path/meta")
-      })
+          .groupBy("token").agg(sum("df").as("df"))),
+        () => {
+          val batchStats = lens.agg(count(lit(1)).cast("double").as("nb"),
+            coalesce(sum(col("len")), lit(0.0)).as("sumb")).collect()(0)
+          val n1 = n0 + batchStats.getDouble(0)
+          writeMeta(spark, gen, n1,
+            if (n1 == 0) 0.0 else (n0 * avg0 + batchStats.getDouble(1)) / n1,
+            cap, tb, idCol)
+        })
     } finally { tf.unpersist(); lens.unpersist(); () }
-    fs.delete(marker, false)
-    ()
   }
 
   /** Delete documents from a persisted BM25 index WITHOUT rescanning
@@ -790,11 +795,11 @@ object TextStats {
     * mutation, bracketed by the same incomplete marker as the append
     * so a crash is LOUD, is: (1) append the new ids to `_tombstones/`
     * — probes anti-join it, so the docs stop scoring immediately;
-    * (2) decrement `df/` by each token's count of deleted-doc posting
-    * rows (read from the postings themselves — no corpus access) and
-    * rename-swap it; (3) recompute the two meta scalars from the
-    * deleted docs' denormalized lengths (n' = n − nD,
-    * avglen' = (n·avg − Σlen_deleted)/n').
+    * (2) decrement the served generation's `df/` by each token's count
+    * of deleted-doc posting rows (read from the postings themselves —
+    * no corpus access) and rename-swap it; (3) recompute the two meta
+    * scalars from the deleted docs' denormalized lengths
+    * (n' = n − nD, avglen' = (n·avg − Σlen_deleted)/n').
     *
     * COMPLETENESS INVARIANT — why the probe's plain df-gate stays
     * sound, with no extra bookkeeping: decrements count only ON-DISK
@@ -833,18 +838,11 @@ object TextStats {
     * just avoids it). */
   def deleteFromBm25Index(spark: org.apache.spark.sql.SparkSession,
       path: String, ids: DataFrame, idCol: String): Unit = {
-    val old = readBm25Index(spark, path)
-    val metaRow = old.meta
-      .select("ndocs", "avglen", "max_postings", "token_buckets", "id_col")
-      .collect()(0)
-    val (n0, avg0, cap, tb) = (metaRow.getDouble(0), metaRow.getDouble(1),
-      metaRow.getLong(2), metaRow.getLong(3))
-    require(metaRow.getString(4) == idCol,
-      s"index was built with idCol '${metaRow.getString(4)}', got '$idCol'")
+    val (fs, gen, old) = open(spark, path)
+    val (n0, avg0, cap, tb) = scalars(old, idCol)
     require(ids.columns.length == 1,
       s"ids must be a single-column frame, got ${ids.columns.mkString(", ")}")
-    val fs = StandingIndex.fs(spark, path)
-    StandingIndex.refuseIfCompacting(fs, path, rebuild = false,
+    StandingIndex.refuseIfCompacting(fs, path,
       "deleting now could land tombstones the compaction clears without " +
         "applying; ")
     // new ids only: dedup the request and drop ids already tombstoned,
@@ -867,95 +865,77 @@ object TextStats {
     require(n1 >= 0,
       s"delete of ${nD.toLong} ids would drive ndocs negative under " +
         s"$path — ids not currently indexed? Refused before any mutation")
-    val marker = new org.apache.hadoop.fs.Path(s"$path/_append_incomplete")
-    require(fs.createNewFile(marker),
-      s"could not create mutation marker under $path (previous " +
-        "append/delete unfinished, or concurrent writers — both require " +
-        "a rebuild)")
     // The three mutations (tombstone append; df decrement-rename;
     // meta repair) are mutually independent and all inside the marker
     // bracket — a crash ANYWHERE leaves the same loud rebuild-required
-    // state as a crashed append (reads refuse on the marker), so the
-    // former tombstones-first sequencing was never load-bearing. The
-    // anti-join idempotency above protects against duplicate COMPLETED
-    // requests, not against crashes — partial mutations never serve.
-    // They run CONCURRENTLY (guide §2.6, same rationale as the
-    // build/append: the delete's wall was dominated by per-action
-    // driver gaps); the shared persisted `matched` frame computes
-    // once under BlockManager's per-block locks.
-    // per-token decrements = the deleted docs' surviving posting rows
-    // (one row per (doc, token)); per-doc lengths ride the same
-    // matched rows, denormalized and equal across a doc's rows
+    // state as a crashed append. The anti-join idempotency above
+    // protects against duplicate COMPLETED requests, not against
+    // crashes — partial mutations never serve. They run CONCURRENTLY
+    // (same rationale as the build/append); the shared persisted
+    // `matched` frame computes once under BlockManager's per-block
+    // locks. Per-token decrements = the deleted docs' surviving
+    // posting rows (one row per (doc, token)); per-doc lengths ride
+    // the same matched rows, denormalized and equal across a doc's rows
     val matched = old.postings
       .join(broadcast(newIds), Seq(idCol), "left_semi")
       .select(col(idCol), col("token"), col("len"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    try mutating(fs, gen) {
       Actions.inParallel(
         () => newIds.write.mode("append")
           .parquet(StandingIndex.tombstoneDir(path)),
         () => {
           val dec = matched.groupBy("token").agg(count(lit(1)).as("_dec"))
-          old.dfT
+          swapDf(fs, gen, old.dfT
             .select(col("token"), col("df").as("_df0"))
             .join(dec, Seq("token"), "left")
             .select(col("token"),
-              greatest(col("_df0") - coalesce(col("_dec"), lit(0L)), lit(0L)).as("df"))
-            .write.mode("overwrite").parquet(s"$path/df.tmp")
-          fs.delete(new org.apache.hadoop.fs.Path(s"$path/df"), true)
-          require(fs.rename(new org.apache.hadoop.fs.Path(s"$path/df.tmp"),
-            new org.apache.hadoop.fs.Path(s"$path/df")),
-            s"rename failed under $path")
+              greatest(col("_df0") - coalesce(col("_dec"), lit(0L)), lit(0L)).as("df")))
         },
         // meta repair: nD counts the REQUESTED ids (exact for zero-token
         // docs, which have no rows but really do have length 0, and
-        // checked against n0 BEFORE the marker above); the length sum
-        // comes from each matched doc's first posting row
+        // checked against n0 BEFORE the marker); the length sum comes
+        // from each matched doc's first posting row
         () => {
           val sumD = matched.groupBy(idCol).agg(first(col("len")).as("_l"))
             .agg(coalesce(sum("_l"), lit(0.0)).as("s")).collect()(0).getDouble(0)
-          import spark.implicits._
-          Seq((n1, if (n1 == 0) 0.0 else (n0 * avg0 - sumD) / n1, cap, tb, idCol))
-            .toDF("ndocs", "avglen", "max_postings", "token_buckets", "id_col")
-            .write.mode("overwrite").parquet(s"$path/meta")
+          writeMeta(spark, gen, n1, if (n1 == 0) 0.0 else (n0 * avg0 - sumD) / n1,
+            cap, tb, idCol)
         })
     } finally { matched.unpersist(); () }
-    fs.delete(marker, false)
-    ()
   }
 
-  /** Compact a persisted BM25 index's `postings/` — the housekeeping
+  /** Compact a persisted BM25 index's postings — the housekeeping
     * pass appends accumulate toward. Each `appendBm25Index` adds up
     * to `token_buckets` files per touched bucket plus whole-list
     * STALE rows for terms whose combined list only crossed the cap
     * after the append (correctly df-gated at probe, so results are
     * right — but the bytes stay, and after N appends a probe reads N
-    * stripes per bucket). Compaction rewrites `postings/` with the
-    * probe's own exclusions applied MATERIALLY — the df-gate
-    * (`df <= max_postings`) and the delete tombstones — with one
-    * output file per bucket; `df/` and `meta/` are untouched, so
-    * probe results are bit-identical before and after — only the
-    * bytes and file counts shrink back to what a fresh rebuild
-    * writes. `deleteFromBm25Index` tombstones clear AFTER the swap
-    * (only the file snapshot this compaction applied); cleared ids'
-    * rows have left the postings for real, and those ids become
-    * re-addable.
+    * stripes per bucket). Compaction writes the next generation with
+    * the probe's own exclusions applied MATERIALLY to its `postings/`
+    * — the df-gate (`df <= max_postings`) and the delete tombstones —
+    * with one output file per bucket; `df/` and `meta/` are
+    * vocabulary-sized and copy over unchanged, so probe results are
+    * bit-identical before and after — only the bytes and file counts
+    * shrink back to what a fresh rebuild writes.
+    * `deleteFromBm25Index` tombstones clear AFTER the swap (only the
+    * file snapshot this compaction applied); cleared ids' rows have
+    * left the postings for real, and those ids become re-addable.
     *
     * Two rules suffice, no re-cap pass: a token passing the df-gate
     * has a COMPLETE surviving list on disk (the completeness
     * invariant on `deleteFromBm25Index` — a gate-passing token never
     * had a write dropped), so its rows minus the tombstoned ones are
     * exactly the fresh-rebuild list, while every gated token drops
-    * whole. Cost: one read + write of `postings/` (bucket-partitioned
+    * whole. Cost: one read + write of the postings (bucket-partitioned
     * both ways, the df semi-join shuffles only the vocabulary-sized
-    * key set) — much cheaper than a rebuild, which re-tokenizes the
-    * corpus.
+    * key set) plus two small file copies — much cheaper than a
+    * rebuild, which re-tokenizes the corpus.
     *
     * Crash-safety is `StandingIndex.rewrite`'s versioned swap: the
-    * compacted postings land in a fresh `postings_vN/` beside the
-    * servable dir and publish with one atomic pointer create, so a
-    * crash at ANY step boundary leaves a probe-consistent index; the
-    * flat `postings/` base goes with the superseded versions.
+    * compacted generation lands in a fresh `bm25_vN/` beside the
+    * served one and publishes with one atomic pointer create, so a
+    * crash at ANY step boundary leaves a probe-consistent index.
     * Cadence guidance: measure with `bm25IndexStats` (probe cost
     * grows ~linearly in stripes-per-bucket; compact when
     * `maxStripesPerBucket` approaches the per-bucket read
@@ -963,24 +943,21 @@ object TextStats {
     * `rows`). */
   def compactBm25Index(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
-    val old = readBm25Index(spark, path)
+    val (fs, gen, old) = open(spark, path)
     val cap = old.meta.select("max_postings").collect()(0).getLong(0)
-    val fs = StandingIndex.fs(spark, path)
-    StandingIndex.rewrite(fs, path, "postings_v", Some(s"$path/postings")) {
-      (dir, tombSnapshot) =>
-        // the probe's own exclusions, applied MATERIALLY: the df-gate
-        // and the delete tombstones of the rewrite's snapshot
-        val gated = StandingIndex.withoutTombstones(old.postings.join(
-          old.dfT.filter(col("df") <= cap).select("token"), Seq("token"),
-          "left_semi"), tombSnapshot)
-        // overwrite also clears an orphan dir a crashed attempt left at
-        // this version. The bucketed path rides writePostingsBucketed —
-        // one task's output per bucket dir, and the zero-survivor case
-        // (every token over-cap) still writes a readable schema-sentinel
-        // file
-        if (old.postings.columns.contains("_tb")) writePostingsBucketed(gated, dir)
-        else gated.coalesce(1).write.mode("overwrite").parquet(dir)
-        Some(())
+    StandingIndex.rewrite(fs, path, StandingIndex.Bm25) { (dir, tombSnapshot) =>
+      // the probe's own exclusions, applied MATERIALLY: the df-gate
+      // and the delete tombstones of the rewrite's snapshot. One
+      // task's output per bucket dir, and the zero-survivor case
+      // (every token over-cap) still writes a readable schema-sentinel
+      // file
+      writePostingsBucketed(StandingIndex.withoutTombstones(old.postings.join(
+        old.dfT.filter(col("df") <= cap).select("token"), Seq("token"),
+        "left_semi"), tombSnapshot), s"$dir/postings")
+      Seq("df", "meta").foreach(t => org.apache.hadoop.fs.FileUtil.copy(fs,
+        new org.apache.hadoop.fs.Path(s"$gen/$t"), fs,
+        new org.apache.hadoop.fs.Path(s"$dir/$t"), false, fs.getConf))
+      Some(())
     }
     ()
   }
@@ -1006,9 +983,8 @@ object TextStats {
 
   def bm25IndexStats(spark: org.apache.spark.sql.SparkSession,
       path: String): Bm25IndexStats = {
-    val idx = readBm25Index(spark, path)
-    val fs = StandingIndex.fs(spark, path)
-    val dir = postingsDir(fs, path)
+    val (fs, gen, idx) = open(spark, path)
+    val dir = s"$gen/postings"
     val (files, bytes, perBucket) = StandingIndex.dataFiles(fs, dir)
     val cap = idx.meta.select("max_postings").collect()(0).getLong(0)
     val metaRow = idx.meta.select("ndocs", "avglen").collect()(0)

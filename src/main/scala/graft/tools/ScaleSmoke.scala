@@ -198,7 +198,7 @@ object ScaleSmoke {
       .toFile.getAbsolutePath
     timed("bm25_index_build") {
       graft.operators.TextStats.writeBm25Index(docs, "text", "doc_id", bm25Dir)
-      spark.read.parquet(s"$bm25Dir/postings").count()
+      graft.operators.TextStats.readBm25Index(spark, bm25Dir).postings.count()
     }
     timed("bm25_index_probe(16 queries)") {
       graft.operators.TextStats.bm25TopKFromIndex(
@@ -213,7 +213,7 @@ object ScaleSmoke {
         docs.filter(col("doc_id") % 20 === 3)
           .select((col("doc_id") + lit(900000000L)).as("doc_id"), col("text")),
         "text", "doc_id")
-      spark.read.parquet(s"$bm25Dir/df").count()
+      graft.operators.TextStats.readBm25Index(spark, bm25Dir).dfT.count()
     }
     timed("bm25_index_compact") {
       graft.operators.TextStats.compactBm25Index(spark, bm25Dir)
@@ -226,7 +226,7 @@ object ScaleSmoke {
     timed("bm25_index_delete(1% ids)") {
       graft.operators.TextStats.deleteFromBm25Index(spark, bm25Dir,
         docs.filter(col("doc_id") % 100 === 7).select("doc_id"), "doc_id")
-      spark.read.parquet(s"$bm25Dir/df").count()
+      graft.operators.TextStats.readBm25Index(spark, bm25Dir).dfT.count()
     }
     timed("bm25_index_probe_post_delete(16 queries)") {
       graft.operators.TextStats.bm25TopKFromIndex(

@@ -437,7 +437,7 @@ class SimilaritySpec extends SparkSpecBase {
           "e", "vec_id", query, k = 10, codebook, nprobe = 4)
         .collect().map(_.toSeq).toSeq
       val before = probe()
-      val stripesBefore = parquets(new java.io.File(dirFile, "cid=0")).size
+      val stripesBefore = parquets(new java.io.File(dirFile, "index_v1/cid=0")).size
       assert(stripesBefore >= 3, s"appends should stripe: $stripesBefore files")
 
       Similarity.compactIndex(spark, dir)
@@ -452,24 +452,25 @@ class SimilaritySpec extends SparkSpecBase {
           .collect().map(_.toSeq).toSeq
       }
       assert(probe() == fresh, "compacted probe diverged from fresh write")
-      // versioned layout: pointer + data dir, legacy flat files swept
-      assert(new java.io.File(dirFile, "_current_v1").exists())
-      val v1 = new java.io.File(dirFile, "index_v1")
-      assert(v1.isDirectory)
-      assert(!new java.io.File(dirFile, "cid=0").exists(),
-        "legacy flat partition dirs not reclaimed")
+      // versioned layout: pointer + data dir, the build's generation
+      // swept
+      assert(new java.io.File(dirFile, "_current_v2").exists())
+      val v2 = new java.io.File(dirFile, "index_v2")
+      assert(v2.isDirectory)
+      assert(!new java.io.File(dirFile, "index_v1").exists(),
+        "superseded generation not reclaimed")
       val perList = (0 until nClusters).map(c =>
-        parquets(new java.io.File(v1, s"cid=$c")).size)
+        parquets(new java.io.File(v2, s"cid=$c")).size)
       assert(perList.forall(_ == 1), s"files per list after compact: $perList")
       assert(!new java.io.File(dirFile, "_compact_inprogress").exists())
 
-      // second cycle rides the versioned dir: append stripes index_v1,
-      // compaction swaps to v2 and reclaims v1
+      // second cycle rides the versioned dir: append stripes index_v2,
+      // compaction swaps to v3 and reclaims v2
       Similarity.appendIndex(assigned.filter(col("vec_id") % 3 === 0), dir)
-      assert(parquets(new java.io.File(v1, "cid=0")).size >= 2)
+      assert(parquets(new java.io.File(v2, "cid=0")).size >= 2)
       Similarity.compactIndex(spark, dir)
-      assert(new java.io.File(dirFile, "_current_v2").exists())
-      assert(!new java.io.File(dirFile, "_current_v1").exists() && !v1.exists())
+      assert(new java.io.File(dirFile, "_current_v3").exists())
+      assert(!new java.io.File(dirFile, "_current_v2").exists() && !v2.exists())
       // the duplicate-append rows are all there (compaction never
       // dedups — id hygiene is the appender's contract, as documented)
       assert(Similarity.readIndex(spark, dir).count() == assigned.count() +

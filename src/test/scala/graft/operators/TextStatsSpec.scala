@@ -417,12 +417,12 @@ class TextStatsSpec extends SparkSpecBase {
         TextStats.readBm25Index(spark, dir.getAbsolutePath),
         queries, "text", "qid", k = 3))
       val before = probe()
-      val postingsDir = new java.io.File(dir, "postings")
+      val postingsDir = new java.io.File(dir, "bm25_v1/postings")
       val parquetsBefore = listFiles(postingsDir)
         .filter(_.getName.endsWith(".parquet"))
       val staleBefore = spark.read
-        .parquet(new java.io.File(dir, "postings").getAbsolutePath)
-        .join(spark.read.parquet(new java.io.File(dir, "df").getAbsolutePath)
+        .parquet(new java.io.File(dir, "bm25_v1/postings").getAbsolutePath)
+        .join(spark.read.parquet(new java.io.File(dir, "bm25_v1/df").getAbsolutePath)
           .filter(col("df") > 1).select("token"), Seq("token"), "left_semi")
         .count()
       assert(staleBefore > 0, "fixture regressed: no stale over-cap rows to compact")
@@ -430,7 +430,7 @@ class TextStatsSpec extends SparkSpecBase {
       // pre-compaction stats: stale rows visible, stripes > 1 in the
       // appended buckets — the cadence telemetry compaction acts on
       val statsBefore = TextStats.bm25IndexStats(spark, dir.getAbsolutePath)
-      assert(statsBefore.postingsDir.endsWith("/postings"))
+      assert(statsBefore.postingsDir.endsWith("/bm25_v1/postings"))
       assert(statsBefore.staleRows == staleBefore,
         s"stats staleRows ${statsBefore.staleRows} != direct count $staleBefore")
       assert(statsBefore.maxStripesPerBucket >= 2,
@@ -451,11 +451,11 @@ class TextStatsSpec extends SparkSpecBase {
           queries, "text", "qid", k = 3))
       }
       assert(after == fresh, s"compacted probe diverged from rebuild")
-      // the swap is versioned: the pointer names postings_v1, the old
-      // unversioned dir's bytes are reclaimed
+      // the swap is versioned: the pointer names bm25_v2, the build's
+      // generation and its bytes are reclaimed
       val stats = TextStats.bm25IndexStats(spark, dir.getAbsolutePath)
-      assert(stats.postingsDir.endsWith("/postings_v1"), stats.postingsDir)
-      assert(new java.io.File(dir, "_current_v1").exists())
+      assert(stats.postingsDir.endsWith("/bm25_v2/postings"), stats.postingsDir)
+      assert(new java.io.File(dir, "_current_v2").exists())
       assert(!postingsDir.exists(), "superseded postings/ dir not reclaimed")
       // the stale lists are physically gone and the stripes coalesced
       assert(stats.staleRows == 0, s"${stats.staleRows} stale rows survived")
@@ -465,11 +465,11 @@ class TextStatsSpec extends SparkSpecBase {
       assert(parquetsAfter.size < parquetsBefore.size,
         s"no coalescing: ${parquetsBefore.size} -> ${parquetsAfter.size}")
       // no markers left behind; the index is servable
-      assert(!new java.io.File(dir, "_append_incomplete").exists())
+      assert(!new java.io.File(dir, "bm25_v2/_append_incomplete").exists())
       assert(!new java.io.File(dir, "_compact_inprogress").exists())
 
       // a SECOND append+compact cycle rides the versioned dir: the
-      // append stripes postings_v1, the compaction swaps to v2. The
+      // append stripes bm25_v2, the compaction swaps to v3. The
       // append deliberately pushes EVERY remaining under-cap token
       // (grape, banana) over df 1, so this compaction's survivor set
       // is ZERO rows — the pathological case where a partitioned
@@ -481,19 +481,19 @@ class TextStatsSpec extends SparkSpecBase {
       TextStats.compactBm25Index(spark, dir.getAbsolutePath)
       assert(probe() == v2Before, "second-cycle compaction changed probes")
       val stats2 = TextStats.bm25IndexStats(spark, dir.getAbsolutePath)
-      assert(stats2.postingsDir.endsWith("/postings_v2"), stats2.postingsDir)
+      assert(stats2.postingsDir.endsWith("/bm25_v3/postings"), stats2.postingsDir)
       assert(stats2.rows == 0 && stats2.staleRows == 0,
         s"zero-survivor compaction should reclaim every posting row: $stats2")
-      assert(!new java.io.File(dir, "_current_v1").exists())
-      assert(!new java.io.File(dir, "postings_v1").exists())
+      assert(!new java.io.File(dir, "_current_v2").exists())
+      assert(!new java.io.File(dir, "bm25_v2").exists())
 
-      // a REBUILD resets to the unversioned layout and clears pointers
+      // a REBUILD is the next generation and clears the old pointers
       TextStats.writeBm25Index(corpus, "text", "doc_id",
         dir.getAbsolutePath, maxPostings = 1, tokenBuckets = 2)
       val statsR = TextStats.bm25IndexStats(spark, dir.getAbsolutePath)
-      assert(statsR.postingsDir.endsWith("/postings"), statsR.postingsDir)
-      assert(!new java.io.File(dir, "_current_v2").exists())
-      assert(!new java.io.File(dir, "postings_v2").exists())
+      assert(statsR.postingsDir.endsWith("/bm25_v4/postings"), statsR.postingsDir)
+      assert(!new java.io.File(dir, "_current_v3").exists())
+      assert(!new java.io.File(dir, "bm25_v3").exists())
       assert(probe() == fresh, "rebuild over a compacted root diverged")
     }
   }
@@ -659,30 +659,34 @@ class TextStatsSpec extends SparkSpecBase {
       // simulate a compaction killed at each step boundary, replaying
       // compactBm25Index's exact step order by hand (lock → new dir
       // write → pointer create → stale-pointer delete → old-dir
-      // delete) and asserting the read/probe path at every state
+      // delete) and asserting the read/probe path at every state; the
+      // build published bm25_v1, so the compaction writes bm25_v2
       // 1. lock created, nothing else: reads are NOT blocked (the
       //    lock is writer mutual exclusion only)
       assert(new java.io.File(dir, "_compact_inprogress").createNewFile())
       assert(probe() == expected, "state 1 (lock only) broke probes")
       // 2. new dir fully written, pointer NOT yet created: readers
       //    must still resolve the OLD dir (the new one is invisible)
-      copyDir(new java.io.File(dir, "postings"),
-        new java.io.File(dir, "postings_v1"))
+      copyDir(new java.io.File(dir, "bm25_v1"),
+        new java.io.File(dir, "bm25_v2"))
       assert(TextStats.bm25IndexStats(spark, path)
-        .postingsDir.endsWith("/postings"), "pointerless dir became visible")
+        .postingsDir.endsWith("/bm25_v1/postings"), "pointerless dir became visible")
       assert(probe() == expected, "state 2 (dir, no pointer) broke probes")
-      // 3. pointer created, old dir still present: readers resolve v1
-      assert(new java.io.File(dir, "_current_v1").createNewFile())
+      // 3. pointer created, old dir still present: readers resolve v2
+      assert(new java.io.File(dir, "_current_v2").createNewFile())
       assert(TextStats.bm25IndexStats(spark, path)
-        .postingsDir.endsWith("/postings_v1"), "pointer not honored")
+        .postingsDir.endsWith("/bm25_v2/postings"), "pointer not honored")
       assert(probe() == expected, "state 3 (pointer + old dir) broke probes")
-      // 4. old dir deleted (housekeeping), lock still behind: probes
-      //    fine; a rerun refuses LOUDLY while the stale lock exists
+      // 4. stale pointer deleted, then old dir deleted (housekeeping),
+      //    lock still behind: probes fine; a rerun refuses LOUDLY while
+      //    the stale lock exists
+      assert(new java.io.File(dir, "_current_v1").delete())
+      assert(probe() == expected, "state 4a (stale pointer gone) broke probes")
       def rmRf(f: java.io.File): Unit = {
         if (f.isDirectory) f.listFiles().foreach(rmRf)
         f.delete(); ()
       }
-      rmRf(new java.io.File(dir, "postings"))
+      rmRf(new java.io.File(dir, "bm25_v1"))
       assert(probe() == expected, "state 4 (old dir gone) broke probes")
       val refused = intercept[IllegalArgumentException] {
         TextStats.compactBm25Index(spark, path)
@@ -694,8 +698,9 @@ class TextStatsSpec extends SparkSpecBase {
       TextStats.compactBm25Index(spark, path)
       assert(probe() == expected, "post-recovery compaction broke probes")
       assert(TextStats.bm25IndexStats(spark, path)
-        .postingsDir.endsWith("/postings_v2"))
-      assert(!new java.io.File(dir, "_current_v1").exists())
+        .postingsDir.endsWith("/bm25_v3/postings"))
+      assert(!new java.io.File(dir, "_current_v2").exists())
+      assert(!new java.io.File(dir, "bm25_v2").exists())
       assert(!new java.io.File(dir, "_compact_inprogress").exists())
     }
   }

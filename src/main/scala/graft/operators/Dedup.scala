@@ -1710,13 +1710,11 @@ object Dedup {
     // metrics can be LOST in exactly one corner (HotKeys.cap's own
     // documented caveat): a ZERO-survivor write lets AQE's
     // empty-relation propagation prune the CollectMetrics node before
-    // anything is observed — and the only public Observation accessor
-    // blocks indefinitely. "No data file in the written dir" already
-    // PROVES kept == 0 with no waiting (FileFormatWriter only opens a
-    // file when a row arrives); when data exists the metrics node
-    // executed, and a bounded wait on a DEDICATED interruptible
-    // daemon thread (never the shared global pool — a wedged bus must
-    // not leak a permanently parked pool thread) guards the async
+    // anything is observed, and `Observation.get` blocks indefinitely.
+    // "No data file in the written dir" already PROVES kept == 0 with
+    // no waiting (FileFormatWriter only opens a file when a row
+    // arrives); when data exists the metrics node executed, and a
+    // bounded wait on the observation's future guards the async
     // listener-bus delivery, falling back to explicit recount jobs.
     val hasData = {
       val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), false)
@@ -1747,24 +1745,16 @@ object Dedup {
             s"or every '$hashCol' is null")
     }
     if (!hasData) refuse(!base.isEmpty)
-    val (ndocs, totalBands, droppedBands, keptRows) = {
-      val box = new java.util.concurrent.SynchronousQueue[Map[String, Any]]()
-      val waiter = new Thread(() => {
-        try box.put(ob.get)
-        catch { case _: InterruptedException => () }
-      }, "graft-hash-index-metrics-wait")
-      waiter.setDaemon(true)
-      waiter.start()
-      Option(box.poll(60L, java.util.concurrent.TimeUnit.SECONDS)) match {
-        case Some(m) =>
-          // every signature row (doc, or sampled frame in the
-          // positional layout) emits exactly 4 band rows pre-cap
-          (m("rows_total").asInstanceOf[Long] / 4,
-            m("bands_total").asInstanceOf[Long],
-            m("hot_keys_est").asInstanceOf[Long],
-            m("kept_rows").asInstanceOf[Long])
-        case None =>
-          waiter.interrupt() // unblocks ob.get — no leaked thread
+    val (ndocs, totalBands, droppedBands, keptRows) =
+      try {
+        val m = scala.concurrent.Await.result(ob.future,
+          scala.concurrent.duration.Duration(60, "s"))
+        // every signature row (doc, or sampled frame in the positional
+        // layout) emits exactly 4 band rows pre-cap
+        (m.getAs[Long]("rows_total") / 4, m.getAs[Long]("bands_total"),
+          m.getAs[Long]("hot_keys_est"), m.getAs[Long]("kept_rows"))
+      } catch {
+        case _: java.util.concurrent.TimeoutException =>
           val keyNames = posCols ++ Seq("_k", "_band")
           val nd = base.count()
           val tb = bands.select(keyNames.head, keyNames.tail: _*)
@@ -1774,7 +1764,6 @@ object Dedup {
             .distinct().count()
           (nd, tb, tb - kb, written.count())
       }
-    }
     // the writer CAN emit footer-only files for an all-dropped result
     // (observed: one empty part file), so "data file exists" does not
     // prove survivors — the explicit kept count does

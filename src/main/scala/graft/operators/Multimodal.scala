@@ -2,15 +2,18 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType,
+  IntegerType, LongType, StringType, StructField, StructType}
 
 /** Multimodal-column plumbing for a training-data pipeline: images /
   * audio / video ride as opaque `binary` columns with typed metadata;
-  * decode / feature-extraction runs as a `mapPartitions` pass so a
-  * decoder (and any native codec context behind it) is constructed
-  * ONCE PER TASK and reused across the partition's rows; the shuffle
-  * only ever moves the (small) features — never re-shuffles raw media
-  * bytes.
+  * every decode / feature-extraction pass runs through ONE decode core
+  * (`decodePass`: output-name refusal, BINARY check, one
+  * `mapPartitions` whose decoder — and any native codec context behind
+  * it — is constructed ONCE PER TASK and reused across the partition's
+  * rows, and the row append), so a pass is only its decoder and its
+  * per-payload values; the shuffle only ever moves the (small)
+  * features — never re-shuffles raw media bytes.
   *
   * Image decode is REAL (`ImageDecoder`, JDK `javax.imageio` —
   * PNG/JPEG/GIF/BMP need no external codecs; header-only reads, so
@@ -174,17 +177,9 @@ object Multimodal {
   /** Attach the perceptual hash to a binary image column — same
     * once-per-task mapPartitions contract as the other decoders. */
   def withPerceptualHash(df: DataFrame, binaryCol: String,
-      outCol: String = "phash")(implicit spark: SparkSession): DataFrame = {
-    require(!df.columns.contains(outCol),
-      s"input column $outCol collides with withPerceptualHash's output — " +
-        "pass a different outCol")
-    val idx = requireBinary(df, binaryCol)
-    val outSchema = df.schema.add(outCol, LongType, nullable = true)
-    df.mapPartitions { it =>
-      val hasher = new PerceptualHasher // once per partition — the contract
-      it.map(r => Row.fromSeq(r.toSeq :+ hasher.dhash64(binaryOf(r, idx))))
-    }(Encoders.row(outSchema))
-  }
+      outCol: String = "phash")(implicit spark: SparkSession): DataFrame =
+    decodePass("withPerceptualHash", df, binaryCol, fields(outCol -> LongType))(
+      () => new PerceptualHasher)((h, b) => one(h.dhash64(b)))
 
   /** REAL image resize (JDK ImageIO decode → Graphics2D bilinear
     * rescale → re-encode): the vision-pipeline normalization step —
@@ -230,21 +225,14 @@ object Multimodal {
     require(width >= 1 && height >= 1, s"target dims must be >= 1, got ${width}x$height")
     require(javax.imageio.ImageIO.getImageWritersByFormatName(format).hasNext,
       s"no ImageIO writer claims format '$format' — png/jpg/bmp/gif ship with the JDK")
-    val idx = requireBinary(df, binaryCol)
-    val outSchema = df.schema.add(outCol, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("bytes",
-        org.apache.spark.sql.types.BinaryType),
-      org.apache.spark.sql.types.StructField("width", IntegerType),
-      org.apache.spark.sql.types.StructField("height", IntegerType),
-      org.apache.spark.sql.types.StructField("ok",
-        org.apache.spark.sql.types.BooleanType))), nullable = false)
-    df.mapPartitions { it =>
-      val resizer = new ImageResizer(width, height, format) // once per task
-      it.map { r =>
-        val (bytes, ok) = resizer.resize(binaryOf(r, idx))
-        Row.fromSeq(r.toSeq :+ Row(bytes, width, height, ok))
-      }
-    }(Encoders.row(outSchema))
+    val out = StructField(outCol, StructType(fields("bytes" -> BinaryType,
+      "width" -> IntegerType, "height" -> IntegerType, "ok" -> BooleanType)),
+      nullable = false)
+    decodePass("withResizedImage", df, binaryCol, Seq(out))(
+      () => new ImageResizer(width, height, format)) { (rz, b) =>
+      val (bytes, ok) = rz.resize(b)
+      one(Row(bytes, width, height, ok))
+    }
   }
 
   final case class AudioMeta(
@@ -492,14 +480,8 @@ object Multimodal {
     * payload end, >= 2 pages and a non-negative final granule;
     * truncation or garbage after valid pages refuses, the MP3 rule. */
   final class OggMetaDecoder extends AudioMetaDecoder {
+    import LittleEndian.{u16, u32, u64}
     private val md = java.security.MessageDigest.getInstance("SHA-256")
-    private def le32(b: Array[Byte], o: Int): Long =
-      (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-        ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-    private def le64(b: Array[Byte], o: Int): Long =
-      le32(b, o) | (le32(b, o + 4) << 32)
-    private def le16(b: Array[Byte], o: Int): Int =
-      (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
 
     def decode(bytes: Array[Byte]): AudioMeta = {
       if (bytes == null || bytes.isEmpty)
@@ -528,8 +510,8 @@ object Multimodal {
             bytes(p + 3) != 'S' || bytes(p + 4) != 0) done = true
           else {
             val headerType = bytes(p + 5) & 0xff
-            val granule = le64(bytes, p + 6)
-            val serial = le32(bytes, p + 14)
+            val granule = u64(bytes, p + 6)
+            val serial = u32(bytes, p + 14)
             val nSegs = bytes(p + 26) & 0xff
             if (p + 27 + nSegs > bytes.length) done = true
             else {
@@ -548,12 +530,12 @@ object Multimodal {
                       new String(bytes, ds + 1, 6, "US-ASCII") == "vorbis") {
                       codec = "VORBIS"
                       ch = bytes(ds + 11) & 0xff
-                      sr = le32(bytes, ds + 12).toDouble
+                      sr = u32(bytes, ds + 12).toDouble
                     } else if (payLen >= 19 &&
                       new String(bytes, ds, 8, "US-ASCII") == "OpusHead") {
                       codec = "OPUS"
                       ch = bytes(ds + 9) & 0xff
-                      preSkip = le16(bytes, ds + 10).toLong
+                      preSkip = u16(bytes, ds + 10).toLong
                       sr = 48000.0 // granules are at 48 kHz, per RFC 7845
                     } else done = true // outside the honest codec subset
                   }
@@ -770,6 +752,16 @@ object Multimodal {
         off = boxEnd.toInt
       }
     }
+  }
+
+  /** Little-endian reads for the RIFF (AVI) and Ogg walks. */
+  private object LittleEndian {
+    def u16(b: Array[Byte], o: Int): Int =
+      (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
+    def u32(b: Array[Byte], o: Int): Long =
+      (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
+        ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
+    def u64(b: Array[Byte], o: Int): Long = u32(b, o) | (u32(b, o + 4) << 32)
   }
 
   final case class VideoMeta(
@@ -1075,18 +1067,10 @@ object Multimodal {
     * corpora. */
   def withVideoMeta(df: DataFrame, binaryCol: String, outCol: String = "video",
       decoderFactory: () => ContainerMetaDecoder = () => new VideoDecoder)(
-      implicit spark: SparkSession): DataFrame = {
-    val idx = requireBinary(df, binaryCol)
-    val outSchema = df.schema.add(outCol, Encoders.product[VideoMeta].schema)
-    df.mapPartitions { it =>
-      val decoder = decoderFactory() // once per partition — the contract
-      it.map { r =>
-        val m = decoder.decode(binaryOf(r, idx))
-        Row.fromSeq(r.toSeq :+ Row(m.width, m.height, m.durationMs, m.timescale,
-          m.videoTracks, m.audioTracks, m.brand, m.byteLen, m.digest, m.ok))
-      }
-    }(Encoders.row(outSchema))
-  }
+      implicit spark: SparkSession): DataFrame =
+    decodePass("withVideoMeta", df, binaryCol,
+      fields(outCol -> Encoders.product[VideoMeta].schema))(decoderFactory)(
+      (d, b) => one(Row.fromTuple(d.decode(b))))
 
   final case class KeyframeEntry(sampleNum: Int, offset: Long, size: Long)
   final case class TrackKeyframeIndex(
@@ -1216,64 +1200,44 @@ object Multimodal {
       withBytes: Boolean = false)(
       implicit spark: SparkSession): DataFrame = {
     require(nFrames > 0, s"nFrames must be positive, got $nFrames")
-    val idx = requireBinary(df, binaryCol)
-    val baseSchema = df.schema
-      .add("track_id", LongType).add("n_samples", IntegerType)
-      .add("n_keyframes", IntegerType).add("sample_n", IntegerType)
-      .add("byte_offset", LongType).add("byte_size", LongType)
-    val outSchema =
-      if (withBytes) baseSchema.add("frame_bytes", org.apache.spark.sql.types.BinaryType)
-      else baseSchema
-    df.mapPartitions { it =>
-      val indexer = new KeyframeIndexer // once per partition — the contract
-      it.flatMap { r =>
-        val b = binaryOf(r, idx)
-        if (b == null || b.isEmpty) Iterator.empty
-        else indexer.index(b).iterator.flatMap { t =>
-          val ks = t.keyframes
-          val picks =
-            if (ks.length <= nFrames) ks.indices
-            else (0 until nFrames).map(i => (i.toLong * ks.length / nFrames).toInt)
-          picks.iterator.map { i =>
-            val k = ks(i)
-            val base = r.toSeq :+ t.trackId :+ t.nSamples :+ t.nKeyframes :+
-              k.sampleNum :+ k.offset :+ k.size
-            if (!withBytes) Row.fromSeq(base)
-            else {
-              // a truncated file can index beyond the payload: null
-              // bytes rather than a slice of the wrong region. The
-              // subtraction form cannot overflow (a crafted co64
-              // offset near Long.MaxValue would wrap `offset + size`
-              // and sneak past an addition-form check)
-              val bytes =
-                if (k.offset >= 0 && k.size > 0 && k.size <= b.length &&
-                    k.offset <= b.length - k.size)
-                  java.util.Arrays.copyOfRange(b, k.offset.toInt, (k.offset + k.size).toInt)
-                else null
-              Row.fromSeq(base :+ bytes)
-            }
+    val out = fields("track_id" -> LongType, "n_samples" -> IntegerType,
+      "n_keyframes" -> IntegerType, "sample_n" -> IntegerType,
+      "byte_offset" -> LongType, "byte_size" -> LongType) ++
+      (if (withBytes) fields("frame_bytes" -> BinaryType) else Nil)
+    decodePass("sampleKeyframes", df, binaryCol, out)(() => new KeyframeIndexer) {
+      (indexer, b) => indexer.index(b).iterator.flatMap { t =>
+        val ks = t.keyframes
+        evenPick(ks.length, nFrames).iterator.map { i =>
+          val k = ks(i)
+          if (!withBytes)
+            (t.trackId, t.nSamples, t.nKeyframes, k.sampleNum, k.offset, k.size)
+          else {
+            // a truncated file can index beyond the payload: null
+            // bytes rather than a slice of the wrong region. The
+            // subtraction form cannot overflow (a crafted co64
+            // offset near Long.MaxValue would wrap `offset + size`
+            // and sneak past an addition-form check)
+            val bytes =
+              if (k.offset >= 0 && k.size > 0 && k.size <= b.length &&
+                  k.offset <= b.length - k.size)
+                java.util.Arrays.copyOfRange(b, k.offset.toInt, (k.offset + k.size).toInt)
+              else null
+            (t.trackId, t.nSamples, t.nKeyframes, k.sampleNum, k.offset, k.size,
+              bytes)
           }
         }
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   /** Attach parsed audio metadata to a binary column — the audio twin
     * of `withMediaMeta`, same once-per-task decoder lifecycle. */
   def withAudioMeta(df: DataFrame, binaryCol: String, outCol: String = "audio",
       decoderFactory: () => AudioMetaDecoder = () => new AudioDecoder)(
-      implicit spark: SparkSession): DataFrame = {
-    val idx = requireBinary(df, binaryCol)
-    val outSchema = df.schema.add(outCol, Encoders.product[AudioMeta].schema)
-    df.mapPartitions { it =>
-      val decoder = decoderFactory() // once per partition — the contract
-      it.map { r =>
-        val m = decoder.decode(binaryOf(r, idx))
-        Row.fromSeq(r.toSeq :+
-          Row(m.sampleRate, m.channels, m.frames, m.encoding, m.byteLen, m.digest, m.ok))
-      }
-    }(Encoders.row(outSchema))
-  }
+      implicit spark: SparkSession): DataFrame =
+    decodePass("withAudioMeta", df, binaryCol,
+      fields(outCol -> Encoders.product[AudioMeta].schema))(decoderFactory)(
+      (d, b) => one(Row.fromTuple(d.decode(b))))
 
   // ------------------------------------------------------------------
   // The PCM decode seam — the audio twin of `FrameDecoder`: every
@@ -1391,22 +1355,10 @@ object Multimodal {
     * -1 (stream-recorded CAF: "until EOF") resolves to the remaining
     * bytes, per the spec. */
   object CafPcmDecoder extends PcmDecoder {
-    private def u16(b: Array[Byte], o: Int): Int =
-      ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-    private def u32(b: Array[Byte], o: Int): Long =
-      ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-    private def s64(b: Array[Byte], o: Int): Long = {
-      var v = 0L
-      var i = 0
-      while (i < 8) { v = (v << 8) | (b(o + i) & 0xffL); i += 1 }
-      v
-    }
-    private def cc(b: Array[Byte], o: Int): String =
-      new String(b, o, 4, java.nio.charset.StandardCharsets.US_ASCII)
+    import Bmff.{fourcc, u16, u32, u64}
 
     def open(bytes: Array[Byte]): Option[OpenedPcm] = {
-      if (bytes == null || bytes.length < 12 || cc(bytes, 0) != "caff" ||
+      if (bytes == null || bytes.length < 12 || fourcc(bytes, 0) != "caff" ||
           u16(bytes, 4) != 1) return None
       try {
         var off = 8
@@ -1417,14 +1369,14 @@ object Multimodal {
         var dataOff = -1
         var dataLen = 0L
         while (off + 12 <= bytes.length && dataOff < 0) {
-          val ctype = cc(bytes, off)
-          val csize = s64(bytes, off + 4)
+          val ctype = fourcc(bytes, off)
+          val csize = u64(bytes, off + 4)
           val body = off + 12
           ctype match {
             case "desc" =>
               if (csize < 32 || body + 32 > bytes.length) return None
-              rate = java.lang.Double.longBitsToDouble(s64(bytes, body))
-              val formatId = cc(bytes, body + 8)
+              rate = java.lang.Double.longBitsToDouble(u64(bytes, body))
+              val formatId = fourcc(bytes, body + 8)
               val flags = u32(bytes, body + 12)
               val bytesPerPacket = u32(bytes, body + 16)
               val framesPerPacket = u32(bytes, body + 20)
@@ -1497,19 +1449,8 @@ object Multimodal {
       * WAV and a CAF (or, with a plugged codec, an MP3) of the same
       * samples fingerprint — and near-dup — identically. */
     def firstOf(decoders: PcmDecoder*): PcmDecoder = {
-      require(decoders.nonEmpty, "firstOf needs at least one decoder")
-      val ds = decoders.toIndexedSeq
-      new PcmDecoder {
-        def open(bytes: Array[Byte]): Option[OpenedPcm] = {
-          var i = 0
-          while (i < ds.length) {
-            val o = ds(i).open(bytes)
-            if (o.isDefined) return o
-            i += 1
-          }
-          None
-        }
-      }
+      val first = firstOpen(decoders)(_.open(_))
+      new PcmDecoder { def open(bytes: Array[Byte]): Option[OpenedPcm] = first(bytes) }
     }
   }
 
@@ -1591,16 +1532,10 @@ object Multimodal {
       decoder: PcmDecoder = JdkPcmDecoder)(
       implicit spark: SparkSession): DataFrame = {
     require(maxFrames >= 1, s"maxFrames must be >= 1, got $maxFrames")
-    val idx = requireBinary(df, binaryCol)
-    val outSchema = df.schema.add(outCol, Encoders.product[AudioFeatures].schema)
-    df.mapPartitions { it =>
-      val ex = new AudioFeatureExtractor(maxFrames, decoder) // once per task
-      it.map { r =>
-        val f = ex.extract(binaryOf(r, idx))
-        Row.fromSeq(r.toSeq :+
-          Row(f.rms, f.peak, f.zcr, f.durationSec, f.framesRead, f.ok))
-      }
-    }(Encoders.row(outSchema))
+    decodePass("withAudioFeatures", df, binaryCol,
+      fields(outCol -> Encoders.product[AudioFeatures].schema))(
+      () => new AudioFeatureExtractor(maxFrames, decoder))(
+      (ex, b) => one(Row.fromTuple(ex.extract(b))))
   }
 
   /** 64-bit deterministic audio fingerprint over REAL PCM decode —
@@ -1688,15 +1623,9 @@ object Multimodal {
       decoder: PcmDecoder = JdkPcmDecoder)(
       implicit spark: SparkSession): DataFrame = {
     require(maxFrames >= 65, s"maxFrames must be >= 65 (one frame per window), got $maxFrames")
-    require(!df.columns.contains(outCol),
-      s"input column $outCol collides with withAudioFingerprint's output — " +
-        "pass a different outCol")
-    val idx = requireBinary(df, binaryCol)
-    val outSchema = df.schema.add(outCol, LongType, nullable = true)
-    df.mapPartitions { it =>
-      val fp = new AudioFingerprinter(maxFrames, decoder) // once per partition — the contract
-      it.map(r => Row.fromSeq(r.toSeq :+ fp.fingerprint64(binaryOf(r, idx))))
-    }(Encoders.row(outSchema))
+    decodePass("withAudioFingerprint", df, binaryCol, fields(outCol -> LongType))(
+      () => new AudioFingerprinter(maxFrames, decoder))(
+      (fp, b) => one(fp.fingerprint64(b)))
   }
 
   /** Audio near-dup pairs, the audio twin of `imageNearDupPairs`:
@@ -1721,21 +1650,49 @@ object Multimodal {
       metricName = "graft_audio_band_cap")
   }
 
-  private def requireBinary(df: DataFrame, binaryCol: String): Int = {
+  /** The one decode pass under every per-payload operator in this
+    * file. In order: refuse an output name the input already has
+    * (naming `caller`), require `binaryCol` to be BINARY, append `out`
+    * to the input schema, and run one `mapPartitions` in which
+    * `newState` builds the task's decoder ONCE and `emit` turns each
+    * payload (null for a null cell) into zero or more value tuples,
+    * each appended to a copy of its input row. */
+  private def decodePass[S](caller: String, df: DataFrame, binaryCol: String,
+      out: Seq[StructField])(newState: () => S)(
+      emit: (S, Array[Byte]) => IterableOnce[Product]): DataFrame = {
+    val clash = out.map(_.name).filter(df.columns.contains)
+    require(clash.isEmpty, s"input columns ${clash.mkString(", ")} collide " +
+      s"with $caller's outputs (${out.map(_.name).mkString("/")})")
     val field = df.schema(binaryCol)
-    if (field.dataType != org.apache.spark.sql.types.BinaryType)
+    if (field.dataType != BinaryType)
       throw new IllegalArgumentException(
         s"column '$binaryCol' must be BINARY, found ${field.dataType.sql} — " +
           "decoding a non-binary column would fabricate plausible-looking metadata")
-    df.schema.fieldIndex(binaryCol)
+    val idx = df.schema.fieldIndex(binaryCol)
+    df.mapPartitions { it =>
+      val state = newState() // once per task — the contract
+      it.flatMap { r =>
+        val payload = r.get(idx) match {
+          case b: Array[Byte] => b
+          case null => null
+          case other => throw new IllegalArgumentException(
+            s"expected binary payload, found ${other.getClass.getName}")
+        }
+        emit(state, payload).iterator.map(vs =>
+          Row.fromSeq(r.toSeq ++ vs.productIterator))
+      }
+    }(Encoders.row(StructType(df.schema.fields ++ out)))
   }
 
-  private def binaryOf(r: Row, idx: Int): Array[Byte] = r.get(idx) match {
-    case b: Array[Byte] => b
-    case null => null
-    case other => throw new IllegalArgumentException(
-      s"expected binary payload, found ${other.getClass.getName}")
-  }
+  /** Nullable output fields, in order. */
+  private def fields(fs: (String, DataType)*): Seq[StructField] =
+    fs.map { case (n, t) => StructField(n, t) }
+
+  /** The single value tuple of a one-row-per-payload pass. */
+  private def one(v: Any): Iterator[Product] = Iterator.single(Tuple1(v))
+
+  private def sha256(): java.security.MessageDigest =
+    java.security.MessageDigest.getInstance("SHA-256")
 
   /** Attach decoded metadata to a binary column. Runs as a
     * per-partition map: `decoderFactory` is invoked once per task, so
@@ -1743,17 +1700,10 @@ object Multimodal {
     * not once per row. */
   def withMediaMeta(df: DataFrame, binaryCol: String, outCol: String = "media",
       decoderFactory: () => MediaDecoder = () => new StubDecoder)(
-      implicit spark: SparkSession): DataFrame = {
-    val idx = requireBinary(df, binaryCol)
-    val outSchema = df.schema.add(outCol, Encoders.product[MediaMeta].schema)
-    df.mapPartitions { it =>
-      val decoder = decoderFactory() // once per partition — the contract
-      it.map { r =>
-        val m = decoder.decode(binaryOf(r, idx))
-        Row.fromSeq(r.toSeq :+ Row(m.width, m.height, m.channels, m.byteLen, m.digest, m.ok))
-      }
-    }(Encoders.row(outSchema))
-  }
+      implicit spark: SparkSession): DataFrame =
+    decodePass("withMediaMeta", df, binaryCol,
+      fields(outCol -> Encoders.product[MediaMeta].schema))(decoderFactory)(
+      (d, b) => one(Row.fromTuple(d.decode(b))))
 
   /** Frame-sampling plumbing: one row per sampled frame index; the
     * stub emits `nFrames` evenly spaced indices with per-frame digests
@@ -1764,23 +1714,16 @@ object Multimodal {
   def sampleFrames(df: DataFrame, binaryCol: String, nFrames: Int)(
       implicit spark: SparkSession): DataFrame = {
     require(nFrames > 0, s"nFrames must be > 0, got $nFrames")
-    val idx = requireBinary(df, binaryCol)
-    val outSchema = df.schema
-      .add("frame_idx", IntegerType).add("frame_digest", StringType)
-    df.mapPartitions { it =>
-      val md = java.security.MessageDigest.getInstance("SHA-256") // per partition
-      it.flatMap { r =>
-        val b = binaryOf(r, idx)
+    decodePass("sampleFrames", df, binaryCol,
+      fields("frame_idx" -> IntegerType, "frame_digest" -> StringType))(sha256) {
+      (md, b) =>
         if (b == null || b.isEmpty) Iterator.empty
         else {
           md.reset()
           val d = md.digest(b)
-          (0 until nFrames).iterator.map { i =>
-            Row.fromSeq(r.toSeq :+ i :+ hex8(d.drop(i % 16)))
-          }
+          Iterator.tabulate(nFrames)(i => (i, hex8(d.drop(i % 16))))
         }
-      }
-    }(Encoders.row(outSchema))
+    }
   }
 
   /** REAL frame extraction for multi-frame containers the JDK can
@@ -1929,27 +1872,22 @@ object Multimodal {
     * this decoder's container subset, zero rows, never a task
     * failure. */
   object AviFrameDecoder extends FrameDecoder {
-    private def u32(b: Array[Byte], o: Int): Long =
-      (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-        ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-    private def u16(b: Array[Byte], o: Int): Int =
-      (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-    private def cc(b: Array[Byte], o: Int): String =
-      new String(b, o, 4, "US-ASCII")
+    import Bmff.fourcc
+    import LittleEndian.{u16, u32}
     private val MJPG = 0x47504A4DL // 'MJPG' read little-endian
 
     private final case class Vids(w: Int, h: Int, bpp: Int, comp: Long)
 
     def open(bytes: Array[Byte]): Option[OpenedFrames] = {
-      if (bytes == null || bytes.length < 12 || cc(bytes, 0) != "RIFF" ||
-        cc(bytes, 8) != "AVI ") return None
+      if (bytes == null || bytes.length < 12 || fourcc(bytes, 0) != "RIFF" ||
+        fourcc(bytes, 8) != "AVI ") return None
       var video: Option[Vids] = None
       var inVids = false
       val frames = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
       def walk(start: Int, end: Int, inMovi: Boolean): Unit = {
         var p = start
         while (p + 8 <= end) {
-          val id = cc(bytes, p)
+          val id = fourcc(bytes, p)
           val size = u32(bytes, p + 4).toInt
           // a corrupt size >= 2^31 reads as negative and would move
           // the walk BACKWARDS — an infinite loop hanging the task,
@@ -1958,12 +1896,12 @@ object Multimodal {
           val dataStart = p + 8
           val dataEnd = math.min(dataStart.toLong + size, end.toLong).toInt
           if (id == "LIST" && size >= 4)
-            walk(dataStart + 4, dataEnd, inMovi || cc(bytes, dataStart) == "movi")
+            walk(dataStart + 4, dataEnd, inMovi || fourcc(bytes, dataStart) == "movi")
           else if (inMovi && (id.endsWith("db") || id.endsWith("dc")))
             frames += ((dataStart, dataEnd - dataStart))
           else if (id == "strh" && size >= 4)
             // first vids stream wins; a later auds/vids strh resets
-            inVids = video.isEmpty && cc(bytes, dataStart) == "vids"
+            inVids = video.isEmpty && fourcc(bytes, dataStart) == "vids"
           else if (id == "strf" && inVids && size >= 40) {
             video = Some(Vids(u32(bytes, dataStart + 4).toInt,
               u32(bytes, dataStart + 8).toInt,
@@ -2586,113 +2524,81 @@ object Multimodal {
     * other, which is exactly what a dedup tier should say. */
   object FrameDecoders {
     def firstOf(decoders: FrameDecoder*): FrameDecoder = {
-      require(decoders.nonEmpty, "firstOf needs at least one decoder")
-      val ds = decoders.toIndexedSeq
-      new FrameDecoder {
-        def open(bytes: Array[Byte]): Option[OpenedFrames] = {
-          var i = 0
-          while (i < ds.length) {
-            val r = ds(i).open(bytes)
-            if (r.isDefined) return r
-            i += 1
-          }
-          None
-        }
-      }
+      val first = firstOpen(decoders)(_.open(_))
+      new FrameDecoder { def open(bytes: Array[Byte]): Option[OpenedFrames] = first(bytes) }
     }
   }
 
+  /** The first-match loop of both `firstOf` combinators: the first
+    * decoder whose `open` accepts the payload wins. */
+  private def firstOpen[D, O](decoders: Seq[D])(
+      open: (D, Array[Byte]) => Option[O]): Array[Byte] => Option[O] = {
+    require(decoders.nonEmpty, "firstOf needs at least one decoder")
+    val ds = decoders.toIndexedSeq
+    bytes => ds.iterator.map(open(_, bytes)).find(_.isDefined).flatten
+  }
+
   /** Shared multi-frame walk over the decode seam: open the
-    * container, pick up to `nFrames` evenly spaced frame indices,
-    * and emit `extract(samplePos, frameIdx, nTotal, compositedFrame)`
-    * at each — frame selection and compositing live HERE, once, so
-    * `sampleFramesDecoded` (per-frame digests/features) and
-    * `gifFrameHashes` (per-frame dHash — the near-dup tier) can
-    * never drift apart, and a plugged-in decoder inherits the exact
-    * sampling the GIF tier's oracles pin. Malformed payloads (open
-    * returns None or any decode throws) yield an empty Vector —
-    * never a task failure. */
+    * container, pick up to `nFrames` evenly spaced frames from the
+    * pick plan, and emit `extract(samplePos, frameIdx, nPlan,
+    * compositedFrame)` at each — frame selection and compositing live
+    * HERE, once, so `sampleFramesDecoded` (per-frame digests/features)
+    * and both frame samplers (per-frame dHash — the near-dup tiers)
+    * can never drift apart, and a plugged-in decoder inherits the
+    * exact sampling the GIF tier's oracles pin. The plan is every
+    * frame, or with `keyframes` the sync samples of the container's
+    * first indexed video track (`n` is then the track's keyframe
+    * count; no BMFF keyframe index falls back to every frame). Sync
+    * samples arrive ascending, so the decoder's forward-only
+    * `frameAt` contract holds; indexed samples past the decoder's
+    * frame count (truncation dropped them) are skipped rather than
+    * guessed. Malformed payloads (open returns None or any decode
+    * throws) yield an empty Vector — never a task failure. */
   private def foldFrames[T](b: Array[Byte], nFrames: Int,
-      decoder: FrameDecoder)(
+      decoder: FrameDecoder, keyframes: Option[KeyframeIndexer] = None)(
       extract: (Int, Int, Int, java.awt.image.BufferedImage) => T): Vector[T] = {
     if (b == null || b.isEmpty) return Vector.empty
     try {
+      val syncs = keyframes.flatMap(_.index(b).headOption)
+        .map(_.keyframes.map(_.sampleNum - 1))
       decoder.open(b) match {
         case None => Vector.empty
         case Some(of) =>
           try {
             val n = of.frameCount
-            val pickSeq =
-              (if (n <= nFrames) 0 until n
-               // Long math: i * n overflows Int for large requests
-               else (0 until nFrames).map(i => (i.toLong * n / nFrames).toInt))
-                .toVector
-            pickSeq.zipWithIndex.map { case (fi, pos) =>
-              extract(pos, fi, n, of.frameAt(fi))
-            }
+            val plan = syncs.fold[IndexedSeq[Int]](0 until n)(
+              _.filter(fi => fi >= 0 && fi < n))
+            evenPick(plan.length, nFrames).iterator.zipWithIndex.map {
+              case (i, pos) => extract(pos, plan(i), plan.length, of.frameAt(plan(i)))
+            }.toVector
           } finally of.close()
       }
     } catch { case scala.util.control.NonFatal(_) => Vector.empty }
   }
 
-  /** `foldFrames` with the sampling plan taken from the container's
-    * sync-sample table (first indexed video track): up to `nFrames`
-    * evenly spaced KEYFRAMES decode, `pos` is the keyframe ordinal
-    * and `n` the track's keyframe count. No BMFF keyframe index →
-    * uniform fallback (identical to `foldFrames`). Sync samples
-    * arrive ascending, so the decoder's forward-only `frameAt`
-    * contract holds; indexed samples past the decoder's frame count
-    * (truncation dropped them) are skipped rather than guessed. */
-  private def foldKeyframes[T](b: Array[Byte], nFrames: Int,
-      decoder: FrameDecoder, indexer: KeyframeIndexer)(
-      extract: (Int, Int, Int, java.awt.image.BufferedImage) => T): Vector[T] = {
-    if (b == null || b.isEmpty) return Vector.empty
-    indexer.index(b).headOption match {
-      case None => foldFrames(b, nFrames, decoder)(extract)
-      case Some(track) =>
-        try {
-          decoder.open(b) match {
-            case None => Vector.empty
-            case Some(of) =>
-              try {
-                val ks = track.keyframes.map(_.sampleNum - 1)
-                  .filter(fi => fi >= 0 && fi < of.frameCount)
-                val picks =
-                  if (ks.length <= nFrames) ks
-                  else (0 until nFrames).map(i =>
-                    ks((i.toLong * ks.length / nFrames).toInt)).toVector
-                picks.zipWithIndex.map { case (fi, pos) =>
-                  extract(pos, fi, ks.length, of.frameAt(fi))
-                }
-              } finally of.close()
-          }
-        } catch { case scala.util.control.NonFatal(_) => Vector.empty }
-    }
-  }
+  /** Up to `k` evenly spaced indices into `0 until n` (all of them
+    * when `n <= k`); Long math, since `i * n` overflows Int for large
+    * requests. */
+  private def evenPick(n: Int, k: Int): IndexedSeq[Int] =
+    if (n <= k) 0 until n else (0 until k).map(i => (i.toLong * n / k).toInt)
 
   def sampleFramesDecoded(df: DataFrame, binaryCol: String, nFrames: Int,
       decoder: FrameDecoder = GifFrameDecoder)(
       implicit spark: SparkSession): DataFrame = {
     require(nFrames > 0, s"nFrames must be > 0, got $nFrames")
-    val idx = requireBinary(df, binaryCol)
-    val outSchema = df.schema
-      .add("frame_idx", IntegerType).add("n_frames", IntegerType)
-      .add("frame_width", IntegerType).add("frame_height", IntegerType)
-      .add("frame_digest", StringType)
-    df.mapPartitions { it =>
-      val md = java.security.MessageDigest.getInstance("SHA-256")
-      it.flatMap { r =>
-        foldFrames(binaryOf(r, idx), nFrames, decoder) { (_, fi, n, canvas) =>
-          val (w, h) = (canvas.getWidth, canvas.getHeight)
-          val px = canvas.getRGB(0, 0, w, h, null, 0, w)
-          val bb = java.nio.ByteBuffer.allocate(px.length * 4)
-          bb.asIntBuffer().put(px)
-          md.reset()
-          val dg = hex8(md.digest(bb.array()))
-          Row.fromSeq(r.toSeq :+ fi :+ n :+ w :+ h :+ dg)
-        }
+    decodePass("sampleFramesDecoded", df, binaryCol,
+      fields("frame_idx" -> IntegerType, "n_frames" -> IntegerType,
+        "frame_width" -> IntegerType, "frame_height" -> IntegerType,
+        "frame_digest" -> StringType))(sha256) { (md, b) =>
+      foldFrames(b, nFrames, decoder) { (_, fi, n, canvas) =>
+        val (w, h) = (canvas.getWidth, canvas.getHeight)
+        val px = canvas.getRGB(0, 0, w, h, null, 0, w)
+        val bb = java.nio.ByteBuffer.allocate(px.length * 4)
+        bb.asIntBuffer().put(px)
+        md.reset()
+        (fi, n, w, h, hex8(md.digest(bb.array())))
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   // ------------------------------------------------------------------
@@ -2824,28 +2730,17 @@ object Multimodal {
 
   /** The one per-frame hash body of both frame samplers. */
   private def frameHashes(df: DataFrame, binaryCol: String, outCol: String,
-      s: FrameSampler)(implicit spark: SparkSession): DataFrame = {
-    require(!df.columns.exists(c => Set("sample_pos", "frame_idx",
-        "n_frames", outCol).contains(c)),
-      s"input columns collide with the frame hashes' outputs " +
-        s"(sample_pos/frame_idx/n_frames/$outCol)")
-    val idx = requireBinary(df, binaryCol)
-    val outSchema = df.schema
-      .add("sample_pos", IntegerType).add("frame_idx", IntegerType)
-      .add("n_frames", IntegerType).add(outCol, LongType)
-    df.mapPartitions { it =>
-      val hasher = new PerceptualHasher
-      val indexer = new KeyframeIndexer // once per partition
-      it.flatMap { r =>
-        val b = binaryOf(r, idx)
-        val emit = (pos: Int, fi: Int, n: Int,
-            canvas: java.awt.image.BufferedImage) =>
-          Row.fromSeq(r.toSeq :+ pos :+ fi :+ n :+ hasher.dhashOfImage(canvas))
-        if (s.keyframes) foldKeyframes(b, s.nFrames, s.decoder, indexer)(emit)
-        else foldFrames(b, s.nFrames, s.decoder)(emit)
-      }
-    }(Encoders.row(outSchema))
-  }
+      s: FrameSampler)(implicit spark: SparkSession): DataFrame =
+    decodePass(if (s.keyframes) "videoFrameHashes" else "gifFrameHashes", df,
+      binaryCol, fields("sample_pos" -> IntegerType, "frame_idx" -> IntegerType,
+        "n_frames" -> IntegerType, outCol -> LongType))(
+      () => (new PerceptualHasher,
+        if (s.keyframes) Some(new KeyframeIndexer) else None)) {
+      case ((hasher, keyframes), b) =>
+        foldFrames(b, s.nFrames, s.decoder, keyframes) { (pos, fi, n, canvas) =>
+          (pos, fi, n, hasher.dhashOfImage(canvas))
+        }
+    }
 
   /** Animation-level near-dup pairs over sampled-frame dHashes — the
     * video-like modality joining the image/audio signature tiers:
@@ -3429,35 +3324,24 @@ object Multimodal {
   def withPcmUndecodable(df: DataFrame, binaryCol: String,
       outCol: String = "pcm_undecodable",
       decoder: PcmDecoder = JdkPcmDecoder)(
-      implicit spark: SparkSession): DataFrame = {
-    require(!df.columns.contains(outCol),
-      s"input column $outCol collides with withPcmUndecodable's output")
-    val idx = requireBinary(df, binaryCol)
-    val outSchema = df.schema.add(outCol, BooleanType)
-    df.mapPartitions { it =>
-      val meta = new AutoAudioMetaDecoder
-      it.map { r =>
-        val b = binaryOf(r, idx)
-        val flag =
-          if (b == null || b.isEmpty) false
-          else {
-            val metaOk =
-              try meta.decode(b).ok
-              catch { case scala.util.control.NonFatal(_) => false }
-            metaOk && {
-              val opened =
-                try decoder.open(b)
-                catch { case scala.util.control.NonFatal(_) => None }
-              opened match {
-                case Some(pcm) => pcm.close(); false
-                case None => true
-              }
-            }
+      implicit spark: SparkSession): DataFrame =
+    decodePass("withPcmUndecodable", df, binaryCol, fields(outCol -> BooleanType))(
+      () => new AutoAudioMetaDecoder) { (meta, b) =>
+      one(b != null && b.nonEmpty && {
+        val metaOk =
+          try meta.decode(b).ok
+          catch { case scala.util.control.NonFatal(_) => false }
+        metaOk && {
+          val opened =
+            try decoder.open(b)
+            catch { case scala.util.control.NonFatal(_) => None }
+          opened match {
+            case Some(pcm) => pcm.close(); false
+            case None => true
           }
-        Row.fromSeq(r.toSeq :+ flag)
-      }
-    }(Encoders.row(outSchema))
-  }
+        }
+      })
+    }
 
   /** One row per audio SEGMENT: (`sample_pos`, `n_segments`, `outCol`
     * = the segment's 64-bit envelope fingerprint), in the exact shape
@@ -3473,22 +3357,13 @@ object Multimodal {
       .hashes(df, binaryCol, outCol)
 
   private def segmentHashes(df: DataFrame, binaryCol: String, outCol: String,
-      s: AudioSegments)(implicit spark: SparkSession): DataFrame = {
-    require(!df.columns.exists(c =>
-        Set("sample_pos", "n_segments", outCol).contains(c)),
-      s"input columns collide with audioSegmentHashes' outputs " +
-        s"(sample_pos/n_segments/$outCol)")
-    val idx = requireBinary(df, binaryCol)
-    val outSchema = df.schema
-      .add("sample_pos", IntegerType).add("n_segments", IntegerType)
-      .add(outCol, LongType)
-    df.mapPartitions { it =>
-      it.flatMap { r =>
-        val hs = s.fingerprinter.segmentHashes(binaryOf(r, idx))
-        hs.indices.map(i => Row.fromSeq(r.toSeq :+ i :+ hs.length :+ hs(i)))
-      }
-    }(Encoders.row(outSchema))
-  }
+      s: AudioSegments)(implicit spark: SparkSession): DataFrame =
+    decodePass("audioSegmentHashes", df, binaryCol,
+      fields("sample_pos" -> IntegerType, "n_segments" -> IntegerType,
+        outCol -> LongType))(() => s.fingerprinter) { (fp, b) =>
+      val hs = fp.segmentHashes(b)
+      hs.indices.iterator.map(i => (i, hs.length, hs(i)))
+    }
 
   /** Clip-level near-dup pairs over segment fingerprints — the
     * positional pair search (`gifNearDupPairs`' semantics) over

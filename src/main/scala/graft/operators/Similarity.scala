@@ -253,13 +253,18 @@ object Similarity {
     }
   }
 
-  /** Exact-cosine top-k of `rows` against the query column `q`. */
+  /** Exact-cosine top-k of `rows` against the query column `q`. A NaN
+    * score folds to null in the projection, and nulls sort last, so
+    * dropping them after the limit keeps the same rows; a NaN filter
+    * below the limit would be pushed into the scan or join and run
+    * the cosine a second time per row. */
   private def exactTopK(rows: DataFrame, embCol: String, idCol: String,
       q: Column, k: Int): DataFrame =
-    rows.select(col(idCol), round(cosine(asDouble(col(embCol)), q), 4).as("cos"))
-      .filter(!isnan(col("cos")))
+    rows.select(col(idCol), nanvl(round(cosine(asDouble(col(embCol)), q), 4),
+        lit(null).cast("double")).as("cos"))
       .orderBy(desc("cos"), col(idCol))
       .limit(k)
+      .filter(col("cos").isNotNull)
 
   /** Per-query exact-cosine top-k of (`_qid`, `_qe`)-carrying rows. */
   private def exactTopKAll(rows: DataFrame, embCol: String, idCol: String,

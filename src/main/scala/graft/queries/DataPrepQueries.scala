@@ -4577,28 +4577,20 @@ object DataPrepQueries {
           .toFile.getAbsolutePath
         val path = s"$dir0/idx"
         val freshPath = s"$dir0/fresh"
-        // the grown chain (build → delete → rebuild) and the fresh
-        // reference build target DISJOINT roots and share no artifact
-        // state — run them concurrently (guide §2.6, Actions): each
-        // chain's inter-action driver gaps overlap the other's
-        // executor work. Same artifacts, same probe results.
-        graft.operators.Actions.inParallel(
-          () => {
-            graft.operators.Dedup.writeHashBandIndex(
-              standing, "ph", "doc_id", path)
-            graft.operators.Dedup.deleteFromHashBandIndex(s, path,
-              standing.filter(col("doc_id") % 50 < 5).select("doc_id"),
-              "doc_id")
-            // grow from the ARTIFACT's own rows (tombstones applied) +
-            // the new batch — no external signature frame
-            graft.operators.Dedup.rebuildHashBandIndex(s, path,
-              growth, "ph", "doc_id")
-          },
-          // the reference: a fresh build over (standing minus deleted) ∪ growth
-          () => graft.operators.Dedup.writeHashBandIndex(
-            standing.filter(col("doc_id") % 50 >= 5).unionByName(growth),
-            "ph", "doc_id", freshPath,
-            metricName = "graft_hash_index_write_cap_fresh"))
+        graft.operators.Dedup.writeHashBandIndex(
+          standing, "ph", "doc_id", path)
+        graft.operators.Dedup.deleteFromHashBandIndex(s, path,
+          standing.filter(col("doc_id") % 50 < 5).select("doc_id"),
+          "doc_id")
+        // grow from the ARTIFACT's own rows (tombstones applied) +
+        // the new batch — no external signature frame
+        graft.operators.Dedup.rebuildHashBandIndex(s, path,
+          growth, "ph", "doc_id")
+        // the reference: a fresh build over (standing minus deleted) ∪ growth
+        graft.operators.Dedup.writeHashBandIndex(
+          standing.filter(col("doc_id") % 50 >= 5).unionByName(growth),
+          "ph", "doc_id", freshPath,
+          metricName = "graft_hash_index_write_cap_fresh")
         val batch = graft.operators.Multimodal.withPerceptualHash(
           imgs.filter(!standingPred && !growPred), "img", "ph")
         def probe(p: String, stage: String) = graft.operators.Dedup

@@ -530,6 +530,38 @@ class MultimodalSpec extends SparkSpecBase {
     assert(e.getMessage.contains("must be BINARY"))
   }
 
+  test("every decode pass refuses an output name its input already has") {
+    import spark.implicits._
+    val docs = Seq((1L, Array[Byte](1, 2, 3))).toDF("id", "blob")
+    // (caller named in the refusal, an output name it appends, the pass)
+    val passes = Seq[(String, String, org.apache.spark.sql.DataFrame => Any)](
+      ("withPerceptualHash", "phash", Multimodal.withPerceptualHash(_, "blob")),
+      ("withResizedImage", "resized", Multimodal.withResizedImage(_, "blob", 8, 4)),
+      ("withVideoMeta", "video", Multimodal.withVideoMeta(_, "blob")),
+      ("sampleKeyframes", "byte_offset", Multimodal.sampleKeyframes(_, "blob", 2)),
+      ("withAudioMeta", "audio", Multimodal.withAudioMeta(_, "blob")),
+      ("withAudioFeatures", "audio_features",
+        Multimodal.withAudioFeatures(_, "blob")),
+      ("withAudioFingerprint", "audio_fp",
+        Multimodal.withAudioFingerprint(_, "blob")),
+      ("withMediaMeta", "media", Multimodal.withMediaMeta(_, "blob")),
+      ("sampleFrames", "frame_idx", Multimodal.sampleFrames(_, "blob", 2)),
+      ("sampleFrames", "frame_digest", Multimodal.sampleFrames(_, "blob", 2)),
+      ("sampleFramesDecoded", "frame_width",
+        Multimodal.sampleFramesDecoded(_, "blob", 2)),
+      ("gifFrameHashes", "frame_ph", Multimodal.gifFrameHashes(_, "blob")),
+      ("videoFrameHashes", "sample_pos", Multimodal.videoFrameHashes(_, "blob")),
+      ("withPcmUndecodable", "pcm_undecodable",
+        Multimodal.withPcmUndecodable(_, "blob")),
+      ("audioSegmentHashes", "n_segments",
+        Multimodal.audioSegmentHashes(_, "blob")))
+    for ((caller, taken, pass) <- passes) {
+      val e = intercept[IllegalArgumentException](pass(docs.withColumn(taken, lit(0))))
+      assert(e.getMessage.contains(caller) && e.getMessage.contains(taken),
+        s"$caller on an input holding '$taken': ${e.getMessage}")
+    }
+  }
+
   test("media meta fields are appended with the decode results") {
     import spark.implicits._
     val docs = Seq((1L, "hello world"), (2L, null.asInstanceOf[String]))

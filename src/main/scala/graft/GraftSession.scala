@@ -35,8 +35,6 @@ object GraftSession {
     * cap: r17 A/B-verified wins) against accidental reverts without
     * constructing a second session in the test JVM. */
   def configs(cpus: String): Seq[(String, String)] = Seq(
-    "spark.graft.versionIntervalJoin.enabled" ->
-      sys.env.getOrElse("GRAFT_VIJ_ENABLED", "true"),
     "spark.sql.shuffle.partitions" -> cpus,
     // r17 (guide §1/§7.3): driver thread dumps during the multi-job
     // facade queries showed Janino whole-stage-codegen COMPILATION
@@ -44,10 +42,9 @@ object GraftSession {
     // entries, JVM-global LRU) cannot hold one facade query's worth
     // of distinct generated sources, so every re-run recompiles.
     // 10k entries holds the whole suite; the knob is scale-neutral
-    // (executors carry the same cache) and env-overridable for A/B.
+    // (executors carry the same cache).
     // A/B evidence: 0.72x on the 10 heavies (OPTIMIZATION_r17.md).
-    "spark.sql.codegen.cache.maxEntries" ->
-      sys.env.getOrElse("GRAFT_CODEGEN_CACHE", "10000"),
+    "spark.sql.codegen.cache.maxEntries" -> "10000",
     // r17 (guide §7.3): driver samples during the facade queries
     // caught plan-STRINGIFICATION (PlanStringConcat/TreeNode.nodeName)
     // between jobs — SQL listener events carry a full plan
@@ -55,9 +52,9 @@ object GraftSession {
     // one per re-planned stage. Cap the string; the cap only
     // truncates diagnostics (explain/UI and event logs — engine-wide,
     // documented in README §perf knobs), never affects results.
-    // PlanCheck raises it per-session for full plan dumps.
-    "spark.sql.maxPlanStringLength" ->
-      sys.env.getOrElse("GRAFT_MAX_PLAN_STR", "16384"),
+    // It is a runtime conf: PlanCheck raises it per-session for full
+    // plan dumps.
+    "spark.sql.maxPlanStringLength" -> "16384",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false",
     "spark.sql.adaptive.enabled" -> "true",

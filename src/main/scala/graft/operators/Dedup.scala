@@ -1519,13 +1519,14 @@ object Dedup {
     * `_h`), capped per band all-or-nothing exactly like
     * `hashBandIndex` (an over-cap band drops WHOLE, with observed
     * drop counts — the id column does not change which bands
-    * survive), plus a `_meta/` row (ndocs / band counts / cap) for
-    * `hashBandIndexStats`, derived from observed metrics riding the
-    * data write — the whole build is ONE Spark action plus the
-    * one-row meta write. The artifact is signature-sized — at most
-    * 4 rows × (id + 8 bytes) per indexed doc — never pixel/sample/
-    * text-sized, the same reason the fingerprints were cheap to
-    * shuffle in the first place. `outFiles` bounds the data-file
+    * survive), plus the generation's one-row build record
+    * `bands_vN/_meta` (ndocs / band counts / cap / layout) that stats,
+    * deletes, growth and positional reads check against, derived from
+    * observed metrics riding the data write — the whole build is ONE
+    * Spark action plus the record write. The artifact is
+    * signature-sized — at most 4 rows × (id + 8 bytes) per indexed
+    * doc — never pixel/sample/text-sized, the same reason the
+    * fingerprints were cheap to shuffle in the first place. `outFiles` bounds the data-file
     * count (default 4 — the artifact is bands-keyed and bounded, and
     * a probe's read re-collects the WHOLE frame, so file count is
     * pure open-cost; `hashBandIndexStats.files` vs
@@ -1542,14 +1543,13 @@ object Dedup {
     * the same versioned rewrite as growth and compaction, from an
     * empty base: the new `bands_vN` is written beside the served
     * version, which keeps serving until the pointer swap — so a job
-    * that fails mid-rebuild leaves the old index serving. The old
-    * `_meta` goes once the band job has succeeded, just before the
-    * swap; the swap then clears the old versions, pointers and
-    * tombstones (deleted ids become re-addable; a crash before that
-    * clear leaves them pending until a rerun), and the new `_meta`
-    * lands after it. Probes never read `_meta`, so losing it in a
-    * crash costs stats accuracy, never probe correctness (stats,
-    * deletes and growth refuse loudly until a rerun). A live (or
+    * that fails mid-rebuild leaves the old index serving. Each
+    * generation holds its own record: `_meta` is written inside
+    * `bands_vN` before the pointer, so the pointer publishes data and
+    * record together and no crash leaves a served generation without
+    * one. The swap then clears the old versions (records included),
+    * pointers and tombstones (deleted ids become re-addable; a crash
+    * before that clear leaves them pending until a rerun). A live (or
     * crashed) compaction holds the rewrite lock, so the rebuild is
     * refused before any filesystem change; clearing a stale lock by
     * hand is the documented recovery.
@@ -1588,7 +1588,7 @@ object Dedup {
     * (idCol, posCols..., `_h`) — so the POSITIONAL layout (the
     * `Multimodal` sampler tiers, which key bands by sampled
     * position as well) runs the exact same cap / versioned-rewrite /
-    * pointer / meta machinery as the classic
+    * pointer / record machinery as the classic
     * single-hash family: `posCols` is empty for the classic layout
     * and `Seq("sample_pos")` for the positional one. Everything
     * downstream of the frame prep is shared — the two layouts cannot
@@ -1599,6 +1599,7 @@ object Dedup {
       outFiles: Int, sampleCap: Long = -1L): Unit = {
     requireIdCol(idCol)
     require(outFiles >= 1, s"outFiles must be >= 1, got $outFiles")
+    requireCap(maxBucket)
     val spark = base.sparkSession
     val fs = StandingIndex.fs(spark, path)
     // a rewrite from an empty base (see writeHashBandIndex); the
@@ -1606,37 +1607,50 @@ object Dedup {
     // survives untouched (the root itself is never read as parquet —
     // only bands_vN is — so a surviving stranger is inert)
     StandingIndex.rewrite(fs, path, StandingIndex.HashBand) { (dir, _) =>
-      val stats = writeBandsVersion(spark, fs, base, idCol, posCols,
-        hashColName, path, dir, maxBucket, metricName, outFiles)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/_meta"), true)
-      Some(stats)
-    }.foreach { case (ndocs, totalBands, droppedBands) =>
-      writeHashIndexMeta(spark, path, ndocs, totalBands, droppedBands,
-        maxBucket, idCol, posCols.headOption.getOrElse(""), sampleCap,
-        hashColName)
+      Some(writeBandsVersion(spark, fs, base, idCol, posCols, hashColName,
+        path, dir, maxBucket, metricName, outFiles, sampleCap))
     }
+    ()
   }
 
-  /** `pos_col`/`sample_cap` record the positional layout's shape
-    * ("" / -1 for the classic family): the growth rebuild validates
-    * against them so a positional index cannot silently be grown
-    * with a different frame-sampling width than it was built with
-    * (mixed sampling would make probe positions mean different
-    * things for old and new animations). */
-  private def writeHashIndexMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, ndocs: Long, totalBands: Long, droppedBands: Long,
-      maxBucket: Int, idCol: String, posCol: String,
-      sampleCap: Long, hashCol: String): Unit = {
+  /** A cap below one drops every band (each holds at least one row):
+    * refused on the driver, before the lock and before any job. */
+  private def requireCap(maxBucket: Int): Unit =
+    require(maxBucket >= 1, s"maxBucket must be >= 1, got $maxBucket " +
+      "(every band holds at least one row, so the cap would drop them all)")
+
+  /** A generation's build record, one row at `bands_vN/_meta` under the
+    * on-disk column names. `pos_col`/`sample_cap` record the
+    * positional layout's shape ("" / -1 for the classic family) so
+    * growth and positional reads refuse a different sampling width;
+    * `hash_col` is the SOURCE column the signatures were computed from
+    * (fleet-report legibility, never a probe semantic). */
+  private[operators] final case class HashIndexMeta(ndocs: Long,
+      total_bands: Long, cap_dropped_bands: Long, max_bucket: Long,
+      id_col: String, pos_col: String, sample_cap: Long, hash_col: String)
+
+  /** The record of the served generation `gen`, the one reader of
+    * `_meta`. */
+  private def readMeta(spark: org.apache.spark.sql.SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, path: String,
+      gen: String): HashIndexMeta = {
     import spark.implicits._
-    // hash_col is the SOURCE column the signatures were computed
-    // from (a text column's SimHash, an image column's dHash, a gif
-    // or audio column's positional hashes) — pure fleet-report
-    // legibility, never a probe semantic
-    Seq((ndocs, totalBands, droppedBands, maxBucket.toLong, idCol, posCol,
-        sampleCap, hashCol))
-      .toDF("ndocs", "total_bands", "cap_dropped_bands", "max_bucket",
-        "id_col", "pos_col", "sample_cap", "hash_col")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_meta")
+    spark.read.parquet(metaDir(fs, path, gen)).as[HashIndexMeta].head()
+  }
+
+  /** `gen`'s record dir. A generation without one — a root written
+    * before each generation held its own record — still serves classic
+    * probes; everything that needs the record (stats, deletes, growth,
+    * positional reads, compaction's copy) refuses here, naming the
+    * rebuild. */
+  private def metaDir(fs: org.apache.hadoop.fs.FileSystem, path: String,
+      gen: String): String = {
+    val dir = s"$gen/_meta"
+    require(fs.exists(new org.apache.hadoop.fs.Path(dir)),
+      s"index at $path has no _meta record in its served generation " +
+        s"$gen — stats, deletes, growth and positional reads need it; " +
+        "rebuild with writeHashBandIndex (or the tier's Multimodal write)")
+    dir
   }
 
   /** Shared VERSIONED band write — the core of both
@@ -1646,9 +1660,10 @@ object Dedup {
     * exact statistics cannot drift between the two paths. Explodes
     * the (idCol, `_h`) frame into four 16-bit band rows, caps bands
     * all-or-nothing (HotKeys.cap's window shape via HotKeys.counted,
-    * minPerKey = 1), writes the version dir `dir`, and returns exact
-    * (ndocs, totalBands, capDroppedBands) — statistics ride the
-    * write as observed metrics (the whole call is ONE Spark action).
+    * minPerKey = 1), writes the version dir `dir`, and records its
+    * exact (ndocs, totalBands, capDroppedBands) in `dir/_meta` — the
+    * statistics ride the write as observed metrics (the band write is
+    * ONE Spark action).
     * Exactness device: observe forbids distinct aggregates, so a
     * row_number over the same band partition marks exactly ONE row
     * per band and integer sums of the marker count bands EXACTLY —
@@ -1662,7 +1677,8 @@ object Dedup {
   private def writeBandsVersion(spark: org.apache.spark.sql.SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, base: DataFrame, idCol: String,
       posCols: Seq[String], hashCol: String, path: String, dir: String,
-      maxBucket: Int, metricName: String, outFiles: Int): (Long, Long, Long) = {
+      maxBucket: Int, metricName: String, outFiles: Int,
+      sampleCap: Long): Unit = {
     // PERSIST the signature frame for the duration of the write: it is
     // signature-sized (~16 bytes per doc/frame) so the cache is cheap,
     // and it keeps the DEGRADED paths artifact-sized — the
@@ -1716,16 +1732,7 @@ object Dedup {
     // arrives); when data exists the metrics node executed, and a
     // bounded wait on the observation's future guards the async
     // listener-bus delivery, falling back to explicit recount jobs.
-    val hasData = {
-      val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), false)
-      var found = false
-      while (!found && it.hasNext) {
-        val st = it.next()
-        val n = st.getPath.getName
-        if (st.isFile && !n.startsWith("_") && !n.startsWith(".")) found = true
-      }
-      found
-    }
+    val hasData = StandingIndex.dataFiles(fs, dir)._1 > 0
     def refuse(hadInput: Boolean): Nothing = {
       fs.delete(new org.apache.hadoop.fs.Path(dir), true)
       if (hadInput)
@@ -1768,7 +1775,10 @@ object Dedup {
     // (observed: one empty part file), so "data file exists" does not
     // prove survivors — the explicit kept count does
     if (keptRows == 0L) refuse(ndocs > 0L)
-    (ndocs, totalBands, droppedBands)
+    import spark.implicits._
+    Seq(HashIndexMeta(ndocs, totalBands, droppedBands, maxBucket, idCol,
+        posCols.headOption.getOrElse(""), sampleCap, hashCol)).toDF()
+      .coalesce(1).write.parquet(s"$dir/_meta")
     } finally { base.unpersist(); () }
   }
 
@@ -1785,7 +1795,9 @@ object Dedup {
     * in-memory form could not delete). Tombstones are read EAGERLY
     * (StandingIndex.localTombstones); the DATA files carry the reader
     * exposure stated on StandingIndex.rewrite — re-call
-    * readHashBandIndex and the plan resolves the new version.
+    * readHashBandIndex and the plan resolves the new version. A
+    * classic read never opens the generation's `_meta` record, so a
+    * root whose generation has none still serves probes.
     *
     * Cap honesty (the df-gate analog): a band cap-dropped at BUILD
     * does not resurrect on delete, even if the deletions brought its
@@ -1806,15 +1818,13 @@ object Dedup {
       path: String): DataFrame =
     readHashBandIndexFrame(spark, path, Nil)
 
-  /** The served version's rows, refused unless the artifact's layout
-    * is `posCols`' — SCHEMA-DERIVED, not meta-derived, so the check
-    * holds in the crash-after-pointer no-meta state too. A mix-up
-    * would silently merge candidate lists across positions (or probe
-    * a phantom position key). */
-  private def currentBands(spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String,
-      posCols: Seq[String]): DataFrame = {
-    val data = spark.read.parquet(currentHashIndexDir(fs, path))
+  /** Generation `gen`'s rows, refused unless the artifact's layout
+    * is `posCols`' — SCHEMA-DERIVED, not record-derived, so a classic
+    * read needs no `_meta`. A mix-up would silently merge candidate
+    * lists across positions (or probe a phantom position key). */
+  private def bandsOf(spark: org.apache.spark.sql.SparkSession,
+      path: String, gen: String, posCols: Seq[String]): DataFrame = {
+    val data = spark.read.parquet(gen)
     val missing = posCols.filterNot(data.columns.contains)
     require(missing.isEmpty,
       s"index at $path does not carry position column(s) " +
@@ -1832,35 +1842,26 @@ object Dedup {
 
   /** Family-shared read core: resolve the version, apply tombstones,
     * re-collect candidate lists keyed by (posCols..., `_k`, `_band`).
-    * The family check is SCHEMA-DERIVED, not meta-derived — probes
-    * must keep working in the crash-after-pointer no-meta state, so
-    * the artifact's own columns decide: a positional artifact read
-    * through the classic entry point (or vice versa) is refused
-    * loudly instead of silently merging candidate lists across frame
-    * positions. */
+    * The family check is schema-derived (see `bandsOf`): a positional
+    * artifact read through the classic entry point (or vice versa) is
+    * refused loudly instead of silently merging candidate lists
+    * across frame positions. */
   private[operators] def readHashBandIndexFrame(
       spark: org.apache.spark.sql.SparkSession,
       path: String, posCols: Seq[String],
       expectSampleCap: Option[Long] = None): DataFrame = {
     val fs = StandingIndex.fs(spark, path)
-    val data = currentBands(spark, fs, path, posCols)
+    val gen = currentHashIndexDir(fs, path)
+    val data = bandsOf(spark, path, gen, posCols)
     // sampling-width guard (positional family): a probe built at a
     // different nFrames than the index would compare DIFFERENT frames
-    // per position — silent mixed sampling. Validated against
-    // _meta.sample_cap WHEN meta exists; in the crash-after-pointer
-    // no-meta state the check is skipped (probes must keep serving —
-    // the same reason the family checks above are schema-derived).
+    // per position — silent mixed sampling
     expectSampleCap.foreach { want =>
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/_meta"))) {
-        val m = spark.read.parquet(s"$path/_meta")
-        if (m.columns.contains("sample_cap")) {
-          val built = m.select("sample_cap").collect()(0).getLong(0)
-          require(built == want,
-            s"index at $path was built with sample width $built (nFrames); " +
-              s"this read expects $want — probe with the build's width, or " +
-              "rebuild the index at the new width")
-        }
-      }
+      val built = readMeta(spark, fs, path, gen).sample_cap
+      require(built == want,
+        s"index at $path was built with sample width $built (nFrames); " +
+          s"this read expects $want — probe with the build's width, or " +
+          "rebuild the index at the new width")
     }
     val live = StandingIndex.withoutTombstones(data,
       StandingIndex.tombstoneFiles(fs, path))
@@ -1884,26 +1885,18 @@ object Dedup {
     * whole candidate lists, so that mix-up is refused here. */
   def deleteFromHashBandIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, ids: DataFrame, idCol: String): Unit = {
-    require(!Set("_k", "_band", "_h", "_hs", "sample_pos").contains(idCol),
-      s"idCol '$idCol' names an internal band/hash/position column — " +
-        "tombstoning by band, hash or frame position would silently " +
-        "delete every doc sharing it; pass the indexed ID column")
+    // tombstoning by band, hash or frame position would silently
+    // delete every doc sharing it
+    requireIdCol(idCol)
     // refuse a wrong id column BEFORE the first tombstone lands (the
     // BM25 sibling's id_col check): the tombstone-column consistency
     // guard below only fires once tombstones exist, so an unchecked
     // first delete with a mistyped column would persist a tombstone
     // frame every later read's anti-join dies on — a poisoned index
-    // over a refusable request. A MISSING _meta (a rebuild crashed
-    // after the pointer landed but before the meta write — probes
-    // still work) is refused with the repair path named rather than a
-    // raw path-not-found from the parquet reader.
+    // over a refusable request
     val fs = StandingIndex.fs(spark, path)
-    require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/_meta")),
-      s"index at $path has no _meta (a rebuild crashed after publishing " +
-        "the version pointer?) — probes still serve, but deletes/stats " +
-        "need the build-time id_col record; rerun writeHashBandIndex")
-    val builtWith = spark.read.parquet(s"$path/_meta")
-      .select("id_col").collect()(0).getString(0)
+    val builtWith =
+      readMeta(spark, fs, path, currentHashIndexDir(fs, path)).id_col
     require(builtWith == idCol,
       s"index at $path was built with idCol '$builtWith', got '$idCol'")
     StandingIndex.refuseIfCompacting(fs, path)
@@ -1921,7 +1914,9 @@ object Dedup {
     * deletes only shrink lists, and cap-dropped bands stay dropped
     * (see `readHashBandIndex`'s honesty contract) — so a
     * post-compaction probe is bit-identical to a pre-compaction probe
-    * over the same tombstones. `outFiles` bounds the rewrite's file
+    * over the same tombstones — and the new generation carries the
+    * served one's `_meta` record over unchanged, so stats keep reporting
+    * the build's counts. `outFiles` bounds the rewrite's file
     * count to the write-side default, so `IndexMaintenance`'s stripe
     * signal CLEARS after a compaction instead of re-firing forever.
     * An index whose EVERY row is deleted skips the rewrite (the
@@ -1938,12 +1933,17 @@ object Dedup {
         "writeHashBandIndex (the layout is versioned from birth); " +
         "rebuild with writeHashBandIndex")
     StandingIndex.rewrite(fs, path, StandingIndex.HashBand) { (dir, tombSnapshot) =>
+      val gen = currentHashIndexDir(fs, path)
+      val meta = metaDir(fs, path, gen)
       val data = StandingIndex.withoutTombstones(
-        spark.read.parquet(currentHashIndexDir(fs, path)), tombSnapshot)
+        spark.read.parquet(gen), tombSnapshot)
       if (data.isEmpty) None
       else {
         data.repartition(outFiles, col("_k"), col("_band"))
           .write.mode("overwrite").parquet(dir)
+        org.apache.hadoop.fs.FileUtil.copy(fs,
+          new org.apache.hadoop.fs.Path(meta), fs,
+          new org.apache.hadoop.fs.Path(s"$dir/_meta"), false, fs.getConf)
         Some(())
       }
     }
@@ -1988,17 +1988,19 @@ object Dedup {
     * source — keeps serving, and the atomic pointer create is the
     * swap (the compaction device, under the same
     * `_compact_inprogress` lock, so deletes/compactions/rebuilds
-    * mutually refuse). A crash at ANY boundary leaves a complete
-    * servable index; rerun with the same batch. A grown frame whose
-    * every band would be cap-dropped is refused with the OLD version
-    * untouched.
+    * mutually refuse). The grown generation's `_meta` record is
+    * written inside it before the pointer, so a crash at ANY boundary
+    * leaves a complete servable index whose record describes it;
+    * rerun with the same batch. A grown frame whose every band would
+    * be cap-dropped is refused with the OLD version untouched.
     *
     * The union deduplicates on (id, `_h`): re-submitting an
     * already-indexed doc with the same hash is a no-op; the same id
     * with a DIFFERENT hash keeps both rows (this index has no
     * id-uniqueness invariant — delete first to re-hash a doc).
     * `maxBucket` defaults to the index's own build-time cap (from
-    * `_meta`). */
+    * the served generation's `_meta`); an explicit one below 1 is
+    * refused before anything is read. */
   def rebuildHashBandIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, newDocs: DataFrame, hashCol: String, idCol: String,
       maxBucket: Option[Int] = None,
@@ -2029,59 +2031,39 @@ object Dedup {
       maxBucket: Option[Int],
       metricName: String, outFiles: Int,
       hashColName: String = "_h", sampleCap: Long = -1L): Unit = {
+    maxBucket.foreach(requireCap)
     val fs = StandingIndex.fs(spark, path)
-    require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/_meta")),
-      s"index at $path has no _meta (a rebuild crashed after publishing " +
-        "the version pointer?) — the growth rebuild needs the build-time " +
-        "id_col/cap record; rerun writeHashBandIndex over the full frame")
-    // pos_col/sample_cap default to the classic values when the meta
-    // predates them (a pre-r15 artifact) — growth on an old CLASSIC
-    // index keeps working; an old artifact can only be classic, so
-    // the defaults are the truth, not a guess
-    val metaDf = spark.read.parquet(s"$path/_meta")
-    val meta = metaDf.select(col("id_col"), col("max_bucket"),
-        if (metaDf.columns.contains("pos_col")) col("pos_col")
-        else lit("").as("pos_col"),
-        if (metaDf.columns.contains("sample_cap")) col("sample_cap")
-        else lit(-1L).as("sample_cap"))
-      .collect()(0)
-    require(meta.getString(0) == idCol,
-      s"index at $path was built with idCol '${meta.getString(0)}', got '$idCol'")
-    require(meta.getString(2) == posCols.headOption.getOrElse(""),
+    val meta = readMeta(spark, fs, path, currentHashIndexDir(fs, path))
+    val posCol = posCols.headOption.getOrElse("")
+    require(meta.id_col == idCol,
+      s"index at $path was built with idCol '${meta.id_col}', got '$idCol'")
+    require(meta.pos_col == posCol,
       s"index at $path was built with position column " +
-        s"'${meta.getString(2)}' — this growth call expects " +
-        s"'${posCols.headOption.getOrElse("")}' (classic and positional " +
-        "indexes grow through their own entry points)")
+        s"'${meta.pos_col}' — this growth call expects '$posCol' (classic " +
+        "and positional indexes grow through their own entry points)")
     // a positional index must grow with the SAME frame-sampling width
     // it was built with: a wider/narrower nFrames would make probe
     // positions mean different things for old vs new animations —
     // silent mixed sampling, refused here from the build-time record
-    require(meta.getLong(3) == sampleCap,
-      s"index at $path was built with sample width ${meta.getLong(3)} " +
+    require(meta.sample_cap == sampleCap,
+      s"index at $path was built with sample width ${meta.sample_cap} " +
         s"(nFrames); this growth call uses $sampleCap — grow with the " +
         "build's width, or rebuild from scratch at the new width")
-    val cap = maxBucket.getOrElse(meta.getLong(1).toInt)
+    val cap = maxBucket.getOrElse(meta.max_bucket.toInt)
     // the compaction-shaped NON-DESTRUCTIVE rewrite (see the scaladoc
     // on rebuildHashBandIndex)
-    val stats = StandingIndex.rewrite(fs, path, StandingIndex.HashBand) {
+    StandingIndex.rewrite(fs, path, StandingIndex.HashBand) {
         (dir, tombSnapshot) =>
-      val data = currentBands(spark, fs, path, posCols)
+      val data = bandsOf(spark, path, currentHashIndexDir(fs, path), posCols)
       val sigCols = Seq(col(idCol)) ++ posCols.map(col) :+ col("_h")
       val unioned = StandingIndex.withoutTombstones(data, tombSnapshot)
         .select(sigCols: _*)
         .unionByName(newSig.select(sigCols: _*))
         .distinct()
       Some(writeBandsVersion(spark, fs, unioned, idCol, posCols, hashColName,
-        path, dir, cap, metricName, outFiles))
+        path, dir, cap, metricName, outFiles, sampleCap))
     }
-    // meta describes the grown index and lands after the swap; a crash
-    // in between leaves the OLD meta serving stale counts (probes
-    // unaffected — they never read meta) until a rerun refreshes it
-    stats.foreach { case (ndocs, totalBands, droppedBands) =>
-      writeHashIndexMeta(spark, path, ndocs, totalBands, droppedBands,
-        cap, idCol, posCols.headOption.getOrElse(""), sampleCap,
-        hashColName)
-    }
+    ()
   }
 
   /** Lifecycle telemetry for a persisted hash-band index, from the
@@ -2089,11 +2071,12 @@ object Dedup {
     * (`TextStats.bm25IndexStats` / `Similarity.indexStats`), so ONE
     * compaction-cadence policy can feed on all three families:
     * `rows` counts ON-DISK rows, servable = rows − tombstonedRows.
-    * `capDroppedBands`/`maxBucket`/`ndocs` come from build-time
-    * `_meta` — capDroppedBands is the standing recall audit
-    * `readHashBandIndex`'s cap-honesty contract points at. Cost: one
-    * filesystem walk + one artifact read; the media/corpus is never
-    * touched. */
+    * `capDroppedBands`/`maxBucket`/`ndocs`/`posCol`/`hashCol` come
+    * from the served generation's `_meta` record (a compaction carries
+    * its build's record over) — capDroppedBands is the standing recall
+    * audit `readHashBandIndex`'s cap-honesty contract points at. Cost:
+    * one filesystem walk + one artifact read; the media/corpus is
+    * never touched. */
   final case class HashBandIndexStats(indexDir: String, bands: Long,
       rows: Long, files: Long, bytes: Long,
       tombstonedIds: Long, tombstonedRows: Long,
@@ -2103,43 +2086,22 @@ object Dedup {
   def hashBandIndexStats(spark: org.apache.spark.sql.SparkSession,
       path: String): HashBandIndexStats = {
     val fs = StandingIndex.fs(spark, path)
-    // same guard and repair path as deleteFromHashBandIndex: in the
-    // crash-after-pointer state (rebuild died between the version
-    // pointer and the meta write) probes still serve, but a raw
-    // parquet path-not-found here would kill a health sweep opaquely
-    // on the one crashed index — refuse with the recovery named
-    require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/_meta")),
-      s"index at $path has no _meta (a rebuild crashed after publishing " +
-        "the version pointer?) — probes still serve, but stats need the " +
-        "build-time record; rerun writeHashBandIndex")
     val dir = currentHashIndexDir(fs, path)
+    val meta = readMeta(spark, fs, path, dir)
     val (files, bytes, _) = StandingIndex.dataFiles(fs, dir)
     val data = spark.read.parquet(dir)
-    // schema-derived band key: the positional (GIF) layout keys bands
-    // by sampled frame position too — counting (_k, _band) alone
-    // there would under-report bands to the health policy
-    val bandKeyCols =
-      (if (data.columns.contains("sample_pos")) Seq(col("sample_pos"))
-       else Nil) ++ Seq(col("_k"), col("_band"))
+    // the positional layout keys bands by sampled position too —
+    // counting (_k, _band) alone there would under-report bands to
+    // the health policy
+    val bandKeyCols = (Seq(meta.pos_col).filter(_.nonEmpty) ++
+      Seq("_k", "_band")).map(col)
     val agg0 = data.agg(count(lit(1)).as("n"),
       count_distinct(bandKeyCols.head, bandKeyCols.tail: _*).as("b"))
       .collect()(0)
     val (tombIds, tombRows) = StandingIndex.tombstoneCounts(data,
       StandingIndex.tombstoneFiles(fs, path))
-    // pos_col rides along so fleet reports (healthSweep's `layout`
-    // column) can tell a positional (GIF) index from a classic one
-    // without a second _meta read; a pre-positional meta (no pos_col
-    // column) is a classic index by construction
-    val metaDf = spark.read.parquet(s"$path/_meta")
-    val meta = metaDf.select(col("cap_dropped_bands"), col("max_bucket"),
-        col("ndocs"),
-        (if (metaDf.columns.contains("pos_col")) col("pos_col")
-         else lit("")).as("pos_col"),
-        (if (metaDf.columns.contains("hash_col")) col("hash_col")
-         else lit("")).as("hash_col"))
-      .collect()(0)
     HashBandIndexStats(dir, agg0.getLong(1), agg0.getLong(0), files, bytes,
-      tombIds, tombRows, meta.getLong(0), meta.getLong(1), meta.getLong(2),
-      meta.getString(3), meta.getString(4))
+      tombIds, tombRows, meta.cap_dropped_bands, meta.max_bucket,
+      meta.ndocs, meta.pos_col, meta.hash_col)
   }
 }

@@ -101,17 +101,17 @@ object IndexMaintenance {
     * what the policy said, or why the index could not be read.
     * `layout` refines the family where a family has more than one
     * on-disk layout: the hash-band family reports `classic` vs
-    * `positional` (the GIF index — `_meta.pos_col`, already in the
-    * stats read, zero extra IO), so a fleet report over mixed roots
-    * can tell which indexes hold animations without opening each
-    * `_meta`; single-layout families (bm25, ivf) repeat the family
-    * name, unreadable/unknown roots report `unknown`. `signal` is
-    * the SOURCE column the index's signatures were computed from
-    * (`_meta.hash_col`, already in the hash-band stats read — zero
-    * extra IO), so a mixed fleet can tell the text SimHash index
-    * from the image dHash one from the gif/audio positional ones by
-    * column name; families that don't record it (bm25, ivf,
-    * pre-r16 hash-band artifacts) report empty. */
+    * `positional` (the GIF index — the served generation's
+    * `bands_vN/_meta.pos_col`, already in the stats read, zero extra
+    * IO), so a fleet report over mixed roots can tell which indexes
+    * hold animations without opening each record; single-layout
+    * families (bm25, ivf) repeat the family name, unreadable/unknown
+    * roots report `unknown`. `signal` is the SOURCE column the
+    * index's signatures were computed from (`_meta.hash_col`, already
+    * in the hash-band stats read — zero extra IO), so a mixed fleet
+    * can tell the text SimHash index from the image dHash one from
+    * the gif/audio positional ones by column name; families that
+    * don't record it (bm25, ivf) report empty. */
   final case class SweepRow(path: String, family: String, layout: String,
       signal: String, compact: Boolean, reasons: Seq[String],
       error: Option[String])
@@ -121,9 +121,10 @@ object IndexMaintenance {
     * on-disk layout) through stats → healthOf → logHealth and return
     * the advice as a small DataFrame — (path, family, compact,
     * reasons, error). Per-path failures become ERROR ROWS instead of
-    * killing the sweep (the crash-after-pointer hash-band state, for
-    * example, reports its named repair path here while the other
-    * indexes still get their verdicts), and an unrecognized layout
+    * killing the sweep (a hash-band root whose served generation has
+    * no `_meta` record, for example, reports its named repair path
+    * here while the other indexes still get their verdicts), and an
+    * unrecognized layout
     * reports `unknown` rather than guessing. Driver-side arithmetic
     * over one stats call per index; the corpora are never touched. */
   def healthSweep(spark: org.apache.spark.sql.SparkSession,

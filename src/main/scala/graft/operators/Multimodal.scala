@@ -641,23 +641,10 @@ object Multimodal {
     * FLAC, then OGG, then the MP3 frame walk — each sniff exact, same
     * shape as `AutoVideoDecoder`. */
   final class AutoAudioMetaDecoder extends AudioMetaDecoder {
-    private val jdk = new AudioDecoder
-    private val flac = new FlacMetaDecoder
-    private val ogg = new OggMetaDecoder
-    private val mp3 = new Mp3MetaDecoder
-    def decode(bytes: Array[Byte]): AudioMeta = {
-      val a = jdk.decode(bytes)
-      if (a.ok) a else {
-        val f = flac.decode(bytes)
-        if (f.ok) f else {
-          val o = ogg.decode(bytes)
-          if (o.ok) o else {
-            val m = mp3.decode(bytes)
-            if (m.ok) m else a
-          }
-        }
-      }
-    }
+    private val chain = Seq(new AudioDecoder, new FlacMetaDecoder,
+      new OggMetaDecoder, new Mp3MetaDecoder)
+    def decode(bytes: Array[Byte]): AudioMeta =
+      firstOk(chain)(_.decode(bytes))(_.ok)
   }
 
   /** Deterministic silent-MP3 test vector: `nFrames` MPEG1 Layer III
@@ -1048,15 +1035,9 @@ object Multimodal {
     * `firstOf` device for the metadata tier (each decoder's sniff is
     * cheap and exact, so order is taste). */
   final class AutoVideoDecoder extends ContainerMetaDecoder {
-    private val bmff = new VideoDecoder
-    private val ebml = new EbmlVideoDecoder
-    def decode(bytes: Array[Byte]): VideoMeta = {
-      val m = bmff.decode(bytes)
-      if (m.ok) m else {
-        val e = ebml.decode(bytes)
-        if (e.ok) e else m
-      }
-    }
+    private val chain = Seq(new VideoDecoder, new EbmlVideoDecoder)
+    def decode(bytes: Array[Byte]): VideoMeta =
+      firstOk(chain)(_.decode(bytes))(_.ok)
   }
 
   /** Attach parsed video-container metadata to a binary column —
@@ -2538,6 +2519,16 @@ object Multimodal {
     bytes => ds.iterator.map(open(_, bytes)).find(_.isDefined).flatten
   }
 
+  /** The chain of the metadata `Auto*` decoders: the first decoder
+    * whose result is `ok` wins (later decoders never run), else the
+    * FIRST decoder's result — its diagnosis is the one reported. */
+  private def firstOk[D, R](decoders: Seq[D])(decode: D => R)(
+      ok: R => Boolean): R = {
+    val results = decoders.iterator.map(decode)
+    val first = results.next()
+    if (ok(first)) first else results.find(ok).getOrElse(first)
+  }
+
   /** Shared multi-frame walk over the decode seam: open the
     * container, pick up to `nFrames` evenly spaced frames from the
     * pick plan, and emit `extract(samplePos, frameIdx, nPlan,
@@ -2617,7 +2608,7 @@ object Multimodal {
     * payload rows into one row per sampled position (`hashes`, with
     * the document's own position `count`) and names its WIDTH: the
     * parameter two sides must share for positions to mean the same
-    * thing. An index records its width (`_meta.sample_cap` on disk,
+    * thing. An index records its width (`bands_vN/_meta.sample_cap` on disk,
     * `_hs` column metadata in memory), and every probe, read and
     * growth refuses a mismatch; `widthWord` names it in those
     * refusals. `cap` is the argument (name, value) bounding how many
@@ -3095,16 +3086,17 @@ object Multimodal {
   /** Persist the positional GIF hash-band index WITH document ids —
     * `Dedup.writeHashBandIndex`'s exact contract (versioned from
     * birth, name-scoped reset, all-or-nothing band caps with observed
-    * drop counts, one Spark action, `_meta` for stats) over per-frame
+    * drop counts, one Spark action, each generation's `_meta` record
+    * inside its `bands_vN`) over per-frame
     * signatures keyed by sampled position: one row per (band slot
     * `_k`, band value `_band`, `sample_pos`, `idCol`, frame hash
     * `_h`), capped per (position, slot, value). The standing corpus'
     * animations decode exactly once, here; every later probe, delete,
     * compaction and growth rebuild works from the artifact's longs.
-    * `_meta.ndocs` counts SIGNATURE ROWS — sampled frames, not
+    * The record's `ndocs` counts SIGNATURE ROWS — sampled frames, not
     * animations (the cap/band economy this family's health policy
-    * reasons about is frame-level); `_meta.sample_cap` records the
-    * width.
+    * reasons about is frame-level); its `sample_cap` records the
+    * width, and `pos_col` the position key.
     *
     * Deletes, compaction, stats and the health sweep are the CLASSIC
     * family's entry points, unchanged — the layout is the same
@@ -3163,10 +3155,10 @@ object Multimodal {
     * silently probed with a phantom position key.
     *
     * `nFrames` is the width the PROBE will sample at: it is validated
-    * against the index's build-time `_meta.sample_cap` record,
+    * against the served generation's `_meta.sample_cap` record,
     * because a probe at a different width would compare DIFFERENT
-    * frames per position. In the crash-after-pointer no-meta state
-    * the check is skipped (probes must keep serving); the default
+    * frames per position. The check always runs: a generation without
+    * its record refuses the read (rebuild the index); the default
     * matches the build default. The validated width ALSO rides the
     * returned frame as `_hs` column metadata, so the probe re-checks
     * it against its own `nFrames`. */
@@ -3182,13 +3174,14 @@ object Multimodal {
   /** GROW a persisted positional GIF index — the classic family's
     * `rebuildHashBandIndex` with the new batch's animations decoded
     * to per-frame signatures first (`nFrames` must match the build's:
-    * `_meta.sample_cap` refuses a mismatch, since the artifact cannot
+    * the served generation's `_meta.sample_cap` refuses a mismatch,
+    * since the artifact cannot
     * re-sample old animations). The surviving signature frame
     * reconstructs from the artifact's own (id, sample_pos, `_h`) rows
     * minus pending tombstones, unions the new frames, and re-runs the
     * capped versioned write under the shared rewrite lock — the
     * standing corpus is never re-decoded, and a crash at any boundary
-    * leaves a complete servable index. */
+    * leaves a complete servable index holding its grown record. */
   def rebuildGifHashBandIndex(spark: SparkSession, path: String,
       newGifs: DataFrame, gifCol: String, idCol: String, nFrames: Int = 4,
       maxBucket: Option[Int] = None,
@@ -3444,10 +3437,11 @@ object Multimodal {
     * layout and lifecycle (deletes/compaction/stats/health are the
     * classic entry points; `IndexMaintenance.healthSweep` reports it
     * as `hashband`/`positional`): one row per (`_k`, `_band`,
-    * `sample_pos`, id, segment hash `_h`). `_meta.sample_cap` records
-    * `segmentFrames`, so a GIF positional artifact (sample_cap = its
-    * nFrames) and an audio one refuse each other's probes through the
-    * SAME width check; `_meta.hash_col` records the audio column. The
+    * `sample_pos`, id, segment hash `_h`). Each generation's
+    * `bands_vN/_meta.sample_cap` records `segmentFrames`, so a GIF
+    * positional artifact (sample_cap = its nFrames) and an audio one
+    * refuse each other's probes through the SAME width check;
+    * `_meta.hash_col` records the audio column. The
     * width is checked before the root is reset, so a bad
     * `segmentFrames` leaves an existing index untouched. The standing
     * corpus decodes exactly once, here. */
@@ -3463,7 +3457,7 @@ object Multimodal {
 
   /** Read a persisted positional audio index in the probe shape —
     * `readGifHashBandIndex`'s contract with the audio width:
-    * `segmentFrames` is validated against the build-time
+    * `segmentFrames` is validated against the served generation's
     * `_meta.sample_cap` record and rides the returned frame as `_hs`
     * metadata so the probe re-checks it. A classic artifact is
     * refused schema-derivedly; a positional GIF artifact is refused
@@ -3476,9 +3470,10 @@ object Multimodal {
 
   /** GROW a persisted positional audio index — the positional growth
     * rebuild with the new batch's clips segmented first.
-    * `segmentFrames` must equal the build's (`_meta.sample_cap`
-    * refuses a mismatch — absolute positions make a mixed-width union
-    * silently wrong, never merely stale). */
+    * `segmentFrames` must equal the build's (the served generation's
+    * `_meta.sample_cap` refuses a mismatch — absolute positions make a
+    * mixed-width union silently wrong, never merely stale); the grown
+    * generation carries its own record. */
   def rebuildAudioSegmentHashBandIndex(spark: SparkSession, path: String,
       newClips: DataFrame, audioCol: String, idCol: String,
       segmentFrames: Long = 8320L, maxSegments: Int = 16,

@@ -11,10 +11,12 @@ import org.apache.spark.sql.functions._
   * that knows the lifecycle layout under an index root, and every
   * family is VERSIONED FROM BIRTH:
   *
-  *  - `<prefix>N/` — one generation of the index (`bm25_vN` holding
-  *    `postings/`, `df/` and `meta/`; `index_vN` the IVF list
-  *    partitions; `bands_vN` the hash-band rows). Only `rewrite`
-  *    creates one.
+  *  - `<prefix>N/` — one generation of the index, holding its own
+  *    record (`bm25_vN` holding `postings/`, `df/` and `meta/`;
+  *    `index_vN` the IVF list partitions; `bands_vN` the hash-band
+  *    rows plus their `_meta/` record, which the parquet reader and
+  *    `dataFiles` skip). Only `rewrite` creates one, and the pointer
+  *    that publishes it publishes its record too.
   *  - `_current_vN` — an empty VERSION POINTER file naming
   *    `<prefix>N/` as the servable generation. A pointer is created
   *    only AFTER its dir's write completes, so the highest pointer

@@ -122,14 +122,18 @@ class GifHashBandIndexSpec extends SparkSpecBase {
       assert(keptAgainstPath(gifPath) == Set(3L), "growth after refusal")
       Dedup.rebuildHashBandIndex(spark, classicPath,
         Seq((9L, 7L)).toDF("gid", "sig"), "sig", "gid")
-      // the width check never blocks the crash-after-pointer no-meta
-      // state: probes must keep serving (the family contract) —
+      // the width check is never skipped: with the served
+      // generation's record removed by hand, a positional read cannot
+      // validate its width and refuses, naming the rebuild —
       // destructive, so LAST
       val fs = new org.apache.hadoop.fs.Path(gifPath)
         .getFileSystem(spark.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(s"$gifPath/_meta"), true)
-      assert(Multimodal.readGifHashBandIndex(spark, gifPath, nFrames = 8)
-        .count() > 0, "probes must survive a lost _meta (width unknowable)")
+      val gen = StandingIndex.currentDir(fs, gifPath, StandingIndex.HashBand)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$gen/_meta"), true)
+      val e8 = intercept[IllegalArgumentException](
+        Multimodal.readGifHashBandIndex(spark, gifPath))
+      assert(e8.getMessage.contains("_meta") &&
+        e8.getMessage.contains("writeHashBandIndex"), e8.getMessage)
     }
   }
 

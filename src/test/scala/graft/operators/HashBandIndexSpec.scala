@@ -270,7 +270,7 @@ class HashBandIndexSpec extends SparkSpecBase {
       val stats = Dedup.hashBandIndexStats(spark, path)
       assert(stats.ndocs == 4 && stats.capDroppedBands == 0,
         s"meta diverged: $stats")
-      val totalBands = spark.read.parquet(s"$path/_meta")
+      val totalBands = spark.read.parquet(s"${stats.indexDir}/_meta")
         .select("total_bands").collect()(0).getLong(0)
       assert(totalBands == stats.bands,
         s"observe-derived total_bands $totalBands != recounted ${stats.bands}")
@@ -324,16 +324,112 @@ class HashBandIndexSpec extends SparkSpecBase {
         "rebuild reset ate a co-located dir")
       assert(Dedup.hashBandIndexStats(spark, path).tombstonedIds == 0)
       assert(keptAgainst(path) == Set(4L))
-      // crash-after-pointer state: _meta missing, probes still serve,
-      // stats refuses with the repair path named (not a raw parquet
-      // path-not-found) — same contract as deleteFromHashBandIndex
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/_meta"), true)
-      assert(keptAgainst(path) == Set(4L), "probes must survive a lost _meta")
-      val e = intercept[IllegalArgumentException] {
-        Dedup.hashBandIndexStats(spark, path)
+      // the served generation's record removed by hand (the state of a
+      // root written before each generation held its own): classic
+      // probes still serve; stats, delete and growth refuse through
+      // the one record reader with the repair path named (not a raw
+      // parquet path-not-found)
+      val gen = StandingIndex.currentDir(fs, path, StandingIndex.HashBand)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$gen/_meta"), true)
+      assert(keptAgainst(path) == Set(4L), "classic probes must survive a lost _meta")
+      val refusals = Seq(
+        intercept[IllegalArgumentException] {
+          Dedup.hashBandIndexStats(spark, path)
+        },
+        intercept[IllegalArgumentException] {
+          Dedup.deleteFromHashBandIndex(spark, path, Seq(202L).toDF("vid"), "vid")
+        },
+        intercept[IllegalArgumentException] {
+          Dedup.rebuildHashBandIndex(spark, path, batch, "sig", "vid")
+        })
+      refusals.foreach { e =>
+        assert(e.getMessage.contains("_meta") &&
+          e.getMessage.contains("writeHashBandIndex"),
+          s"refusal must come from the record reader and name the repair path: ${e.getMessage}")
       }
-      assert(e.getMessage.contains("writeHashBandIndex"),
-        s"stats refusal must name the repair path: ${e.getMessage}")
+      // nothing was written by the refused calls
+      assert(StandingIndex.tombstoneFiles(fs, path).isEmpty)
+      assert(StandingIndex.currentDir(fs, path, StandingIndex.HashBand) == gen)
+    }
+  }
+
+  /** The served generation's `_meta` record, after asserting the index
+    * root carries none of its own. */
+  private def servedRecord(path: String): Map[String, Any] = {
+    val fs = StandingIndex.fs(spark, path)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_meta")),
+      s"a root-level _meta exists under $path")
+    val gen = StandingIndex.currentDir(fs, path, StandingIndex.HashBand)
+    val rows = spark.read.parquet(s"$gen/_meta").collect()
+    assert(rows.length == 1, s"record of $gen has ${rows.length} rows")
+    rows(0).getValuesMap[Any](rows(0).schema.fieldNames)
+  }
+
+  test("every generation holds its own record: write, growth, compaction and the positional writes put _meta inside bands_vN") {
+    withTempDir("hbi-record") { dir =>
+      val path = s"${dir.getAbsolutePath}/classic"
+      Dedup.writeHashBandIndex(standing, "sig", "vid", path)
+      val built = servedRecord(path)
+      assert(built == Map("ndocs" -> 4L, "total_bands" -> 12L,
+        "cap_dropped_bands" -> 0L, "max_bucket" -> HotKeys.DefaultBucketCap.toLong,
+        "id_col" -> "vid", "pos_col" -> "", "sample_cap" -> -1L,
+        "hash_col" -> "sig"), s"$built")
+      // growth writes the grown generation's record (batch doc 4 has
+      // four bands of its own; 1-3 each share some with the standing)
+      Dedup.rebuildHashBandIndex(spark, path, batch, "sig", "vid",
+        maxBucket = Some(9))
+      val grown = servedRecord(path)
+      val grownStats = Dedup.hashBandIndexStats(spark, path)
+      assert(grownStats.indexDir.endsWith("bands_v2"), grownStats.indexDir)
+      assert(grown("ndocs") == 8L && grown("max_bucket") == 9L &&
+        grown("total_bands") == grownStats.bands, s"$grown vs $grownStats")
+      // compaction carries the served record over unchanged
+      Dedup.deleteFromHashBandIndex(spark, path, Seq(4L).toDF("vid"), "vid")
+      Dedup.compactHashBandIndex(spark, path)
+      assert(Dedup.hashBandIndexStats(spark, path).indexDir.endsWith("bands_v3"))
+      assert(servedRecord(path) == grown)
+      // the positional writes (GIF frames, audio segments) record
+      // their layout and width the same way
+      val gifPath = s"${dir.getAbsolutePath}/gif"
+      Multimodal.writeGifHashBandIndex(
+        Seq((1L, Multimodal.syntheticGrayGif(9, 8,
+            Seq(Array.tabulate(72)(i => (i * 7) % 256),
+              Array.tabulate(72)(i => (i * 11) % 256)))))
+          .toDF("gid", "anim"), "anim", "gid", gifPath,
+        metricName = "graft_hbi_record_gif")(spark)
+      val gif = servedRecord(gifPath)
+      assert(gif("id_col") == "gid" && gif("pos_col") == "sample_pos" &&
+        gif("sample_cap") == 4L && gif("hash_col") == "anim", s"$gif")
+      val audPath = s"${dir.getAbsolutePath}/audio"
+      Multimodal.writeAudioSegmentHashBandIndex(
+        Seq((1L, Multimodal.syntheticPcmWav(
+            Array.tabulate[Short](16640)(i => (i * 37 % 2003 - 1001).toShort))))
+          .toDF("aid", "clip"), "clip", "aid", audPath,
+        metricName = "graft_hbi_record_audio")(spark)
+      val aud = servedRecord(audPath)
+      assert(aud("id_col") == "aid" && aud("pos_col") == "sample_pos" &&
+        aud("sample_cap") == 8320L && aud("hash_col") == "clip", s"$aud")
+    }
+  }
+
+  test("maxBucket < 1 is refused on the driver before any job, in the write and growth cores") {
+    withTempDir("hbi-cap0") { dir =>
+      val path = dir.getAbsolutePath
+      Dedup.writeHashBandIndex(standing, "sig", "vid", path)
+      val (e1, writeJobs) = countJobs(intercept[IllegalArgumentException] {
+        Dedup.writeHashBandIndex(standing, "sig", "vid", path, maxBucket = 0)
+      })
+      val (e2, growJobs) = countJobs(intercept[IllegalArgumentException] {
+        Dedup.rebuildHashBandIndex(spark, path, batch, "sig", "vid",
+          maxBucket = Some(0))
+      })
+      Seq(e1, e2).foreach(e =>
+        assert(e.getMessage.contains("maxBucket must be >= 1"), e.getMessage))
+      assert(writeJobs == 0 && growJobs == 0,
+        s"refusal ran jobs first: write $writeJobs, growth $growJobs")
+      // the served index is untouched
+      assert(Dedup.hashBandIndexStats(spark, path).indexDir.endsWith("bands_v1"))
+      assert(keptAgainst(path) == Set(4L))
     }
   }
 

@@ -95,13 +95,15 @@ class IndexMaintenanceSpec extends SparkSpecBase {
             (1 to 6).map(n => Array.tabulate(72)(i => (i * n * 7) % 256)),
             Seq(1, 3, 5))))
           .toDF("kid", "clip"), "clip", "kid", s"$root/kfi")(spark)
-      // a crash-after-pointer hash-band sibling: probes fine, stats
-      // refuses — the sweep must report it and keep going
+      // a hash-band sibling whose served generation lost its record:
+      // probes fine, stats refuses — the sweep must report it and keep
+      // going
       Dedup.writeHashBandIndex(Seq((9L, 42L)).toDF("vid", "sig"),
         "sig", "vid", s"$root/crashed")
       val fs = new org.apache.hadoop.fs.Path(root)
         .getFileSystem(spark.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(s"$root/crashed/_meta"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(s"${StandingIndex.currentDir(fs,
+        s"$root/crashed", StandingIndex.HashBand)}/_meta"), true)
       fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/stranger"))
       val rows = IndexMaintenance.healthSweep(spark, Seq(
           s"$root/hbi", s"$root/bm", s"$root/ivf", s"$root/gifi",

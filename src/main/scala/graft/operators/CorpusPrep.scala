@@ -434,7 +434,7 @@ object CorpusPrep {
       cfg.audioSegMaxShift, "graft_audio_seg_band_cap"))
   ).flatten
 
-  /** One stage of a batch facade's chain: the label its metric and
+  /** One stage of a facade's chain: the label its metric and
     * trace rows carry, the frame it leaves, and what its trace
     * evidence reads — a dedup tier's clusters, an incremental taint
     * tier's direct standing hits and tainted members, the trained
@@ -444,9 +444,9 @@ object CorpusPrep {
       tainted: Option[DataFrame] = None, threshold: Option[Double] = None)
 
   /** How a chain holds its frames: `stage` wraps each stage's output
-    * (run: the stage's observed metric; a trace: a pin), `aux` the
-    * evidence frames a trace reads again, `media` the decoded frame
-    * the incremental taint fold reads three times. */
+    * (run: the stage's observed metric; a trace: a pin; a stream:
+    * nothing), `aux` the evidence frames a trace reads again, `media`
+    * the decoded frame the incremental taint fold reads three times. */
   private final case class Hold(stage: (DataFrame, String) => DataFrame,
       aux: DataFrame => DataFrame = identity,
       media: DataFrame => DataFrame = identity)
@@ -853,10 +853,6 @@ object CorpusPrep {
               QualityModel.withQualityScore(ref, m, textCol, "_qm_cal_score"),
               "_qm_cal_score", q)
           case None =>
-            require(!gated.isStreaming,
-              "minQualityQuantile on a stream needs qualityCalibrationFrame " +
-                "— a stream cannot be aggregated at setup; calibrate on a " +
-                "designated reference frame")
             QualityModel.calibrateThreshold(
               QualityModel.withQualityScore(gated, m, "clean_text",
                 "_qm_cal_score"),
@@ -885,9 +881,6 @@ object CorpusPrep {
       Stage("qm", hold.stage(qmGateAt(cur, m, thr), "qm"), threshold = Some(thr))
     })
   }
-
-  private def qmGate(docs: DataFrame, cfg: Config, textCol: String): DataFrame =
-    qmStep(textCol, cfg, Hold((df, _) => df)).fold(docs)(_(docs).out)
 
   /** One definition of the per-stage survivor metric — every stage
     * of run() and runIncremental's back half publishes through it,
@@ -950,9 +943,9 @@ object CorpusPrep {
     ).flatten
   }
 
-  private def backSteps(idCol: String, cfg: Config,
+  private def tierSteps(tiers: Seq[(String, DataFrame => DataFrame)],
       hold: Hold): Seq[DataFrame => Stage] =
-    backTiers(idCol, cfg).map { case (label, f) => step(label, hold)(f) }
+    tiers.map { case (label, f) => step(label, hold)(f) }
 
   /** Near-dup survivors: each cluster collapses to the
     * keepPreference winner, else its minimum id. */
@@ -982,6 +975,16 @@ object CorpusPrep {
         cfg.signBits, cfg.minCosine, cfg.maxBucket)
     }
   }
+
+  /** Exact dedup: the min id of each content digest survives, with
+    * its `_digest` column. */
+  private def minIdDigest(df: DataFrame, idCol: String): DataFrame = df
+    .withColumn("_digest", md5(col("clean_text")))
+    .withColumn("_rank", row_number().over(
+      org.apache.spark.sql.expressions.Window
+        .partitionBy("_digest").orderBy(idCol)))
+    .filter(col("_rank") === 1)
+    .drop("_rank")
 
   /** run()'s stage list — `run` executes it with each stage wrapped
     * in its observed metric, `prepTrace` replays it with each stage
@@ -1021,13 +1024,7 @@ object CorpusPrep {
     // metrics vanish). Callers who want the gates paid once
     // cache/checkpoint UPSTREAM (docs.cache() before run()), which
     // keeps the observe nodes in every consumer's plan.
-    val exact = step("exact", hold)(_
-      .withColumn("_digest", md5(col("clean_text")))
-      .withColumn("_rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("_digest").orderBy(idCol)))
-      .filter(col("_rank") === 1)
-      .drop("_digest", "_rank"))
+    val exact = step("exact", hold)(minIdDigest(_, idCol).drop("_digest"))
     // every dedup tier collapses its pair search's clusters the same
     // way, under the one survivor rule
     def collapse(label: String)(pairs: DataFrame => DataFrame): DataFrame => Stage =
@@ -1057,7 +1054,7 @@ object CorpusPrep {
       positionalTiers(cfg).map(t =>
         collapse(t.label)(t.pairs(idCol, cfg.maxBucket)))
     chain(docs, gateSteps(textCol, idCol, cfg, hold, None) ++ (exact +: dedup) ++
-      backSteps(idCol, cfg, hold))
+      tierSteps(backTiers(idCol, cfg), hold))
   }
 
   /** Returns the surviving rows of `docs` with `clean_text` appended.
@@ -1117,16 +1114,133 @@ object CorpusPrep {
     } finally { kit.release() }
   }
 
-  /** Row tracing for the STREAM / INCREMENTAL intake path — the
-    * production twin of `prepTrace`: "why did the stream drop doc X
-    * against the standing corpus", answered with the FIRST stage that
-    * dropped it and the standing-side evidence each tier can honestly
-    * name. Rebuilds `prepStream`'s chain STAGE FOR STAGE on a batch
-    * frame (every stream stage here is row-local or a stream-static
-    * join, so the batch replay is the same plan minus the watermark),
-    * against the same standing lookups the stream was built with —
-    * pass the SAME `standing`/`standingIndex`/`semanticLookup`/
-    * `imageIndex`/`audioIndex` frames.
+  /** prepStream's stage list — `prepStreamWithCaches` runs it on the
+    * live stream, `prepTraceStream` replays it on a batch frame with
+    * each stage pinned, so the two cannot drift apart. Each facade
+    * passes its two differences: `exact`, the digest dedup (the live
+    * stream's watermarked first arrival plus the opt-in intra tiers,
+    * or the trace's min-id stand-in), which leaves `_digest` for the
+    * standing digest tier; and `lookup`, how a standing lookup is held
+    * (the stream caches each one — a stream-static join re-executes
+    * its static side every micro-batch — the trace reads it as is).
+    * Every stage is row-local or a stream-static join: the LM gate
+    * collects its model to a broadcast map once at build
+    * (TextStats.collectLocal fails loudly past its bound) with the
+    * batch gate's keep rule (null logprob passes); the row-local
+    * decontamination tiers run before the digest dedup, so a
+    * contaminated row never seeds the digest state; the standing
+    * tiers run text first, then semantic, then signature (a textual
+    * dup is the cheapest drop); the sampler stays last with run()'s
+    * salt, so a stream survivor set equals run()'s on the same rows. */
+  private def streamStages(docs: DataFrame, textCol: String, idCol: String,
+      cfg: Config, hold: Hold, exact: DataFrame => DataFrame,
+      lookup: DataFrame => DataFrame, standing: Option[DataFrame],
+      standingIndex: Option[DataFrame], semanticLookup: Option[DataFrame],
+      tierIdx: Map[String, Option[DataFrame]]): Seq[Stage] = {
+    val front = Seq(step("gated", hold)(d => rowLocalGate(
+        d.withColumn("clean_text", normOf(cfg)(col(textCol))), cfg, textCol))) ++
+      cfg.lmModel.map(lm => step("lm", hold)(_
+        .transform(TextStats.withBigramLogProb(_, "clean_text",
+          TextStats.collectLocal(lm, cfg.lmMaxPairs), cfg.lmK, "_lm_n", "_lm_lp"))
+        .filter(col("_lm_lp").isNull || col("_lm_lp") >= cfg.minLmLogProb)
+        .drop("_lm_n", "_lm_lp"))) ++
+      qmStep(textCol, cfg, hold)
+    val (sample, decon) = backTiers(idCol, cfg).partition(_._1 == "sampled")
+    val dedup = step("exact", hold)(cur =>
+      if (standing.isDefined) exact(cur) else exact(cur).drop("_digest"))
+    val standingSteps = standing.toSeq.flatMap { st =>
+      val oldDig = lookup(standingIndex
+        .map(_.select(col("_digest")).distinct())
+        .getOrElse(st.select(md5(col("clean_text")).as("_digest")).distinct()))
+      val near = lookup(Dedup.bandVerifyLookup(st, "clean_text", idCol,
+        cfg.shingleN, cfg.numHashes, cfg.rowsPerBand, cfg.maxBucket,
+        standingIndex))
+      Seq(step("exact_standing", hold)(
+          _.join(oldDig, Seq("_digest"), "left_anti").drop("_digest")),
+        step("neardup", hold)(Dedup.streamNearDupFilter(_, "clean_text", near,
+          cfg.shingleN, cfg.minJaccard, cfg.numHashes, cfg.rowsPerBand)))
+    }
+    // codec routing mirrors semanticIncremental: SQ rides the IVF list
+    // lookup, BQ the band-keyed lookup
+    val semantic = semanticLookup.map(lookup).map(lk => step("semantic", hold)(cur =>
+      cfg.bqModel.fold(
+        Similarity.streamSemanticFilter(cur, cfg.embCol.get, lk,
+          cfg.codebook.get, cfg.sqModel.get, cfg.minCosine, cfg.nprobe))(bqm =>
+        Similarity.streamSemanticFilterBq(cur, cfg.embCol.get, lk,
+          bqm, cfg.minCosine, cfg.bqBands, cfg.bqMaxHamming))))
+    val signature = signatureTiers(cfg).map { t =>
+      val idx = lookup(tierIdx(t.label).get)
+      step(t.label, hold)(cur => Dedup.hashNearDupFilterAgainst(
+        t.withHash(cur, t.binaryCol, t.workCol), t.workCol, idx, t.maxHamming)
+        .drop(t.workCol))
+    }
+    chain(docs, front ++ tierSteps(decon, hold) ++ (dedup +: standingSteps) ++
+      semantic ++ signature ++ tierSteps(sample, hold))
+  }
+
+  /** The stream contract, one definition for `prepStream` and
+    * `prepTraceStream` (a trace of a stream that can never exist would
+    * explain nothing): only row-local stages and standing-corpus
+    * probes; every lookup and index argument paired with the config
+    * that reads it. */
+  private def requireStreamable(cfg: Config, standing: Option[DataFrame],
+      standingIndex: Option[DataFrame], semanticLookup: Option[DataFrame],
+      tierIdx: Map[String, Option[DataFrame]]): Unit = {
+    require(cfg.maxHotSpans.isEmpty && !cfg.cutHotSpans && cfg.benchmark.isEmpty,
+      "prepStream supports only the row-local stages (normalize + gates + LM " +
+        "gate + exact dedup + the standing-corpus probes); corpus-statistic " +
+        "stages need a batch pass — run them via runIncremental over the " +
+        "accumulated intake (for decontamination in a stream, use the " +
+        "row-local n-gram tier: Config.ngramBloom)")
+    require(!cfg.benchEmbLarge,
+      "benchEmbLarge is the batch-only large-bench route (it joins and " +
+        "aggregates); a stream tier needs the row-local literal path — " +
+        "pre-shrink the bench under maxBench, or decontaminate in batch")
+    Seq("gif" -> cfg.gifCol, "audioSeg" -> cfg.audioSegCol).foreach { case (t, c) =>
+      require(c.isEmpty,
+        s"the ${t}Col tier is refused on streams: its drop decision counts " +
+          "matched positions per item, an id-keyed aggregation the row-local " +
+          "append-mode contract cannot express — dedupe that intake in " +
+          s"incremental batches (runIncremental + ${t}Index, traced by " +
+          "prepTraceIncremental), or as a foreachBatch stream via " +
+          "Multimodal.gifNearDupMicroBatch / audioNearDupMicroBatch")
+    }
+    require(cfg.embCol.isEmpty || semanticLookup.isDefined ||
+        cfg.benchEmb.isDefined,
+      "embCol in a stream needs a standing semantic lookup (build one with " +
+        "Similarity.sqSemanticLookup over the standing SQ index, or " +
+        "Similarity.bqSemanticLookup over standing BQ codes, and pass it " +
+        "as semanticLookup) — the batch semantic tier's pair clustering " +
+        "needs a corpus pass; run it via runIncremental. (embCol serving " +
+        "ONLY benchEmb decontamination is also valid.)")
+    require(semanticLookup.isEmpty || (cfg.embCol.isDefined &&
+        ((cfg.codebook.isDefined && cfg.sqModel.isDefined && cfg.bqModel.isEmpty) ||
+         (cfg.bqModel.isDefined && cfg.sqModel.isEmpty && cfg.codebook.isEmpty))),
+      "semanticLookup needs cfg.embCol (the stream's embedding column) plus " +
+        "exactly ONE codec route: cfg.codebook + cfg.sqModel (IVF list lookup " +
+        "from sqSemanticLookup) OR cfg.bqModel alone (band lookup from " +
+        "bqSemanticLookup)")
+    require(standingIndex.isEmpty || standing.isDefined,
+      "standingIndex carries bands, not text — the exact-Jaccard verify needs " +
+        "the standing frame too")
+    require(cfg.minQualityQuantile.isEmpty || cfg.qualityCalibrationFrame.isDefined,
+      "minQualityQuantile on a stream needs qualityCalibrationFrame — a " +
+        "stream cannot be aggregated at setup; calibrate on a designated " +
+        "reference frame")
+    requireIndexes("in a stream", cfg, tierIdx)
+  }
+
+  /** Row tracing for the STREAM intake path — the production twin of
+    * `prepTrace`: "why did the stream drop doc X against the standing
+    * corpus", answered with the FIRST stage that dropped it and the
+    * standing-side evidence each tier can honestly name. Replays
+    * prepStream's own stage list (`streamStages`) on a batch frame
+    * with each stage pinned (every stream stage is row-local or a
+    * stream-static join, so the batch replay is the same plan minus
+    * the watermark), against the same standing lookups the stream was
+    * built with — pass the SAME `standing`/`standingIndex`/
+    * `semanticLookup`/`imageIndex`/`audioIndex` frames. A config
+    * prepStream refuses is refused here too.
     *
     * Two honesty notes, both inherent to live intake:
     *  - the within-batch digest tier keeps the FIRST ARRIVAL in the
@@ -1136,7 +1250,7 @@ object CorpusPrep {
     *    way, survivor identity is arrival-dependent by design.
     *    Consequently the trace's kept SET equals the live stream's
     *    exactly for batches WITHOUT in-batch digest twins (the spec's
-    *    parity pin), and at content level otherwise: when twins
+    *    parity pins), and at content level otherwise: when twins
     *    arrive out of min-id order, the stream may keep a different
     *    MEMBER of the same digest group than the trace names.
     *  - the intra near-dup tiers (`intraNearDup` /
@@ -1164,103 +1278,20 @@ object CorpusPrep {
       semanticLookup: Option[DataFrame] = None,
       imageIndex: Option[DataFrame] = None,
       audioIndex: Option[DataFrame] = None): DataFrame = {
-    require(cfg.maxHotSpans.isEmpty && !cfg.cutHotSpans && cfg.benchmark.isEmpty,
-      "prepTraceStream traces prepStream's chain, which supports only the " +
-        "row-local stages + standing-corpus probes — trace the batch stages " +
-        "via prepTrace")
+    val tierIdx = Map("image" -> imageIndex, "audio" -> audioIndex)
+    requireStreamable(cfg, standing, standingIndex, semanticLookup, tierIdx)
     require(!cfg.intraNearDup && !cfg.intraNearDupVerified,
       "the intra near-dup tiers keep greedy arrival-order / stateful " +
         "survivors — their drops cannot be replayed deterministically from " +
         "a batch frame, so tracing them would guess; disable them for the " +
         "trace (the standing tiers trace fine)")
-    require(cfg.imageCol.isEmpty || imageIndex.isDefined,
-      "imageCol needs `imageIndex` — pass the same index the stream was built with")
-    require(imageIndex.isEmpty || cfg.imageCol.isDefined,
-      "imageIndex without cfg.imageCol would be silently ignored")
-    require(cfg.audioCol.isEmpty || audioIndex.isDefined,
-      "audioCol needs `audioIndex` — pass the same index the stream was built with")
-    require(audioIndex.isEmpty || cfg.audioCol.isDefined,
-      "audioIndex without cfg.audioCol would be silently ignored")
-    require(standingIndex.isEmpty || standing.isDefined,
-      "standingIndex carries bands, not text — the exact-Jaccard verify " +
-        "needs the standing frame too")
-    require(semanticLookup.isEmpty || (cfg.embCol.isDefined &&
-        ((cfg.codebook.isDefined && cfg.sqModel.isDefined && cfg.bqModel.isEmpty) ||
-         (cfg.bqModel.isDefined && cfg.sqModel.isEmpty && cfg.codebook.isEmpty))),
-      "semanticLookup needs cfg.embCol plus exactly ONE codec route " +
-        "(codebook + sqModel, or bqModel alone) — the same contract as prepStream")
-    // a config prepStream itself REFUSES must refuse here too — a
-    // trace of a stream that can never exist would explain nothing
-    require(!cfg.benchEmbLarge,
-      "benchEmbLarge is the batch-only large-bench route — prepStream " +
-        "refuses it, so there is no stream to trace")
-    require(cfg.embCol.isEmpty || semanticLookup.isDefined ||
-        cfg.benchEmb.isDefined,
-      "embCol in a (traced) stream needs a semanticLookup or benchEmb — " +
-        "the same contract as prepStream; without one the semantic tier " +
-        "would be silently skipped and the trace would diverge")
-    require(cfg.minQualityQuantile.isEmpty ||
-        cfg.qualityCalibrationFrame.isDefined,
-      "minQualityQuantile without qualityCalibrationFrame is refused by " +
-        "prepStream (a stream cannot self-calibrate at setup) — the trace " +
-        "would otherwise self-calibrate on this batch and gate at a " +
-        "threshold no stream ever used")
-    require(cfg.gifCol.isEmpty,
-      "the GIF tier is refused by prepStream (its drop decision is an " +
-        "id-keyed aggregation) — there is no stream to trace; use " +
-        "prepTraceIncremental")
-    require(cfg.audioSegCol.isEmpty,
-      "the segmented-audio tier is refused by prepStream (its drop " +
-        "decision is an id-keyed aggregation) — there is no stream to " +
-        "trace; use prepTraceIncremental")
     val kit = new TraceKit(ids, idCol, cfg, docs, textCol)
-    val hold = kit.hold
     try {
-      // ---- the chain, mirroring prepStream stage for stage ----
-      val front = Seq(step("gated", hold)(d => rowLocalGate(
-          d.withColumn("clean_text", normOf(cfg)(col(textCol))), cfg, textCol))) ++
-        cfg.lmModel.map(lm => step("lm", hold)(_
-          .transform(TextStats.withBigramLogProb(_, "clean_text",
-            TextStats.collectLocal(lm, cfg.lmMaxPairs), cfg.lmK, "_lm_n", "_lm_lp"))
-          .filter(col("_lm_lp").isNull || col("_lm_lp") >= cfg.minLmLogProb)
-          .drop("_lm_n", "_lm_lp"))) ++
-        qmStep(textCol, cfg, hold)
-      // the back half's row-local tiers run live before the digest
-      // dedup; the sampler stays last (benchmark is refused above)
-      val (sample, decon) = backTiers(idCol, cfg).partition(_._1 == "sampled")
       // within-batch digest twins: min id stands in for the live
       // stream's first arrival
-      val exact = step("exact", hold)(_
-        .withColumn("_digest", md5(col("clean_text")))
-        .withColumn("_rank", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("_digest").orderBy(idCol)))
-        .filter(col("_rank") === 1).drop("_rank"))
-      val standingSteps = standing.toSeq.flatMap { st =>
-        val oldDig = standingIndex
-          .map(_.select(col("_digest")).distinct())
-          .getOrElse(st.select(md5(col("clean_text")).as("_digest")).distinct())
-        val lookup = Dedup.bandVerifyLookup(st, "clean_text", idCol,
-          cfg.shingleN, cfg.numHashes, cfg.rowsPerBand, cfg.maxBucket,
-          standingIndex)
-        Seq(step("exact_standing", hold)(_.join(oldDig, Seq("_digest"), "left_anti")),
-          step("neardup", hold)(cur => Dedup.streamNearDupFilter(
-            cur.drop("_digest"), "clean_text", lookup, cfg.shingleN,
-            cfg.minJaccard, cfg.numHashes, cfg.rowsPerBand)))
-      }
-      val semantic = semanticLookup.map(lk => step("semantic", hold)(cur =>
-        cfg.bqModel.fold(
-          Similarity.streamSemanticFilter(cur, cfg.embCol.get, lk,
-            cfg.codebook.get, cfg.sqModel.get, cfg.minCosine, cfg.nprobe))(bqm =>
-          Similarity.streamSemanticFilterBq(cur, cfg.embCol.get, lk,
-            bqm, cfg.minCosine, cfg.bqBands, cfg.bqMaxHamming))))
-      val tierIdx = Map("image" -> imageIndex, "audio" -> audioIndex)
-      val signature = signatureTiers(cfg).map(t => step(t.label, hold)(cur =>
-        Dedup.hashNearDupFilterAgainst(t.withHash(cur, t.binaryCol, t.workCol),
-          t.workCol, tierIdx(t.label).get, t.maxHamming).drop(t.workCol)))
-      val stages = chain(docs, front ++
-        decon.map { case (l, f) => step(l, hold)(f) } ++ (exact +: standingSteps) ++
-        semantic ++ signature ++ sample.map { case (l, f) => step(l, hold)(f) })
+      val stages = streamStages(docs, textCol, idCol, cfg, kit.hold,
+        minIdDigest(_, idCol), identity, standing, standingIndex,
+        semanticLookup, tierIdx)
 
       kit.rows(stages, "input", "normalize/quality") {
         // within-batch digest twin: live intake keeps the FIRST ARRIVAL;
@@ -1431,6 +1462,39 @@ object CorpusPrep {
     } finally { kit.release() }
   }
 
+  /** The standing-index refusals, one definition for the facades that
+    * probe a prebuilt index (runIncremental, prepStream,
+    * prepTraceStream): a tier column needs its index — decoding the
+    * standing corpus's media on every run would make the per-run cost
+    * follow the corpus, not the batch — and an index without its
+    * column would be silently ignored. `tierIdx` maps each tier the
+    * facade serves (image, audio, gif, audioSeg) to its argument. */
+  private def requireIndexes(where: String, cfg: Config,
+      tierIdx: Map[String, Option[DataFrame]]): Unit = {
+    val hashBand = "(persisted: Dedup.writeHashBandIndex + readHashBandIndex)"
+    val built = Map(
+      "image" -> (cfg.imageCol,
+        s"Dedup.hashBandIndex over Multimodal.withPerceptualHash $hashBand"),
+      "audio" -> (cfg.audioCol,
+        s"Dedup.hashBandIndex over Multimodal.withAudioFingerprint $hashBand"),
+      "gif" -> (cfg.gifCol, "Multimodal.gifHashBandIndex (persisted: " +
+        "Multimodal.writeGifHashBandIndex + readGifHashBandIndex)"),
+      "audioSeg" -> (cfg.audioSegCol, "Multimodal.audioSegmentHashBandIndex " +
+        "(persisted: writeAudioSegmentHashBandIndex + " +
+        "readAudioSegmentHashBandIndex)"))
+    tierIdx.foreach { case (t, idx) =>
+      val (c, how) = built(t)
+      require(c.isEmpty || idx.isDefined,
+        s"${t}Col $where needs `${t}Index` — the standing corpus's index, " +
+          s"built ONCE with $how, decode-once across runs with the takedown " +
+          "lifecycle; the per-run decode must follow the batch (a trace " +
+          "takes the index its facade was given)")
+      require(idx.isEmpty || c.isDefined,
+        s"${t}Index without cfg.${t}Col would be silently ignored — set the " +
+          "column, or drop the index argument")
+    }
+  }
+
   /** runIncremental's stage list — `runIncremental` executes it,
     * `prepTraceIncremental` replays it with each stage pinned. */
   private def incrementalStages(standing: DataFrame, batch: DataFrame,
@@ -1446,47 +1510,8 @@ object CorpusPrep {
       "intraNearDup/intraNearDupVerified are the stream-only tiers — " +
         "runIncremental's near tier already verifies batch-internal " +
         "candidates exactly")
-    // the signature tiers need a PREBUILT standing hash index:
-    // decoding the standing corpus's media per incremental run would
-    // break the O(batch) cost contract exactly like re-scanning its
-    // text
-    require(cfg.imageCol.isEmpty || imageIndex.isDefined,
-      "imageCol on the incremental path needs `imageIndex` — build it ONCE " +
-        "with Dedup.hashBandIndex over Multimodal.withPerceptualHash of the " +
-        "standing corpus, or persist it (Dedup.writeHashBandIndex + " +
-        "readHashBandIndex — decode-once across runs, takedown lifecycle " +
-        "included); the batch-per-run decode must follow the batch")
-    require(imageIndex.isEmpty || cfg.imageCol.isDefined,
-      "imageIndex without cfg.imageCol would be silently ignored — set the " +
-        "image column, or drop the index argument")
-    require(cfg.audioCol.isEmpty || audioIndex.isDefined,
-      "audioCol on the incremental path needs `audioIndex` — build it ONCE " +
-        "with Dedup.hashBandIndex over Multimodal.withAudioFingerprint of " +
-        "the standing corpus, or persist it (Dedup.writeHashBandIndex + " +
-        "readHashBandIndex); the batch-per-run decode must follow the batch")
-    require(audioIndex.isEmpty || cfg.audioCol.isDefined,
-      "audioIndex without cfg.audioCol would be silently ignored — set the " +
-        "audio column, or drop the index argument")
-    require(cfg.gifCol.isEmpty || gifIndex.isDefined,
-      "gifCol on the incremental path needs `gifIndex` — build it ONCE " +
-        "with Multimodal.gifHashBandIndex over the standing corpus, or " +
-        "persist it with Multimodal.writeGifHashBandIndex and pass " +
-        "Multimodal.readGifHashBandIndex (decode-once across runs, with " +
-        "the takedown lifecycle); the batch-per-run decode must follow " +
-        "the batch")
-    require(gifIndex.isEmpty || cfg.gifCol.isDefined,
-      "gifIndex without cfg.gifCol would be silently ignored — set the " +
-        "gif column, or drop the index argument")
-    require(cfg.audioSegCol.isEmpty || audioSegIndex.isDefined,
-      "audioSegCol on the incremental path needs `audioSegIndex` — build " +
-        "it ONCE with Multimodal.audioSegmentHashBandIndex over the " +
-        "standing corpus, or persist it with " +
-        "writeAudioSegmentHashBandIndex and pass " +
-        "readAudioSegmentHashBandIndex (decode-once across runs, with the " +
-        "takedown lifecycle); the batch-per-run decode must follow the batch")
-    require(audioSegIndex.isEmpty || cfg.audioSegCol.isDefined,
-      "audioSegIndex without cfg.audioSegCol would be silently ignored — " +
-        "set the segmented-audio column, or drop the index argument")
+    requireIndexes("on the incremental path", cfg, Map("image" -> imageIndex,
+      "audio" -> audioIndex, "gif" -> gifIndex, "audioSeg" -> audioSegIndex))
     implicit val sp: org.apache.spark.sql.SparkSession = batch.sparkSession
     val dedup = step("dedup", hold)(Dedup.dropIncrementalDuplicates(
       standing, _, "clean_text", idCol,
@@ -1542,7 +1567,7 @@ object CorpusPrep {
           t.maxHamming, t.minMatches, broadcastIndex = true, t.maxShift)))
     chain(batch, gateSteps(textCol, idCol, cfg, hold,
         spanCorpus = if (cfg.maxHotSpans.isDefined) Some(standing) else None) ++
-      (dedup +: media) ++ backSteps(idCol, cfg, hold))
+      (dedup +: media) ++ tierSteps(backTiers(idCol, cfg), hold))
   }
 
   /** Incremental prep: a NEW batch against a STANDING prepared
@@ -1792,200 +1817,39 @@ object CorpusPrep {
       semanticLookup: Option[DataFrame] = None,
       imageIndex: Option[DataFrame] = None,
       audioIndex: Option[DataFrame] = None): (DataFrame, StreamCaches) = {
-    require(cfg.maxHotSpans.isEmpty && !cfg.cutHotSpans && cfg.benchmark.isEmpty,
-      "prepStream supports only the row-local stages (normalize + gates + LM " +
-        "gate + exact dedup + the standing-corpus probe); corpus-statistic " +
-        "stages need a batch pass — run them via runIncremental over the " +
-        "accumulated intake (for decontamination in a stream, use the " +
-        "row-local n-gram tier: Config.ngramBloom)")
-    require(cfg.imageCol.isEmpty || imageIndex.isDefined,
-      "imageCol in a stream needs `imageIndex` — the standing-corpus hash " +
-        "index (Dedup.hashBandIndex over Multimodal.withPerceptualHash of " +
-        "the standing images, built once at stream start); the probe is " +
-        "stream-static joins + a row-local Hamming exists, append-legal")
-    require(!cfg.benchEmbLarge,
-      "benchEmbLarge is the batch-only large-bench route (it joins and " +
-        "aggregates); a stream tier needs the row-local literal path — " +
-        "pre-shrink the bench under maxBench, or decontaminate in batch")
-    require(imageIndex.isEmpty || cfg.imageCol.isDefined,
-      "imageIndex without cfg.imageCol would be silently ignored — set the " +
-        "image column, or drop the index argument")
-    require(cfg.audioCol.isEmpty || audioIndex.isDefined,
-      "audioCol in a stream needs `audioIndex` — the standing-corpus hash " +
-        "index (Dedup.hashBandIndex over Multimodal.withAudioFingerprint of " +
-        "the standing audio, built once at stream start); the probe is " +
-        "stream-static joins + a row-local Hamming exists, append-legal")
-    require(audioIndex.isEmpty || cfg.audioCol.isDefined,
-      "audioIndex without cfg.audioCol would be silently ignored — set the " +
-        "audio column, or drop the index argument")
-    require(cfg.gifCol.isEmpty,
-      "the GIF (video-like) tier is refused on streams: its drop decision " +
-        "counts matched frame POSITIONS per animation — an id-keyed " +
-        "aggregation the row-local append-mode contract cannot express " +
-        "(unlike the single-hash image/audio probes) — dedupe GIF intake " +
-        "in incremental batches via runIncremental + gifIndex, or as a " +
-        "foreachBatch stream via Multimodal.gifNearDupMicroBatch (the " +
-        "batch filter's exact semantics per micro-batch)")
-    require(cfg.audioSegCol.isEmpty,
-      "the segmented-audio tier is refused on streams for the GIF tier's " +
-        "reason: its drop decision counts matched segment POSITIONS per " +
-        "clip — an id-keyed aggregation the row-local append-mode contract " +
-        "cannot express — dedupe segmented-audio intake in incremental " +
-        "batches via runIncremental + audioSegIndex, or as a foreachBatch " +
-        "stream via Multimodal.audioNearDupMicroBatch")
-    require(cfg.embCol.isEmpty || semanticLookup.isDefined ||
-        cfg.benchEmb.isDefined,
-      "embCol in a stream needs a standing semantic lookup (build one with " +
-        "Similarity.sqSemanticLookup over the standing SQ index, or " +
-        "Similarity.bqSemanticLookup over standing BQ codes, and pass it " +
-        "as semanticLookup) — the batch semantic tier's pair clustering " +
-        "needs a corpus pass; run it via runIncremental. (embCol serving " +
-        "ONLY benchEmb decontamination is also valid.)")
-    require(semanticLookup.isEmpty || (cfg.embCol.isDefined &&
-        ((cfg.codebook.isDefined && cfg.sqModel.isDefined && cfg.bqModel.isEmpty) ||
-         (cfg.bqModel.isDefined && cfg.sqModel.isEmpty && cfg.codebook.isEmpty))),
-      "semanticLookup needs cfg.embCol (the stream's embedding column) plus " +
-        "exactly ONE codec route: cfg.codebook + cfg.sqModel (IVF list lookup " +
-        "from sqSemanticLookup) OR cfg.bqModel alone (band lookup from " +
-        "bqSemanticLookup)")
-    require(standingIndex.isEmpty || standing.isDefined,
-      "standingIndex carries bands, not text — the exact-Jaccard verify needs " +
-        "the standing frame too")
-    val cleaned = docs.withColumn("clean_text", normOf(cfg)(col(textCol)))
-    // LM gate, stream edition: the reference model collects to a
-    // broadcast map ONCE at stream build (vocab-bounded by
-    // construction — TextStats.collectLocal fails loudly past its
-    // bound) and every row scores itself — no join, no aggregation,
-    // so the stage is exactly as stream-safe as the other row-local
-    // gates. Same keep rule as the batch lmGate: null logprob
-    // (< 2 tokens) passes.
-    val lmGated = cfg.lmModel.fold(rowLocalGate(cleaned, cfg, textCol)) { lm =>
-      rowLocalGate(cleaned, cfg, textCol)
-        .transform(TextStats.withBigramLogProb(_, "clean_text",
-          TextStats.collectLocal(lm, cfg.lmMaxPairs), cfg.lmK, "_lm_n", "_lm_lp"))
-        .filter(col("_lm_lp").isNull || col("_lm_lp") >= cfg.minLmLogProb)
-        .drop("_lm_n", "_lm_lp")
-    }
-    // trained-quality gate: row-local by construction (map-literal
-    // lookup + array aggregate), so it is stream-legal verbatim —
-    // the same argument as the LM gate above. The quantile route
-    // calibrates ONCE here at stream build (qualityCalibrationFrame
-    // required — qmThresholdOf refuses self-calibration on a stream)
-    // and the threshold rides the plan as a literal
-    val qmGated = qmGate(lmGated, cfg, textCol)
-    // n-gram-collision decontamination, the one tier that is stream-
-    // legal (row-local Bloom probe — see Dedup.bloomNgramGate; build
-    // the filter over bench text normalized like the corpus)
-    val decon0 = cfg.ngramBloom.fold(qmGated)(bytes =>
-      Dedup.bloomNgramGate(qmGated, "clean_text", bytes,
-        cfg.ngramBloomN, cfg.ngramBloomMaxHits))
-    // embedding-tier decontamination is row-local too (the bench
-    // literal collects ONCE at stream build, like the LM gate's
-    // model), so it runs live — upstream of exact dedup, since a
-    // contaminated row should not even seed the digest state
-    val decon = cfg.benchEmb.fold(decon0) { bench =>
-      require(cfg.embCol.isDefined,
-        "benchEmb (semantic decontamination) needs cfg.embCol — the stream's " +
-          "embedding column the benchmark embeddings score against")
-      Dedup.semanticDecontaminate(decon0, cfg.embCol.get, bench,
-        cfg.benchEmbCol, cfg.benchMinCosine)
-    }
-    val exact = decon
-      .withColumn("_digest", md5(col("clean_text")))
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark("_digest")
-    // opt-in new-NEW tier BEFORE the standing filters: a stream doc
-    // that near-dups standing content must still seed the intra state
-    // (its own later twins belong to the same cluster the batch rule
-    // would collapse), which chained dedup gets right exactly when it
-    // runs upstream of the standing drop
+    val tierIdx = Map("image" -> imageIndex, "audio" -> audioIndex)
+    requireStreamable(cfg, standing, standingIndex, semanticLookup, tierIdx)
     require(!(cfg.intraNearDup && cfg.intraNearDupVerified),
       "intraNearDup and intraNearDupVerified are alternative tiers for the " +
         "same stage — pick the greedy band dedup OR the stateful verified one")
-    val within =
+    // each standing lookup is cached for the stream's lifetime: a
+    // stream-static join re-executes its static side EVERY
+    // micro-batch, so per-batch cost must follow the batch, not the
+    // corpus. Restart the stream to refresh them after a
+    // standing-corpus compaction; release them through the returned
+    // StreamCaches handle when the stream is done.
+    val caches = Vector.newBuilder[DataFrame]
+    // the opt-in new-NEW tier runs BEFORE the standing filters: a
+    // stream doc that near-dups standing content must still seed the
+    // intra state (its own later twins belong to the same cluster the
+    // batch rule would collapse)
+    def exact(cur: DataFrame): DataFrame = {
+      val first = cur
+        .withColumn("_digest", md5(col("clean_text")))
+        .withWatermark(tsCol, watermark)
+        .dropDuplicatesWithinWatermark("_digest")
       if (cfg.intraNearDupVerified)
-        Dedup.streamIntraVerifiedDedup(exact, "clean_text", tsCol,
+        Dedup.streamIntraVerifiedDedup(first, "clean_text", tsCol,
           cfg.shingleN, cfg.minJaccard, cfg.numHashes, cfg.rowsPerBand)
       else if (cfg.intraNearDup)
-        Dedup.streamIntraBandDedup(exact, "clean_text",
+        Dedup.streamIntraBandDedup(first, "clean_text",
           cfg.shingleN, cfg.numHashes, cfg.rowsPerBand)
-      else exact
-    val (textFiltered, textCaches) = standing match {
-      case None => (within.drop("_digest"), Seq.empty[DataFrame])
-      case Some(st) =>
-        // cache both standing-side lookups: a stream-static join
-        // re-executes the static side EVERY micro-batch, so without
-        // the cache each batch would pay a full standing-corpus
-        // scan/shuffle — per-batch cost must follow the batch, not
-        // the corpus (bandVerifyLookup's own build-once contract).
-        // They live for the stream's lifetime; restart the stream to
-        // refresh them after a standing-corpus compaction, and
-        // release them through the returned StreamCaches handle when
-        // the stream is done.
-        val oldDig = standingIndex
-          .map(_.select(col("_digest")).distinct())
-          .getOrElse(st.select(md5(col("clean_text")).as("_digest")).distinct())
-          .cache()
-        val lookup = Dedup.bandVerifyLookup(st, "clean_text", idCol,
-            cfg.shingleN, cfg.numHashes, cfg.rowsPerBand, cfg.maxBucket,
-            standingIndex)
-          .cache()
-        val exactKept = within.join(oldDig, Seq("_digest"), "left_anti")
-          .drop("_digest")
-        (Dedup.streamNearDupFilter(exactKept, "clean_text", lookup,
-          cfg.shingleN, cfg.minJaccard, cfg.numHashes, cfg.rowsPerBand),
-          Seq(oldDig, lookup))
+      else first
     }
-    // SEMANTIC standing tier, the live twin of semanticIncremental:
-    // drop rows whose embedding ADC-verifies against a standing
-    // member of a probed inverted list — zero stream state, the
-    // byte-compressed lookup cached like the text lookups (its 8×
-    // compression is what keeps a large standing corpus resident).
-    // Runs AFTER the text tiers: a textual dup is the cheaper drop.
-    val (semFiltered, allCaches) = semanticLookup match {
-      case None => (textFiltered, textCaches)
-      case Some(lk) =>
-        val lkCached = lk.cache()
-        // codec routing mirrors semanticIncremental: SQ rides the IVF
-        // list lookup, BQ the band-keyed lookup (same band geometry
-        // as bqBandCandidates — the live twin of the batch BQ route)
-        val filtered = cfg.bqModel.fold(
-          Similarity.streamSemanticFilter(textFiltered, cfg.embCol.get,
-            lkCached, cfg.codebook.get, cfg.sqModel.get, cfg.minCosine,
-            cfg.nprobe))(bqm =>
-          Similarity.streamSemanticFilterBq(textFiltered, cfg.embCol.get,
-            lkCached, bqm, cfg.minCosine, cfg.bqBands, cfg.bqMaxHamming))
-        (filtered, textCaches :+ lkCached)
-    }
-    // SIGNATURE standing tiers (image dHash, audio fingerprint):
-    // hash row-locally, probe the prebuilt standing hash index —
-    // four stream-static equi-joins plus a row-local Hamming exists
-    // (Dedup.hashNearDupFilterAgainst is append-legal by
-    // construction). Each index is cached like the other standing
-    // lookups: a stream-static join re-executes the static side
-    // every micro-batch. Runs after the text/semantic tiers — a
-    // textual dup is the cheaper drop.
-    val tierIdx = Map("image" -> imageIndex, "audio" -> audioIndex)
-    val (imgFiltered, imgCaches) =
-      signatureTiers(cfg).foldLeft((semFiltered, allCaches)) {
-        case ((cur, caches), tier) =>
-          val idxCached = tierIdx(tier.label).get.cache()
-          (Dedup.hashNearDupFilterAgainst(
-              tier.withHash(cur, tier.binaryCol, tier.workCol),
-              tier.workCol, idxCached, tier.maxHamming)
-            .drop(tier.workCol), caches :+ idxCached)
-      }
-    // sampleRate is stream-legal, unlike the other batch-only stages:
-    // the md5 draw is a pure row-local filter (no shuffle, no state),
-    // and its determinism means a restart redraws identically. Same
-    // LAST position and salt as the batch path, so a stream survivor
-    // set equals run()'s on the same rows. The rate expression must
-    // itself be row-local (a literal or a function of the row) —
-    // corpus-statistic rates belong to runIncremental, like every
-    // other corpus statistic here.
-    val sampled = cfg.sampleRate.fold(imgFiltered)(
-      Mixing.stratifiedSample(imgFiltered, idCol, _, salt = "corpusprep"))
-    (sampled, new StreamCaches(imgCaches))
+    val out = streamStages(docs, textCol, idCol, cfg, Hold((df, _) => df),
+      exact, { df => val c = df.cache(); caches += c; c }, standing,
+      standingIndex, semanticLookup, tierIdx).last.out
+    (out, new StreamCaches(caches.result()))
   }
 
   /** Yield report: rows in, rows out, reduction percentage. */

@@ -1635,7 +1635,8 @@ object Dedup {
       fs: org.apache.hadoop.fs.FileSystem, path: String,
       gen: String): HashIndexMeta = {
     import spark.implicits._
-    spark.read.parquet(metaDir(fs, path, gen)).as[HashIndexMeta].head()
+    spark.read.parquet(StandingIndex.visibleFiles(fs, metaDir(fs, path, gen)): _*)
+      .as[HashIndexMeta].head()
   }
 
   /** `gen`'s record dir. A generation without one — a root written

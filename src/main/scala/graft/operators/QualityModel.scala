@@ -356,7 +356,7 @@ object QualityModel {
     * labels — the classifier twin of the retrieval stack's
     * `rankMetrics`/`recallAtK`, answering "is the gate any good"
     * from one pass: confusion-matrix metrics at the gate `threshold`
-    * (the same `>=` the facade's qmGate applies) plus threshold-free
+    * (the same `>=` the facade's qmGateAt applies) plus threshold-free
     * AUC via the Mann–Whitney rank statistic with AVERAGE ranks over
     * ties — integer/half-integer arithmetic end to end, so the
     * number replays exactly in any engine (the q125 device applied

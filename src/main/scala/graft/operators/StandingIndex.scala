@@ -155,11 +155,17 @@ private[operators] object StandingIndex {
     * the snapshot, survives the clear, and stays pending, instead of
     * being erased unapplied. An existing-but-file-less dir reads as
     * "no tombstones" (a cleared snapshot may leave the empty dir). */
-  def tombstoneFiles(fs: FileSystem, path: String): Seq[String] = {
-    val dir = new Path(tombstoneDir(path))
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath)
-      .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+  def tombstoneFiles(fs: FileSystem, path: String): Seq[String] =
+    visibleFiles(fs, tombstoneDir(path))
+
+  /** The data files directly under `dir` (none when it is missing) —
+    * how a `_`-prefixed dir is read: Spark's file index takes such a
+    * path for a hidden one and warns when it is read by name. */
+  def visibleFiles(fs: FileSystem, dir: String): Seq[String] = {
+    val p = new Path(dir)
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq.map(_.getPath)
+      .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
       .map(_.toString)
   }
 
@@ -194,16 +200,16 @@ private[operators] object StandingIndex {
       idCol: String): Unit = {
     require(ids.columns.length == 1,
       s"ids must be a single-column frame, got ${ids.columns.mkString(", ")}")
-    val dir = tombstoneDir(path)
-    if (fs.exists(new Path(dir))) {
-      val existing = ids.sparkSession.read.parquet(dir).columns
+    val files = tombstoneFiles(fs, path)
+    if (files.nonEmpty) {
+      val existing = ids.sparkSession.read.parquet(files: _*).columns
       require(existing.sameElements(Array(idCol)),
         s"index at $path already has tombstones on '${existing.mkString(",")}'" +
           s", got idCol '$idCol'")
     }
     val newIds = ids.select(col(ids.columns.head).as(idCol))
       .filter(col(idCol).isNotNull).distinct()
-    if (!newIds.isEmpty) newIds.write.mode("append").parquet(dir)
+    if (!newIds.isEmpty) newIds.write.mode("append").parquet(tombstoneDir(path))
   }
 
   /** Refuse an append that re-adds a tombstoned id: probes anti-join

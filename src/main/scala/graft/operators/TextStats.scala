@@ -617,6 +617,7 @@ object TextStats {
     require(!Set("token", "tf", "len", "_tb", "score", "rank").contains(idCol),
       s"idCol '$idCol' collides with the index's internal/probe column names")
     require(tokenBuckets >= 1, s"tokenBuckets must be >= 1, got $tokenBuckets")
+    require(maxPostings >= 1, s"maxPostings must be >= 1, got $maxPostings")
     val spark = corpus.sparkSession
     val fs = StandingIndex.fs(spark, path)
     StandingIndex.rewrite(fs, path, StandingIndex.Bm25) { (dir, _) =>

@@ -23,9 +23,12 @@ import scala.collection.mutable
   * job sorted by submission, then one line per action (Dataset call
   * that ran a query) with its analysis, optimization and planning
   * milliseconds from the query's `QueryPlanningTracker` — the driver
-  * work a job list shows only as gaps. The timed action mirrors the
-  * Bench's (`GRAFT_BENCH_ACTION`: noop-sink write by default, `count`
-  * for the legacy action), so the job list is the scored work.
+  * work a job list shows only as gaps — and one line per stage where
+  * a single task ran for >=80% of the stage's wall (`skewed`), with
+  * its task count: a stage a wider split would not have shortened.
+  * The timed action mirrors the Bench's (`GRAFT_BENCH_ACTION`:
+  * noop-sink write by default, `count` for the legacy action), so the
+  * job list is the scored work.
   * Profiling only — never part of Bench/Verify.
   *
   * Attribution caveat (r17 advice): stage→job mapping is last-write-
@@ -76,9 +79,20 @@ object JobProfile {
       jobs.get(e.jobId).foreach(_.finished = e.time)
     }
     val stageRows = mutable.ArrayBuffer.empty[String]
+    val taskMs = mutable.Map.empty[Int, mutable.ArrayBuffer[Long]]
+    val skewRows = mutable.ArrayBuffer.empty[String]
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      taskMs.getOrElseUpdate(e.stageId, mutable.ArrayBuffer.empty) += e.taskInfo.duration
+    }
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
       synchronized {
         val si = e.stageInfo
+        val wallMs = (for (s <- si.submissionTime; c <- si.completionTime) yield c - s)
+          .getOrElse(0L)
+        val durs = taskMs.remove(si.stageId).fold(Seq.empty[Long])(_.toSeq)
+        if (skewed(wallMs, durs)) skewRows +=
+          f"  stage ${si.stageId}%5d tasks ${si.numTasks}%4d wallSec ${wallMs / 1e3}%7.3f " +
+          f"maxTaskSec ${durs.max / 1e3}%7.3f ${si.name.takeWhile(_ != '\n').take(100)}"
         stageToJob.get(si.stageId).foreach { jid =>
           tasks(jid) += si.numTasks
           val m = si.taskMetrics
@@ -99,9 +113,14 @@ object JobProfile {
       jobs.clear(); stageToJob.clear(); tasks.clear(); taskTimeMs.clear()
       execDesc.clear()
       shufRead.clear(); shufWrite.clear(); inputBytes.clear()
-      stageRows.clear()
+      stageRows.clear(); taskMs.clear(); skewRows.clear()
     }
   }
+
+  /** The stage-skew predicate: one task ran for at least 80% of its
+    * stage's wall time, so the stage waited on that one task. */
+  def skewed(stageWallMs: Long, taskMs: Seq[Long]): Boolean =
+    stageWallMs > 0 && taskMs.nonEmpty && taskMs.max >= 0.8 * stageWallMs
 
   /** Per action: its name, then its analysis, optimization, planning
     * and run milliseconds (run is -1 for a failed action). */
@@ -173,6 +192,10 @@ object JobProfile {
       if (lst.stageRows.nonEmpty) {
         println("-- stages with >=0.5s summed task run time --")
         lst.stageRows.foreach(println)
+      }
+      if (lst.skewRows.nonEmpty) {
+        println("-- stages where one task ran >=80% of the stage's wall --")
+        lst.skewRows.foreach(println)
       }
     }
     spark.stop()

@@ -274,6 +274,62 @@ class CorpusPrepSpec extends SparkSpecBase {
       .collect()(0)
     assert(tw.getString(1) == "exact" && tw.getString(2).contains("doc 11") &&
       tw.getString(2).contains("first ARRIVAL"), tw.toString)
+    // second input, the row-local front on: the LM knows all five
+    // reference sentences, the quality model labels the lorem one
+    // crawl junk, the n-gram Bloom holds the pangram, the bench
+    // embedding sits next to the sphinx doc — so each front tier owns
+    // exactly one drop, in stage order
+    val fox = "the quick brown fox jumps over the lazy dog again"
+    val lorem = "lorem ipsum dolor sit amet consectetur adipiscing elit sed do"
+    val pack = "pack my box with five dozen liquor jugs now please"
+    val sphinx = "sphinx of black quartz judge my vow today and tomorrow"
+    val wizards = "the five boxing wizards jump quickly over every fence"
+    val ref = Seq(fox, lorem, pack, sphinx, wizards).flatMap(Seq.fill(30)(_))
+      .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val labeled = (Seq(fox, pack, sphinx, wizards).flatMap(t => Seq.fill(10)((t, 1))) ++
+      Seq.fill(40)((lorem, 0))).zipWithIndex.map { case ((t, l), i) => (i.toLong, t, l) }
+    val cfg = CorpusPrep.Config(minChars = 20, maxRepetition = 0.9,
+      lmModel = Some(TextStats.bigramModel(ref, "text")), minLmLogProb = -2.5,
+      qualityModel = Some(QualityModel.train(labeled.toDF("doc_id", "text", "label"),
+        "text", "label", dims = 256, iters = 6, lr = 2.0)),
+      minQualityScore = 0.5,
+      ngramBloom = Some(Dedup.buildShingleBloom(
+        Seq("pack my box with five dozen liquor jugs").toDF("text"), "text",
+        n = 4, fpp = 1e-6)), ngramBloomN = 4,
+      embCol = Some("emb"),
+      benchEmb = Some(Seq((100L, Seq(5.0, 5.01, 0.0, 0.0))).toDF("bid", "e")),
+      benchEmbCol = "e", benchMinCosine = 0.999)
+    val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
+    val batch = Seq(
+      (1L, fox, Seq(0.0, 0.0, 9.0, 0.0), ts),
+      (2L, "zq xv qq vx zz qx vz xq zv qv xx vv zqx vxq", Seq(0.0, 0.0, 0.0, 7.0), ts),
+      (3L, lorem, Seq(0.0, 9.0, 0.0, 0.0), ts),
+      (4L, pack, Seq(0.0, 0.0, 3.0, 4.0), ts),
+      (5L, sphinx, Seq(5.01, 5.0, 0.0, 0.0), ts),
+      (6L, wizards, Seq(1.0, 0.0, 0.0, 1.0), ts),
+      (7L, "too short", Seq(1.0, 1.0, 1.0, 1.0), ts)
+    ).toDF("doc_id", "text", "emb", "ts")
+    withTempDir("trace-front") { sd =>
+      batch.coalesce(1).write.parquet(s"${sd.getAbsolutePath}/in")
+      val q = CorpusPrep.prepStream(spark.readStream
+          .schema("doc_id BIGINT, text STRING, emb ARRAY<DOUBLE>, ts TIMESTAMP")
+          .parquet(s"${sd.getAbsolutePath}/in"), "text", "ts", cfg)
+        .writeStream.format("memory").queryName("trace_front_out")
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination(120000)
+      val streamKept = spark.table("trace_front_out")
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      val stage = CorpusPrep.prepTraceStream(batch, (1L to 7L).toDF("id"),
+          "text", cfg = cfg)
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(stage == Map(1L -> "kept", 2L -> "lm", 3L -> "qm", 4L -> "ngram",
+        5L -> "semdecontam", 6L -> "kept", 7L -> "gated"), s"$stage")
+      val traceKept = stage.collect { case (id, "kept") => id }.toSet
+      assert(traceKept == streamKept,
+        s"trace kept $traceKept vs stream kept $streamKept")
+    }
   }
 
   test("prepTraceIncremental: kept set equals runIncremental's; per-route evidence incl. the taint rule") {

@@ -270,8 +270,7 @@ class HashBandIndexSpec extends SparkSpecBase {
       val stats = Dedup.hashBandIndexStats(spark, path)
       assert(stats.ndocs == 4 && stats.capDroppedBands == 0,
         s"meta diverged: $stats")
-      val totalBands = spark.read.parquet(s"${stats.indexDir}/_meta")
-        .select("total_bands").collect()(0).getLong(0)
+      val totalBands = servedRecord(path)("total_bands")
       assert(totalBands == stats.bands,
         s"observe-derived total_bands $totalBands != recounted ${stats.bands}")
     }
@@ -360,7 +359,8 @@ class HashBandIndexSpec extends SparkSpecBase {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_meta")),
       s"a root-level _meta exists under $path")
     val gen = StandingIndex.currentDir(fs, path, StandingIndex.HashBand)
-    val rows = spark.read.parquet(s"$gen/_meta").collect()
+    val rows = spark.read.parquet(
+      StandingIndex.visibleFiles(fs, s"$gen/_meta"): _*).collect()
     assert(rows.length == 1, s"record of $gen has ${rows.length} rows")
     rows(0).getValuesMap[Any](rows(0).schema.fieldNames)
   }

@@ -255,6 +255,19 @@ class TextStatsSpec extends SparkSpecBase {
     assert(math.abs(byId(11L) - exp11) < 5e-5, s"${byId(11L)} vs $exp11")
   }
 
+  test("writeBm25Index refuses maxPostings < 1 on the driver: no job, no generation, no lock") {
+    val corpus = Seq((1L, "apple banana"), (2L, "banana cherry")).toDF("doc_id", "text")
+    withTempDir("bm25-cap0") { dir =>
+      val (e, jobs) = countJobs(intercept[IllegalArgumentException] {
+        TextStats.writeBm25Index(corpus, "text", "doc_id", dir.getAbsolutePath,
+          maxPostings = 0)
+      })
+      assert(e.getMessage.contains("maxPostings must be >= 1"), e.getMessage)
+      assert(jobs == 0, s"refusal ran $jobs jobs first")
+      assert(dir.list().isEmpty, s"left behind: ${dir.list().mkString(", ")}")
+    }
+  }
+
   test("bm25 index: write/read probe equals bm25TopK; append equals a fresh rebuild") {
     import spark.implicits._
     val corpus = Seq(

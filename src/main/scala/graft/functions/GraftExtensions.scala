@@ -2,124 +2,65 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** SparkSessionExtensions entry point: deployments add
   * `spark.sql.extensions=graft.functions.GraftExtensions` (or
   * `.withExtensions(new GraftExtensions)`) and the engine's native
-  * expressions resolve in plain SQL on every session — no per-session
-  * register() call. UDF-backed helpers still come from
-  * VulFunctions.register (UDF registration is session-state, not an
-  * extension injection). */
+  * expressions resolve in plain SQL on every session. A session built
+  * without the extension gets the same table from
+  * `VulFunctions.register`, which also adds the `version_parse` UDF
+  * (UDF registration is session state, not an extension injection). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(extensions: SparkSessionExtensions): Unit = {
-    extensions.injectFunction((
-      new FunctionIdentifier("version_cmp"),
-      new ExpressionInfo(classOf[VersionCmp].getName, "version_cmp"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        if (exprs.length != 2)
-          throw new IllegalArgumentException(
-            s"version_cmp requires exactly 2 arguments, got ${exprs.length}")
-        VersionCmp(exprs(0), exprs(1))
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("version_key"),
-      new ExpressionInfo(classOf[VersionKey].getName, "version_key"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(exprs.length == 1,
-          s"version_key requires 1 argument, got ${exprs.length}")
-        VersionKey(exprs.head)
-      }))
+    GraftExtensions.functions.foreach(extensions.injectFunction)
     // SURVEY §4.2's optional Rule: version_cmp interval joins
     // rewrite to bucket equi-joins on the version_key coarsening
     // (exact — unkeyable residue unions back via nested loop).
     // spark.graft.versionIntervalJoin.enabled=false opts out.
     extensions.injectOptimizerRule(_ => graft.plans.VersionIntervalJoinRule)
-    extensions.injectFunction((
-      new FunctionIdentifier("version_valid"),
-      new ExpressionInfo(classOf[VersionValid].getName, "version_valid"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(exprs.length == 1, s"version_valid requires 1 argument, got ${exprs.length}")
-        VersionValid(exprs.head)
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("cve_year"),
-      new ExpressionInfo(classOf[CveYearExpr].getName, "cve_year"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(exprs.length == 1, s"cve_year requires 1 argument, got ${exprs.length}")
-        CveYearExpr(exprs.head)
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("shingles"),
-      new ExpressionInfo(classOf[ShinglesExpr].getName, "shingles"),
-      TextExpressions.fromSeqShingles _))
-    extensions.injectFunction((
-      new FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinhashSigExpr].getName, "minhash_sig"),
-      TextExpressions.fromSeqMinhash _))
-    extensions.injectFunction((
-      new FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64Expr].getName, "simhash64"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(exprs.length == 1, s"simhash64 requires 1 argument, got ${exprs.length}")
-        SimHash64Expr(exprs.head)
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(classOf[BloomMightContainExpr].getName, "bloom_might_contain"),
-      TextExpressions.fromSeqBloom _))
-    extensions.injectFunction((
-      new FunctionIdentifier("parse_range_expr"),
-      new ExpressionInfo(classOf[ParseRangeExprE].getName, "parse_range_expr"),
-      RangeExpressions.fromSeqParse _))
-    extensions.injectFunction((
-      new FunctionIdentifier("range_contains"),
-      new ExpressionInfo(classOf[RangeContainsE].getName, "range_contains"),
-      RangeExpressions.fromSeqContains _))
-    extensions.injectFunction((
-      new FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalizeExpr].getName, "nfc_normalize"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(exprs.length == 1, s"nfc_normalize requires 1 argument, got ${exprs.length}")
-        NfcNormalizeExpr(exprs.head)
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(exprs.length == 2, s"cosine_sim requires 2 arguments, got ${exprs.length}")
-        CosineSim(exprs(0), exprs(1))
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(exprs.length == 2, s"dot_product requires 2 arguments, got ${exprs.length}")
-        DotProduct(exprs(0), exprs(1))
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("simhash64_text"),
-      new ExpressionInfo(classOf[SimHash64TextExpr].getName, "simhash64_text"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(exprs.length == 1, s"simhash64_text requires 1 argument, got ${exprs.length}")
-        SimHash64TextExpr(exprs.head)
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("repetition_stats"),
-      new ExpressionInfo(classOf[RepetitionStatsExpr].getName,
-        "repetition_stats"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(exprs.length == 1,
-          s"repetition_stats requires 1 argument, got ${exprs.length}")
-        RepetitionStatsExpr(exprs.head)
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("top_k"),
-      new ExpressionInfo(classOf[TopKAgg].getName, "top_k"),
-      TopKAgg.fromSeqTopK _))
-    extensions.injectFunction((
-      new FunctionIdentifier("heavy_hitters"),
-      new ExpressionInfo(classOf[HeavyHittersAgg].getName, "heavy_hitters"),
-      HeavyHittersAgg.fromSeqHeavyHitters _))
   }
+}
+
+object GraftExtensions {
+
+  /** The one list of the engine's native SQL functions, in the shape
+    * `injectFunction` and `FunctionRegistry.registerFunction` both
+    * take. */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    fixed("version_cmp", classOf[VersionCmp], 2)(e => VersionCmp(e(0), e(1))),
+    fixed("version_key", classOf[VersionKey], 1)(e => VersionKey(e(0))),
+    fixed("version_valid", classOf[VersionValid], 1)(e => VersionValid(e(0))),
+    fixed("cve_year", classOf[CveYearExpr], 1)(e => CveYearExpr(e(0))),
+    native("shingles", classOf[ShinglesExpr], TextExpressions.fromSeqShingles),
+    native("minhash_sig", classOf[MinhashSigExpr], TextExpressions.fromSeqMinhash),
+    fixed("simhash64", classOf[SimHash64Expr], 1)(e => SimHash64Expr(e(0))),
+    fixed("simhash64_text", classOf[SimHash64TextExpr], 1)(e => SimHash64TextExpr(e(0))),
+    fixed("nfc_normalize", classOf[NfcNormalizeExpr], 1)(e => NfcNormalizeExpr(e(0))),
+    native("bloom_might_contain", classOf[BloomMightContainExpr], TextExpressions.fromSeqBloom),
+    fixed("repetition_stats", classOf[RepetitionStatsExpr], 1)(e => RepetitionStatsExpr(e(0))),
+    native("parse_range_expr", classOf[ParseRangeExprE], RangeExpressions.fromSeqParse),
+    native("range_contains", classOf[RangeContainsE], RangeExpressions.fromSeqContains),
+    fixed("cosine_sim", classOf[CosineSim], 2)(e => CosineSim(e(0), e(1))),
+    fixed("dot_product", classOf[DotProduct], 2)(e => DotProduct(e(0), e(1))),
+    native("top_k", classOf[TopKAgg], TopKAgg.fromSeqTopK),
+    native("heavy_hitters", classOf[HeavyHittersAgg], HeavyHittersAgg.fromSeqHeavyHitters))
+
+  private def native(name: String, cls: Class[_],
+      build: FunctionBuilder): (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
+    (new FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+
+  /** A fixed-arity function: the wrong argument count fails at
+    * analysis with the function's name, not deep inside the
+    * expression. */
+  private def fixed(name: String, cls: Class[_], arity: Int)(
+      build: FunctionBuilder): (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
+    native(name, cls, exprs => {
+      if (exprs.length != arity)
+        throw new IllegalArgumentException(
+          s"$name requires exactly $arity argument${if (arity == 1) "" else "s"}, " +
+            s"got ${exprs.length}")
+      build(exprs)
+    })
 }

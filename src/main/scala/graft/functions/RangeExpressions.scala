@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -94,13 +93,5 @@ object RangeExpressions {
   def fromSeqContains(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2, s"range_contains requires 2 arguments, got ${exprs.length}")
     RangeContainsE(exprs(0), exprs(1))
-  }
-
-  /** Register both for SQL use on this session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "parse_range_expr", fromSeqParse, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "range_contains", fromSeqContains, "built-in")
   }
 }

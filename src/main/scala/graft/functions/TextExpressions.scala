@@ -3,7 +3,6 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -604,36 +603,6 @@ object TextExpressions {
       intLit(exprs(1), "minhash_sig", "n"), intLit(exprs(2), "minhash_sig", "k"))
   }
 
-  /** Register the text kernels for SQL use on this session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingles", fromSeqShingles, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig", fromSeqMinhash, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => {
-        require(exprs.length == 1, s"simhash64 requires 1 argument, got ${exprs.length}")
-        SimHash64Expr(exprs.head)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64_text", exprs => {
-        require(exprs.length == 1, s"simhash64_text requires 1 argument, got ${exprs.length}")
-        SimHash64TextExpr(exprs.head)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => {
-        require(exprs.length == 1, s"nfc_normalize requires 1 argument, got ${exprs.length}")
-        NfcNormalizeExpr(exprs.head)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain", fromSeqBloom, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "repetition_stats", exprs => {
-        require(exprs.length == 1,
-          s"repetition_stats requires 1 argument, got ${exprs.length}")
-        RepetitionStatsExpr(exprs.head)
-      }, "built-in")
-  }
 
   def fromSeqBloom(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2,

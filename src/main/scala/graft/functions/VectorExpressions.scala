@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -753,16 +752,4 @@ object VectorExpressions {
     * construct such arrays (transform/cast preserve only WHOLE-array
     * nulls), but a caller feeding hand-built arrays with null slots
     * is outside the kernels' contract. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => {
-        require(exprs.length == 2, s"cosine_sim requires 2 arguments, got ${exprs.length}")
-        CosineSim(exprs(0), exprs(1))
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => {
-        require(exprs.length == 2, s"dot_product requires 2 arguments, got ${exprs.length}")
-        DotProduct(exprs(0), exprs(1))
-      }, "built-in")
-  }
 }

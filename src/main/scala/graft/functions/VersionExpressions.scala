@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, StringType}
@@ -156,30 +155,4 @@ object VersionExpressions {
   /** Column API: cve_year(s). */
   def cve_year(s: Column): Column =
     GraftBridge.column(CveYearExpr(GraftBridge.expression(s)))
-
-  /** Register the version-family expressions for SQL use. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "version_cmp", exprs => {
-        if (exprs.length != 2)
-          throw new IllegalArgumentException(
-            s"version_cmp requires exactly 2 arguments, got ${exprs.length}")
-        VersionCmp(exprs(0), exprs(1))
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "version_valid", exprs => {
-        require(exprs.length == 1, s"version_valid requires 1 argument, got ${exprs.length}")
-        VersionValid(exprs.head)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "version_key", exprs => {
-        require(exprs.length == 1, s"version_key requires 1 argument, got ${exprs.length}")
-        VersionKey(exprs.head)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cve_year", exprs => {
-        require(exprs.length == 1, s"cve_year requires 1 argument, got ${exprs.length}")
-        CveYearExpr(exprs.head)
-      }, "built-in")
-  }
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 
 import graft.core.{PkgVersion, Severity}
@@ -61,11 +62,17 @@ object VulFunctions {
 
   // ---- SQL registration ------------------------------------------------
 
+  /** Register `GraftExtensions.functions` and the `version_parse` UDF
+    * on a session, skipping every name the session already resolves
+    * (the extension injected it, or an earlier call registered it):
+    * re-registering would replace a live function and log a warning
+    * per name on every session build and query run. */
   def register(spark: SparkSession): Unit = {
-    VersionExpressions.register(spark)
-    TextExpressions.register(spark)
-    RangeExpressions.register(spark)
-    VectorExpressions.register(spark)
-    spark.udf.register("version_parse", versionParseF)
+    val registry = spark.sessionState.functionRegistry
+    GraftExtensions.functions.foreach { case (id, info, build) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, build)
+    }
+    if (!registry.functionExists(FunctionIdentifier("version_parse")))
+      spark.udf.register("version_parse", versionParseF)
   }
 }

@@ -258,99 +258,6 @@ object Bpe {
     Learned(mergesDf, vocab, rounds)
   }
 
-  /** Persist a learned tokenizer (ordered merge table + word→symbols
-    * vocabulary) as parquet — learn once on the big corpus, then
-    * `readLearned` + `segment` every batch without replaying a single
-    * merge round. The merge table IS the standard BPE artifact shape
-    * (rank-ordered pairs), so it also exports cleanly to other
-    * tokenizer runtimes. */
-  def writeLearned(learned: Learned, path: String): Unit = {
-    learned.merges.write.mode("overwrite").parquet(s"$path/merges")
-    learned.vocab.write.mode("overwrite").parquet(s"$path/vocab")
-    writeMergesText(learned.merges, s"$path/merges.txt")
-  }
-
-  /** Export the merge table in the standard one-"l r"-per-line text
-    * shape (rank order, `#version` header) that external tokenizer
-    * runtimes consume directly — the interop artifact alongside the
-    * parquet. The table is numMerges-bounded by contract, so the
-    * driver-side collect is the codebook-literal trade; the write
-    * goes through the path's own Hadoop FileSystem (hdfs://-s3a://
-    * artifact roots work like local ones). Symbols containing
-    * whitespace would make the format ambiguous — impossible for
-    * merges learned here (words are whitespace-split), so a foreign
-    * table carrying one fails loudly instead of exporting garbage. */
-  def writeMergesText(merges: DataFrame, file: String): Unit = {
-    val rows = merges.select("rank", "left", "right").collect()
-      .sortBy(_.getInt(0))
-      .map { r =>
-        val (l, rr) = (r.getString(1), r.getString(2))
-        require(!(l + rr).exists(_.isWhitespace),
-          s"merge pair ('$l', '$rr') contains whitespace — not expressible " +
-            "in the space-separated text format")
-        val line = s"$l $rr"
-        // '#'-starting symbols (code/hashtag corpora) are legal data —
-        // the reader skips only the '#version' header line — but a
-        // merge line that ITSELF reads as that header would vanish on
-        // read-back, silently shifting every later rank. Refuse it.
-        require(!line.startsWith("#version"),
-          s"merge pair ('$l', '$rr') renders as a '#version' header line — " +
-            "not expressible in the text format")
-        line
-      }
-    val p = new org.apache.hadoop.fs.Path(file)
-    val fs = p.getFileSystem(
-      merges.sparkSession.sessionState.newHadoopConf())
-    val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-      fs.create(p, true), java.nio.charset.StandardCharsets.UTF_8))
-    try {
-      out.write("#version: 0.2\n")
-      rows.foreach { l => out.write(l); out.write("\n") }
-    } finally out.close()
-  }
-
-  /** Read a text-form merge table back (rank from line order, counts
-    * absent — the text shape does not carry them). The result plugs
-    * into `segment` as `Learned(merges, emptyVocab, 0)`: every word
-    * takes the OOV merge-rule path, which reproduces the trained
-    * segmentation exactly (applyMerges' rank-order argument — pinned
-    * by BpeSpec). */
-  def readMergesText(spark: org.apache.spark.sql.SparkSession, file: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(file)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = fs.open(p)
-    val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-      finally in.close()
-    // skip ONLY the '#version' header (standard readers do the same),
-    // not every '#'-prefixed line: a merge whose left symbol starts
-    // with '#' (code/hashtag corpora — including the bare-'#' left of
-    // ('#','i'), which writes as '# i') is real data, and dropping it
-    // would silently shift all later ranks and change segmentation.
-    // The format carries NO comments beyond the header, so a
-    // hand-added two-token '# note' line is out of spec and reads as
-    // the merge ('#','note'); lines of any other shape fail the
-    // 'left right' require below loudly.
-    val pairs = lines
-      .filterNot(l => l.startsWith("#version") || l.trim.isEmpty)
-      .zipWithIndex
-      .map { case (l, i) =>
-        val parts = l.split(" ", -1)
-        require(parts.length == 2 && parts.forall(_.nonEmpty),
-          s"merges.txt line ${i + 1} is not 'left right': '$l'")
-        (i, parts(0), parts(1))
-      }
-    import spark.implicits._
-    pairs.toDF("rank", "left", "right")
-      .withColumn("merged", concat(col("left"), col("right")))
-  }
-
-  /** Read a persisted tokenizer back. `rounds` is 0 on a read-back
-    * artifact (no learning happened in this session). */
-  def readLearned(spark: org.apache.spark.sql.SparkSession, path: String): Learned =
-    Learned(spark.read.parquet(s"$path/merges"),
-      spark.read.parquet(s"$path/vocab"), rounds = 0)
-
   /** Per-word exploded token stream: (idCol, _pos, word).
     * posexplode_outer keeps zero-word (empty/null text) docs as a
     * single null-word row, so they come out with subwords=[] and

@@ -302,9 +302,9 @@ object CorpusPrep {
     bqMaxHamming: Int = Int.MaxValue,
     // LM-QUALITY gate (the CCNet-style setup): score `clean_text`
     // under a FOREIGN bigram model trained once on a trusted
-    // reference corpus (TextStats.bigramModel + writeBigramLm /
-    // readBigramLm) and drop docs whose smoothed per-bigram average
-    // log-probability falls below `minLmLogProb` — the fluency floor
+    // reference corpus (TextStats.bigramModel) and drop docs whose
+    // smoothed per-bigram average log-probability falls below
+    // `minLmLogProb` — the fluency floor
     // that catches gibberish, boilerplate soup, and wrong-language
     // text the length/repetition gates pass. Zero-bigram docs
     // (< 2 tokens) carry no signal and are KEPT (no silent loss on
@@ -1576,10 +1576,10 @@ object CorpusPrep {
     * `run`, then deduped against the standing corpus via
     * `Dedup.dropIncrementalDuplicates` (exact + near tiers,
     * full-rerun cluster semantics — the standing side is never
-    * re-clustered; pass `oldIndex` from `Dedup.writeDedupIndex` so
-    * it is never even re-hashed — build it with
-    * `Dedup.writeDedupIndex(standing, path, textCol = "clean_text")`
-    * so the index hashes the SAME column this method probes; a
+    * re-clustered; pass `oldIndex` from `Dedup.dedupIndex` so it is
+    * never even re-hashed — build it with
+    * `Dedup.dedupIndex(standing, "clean_text", idCol)` so the index
+    * hashes the SAME column this method probes; a
     * mismatched index fails the config check). The boilerplate gate's
     * span census covers standing + batch, and `keepPreference`
     * applies to pure-batch near-dup clusters. Ids must be unique
@@ -1724,7 +1724,7 @@ object CorpusPrep {
     * at `cfg.minJaccard`+ exact shingle Jaccard drop — the standing
     * survivor wins, per-row with NO stream state
     * (Dedup.bandVerifyLookup / streamNearDupFilter; pass
-    * `standingIndex` from Dedup.writeDedupIndex built over
+    * `standingIndex` from Dedup.dedupIndex built over
     * `clean_text` to skip re-hashing the standing side —
     * `_cfg`-pinned like runIncremental). New-NEW near-dups inside
     * the stream are left to the batch tier by default;

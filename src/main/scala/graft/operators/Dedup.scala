@@ -548,7 +548,10 @@ object Dedup {
     * path needs from yesterday's corpus EXCEPT the text (the exact
     * verify reads text only for candidate-touched docs). The `_cfg`
     * column pins the banding parameters so a mismatched reuse fails
-    * loudly instead of silently probing foreign bands. */
+    * loudly instead of silently probing foreign bands. Stored as plain
+    * parquet it is what makes tomorrow's incremental run cost
+    * O(batch): digests and band keys are deterministic, so the stored
+    * index is yesterday's computation reused verbatim. */
   def dedupIndex(docs: DataFrame, textCol: String, idCol: String,
       shingleN: Int = 3, numHashes: Int = 4, rowsPerBand: Int = 2): DataFrame =
     docs.select(col(idCol),
@@ -562,19 +565,6 @@ object Dedup {
       // raw text reused against a clean_text probe would silently
       // match nothing (same digests/bands formula, different input)
       .withColumn("_cfg", lit(s"$textCol/$shingleN/$numHashes/$rowsPerBand"))
-
-  /** Persist / reload the dedup index (plain parquet — at 100 TB this
-    * is the artifact that makes tomorrow's incremental run cost
-    * O(batch): digests and band keys are deterministic, so the stored
-    * index is yesterday's computation reused verbatim). */
-  def writeDedupIndex(docs: DataFrame, path: String,
-      textCol: String = "text", idCol: String = "doc_id",
-      shingleN: Int = 3, numHashes: Int = 4, rowsPerBand: Int = 2): Unit =
-    dedupIndex(docs, textCol, idCol, shingleN, numHashes, rowsPerBand)
-      .write.mode("overwrite").parquet(path)
-
-  def readDedupIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 
   /** The `_cfg` pin every index consumer shares: a supplied index must
     * carry exactly this call's banding config (INCLUDING the hashed
@@ -961,7 +951,7 @@ object Dedup {
       s"numHashes ($numHashes) must be a positive multiple of rowsPerBand ($rowsPerBand)")
     import org.apache.spark.sql.expressions.Window
 
-    // a supplied index (writeDedupIndex/readDedupIndex) replaces the
+    // a supplied index (`dedupIndex`, stored or not) replaces the
     // old side's digest+band recomputation; its banding config must
     // match this call's or the probe would search foreign bands
     requireIndexCfg(oldIndex, textCol, shingleN, numHashes, rowsPerBand)
@@ -1624,7 +1614,8 @@ object Dedup {
     * positional layout's shape ("" / -1 for the classic family) so
     * growth and positional reads refuse a different sampling width;
     * `hash_col` is the SOURCE column the signatures were computed from
-    * (fleet-report legibility, never a probe semantic). */
+    * (read by no code path — it names the source for whoever opens
+    * the record; never a probe semantic). */
   private[operators] final case class HashIndexMeta(ndocs: Long,
       total_bands: Long, cap_dropped_bands: Long, max_bucket: Long,
       id_col: String, pos_col: String, sample_cap: Long, hash_col: String)
@@ -2072,7 +2063,7 @@ object Dedup {
     * (`TextStats.bm25IndexStats` / `Similarity.indexStats`), so ONE
     * compaction-cadence policy can feed on all three families:
     * `rows` counts ON-DISK rows, servable = rows − tombstonedRows.
-    * `capDroppedBands`/`maxBucket`/`ndocs`/`posCol`/`hashCol` come
+    * `capDroppedBands`/`maxBucket`/`ndocs` come
     * from the served generation's `_meta` record (a compaction carries
     * its build's record over) — capDroppedBands is the standing recall
     * audit `readHashBandIndex`'s cap-honesty contract points at. Cost:
@@ -2081,8 +2072,7 @@ object Dedup {
   final case class HashBandIndexStats(indexDir: String, bands: Long,
       rows: Long, files: Long, bytes: Long,
       tombstonedIds: Long, tombstonedRows: Long,
-      capDroppedBands: Long, maxBucket: Long, ndocs: Long,
-      posCol: String = "", hashCol: String = "")
+      capDroppedBands: Long, maxBucket: Long, ndocs: Long)
 
   def hashBandIndexStats(spark: org.apache.spark.sql.SparkSession,
       path: String): HashBandIndexStats = {
@@ -2103,6 +2093,6 @@ object Dedup {
       StandingIndex.tombstoneFiles(fs, path))
     HashBandIndexStats(dir, agg0.getLong(1), agg0.getLong(0), files, bytes,
       tombIds, tombRows, meta.cap_dropped_bands, meta.max_bucket,
-      meta.ndocs, meta.pos_col, meta.hash_col)
+      meta.ndocs)
   }
 }

@@ -3098,14 +3098,14 @@ object Multimodal {
     * reasons about is frame-level); its `sample_cap` records the
     * width, and `pos_col` the position key.
     *
-    * Deletes, compaction, stats and the health sweep are the CLASSIC
+    * Deletes, compaction, stats and the health policy are the CLASSIC
     * family's entry points, unchanged — the layout is the same
     * family: `Dedup.deleteFromHashBandIndex` (tombstones by gif id;
     * all of an animation's frames stop matching at the next read),
     * `Dedup.compactHashBandIndex` (material removal under the atomic
     * swap), `Dedup.hashBandIndexStats` (band counts are
-    * position-aware, schema-derived), `IndexMaintenance.healthSweep`
-    * (the layout detects as `hashband`). Only read and growth need
+    * position-aware, schema-derived), `IndexMaintenance.healthOf`
+    * (the hash-band adapter). Only read and growth need
     * the positional entry points below — they are the two operations
     * whose semantics the position column changes. */
   def writeGifHashBandIndex(standing: DataFrame, gifCol: String,
@@ -3435,8 +3435,7 @@ object Multimodal {
 
   /** Persist the positional AUDIO index — `writeGifHashBandIndex`'s
     * layout and lifecycle (deletes/compaction/stats/health are the
-    * classic entry points; `IndexMaintenance.healthSweep` reports it
-    * as `hashband`/`positional`): one row per (`_k`, `_band`,
+    * classic entry points): one row per (`_k`, `_band`,
     * `sample_pos`, id, segment hash `_h`). Each generation's
     * `bands_vN/_meta.sample_cap` records `segmentFrames`, so a GIF
     * positional artifact (sample_cap = its nFrames) and an audio one

@@ -43,12 +43,11 @@ object QualityModel {
 
   /** A trained linear model: `weights` rows (feature: Int, w: Double)
     * for the NON-ZERO features (absent = 0.0), plus the intercept.
-    * KB-sized; persist with `writeModel`. `losses` is the convergence
-    * telemetry `train` returns: the mean logistic loss at the START
-    * of each iteration (losses(0) = ln 2 exactly under zero init),
-    * round6 like every other step boundary — a non-decreasing tail
-    * means the learning rate is too hot or the labels carry no
-    * signal, answerable from the model artifact alone. */
+    * KB-sized. `losses` is the convergence telemetry `train`
+    * returns: the mean logistic loss at the START of each iteration
+    * (losses(0) = ln 2 exactly under zero init), round6 like every
+    * other step boundary — a non-decreasing tail means the learning
+    * rate is too hot or the labels carry no signal. */
   final case class LinearModel(weights: Seq[(Int, Double)], bias: Double,
       dims: Int, losses: Seq[Double] = Nil)
 
@@ -455,33 +454,5 @@ object QualityModel {
       // rather than leaking until the caller's action
       .localCheckpoint(true)
     } finally { base.unpersist(); () }
-  }
-
-  /** Persist / read the model — KB-sized parquet like every other
-    * artifact here (codebooks, PQ models, bigram LM). The bias, dims
-    * and per-iteration training losses ride as ordinary rows under
-    * reserved feature ids (-1 bias, -2 dims, -(10+i) loss of
-    * iteration i), so the convergence telemetry survives the
-    * round-trip and "did this artifact's training converge" stays
-    * answerable long after the training session is gone. */
-  def writeModel(spark: org.apache.spark.sql.SparkSession,
-      model: LinearModel, path: String): Unit = {
-    import spark.implicits._
-    (model.weights.map { case (f, v) => (f, v) } ++
-        Seq((-1, model.bias), (-2, model.dims.toDouble)) ++
-        model.losses.zipWithIndex.map { case (l, i) => (-(10 + i), l) })
-      .toDF("f", "w").coalesce(1).write.mode("overwrite").parquet(path)
-  }
-
-  def readModel(spark: org.apache.spark.sql.SparkSession,
-      path: String): LinearModel = {
-    val rows = spark.read.parquet(path).select("f", "w").collect()
-      .map(r => r.getInt(0) -> r.getDouble(1))
-    val meta = rows.filter(_._1 < 0).toMap
-    require(meta.contains(-1) && meta.contains(-2),
-      s"model at $path is missing its bias/dims rows — corrupted artifact")
-    LinearModel(rows.filter(_._1 >= 0).sortBy(_._1).toSeq,
-      meta(-1), meta(-2).toInt,
-      rows.filter(_._1 <= -10).sortBy(-_._1).map(_._2).toSeq)
   }
 }

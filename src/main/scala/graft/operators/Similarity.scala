@@ -493,9 +493,9 @@ object Similarity {
     * its list's partition directory, so probes prune exactly as
     * before and never rewrite the standing index. Append cost follows
     * the batch. The caller owns codebook staleness: appending under a
-    * retrained codebook mis-lists every old vector — persist the
-    * codebook/model with the index (writeCodebook/writePqModel) and
-    * rebuild when drift warrants it. */
+    * retrained codebook mis-lists every old vector — keep the
+    * codebook/model that coded the index and rebuild when drift
+    * warrants it. */
   def appendIndex(assignedBatch: DataFrame, path: String,
       cidCol: String = "cid"): Unit = {
     val fs = StandingIndex.fs(assignedBatch.sparkSession, path)
@@ -636,60 +636,6 @@ object Similarity {
     IvfIndexStats(dir, perList.size.toLong, files,
       if (perList.isEmpty) 0L else perList.values.max,
       bytes, data.count(), tombIds, tombRows)
-  }
-
-  /** Persist a coarse codebook — WITHOUT it a persisted index cannot
-    * rank inverted lists next session, so the codebook is part of the
-    * index artifact, not session state. KB-sized parquet. */
-  def writeCodebook(spark: org.apache.spark.sql.SparkSession,
-      codebook: Seq[(Long, Seq[Double])], path: String): Unit = {
-    import spark.implicits._
-    codebook.toDF("cid", "ce").coalesce(1)
-      .write.mode("overwrite").parquet(path)
-  }
-
-  def readCodebook(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[(Long, Seq[Double])] =
-    spark.read.parquet(path).select("cid", "ce").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq
-      .sortBy(_._1)
-
-  /** Persist a PQ model ((subspace, code, centroid) rows — KBs like
-    * the coarse codebook). A PQ-coded index is unreadable without the
-    * exact model that coded it, so persist them together. */
-  def writePqModel(spark: org.apache.spark.sql.SparkSession,
-      model: PqModel, path: String): Unit = {
-    import spark.implicits._
-    val cbRows = for {
-      s <- 0 until model.numSubspaces
-      c <- model.codebooks(s).indices
-    } yield (s, c, model.codebooks(s)(c), model.residual)
-    // rotation rows ride in the same table under s = -1 (code = row
-    // index) — one artifact, one read, no sidecar file to lose
-    val rotRows = model.rotation.toSeq.flatMap(_.zipWithIndex.map {
-      case (row, i) => (-1, i, row, model.residual) })
-    (cbRows ++ rotRows).toDF("s", "code", "ce", "res").coalesce(1)
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Read a persisted PQ model back; fails loudly on a gappy artifact
-    * (missing subspace, code or rotation row) or mixed residual flags
-    * rather than mis-scoring silently. */
-  def readPqModel(spark: org.apache.spark.sql.SparkSession, path: String): PqModel = {
-    val raw = spark.read.parquet(path)
-    val (rotRows, rows) = raw.select("s", "code", "ce").collect()
-      .map(r => (r.getInt(0), (r.getInt(1), r.getSeq[Double](2).toSeq))).toSeq
-      .partition(_._1 < 0)
-    val rotation = if (rotRows.isEmpty) None
-      else Some(contiguous(rotRows.map(_._2), s"PQ model rotation at $path"))
-    val codebooks = contiguous(rows.groupBy(_._1).toSeq.map { case (s, cs) =>
-      (s, contiguous(cs.map(_._2), s"PQ model subspace $s at $path")) },
-      s"PQ model at $path")
-    val dsub = codebooks.head.head.length
-    require(codebooks.forall(_.forall(_.length == dsub)),
-      s"PQ model at $path mixes centroid dimensions")
-    PqModel(codebooks.length, dsub, codebooks,
-      residualFlag(raw, s"PQ model at $path"), rotation)
   }
 
   /** SQ8 scalar-quantization model (FAISS-style uniform per-dim,
@@ -835,48 +781,6 @@ object Similarity {
       rerankFrom: Option[DataFrame] = None): DataFrame =
     probeOne("ivfSqProbe", assigned, embCol, idCol, query, k, Sq8(sq, codeCol),
       Some(Lists(codebook, nprobe, cidCol)), excludeId, rerank, rerankFrom)
-
-  /** Persist an SQ model — (dim, min, max) rows, KBs. Like PQ, a
-    * coded index is unreadable without the exact model that coded
-    * it: persist them together. */
-  def writeSqModel(spark: org.apache.spark.sql.SparkSession,
-      model: SqModel, path: String): Unit = {
-    import spark.implicits._
-    model.mins.indices.map(i => (i, model.mins(i), model.maxs(i), model.residual))
-      .toDF("d", "mn", "mx", "res").coalesce(1)
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Read a persisted SQ model; fails loudly on a gappy artifact. */
-  def readSqModel(spark: org.apache.spark.sql.SparkSession, path: String): SqModel = {
-    val raw = spark.read.parquet(path)
-    val rows = contiguous(raw.select("d", "mn", "mx").collect()
-      .map(r => (r.getInt(0), (r.getDouble(1), r.getDouble(2)))), s"SQ model at $path")
-    SqModel(rows.map(_._1), rows.map(_._2), residualFlag(raw, s"SQ model at $path"))
-  }
-
-  /** The model readers' index check: `rows` keyed 0..n-1 with no gap,
-    * as a Seq in key order — a gappy artifact fails loudly rather than
-    * mis-scoring silently. */
-  private def contiguous[A](rows: Seq[(Int, A)], what: String): Seq[A] = {
-    val sorted = rows.sortBy(_._1)
-    require(sorted.nonEmpty, s"$what is empty")
-    require(sorted.map(_._1) == sorted.indices,
-      s"$what has non-contiguous indices: ${sorted.map(_._1)}")
-    sorted.map(_._2)
-  }
-
-  /** The residual flag is model identity (a residual-coded index is
-    * garbage down the direct path), so it must be UNANIMOUS across an
-    * artifact's rows; artifacts written before the flag existed (no
-    * `res` column) are direct by construction. */
-  private def residualFlag(raw: DataFrame, what: String): Boolean =
-    raw.columns.contains("res") && {
-      val flags = raw.select("res").distinct().collect().map(_.getBoolean(0))
-      require(flags.length == 1,
-        s"$what mixes residual flags across rows — corrupted artifact")
-      flags.head
-    }
 
   /** BQ1 binary quantization (FAISS IndexBinary-style, public
     * knowledge): one SIGN BIT per dimension of the normalized vector —
@@ -1535,22 +1439,6 @@ object Similarity {
     }(Encoders.row(outSchema))
   }
 
-  /** Persist a BQ model — (dim, threshold) rows, KBs. Like PQ/SQ, a
-    * coded index is unreadable without the exact model that coded it:
-    * persist them together. */
-  def writeBqModel(spark: org.apache.spark.sql.SparkSession,
-      model: BqModel, path: String): Unit = {
-    import spark.implicits._
-    model.thresholds.zipWithIndex.map { case (t, i) => (i, t) }
-      .toDF("d", "thr").coalesce(1)
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Read a persisted BQ model; fails loudly on a gappy artifact. */
-  def readBqModel(spark: org.apache.spark.sql.SparkSession, path: String): BqModel =
-    BqModel(contiguous(spark.read.parquet(path).select("d", "thr").collect()
-      .map(r => (r.getInt(0), r.getDouble(1))), s"BQ model at $path"))
-
   /** One-shot IVF ANN (index + probe in one plan; amortized use goes
     * through ivfAssign once + ivfProbe per query). `centroids` is a
     * (cid, ce) DataFrame — collected as the codebook literal. */
@@ -2167,8 +2055,8 @@ object Similarity {
     * the same budget. The covariance is aggregated cluster-side (the
     * driver collects D(D+3)/2 moments, not the sample); only the
     * O(D³)-per-sweep Jacobi eigendecomposition runs on the driver,
-    * capped loudly at D=1024. The rotation is persisted with the
-    * model and applied transparently by pqAssign and the probes.
+    * capped loudly at D=1024. The rotation travels with the model
+    * and is applied transparently by pqAssign and the probes.
     *
     * `opqIters` > 0 adds the alternating (non-parametric) refinement
     * (see refineOpqRotation): when the corpus's covariance carries no

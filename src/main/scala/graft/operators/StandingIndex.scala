@@ -45,23 +45,11 @@ private[operators] object StandingIndex {
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
   /** The standing-index families: `name` is the family's name in
-    * health reports, `prefix` names its generation dirs. */
+    * messages, `prefix` names its generation dirs. */
   sealed abstract class Family(val name: String, val prefix: String)
   case object HashBand extends Family("hashband", "bands_v")
   case object Bm25 extends Family("bm25", "bm25_v")
   case object Ivf extends Family("ivf", "index_v")
-
-  /** Which family wrote the root at `path`, from its generation dirs'
-    * prefix alone. None for a missing root or an unrecognized
-    * layout. */
-  def detectFamily(fs: FileSystem, path: String): Option[Family] = {
-    val p = new Path(path)
-    if (!fs.exists(p)) None
-    else {
-      val names = fs.listStatus(p).map(_.getPath.getName)
-      Seq(HashBand, Bm25, Ivf).find(f => names.exists(isVersionName(_, f.prefix)))
-    }
-  }
 
   /** ONE definition of "is this entry name a version pointer / a
     * generation dir" — the resolver and the rewrite's housekeeping

@@ -94,13 +94,12 @@ object TextStats {
     * frame (`_v`) — kept lazy so constructing/composing a model never
     * runs a driver action; it rides the scoring plan as a broadcast
     * cross-join like every other corpus scalar in this object.
-    * `pairs`, when present (models built by `bigramModel`), is the
-    * unified token→successor count table all three views derive from
-    * (`_w2 IS NULL` rows carry each doc's last token, so
-    * `count(distinct _w1)` over it IS the vocabulary size) — it is
-    * what makes persisting the model a single corpus pass. */
+    * `pairs` is the unified token→successor count table all three
+    * views derive from (`_w2 IS NULL` rows carry each doc's last
+    * token, so `count(distinct _w1)` over it IS the vocabulary size)
+    * — it is what lets `collectLocal` collect the model in one pass. */
   final case class BigramLm(bigrams: DataFrame, lefts: DataFrame, vocab: DataFrame,
-      pairs: Option[DataFrame] = None) {
+      pairs: DataFrame) {
     /** Collects the one-row vocab frame — a deliberate action, for
       * inspection/tests; scoring never calls it. */
     def vocabSize: Double = vocab.collect()(0).getDouble(0)
@@ -132,8 +131,8 @@ object TextStats {
       // guard empty docs: sequence(1, 0) is DESCENDING in Spark.
       // <= 0, not = 0: null text makes size(_a) = -1, which must also
       // contribute nothing (an = 0 guard would fall through to
-      // sequence(1, -1) = [1, 0, -1] and persist junk (null, null)
-      // rows in the pairs artifact)
+      // sequence(1, -1) = [1, 0, -1] and emit junk (null, null)
+      // rows into the pair table)
       .select(explode(expr(
         """CASE WHEN size(_a) <= 0 THEN CAST(array() AS ARRAY<STRUCT<w1: STRING, w2: STRING>>)
            ELSE transform(sequence(1, size(_a)),
@@ -146,9 +145,9 @@ object TextStats {
     * denominator), vocabulary size. Fully LAZY — the token→successor
     * stream aggregates ONCE on the pair key (full map-side partial
     * aggregation) and all three views derive from that table, so
-    * persisting the model (`writeBigramLm`) and scoring's V scalar
-    * cost no second corpus scan. No id column is required (the model
-    * never uses one). */
+    * collecting the model and scoring's V scalar cost no second
+    * corpus scan. No id column is required (the model never uses
+    * one). */
   def bigramModel(docs: DataFrame, textCol: String): BigramLm = {
     val pairs = tokenSuccessors(docs, textCol)
       .groupBy("_w1", "_w2").agg(count(lit(1)).as("_cb"))
@@ -162,13 +161,13 @@ object TextStats {
       bigrams = cb,
       lefts = cb.groupBy("_w1").agg(sum("_cb").cast("double").as("_cu")),
       vocab = pairs.agg(countDistinct("_w1").cast("double").as("_v")),
-      pairs = Some(pairs))
+      pairs = pairs)
   }
 
   /** Score documents under a (possibly FOREIGN) bigram model with
     * add-k smoothing, P(w2|w1) = (c(w1,w2) + k) / (c(w1→·) + k·V) —
     * the CCNet-style setup: train the model once on a trusted
-    * reference corpus (`bigramModel` + `writeBigramLm`), then score
+    * reference corpus (`bigramModel`), then score
     * every crawl batch against it. Unseen bigrams score
     * (k)/(c(w1)+kV); fully unseen left words degrade to 1/V.
     *
@@ -214,51 +213,36 @@ object TextStats {
   final case class LocalBigramLm(pairCounts: Map[(String, String), Long],
       leftCounts: Map[String, Double], vocab: Double)
 
-  /** Collect a model's three views into a LocalBigramLm (see there).
-    * A `bigramModel`-built model collects its unified pair table ONCE
-    * (cached across the bound-check count and the collect) and
-    * derives lefts/vocab driver-side — without that, the three views'
-    * shared lineage would replay the reference-corpus aggregation per
-    * view at every stream build. A view-only model (read from a
-    * pre-unified artifact) reads its three small parquets as-is. */
+  /** Collect a model into a LocalBigramLm (see there): the unified
+    * pair table is collected ONCE (cached across the bound-check count
+    * and the collect) and lefts/vocab derive driver-side — without
+    * that, the three views' shared lineage would replay the
+    * reference-corpus aggregation per view at every stream build. */
   def collectLocal(lm: BigramLm, maxPairs: Long = 2000000L): LocalBigramLm = {
     // default sized to a realistic reference-LM pair count: each entry
     // is a boxed (String, String) -> Long map cell, ~200-400 bytes of
     // driver heap with per-entry strings, so 2M pairs is roughly
     // 0.5-1 GiB — inside a stock driver. The previous 20M default let
     // the driver OOM BELOW the loud bound.
-    def bounded(df: DataFrame, what: String): Array[org.apache.spark.sql.Row] = {
-      val cached = df.cache()
-      try {
-        val n = cached.count()
-        require(n <= maxPairs,
-          s"$what has $n rows — over the $maxPairs driver-collect bound; " +
-            "train the reference model with a higher count floor, or raise " +
-            "maxPairs AND the driver heap with it (budget ~200-400 bytes of " +
-            "driver memory per pair)")
-        cached.collect()
-      } finally { cached.unpersist(); () }
-    }
-    lm.pairs match {
-      case Some(pairs) =>
-        val rows = bounded(pairs.select("_w1", "_w2", "_cb"), "unified pair table")
-        val bi = rows.filter(!_.isNullAt(1))
-        LocalBigramLm(
-          bi.map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap,
-          // lefts = sum of successor counts per _w1 over the non-null
-          // rows — exactly bigramFromPairs' definition, derived here
-          // instead of re-aggregated cluster-side
-          bi.groupBy(_.getString(0))
-            .map { case (w, rs) => w -> rs.map(_.getLong(2)).sum.toDouble },
-          rows.iterator.map(_.getString(0)).toSet.size.toDouble)
-      case None =>
-        LocalBigramLm(
-          bounded(lm.bigrams.select("_w1", "_w2", "_cb"), "bigram table")
-            .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap,
-          lm.lefts.select("_w1", "_cu").collect()
-            .map(r => r.getString(0) -> r.getDouble(1)).toMap,
-          lm.vocab.collect()(0).getDouble(0))
-    }
+    val cached = lm.pairs.select("_w1", "_w2", "_cb").cache()
+    val rows = try {
+      val n = cached.count()
+      require(n <= maxPairs,
+        s"unified pair table has $n rows — over the $maxPairs driver-collect " +
+          "bound; train the reference model with a higher count floor, or " +
+          "raise maxPairs AND the driver heap with it (budget ~200-400 bytes " +
+          "of driver memory per pair)")
+      cached.collect()
+    } finally { cached.unpersist(); () }
+    val bi = rows.filter(!_.isNullAt(1))
+    LocalBigramLm(
+      bi.map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap,
+      // lefts = sum of successor counts per _w1 over the non-null
+      // rows — exactly bigramFromPairs' definition, derived here
+      // instead of re-aggregated cluster-side
+      bi.groupBy(_.getString(0))
+        .map { case (w, rs) => w -> rs.map(_.getLong(2)).sum.toDouble },
+      rows.iterator.map(_.getString(0)).toSet.size.toDouble)
   }
 
   /** Append `(nCol, lpCol)` — bigram count and the same smoothed
@@ -304,61 +288,6 @@ object TextStats {
       .withColumn(nCol, col("_lm._1"))
       .withColumn(lpCol, col("_lm._2"))
       .drop("_lm")
-  }
-
-  /** Persist a trained bigram LM. For `bigramModel`-built models the
-    * unified token→successor count table writes ONCE — the single
-    * corpus pass — and the vocab-sized left counts plus the one-row
-    * vocab scalar derive from the just-written parquet (KB-scale
-    * re-aggregations, no corpus rescan; the in-memory `lefts`/`vocab`
-    * lineages would each replay the scan). A hand-assembled model
-    * without the unified table (e.g. one read back from disk) falls
-    * back to writing its three views as-is: `bigrams` is the only
-    * corpus-lineage one among them, so that path is also one corpus
-    * pass unless the views were built with independent lineages. */
-  def writeBigramLm(lm: BigramLm, path: String): Unit = lm.pairs match {
-    case Some(pairs) =>
-      pairs.write.mode("overwrite").parquet(s"$path/pairs")
-      val spark = pairs.sparkSession
-      val back = spark.read.parquet(s"$path/pairs")
-      back.filter(col("_w2").isNotNull)
-        .groupBy("_w1").agg(sum("_cb").cast("double").as("_cu"))
-        .write.mode("overwrite").parquet(s"$path/lefts")
-      back.agg(countDistinct("_w1").cast("double").as("_v"))
-        .write.mode("overwrite").parquet(s"$path/meta")
-    case None =>
-      val spark = lm.bigrams.sparkSession
-      // a unified artifact previously written at this path would leave
-      // its pairs/ behind, and readBigramLm PREFERS pairs/ — the
-      // overwrite would otherwise serve a hybrid of the old model's
-      // bigram counts with this model's lefts/vocab
-      val pairsPath = new org.apache.hadoop.fs.Path(s"$path/pairs")
-      pairsPath.getFileSystem(spark.sessionState.newHadoopConf())
-        .delete(pairsPath, true)
-      lm.bigrams.write.mode("overwrite").parquet(s"$path/bigrams")
-      spark.read.parquet(s"$path/bigrams")
-        .groupBy("_w1").agg(sum("_cb").cast("double").as("_cu"))
-        .write.mode("overwrite").parquet(s"$path/lefts")
-      lm.vocab.write.mode("overwrite").parquet(s"$path/meta")
-  }
-
-  /** Read a persisted model back. `bigrams` is served from the unified
-    * pair table through a `_w2 IS NOT NULL` filter (parquet pushdown)
-    * when the artifact has one; pre-unified artifacts with a bigrams/
-    * directory still read. */
-  def readBigramLm(spark: org.apache.spark.sql.SparkSession, path: String): BigramLm = {
-    // layout probe through the Hadoop FileSystem of the path's own
-    // scheme — a java.io.File probe is local-only and would misread a
-    // unified artifact on hdfs://-s3a:// (where 100 TB artifacts
-    // actually live) as the legacy bigrams/ layout
-    val pairsPath = new org.apache.hadoop.fs.Path(s"$path/pairs")
-    val fs = pairsPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val bigrams =
-      if (fs.exists(pairsPath)) spark.read.parquet(s"$path/pairs").filter(col("_w2").isNotNull)
-      else spark.read.parquet(s"$path/bigrams")
-    BigramLm(bigrams,
-      spark.read.parquet(s"$path/lefts"),
-      spark.read.parquet(s"$path/meta"))
   }
 
   /** Top-k keyword extraction per document: rank tokens by term
@@ -570,8 +499,8 @@ object TextStats {
     * expensive pass. Layout under `path`: one generation dir
     * `bm25_vN/` holding `postings/` (idCol, token, tf, len), `df/`
     * (token, df) and `meta/` (ndocs, avglen, max_postings, id_col),
-    * all parquet like every other artifact here (PQ/SQ/BQ models,
-    * bigram LM, dedup index), published by one `_current_vN` pointer;
+    * all parquet like the other standing indexes, published by one
+    * `_current_vN` pointer;
     * after a `deleteFromBm25Index`, also `_tombstones/` until the next
     * compaction or rebuild.
     *

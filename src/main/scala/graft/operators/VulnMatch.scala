@@ -81,18 +81,4 @@ object VulnMatch {
       namespaceCol: String = "namespace", featureCol: String = "feature",
       versionCol: String = "version"): DataFrame =
     affected(inventory, fixRanges(db), namespaceCol, featureCol, versionCol)
-
-  /** The LIVE scanner: the same plan over a STREAMING inventory (each
-    * admitted image/package row scanned as it arrives) — a
-    * stream-static join, which Structured Streaming evaluates per
-    * micro-batch with the broadcast DB as the static build side. No
-    * watermark and no stream state: the static side is re-planned
-    * each batch (so a DB refresh is picked up on restart) and stream
-    * rows join-and-go. `inventoryStream` is any readStream DataFrame
-    * with the (namespace, feature, version) columns;
-    * VulnMatchSpec pins stream/batch parity. */
-  def scanStream(inventoryStream: DataFrame, db: Dataset[Vulnerability],
-      namespaceCol: String = "namespace", featureCol: String = "feature",
-      versionCol: String = "version"): DataFrame =
-    affected(inventoryStream, fixRanges(db), namespaceCol, featureCol, versionCol)
 }

@@ -460,8 +460,7 @@ object DataPrepQueries {
           .orderBy("bucket")
       }),
 
-    // Tumbling-window aggregation (Structured-Streaming-shaped; see
-    // streaming.EventStream for the readStream twin of this plan).
+    // Tumbling-window aggregation (Structured-Streaming-shaped).
     QueryDef("q40_window_tumbling", Some("""
       SELECT strftime(time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP)),
                       '%Y-%m-%d %H:%M:%S') AS win_start,
@@ -515,8 +514,7 @@ object DataPrepQueries {
         .orderBy("source")),
 
     // Idempotency-key dedup: first event per (user, type, 5-min
-    // window) wins — the batch twin of EventStream.dedupEvents'
-    // watermarked dropDuplicatesWithinWatermark.
+    // window) wins.
     QueryDef("q45_stream_dedup", Some("""
       WITH keyed AS (SELECT user_id, event_type,
                             time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP)) AS win5,
@@ -1055,11 +1053,9 @@ object DataPrepQueries {
         .orderBy("lang", "doc_id")),
 
     // Interval (attribution) join census: every view joined to the
-    // same user's purchases within the following 6 hours — the
-    // batch twin of EventStream.intervalJoinPairs, whose stream-stream
-    // form buffers bounded state via dual watermarks (StreamingSpec
-    // pins batch/stream parity). Equi-join on the user plus a range
-    // residual; per-user census keeps the output bounded.
+    // same user's purchases within the following 6 hours. Equi-join
+    // on the user plus a range residual; per-user census keeps the
+    // output bounded.
     QueryDef("q72_interval_join", Some("""
       WITH e AS (SELECT event_id, user_id, event_type,
                         epoch_ms(CAST(ts AS TIMESTAMP)) AS ems, value FROM events),

@@ -92,7 +92,7 @@ object JobProfile {
         val durs = taskMs.remove(si.stageId).fold(Seq.empty[Long])(_.toSeq)
         if (skewed(wallMs, durs)) skewRows +=
           f"  stage ${si.stageId}%5d tasks ${si.numTasks}%4d wallSec ${wallMs / 1e3}%7.3f " +
-          f"maxTaskSec ${durs.max / 1e3}%7.3f ${si.name.takeWhile(_ != '\n').take(100)}"
+          f"maxTaskSec ${durs.max / 1e3}%7.3f ${stageLabel(si)}"
         stageToJob.get(si.stageId).foreach { jid =>
           tasks(jid) += si.numTasks
           val m = si.taskMetrics
@@ -105,10 +105,17 @@ object JobProfile {
               f"  stage ${si.stageId}%5d job $jid%4d tasks ${si.numTasks}%4d " +
               f"runSec ${m.executorRunTime / 1e3}%7.2f gcSec ${m.jvmGCTime / 1e3}%6.2f " +
               f"cpuSec ${m.executorCpuTime / 1e9}%7.2f deserSec ${m.executorDeserializeTime / 1e3}%6.2f " +
-              f"${si.name.takeWhile(_ != '\n').take(100)}"
+              f"${stageLabel(si)}"
           }
         }
       }
+    /** A stage's engine call site: the owning job's `desc` — AQE
+      * submits query stages from an executor thread, so their own
+      * names point at `CompletableFuture`, not the engine — else,
+      * when no job claims the stage, the stage's name. */
+    private def stageLabel(si: StageInfo): String =
+      stageToJob.get(si.stageId).flatMap(jobs.get).map(_.desc).filter(_.nonEmpty)
+        .getOrElse(si.name).takeWhile(_ != '\n').take(100)
     def clear(): Unit = synchronized {
       jobs.clear(); stageToJob.clear(); tasks.clear(); taskTimeMs.clear()
       execDesc.clear()

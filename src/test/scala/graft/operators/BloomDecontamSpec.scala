@@ -127,7 +127,6 @@ class BloomDecontamSpec extends SparkSpecBase {
 
   test("SQL surface: bloom_might_contain resolves with a binary literal, rejects non-constant filters") {
     import spark.implicits._
-    graft.functions.TextExpressions.register(spark)
     val members = Seq("alpha", "beta")
     val filter = members.toDF("s").stat.bloomFilter("s", 2L, 0.01)
     val baos = new java.io.ByteArrayOutputStream()

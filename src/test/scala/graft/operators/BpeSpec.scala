@@ -28,6 +28,7 @@ class BpeSpec extends SparkSpecBase {
     assert(merges(0) == (0, "l", "o", 5L))
     assert(merges(1) == (1, "lo", "w", 5L))
     assert(merges(2) == (2, "low", "</w>", 3L))
+    assert(merges(3)._2 == "low" && merges(3)._3 == "e")
     assert(merges.length == 4)
     // the vocab reflects the merges: 'low' is now one token
     val lowSyms = learned.vocab.filter(col("word") === "low")
@@ -207,6 +208,13 @@ class BpeSpec extends SparkSpecBase {
       "text", "doc_id", learned).collect()(0)
     assert(zap.getAs[scala.collection.Seq[String]]("subwords") ==
       Seq("z", "a", "p", "</w>"))
+    // the merge table alone (empty vocab: every word goes down the
+    // OOV merge-rule path) segments exactly like the full tokenizer
+    val emptyVocab = learned.vocab.filter(lit(false))
+    val words = Seq((12L, "low lower zap")).toDF("doc_id", "text")
+    def seg(l: Bpe.Learned) =
+      Bpe.segment(words, "text", "doc_id", l).collect().map(_.toSeq).toSeq
+    assert(seg(Bpe.Learned(learned.merges, emptyVocab, 0)) == seg(learned))
   }
 
   test("applyMerges reproduces the trained segmentation for every vocab word") {
@@ -244,103 +252,6 @@ class BpeSpec extends SparkSpecBase {
     assert(out(10L) == ((Seq("low</w>"), 1L, 1L)))
     for (id <- Seq(11L, 12L, 13L))
       assert(out(id) == ((Seq.empty[String], 0L, 0L)), s"doc $id: ${out(id)}")
-  }
-
-  test("write/read round-trip: the persisted tokenizer segments identically") {
-    val learned = Bpe.learn(docs, "text", 3)
-    withTempDir("bpe-artifact") { dir =>
-      Bpe.writeLearned(learned, dir.getAbsolutePath)
-      val back = Bpe.readLearned(spark, dir.getAbsolutePath)
-      assert(back.merges.orderBy("rank").collect().map(_.toSeq).toSeq ==
-        learned.merges.orderBy("rank").collect().map(_.toSeq).toSeq)
-      val probe = Seq((10L, "low lower zap")).toDF("doc_id", "text")
-      def seg(v: org.apache.spark.sql.DataFrame) =
-        Bpe.segment(probe, "text", "doc_id", v).collect().map(_.toSeq).toSeq
-      assert(seg(back.vocab) == seg(learned.vocab))
-    }
-  }
-
-  test("merges.txt: standard text export round-trips and segments identically") {
-    val learned = Bpe.learn(docs, "text", 4)
-    withTempDir("bpe-merges-txt") { dir =>
-      Bpe.writeLearned(learned, dir.getAbsolutePath)
-      // the text artifact sits alongside the parquet, header + one
-      // rank-ordered "l r" line per merge
-      val txt = new java.io.File(dir, "merges.txt")
-      assert(txt.exists)
-      val lines = scala.io.Source.fromFile(txt, "UTF-8").getLines().toVector
-      assert(lines.head.startsWith("#version"))
-      assert(lines.tail == Vector("l o", "lo w", "low </w>", "low e"))
-
-      // round-trip: rank/left/right/merged reproduce the learned table
-      val back = Bpe.readMergesText(spark, txt.getAbsolutePath)
-      assert(back.orderBy("rank").collect()
-          .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getString(3))).toSeq ==
-        learned.merges.orderBy("rank").collect()
-          .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getString(3))).toSeq)
-
-      // a Learned reassembled from the TEXT form alone (empty vocab —
-      // every word goes down the OOV merge-rule path) segments exactly
-      // like the fully persisted tokenizer
-      val emptyVocab = learned.vocab.filter(lit(false))
-      val probe = Seq((10L, "low lower zap")).toDF("doc_id", "text")
-      def seg(l: Bpe.Learned) =
-        Bpe.segment(probe, "text", "doc_id", l).orderBy("doc_id")
-          .collect().map(_.toSeq).toSeq
-      assert(seg(Bpe.Learned(back, emptyVocab, 0)) == seg(learned))
-    }
-  }
-
-  test("merges.txt: '#'-starting symbols round-trip (only the #version header is skipped)") {
-    // hashtag/code corpora legitimately learn merges whose left symbol
-    // starts with '#'; a reader that skips every '#'-prefixed line
-    // would silently drop them and shift all later ranks
-    val tagged = Seq((1L, "#if #if #if #if zz")).toDF("doc_id", "text")
-    val learned = Bpe.learn(tagged, "text", numMerges = 3)
-    val hashMerges = learned.merges.filter(col("left").startsWith("#")).count()
-    assert(hashMerges >= 1, "fixture must actually learn a '#'-left merge")
-    withTempDir("bpe-merges-hash") { dir =>
-      val txt = new java.io.File(dir, "merges.txt").getAbsolutePath
-      Bpe.writeMergesText(learned.merges, txt)
-      val back = Bpe.readMergesText(spark, txt)
-      assert(back.orderBy("rank").collect()
-          .map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSeq ==
-        learned.merges.orderBy("rank").collect()
-          .map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSeq)
-    }
-    // a pair that renders as the header line itself cannot round-trip;
-    // the export must refuse it loudly rather than corrupt silently
-    val headerish = Seq((0, "#version:", "0.2", "#version:0.2", 1L))
-      .toDF("rank", "left", "right", "merged", "pair_count")
-    withTempDir("bpe-merges-headerish") { dir =>
-      val err = intercept[IllegalArgumentException] {
-        Bpe.writeMergesText(headerish, new java.io.File(dir, "m.txt").getAbsolutePath)
-      }
-      assert(err.getMessage.contains("#version"))
-    }
-    // the bare-'#' left merge — the ADVICE's exact case — writes as
-    // '# i' and round-trips as data (the format carries no comments
-    // beyond the header, so that line is unambiguous BY CONTRACT)
-    val bareHash = Seq((0, "#", "i", "#i", 1L))
-      .toDF("rank", "left", "right", "merged", "pair_count")
-    withTempDir("bpe-merges-barehash") { dir =>
-      val f = new java.io.File(dir, "m.txt").getAbsolutePath
-      Bpe.writeMergesText(bareHash, f)
-      val back = Bpe.readMergesText(spark, f)
-      assert(back.collect().map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSeq ==
-        Seq((0, "#", "i")))
-    }
-    // an out-of-spec comment of any OTHER shape still fails loudly
-    withTempDir("bpe-merges-badline") { dir =>
-      val f = new java.io.File(dir, "m.txt")
-      val w = new java.io.PrintWriter(f, "UTF-8")
-      try { w.println("#version: 0.2"); w.println("# a longer note"); w.println("a b") }
-      finally w.close()
-      val err = intercept[IllegalArgumentException] {
-        Bpe.readMergesText(spark, f.getAbsolutePath)
-      }
-      assert(err.getMessage.contains("left right"))
-    }
   }
 
   test("symbols with quotes and backslashes survive the merge literal") {

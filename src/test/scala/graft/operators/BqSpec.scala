@@ -507,23 +507,4 @@ class BqSpec extends SparkSpecBase {
       single(Similarity.ivfSqProbe(sqClean, "e", "vec_id", q, 5, codebook, sq,
         nprobe = 2, rerank = 100)))
   }
-
-  test("model round-trips through parquet; gappy artifact fails loudly") {
-    withTempDir("bqmodel") { dir =>
-      val m = Similarity.bqTrain(corpus, "e")
-      val p = new java.io.File(dir, "bq").getPath
-      Similarity.writeBqModel(spark, m, p)
-      val back = Similarity.readBqModel(spark, p)
-      assert(back == m)
-
-      import spark.implicits._
-      val gappy = new java.io.File(dir, "gappy").getPath
-      Seq((0, 0.1), (2, 0.3)).toDF("d", "thr")
-        .write.parquet(gappy)
-      val ex = intercept[IllegalArgumentException] {
-        Similarity.readBqModel(spark, gappy)
-      }
-      assert(ex.getMessage.contains("non-contiguous"))
-    }
-  }
 }

@@ -566,13 +566,6 @@ class CorpusPrepSpec extends SparkSpecBase {
       "the LM stage must report its own survivor count")
     assert(m("graft_lm_exact").getAs[Long]("rows") == 1L)
 
-    // the gate under a PERSISTED model (write -> read) behaves the same
-    withTempDir("prep-lm") { dir =>
-      TextStats.writeBigramLm(lm, dir.getAbsolutePath)
-      val back = TextStats.readBigramLm(spark, dir.getAbsolutePath)
-      assert(runWith(back).select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L))
-    }
-
     // zero-bigram docs carry no signal and must pass the gate
     val tiny = Seq((7L, "solitarylongtoken")).toDF("doc_id", "text")
     val keptTiny = CorpusPrep.run(tiny, cfg = CorpusPrep.Config(
@@ -1466,12 +1459,12 @@ class CorpusPrepSpec extends SparkSpecBase {
 
     // with the standing corpus's stored index: identical result
     val path = java.nio.file.Files.createTempDirectory("graft-prep-ix").toString + "/ix"
-    Dedup.writeDedupIndex(standing, path, "clean_text", "doc_id",
-      shingleN = 3, numHashes = 8, rowsPerBand = 2)
+    Dedup.dedupIndex(standing, "clean_text", "doc_id",
+      shingleN = 3, numHashes = 8, rowsPerBand = 2).write.parquet(path)
     val viaIx = CorpusPrep.runIncremental(standing, batch,
         cfg = CorpusPrep.Config(minChars = 20, minJaccard = 0.5,
           numHashes = 8, rowsPerBand = 2),
-        oldIndex = Some(Dedup.readDedupIndex(spark, path)))
+        oldIndex = Some(spark.read.parquet(path)))
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(viaIx == kept)
   }

@@ -80,9 +80,9 @@ class IncrementalDedupSpec extends SparkSpecBase {
 
   test("persisted dedup index reproduces the direct path; cfg mismatch rejected") {
     val path = java.nio.file.Files.createTempDirectory("graft-dedup-ix").toString + "/ix"
-    Dedup.writeDedupIndex(olds, path, "text", "doc_id",
-      shingleN = 3, numHashes = 8, rowsPerBand = 2)
-    val ix = Dedup.readDedupIndex(spark, path)
+    Dedup.dedupIndex(olds, "text", "doc_id",
+      shingleN = 3, numHashes = 8, rowsPerBand = 2).write.parquet(path)
+    val ix = spark.read.parquet(path)
     val viaIndex = Dedup.dropIncrementalDuplicates(olds, news, "text", "doc_id",
         shingleN = 3, minJaccard = 0.5, numHashes = 8, rowsPerBand = 2,
         oldIndex = Some(ix))

@@ -373,16 +373,11 @@ class SimilaritySpec extends SparkSpecBase {
       .collect().map(_.toSeq).toSeq
     withTempDir("pq-artifacts") { dirFile =>
       val dir = dirFile.getAbsolutePath
-      // the full probe-ready artifact set: index + coarse codebook +
-      // PQ model — a coded index is unreadable without its model
+      // the persisted index probes under the codebook and PQ model
+      // that coded it
       Similarity.writeIndex(assigned, s"$dir/index")
-      Similarity.writeCodebook(spark, codebook, s"$dir/cb")
-      Similarity.writePqModel(spark, pq, s"$dir/pq")
-      val cb2 = Similarity.readCodebook(spark, s"$dir/cb")
-      val pq2 = Similarity.readPqModel(spark, s"$dir/pq")
-      assert(cb2 == codebook && pq2 == pq)
       val back = Similarity.ivfPqProbe(Similarity.readIndex(spark, s"$dir/index"),
-          "e", "vec_id", query, 10, cb2, pq2, nprobe = 4, rerank = 40)
+          "e", "vec_id", query, 10, codebook, pq, nprobe = 4, rerank = 40)
         .collect().map(_.toSeq).toSeq
       assert(back == direct)
     }
@@ -679,13 +674,8 @@ class SimilaritySpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(batch == solo)
 
-    // the residual flag is model identity: it survives persistence,
-    // and the wrong assign/pair-search paths refuse it loudly
-    withTempDir("pq-residual") { dir =>
-      Similarity.writePqModel(spark, res, dir.getAbsolutePath)
-      val back = Similarity.readPqModel(spark, dir.getAbsolutePath)
-      assert(back == res && back.residual)
-    }
+    // the residual flag is model identity: the wrong
+    // assign/pair-search paths refuse it loudly
     assert(intercept[IllegalArgumentException](
       Similarity.pqAssign(corpus, "e", res)).getMessage.contains("pqAssignResidual"))
     assert(intercept[IllegalArgumentException](
@@ -765,13 +755,6 @@ class SimilaritySpec extends SparkSpecBase {
         cbk, opq, nprobe = 1, rerank = 24)
       .collect().map(r2 => (r2.getLong(0), r2.getDouble(1))).toSeq
     assert(batch == solo)
-
-    // rotation is model identity: persisted and read back intact
-    withTempDir("pq-opq") { dir =>
-      Similarity.writePqModel(spark, opq, dir.getAbsolutePath)
-      val back = Similarity.readPqModel(spark, dir.getAbsolutePath)
-      assert(back == opq && back.rotation == opq.rotation)
-    }
     aOpq.unpersist(); ivf.unpersist(); corpus.unpersist()
   }
 
@@ -862,12 +845,6 @@ class SimilaritySpec extends SparkSpecBase {
       .collect().map(r2 => (r2.getLong(0), r2.getDouble(1))).toSeq
     assert(batch == solo)
 
-    // both flags are model identity: the artifact round-trips them
-    withTempDir("pq-opq-residual") { dir =>
-      Similarity.writePqModel(spark, both, dir.getAbsolutePath)
-      val back = Similarity.readPqModel(spark, dir.getAbsolutePath)
-      assert(back == both && back.residual && back.rotation == both.rotation)
-    }
     // the composed model still refuses the paths residual models refuse
     assert(intercept[IllegalArgumentException](
       Similarity.pqAssign(corpus, "e", both)).getMessage.contains("pqAssignResidual"))
@@ -991,8 +968,7 @@ class SimilaritySpec extends SparkSpecBase {
     assert(rNp >= 0.8 && rNp - rParam >= 0.1,
       s"fixture must show the alternation win: parametric=$rParam refined=$rNp")
 
-    // the composed trainer takes the same knob: rotation stays
-    // orthogonal and the artifact round-trips the refined model
+    // the composed trainer takes the same knob: rotation stays orthogonal
     val npRes = Similarity.pqTrainOpqResidual(corpus, "e", cbk,
       numSubspaces = 4, ksub = 4, iters = 3, opqIters = 2)
     assert(npRes.residual && npRes.rotation.isDefined)
@@ -1000,10 +976,6 @@ class SimilaritySpec extends SparkSpecBase {
     for (i <- rr.indices; j <- rr.indices) {
       val dot = rr(i).zip(rr(j)).map { case (a, b) => a * b }.sum
       assert(math.abs(dot - (if (i == j) 1.0 else 0.0)) < 1e-9)
-    }
-    withTempDir("pq-opq-np") { dir =>
-      Similarity.writePqModel(spark, np, dir.getAbsolutePath)
-      assert(Similarity.readPqModel(spark, dir.getAbsolutePath) == np)
     }
     ivf.unpersist(); corpus.unpersist()
   }
@@ -1123,18 +1095,6 @@ class SimilaritySpec extends SparkSpecBase {
       .collect().map(_.getLong(0)).toSeq
     assert(gotFlat == truthFlat)
 
-    // artifact round-trip; a gappy artifact fails loudly
-    withTempDir("sq-model") { dirFile =>
-      val dir = dirFile.getAbsolutePath
-      Similarity.writeSqModel(spark, sq, s"$dir/m")
-      assert(Similarity.readSqModel(spark, s"$dir/m") == sq)
-      Seq((0, -1.0, 1.0), (2, -1.0, 1.0)).toDF("d", "mn", "mx")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/gappy")
-      val err = intercept[IllegalArgumentException](
-        Similarity.readSqModel(spark, s"$dir/gappy"))
-      assert(err.getMessage.contains("non-contiguous"))
-    }
-
     // batch probe matches the single-query path, on both the in-frame
     // and the codes-only store-joined index
     val probes = Seq((999L, query)).toDF("q_id", "qe")
@@ -1230,13 +1190,8 @@ class SimilaritySpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(batch == solo)
 
-    // the flag is model identity: artifact round-trips it, and the
-    // wrong assign/pair-search paths refuse it loudly
-    withTempDir("sq-residual") { dir =>
-      Similarity.writeSqModel(spark, res, dir.getAbsolutePath)
-      val back = Similarity.readSqModel(spark, dir.getAbsolutePath)
-      assert(back == res && back.residual)
-    }
+    // the flag is model identity: the wrong assign/pair-search paths
+    // refuse it loudly
     assert(intercept[IllegalArgumentException](
       Similarity.sqAssign(corpus, "e", res)).getMessage.contains("sqAssignResidual"))
     assert(intercept[IllegalArgumentException](
@@ -1323,18 +1278,6 @@ class SimilaritySpec extends SparkSpecBase {
     corpus.unpersist()
   }
 
-  test("a PQ artifact with mixed residual flags fails loudly instead of coercing") {
-    import spark.implicits._
-    withTempDir("pq-mixed-res") { dir =>
-      Seq((0, 0, Seq(1.0, 0.0), false), (0, 1, Seq(0.0, 1.0), true))
-        .toDF("s", "code", "ce", "res").coalesce(1)
-        .write.mode("overwrite").parquet(dir.getAbsolutePath)
-      val err = intercept[IllegalArgumentException](
-        Similarity.readPqModel(spark, dir.getAbsolutePath))
-      assert(err.getMessage.contains("mixes residual flags"))
-    }
-  }
-
   test("codes-only index: rerankFrom probes a float-free index identically to in-frame") {
     import spark.implicits._
     val corpus = planted.cache()
@@ -1375,24 +1318,6 @@ class SimilaritySpec extends SparkSpecBase {
             .collect().map(r => r.get(0)).toSet))
     }
     assigned.unpersist(); corpus.unpersist()
-  }
-
-  test("pre-residual PQ artifacts (no res column, no rotation rows) read back as direct models") {
-    import spark.implicits._
-    val donors = (0 until 8).map(i =>
-      Seq.tabulate(dim)(d => if (d == i) 10.0 else 0.3 * ((i + d) % 3)))
-    val pq = Similarity.pqFromVectors(donors, numSubspaces = 4)
-    withTempDir("pq-legacy") { dir =>
-      // write the r8-era artifact shape by hand: (s, code, ce) only
-      val rows = for {
-        sub <- 0 until pq.numSubspaces
-        c <- pq.codebooks(sub).indices
-      } yield (sub, c, pq.codebooks(sub)(c))
-      rows.toDF("s", "code", "ce").coalesce(1)
-        .write.mode("overwrite").parquet(dir.getAbsolutePath)
-      val back = Similarity.readPqModel(spark, dir.getAbsolutePath)
-      assert(back == pq && !back.residual && back.rotation.isEmpty)
-    }
   }
 
   test("null pq_code rows sort LAST in the ADC shortlist, never consuming rerank slots") {

@@ -70,32 +70,8 @@ class TextStatsSpec extends SparkSpecBase {
       Seq((11L, "z q")).toDF("doc_id", "text"), "text", "doc_id", lm).collect()(0)
     assert(g2.getDouble(2) == r4(math.log(0.5)))
 
-    // persisted model scores identically; training needs no id column
+    // training needs no id column
     assert(TextStats.bigramModel(ref.select("text"), "text").vocabSize == 2.0)
-    withTempDir("bigram-lm") { dir =>
-      TextStats.writeBigramLm(lm, dir.getAbsolutePath)
-      // single-pass artifact: the unified pair table IS the corpus
-      // write; lefts/meta derive from it, no bigrams/ directory
-      assert(new java.io.File(dir, "pairs").exists)
-      assert(!new java.io.File(dir, "bigrams").exists)
-      val back = TextStats.readBigramLm(spark, dir.getAbsolutePath)
-      assert(back.vocabSize == 2.0)
-      val again = TextStats.scoreBigramLogProb(
-        Seq((10L, "a b z")).toDF("doc_id", "text"), "text", "doc_id", back).collect()(0)
-      assert(again.getDouble(2) == got.getDouble(2))
-
-      // a model WITHOUT the unified table (e.g. one read back from
-      // disk) still persists, in the pre-unified bigrams/ shape
-      withTempDir("bigram-lm2") { dir2 =>
-        TextStats.writeBigramLm(back, dir2.getAbsolutePath)
-        assert(new java.io.File(dir2, "bigrams").exists)
-        val back2 = TextStats.readBigramLm(spark, dir2.getAbsolutePath)
-        assert(back2.vocabSize == 2.0)
-        val a2 = TextStats.scoreBigramLogProb(
-          Seq((10L, "a b z")).toDF("doc_id", "text"), "text", "doc_id", back2).collect()(0)
-        assert(a2.getDouble(2) == got.getDouble(2))
-      }
-    }
   }
 
   test("row-local scorer matches the batch scorer doc for doc") {
@@ -147,28 +123,9 @@ class TextStatsSpec extends SparkSpecBase {
     // vocab counts only the real tokens; a null-text doc must not add
     // a junk (null, null) group to the unified pairs table
     assert(lm.vocabSize == 2.0)
-    assert(lm.pairs.get.filter(col("_w1").isNull).count() == 0,
+    assert(lm.pairs.filter(col("_w1").isNull).count() == 0,
       "null text must emit no token-successor rows")
-    assert(lm.pairs.get.count() == 2) // (a,b) and the last-token (b,null)
-  }
-
-  test("readBigramLm resolves the layout through the path's Hadoop filesystem") {
-    // a scheme-qualified URI java.io.File cannot stat ("file:/..." is
-    // a relative dir name to it) but the Hadoop FileSystem resolves —
-    // the local stand-in for an hdfs://-s3a:// artifact path. The old
-    // local-FS probe misread this as the legacy bigrams/ layout and
-    // the read failed.
-    val ref = Seq((1L, "a b a b"), (2L, "a b")).toDF("doc_id", "text")
-    val lm = TextStats.bigramModel(ref, "text")
-    withTempDir("bigram-lm-fs") { dir =>
-      val uri = "file:" + dir.getAbsolutePath + "/lm"
-      TextStats.writeBigramLm(lm, uri)
-      assert(!new java.io.File(s"$uri/pairs").exists,
-        "precondition: java.io.File must NOT see the scheme-qualified path")
-      val back = TextStats.readBigramLm(spark, uri)
-      assert(back.vocabSize == 2.0)
-      assert(back.bigrams.count() == 2) // (a,b), (b,a): unified layout read
-    }
+    assert(lm.pairs.count() == 2) // (a,b) and the last-token (b,null)
   }
 
   test("keywords: tf-first ranking with rarity and token tie-breaks") {

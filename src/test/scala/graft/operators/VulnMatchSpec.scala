@@ -98,23 +98,4 @@ class VulnMatchSpec extends SparkSpecBase {
     assert(got == Set(("debian:11", "1.1.1k-1"), ("debian:12", "1.1.1k-1")))
     // and the output schema honors the documented contract (no min_ver)
     assert(!VulnMatch.scan(inv, crossRelease).columns.contains("min_ver"))
-  }
-
-  test("scanStream: the live stream-static scan matches the batch scan") {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val dir = java.nio.file.Files.createTempDirectory("graft-inv-stream").toString
-    inventory.coalesce(1).write.mode("overwrite").parquet(dir)
-    val stream = spark.readStream.schema(inventory.schema).parquet(dir)
-    val q = VulnMatch.scanStream(stream, db)
-      .writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("scan_stream")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
-    val streamed = spark.sql("SELECT feature, version, vul_name FROM scan_stream")
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-    val batch = VulnMatch.scan(inventory, db)
-      .select("feature", "version", "vul_name")
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-    assert(streamed == batch && streamed.nonEmpty)
-  }
-}
+  }}

@@ -3,71 +3,10 @@ package graft.streaming
 import graft.SparkSpecBase
 import graft.operators.Multimodal
 
-/** Streaming twins match their batch queries; multimodal plumbing. */
+/** Stream intake tiers match their batch twins; multimodal plumbing. */
 class StreamingSpec extends SparkSpecBase {
 
   val sfDir = "/root/testdata/sf0.001"
-
-  test("tumbling window stream matches the batch plan") {
-    val q = EventStream.runTumbling(spark, sfDir, "stream_tumbling", "events.parquet")
-    q.awaitTermination(120000)
-    val streamed = spark.sql(
-      "SELECT win_start, sum(n) AS n, round(sum(total), 2) AS total FROM stream_tumbling GROUP BY win_start")
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
-
-    val batch = EventStream.tumblingCounts(
-      spark.read.parquet(s"$sfDir/events.parquet"))
-      .groupBy("win_start")
-      .agg(org.apache.spark.sql.functions.sum("n").as("n"),
-        org.apache.spark.sql.functions.round(org.apache.spark.sql.functions.sum("total"), 2).as("total"))
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
-
-    assert(streamed == batch)
-    assert(streamed.nonEmpty)
-  }
-
-  test("sliding window stream matches the batch q46 plan") {
-    // Complete mode is test-only (finite AvailableNow input): it surfaces
-    // every window in the memory sink for exact batch parity. Production
-    // default is Update, which honors the watermark and bounds state.
-    val q = EventStream.runSliding(spark, sfDir, "stream_sliding", "events.parquet",
-      mode = org.apache.spark.sql.streaming.OutputMode.Complete)
-    q.awaitTermination(120000)
-    val streamed = spark.sql(
-      "SELECT win_start, n, total FROM stream_sliding")
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    val batch = graft.SparkEntry.queries("q46_sliding_window")(spark, sfDir)
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    assert(streamed == batch)
-    assert(streamed.nonEmpty)
-  }
-
-  test("watermarked streaming dedup agrees with the batch twin on keys") {
-    import org.apache.spark.sql.functions._
-    val q = EventStream.runDedup(spark, sfDir, "stream_dedup", "events.parquet")
-    q.awaitTermination(120000)
-    // stream keeps first ARRIVAL per key; batch q45 keeps first EVENT
-    // TIME — the per-type surviving-key counts must agree exactly
-    val streamed = spark.sql(
-      "SELECT event_type, count(*) AS n FROM stream_dedup GROUP BY event_type")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val batch = graft.SparkEntry.queries("q45_stream_dedup")(spark, sfDir)
-      .select(col("event_type"), col("n_keys"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(streamed == batch)
-    assert(streamed.values.sum > 0)
-  }
-
-  test("stateful sessionization matches the batch window query") {
-    val events = spark.read.parquet(s"$sfDir/events.parquet")
-    val streamed = EventStream.sessionize(spark, events)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-    // batch q41 twin
-    val batch = graft.SparkEntry.queries("q41_sessionize")(spark, sfDir)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(streamed == batch)
-  }
 
   test("multimodal: meta decode + frame sampling plumbing") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -84,37 +23,6 @@ class StreamingSpec extends SparkSpecBase {
     val again = Multimodal.sampleFrames(docs.limit(5), "blob", 4).collect()
     assert(frames.map(_.getAs[String]("frame_digest")).toSeq ==
       again.map(_.getAs[String]("frame_digest")).toSeq)
-  }
-
-  test("stream-static as-of lookup matches the batch AsOfJoin row for row") {
-    import org.apache.spark.sql.functions._
-    // keys ≡ 3 (mod 5) carry NO states, so their events must come out
-    // unmatched — exercising the left-outer path, not just the hits
-    val states = spark.read.parquet(s"$sfDir/orders.parquet")
-      .filter(col("o_custkey") % 5 =!= 3)
-      .groupBy(col("o_custkey"), col("o_orderdate").cast("timestamp").as("ots"))
-      .agg(max_by(col("o_orderpriority"), col("o_orderkey")).as("pri"))
-
-    val q = EventStream.runAsOfLookup(spark, sfDir, states, "stream_asof",
-      eventKey = "user_id", stateKey = "o_custkey", stateTime = "ots",
-      stateCols = Seq("pri"), glob = "events.parquet")
-    q.awaitTermination(120000)
-    val streamed = spark.sql("SELECT event_id, s_pri FROM stream_asof")
-      .collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
-
-    val rawEvents = spark.read.parquet(s"$sfDir/events.parquet")
-    val events = rawEvents
-      .select(col("event_id"), col("user_id"),
-        graft.functions.EventTime.eventTs(rawEvents).as("event_ts"))
-    val batch = graft.operators.AsOfJoin.asOfBackward(events, states,
-        "user_id", "o_custkey", "event_ts", "ots", Seq("pri"), prefix = "s_")
-      .select("event_id", "s_pri")
-      .collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
-
-    assert(streamed == batch)
-    assert(streamed.nonEmpty && streamed.values.exists(_.isDefined)
-      && streamed.values.exists(_.isEmpty),
-      "fixture should exercise both matched and unmatched events")
   }
 
   test("streaming corpus intake: gates + watermarked exact dedup on the digest") {
@@ -1063,7 +971,8 @@ class StreamingSpec extends SparkSpecBase {
     // Complete mode over AvailableNow: every group's final sketch is
     // visible; the TypedImperativeAggregate's serialize/deserialize
     // is exercised by the state store between micro-batches
-    val stream = spark.readStream.schema(EventStream.eventsSchema)
+    val stream = spark.readStream.schema(
+        "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
       .option("pathGlobFilter", "events.parquet")
       .option("maxFilesPerTrigger", "1")
       .parquet(sfDir)
@@ -1085,21 +994,6 @@ class StreamingSpec extends SparkSpecBase {
       .groupBy("user_id", "event_type").agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getLong(0), r.getString(1)) -> ((0L, r.getLong(2)))).toMap
     // exact regime (5 distinct types << 16): stream == plain counts, err 0
-    assert(streamed == batch)
-    assert(streamed.nonEmpty)
-  }
-
-  test("stream-stream interval join matches the batch q72 census") {
-    import org.apache.spark.sql.functions._
-    val q = EventStream.runIntervalJoin(spark, sfDir, "stream_ivj",
-      horizonMin = 360, glob = "events.parquet")
-    q.awaitTermination(120000)
-    val streamed = spark.sql(
-      "SELECT user_id, count(*) AS n_pairs, min(lag_ms) AS mn, max(lag_ms) AS mx " +
-      "FROM stream_ivj GROUP BY user_id")
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    val batch = graft.SparkEntry.queries("q72_interval_join")(spark, sfDir)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     assert(streamed == batch)
     assert(streamed.nonEmpty)
   }
